@@ -1384,7 +1384,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return dedup.minhash_near_dups(
             docs, threshold=MH_THRESHOLD, num_perm=MH_PERM, bands=MH_BANDS,
-            shingle_hash="md5", hash_buckets=False,
+            shingle_hash="md5",
         )
 
     def q_simhash(spark, sf_dir):

@@ -8,11 +8,13 @@ embeddings table:
                  INVERTED INDEX join (explode shingle -> self-join ->
                  count/union math). Fully SQL-expressible -> DuckDB oracle.
 * minhash+LSH  — signature = per-permutation min over universal-hash of
-                 shingles (pure column math, xxhash64 + modular arithmetic),
-                 banded bucketing -> candidate pairs -> estimate/verify;
-* simhash      — 64-bit sign-of-weighted-bit-sums (Arrow-batched pandas UDF
-                 over JVM-computed word hashes), chunk-banded Hamming pairs
-                 (pigeonhole: hamming<=c-1 guarantees an equal chunk among c);
+                 crc32 shingle hashes (one fused Arrow UDF that also emits
+                 the band bucket keys), bucket join -> candidate pairs ->
+                 estimate; an md5 twin keeps the SQL-reproducible form;
+* simhash      — 64-bit sign-of-weighted-bit-sums over crc32 word hashes
+                 (one fused Arrow UDF; md5 twin for SQL), chunk-banded
+                 Hamming pairs (pigeonhole: hamming<=c-1 guarantees an equal
+                 chunk among c);
 * embedding    — cosine near-dup with hyperplane-LSH candidates and exact
                  column-math cosine verification.
 
@@ -231,41 +233,9 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     return params
 
 
-def shingle_hashes_col(text: Column, n: int = 3) -> Column:
-    """32-bit-masked xxhash64 of each distinct shingle (so a*h+b stays in
-    long range for the universal hash)."""
-    return F.transform(
-        shingles_col(text, n), lambda s: F.xxhash64(s).bitwiseAND(F.lit(0xFFFFFFFF))
-    )
-
-
-def minhash_from_hashes_col(hashes: Column, num_perm: int = 64) -> Column:
-    """array<long> MinHash signature from a MATERIALIZED hash array.
-
-    Keep the shingle/regex pipeline out of this expression: Catalyst does
-    not CSE subexpressions across lambda bodies, so inlining shingles here
-    would re-tokenize the text once per permutation (measured 60x slowdown).
-    """
-
-    def perm_min(pa: int, pb: int):
-        # NB: a plain lambda with default args (h, pa=pa, ...) breaks pyspark's
-        # lambda-arity inspection — close over the params instead
-        return F.array_min(
-            F.transform(hashes, lambda h: (F.lit(pa) * h + F.lit(pb)) % F.lit(_MH_PRIME))
-        )
-
-    return F.array(*[perm_min(pa, pb) for pa, pb in _perm_params(num_perm)])
-
-
-def minhash_signature_col(text: Column, n: int = 3, num_perm: int = 64) -> Column:
-    """Convenience single-expression form — prefer the two-phase
-    (shingle_hashes_col materialized, then minhash_from_hashes_col) in real
-    plans; see minhash_from_hashes_col for why."""
-    return minhash_from_hashes_col(shingle_hashes_col(text, n), num_perm)
-
-
 def minhash_from_hashes_udf(hashes: Column, num_perm: int = 64) -> Column:
-    """Arrow-batched numpy MinHash (the fast path).
+    """Arrow-batched numpy MinHash over a materialized shingle-hash array
+    (the md5 gate twin's signature step).
 
     Spark's higher-order array functions are interpreted (no whole-stage
     codegen), so 64 transform+array_min passes cost ~100x a vectorized
@@ -297,7 +267,6 @@ def lsh_candidate_pairs(
     sig_col: str = "sig",
     bands: int = 16,
     num_perm: int | None = None,
-    hash_buckets: bool = True,
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one LSH band bucket.
 
@@ -306,10 +275,9 @@ def lsh_candidate_pairs(
     key, reducing recall with no error. Pass ``num_perm`` to validate at
     plan time (callers that built the signature know it).
 
-    ``hash_buckets=True`` (production) xxhash64-compresses each band slice
-    into a fixed 8-byte join key; ``False`` joins on the raw slice string —
-    identical candidate sets (equal slices <=> equal strings), used where an
-    external system (the DuckDB oracle) must reproduce the bucketing.
+    The join key is the raw band-slice string, so an external system (the
+    DuckDB oracle) reproduces the bucketing exactly. The crc32 fast path
+    does not come here: it joins on fused splitmix64 keys instead.
     """
     if num_perm is not None and num_perm % bands != 0:
         raise ValueError(
@@ -320,14 +288,13 @@ def lsh_candidate_pairs(
     rows_per_band = (num_perm_col / bands).cast("int")
 
     def bucket_of(bi: Column) -> Column:
-        key = F.concat_ws(
+        return F.concat_ws(
             ",",
             F.transform(
                 F.slice(F.col(sig_col), bi * rows_per_band + 1, rows_per_band),
                 lambda v: v.cast("string"),
             ),
         )
-        return F.xxhash64(key) if hash_buckets else key
 
     buckets = signed.select(
         F.col(id_col).alias("id"),
@@ -416,30 +383,6 @@ def _band_buckets(sigs: np.ndarray, bands: int) -> np.ndarray:
     return acc.view(np.int64)
 
 
-def minhash_signatures_py(text: Column, n: int = 3, num_perm: int = 64) -> Column:
-    """Whole MinHash pipeline (tokenize -> shingle -> crc32 -> perm-min) in
-    ONE Arrow-batched pandas UDF — the production path.
-
-    Rationale: Spark evaluates higher-order array lambdas interpreted (no
-    codegen), so the JVM shingle pipeline costs ~1.6 ms/doc; this numpy path
-    is ~30x cheaper and crosses Python exactly once. Shingle hash is crc32
-    (32-bit) — different constants than the JVM xxhash64 variant, same
-    estimator properties.
-    """
-    params = np.array(_perm_params(num_perm), dtype=np.uint64)
-    pa = params[:, 0][:, None]
-    pb = params[:, 1][:, None]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        if not len(texts):
-            return pd.Series([], dtype=object)
-        mins = _minhash_batch(texts, n, pa, pb).view(np.int64)
-        return pd.Series(list(mins))
-
-    return _sig(text)
-
-
 def minhash_sig_buckets_py(
     text: Column, n: int = 3, num_perm: int = 64, bands: int = 16
 ) -> Column:
@@ -516,25 +459,20 @@ def minhash_near_dups(
     bands: int = 16,
     threshold: float = 0.5,
     shingle_hash: str = "crc32",
-    hash_buckets: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with signature-based Jaccard estimate.
 
     ``shingle_hash``: 'crc32' (production — whole pipeline in one Arrow
-    UDF) or 'md5' (SQL-reproducible 32-bit hash; same estimator). Both are
-    uniform 32-bit hashes under the same universal-hash permutations, so
-    estimator quality is identical; only the hash constants differ.
+    UDF, candidates join on its fused splitmix64 band keys) or 'md5'
+    (SQL-reproducible 32-bit hash, candidates join on raw band-slice
+    strings; the gate twin). Both are uniform 32-bit hashes under the same
+    universal-hash permutations, so estimator quality is identical; only
+    the hash constants differ.
     """
     # cached: the signature table is consumed three times (bucketing + both
     # sides of the pair join); signatures are tiny (num_perm longs/doc) and
     # recomputing the tokenizer per use would triple the dominant cost
     if shingle_hash == "crc32":
-        if not hash_buckets:
-            raise ValueError(
-                "hash_buckets=False (externally reproducible raw-slice "
-                "bucketing) requires shingle_hash='md5' — the crc32 fast "
-                "path always uses fused splitmix64 bucket keys"
-            )
         # fused fast path: signature AND band buckets in one Arrow pass;
         # candidates join on ONE precomputed long key instead of 16
         # interpreted slice/concat/xxhash64 expressions (VERDICT r4 #7)
@@ -555,9 +493,7 @@ def minhash_near_dups(
     elif shingle_hash == "md5":
         sig = minhash_from_hashes_udf(md5_shingle_hashes_col(F.col(text_col), n), num_perm)
         signed = df.select(F.col(id_col).alias("id"), sig.alias("sig")).persist()
-        pairs = lsh_candidate_pairs(
-            signed, "id", "sig", bands, num_perm=num_perm, hash_buckets=hash_buckets
-        )
+        pairs = lsh_candidate_pairs(signed, "id", "sig", bands, num_perm=num_perm)
     else:
         raise ValueError(f"unknown shingle_hash {shingle_hash!r} (crc32|md5)")
     sa = signed.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -587,7 +523,7 @@ def minhash_near_dups(
 
 def simhash_from_word_hashes(word_hashes: Column, bits: int = 64) -> Column:
     """Bit-vote reduction: sign of (popcount*2 - n) per bit position, packed
-    into a long.
+    into a long — the md5 gate twin's vote step over JVM word hashes.
 
     Vectorized across the whole Arrow batch: flatten every row's hashes
     into one array, unpack bits as a (total_words x bits) matrix, and
@@ -621,28 +557,15 @@ def simhash_from_word_hashes(word_hashes: Column, bits: int = 64) -> Column:
     return _votes(word_hashes)
 
 
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """SimHash over word hashes. Word hashing stays JVM-side (xxhash64);
-    only the bit-vote reduction is a pandas UDF (Arrow-batched). Prefer
-    :func:`simhash_py` in production plans — the interpreted JVM
-    transform(words, xxhash64) plus the Arrow transfer of the word-hash
-    arrays measured ~4x the fused python pipeline at 1M docs."""
-    return simhash_from_word_hashes(
-        F.transform(words_col(text), lambda w: F.xxhash64(w)), bits
-    )
-
-
-def simhash_py(text: Column, bits: int = 64) -> Column:
+def simhash_py(text: Column) -> Column:
     """Whole SimHash pipeline (tokenize -> crc32 word hash -> splitmix64
     widen -> bit votes) in ONE Arrow-batched pandas UDF — the production
     path (VERDICT r4 #7: the r4 form spent its time in the interpreted JVM
     word-hash transform and in shipping 20M-element hash arrays through
     Arrow; this crosses Python once with just the text column). Different
-    hash constants than the xxhash64/md5 variants, same estimator."""
+    hash constants than the md5 twin, same estimator."""
     import re
     import zlib
-
-    assert bits == 64, "the fused path packs into one long"
 
     @F.pandas_udf(T.LongType())
     def _sim(texts: pd.Series) -> pd.Series:
@@ -690,13 +613,34 @@ def simhash_py(text: Column, bits: int = 64) -> Column:
 def simhash_md5_col(text: Column, bits: int = 60) -> Column:
     """SQL-reproducible SimHash: 60-bit word hashes from the first 15 md5
     hex chars (DuckDB: CAST('0x'||substr(md5(w),1,15) AS BIGINT)). Same
-    estimator as the xxhash64 production form, different hash constants;
+    estimator as the crc32 production form, different hash constants;
     used by the gate so the oracle can recompute identical signatures."""
     word_hashes = F.transform(
         words_col(text),
         lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
     )
     return simhash_from_word_hashes(word_hashes, bits)
+
+
+def _chunk_bands(signed: DataFrame, chunks: int, width: int, *carry: str) -> DataFrame:
+    """(id, *carry, chunk, val): one row per ``width``-bit chunk of the
+    ``sim`` signature — the equi-join key of chunk-banded LSH candidates."""
+    mask = (1 << width) - 1
+    return signed.select(
+        "id",
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("chunk"),
+                        F.shiftright("sim", c * width).bitwiseAND(F.lit(mask)).alias("val"),
+                    )
+                    for c in range(chunks)
+                ]
+            )
+        ).alias("cv"),
+    ).select("id", *carry, F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
 
 
 def hamming_pairs(
@@ -719,28 +663,12 @@ def hamming_pairs(
     materializing, like the rest of the dedup family.
     """
     assert max_hamming <= chunks - 1, "pigeonhole completeness requires max_hamming < chunks"
-    width = bits // chunks
-    mask = (1 << width) - 1
     # persisted: the self-join consumes the signature plan TWICE, and the
     # signature usually carries the Arrow bit-vote UDF (simhash/phash) —
     # without the persist the UDF recomputes for both join sides (measured
     # ~45% of simhash_near_dups wall time at 1M docs)
     sh = signed.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sim")).persist()
-    chunked = sh.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("sim", c * width).bitwiseAND(F.lit(mask)).alias("val"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cv"),
-    ).select("id", "sim", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
+    chunked = _chunk_bands(sh, chunks, bits // chunks, "sim")
     a = chunked.select(F.col("id").alias("id_a"), F.col("sim").alias("sim_a"), "chunk", "val")
     b = chunked.select(F.col("id").alias("id_b"), F.col("sim").alias("sim_b"), "chunk", "val")
     out = (
@@ -766,16 +694,14 @@ def simhash_near_dups(
     """Text near-dup pairs with Hamming(simhash) <= max_hamming.
 
     ``word_hash``: 'crc32' (production — fused single-UDF pipeline,
-    VERDICT r4 #7), 'xxhash64' (JVM word hashes + Arrow bit votes) or
-    'md5' (SQL-reproducible 60-bit — see simhash_md5_col)."""
+    VERDICT r4 #7) or 'md5' (SQL-reproducible 60-bit gate twin — see
+    simhash_md5_col)."""
     if word_hash == "crc32":
         sim, bits = simhash_py(F.col(text_col)), 64
-    elif word_hash == "xxhash64":
-        sim, bits = simhash_col(F.col(text_col)), 64
     elif word_hash == "md5":
         sim, bits = simhash_md5_col(F.col(text_col)), 60
     else:
-        raise ValueError(f"unknown word_hash {word_hash!r} (crc32|xxhash64|md5)")
+        raise ValueError(f"unknown word_hash {word_hash!r} (crc32|md5)")
     sh = df.select(F.col(id_col).alias("id"), sim.alias("sim"))
     return hamming_pairs(sh, "id", "sim", max_hamming, chunks, bits=bits)
 
@@ -838,16 +764,22 @@ def pairwise_cosine_udf() -> "F.Column":
     return _cos.asNondeterministic()
 
 
+def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
+    """(bits, dim) deterministic +/-1 hyperplane matrix for ``seed`` — the
+    one seed -> planes rule shared by the signature UDF and query-side
+    signatures (similarity.cosine_topk_ann)."""
+    return np.random.RandomState(seed).choice([-1.0, 1.0], size=(bits, dim))
+
+
 def hyperplane_signature_col(vec: Column, dim: int, bits: int = 32, seed: int = 42) -> Column:
-    """Random-hyperplane LSH signature as a long — hyperplanes are
-    deterministic +/-1 matrices derived from (seed, bit, dim index).
+    """Random-hyperplane LSH signature as a long — hyperplanes come from
+    :func:`_hyperplanes` (seed, bit, dim index).
 
     One numpy matmul per Arrow batch: the previous per-bit column form ran
     ``bits`` interpreted F.aggregate folds per row (measured 74k rows/s at
     1M x 64d x 32 bits; the matmul path is ~20x). Supports bits up to 64
     (bit 63 wraps into the sign via the uint64 view)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.choice([-1.0, 1.0], size=(bits, dim))
+    planes = _hyperplanes(dim, bits, seed)
     weights = np.uint64(1) << np.arange(bits, dtype=np.uint64)
 
     @F.pandas_udf(T.LongType())
@@ -865,6 +797,11 @@ def hyperplane_signature_col(vec: Column, dim: int, bits: int = 32, seed: int = 
     return _sig.asNondeterministic()(vec)
 
 
+# size guard of the embedding verify's broadcast hint (plan-size estimate of
+# the (id, vector) table); tests patch it to 0 to force the shuffled joins
+VERIFY_BROADCAST_BYTES = 256 * 1024 * 1024
+
+
 def embedding_near_dups(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -874,35 +811,19 @@ def embedding_near_dups(
     sig_bits: int = 64,
     chunks: int = 4,
     max_bucket: int | None = 100_000,
-    verify: str = "join",
-    broadcast_verify_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Cosine >= threshold pairs: hyperplane-LSH chunk candidates, exact
-    column-math cosine verification. Approximate recall (LSH), exact
-    precision (verification).
+    cosine verification. Approximate recall (LSH), exact precision
+    (verification).
 
-    ``verify``: how candidate pairs get their exact cosine —
-    'join' (default) re-attaches both vectors via two equi-joins (the
-    any-scale path: shuffle bytes ~ |candidates| x 2 x dim); when the
-    vector table's plan-size estimate fits ``broadcast_verify_bytes`` the
-    joins are broadcast-HINTED (one JVM copy per executor, pair table not
-    re-shuffled — measured verify ~2.5 -> ~0.8 s at 250k x 64-d), falling
-    back to the shuffled joins above the guard; 'broadcast'
-    collects the (id, vector) table once, broadcasts it, and each Arrow
-    batch GATHERS rows by searchsorted id lookup — candidates then cross
-    the boundary as 16-byte id pairs instead of 0.5 KB vector pairs
-    (guide §2.3 "shuffle keys, not payloads"; verify stage 5.7 -> 3.1 s
-    in a clean-session A/B at 250k x 64-d with 3.8M candidate pairs);
-    'auto' picks 'broadcast' when the optimizer's size estimate for the
-    vector table is under ``broadcast_verify_bytes``. The broadcast path
-    is NOT the default because every forked Python worker holds the full
-    float64 matrix (local[32]: 32 x 128 MB at 250k x 64-d) — measured
-    24.9 s mid-bench under cache pressure vs 6.8 s for 'join'; prefer it
-    only with few workers per host or small tables. Both paths build the
-    per-pair (n, dim) float64 matrices the same way before the same
-    einsum calls, so cosines are bit-identical. The broadcast path
-    requires unique long ids (duplicate ids would be join-multiplied in
-    the 'join' path, gathered-once here).
+    Verify: candidate pairs re-attach both vectors via two equi-joins
+    (shuffle bytes ~ |candidates| x 2 x dim); when the vector table's
+    plan-size estimate fits ``VERIFY_BROADCAST_BYTES`` those joins are
+    broadcast-HINTED (one JVM copy per executor, pair table not
+    re-shuffled — measured verify ~2.5 -> ~0.8 s at 250k x 64-d), and
+    above the guard they stay shuffled. Joins, not a gather from a
+    collected numpy matrix: that form holds the whole matrix in every
+    Python worker and measured 24.9 s mid-bench vs 6.8 s for the joins.
 
     Shuffle shape: candidate generation (chunk explode x`chunks`, the
     equi-join, and the distinct) carries ONLY (id, chunk, val) — 24 bytes a
@@ -922,26 +843,11 @@ def embedding_near_dups(
         F.col(id_col).alias("id"),
         hyperplane_signature_col(F.col(vec_col), dim, sig_bits).alias("sim"),
     )
-    width = sig_bits // chunks
-    mask = (1 << width) - 1
     # NOT persisted (r6 A/B): the hyperplane matmul UDF is cheap enough
     # that recomputing it per consumer ties with cache materialization
     # (3.1 vs 3.5 s at 250k x 64-d); handles stay for interface parity.
     handles: list = []
-    chunked = sh.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("sim", c * width).bitwiseAND(F.lit(mask)).alias("val"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cv"),
-    ).select("id", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
+    chunked = _chunk_bands(sh, chunks, sig_bits // chunks)
     if max_bucket is not None:
         small = (
             chunked.groupBy("chunk", "val")
@@ -958,62 +864,6 @@ def embedding_near_dups(
         .select("id_a", "id_b")
         .distinct()
     )
-    def _vec_plan_bytes() -> int | None:
-        try:
-            return int(
-                df.select(id_col, vec_col)
-                ._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception:  # pragma: no cover — internal-API drift
-            return None
-
-    if verify == "auto":
-        est = _vec_plan_bytes()
-        id_is_long = isinstance(df.schema[id_col].dataType, T.LongType)
-        verify = (
-            "broadcast"
-            if id_is_long and est is not None and est <= broadcast_verify_bytes
-            else "join"
-        )
-    if verify == "broadcast":
-        # toArrow + flatten: the vector matrix materializes as one numpy
-        # reshape of the Arrow child buffer (a toPandas of list cells built
-        # 250k Python lists — measured ~3 s of the build)
-        tbl = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toArrow()
-        ids = tbl.column("id").to_numpy()
-        flat = tbl.column("vec").combine_chunks().flatten().to_numpy()
-        n_rows = len(ids)
-        mat = flat.astype(np.float64, copy=False).reshape(n_rows, -1) if n_rows else np.zeros((0, 1))
-        order = np.argsort(ids)
-        bc = df.sparkSession.sparkContext.broadcast(
-            (ids[order].astype(np.int64), np.ascontiguousarray(mat[order]))
-        )
-
-        def _verify(batches):
-            ids_s, m = bc.value
-            for b in batches:
-                if not len(b):
-                    continue
-                ia = b["id_a"].to_numpy(np.int64)
-                ib = b["id_b"].to_numpy(np.int64)
-                a = np.ascontiguousarray(m[np.searchsorted(ids_s, ia)])
-                v = np.ascontiguousarray(m[np.searchsorted(ids_s, ib)])
-                dots = np.einsum("ij,ij->i", a, v)
-                na = np.sqrt(np.einsum("ij,ij->i", a, a))
-                nb = np.sqrt(np.einsum("ij,ij->i", v, v))
-                cos = dots / (na * nb)
-                keep = cos >= threshold
-                yield pd.DataFrame(
-                    {"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]}
-                )
-
-        return _track_persisted(
-            pairs.mapInPandas(_verify, "id_a long, id_b long, cosine double"),
-            handles,
-        )
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     va = vecs.withColumnsRenamed({"id": "id_a", "vec": "vec_a"})
     vb = vecs.withColumnsRenamed({"id": "id_b", "vec": "vec_b"})
@@ -1021,14 +871,19 @@ def embedding_near_dups(
     # guide §3.1): the shuffled verify joins move ~|candidates| x 2 x dim
     # of vector payload PLUS re-shuffle the pair table twice; a broadcast
     # hash join moves the vector table once per executor instead (ONE JVM
-    # copy — unlike verify='broadcast', no per-Python-worker matrix), and
-    # the pair table streams map-side. Measured at 250k x 64-d / 3.8M
+    # copy, no per-Python-worker matrix), and the pair table streams
+    # map-side. Measured at 250k x 64-d / 3.8M
     # candidate pairs: verify stage ~2.5 -> ~0.8 s (end-to-end 5.1 ->
     # 3.3 s), results identical (same join, different strategy). The size
     # guard keeps the any-scale shuffled plan when the vector table is too
     # big to broadcast or has no usable estimate.
-    est = _vec_plan_bytes()
-    if est is not None and est <= broadcast_verify_bytes:
+    try:
+        est = int(
+            df.select(id_col, vec_col)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:  # pragma: no cover — internal-API drift
+        est = None
+    if est is not None and est <= VERIFY_BROADCAST_BYTES:
         va, vb = F.broadcast(va), F.broadcast(vb)
     return _track_persisted(
         pairs.join(va, "id_a")
@@ -1166,6 +1021,14 @@ def connected_components(
         # further change — detection fires in the round that PRODUCES the
         # fixpoint instead of the round after (measured: one full round
         # saved on every converging input).
+        # LOAD-BEARING for the lazy round checkpoints: the caller's
+        # localCheckpoint(eager=False) blocks are materialized only by THIS
+        # job, and only because the groupBy's shuffle map stage computes
+        # EVERY partition of ``g`` before limit(1) runs. Keep this check a
+        # full-input shuffle; an action that can prune partitions (a
+        # limit/take/isEmpty straight over ``g``) would leave partitions
+        # uncomputed, and the next round's read of them fails later with
+        # "Checkpoint block not found".
         t = g.select(F.col("a").alias("n"), F.lit(1).alias("h")).unionByName(
             g.select(F.col("b").alias("n"), F.lit(0).alias("h"))
         )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simple_osm_queries_spark.operators.dedup import (
+    _hyperplanes,
     cosine_col,
     dot_col,
     hyperplane_signature_col,
@@ -56,8 +57,7 @@ def cosine_topk_ann(
 ) -> DataFrame:
     """Approximate top-k: candidate = shares >=1 signature chunk with the
     query. Recall < 1 by design; precision exact on candidates."""
-    rng = np.random.RandomState(seed)
-    planes = rng.choice([-1.0, 1.0], size=(sig_bits, dim))
+    planes = _hyperplanes(dim, sig_bits, seed)
     qsig = 0
     q = np.asarray(qvec, dtype=np.float64)
     for b in range(sig_bits):

@@ -28,10 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def wkb_point(lon: float, lat: float) -> bytes:
-    return struct.pack("<BIdd", 1, 1, lon, lat)
-
-
 def wkb_linestring(coords: list[tuple[float, float]]) -> bytes:
     out = struct.pack("<BII", 1, 2, len(coords))
     for x, y in coords:

@@ -48,3 +48,12 @@ def oracle_data(small_pdfs):
 
     nodes, ways, relations = small_pdfs
     return OracleData.build(nodes, ways, relations)
+
+
+@pytest.fixture(scope="session")
+def small_osm(tmp_path_factory):
+    """Path of the 3-node OSM XML fixture (FIXTURES.md §4), written by the
+    in-repo writer once per session."""
+    from tests.osm_xml_writer import SMALL_NODES, write_osm_xml
+
+    return write_osm_xml(str(tmp_path_factory.mktemp("osm") / "test-small.osm"), SMALL_NODES)

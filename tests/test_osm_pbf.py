@@ -16,8 +16,6 @@ from simple_osm_queries_spark.sources import osm_pbf as P
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_xml
 
-REF_FIXTURE = "/root/reference/test-small.osm"
-
 
 # ---------------------------------------------------------------------------
 # varint / packed decode vs an independent per-byte oracle
@@ -106,8 +104,8 @@ def _norm_rels(rows):
     )
 
 
-def test_reference_fixture_pbf_equals_xml(spark, tmp_path):
-    n, w, r = parse_osm_xml(REF_FIXTURE)
+def test_reference_fixture_pbf_equals_xml(spark, small_osm, tmp_path):
+    n, w, r = parse_osm_xml(small_osm)
     path = str(tmp_path / "ref.osm.pbf")
     P.write_osm_pbf(
         path,
@@ -115,7 +113,7 @@ def test_reference_fixture_pbf_equals_xml(spark, tmp_path):
         ways=w.itertuples(index=False),
         relations=r.itertuples(index=False),
     )
-    xn, xw, xr = read_osm_xml(spark, REF_FIXTURE)
+    xn, xw, xr = read_osm_xml(spark, small_osm)
     pn, pw, pr = P.read_osm_pbf(spark, path)
     assert _norm_nodes(pn.collect()) == _norm_nodes(xn.collect())
     assert pw.count() == xw.count() == 0

@@ -1,9 +1,10 @@
-"""OSM XML source (on the reference's own fixture file), tag-index format
-round-trip, and the HTTP server endpoint."""
+"""OSM XML source (on a generated copy of the reference's 3-node fixture),
+tag-index format round-trip, and the HTTP server endpoint."""
 
 import json
 import threading
 import urllib.request
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,18 +13,21 @@ from simple_osm_queries_spark.query.planner import run_query
 from simple_osm_queries_spark.sources import tag_index
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_pbf, read_osm_xml
+from tests.osm_xml_writer import write_osm_xml
 
-REF_FIXTURE = "/root/reference/test-small.osm"
+# the upstream project's own fixture file, in a reference checkout next to
+# this repository (absent in most checkouts: only the parity test reads it)
+UPSTREAM_SMALL_OSM = Path(__file__).resolve().parents[2] / "reference" / "test-small.osm"
 
 
 @pytest.fixture(scope="module")
-def ref_dataset(spark):
-    nodes, ways, rels = read_osm_xml(spark, REF_FIXTURE)
+def ref_dataset(spark, small_osm):
+    nodes, ways, rels = read_osm_xml(spark, small_osm)
     return prepare(nodes, ways, rels)
 
 
-def test_parse_reference_fixture():
-    nodes, ways, rels = parse_osm_xml(REF_FIXTURE)
+def test_parse_reference_fixture(small_osm):
+    nodes, ways, rels = parse_osm_xml(small_osm)
     assert len(nodes) == 3 and len(ways) == 0 and len(rels) == 0
     by_id = {r.id: r for r in nodes.itertuples()}
     # the three nodes documented in FIXTURES.md §4
@@ -31,6 +35,51 @@ def test_parse_reference_fixture():
     assert by_id[2].tags == {"amenity": "bench", "backrest": "no", "name": "Testbank"}
     assert by_id[3].tags == {"amenity": "bench", "backrest": "yes", "material": "wood"}
     assert by_id[1].lon == pytest.approx(9.9330, abs=1e-3)
+    # every node inside the window the query tests use
+    assert all(9.9 <= r.lon <= 10.0 and 53.5 <= r.lat <= 53.6 for r in by_id.values())
+
+
+@pytest.mark.skipif(
+    not UPSTREAM_SMALL_OSM.exists(), reason="upstream reference checkout not present"
+)
+def test_generated_fixture_matches_upstream_file(small_osm):
+    """The generated fixture parses to exactly the upstream test-small.osm."""
+
+    def rows(path):
+        nodes, ways, rels = parse_osm_xml(str(path))
+        return (
+            sorted((r.id, r.lon, r.lat, tuple(sorted(r.tags.items()))) for r in nodes.itertuples()),
+            len(ways),
+            len(rels),
+        )
+
+    assert rows(small_osm) == rows(UPSTREAM_SMALL_OSM)
+
+
+def test_osm_xml_writer_round_trip(small_pdfs, tmp_path):
+    """Nodes, ways (ordered refs), relations with node/way/child-relation
+    members and tags survive write -> parse_osm_xml unchanged."""
+    nodes, ways, rels = small_pdfs
+    node_rows = list(nodes[["id", "lon", "lat", "tags"]].itertuples(index=False))
+    way_rows = list(ways.itertuples(index=False))
+    rel_rows = list(rels.itertuples(index=False))
+    assert any(len(r.child_relation_ids) for r in rel_rows)  # coverage is real
+    path = write_osm_xml(str(tmp_path / "gen.osm"), node_rows, way_rows, rel_rows)
+    pn, pw, pr = parse_osm_xml(path)
+
+    def node_key(r):
+        return (r.id, r.lon, r.lat, r.tags or {})
+
+    def way_key(r):
+        return (r.id, list(r.node_ids), r.tags or {})
+
+    def rel_key(r):
+        members = (r.node_member_ids, r.way_member_ids, r.child_relation_ids)
+        return (r.id, *[list(m) for m in members], r.tags or {})
+
+    assert [node_key(r) for r in pn.itertuples()] == [node_key(r) for r in node_rows]
+    assert [way_key(r) for r in pw.itertuples()] == [way_key(r) for r in way_rows]
+    assert [rel_key(r) for r in pr.itertuples()] == [rel_key(r) for r in rel_rows]
 
 
 def test_query_reference_fixture_end_to_end(ref_dataset):
@@ -130,7 +179,7 @@ def test_http_server_query_and_errors(ref_dataset):
         httpd.shutdown()
 
 
-def test_cli_import_and_query(spark, tmp_path, monkeypatch):
+def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch):
     """Drive the CLI functions directly (shared test session instead of a
     fresh one)."""
     from simple_osm_queries_spark import cli
@@ -138,7 +187,7 @@ def test_cli_import_and_query(spark, tmp_path, monkeypatch):
     from types import SimpleNamespace
 
     idx_dir = str(tmp_path / "idx")
-    cli.cmd_import(spark, SimpleNamespace(file=REF_FIXTURE, out=idx_dir))
+    cli.cmd_import(spark, SimpleNamespace(file=small_osm, out=idx_dir))
     assert (tmp_path / "idx" / "tag-index").exists()
 
     q = SimpleNamespace(
@@ -152,7 +201,7 @@ def test_cli_import_and_query(spark, tmp_path, monkeypatch):
     assert {f["properties"]["@osm_id"] for f in fc["features"]} == {2, 3}
 
 
-def test_cli_import_pbf(spark, tmp_path):
+def test_cli_import_pbf(spark, small_osm, tmp_path):
     """The reference's primary flow: import a real .osm.pbf end-to-end."""
     from types import SimpleNamespace
 
@@ -160,7 +209,7 @@ def test_cli_import_pbf(spark, tmp_path):
     from simple_osm_queries_spark.sources import osm_pbf
     from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml
 
-    n, w, r = parse_osm_xml(REF_FIXTURE)
+    n, w, r = parse_osm_xml(small_osm)
     pbf_path = str(tmp_path / "ref.osm.pbf")
     osm_pbf.write_osm_pbf(
         pbf_path,
