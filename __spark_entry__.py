@@ -1101,8 +1101,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return brute.unionByName(kring)
 
-    # kNN over REAL H3 cells (north rule verbatim: H3 k-ring expansion,
-    # salted fallback available). Equirectangular metric — its own oracle.
+    # kNN over REAL H3 cells (north rule: H3 k-ring expansion; hot cells
+    # ride the broadcast cover join and the bucketed top-k).
+    # Equirectangular metric — its own oracle.
     def q_knn_h3(spark, sf_dir):
         pts = _derived_points(spark, sf_dir)
         return knn.knn_h3_exact(pts, _knn_queries_df(spark), res=8).select(

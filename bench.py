@@ -178,12 +178,13 @@ def run_headline(spark, points_dir: str) -> tuple[dict, dict]:
     # quarter point) while cutting the candidate join 16x — 2.52s -> 1.63s
     # measured; past 0.00125 the 10M-row scan is the floor. knn_kring_exact
     # doubles the ring automatically when data is too sparse for this grid.
-    # salt=1: measured — AQE skew-split beats explicit salting here (1.7s vs
-    # 6.5s at 2M points); salt stays available for pathological hot keys
+    # no salting: the query side is broadcast, so the point side is never
+    # shuffled on the cell key and salting only multiplies the broadcast
+    # (measured 6.5s salted vs 1.7s plain at 2M points)
     timed(
         "knn_kring",
         lambda: knn.knn_kring(
-            slim, queries_df, ring=1, cell_w=0.00125, cell_h=0.00125, salt=1
+            slim, queries_df, ring=1, cell_w=0.00125, cell_h=0.00125
         ).count(),
     )
 

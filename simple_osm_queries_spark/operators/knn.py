@@ -1,31 +1,48 @@
-"""k-nearest-neighbors over the cell grid (north rule).
+"""k-nearest-neighbors over a cell grid (north rule).
 
 The reference has no kNN; the north rule adds it as "H3 k-ring expansion
-with a salted sort-merge fallback for hot cells". Two implementations:
+with a fallback for hot cells". Every path here is ONE pipeline that
+differs only in the cell key, the query cover and the distance:
 
-* ``knn_brute``  — broadcast the (small) query side, distance + per-query
-  top-k window. Exact; the oracle baseline; O(|points| x |queries|) but
-  each point partition streams independently (no shuffle until the top-k).
-* ``knn_kring``  — candidate generation by k-ring cell expansion: each
-  query explodes to the (2r+1)^2 cells around it, equi-joined against the
-  cell-keyed point table, then per-query top-k. EXACTNESS GUARANTEE: a
-  result is exact iff the k-th distance <= r*min(cell_w, cell_h) (the
-  nearest excluded cell starts r cells away); ``knn_kring_exact`` doubles
-  r until every query satisfies it — the driver loop touches only the
-  per-query max distance aggregate, never the data.
+1. each query explodes to the cells covering its search disc and is
+   equi-joined (broadcast) against the cell-keyed point table;
+2. a per-query top-k ranks the candidates (``_topk``);
+3. ``exact`` reports the disc guarantee: true iff >= k candidates were
+   found and the k-th lies inside the disc (``_candidate_topk``);
+4. the ``*_exact`` variants re-run the inexact queries with a doubled disc
+   and brute-force whatever outgrows it (``_doubling_loop``). The loop
+   touches only a one-row-per-query aggregate, never the data.
 
-Hot cells (dense urban analog): the candidate join key is the CELL, so a
-hot cell makes one shuffle partition huge. AQE skew-join splitting
-(enabled in session.py) splits it at runtime; ``salt`` adds explicit
-pre-salting of the point side for the pathological case (every query in
-one cell), trading one extra shuffle for bounded partitions.
+Variants:
 
-Distance is squared euclidean in degrees (deterministic, monotone with
-euclidean; fine within the small window — swap in haversine for global
-data). Ties break on point id for determinism.
+* ``knn_kring``  — planar grid at this operator's own cell size; the cover
+  is the (2r+1)^2 cells around the query's cell. A result is exact iff the
+  k-th distance <= r*min(cell_w, cell_h) (the nearest excluded cell starts
+  r cells away); ``knn_kring_exact`` doubles r. Distance is squared
+  euclidean in degrees (monotone with euclidean; fine within a small
+  window).
+* ``knn_h3``     — real H3 cells; the cover is a sampled superset of the
+  cells meeting the disc (``_h3_disc_cells_col``). ``metric='equirect'``
+  ranks by cos-scaled squared degrees, ``metric='haversine'`` by
+  great-circle meters; ``knn_h3_exact`` doubles the disc.
+* ``knn_brute`` / ``knn_brute_haversine`` — the exact baselines and the
+  fallbacks of the doubling loops (``_brute``).
+
+Hot cells (dense urban analog): the query side (queries x cover cells) is
+tiny and always broadcast, so the point side is never shuffled on the cell
+key and a hot cell cannot make a hot join partition. A query inside a
+dense cell still gets a huge candidate pile; the two-phase top-k ranks it
+in ``_TOPK_BUCKETS`` parallel partitions first. There is no salted
+fallback: with the query side broadcast, salting only multiplies it.
+
+Ties break on point id for determinism.
 """
 
 from __future__ import annotations
+
+import functools
+import itertools
+import math as _math
 
 # module-level: pandas_udf type-hint resolution needs pd importable here
 import numpy as np
@@ -35,91 +52,191 @@ from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
 
+# Authalic sphere radius in meters (the constant H3 documents for its area/
+# edge-length tables) — one shared constant so Spark, the DuckDB twins and
+# the numpy oracles agree bit-for-bit on the meters scale.
+EARTH_RADIUS_M = 6371007.180918475
+
+# id buckets of the local top-k phase in _topk
+_TOPK_BUCKETS = 16
+
+
+# ---------------------------------------------------------------------------
+# Distances: column functions of (query lon/lat, point lon/lat)
+# ---------------------------------------------------------------------------
+
 
 def _dist2(qlon, qlat, plon, plat):
     return (qlon - plon) * (qlon - plon) + (qlat - plat) * (qlat - plat)
 
 
-def _topk(
-    cand: DataFrame,
-    k_col: str = "k",
-    prefilter_buckets: int = 16,
-    dist_col: str = "dist2",
-) -> DataFrame:
-    """Per-query top-k. Two-phase: a local top-k per (qid, id-bucket) first,
-    so a hot query's candidate pile (hundreds of thousands of rows for a
-    query inside a dense cell) is sorted in ``prefilter_buckets`` parallel
-    partitions instead of one; the global window then ranks at most
-    buckets*k rows per query."""
-    if prefilter_buckets > 1:
-        w_local = Window.partitionBy("qid", "__b").orderBy(
-            F.col(dist_col).asc(), F.col("id").asc()
-        )
-        cand = (
-            cand.withColumn("__b", F.pmod(F.col("id"), F.lit(prefilter_buckets)))
-            .withColumn("__lr", F.row_number().over(w_local))
-            .filter(F.col("__lr") <= F.col(k_col))
-            .drop("__b", "__lr")
-        )
-    w = Window.partitionBy("qid").orderBy(F.col(dist_col).asc(), F.col("id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col(k_col))
-    )
+def _equirect_dist2(qlon, qlat, plon, plat):
+    """Squared cos-scaled local degrees — the metric knn_h3 ranks by."""
+    dx = (plon - qlon) * F.cos(F.radians(qlat))
+    dy = plat - qlat
+    return dx * dx + dy * dy
 
 
-def knn_brute(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
-    """Exact kNN; query side broadcast. ``queries``: (qid, lon, lat[, k])."""
-    q = queries.select(
+def haversine_m(qlon, qlat, plon, plat):
+    """Great-circle distance in meters, pure column math (codegen, no UDF).
+
+    sin/cos make it antimeridian-safe by construction: dlon = 359.9 deg and
+    dlon = -0.1 deg give the same sin(dlon/2)^2. Written with explicit
+    products (no pow) so the DuckDB oracle twin can mirror the operation
+    order exactly."""
+    sp = F.sin(F.radians(plat - qlat) / F.lit(2.0))
+    sl = F.sin(F.radians(plon - qlon) / F.lit(2.0))
+    a = sp * sp + F.cos(F.radians(qlat)) * F.cos(F.radians(plat)) * sl * sl
+    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
+
+
+def haversine_m_np(qlon, qlat, plon, plat):
+    """Numpy twin of :func:`haversine_m` (property-test oracle)."""
+    sp = np.sin(np.radians(plat - qlat) / 2.0)
+    sl = np.sin(np.radians(plon - qlon) / 2.0)
+    a = sp * sp + np.cos(np.radians(qlat)) * np.cos(np.radians(plat)) * sl * sl
+    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
+
+
+# ---------------------------------------------------------------------------
+# The shared pipeline
+# ---------------------------------------------------------------------------
+
+
+def _query_side(queries: DataFrame, k: int | None) -> DataFrame:
+    """(qid, qlon, qlat, k) from ``queries`` (qid, lon, lat[, k])."""
+    return queries.select(
         "qid",
         F.col("lon").alias("qlon"),
         F.col("lat").alias("qlat"),
         (F.lit(k) if k is not None else F.col("k")).alias("k"),
     )
-    cand = points.select("id", "lon", "lat").crossJoin(F.broadcast(q)).withColumn(
-        "dist2", _dist2(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
+
+
+def _with_dist(cand: DataFrame, dist_col: str, dist) -> DataFrame:
+    return cand.withColumn(
+        dist_col, dist(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
     )
-    return _topk(cand).select("qid", "id", "lon", "lat", "dist2", "rank")
 
 
-def _kring_candidates(
-    points: DataFrame, q: DataFrame, ring: int, cell_w: float, cell_h: float, salt: int
+def _topk(cand: DataFrame, dist_col: str) -> DataFrame:
+    """Per-query top-k. Two-phase: a local top-k per (qid, id-bucket) first,
+    so a hot query's candidate pile (hundreds of thousands of rows for a
+    query inside a dense cell) is sorted in ``_TOPK_BUCKETS`` parallel
+    partitions instead of one; the global window then ranks at most
+    buckets*k rows per query."""
+    w_local = Window.partitionBy("qid", "__b").orderBy(
+        F.col(dist_col).asc(), F.col("id").asc()
+    )
+    cand = (
+        cand.withColumn("__b", F.pmod(F.col("id"), F.lit(_TOPK_BUCKETS)))
+        .withColumn("__lr", F.row_number().over(w_local))
+        .filter(F.col("__lr") <= F.col("k"))
+        .drop("__b", "__lr")
+    )
+    w = Window.partitionBy("qid").orderBy(F.col(dist_col).asc(), F.col("id").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= F.col("k"))
+    )
+
+
+def _brute(
+    points: DataFrame, queries: DataFrame, k: int | None, dist_col: str, dist
 ) -> DataFrame:
-    """Explode each query into its k-ring cells, equi-join on the cell key.
+    """Exact kNN under ``dist``: the query side is broadcast, each point
+    partition streams independently (no shuffle until the top-k).
+    (qid, id, lon, lat, <dist_col>, rank)."""
+    cand = points.select("id", "lon", "lat").crossJoin(
+        F.broadcast(_query_side(queries, k))
+    )
+    return _topk(_with_dist(cand, dist_col, dist), dist_col).select(
+        "qid", "id", "lon", "lat", dist_col, "rank"
+    )
 
-    The cell key is recomputed from lon/lat at THIS operator's granularity —
-    kNN wants a much finer grid than the reference's 0.1-degree query grid
-    (a ring over coarse cells degenerates to a full scan per query), and the
-    key must be consistent between both join sides regardless of what cell
-    column the table was partitioned by.
-    """
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    qx = C.cell_x(F.col("qlon"), cell_w)
-    qy = C.cell_y(F.col("qlat"), cell_h)
-    qcells = q.withColumn(
-        "cell",
-        F.explode(
-            F.array(*[C.pack_cell(qx + F.lit(dx), qy + F.lit(dy)) for dx, dy in offsets])
-        ),
-    )
-    pts = points.select(
-        "id", "lon", "lat",
-        C.cell_of(F.col("lon"), F.col("lat"), cell_w, cell_h).alias("cell"),
-    )
-    # the exploded query-cell side is tiny (|queries| * ring cells) but comes
+
+def _candidate_topk(
+    points: DataFrame,
+    queries: DataFrame,
+    k: int | None,
+    point_cell,
+    cover,
+    dist_col: str,
+    dist,
+    cap: float,
+) -> DataFrame:
+    """Cover join -> top-k -> ``exact``. ``point_cell``: the point's cell key
+    column; ``cover``: array column of the cells covering each query's disc
+    (over qlon/qlat); ``cap``: the largest ``dist_col`` value inside the
+    disc (the squared radius for the squared metrics)."""
+    qcells = _query_side(queries, k).withColumn("cell", F.explode(cover))
+    pts = points.select("id", "lon", "lat", point_cell.alias("cell"))
+    # the exploded query-cell side is tiny (|queries| * cover cells) but comes
     # from a local relation Spark won't size-estimate — without the explicit
     # broadcast it plans a SortMergeJoin that shuffles the whole point table
-    if salt > 1:
-        # replicate each query row over every salt bucket; points pick one
-        # bucket — bounds the per-(cell,salt) partition size for hot cells
-        qcells = qcells.withColumn("__salt", F.explode(F.array(*[F.lit(s) for s in range(salt)])))
-        pts = pts.withColumn("__salt", (F.pmod(F.col("id"), F.lit(salt))).cast("int"))
-        cand = pts.join(F.broadcast(qcells), ["cell", "__salt"]).drop("__salt")
-    else:
-        cand = pts.join(F.broadcast(qcells), "cell")
-    return cand.withColumn(
-        "dist2", _dist2(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
+    cand = _with_dist(pts.join(F.broadcast(qcells), "cell"), dist_col, dist)
+    found = _topk(cand, dist_col)
+    # per-query max-dist and count as window aggregates over the SAME
+    # partitioning the top-k window just created — one pass, no re-shuffle,
+    # no recomputation of the candidate join (groupBy+join-back would
+    # evaluate `found` twice)
+    w_all = Window.partitionBy("qid").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
+    return (
+        found.withColumn("__maxd", F.max(dist_col).over(w_all))
+        .withColumn("__n", F.count("*").over(w_all))
+        .withColumn(
+            "exact", (F.col("__n") >= F.col("k")) & (F.col("__maxd") <= F.lit(cap))
+        )
+        .select("qid", "id", "lon", "lat", dist_col, "rank", "exact")
+    )
+
+
+def _doubling_loop(queries: DataFrame, radii, run_round, brute) -> DataFrame:
+    """Loop shared by the ``*_exact`` variants: run one round per
+    radius in ``radii`` over the still-inexact queries, keep the exact
+    results, and hand whatever is left to ``brute``.
+
+    ``run_round(pending, radius)`` returns a frame with an ``exact`` column,
+    or None when the radius cannot be served (the loop then brute-forces
+    the rest); ``brute(pending)`` is the exact fallback."""
+    pending = queries
+    results: list[DataFrame] = []
+    for radius in radii:
+        res = run_round(pending, radius)
+        if res is None:
+            break
+        # cache the round (consumed by done_q, survivors, pending), cut the
+        # survivors'/pending's lineage with an eager localCheckpoint (both
+        # are <= n_queries x k rows — tiny next to the candidate join), then
+        # unpersist immediately: at most ONE round's candidates are cached
+        # at a time instead of accumulating executor-memory leaks per round
+        res = res.cache()
+        done_q = res.filter(F.col("exact")).select("qid").distinct()
+        results.append(res.join(done_q, "qid", "left_semi").localCheckpoint())
+        pending = pending.join(done_q, "qid", "left_anti").localCheckpoint()
+        res.unpersist()
+        if pending.isEmpty():
+            return functools.reduce(DataFrame.unionByName, results)
+    # give up on the guarantee for pathological queries: brute-force rest
+    results.append(brute(pending).withColumn("exact", F.lit(True)))
+    return functools.reduce(DataFrame.unionByName, results)
+
+
+# ---------------------------------------------------------------------------
+# Exact baselines, then kNN over the planar cell grid
+# ---------------------------------------------------------------------------
+
+
+def knn_brute(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
+    """Exact kNN; query side broadcast. ``queries``: (qid, lon, lat[, k])."""
+    return _brute(points, queries, k, "dist2", _dist2)
+
+
+def knn_brute_haversine(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
+    """Public exact haversine kNN baseline: (qid, id, lon, lat, dist_m, rank)."""
+    return _brute(points, queries, k, "dist_m", haversine_m)
 
 
 def knn_kring(
@@ -129,33 +246,35 @@ def knn_kring(
     ring: int = 1,
     cell_w: float = C.DEFAULT_CELL_W,
     cell_h: float = C.DEFAULT_CELL_H,
-    salt: int = 1,
 ) -> DataFrame:
     """One-pass k-ring kNN. Exact for every query whose k-th neighbor lies
     within r*min(cell_w,cell_h); ``exact`` column reports the guarantee.
     Queries with fewer than k candidates in the ring return what was found.
+
+    The cell key is recomputed from lon/lat at THIS operator's granularity —
+    kNN wants a much finer grid than the reference's 0.1-degree query grid
+    (a ring over coarse cells degenerates to a full scan per query), and the
+    key must be consistent between both join sides regardless of what cell
+    column the table was partitioned by.
     """
-    q = queries.select(
-        "qid",
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-        (F.lit(k) if k is not None else F.col("k")).alias("k"),
+    qx = C.cell_x(F.col("qlon"), cell_w)
+    qy = C.cell_y(F.col("qlat"), cell_h)
+    ring_cells = F.array(
+        *[
+            C.pack_cell(qx + F.lit(dx), qy + F.lit(dy))
+            for dx in range(-ring, ring + 1)
+            for dy in range(-ring, ring + 1)
+        ]
     )
-    cand = _kring_candidates(points, q, ring, cell_w, cell_h, salt)
-    safe2 = (ring * min(cell_w, cell_h)) ** 2
-    found = _topk(cand)
-    # per-query max-dist and count as window aggregates over the SAME
-    # partitioning the top-k window just created — one pass, no re-shuffle,
-    # no recomputation of the candidate join (groupBy+join-back would
-    # evaluate `found` twice)
-    w_all = Window.partitionBy("qid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return (
-        found.withColumn("__maxd", F.max("dist2").over(w_all))
-        .withColumn("__n", F.count("*").over(w_all))
-        .withColumn("exact", (F.col("__n") >= F.col("k")) & (F.col("__maxd") <= F.lit(safe2)))
-        .select("qid", "id", "lon", "lat", "dist2", "rank", "exact")
+    return _candidate_topk(
+        points,
+        queries,
+        k,
+        C.cell_of(F.col("lon"), F.col("lat"), cell_w, cell_h),
+        ring_cells,
+        "dist2",
+        _dist2,
+        (ring * min(cell_w, cell_h)) ** 2,
     )
 
 
@@ -167,48 +286,25 @@ def knn_kring_exact(
     max_ring: int = 64,
     cell_w: float = C.DEFAULT_CELL_W,
     cell_h: float = C.DEFAULT_CELL_H,
-    salt: int = 1,
 ) -> DataFrame:
-    """Driver loop doubling the ring until every query is guaranteed exact.
-
+    """Doubles the ring (up to ``max_ring``) until every query
+    is guaranteed exact; queries still inexact past it are brute-forced.
     Each round only recomputes the still-inexact queries (usually a
-    shrinking handful near sparse regions); the loop inspects a one-row-per-
-    query aggregate, not the data.
-    """
-    pending = queries
-    results: list[DataFrame] = []
-    r = ring
-    while r <= max_ring:
-        # cache the round (consumed by done_q, survivors, pending), cut the
-        # survivors'/pending's lineage with an eager localCheckpoint (both
-        # are <= n_queries x k rows — tiny next to the candidate join), then
-        # unpersist immediately: at most ONE round's candidates are cached
-        # at a time instead of accumulating executor-memory leaks per round
-        res = knn_kring(points, pending, k, r, cell_w, cell_h, salt).cache()
-        done_q = res.filter(F.col("exact")).select("qid").distinct()
-        results.append(res.join(done_q, "qid", "left_semi").localCheckpoint())
-        pending = pending.join(done_q, "qid", "left_anti").localCheckpoint()
-        res.unpersist()
-        if pending.isEmpty():
-            break
-        r *= 2
-    else:
-        # give up on the guarantee for pathological queries: brute-force rest
-        results.append(
-            knn_brute(points, pending, k).withColumn("exact", F.lit(True))
-        )
-    out = results[0]
-    for extra in results[1:]:
-        out = out.unionByName(extra)
-    return out
+    shrinking handful near sparse regions)."""
+    rings = itertools.takewhile(
+        lambda r: r <= max_ring, (ring * 2**i for i in itertools.count())
+    )
+    return _doubling_loop(
+        queries,
+        rings,
+        lambda pending, r: knn_kring(points, pending, k, r, cell_w, cell_h),
+        lambda pending: knn_brute(points, pending, k),
+    )
 
 
 # ---------------------------------------------------------------------------
-# kNN over REAL H3 cells (the north rule's wording verbatim: "kNN via H3
-# k-ring expansion with a salted sort-merge fallback for hot cells")
+# kNN over REAL H3 cells
 # ---------------------------------------------------------------------------
-
-import math as _math
 
 # Conservative global H3 cell-size bounds in radians at resolution r, from
 # the gnomonic geometry of functions/h3_encode.py: lattice spacing is one
@@ -231,12 +327,17 @@ def h3_max_circumradius_deg(res: int) -> float:
     return _math.degrees(_h3_unit_rad(res) / _math.sqrt(3.0))
 
 
+def _cover_step(res: int) -> float:
+    """Sample spacing in arc degrees: <= min_inradius/sqrt(2) puts at least
+    one sample inside every res-``res`` cell's inradius disk."""
+    return h3_min_inradius_deg(res) / _math.sqrt(2.0) * 0.99
+
+
 def h3_max_disc_deg(res: int) -> float:
     """Largest search disc the cover sampler accepts at ``res`` (the
     (2*63+1)^2 = 16129-sample budget); beyond it, coarsen the resolution or
     brute-force (knn_h3_exact does the latter automatically)."""
-    step = h3_min_inradius_deg(res) / _math.sqrt(2.0) * 0.99
-    return (63 * step - h3_max_circumradius_deg(res)) / 1.05
+    return (63 * _cover_step(res) - h3_max_circumradius_deg(res)) / 1.05
 
 
 class CoverBudgetExceeded(ValueError):
@@ -283,111 +384,6 @@ def banded_lon_offsets(
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     within = np.arange(total) - np.repeat(starts, counts)
     return ridx, -halfw[ridx] + within * dl[ridx]
-
-
-def _h3_disc_cells_col(qlon, qlat, res: int, disc_deg: float):
-    """array<long> of H3 cells guaranteed to cover the equirectangular disc
-    of radius ``disc_deg`` around each query point.
-
-    Cover construction (no neighbor tables needed): every cell intersecting
-    the disc has its center within R = 1.05*disc + max_circumradius of the
-    query; a sample grid with spacing <= min_inradius/sqrt(2) puts at least
-    one sample inside every such cell's inradius disk; encoding the samples
-    and deduplicating therefore yields a superset of the intersecting
-    cells. Whole Arrow batch encoded in ONE vectorized call.
-    """
-    from pyspark.sql import types as T
-
-    # geometry constants shared with the plan-time pre-check (defined below
-    # in the haversine section) — one source of truth for R/step/budget
-    R, step = _equirect_cover_params(res, disc_deg)
-    n_side = int(_math.ceil(R / step))
-    if (2 * n_side + 1) ** 2 > 16384:
-        raise ValueError(
-            f"disc {disc_deg} deg needs {(2*n_side+1)**2} samples per query "
-            f"at res {res}; use a coarser resolution for discs this large"
-        )
-    offs = np.arange(-n_side, n_side + 1, dtype=np.float64) * step  # lat rows
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cover(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from simple_osm_queries_spark.functions import h3_encode as E
-
-        if not len(lon):
-            return pd.Series([], dtype=object)
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        # Per-latitude-ROW lon sampling (same fix as h3_polyfill, ADVICE r3):
-        # scaling every row's lon offsets by the single query-latitude cos
-        # under-samples rows nearer the equator than the query. Each row uses
-        # its own band cos: spacing from the band's largest cos, extent from
-        # its smallest. Queries close enough to a pole for the extent to wrap
-        # are routed to brute force by knn_h3 before this UDF runs.
-        sample_lon: list[np.ndarray] = []
-        sample_lat: list[np.ndarray] = []
-        totals: list[int] = []
-        for i in range(len(lo)):
-            rows = la[i] + offs
-            half_arc = np.sqrt(np.maximum(R * R - offs * offs, 0.0))
-            try:
-                ridx, lon_off = banded_lon_offsets(
-                    rows, half_arc, step, max_samples=EQUIRECT_COVER_BUDGET
-                )
-            except CoverBudgetExceeded as e:
-                raise ValueError(
-                    f"disc {disc_deg} deg at lat {la[i]:.2f} needs {e.total} "
-                    f"samples per query at res {res}; use a coarser "
-                    "resolution for discs this large"
-                ) from None
-            total = len(ridx)
-            sample_lon.append(lo[i] + lon_off)
-            sample_lat.append(np.clip(rows[ridx], -89.9, 89.9))
-            totals.append(total)
-        cells = E.lnglat_to_cell(
-            np.concatenate(sample_lon), np.concatenate(sample_lat), res
-        ).view(np.int64)
-        out: list[list[int]] = []
-        pos = 0
-        for t in totals:
-            out.append(np.unique(cells[pos : pos + t]).tolist())
-            pos += t
-        return pd.Series(out)
-
-    return _cover(qlon, qlat)
-
-
-# ---------------------------------------------------------------------------
-# Geodesic (haversine) metric — globally correct kNN (VERDICT r4 #1).
-# The reference's grid is planar (common/cell.go:7-9) and so was r4's
-# equirect metric; the haversine path is correct at poles and across the
-# antimeridian, with the exactness guarantee restated in METERS.
-# ---------------------------------------------------------------------------
-
-# Authalic sphere radius in meters (the constant H3 documents for its area/
-# edge-length tables) — one shared constant so Spark, the DuckDB twins and
-# the numpy oracles agree bit-for-bit on the meters scale.
-EARTH_RADIUS_M = 6371007.180918475
-
-
-def haversine_m(qlon, qlat, plon, plat):
-    """Great-circle distance in meters, pure column math (codegen, no UDF).
-
-    sin/cos make it antimeridian-safe by construction: dlon = 359.9 deg and
-    dlon = -0.1 deg give the same sin(dlon/2)^2. Written with explicit
-    products (no pow) so the DuckDB oracle twin can mirror the operation
-    order exactly."""
-    sp = F.sin(F.radians(plat - qlat) / F.lit(2.0))
-    sl = F.sin(F.radians(plon - qlon) / F.lit(2.0))
-    a = sp * sp + F.cos(F.radians(qlat)) * F.cos(F.radians(plat)) * sl * sl
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
-def haversine_m_np(qlon, qlat, plon, plat):
-    """Numpy twin of :func:`haversine_m` (property-test oracle)."""
-    sp = np.sin(np.radians(plat - qlat) / 2.0)
-    sl = np.sin(np.radians(plon - qlon) / 2.0)
-    a = sp * sp + np.cos(np.radians(qlat)) * np.cos(np.radians(plat)) * sl * sl
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
 
 
 def spherical_disc_offsets(
@@ -446,15 +442,90 @@ def spherical_disc_offsets(
     return rows[ridx], -H[ridx] + within * dl[ridx]
 
 
-def _h3_spherical_disc_cells_col(qlon, qlat, res: int, disc_arc_deg: float):
-    """array<long> of H3 cells covering the spherical disc of arc radius
-    ``disc_arc_deg`` around each query — the haversine twin of
-    :func:`_h3_disc_cells_col`, wrap-aware at poles and the antimeridian
-    (no polar brute routing needed). Whole Arrow batch encoded in ONE
-    vectorized call."""
-    from pyspark.sql import types as T
+# Per-query sample budgets of the two disc covers. The samplers below are
+# the one definition of each cover's geometry: the executor UDF and the
+# plan-time pre-check in knn_h3 call the same sampler, so the pre-check can
+# never drift from what the executor will do.
+EQUIRECT_COVER_BUDGET = 65536
+SPHERICAL_COVER_BUDGET = 131072
 
-    R, step = _spherical_cover_params(res, disc_arc_deg)
+
+def _equirect_cover_radius(res: int, disc_deg: float) -> float:
+    """Padded radius in lon/lat degrees: every cell meeting the disc has its
+    center within it."""
+    return 1.05 * disc_deg + h3_max_circumradius_deg(res)
+
+
+def _budgeted(offsets, disc: str, res: int):
+    """``offsets(lat)`` with a budget overrun restated as a ValueError that
+    names the disc, the latitude and the way out."""
+
+    def sample(lat: float):
+        try:
+            return offsets(lat)
+        except CoverBudgetExceeded as e:
+            raise ValueError(
+                f"disc {disc} at lat {lat:.2f} needs {e.total} samples per "
+                f"query at res {res}; use a coarser resolution for discs "
+                "this large"
+            ) from None
+
+    return sample
+
+
+def _equirect_disc_sampler(res: int, disc_deg: float):
+    """``sample(lat) -> (sample_lats, lon_offsets)`` covering the
+    equirectangular disc of radius ``disc_deg`` around a query at ``lat``.
+
+    Cover construction (no neighbor tables needed): every cell intersecting
+    the disc has its center within R = 1.05*disc + max_circumradius of the
+    query; a sample grid with spacing <= min_inradius/sqrt(2) puts at least
+    one sample inside every such cell's inradius disk; encoding the samples
+    and deduplicating therefore yields a superset of the intersecting
+    cells. Per-latitude-ROW lon sampling (banded_lon_offsets): each row uses
+    its own band cos, so rows nearer the equator than the query are not
+    under-sampled. Queries close enough to a pole for the extent to wrap
+    are routed to brute force by knn_h3 before the cover runs.
+    """
+    R, step = _equirect_cover_radius(res, disc_deg), _cover_step(res)
+    n_side = int(_math.ceil(R / step))
+    if (2 * n_side + 1) ** 2 > 16384:
+        raise ValueError(
+            f"disc {disc_deg} deg needs {(2*n_side+1)**2} samples per query "
+            f"at res {res}; use a coarser resolution for discs this large"
+        )
+    offs = np.arange(-n_side, n_side + 1, dtype=np.float64) * step  # lat rows
+    half_arc = np.sqrt(np.maximum(R * R - offs * offs, 0.0))
+
+    def offsets(lat: float):
+        rows = lat + offs
+        ridx, lon_off = banded_lon_offsets(
+            rows, half_arc, step, max_samples=EQUIRECT_COVER_BUDGET
+        )
+        return np.clip(rows[ridx], -89.9, 89.9), lon_off
+
+    return _budgeted(offsets, f"{disc_deg} deg", res)
+
+
+def _spherical_disc_sampler(res: int, disc_arc_deg: float):
+    """``sample(lat) -> (sample_lats, lon_offsets)`` covering the spherical
+    disc of arc radius ``disc_arc_deg`` — wrap-aware at poles and the
+    antimeridian (spherical_disc_offsets), so no polar brute routing."""
+    R, step = disc_arc_deg + h3_max_circumradius_deg(res), _cover_step(res)
+    return _budgeted(
+        lambda lat: spherical_disc_offsets(
+            lat, R, step, max_samples=SPHERICAL_COVER_BUDGET
+        ),
+        f"{disc_arc_deg} arc-deg",
+        res,
+    )
+
+
+def _h3_disc_cells_col(qlon, qlat, res: int, sample):
+    """array<long> of the res-``res`` H3 cells covering each query's search
+    disc: ``sample(lat)`` (one of the disc samplers above) places the
+    samples, and the whole Arrow batch is encoded in ONE vectorized call."""
+    from pyspark.sql import types as T
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _cover(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -462,148 +533,43 @@ def _h3_spherical_disc_cells_col(qlon, qlat, res: int, disc_arc_deg: float):
 
         if not len(lon):
             return pd.Series([], dtype=object)
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
         sample_lon: list[np.ndarray] = []
         sample_lat: list[np.ndarray] = []
-        totals: list[int] = []
-        for i in range(len(lo)):
-            try:
-                lat_s, lon_off = spherical_disc_offsets(
-                    la[i], R, step, max_samples=SPHERICAL_COVER_BUDGET
-                )
-            except CoverBudgetExceeded as e:
-                # knn_h3 pre-checks the batch's worst-case latitude on the
-                # driver, so this executor-side backstop only fires on
-                # latitudes the pre-check could not anticipate
-                raise ValueError(
-                    f"disc {disc_arc_deg} arc-deg at lat {la[i]:.2f} needs "
-                    f"{e.total} samples per query at res {res}; use a "
-                    "coarser resolution for discs this large"
-                ) from None
-            sample_lon.append(lo[i] + lon_off)
+        for x, y in zip(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64)):
+            lat_s, lon_off = sample(y)
+            sample_lon.append(x + lon_off)
             sample_lat.append(lat_s)
-            totals.append(len(lat_s))
         cells = E.lnglat_to_cell(
             np.concatenate(sample_lon), np.concatenate(sample_lat), res
         ).view(np.int64)
-        out: list[list[int]] = []
-        pos = 0
-        for t in totals:
-            out.append(np.unique(cells[pos : pos + t]).tolist())
-            pos += t
-        return pd.Series(out)
+        bounds = np.cumsum([len(s) for s in sample_lat])[:-1]
+        return pd.Series([np.unique(c).tolist() for c in np.split(cells, bounds)])
 
     return _cover(qlon, qlat)
 
 
-def _knn_brute_haversine(points: DataFrame, queries: DataFrame, k: int | None) -> DataFrame:
-    """Exact global kNN under the haversine metric (broadcast query side);
-    the fallback for discs the cover can't serve. Always ``exact``."""
-    q = queries.select(
-        "qid",
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-        (F.lit(k) if k is not None else F.col("k")).alias("k"),
-    )
-    cand = points.select("id", "lon", "lat").crossJoin(F.broadcast(q)).withColumn(
-        "dist_m", haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
-    )
-    return (
-        _topk(cand, dist_col="dist_m")
-        .select("qid", "id", "lon", "lat", "dist_m", "rank")
-        .withColumn("exact", F.lit(True))
-    )
-
-
-def knn_brute_haversine(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
-    """Public exact haversine kNN baseline: (qid, id, lon, lat, dist_m, rank)."""
-    return _knn_brute_haversine(points, queries, k).drop("exact")
-
-
-def _knn_brute_equirect(points: DataFrame, queries: DataFrame, k: int | None) -> DataFrame:
-    """Exact kNN under the same equirect (cos-scaled) metric knn_h3 ranks by;
-    the fallback for discs the cover sampler can't serve (pole-adjacent
-    queries, outgrown discs). Always ``exact``."""
-    q = queries.select(
-        "qid",
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-        (F.lit(k) if k is not None else F.col("k")).alias("k"),
-    )
-    cand = points.select("id", "lon", "lat").crossJoin(F.broadcast(q))
-    coslat = F.cos(F.radians(F.col("qlat")))
-    dx = (F.col("lon") - F.col("qlon")) * coslat
-    dy = F.col("lat") - F.col("qlat")
-    cand = cand.withColumn("dist2", dx * dx + dy * dy)
-    return (
-        _topk(cand)
-        .select("qid", "id", "lon", "lat", "dist2", "rank")
-        .withColumn("exact", F.lit(True))
-    )
-
-
-# ONE definition of each cover's geometry constants, shared by the
-# plan-time pre-check and the executor UDF — editing either side of a
-# duplicated formula/budget would silently desynchronize them and
-# reintroduce the opaque executor-side failure the pre-check pre-empts
-# (code-review r5 finding).
-EQUIRECT_COVER_BUDGET = 65536
-SPHERICAL_COVER_BUDGET = 131072
-
-
-def _equirect_cover_params(res: int, disc_deg: float) -> tuple[float, float]:
-    """(padded radius R in lon/lat degrees, sample step in arc degrees)."""
-    R = 1.05 * disc_deg + h3_max_circumradius_deg(res)
-    step = h3_min_inradius_deg(res) / _math.sqrt(2.0) * 0.99
-    return R, step
-
-
-def _spherical_cover_params(res: int, disc_arc_deg: float) -> tuple[float, float]:
-    """(padded radius R in ARC degrees, sample step in arc degrees)."""
-    R = disc_arc_deg + h3_max_circumradius_deg(res)
-    step = h3_min_inradius_deg(res) / _math.sqrt(2.0) * 0.99
-    return R, step
-
-
-def _precheck_equirect_cover(max_abs_lat: float, res: int, disc_deg: float) -> None:
-    """Plan-time budget check for the equirect disc cover at the batch's
-    worst-case latitude (ADVICE r4 #4): an oversized disc fails here on the
-    driver with a clean message instead of as an opaque PythonException
-    after the job launches. The equirect sample count grows monotonically
-    with |lat| (arc extent / band cos), so the max |lat| is the worst case."""
-    R, step = _equirect_cover_params(res, disc_deg)
-    offs = np.arange(-int(_math.ceil(R / step)), int(_math.ceil(R / step)) + 1) * step
-    try:
-        banded_lon_offsets(
-            max_abs_lat + offs,
-            np.sqrt(np.maximum(R * R - offs * offs, 0.0)),
-            step,
-            max_samples=EQUIRECT_COVER_BUDGET,
-        )
-    except CoverBudgetExceeded as e:
-        raise ValueError(
-            f"disc {disc_deg} deg at worst-case lat {max_abs_lat:.2f} needs "
-            f"{e.total} samples per query at res {res}; use a coarser "
-            "resolution for discs this large"
-        ) from None
-
-
-def _precheck_spherical_cover(max_abs_lat: float, res: int, disc_arc_deg: float) -> None:
-    """Plan-time budget check for the spherical cover. The count is not
-    monotone in |lat| (extent and spacing both scale with 1/cos and mostly
-    cancel until the 180-deg wrap cap), so probe the batch's worst-case
-    latitude AND the equator and fail on either."""
-    R, step = _spherical_cover_params(res, disc_arc_deg)
-    for lat in {0.0, float(max_abs_lat)}:
-        try:
-            spherical_disc_offsets(lat, R, step, max_samples=SPHERICAL_COVER_BUDGET)
-        except CoverBudgetExceeded as e:
-            raise ValueError(
-                f"disc {disc_arc_deg} arc-deg at lat {lat:.2f} needs {e.total} "
-                f"samples per query at res {res}; use a coarser resolution "
-                "for discs this large"
-            ) from None
+def _search_disc(
+    metric: str, res: int, disc_deg: float | None, disc_m: float | None
+) -> float:
+    """Validate ``metric`` and its radius parameter; return the search disc
+    in the metric's unit (degrees for equirect, meters for haversine),
+    defaulting to twice the max H3 circumradius at ``res``."""
+    if metric not in ("equirect", "haversine"):
+        raise ValueError(f"unknown metric {metric!r}")
+    # each metric takes ITS radius parameter only — silently ignoring the
+    # other one would run a wildly different search disc than the caller
+    # asked for
+    if metric == "haversine":
+        if disc_deg is not None:
+            raise ValueError("metric='haversine' takes disc_m (meters), not disc_deg")
+        if disc_m is None:
+            return _math.radians(2.0 * h3_max_circumradius_deg(res)) * EARTH_RADIUS_M
+        return float(disc_m)
+    if disc_m is not None:
+        raise ValueError("metric='equirect' takes disc_deg (degrees), not disc_m")
+    if disc_deg is None:
+        return 2.0 * h3_max_circumradius_deg(res)
+    return float(disc_deg)
 
 
 def knn_h3(
@@ -612,7 +578,6 @@ def knn_h3(
     k: int | None = None,
     res: int = 8,
     disc_deg: float | None = None,
-    salt: int = 1,
     cell_col: str | None = None,
     metric: str = "equirect",
     disc_m: float | None = None,
@@ -621,9 +586,7 @@ def knn_h3(
     ``res``; each query explodes to the cells covering its search disc, the
     two sides equi-join on the cell id, and a per-query top-k ranks by the
     chosen metric. ``exact`` reports the disc guarantee: true iff >= k
-    candidates were found and the k-th lies inside the disc. Hot cells: AQE
-    skew splitting by default; ``salt`` > 1 pre-salts the point side like
-    knn_kring.
+    candidates were found and the k-th lies inside the disc.
 
     ``metric='equirect'`` (default): ranks by the cos-scaled local-degree
     metric; fine within a small window, distorted near poles / across the
@@ -645,89 +608,45 @@ def knn_h3(
     on a cell-partitioned/sorted layout, lets the cover join prune
     partitions/row groups.
     """
-    if metric not in ("equirect", "haversine"):
-        raise ValueError(f"unknown metric {metric!r}")
-    # each metric takes ITS radius parameter only — silently ignoring the
-    # other one would run a wildly different search disc than the caller
-    # asked for (code-review r5 finding)
-    if metric == "haversine" and disc_deg is not None:
-        raise ValueError("metric='haversine' takes disc_m (meters), not disc_deg")
-    if metric == "equirect" and disc_m is not None:
-        raise ValueError("metric='equirect' takes disc_deg (degrees), not disc_m")
+    disc = _search_disc(metric, res, disc_deg, disc_m)
     # one tiny agg (query side is small by contract) instead of an
     # isEmpty + two filters: the common no-polar case pays a single job and
     # reuses `queries` untouched, and knn_h3_exact's per-round calls don't
     # recompute the query plan three times
     max_abs_lat = queries.agg(F.max(F.abs(F.col("lat")))).first()[0]
     if metric == "haversine":
-        if disc_m is None:
-            disc_m = (
-                _math.radians(2.0 * h3_max_circumradius_deg(res)) * EARTH_RADIUS_M
-            )
-        disc_arc = _math.degrees(disc_m / EARTH_RADIUS_M)
-        if max_abs_lat is not None:
-            _precheck_spherical_cover(float(max_abs_lat), res, disc_arc)
-        cover = _h3_spherical_disc_cells_col(
-            F.col("qlon"), F.col("qlat"), res, disc_arc
-        )
-        dist_col, dist_cap = "dist_m", float(disc_m)
+        sample = _spherical_disc_sampler(res, _math.degrees(disc / EARTH_RADIUS_M))
+        # the spherical count is not monotone in |lat| (extent and spacing
+        # both scale with 1/cos and mostly cancel until the 180-deg wrap
+        # cap): probe the equator too
+        probe_lats = (0.0, max_abs_lat)
+        dist_col, dist, cap = "dist_m", haversine_m, disc
     else:
-        if disc_deg is None:
-            disc_deg = 2.0 * h3_max_circumradius_deg(res)
-        polar_cut = 89.5 - (1.05 * disc_deg + h3_max_circumradius_deg(res))
+        polar_cut = 89.5 - _equirect_cover_radius(res, disc)
         if max_abs_lat is not None and float(max_abs_lat) >= polar_cut:
             polar = queries.filter(F.abs(F.col("lat")) >= F.lit(polar_cut))
             rest = queries.filter(F.abs(F.col("lat")) < F.lit(polar_cut))
-            return knn_h3(points, rest, k, res, disc_deg, salt, cell_col).unionByName(
-                _knn_brute_equirect(points, polar, k)
+            return knn_h3(points, rest, k, res, disc, cell_col).unionByName(
+                _brute(points, polar, k, "dist2", _equirect_dist2)
+                .withColumn("exact", F.lit(True))
             )
-        if max_abs_lat is not None:
-            _precheck_equirect_cover(float(max_abs_lat), res, disc_deg)
-        cover = _h3_disc_cells_col(F.col("qlon"), F.col("qlat"), res, disc_deg)
-        dist_col, dist_cap = "dist2", float(disc_deg) ** 2
-    q = queries.select(
-        "qid",
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-        (F.lit(k) if k is not None else F.col("k")).alias("k"),
+        sample = _equirect_disc_sampler(res, disc)
+        # the equirect count grows monotonically with |lat| (arc extent /
+        # band cos): the batch's max |lat| is the worst case
+        probe_lats = (max_abs_lat,)
+        dist_col, dist, cap = "dist2", _equirect_dist2, disc**2
+    if max_abs_lat is not None:
+        # plan-time budget check (ADVICE r4 #4): an oversized disc fails
+        # here with a clean message instead of as an opaque PythonException
+        # after the job launches
+        for lat in probe_lats:
+            sample(float(lat))
+    point_cell = (
+        F.col(cell_col) if cell_col is not None
+        else C.cell_h3(F.col("lon"), F.col("lat"), res)
     )
-    qcells = q.withColumn("cell", F.explode(cover))
-    pts = points.select(
-        "id", "lon", "lat",
-        (F.col(cell_col) if cell_col is not None
-         else C.cell_h3(F.col("lon"), F.col("lat"), res)).alias("cell"),
-    )
-    if salt > 1:
-        qcells = qcells.withColumn(
-            "__salt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-        )
-        pts = pts.withColumn("__salt", F.pmod(F.col("id"), F.lit(salt)).cast("int"))
-        cand = pts.join(F.broadcast(qcells), ["cell", "__salt"]).drop("__salt")
-    else:
-        cand = pts.join(F.broadcast(qcells), "cell")
-    if metric == "haversine":
-        cand = cand.withColumn(
-            "dist_m",
-            haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")),
-        )
-    else:
-        coslat = F.cos(F.radians(F.col("qlat")))
-        dx = (F.col("lon") - F.col("qlon")) * coslat
-        dy = F.col("lat") - F.col("qlat")
-        cand = cand.withColumn("dist2", dx * dx + dy * dy)
-    found = _topk(cand, dist_col=dist_col)
-    w_all = Window.partitionBy("qid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return (
-        found.withColumn("__maxd", F.max(dist_col).over(w_all))
-        .withColumn("__n", F.count("*").over(w_all))
-        .withColumn(
-            "exact",
-            (F.col("__n") >= F.col("k")) & (F.col("__maxd") <= F.lit(dist_cap)),
-        )
-        .select("qid", "id", "lon", "lat", dist_col, "rank", "exact")
-    )
+    cover = _h3_disc_cells_col(F.col("qlon"), F.col("qlat"), res, sample)
+    return _candidate_topk(points, queries, k, point_cell, cover, dist_col, dist, cap)
 
 
 def knn_h3_exact(
@@ -737,68 +656,38 @@ def knn_h3_exact(
     res: int = 8,
     disc_deg: float | None = None,
     max_doublings: int = 6,
-    salt: int = 1,
     metric: str = "equirect",
     disc_m: float | None = None,
 ) -> DataFrame:
-    """Doubling driver loop over ``knn_h3`` (same shape as knn_kring_exact):
+    """Doubling loop over ``knn_h3`` (same loop as knn_kring_exact):
     re-query only the still-inexact queries with a doubled disc; brute-force
     the pathological remainder. With ``metric='haversine'`` the loop doubles
     ``disc_m`` (meters) and the fallback is the exact haversine brute path —
     globally correct results at any latitude/longitude."""
-    if metric == "haversine" and disc_deg is not None:
-        raise ValueError("metric='haversine' takes disc_m (meters), not disc_deg")
-    if metric == "equirect" and disc_m is not None:
-        raise ValueError("metric='equirect' takes disc_deg (degrees), not disc_m")
+    disc = _search_disc(metric, res, disc_deg, disc_m)
     if metric == "haversine":
-        if disc_m is None:
-            disc_m = (
-                _math.radians(2.0 * h3_max_circumradius_deg(res)) * EARTH_RADIUS_M
-            )
         # the wrap-aware sampler serves any disc whose row count fits the
         # budget; half the planet's arc is the natural cap beyond which
         # brute force reads less data than the cover join
         max_disc = _math.radians(60.0) * EARTH_RADIUS_M
-        d = float(disc_m)
+        radius_kw, dist_col, dist = "disc_m", "dist_m", haversine_m
     else:
-        if disc_deg is None:
-            disc_deg = 2.0 * h3_max_circumradius_deg(res)
         max_disc = h3_max_disc_deg(res)
-        d = float(disc_deg)
-    pending = queries
-    results: list[DataFrame] = []
-    brute_rest = False
-    for _ in range(max_doublings):
-        if d > max_disc:
-            brute_rest = True  # disc outgrew the cover sampler: brute-force
-            break
+        radius_kw, dist_col, dist = "disc_deg", "dist2", _equirect_dist2
+
+    def run_round(pending: DataFrame, d: float) -> DataFrame | None:
         try:
-            if metric == "haversine":
-                res_df = knn_h3(
-                    points, pending, k, res, salt=salt, metric="haversine", disc_m=d
-                ).cache()
-            else:
-                res_df = knn_h3(points, pending, k, res, d, salt).cache()
+            return knn_h3(points, pending, k, res, metric=metric, **{radius_kw: d})
         except ValueError:
-            brute_rest = True  # plan-time budget pre-check fired
-            break
-        done_q = res_df.filter(F.col("exact")).select("qid").distinct()
-        results.append(res_df.join(done_q, "qid", "left_semi").localCheckpoint())
-        pending = pending.join(done_q, "qid", "left_anti").localCheckpoint()
-        res_df.unpersist()
-        if pending.isEmpty():
-            break
-        d *= 2
-    else:
-        brute_rest = True
-    if brute_rest:
-        brute = (
-            _knn_brute_haversine(points, pending, k)
-            if metric == "haversine"
-            else _knn_brute_equirect(points, pending, k)
-        )
-        results.append(brute)
-    out = results[0]
-    for extra in results[1:]:
-        out = out.unionByName(extra)
-    return out
+            return None  # plan-time budget pre-check fired: brute-force
+
+    # the disc outgrowing the cover sampler ends the rounds: brute-force
+    discs = itertools.takewhile(
+        lambda d: d <= max_disc, (disc * 2**i for i in range(max_doublings))
+    )
+    return _doubling_loop(
+        queries,
+        discs,
+        run_round,
+        lambda pending: _brute(points, pending, k, dist_col, dist),
+    )

@@ -238,3 +238,9 @@ def test_mismatched_disc_parameter_rejected(spark, global_points):
     # ValueErrors by design, so the guard must fire before it)
     with pytest.raises(ValueError, match="disc_deg"):
         knn.knn_h3_exact(pts, qdf, res=8, disc_m=1000.0)
+    # an unknown metric fails in both entry points instead of silently
+    # running the equirect search with the default disc
+    with pytest.raises(ValueError, match="unknown metric"):
+        knn.knn_h3(pts, qdf, res=8, metric="geodesic", disc_m=1000.0)
+    with pytest.raises(ValueError, match="unknown metric"):
+        knn.knn_h3_exact(pts, qdf, res=8, metric="geodesic", disc_m=1000.0)

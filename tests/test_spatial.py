@@ -167,14 +167,6 @@ def test_knn_kring_exact_matches_brute(spark, points, points_pd):
         assert [i for _, i in sorted(got[qid])] == expected, f"qid={qid}"
 
 
-def test_knn_kring_salted_same_result(spark, points, points_pd):
-    plain = knn.knn_kring(points, _queries_df(spark), ring=2, salt=1)
-    salted = knn.knn_kring(points, _queries_df(spark), ring=2, salt=4)
-    a = sorted((r.qid, r.rank, r.id) for r in plain.collect())
-    b = sorted((r.qid, r.rank, r.id) for r in salted.collect())
-    assert a == b
-
-
 def test_tile_assignment_matches_python(points, points_pd):
     z = 13
     got = {r.id: r.tile_id for r in tiles.assign_tiles(points, z).select("id", "tile_id").collect()}
@@ -225,14 +217,6 @@ def test_knn_h3_exact_matches_oracle(spark, points, points_pd):
             assert d2 == pytest.approx(ed)
 
 
-def test_knn_h3_salted_same_result(spark, points):
-    plain = knn.knn_h3(points, _queries_df(spark), res=8, salt=1)
-    salted = knn.knn_h3(points, _queries_df(spark), res=8, salt=4)
-    a = sorted((r.qid, r.rank, r.id) for r in plain.collect())
-    b = sorted((r.qid, r.rank, r.id) for r in salted.collect())
-    assert a == b
-
-
 def test_knn_h3_disc_cover_is_superset(spark):
     """The disc cover must contain every cell holding a point within the
     disc (the exactness guarantee's foundation) — checked directly against
@@ -241,6 +225,7 @@ def test_knn_h3_disc_cover_is_superset(spark):
 
     from simple_osm_queries_spark.functions import h3_encode as E
     from simple_osm_queries_spark.operators.knn import (
+        _equirect_disc_sampler,
         _h3_disc_cells_col,
         h3_max_circumradius_deg,
     )
@@ -249,7 +234,9 @@ def test_knn_h3_disc_cover_is_superset(spark):
     disc = 2.0 * h3_max_circumradius_deg(res)
     df = spark.createDataFrame(pd.DataFrame({"qlon": [qlon], "qlat": [qlat]}))
     cover = set(
-        df.select(_h3_disc_cells_col(F.col("qlon"), F.col("qlat"), res, disc).alias("c"))
+        df.select(_h3_disc_cells_col(
+            F.col("qlon"), F.col("qlat"), res, _equirect_disc_sampler(res, disc)
+        ).alias("c"))
         .collect()[0]
         .c
     )
@@ -318,6 +305,7 @@ def test_knn_h3_disc_cover_high_latitude(spark):
 
     from simple_osm_queries_spark.functions import h3_encode as E
     from simple_osm_queries_spark.operators.knn import (
+        _equirect_disc_sampler,
         _h3_disc_cells_col,
         h3_max_circumradius_deg,
     )
@@ -326,7 +314,9 @@ def test_knn_h3_disc_cover_high_latitude(spark):
     disc = 2.0 * h3_max_circumradius_deg(res)
     df = spark.createDataFrame(pd.DataFrame({"qlon": [qlon], "qlat": [qlat]}))
     cover = set(
-        df.select(_h3_disc_cells_col(F.col("qlon"), F.col("qlat"), res, disc).alias("c"))
+        df.select(_h3_disc_cells_col(
+            F.col("qlon"), F.col("qlat"), res, _equirect_disc_sampler(res, disc)
+        ).alias("c"))
         .collect()[0]
         .c
     )
@@ -361,6 +351,56 @@ def test_knn_h3_pole_query_falls_back_to_brute(spark, points, points_pd):
         expected = [i for i, _ in _knn_oracle_equirect(pts_pd, qlon, qlat, k)]
         got = [r.id for r in sorted((r for r in rows if r.qid == qid), key=lambda r: r.rank)]
         assert got == expected, f"qid={qid}"
+
+
+def _plan_nodes(df):
+    """(node name, section text) for every operator of the formatted plan."""
+    import contextlib
+    import io
+    import re
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return [
+        (sec.split(None, 1)[0], sec)
+        for sec in re.split(r"\n\(\d+\) ", buf.getvalue())[1:]
+    ]
+
+
+KNN_PLAN_CASES = {
+    "kring": lambda pts, q: knn.knn_kring(pts, q, ring=1),
+    "h3_equirect": lambda pts, q: knn.knn_h3(pts, q, res=8),
+    "h3_haversine": lambda pts, q: knn.knn_h3(pts, q, res=8, metric="haversine"),
+}
+
+
+@pytest.mark.parametrize("case", list(KNN_PLAN_CASES))
+def test_knn_candidate_join_plan_shape(spark, points_pd, case):
+    """Plan pin for the kNN family: the candidate join is a broadcast hash
+    join (the point side is never shuffled on the cell key) and the H3
+    cover UDF is evaluated exactly once. Automatic broadcasting is off for
+    the test, so a BroadcastHashJoin can only come from the hint. The points
+    are a local relation so the plan holds no cached fixture subplan."""
+    points = spark.createDataFrame(points_pd[["id", "lon", "lat"]])
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        nodes = _plan_nodes(KNN_PLAN_CASES[case](points, _queries_df(spark)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    kinds = [n for n, _ in nodes]
+    assert kinds.count("BroadcastHashJoin") == 1, kinds
+    for bad in (
+        "SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
+        "BroadcastNestedLoopJoin",
+    ):
+        assert bad not in kinds, bad
+    if case == "kring":
+        assert "ArrowEvalPython" not in kinds, kinds
+    else:
+        covers = sum(sec.count("_cover(") for n, sec in nodes if n == "ArrowEvalPython")
+        assert covers == 1, covers
 
 
 def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
