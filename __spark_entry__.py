@@ -1683,7 +1683,7 @@ FROM u
 
     # osm_buffer_way_way: full segment-pair distance twin. Helpers build the
     # point-to-segment / crossing expressions exactly as the Spark operator
-    # computes them (operators/buffer.py::seg_pair_dist2_m): meters via
+    # computes them (operators/buffer.py::seg_pair_d2_m_scalar): meters via
     # kx = 111320 * cos(radians(outer segment's first endpoint lat)),
     # crossing test in degree space, LEAST over the 4 endpoint distances.
     def _dbl(x: str) -> str:
@@ -1811,7 +1811,7 @@ WHERE a.has_amenity AND EXISTS (
     )
 
     # nearest_way_join: full mirror of operators/nearest_way.py — per-segment
-    # point-to-segment distance exactly as buffer.point_to_way_dist2_m builds
+    # point-to-segment distance exactly as buffer.pt_seg_projection_m builds
     # it (point translated to the origin: passing px=py=0 into the shared
     # segment helper is IEEE-exact — (0-x) == -x, (-a)*d + (-b)*e ==
     # -(a*d + b*e), x - 0.0 == x), min over the way's 2 segments, rank by
@@ -1829,7 +1829,8 @@ WHERE a.has_amenity AND EXISTS (
         return _pt_seg_d2_sql(_dbl("0.0"), _dbl("0.0"), ax, ay, bx, by)
 
     def _nw_seg_t(lon_a: str, lat_a: str, lon_b: str, lat_b: str) -> str:
-        # the clamped projection parameter — mirrors _seg_t_scalar's tree
+        # the clamped projection parameter — mirrors the t of
+        # buffer.pt_seg_projection_m
         ax = f"((({lon_a}) - plon) * kx)"
         ay = f"((({lat_a}) - plat) * {_dbl('111320.0')})"
         bx = f"((({lon_b}) - plon) * kx)"

@@ -1,4 +1,5 @@
-"""Distance-buffer spatial semi-join — `this.buffer(5m).<type>{...}`.
+"""Distance-buffer spatial semi-join — `this.buffer(5m).<type>{...}` — and
+the proximity pipeline it shares with `nearest_way.py` and DBSCAN.
 
 The reference DOCUMENTS this operator as a future feature and never
 implemented it (/root/reference/README.md:154-181: "find all benches that
@@ -15,17 +16,27 @@ for global-scale buffers). Point-to-way distance is the minimum over the
 way's stored segments (point-to-segment projection), matching how the
 reference stores way geometry as node polylines.
 
-Physical shapes:
-* node<->node — equi-join on a buffer-sized grid key with ring-1 expansion
-  (shuffle-hash/broadcast on the cell key; exact: grid size >= D ensures a
-  point's 3x3 neighborhood covers its whole buffer disk);
-* node<->way / way<->way — strategy by inner-side size: broadcast the
-  filtered way side with an expanded-bbox candidate predicate (small dim,
-  one pass), or bucket both sides onto a D-sized grid and equi-join on the
-  cell key (big dim — the Spark analogue of the reference routing ways into
-  every cell they touch, grid_writer.go:90-252). The bucketed candidate
-  shuffle carries ids + bboxes only; node arrays join back for the exact
-  segment-distance refine. No broadcast nested loop at any size.
+One pipeline — cover with grid cells, equi-join on the cell, refine
+exactly (the Spark analogue of the reference routing ways into every cell
+they touch, grid_writer.go:90-252) — with each step written once:
+
+* `_point_pairs` — point<->point: the outer point explodes the fixed-grid
+  cells of its own D-padded box, the inner point keys to its cell; equi-
+  join, `point_dist2_m` refine. Directed (a, b) pairs; `node_node` and
+  `clustering.eps_neighbor_pairs` are thin wrappers.
+* `_point_way_candidates` — point<->way candidates by way-side size:
+  broadcast the bbox-only way side under a D-expanded bbox predicate
+  (small), or key points to their cell against the D-padded way cover
+  (`_bbox_cells_col(..., pad_m=D)`, big). Rows carry (nid, lon, lat, wid),
+  so no refine ever joins the point side back; the ways' segment rows
+  come back with them, broadcast when the way side is small.
+* `_point_way_refine` — candidates join the way's segment ROWS
+  (`way_segments`) and `pt_seg_projection_m` runs as scalar codegen;
+  shared by `within_buffer_node_way` and `nearest_way_join`.
+* `_way_way_refine` — candidate (id, iid) pairs join both sides' segment
+  rows under `seg_pair_d2_m_scalar` (0 on crossings).
+
+No broadcast nested loop on a bucketed path at any size.
 """
 
 from __future__ import annotations
@@ -38,6 +49,18 @@ from pyspark.sql import functions as F
 from simple_osm_queries_spark.functions import cells as C
 
 M_PER_DEG = 111320.0
+
+# |latitude| the fixed lon grids are sized for: a D-wide cell at 70 deg is
+# wider than D at every lower latitude. The point-pair cover pads by each
+# point's own latitude, so only cell sizes (never correctness) depend on it
+GRID_REF_LAT = 70.0
+
+# 'auto' strategy: way sides with at most this many rows broadcast; tests
+# patch it to force the bucketed path
+BROADCAST_THRESHOLD = 100_000
+
+DEFAULT_BUCKET_DEG = 0.01  # ~1.1 km: bounds per-way cell fan-out for
+# typical way extents; tune cell_deg to the data's P90 bbox size at scale
 
 
 def _meters_k(lat: Column) -> tuple[Column, Column]:
@@ -52,78 +75,79 @@ def point_dist2_m(lon_a: Column, lat_a: Column, lon_b: Column, lat_b: Column) ->
     return dx * dx + dy * dy
 
 
-def point_to_way_dist2_m(lon: Column, lat: Column, way_nodes: Column) -> Column:
-    """Min squared meter-distance from a point to a way's segment polyline.
+# --- point <-> point ------------------------------------------------------
 
-    ``way_nodes``: array<struct<id,lon,lat>> in path order.
-    """
-    kx, ky = _meters_k(lat)
-    n = F.size(way_nodes)
-    segs = F.zip_with(
-        F.slice(way_nodes, 1, n - 1),
-        F.slice(way_nodes, 2, n - 1),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
+# relative pad margin: rounding in cos/division cannot drop a pair at
+# exactly distance D
+_PAD_MARGIN = 1e-9
+
+
+def _point_pairs(
+    outer: DataFrame,
+    inner: DataFrame,
+    dist_m: float,
+    id_col: str = "id",
+    lon: str = "lon",
+    lat: str = "lat",
+) -> DataFrame:
+    """Directed pairs (a, b), a != b, with point_dist2_m(a -> b) <= dist_m²
+    (metric scaled at the OUTER point's latitude).
+
+    Grid: D-sized cells at GRID_REF_LAT, floored at 1e-5 deg (~1 m) so
+    cell indices stay inside int range for microscopic D. The outer point
+    covers the cells of its own box lon +- D/(M cos lat), lat +- D/M —
+    exact at every latitude, and at most 3x3 cells at |lat| <=
+    GRID_REF_LAT. The lon pad caps at 360 deg: the metric does not wrap
+    longitude, so near a pole every longitude can be within D, and the
+    cover of such a point grows to 720 deg / cell width. Two
+    explode(sequence) generators build the cover (no per-row lambda)."""
+    s_lat = max(dist_m / M_PER_DEG, 1e-5)
+    s_lon = max(dist_m / (M_PER_DEG * math.cos(math.radians(GRID_REF_LAT))), 1e-5)
+    pad = float(dist_m) * (1.0 + _PAD_MARGIN)
+    pad_lon = F.least(
+        F.lit(pad) / (F.lit(M_PER_DEG) * F.cos(F.radians(F.col("alat")))), F.lit(360.0)
     )
-
-    def seg_dist2(s: Column) -> Column:
-        ax = (s["a"]["lon"] - lon) * kx
-        ay = (s["a"]["lat"] - lat) * ky
-        bx = (s["b"]["lon"] - lon) * kx
-        by = (s["b"]["lat"] - lat) * ky
-        dx = bx - ax
-        dy = by - ay
-        len2 = dx * dx + dy * dy
-        t_raw = F.when(len2 > 0, -(ax * dx + ay * dy) / len2).otherwise(F.lit(0.0))
-        t = F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
-        cx = ax + t * dx
-        cy = ay + t * dy
-        return cx * cx + cy * cy
-
-    first = way_nodes[0]
-    single_dist = point_dist2_m(lon, lat, first["lon"], first["lat"])
-    return F.coalesce(F.array_min(F.transform(segs, seg_dist2)), single_dist)
+    pad_lat = F.lit(pad / M_PER_DEG)
+    xs = F.sequence(
+        C.cell_x(F.col("alon") - pad_lon, s_lon), C.cell_x(F.col("alon") + pad_lon, s_lon)
+    )
+    ys = F.sequence(
+        C.cell_y(F.col("alat") - pad_lat, s_lat), C.cell_y(F.col("alat") + pad_lat, s_lat)
+    )
+    left = (
+        outer.select(
+            F.col(id_col).alias("a"), F.col(lon).alias("alon"), F.col(lat).alias("alat")
+        )
+        .select("a", "alon", "alat", F.explode(xs).alias("cx"))
+        .select("a", "alon", "alat", "cx", F.explode(ys).alias("cy"))
+        .select("a", "alon", "alat", C.pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
+    )
+    right = inner.select(
+        F.col(id_col).alias("b"),
+        F.col(lon).alias("blon"),
+        F.col(lat).alias("blat"),
+        C.pack_cell(C.cell_x(F.col(lon), s_lon), C.cell_y(F.col(lat), s_lat)).alias("cell"),
+    )
+    d2 = point_dist2_m(F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"))
+    return (
+        left.join(right, "cell")
+        .filter((F.col("a") != F.col("b")) & (d2 <= F.lit(float(dist_m) ** 2)))
+        .select("a", "b")
+    )
 
 
 def within_buffer_node_node(
-    outer_nodes: DataFrame,
-    inner_nodes: DataFrame,
-    buffer_m: float,
-    ref_lat: float = 70.0,
+    outer_nodes: DataFrame, inner_nodes: DataFrame, buffer_m: float
 ) -> DataFrame:
-    """Outer node ids having >=1 inner node within buffer_m meters.
-
-    ``ref_lat`` bounds the data's |latitude| for the lon grid sizing (the
-    grid must be at least D meters wide at every data latitude).
-    """
-    s_lat = buffer_m / M_PER_DEG
-    s_lon = buffer_m / (M_PER_DEG * math.cos(math.radians(ref_lat)))
-    inner = inner_nodes.select(
-        F.col("id").alias("iid"),
-        F.col("lon").alias("ilon"),
-        F.col("lat").alias("ilat"),
-        C.pack_cell(C.cell_x(F.col("lon"), s_lon), C.cell_y(F.col("lat"), s_lat)).alias("cell"),
-    )
-    ox = C.cell_x(F.col("lon"), s_lon)
-    oy = C.cell_y(F.col("lat"), s_lat)
-    ring = [
-        C.pack_cell(ox + F.lit(dx), oy + F.lit(dy))
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    ]
-    outer = outer_nodes.select("id", "lon", "lat").withColumn(
-        "cell", F.explode(F.array(*ring))
-    )
-    d2 = point_dist2_m(F.col("lon"), F.col("lat"), F.col("ilon"), F.col("ilat"))
+    """Outer node ids having >=1 inner node within buffer_m meters."""
     return (
-        outer.join(inner, "cell")
-        .filter((F.col("id") != F.col("iid")) & (d2 <= F.lit(float(buffer_m) ** 2)))
-        .select("id")
+        _point_pairs(outer_nodes, inner_nodes, buffer_m)
+        .select(F.col("a").alias("id"))
         .distinct()
     )
 
 
-DEFAULT_BUCKET_DEG = 0.01  # ~1.1 km: bounds per-way cell fan-out for
-# typical way extents; tune cell_deg to the data's P90 bbox size at scale
+# --- point <-> way --------------------------------------------------------
 
 
 def _grid_sizes(buffer_m: float, ref_lat: float, cell_deg: float | None) -> tuple[float, float]:
@@ -144,15 +168,21 @@ def _bbox_cells_col(
     max_lat: Column,
     s_lon: float,
     s_lat: float,
-    pad_lon: Column | None = None,
-    pad_lat: Column | None = None,
+    pad_m: float | None = None,
 ) -> Column:
-    """array<long> of packed grid cells covering a (padded) bbox. cell_x/y
-    truncate toward zero but stay monotone, so the [cell(min), cell(max)]
-    sequence is a correct cover."""
-    zero = F.lit(0.0)
-    plon = pad_lon if pad_lon is not None else zero
-    plat = pad_lat if pad_lat is not None else zero
+    """array<long> of packed grid cells covering a bbox, padded by
+    ``pad_m`` meters when given: D/M in lat, D/(M cos(max(|min_lat|,
+    |max_lat|))) in lon — the widest lon extent of D anywhere in the bbox,
+    so the cover holds every point within D of the way. cell_x/y truncate
+    toward zero but stay monotone, so the [cell(min), cell(max)] sequence
+    is a correct cover."""
+    if pad_m is None:
+        plon = plat = F.lit(0.0)
+    else:
+        plon = F.lit(pad_m) / (
+            F.lit(M_PER_DEG) * F.cos(F.radians(F.greatest(F.abs(min_lat), F.abs(max_lat))))
+        )
+        plat = F.lit(pad_m / M_PER_DEG)
     xs = F.sequence(C.cell_x(min_lon - plon, s_lon), C.cell_x(max_lon + plon, s_lon))
     ys = F.sequence(C.cell_y(min_lat - plat, s_lat), C.cell_y(max_lat + plat, s_lat))
     return F.flatten(
@@ -160,39 +190,36 @@ def _bbox_cells_col(
     )
 
 
-def _resolve_strategy(inner: DataFrame, strategy: str, broadcast_threshold: int) -> str:
-    """'auto' counts the (filtered) inner side up to the threshold: small
-    dims broadcast (one pass, no shuffle), big ones take the bucketed
+def _resolve_strategy(inner: DataFrame, strategy: str) -> str:
+    """'auto' counts the (filtered) inner side up to BROADCAST_THRESHOLD:
+    small dims broadcast (one pass, no shuffle), big ones take the bucketed
     equi-join (the 100x-scale plan — a BNLJ over a fat inner side is the one
     plan we refuse to ship)."""
     if strategy != "auto":
         return strategy
-    n = inner.limit(broadcast_threshold + 1).count()
-    return "broadcast" if n <= broadcast_threshold else "bucketed"
+    n = inner.limit(BROADCAST_THRESHOLD + 1).count()
+    return "broadcast" if n <= BROADCAST_THRESHOLD else "bucketed"
 
 
-def within_buffer_node_way(
-    nodes: DataFrame,
+def _point_way_candidates(
+    points: DataFrame,
     ways: DataFrame,
-    buffer_m: float,
-    output: str = "node",
-    strategy: str = "auto",
-    broadcast_threshold: int = 100_000,
-    ref_lat: float = 70.0,
-    cell_deg: float | None = None,
-) -> DataFrame:
-    """Ids of nodes with a way within buffer_m (output='node'), or ids of
-    ways with a node within buffer_m (output='way').
+    dist_m: float,
+    strategy: str,
+    ref_lat: float,
+    cell_deg: float | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidate rows (nid, lon, lat, wid) — a superset of the (point,
+    way) pairs within dist_m —, the ways' segment rows for the refine).
+    ``points``: (id, lon, lat); ``ways``: (id, nodes, min_lon, min_lat,
+    max_lon, max_lat).
 
-    ``ways`` must carry (id, nodes, min_lon, min_lat, max_lon, max_lat).
-    Physical strategy: broadcast (small filtered way side: D-expanded bbox
-    candidate predicate + exact refine in one pass) or bucketed (big way
-    side: ways explode to the grid cells of their D-expanded bbox, nodes to
-    their own cell, equi-join on cell, pair-distinct on ids only, then the
-    exact point-to-polyline refine on joined-back geometry). 'auto' picks by
-    counting the way side against ``broadcast_threshold``.
-    """
-    d_lat = buffer_m / M_PER_DEG
+    Small way side: D-expanded bbox predicate against the broadcast
+    bbox-only ways, and the segment rows broadcast too. Big: ways explode
+    to their D-padded cell cover, points to their own cell, equi-join on
+    the cell. A way emits each cover cell once and a point lives in one
+    cell, so bucketed pairs are unique; the candidate rows carry lon/lat —
+    two extra doubles beat a join-back shuffle of the (big) point side."""
     w = ways.select(
         F.col("id").alias("wid"),
         F.col("nodes").alias("wnodes"),
@@ -201,13 +228,11 @@ def within_buffer_node_way(
         "max_lon",
         "max_lat",
     )
-    pt = nodes.select(F.col("id").alias("nid"), "lon", "lat")
-    out_col = "nid" if output == "node" else "wid"
-    r2 = float(buffer_m) ** 2
-
-    small_ways = _resolve_strategy(w, strategy, broadcast_threshold) == "broadcast"
+    pt = points.select(F.col("id").alias("nid"), "lon", "lat")
+    small_ways = _resolve_strategy(w, strategy) == "broadcast"
     if small_ways:
-        d_lon = F.lit(buffer_m) / (F.lit(M_PER_DEG) * F.cos(F.radians(F.col("lat"))))
+        d_lat = dist_m / M_PER_DEG
+        d_lon = F.lit(dist_m) / (F.lit(M_PER_DEG) * F.cos(F.radians(F.col("lat"))))
         cand_pred = (
             (F.col("lon") >= F.col("min_lon") - d_lon)
             & (F.col("lon") <= F.col("max_lon") + d_lon)
@@ -218,24 +243,16 @@ def within_buffer_node_way(
             F.broadcast(w.select("wid", "min_lon", "min_lat", "max_lon", "max_lat")),
             cand_pred,
             "inner",
-        ).select("nid", "lon", "lat", "wid")
-    else:
-        # bucketed: equi-join on a D-sized grid key; the candidate shuffle
-        # carries (nid, lon, lat, wid) — two extra doubles beat a whole
-        # join-back shuffle of the (big) point side
-        s_lon, s_lat = _grid_sizes(buffer_m, ref_lat, cell_deg)
-        d_lon_w = F.lit(buffer_m) / (
-            F.lit(M_PER_DEG)
-            * F.cos(F.radians(F.greatest(F.abs(F.col("min_lat")), F.abs(F.col("max_lat")))))
         )
+    else:
+        s_lon, s_lat = _grid_sizes(dist_m, ref_lat, cell_deg)
         w_cells = w.select(
             "wid",
             F.explode(
                 _bbox_cells_col(
                     F.col("min_lon"), F.col("min_lat"),
                     F.col("max_lon"), F.col("max_lat"),
-                    s_lon, s_lat,
-                    pad_lon=d_lon_w, pad_lat=F.lit(d_lat),
+                    s_lon, s_lat, pad_m=dist_m,
                 )
             ).alias("cell"),
         )
@@ -243,26 +260,55 @@ def within_buffer_node_way(
             "nid", "lon", "lat",
             C.pack_cell(C.cell_x(F.col("lon"), s_lon), C.cell_y(F.col("lat"), s_lat)).alias("cell"),
         )
-        cand = n_cells.join(w_cells, "cell").select("nid", "lon", "lat", "wid")
-
-    # exact refine on segment ROWS (scalar codegen) — never the array
-    # lambda per pair (interpreted; see way_segments docstring). EXISTS
-    # semantics = any segment row within r2; output distinct absorbs
-    # candidate multiplicity.
+        cand = n_cells.join(w_cells, "cell")
     segs = way_segments(w, "wid", "wnodes")
-    if small_ways:
-        segs = F.broadcast(segs)
-    matched = cand.join(segs, "wid").filter(
-        pt_seg_d2_m_scalar(
-            F.col("lon"), F.col("lat"),
-            F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"),
-        )
-        <= F.lit(r2)
+    return cand.select("nid", "lon", "lat", "wid"), F.broadcast(segs) if small_ways else segs
+
+
+def _point_way_refine(cand: DataFrame, segs: DataFrame, dist_m: float) -> DataFrame:
+    """Candidate rows joined to their way's segment ROWS, kept where the
+    segment lies within dist_m; adds the projection parameter ``t`` and
+    squared meters ``d2`` per (pair, segment) row. Scalar codegen — never
+    the array lambda per pair (interpreted; see `way_segments`)."""
+    t, d2 = pt_seg_projection_m(
+        F.col("lon"), F.col("lat"),
+        F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"),
     )
-    return matched.select(F.col(out_col).alias("id")).distinct()
+    return (
+        cand.join(segs, "wid")
+        .withColumns({"t": t, "d2": d2})
+        .filter(F.col("d2") <= F.lit(float(dist_m) ** 2))
+    )
 
 
-# --- way <-> way (segment-pair distance) -----------------------------------
+def within_buffer_node_way(
+    nodes: DataFrame,
+    ways: DataFrame,
+    buffer_m: float,
+    output: str = "node",
+    strategy: str = "auto",
+    ref_lat: float = GRID_REF_LAT,
+    cell_deg: float | None = None,
+) -> DataFrame:
+    """Ids of nodes with a way within buffer_m (output='node'), or ids of
+    ways with a node within buffer_m (output='way').
+
+    ``ways`` must carry (id, nodes, min_lon, min_lat, max_lon, max_lat).
+    ``strategy``: 'broadcast', 'bucketed' or 'auto' (counts the way side
+    against BROADCAST_THRESHOLD); see `_point_way_candidates`. EXISTS
+    semantics = any segment row within D; the output distinct absorbs
+    candidate and segment multiplicity.
+    """
+    cand, segs = _point_way_candidates(nodes, ways, buffer_m, strategy, ref_lat, cell_deg)
+    out_col = "nid" if output == "node" else "wid"
+    return (
+        _point_way_refine(cand, segs, buffer_m)
+        .select(F.col(out_col).alias("id"))
+        .distinct()
+    )
+
+
+# --- segments ---------------------------------------------------------------
 
 
 def segments_col(nodes: Column) -> Column:
@@ -284,10 +330,10 @@ def way_segments(
     """(id, {p}alon, {p}alat, {p}blon, {p}blat) — one row per consecutive-
     node segment. The interpreted `segments_col` lambda runs once per WAY;
     everything downstream of the explode is scalar codegen. This is the
-    refine-side representation for all buffer/nearest joins: evaluating the
-    array-lambda distance (`point_to_way_dist2_m` / `way_pair_within_m`)
-    once per candidate PAIR runs interpreted at ~10 µs/pair — measured 5-20x
-    the rest of the join (BENCH.md r5e)."""
+    refine-side representation for all buffer/nearest joins: evaluating an
+    array-lambda distance over the node arrays once per candidate PAIR
+    runs interpreted at ~10 µs/pair — measured 5-20x the rest of the join
+    (BENCH.md r5e)."""
     s = ways.select(id_col, F.explode(segments_col(F.col(nodes_col))).alias("_s"))
     return s.select(
         id_col,
@@ -298,13 +344,16 @@ def way_segments(
     )
 
 
-def pt_seg_d2_m_scalar(
+def pt_seg_projection_m(
     lon: Column, lat: Column, alon: Column, alat: Column, blon: Column, blat: Column
-) -> Column:
-    """Squared meter distance from point to segment — the exact expression
-    tree of `point_to_way_dist2_m`'s per-segment lambda restated over
-    scalar columns (whole-stage codegen; IEEE-identical values, so DuckDB
-    twins written for the array form hold)."""
+) -> tuple[Column, Column]:
+    """(t, d2): the clamped projection parameter of the point onto segment
+    a-b and the squared meter distance to the projected point. Meters are
+    scaled at the point's latitude, with the point translated to the
+    origin. Meter space is a per-axis affine image of degree space, so t
+    along the meter segment IS t along the degree segment (the snap point
+    is a + t (b - a) in degrees). The DuckDB twins mirror this exact tree
+    (IEEE-identical values)."""
     kx, ky = _meters_k(lat)
     ax = (alon - lon) * kx
     ay = (alat - lat) * ky
@@ -317,7 +366,10 @@ def pt_seg_d2_m_scalar(
     t = F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
     cx = ax + t * dx
     cy = ay + t * dy
-    return cx * cx + cy * cy
+    return t, cx * cx + cy * cy
+
+
+# --- way <-> way (segment-pair distance) -----------------------------------
 
 
 def _pt_seg_d2(px: Column, py: Column, ax: Column, ay: Column, bx: Column, by: Column) -> Column:
@@ -335,60 +387,20 @@ def _ccw(ax: Column, ay: Column, bx: Column, by: Column, cx: Column, cy: Column)
     return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
 
 
-def seg_pair_dist2_m(sa: Column, sb: Column) -> Column:
-    """Min squared meter-distance between two segments (structs a/b of
-    lon/lat nodes).
+def seg_pair_d2_m_scalar(
+    oalon: Column, oalat: Column, oblon: Column, oblat: Column,
+    ialon: Column, ialat: Column, iblon: Column, iblat: Column,
+) -> Column:
+    """Min squared meter-distance between the outer segment
+    a=(oalon,oalat) b=(oblon,oblat) and the inner one likewise.
 
     Decomposition: 0 if the segments properly cross, else the min of the 4
     endpoint-to-other-segment distances — exact for every configuration
     (touching / collinear cases are covered by an endpoint distance of 0,
     so only the strict proper-crossing test is needed). The meter scaling
-    uses cos(lat) of segment A's first endpoint; the crossing test runs in
-    degree space (axis scaling preserves orientation signs).
-    """
-    kx = F.lit(M_PER_DEG) * F.cos(F.radians(sa["a"]["lat"]))
-    ky = F.lit(M_PER_DEG)
-    a1x, a1y = sa["a"]["lon"] * kx, sa["a"]["lat"] * ky
-    a2x, a2y = sa["b"]["lon"] * kx, sa["b"]["lat"] * ky
-    b1x, b1y = sb["a"]["lon"] * kx, sb["a"]["lat"] * ky
-    b2x, b2y = sb["b"]["lon"] * kx, sb["b"]["lat"] * ky
-    d = F.least(
-        _pt_seg_d2(a1x, a1y, b1x, b1y, b2x, b2y),
-        _pt_seg_d2(a2x, a2y, b1x, b1y, b2x, b2y),
-        _pt_seg_d2(b1x, b1y, a1x, a1y, a2x, a2y),
-        _pt_seg_d2(b2x, b2y, a1x, a1y, a2x, a2y),
-    )
-    o1 = _ccw(sa["a"]["lon"], sa["a"]["lat"], sa["b"]["lon"], sa["b"]["lat"], sb["a"]["lon"], sb["a"]["lat"])
-    o2 = _ccw(sa["a"]["lon"], sa["a"]["lat"], sa["b"]["lon"], sa["b"]["lat"], sb["b"]["lon"], sb["b"]["lat"])
-    o3 = _ccw(sb["a"]["lon"], sb["a"]["lat"], sb["b"]["lon"], sb["b"]["lat"], sa["a"]["lon"], sa["a"]["lat"])
-    o4 = _ccw(sb["a"]["lon"], sb["a"]["lat"], sb["b"]["lon"], sb["b"]["lat"], sa["b"]["lon"], sa["b"]["lat"])
-    crossing = (o1 * o2 < 0) & (o3 * o4 < 0)
-    return F.when(crossing, F.lit(0.0)).otherwise(d)
-
-
-def way_pair_within_m(nodes_a: Column, nodes_b: Column, buffer_m: float) -> Column:
-    """True iff min segment-pair distance between two polylines <= buffer_m.
-
-    Column form over node arrays — Spark evaluates the nested exists
-    INTERPRETED per pair; the joins below use the exploded scalar form
-    (`way_segments` + `seg_pair_d2_m_scalar`) instead. Kept as the
-    reference semantics / for ad-hoc use on small frames."""
-    d2 = F.lit(float(buffer_m) ** 2)
-    segs_b = segments_col(nodes_b)
-    return F.exists(
-        segments_col(nodes_a),
-        lambda sa: F.exists(segs_b, lambda sb: seg_pair_dist2_m(sa, sb) <= d2),
-    )
-
-
-def seg_pair_d2_m_scalar(
-    oalon: Column, oalat: Column, oblon: Column, oblat: Column,
-    ialon: Column, ialat: Column, iblon: Column, iblat: Column,
-) -> Column:
-    """`seg_pair_dist2_m`'s exact expression tree over scalar columns
-    (outer segment a=(oalon,oalat) b=(oblon,oblat), inner likewise) —
-    whole-stage codegen, IEEE-identical to the struct form so the
-    `osm_buffer_way_way` DuckDB twin keeps holding."""
+    uses cos(lat) of the outer segment's first endpoint; the crossing test
+    runs in degree space (axis scaling preserves orientation signs). The
+    `osm_buffer_way_way` DuckDB twin mirrors this exact tree."""
     kx = F.lit(M_PER_DEG) * F.cos(F.radians(oalat))
     ky = F.lit(M_PER_DEG)
     a1x, a1y = oalon * kx, oalat * ky
@@ -409,27 +421,51 @@ def seg_pair_d2_m_scalar(
     return F.when(crossing, F.lit(0.0)).otherwise(d)
 
 
+def _way_way_refine(
+    pairs: DataFrame, o: DataFrame, i: DataFrame, dist_m: float, small_inner: bool
+) -> DataFrame:
+    """Outer ids of candidate (id, iid) pairs with some segment pair within
+    dist_m: both sides' segment ROWS join onto the pairs (the inner ones
+    broadcast when the inner side is small), scalar-codegen refine."""
+    osegs = way_segments(o, "id", "onodes", prefix="o")
+    isegs = way_segments(i, "iid", "inodes", prefix="i")
+    seg_hit = (
+        seg_pair_d2_m_scalar(
+            F.col("oalon"), F.col("oalat"), F.col("oblon"), F.col("oblat"),
+            F.col("ialon"), F.col("ialat"), F.col("iblon"), F.col("iblat"),
+        )
+        <= F.lit(float(dist_m) ** 2)
+    )
+    return (
+        pairs.join(osegs, "id")
+        .join(F.broadcast(isegs) if small_inner else isegs, "iid")
+        .filter(seg_hit)
+        .select("id")
+        .distinct()
+    )
+
+
 def within_buffer_way_way(
     outer_ways: DataFrame,
     inner_ways: DataFrame,
     buffer_m: float,
     strategy: str = "auto",
-    broadcast_threshold: int = 100_000,
-    ref_lat: float = 70.0,
+    ref_lat: float = GRID_REF_LAT,
     cell_deg: float | None = None,
 ) -> DataFrame:
     """Outer way ids having >=1 (distinct) inner way within buffer_m meters.
 
-    Physical strategy:
+    Candidate pairs by ``strategy`` ('auto' counts the inner side against
+    BROADCAST_THRESHOLD):
     * broadcast (small filtered inner side) — D-expanded bbox-overlap
-      candidate predicate on a broadcast nested loop, exact segment-pair
-      refine (0 on crossings) in the same pass. The bbox lon expansion uses
-      the pair's worst-case |lat| so candidates stay a superset everywhere.
-    * bucketed (big inner side) — both sides explode their bbox to D-sized
-      grid cells (inner side D-padded), equi-join on cell with the bbox
-      overlap prefilter, pair-distinct on ids only, then geometry joins back
-      for the exact refine. All equi-joins — no BNLJ at any size.
-    'auto' counts the inner side against ``broadcast_threshold``.
+      predicate on a broadcast nested loop over the bbox-only inner dim.
+      The bbox lon expansion uses the pair's worst-case |lat| so
+      candidates stay a superset everywhere.
+    * bucketed (big inner side) — both sides explode their bbox to grid
+      cells (inner side D-padded), equi-join on cell with the bbox overlap
+      prefilter, pair-distinct on ids only. All equi-joins — no BNLJ.
+    The candidate shuffle carries ids + bboxes, never the node arrays;
+    `_way_way_refine` joins the geometry onto the pairs.
     """
     o = outer_ways.select(
         F.col("id"),
@@ -458,57 +494,29 @@ def within_buffer_way_way(
         & (F.col("o_max_lon") + d_lon >= F.col("i_min_lon"))
         & (F.col("o_min_lat") - F.lit(d_lat) <= F.col("i_max_lat"))
         & (F.col("o_max_lat") + F.lit(d_lat) >= F.col("i_min_lat"))
+        & (F.col("id") != F.col("iid"))
     )
 
-    r2 = float(buffer_m) ** 2
-    osegs = way_segments(o, "id", "onodes", prefix="o")
-    isegs = way_segments(i, "iid", "inodes", prefix="i")
-    seg_hit = (
-        seg_pair_d2_m_scalar(
-            F.col("oalon"), F.col("oalat"), F.col("oblon"), F.col("oblat"),
-            F.col("ialon"), F.col("ialat"), F.col("iblon"), F.col("iblat"),
-        )
-        <= F.lit(r2)
-    )
-
-    if _resolve_strategy(i, strategy, broadcast_threshold) == "broadcast":
-        # candidate pairs stay a BNLJ on the broadcast bbox-only inner dim;
-        # the refine joins segment ROWS (scalar codegen) instead of running
-        # the nested-exists array lambda per pair (interpreted — measured
-        # 20x the join at 10k x 10k, BENCH.md r5e)
+    if _resolve_strategy(i, strategy) == "broadcast":
         pairs = o.select(
             "id", "o_min_lon", "o_min_lat", "o_max_lon", "o_max_lat"
         ).join(
             F.broadcast(
                 i.select("iid", "i_min_lon", "i_min_lat", "i_max_lon", "i_max_lat")
             ),
-            cand & (F.col("id") != F.col("iid")),
+            cand,
             "inner",
         ).select("id", "iid")
-        return (
-            pairs.join(osegs, "id")
-            .join(F.broadcast(isegs), "iid")
-            .filter(seg_hit)
-            .select("id")
-            .distinct()
-        )
+        return _way_way_refine(pairs, o, i, buffer_m, small_inner=True)
 
-    # bucketed: equi-join on D-sized grid cells. The candidate shuffle
-    # carries ids + bboxes (6 scalars), never the node arrays; geometry
-    # joins back onto the deduplicated (id, iid) pairs for the refine.
     s_lon, s_lat = _grid_sizes(buffer_m, ref_lat, cell_deg)
-    i_pad_lon = F.lit(buffer_m) / (
-        F.lit(M_PER_DEG)
-        * F.cos(F.radians(F.greatest(F.abs(F.col("i_min_lat")), F.abs(F.col("i_max_lat")))))
-    )
     i_cells = i.select(
         "iid", "i_min_lon", "i_min_lat", "i_max_lon", "i_max_lat",
         F.explode(
             _bbox_cells_col(
                 F.col("i_min_lon"), F.col("i_min_lat"),
                 F.col("i_max_lon"), F.col("i_max_lat"),
-                s_lon, s_lat,
-                pad_lon=i_pad_lon, pad_lat=F.lit(d_lat),
+                s_lon, s_lat, pad_m=buffer_m,
             )
         ).alias("cell"),
     )
@@ -522,16 +530,10 @@ def within_buffer_way_way(
             )
         ).alias("cell"),
     )
-    cand_ids = (
+    pairs = (
         o_cells.join(i_cells, "cell")
-        .filter(cand & (F.col("id") != F.col("iid")))
+        .filter(cand)
         .select("id", "iid")
         .distinct()
     )
-    return (
-        cand_ids.join(osegs, "id")
-        .join(isegs, "iid")
-        .filter(seg_hit)
-        .select("id")
-        .distinct()
-    )
+    return _way_way_refine(pairs, o, i, buffer_m, small_inner=False)

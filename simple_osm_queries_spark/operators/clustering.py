@@ -6,9 +6,10 @@ engine wants the standard one: DBSCAN (Ester et al., KDD'96). This is the
 grid-bucketed distributed formulation, composed entirely from machinery
 the engine already ships:
 
-1. eps-neighbor pairs via the buffer family's grid equi-join (each point
-   keys to one eps-sized cell, the query side explodes its 3x3 ring —
-   exact cover of the eps disk; `buffer.point_dist2_m` refine);
+1. eps-neighbor pairs via the buffer family's point-pair join (each point
+   keys to one eps-sized cell, the query side explodes the cells of its
+   own eps-padded box — exact cover of the eps disk at every latitude;
+   `buffer.point_dist2_m` refine);
 2. core points = neighborhood size (INCLUDING the point itself, per the
    paper) >= ``min_pts`` — one combinable count aggregate;
 3. clusters = connected components over core-core neighbor edges
@@ -41,14 +42,11 @@ eps-supercritical region is expected.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.caching import track_persisted
-from simple_osm_queries_spark.functions import cells as C
-from simple_osm_queries_spark.operators.buffer import M_PER_DEG, point_dist2_m
+from simple_osm_queries_spark.operators.buffer import _point_pairs
 from simple_osm_queries_spark.operators.dedup import connected_components
 
 
@@ -58,46 +56,13 @@ def eps_neighbor_pairs(
     id_col: str = "id",
     lon: str = "lon",
     lat: str = "lat",
-    ref_lat: float = 70.0,
 ) -> DataFrame:
     """Directed pairs (a, b), a != b, with dist(a -> b) <= eps_m under the
-    query-point-scaled equirect metric. Grid sizing guarantees the 3x3
-    ring covers the whole eps disk at every data latitude <= |ref_lat|."""
+    query-point-scaled equirect metric — the buffer family's point-pair
+    join (`buffer._point_pairs`, exact at every latitude)."""
     if eps_m <= 0:
         raise ValueError(f"eps_m must be > 0, got {eps_m}")
-    # grid >= eps keeps the 3x3 ring a cover of the eps disk; the ~1 m
-    # floor keeps cell indices inside int range for microscopic eps (the
-    # ring join's fan-out is a constant 9 cells, so a floor larger than
-    # eps only thickens the refine, never drops a neighbor)
-    s_lat = max(eps_m / M_PER_DEG, 1e-5)
-    s_lon = max(eps_m / (M_PER_DEG * math.cos(math.radians(ref_lat))), 1e-5)
-    right = points.select(
-        F.col(id_col).alias("b"),
-        F.col(lon).alias("blon"),
-        F.col(lat).alias("blat"),
-        C.pack_cell(C.cell_x(F.col(lon), s_lon), C.cell_y(F.col(lat), s_lat)).alias(
-            "cell"
-        ),
-    )
-    ox = C.cell_x(F.col(lon), s_lon)
-    oy = C.cell_y(F.col(lat), s_lat)
-    ring = [
-        C.pack_cell(ox + F.lit(dx), oy + F.lit(dy))
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    ]
-    left = points.select(
-        F.col(id_col).alias("a"),
-        F.col(lon).alias("alon"),
-        F.col(lat).alias("alat"),
-        F.explode(F.array(*ring)).alias("cell"),
-    )
-    d2 = point_dist2_m(F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"))
-    return (
-        left.join(right, "cell")
-        .filter((F.col("a") != F.col("b")) & (d2 <= F.lit(float(eps_m) ** 2)))
-        .select("a", "b")
-    )
+    return _point_pairs(points, points, eps_m, id_col, lon, lat)
 
 
 def dbscan(
@@ -107,7 +72,6 @@ def dbscan(
     id_col: str = "id",
     lon: str = "lon",
     lat: str = "lat",
-    ref_lat: float = 70.0,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -118,9 +82,7 @@ def dbscan(
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
     pts = points.select(F.col(id_col).alias("id"), lon, lat)
-    pairs = eps_neighbor_pairs(
-        pts, eps_m, id_col="id", lon=lon, lat=lat, ref_lat=ref_lat
-    ).persist()
+    pairs = eps_neighbor_pairs(pts, eps_m, id_col="id", lon=lon, lat=lat).persist()
 
     # |N_eps| includes the point itself; points with zero neighbors never
     # appear in pairs — left-join the counts back so they count as 1

@@ -12,27 +12,24 @@ module provides it as a first-class distributed join:
     nearest_way_join(points, ways, radius_m, k=1)
       -> (id, way_id, dist_m, rank)
 
-Distance model: the buffer family's local equirectangular meters
-(`operators/buffer.py::point_to_way_dist2_m` — exact point-to-segment
-projection, min over the way's segments, meters scaled by cos(lat) of the
-query point). Deterministic ties: (dist², way_id) lexicographic, so equal
-distances rank by way id.
+Distance model: the buffer family's local equirectangular meters — exact
+point-to-segment projection (`buffer.pt_seg_projection_m`), min over the
+way's segments, meters scaled by cos(lat) of the query point.
+Deterministic ties: (dist², way_id) lexicographic, so equal distances rank
+by way id.
 
-Physical shapes (mirrors `within_buffer_node_way`; audit: PLANS.md §16):
-* candidate generation — broadcast (small way side: R-expanded bbox
-  predicate against the broadcast bbox-only way relation) or bucketed
-  (big way side: ways explode to the grid cells of their R-expanded bbox,
-  points to their own cell, equi-join on the packed cell key). Grid
-  sizing guarantees the cell cover is a superset of the radius-R disk,
-  so the prefilter can never drop a true neighbor.
-* exact refine — candidate (point, way) ids join the way's SEGMENT
-  relation (one `explode(segments)` per way, not per pair) and the
-  point-to-segment projection runs as scalar codegen column math per
-  (pair, segment) row. This deliberately avoids evaluating the
-  array-lambda form (`zip_with`+`aggregate` over the node array) once
-  per candidate pair: Spark executes higher-order lambdas interpreted,
-  measured ~10 µs/pair — 5x the whole join at bench scale (BENCH.md
-  r5e); the exploded scalar form stays inside whole-stage codegen.
+Physical shape: the buffer module's point<->way pipeline, then a top-k.
+* candidates — `buffer._point_way_candidates`: broadcast (small way side:
+  R-expanded bbox predicate against the broadcast bbox-only ways) or
+  bucketed (big way side: ways explode to their R-padded cell cover,
+  points key to their own cell, equi-join on the packed cell). Rows carry
+  the point's lon/lat, so the refine never joins the point side back.
+  The cover is a superset of the radius-R disk by construction.
+* exact refine — `buffer._point_way_refine`: candidates join the way's
+  SEGMENT rows (one `explode(segments)` per way, not per pair) and the
+  point-to-segment projection runs as scalar codegen per (pair, segment)
+  row — never an array lambda per pair (interpreted, ~10 µs/pair, 5x the
+  whole join at bench scale, BENCH.md r5e). Two joins in total.
 * top-k: k == 1 folds the per-way segment min INTO the final aggregate —
   a single `min(struct(d2, way_id))` per point over segment rows
   (min over segments of the winning way IS the way distance), map-side
@@ -56,48 +53,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.operators.buffer import (
-    M_PER_DEG,
-    _bbox_cells_col,
-    _grid_sizes,
-    _resolve_strategy,
-    pt_seg_d2_m_scalar,
-    way_segments,
+    GRID_REF_LAT,
+    _point_way_candidates,
+    _point_way_refine,
 )
-from simple_osm_queries_spark.functions import cells as C
 
 
-def _seg_d2_scalar() -> "F.Column":
-    """Point-to-segment squared meters over the joined refine row — the
-    shared scalar codegen tree (`buffer.pt_seg_d2_m_scalar`)."""
-    return pt_seg_d2_m_scalar(
-        F.col("lon"), F.col("lat"),
-        F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"),
-    )
-
-
-def _seg_t_scalar() -> "F.Column":
-    """The clamped projection parameter t of the refine row — the same
-    expression tree as inside `pt_seg_d2_m_scalar` (meter space is a
-    per-axis affine image of degree space, so t along the meter segment
-    IS t along the degree segment)."""
-    kx = F.lit(M_PER_DEG) * F.cos(F.radians(F.col("lat")))
-    ky = F.lit(M_PER_DEG)
-    ax = (F.col("alon") - F.col("lon")) * kx
-    ay = (F.col("alat") - F.col("lat")) * ky
-    bx = (F.col("blon") - F.col("lon")) * kx
-    by = (F.col("blat") - F.col("lat")) * ky
-    dx = bx - ax
-    dy = by - ay
-    len2 = dx * dx + dy * dy
-    t_raw = F.when(len2 > 0, -(ax * dx + ay * dy) / len2).otherwise(F.lit(0.0))
-    return F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
-
-
-def _topk_from_segments(
-    cand_seg: DataFrame, r2: float, k: int, snap: bool = False
-) -> DataFrame:
-    """(nid, wid, d2-per-segment rows) -> k best ways per nid, deterministic
-    (d2, wid) order.
+def _topk_from_segments(scored: DataFrame, k: int, snap: bool = False) -> DataFrame:
+    """(nid, wid, t, d2) in-radius segment rows -> k best ways per nid,
+    deterministic (d2, wid) order.
 
     k == 1: ONE hash aggregate — min(struct(d2, wid[, snap])) over segment
     rows directly (the global min row is the nearest way's nearest
@@ -108,19 +72,16 @@ def _topk_from_segments(
     <= k*partitions rows even for a pathologically hot point.
 
     ``snap``: carry the projected snap point (lon/lat of the closest
-    position ON the way) through the aggregates — two extra struct fields,
-    same plan shape. Equidistant same-way segments tie-break by
-    (snap_lon, snap_lat), keeping determinism.
+    position ON the way, a + t (b - a)) through the aggregates — two extra
+    struct fields, same plan shape. Equidistant same-way segments
+    tie-break by (snap_lon, snap_lat), keeping determinism.
     """
-    scored = cand_seg.withColumn("d2", _seg_d2_scalar())
     if snap:
-        t = _seg_t_scalar()
-        scored = scored.withColumn(
-            "snap_lon", F.col("alon") + t * (F.col("blon") - F.col("alon"))
-        ).withColumn(
-            "snap_lat", F.col("alat") + t * (F.col("blat") - F.col("alat"))
-        )
-    scored = scored.filter(F.col("d2") <= F.lit(r2))
+        t = F.col("t")
+        scored = scored.withColumns({
+            "snap_lon": F.col("alon") + t * (F.col("blon") - F.col("alon")),
+            "snap_lat": F.col("alat") + t * (F.col("blat") - F.col("alat")),
+        })
     snap_cols = ["snap_lon", "snap_lat"] if snap else []
     if k == 1:
         best = scored.groupBy("nid").agg(
@@ -161,8 +122,7 @@ def nearest_way_join(
     radius_m: float,
     k: int = 1,
     strategy: str = "auto",
-    broadcast_threshold: int = 100_000,
-    ref_lat: float = 70.0,
+    ref_lat: float = GRID_REF_LAT,
     cell_deg: float | None = None,
     snap: bool = False,
 ) -> DataFrame:
@@ -176,95 +136,23 @@ def nearest_way_join(
     (left-join semantics belong to the caller, one
     ``points.join(result, "id", "left")`` away).
 
-    ``strategy``: 'auto' counts the way side against ``broadcast_threshold``
-    and picks 'broadcast' (small dim) or 'bucketed' (the 100x-scale path);
-    both produce identical rows (pinned in tests). ``ref_lat`` bounds the
-    data's |latitude| for grid sizing; ``cell_deg`` floors the bucket size
-    (fan-out control), both exactly as in the buffer family.
+    ``strategy``: 'auto' counts the way side against
+    ``buffer.BROADCAST_THRESHOLD`` and picks 'broadcast' (small dim) or
+    'bucketed' (the 100x-scale path); both produce identical rows (pinned
+    in tests). ``ref_lat`` bounds the data's |latitude| for grid sizing;
+    ``cell_deg`` floors the bucket size (fan-out control), both exactly as
+    in the buffer family.
     """
     if radius_m <= 0:
         raise ValueError(f"radius_m must be > 0, got {radius_m}")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
 
-    w = ways.select(
-        F.col("id").alias("wid"),
-        F.col("nodes").alias("wnodes"),
-        "min_lon",
-        "min_lat",
-        "max_lon",
-        "max_lat",
-    )
-    pt = points.select(F.col("id").alias("nid"), "lon", "lat")
-    r2 = float(radius_m) ** 2
-    d_lat = radius_m / M_PER_DEG
-
-    small_ways = _resolve_strategy(w, strategy, broadcast_threshold) == "broadcast"
-    if small_ways:
-        d_lon = F.lit(radius_m) / (
-            F.lit(M_PER_DEG) * F.cos(F.radians(F.col("lat")))
-        )
-        cand_pred = (
-            (F.col("lon") >= F.col("min_lon") - d_lon)
-            & (F.col("lon") <= F.col("max_lon") + d_lon)
-            & (F.col("lat") >= F.col("min_lat") - F.lit(d_lat))
-            & (F.col("lat") <= F.col("max_lat") + F.lit(d_lat))
-        )
-        cand_ids = pt.join(
-            F.broadcast(w.select("wid", "min_lon", "min_lat", "max_lon", "max_lat")),
-            cand_pred,
-            "inner",
-        ).select("nid", "wid")
-    else:
-        s_lon, s_lat = _grid_sizes(radius_m, ref_lat, cell_deg)
-        d_lon_w = F.lit(radius_m) / (
-            F.lit(M_PER_DEG)
-            * F.cos(
-                F.radians(
-                    F.greatest(F.abs(F.col("min_lat")), F.abs(F.col("max_lat")))
-                )
-            )
-        )
-        w_cells = w.select(
-            "wid",
-            F.explode(
-                _bbox_cells_col(
-                    F.col("min_lon"),
-                    F.col("min_lat"),
-                    F.col("max_lon"),
-                    F.col("max_lat"),
-                    s_lon,
-                    s_lat,
-                    pad_lon=d_lon_w,
-                    pad_lat=F.lit(d_lat),
-                )
-            ).alias("cell"),
-        )
-        n_cells = pt.select(
-            "nid",
-            "lon",
-            "lat",
-            C.pack_cell(
-                C.cell_x(F.col("lon"), s_lon), C.cell_y(F.col("lat"), s_lat)
-            ).alias("cell"),
-        )
-        # candidate ids only through the shuffle; geometry joins back for
-        # the refine (a way's segments cross the wire once per way, not
-        # once per touched cell). No distinct: a way emits each cover cell
-        # exactly once and a point lives in exactly one cell, so (nid, wid)
-        # pairs are already unique — and the downstream min-aggregates are
-        # duplicate-insensitive regardless (the buffer semi joins need
-        # their distinct because they OUTPUT the ids; this operator
-        # aggregates them)
-        cand_ids = n_cells.select("nid", "cell").join(w_cells, "cell").select(
-            "nid", "wid"
-        )
-
-    segs = way_segments(w, "wid", "wnodes")
-    if small_ways:
-        segs = F.broadcast(segs)
-    cand_seg = cand_ids.join(pt, "nid").join(segs, "wid")
-    out = _topk_from_segments(cand_seg, r2, k, snap=snap)
+    # no distinct on the candidates: the min-aggregates below are
+    # duplicate-insensitive (the buffer semi joins need theirs because they
+    # OUTPUT the ids; this operator aggregates them)
+    cand, segs = _point_way_candidates(points, ways, radius_m, strategy, ref_lat, cell_deg)
+    out = _topk_from_segments(_point_way_refine(cand, segs, radius_m), k, snap=snap)
     return out.select(
         F.col("nid").alias("id"),
         F.col("wid").alias("way_id"),

@@ -7,8 +7,13 @@
 * ``cosine_topk_ann`` — LSH-bucketed approximate variant (the scale path):
   candidates share a hyperplane-signature band with the query, exact cosine
   re-rank on candidates only. Probes a bounded fraction of the table.
+* ``cosine_topk_ivf`` — inverted-file variant: scan only the ``nprobe``
+  inverted lists nearest the query.
 * ``knn_join``        — k nearest rows of B for every row of A (brute,
   broadcast B) — the embedding analogue of operators/knn.py.
+
+The three top-k searches differ only in which rows they score; all end in
+the same exact re-rank (`_rerank`).
 """
 
 from __future__ import annotations
@@ -29,19 +34,35 @@ from simple_osm_queries_spark.operators.dedup import (
 )
 
 
-def _qvec_lit(qvec) -> "F.Column":
-    return F.array(*[F.lit(float(x)) for x in qvec])
+__all__ = [
+    "cosine_topk",
+    "cosine_topk_ann",
+    "knn_join",
+    "cosine_col",
+    "dot_col",
+    "norm_col",
+    "ivf_train_centroids",
+    "ivf_assign_col",
+    "ivf_index",
+    "cosine_topk_ivf",
+]
 
 
-def cosine_topk(
-    df: DataFrame, qvec, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    q = _qvec_lit(qvec)
+def _rerank(df: DataFrame, qvec, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank shared by every top-k search: column-math cosine
+    against the query, top k by (cosine desc, id asc)."""
+    q = F.array(*[F.lit(float(x)) for x in qvec])
     scored = df.select(
         F.col(id_col),
         cosine_col(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+
+
+def cosine_topk(
+    df: DataFrame, qvec, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    return _rerank(df, qvec, k, id_col, vec_col)
 
 
 def cosine_topk_ann(
@@ -57,12 +78,10 @@ def cosine_topk_ann(
 ) -> DataFrame:
     """Approximate top-k: candidate = shares >=1 signature chunk with the
     query. Recall < 1 by design; precision exact on candidates."""
-    planes = _hyperplanes(dim, sig_bits, seed)
-    qsig = 0
-    q = np.asarray(qvec, dtype=np.float64)
-    for b in range(sig_bits):
-        if float(planes[b] @ q) > 0:
-            qsig |= 1 << b
+    # the signature UDF's own bit rule: (mat @ planes.T) > 0 on a 1-row mat
+    mat = np.asarray([qvec], dtype=np.float64)
+    pos = (mat @ _hyperplanes(dim, sig_bits, seed).T) > 0
+    qsig = sum(1 << int(b) for b in np.flatnonzero(pos[0]))
     width = sig_bits // chunks
     mask = (1 << width) - 1
     qchunks = [(qsig >> (c * width)) & mask for c in range(chunks)]
@@ -75,12 +94,7 @@ def cosine_topk_ann(
             F.shiftright(F.col("sig"), c * width).bitwiseAND(F.lit(mask)) == F.lit(qchunks[c])
         )
         cond = this if cond is None else (cond | this)
-    cands = with_sig.filter(cond)
-    scored = cands.select(
-        F.col(id_col),
-        cosine_col(F.col(vec_col).cast("array<double>"), _qvec_lit(qvec)).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return _rerank(with_sig.filter(cond), qvec, k, id_col, vec_col)
 
 
 def knn_join(
@@ -115,16 +129,6 @@ def knn_join(
         .filter(F.col("rank") <= k)
         .select("qid", "id", "cosine", "rank")
     )
-
-
-__all__ = [
-    "cosine_topk",
-    "cosine_topk_ann",
-    "knn_join",
-    "cosine_col",
-    "dot_col",
-    "norm_col",
-]
 
 
 # --- IVF (inverted-file) ANN -------------------------------------------------
@@ -256,18 +260,8 @@ def cosine_topk_ivf(
     """IVF search: rank centroids against the query driver-side (tiny
     matmul), scan only the ``nprobe`` nearest inverted lists, exact cosine
     re-rank. nprobe=nlist degenerates to exact brute force."""
-    import numpy as np
-
     q = np.asarray(qvec, dtype=np.float64)
     q = q / max(np.linalg.norm(q), 1e-12)
     order = np.argsort(-(np.asarray(centroids) @ q))
     probes = [int(c) for c in order[:nprobe]]
-    cands = index.filter(F.col("cluster").isin(probes))
-    scored = cands.select(
-        F.col(id_col),
-        cosine_col(F.col(vec_col).cast("array<double>"), _qvec_lit(qvec)).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-__all__ += ["ivf_train_centroids", "ivf_assign_col", "ivf_index", "cosine_topk_ivf"]
+    return _rerank(index.filter(F.col("cluster").isin(probes)), qvec, k, id_col, vec_col)

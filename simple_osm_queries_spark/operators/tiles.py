@@ -6,9 +6,9 @@ equi-join on the computed tile id — no range/spatial join needed, which is
 the whole point of tiling at 10^12 scale: the expensive geometry predicate
 is replaced by a hash-partitionable key.
 
-``tile_stats`` is the rollup (per-tile aggregation with optional salting for
-hot tiles — the reference's extent bin-packer import.go:167-233 solved the
-same skew problem at import time).
+``tile_stats`` is the rollup (one per-tile aggregation; AQE's map-side
+partial aggregate absorbs hot tiles — the reference's extent bin-packer
+import.go:167-233 solved the same skew problem at import time).
 """
 
 from __future__ import annotations
@@ -37,36 +37,14 @@ def tile_join(points: DataFrame, tiles: DataFrame, zoom: int) -> DataFrame:
     return pts.join(F.broadcast(tiles), "tile_id", "inner")
 
 
-def tile_stats(points: DataFrame, zoom: int, salt: int = 1) -> DataFrame:
-    """Per-tile rollup: count + bbox of contained points.
-
-    ``salt > 1`` demonstrates explicit hot-key splitting: partial aggregate
-    per (tile, salt) then final merge — the classic two-step combine. With
-    AQE on, Spark's partial aggregation usually makes this unnecessary; it
-    exists for the pathological single-hot-tile case and as the documented
-    skew pattern.
-    """
-    pts = assign_tiles(points, zoom)
-    aggs = [
+def tile_stats(points: DataFrame, zoom: int) -> DataFrame:
+    """Per-tile rollup: count + bbox of contained points."""
+    return assign_tiles(points, zoom).groupBy("tile_id").agg(
         F.count("*").alias("n"),
         F.min("lon").alias("min_lon"),
         F.min("lat").alias("min_lat"),
         F.max("lon").alias("max_lon"),
         F.max("lat").alias("max_lat"),
-    ]
-    if salt <= 1:
-        return pts.groupBy("tile_id").agg(*aggs)
-    partial = (
-        pts.withColumn("__salt", F.pmod(F.col("id"), F.lit(salt)))
-        .groupBy("tile_id", "__salt")
-        .agg(*aggs)
-    )
-    return partial.groupBy("tile_id").agg(
-        F.sum("n").alias("n"),
-        F.min("min_lon").alias("min_lon"),
-        F.min("min_lat").alias("min_lat"),
-        F.max("max_lon").alias("max_lon"),
-        F.max("max_lat").alias("max_lat"),
     )
 
 
@@ -82,9 +60,7 @@ def tile_parent(tile_id: Column, zoom: int) -> Column:
     ).cast("long")
 
 
-def tile_pyramid(
-    points: DataFrame, max_zoom: int, min_zoom: int, salt: int = 1
-) -> DataFrame:
+def tile_pyramid(points: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame:
     """Multi-zoom tile rollup (the hypertable-pyramid shape): per-tile stats
     at ``max_zoom`` from ONE pass over the points, then every coarser level
     folds its four children's AGGREGATES (sum/min/max are decomposable) —
@@ -93,7 +69,7 @@ def tile_pyramid(
     [min_zoom, max_zoom]."""
     if not 0 <= min_zoom <= max_zoom:
         raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
-    cur = tile_stats(points, max_zoom, salt).withColumn("zoom", F.lit(max_zoom))
+    cur = tile_stats(points, max_zoom).withColumn("zoom", F.lit(max_zoom))
     levels = [cur]
     for z in range(max_zoom, min_zoom, -1):
         cur = (

@@ -214,7 +214,7 @@ def _way_way_dist2_m(coords_a, coords_b) -> float:
     """Min segment-pair distance (meters^2): 0 on a proper crossing, else
     min of the 4 endpoint-to-segment distances per pair. Meter scaling uses
     cos(lat) of segment A's first endpoint; the crossing test runs in degree
-    space (matches operators/buffer.py::seg_pair_dist2_m)."""
+    space (matches operators/buffer.py::seg_pair_d2_m_scalar)."""
 
     def ccw(a, b, c):
         return (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])

@@ -1,13 +1,20 @@
-"""Cell-bucketed buffer fallback: result parity with the broadcast path and
-an explain guard proving the bucketed plan contains no BroadcastNestedLoopJoin
-(the plan we refuse to ship above the broadcast threshold)."""
+"""Cell-bucketed buffer fallback: result parity with the broadcast path, an
+explain guard proving the bucketed plan contains no BroadcastNestedLoopJoin
+(the plan we refuse to ship above the broadcast threshold), and the join
+counts of the whole proximity family (buffer, nearest-way, DBSCAN pairs)."""
 
 from __future__ import annotations
+
+import contextlib
+import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.operators import buffer as B
+from simple_osm_queries_spark.operators.clustering import eps_neighbor_pairs
+from simple_osm_queries_spark.operators.nearest_way import nearest_way_join
 from simple_osm_queries_spark.sources.dataset import from_generator
 
 
@@ -61,10 +68,83 @@ def test_bucketed_plan_has_no_bnlj(ds):
     assert "BroadcastNestedLoopJoin" not in plan_n
 
 
-def test_auto_threshold_switches(ds):
+def test_auto_threshold_switches(ds, monkeypatch):
     outer = ds.ways.limit(50)
     inner = ds.ways.limit(200)
     # tiny threshold forces the bucketed path; results still correct
-    bk = B.within_buffer_way_way(outer, inner, 300.0, strategy="auto", broadcast_threshold=10)
+    monkeypatch.setattr(B, "BROADCAST_THRESHOLD", 10)
+    bk = B.within_buffer_way_way(outer, inner, 300.0, strategy="auto")
+    assert "BroadcastNestedLoopJoin" not in bk._jdf.queryExecution().executedPlan().toString()
     bc = B.within_buffer_way_way(outer, inner, 300.0, strategy="broadcast")
     assert _ids(bk) == _ids(bc)
+
+
+def _plan_joins(df):
+    """(join operator names, formatted plan text) — one name per join node
+    of the physical plan (the numbered "(n) Name" detail headers)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    text = buf.getvalue()
+    ops = re.findall(r"^\(\d+\) (\w+)", text, re.M)
+    return [o for o in ops if "Join" in o or o == "CartesianProduct"], text
+
+
+@pytest.fixture(scope="module")
+def local_frames(spark, ds):
+    """The fixture's nodes/ways as local relations, so a plan holds only
+    the operator's own joins (not the dataset preparation's)."""
+    nodes = ds.nodes.select("id", "lon", "lat", "tags")
+    ways = ds.ways.select("id", "nodes", "min_lon", "min_lat", "max_lon", "max_lat", "tags")
+    return (
+        spark.createDataFrame(nodes.collect(), nodes.schema),
+        spark.createDataFrame(ways.collect(), ways.schema),
+    )
+
+
+def _plan_case(local_frames, case):
+    nodes, ways = local_frames
+    pts = nodes.select("id", "lon", "lat")
+    hw = ways.filter(F.element_at("tags", "highway").isNotNull())
+    bld = ways.filter(F.element_at("tags", "building") == "yes")
+    return {
+        "nearest_way_join-broadcast": lambda: nearest_way_join(
+            pts, ways, 500.0, k=2, strategy="broadcast", snap=True),
+        "nearest_way_join-bucketed": lambda: nearest_way_join(
+            pts, ways, 500.0, k=2, strategy="bucketed", snap=True),
+        "node_way-bucketed": lambda: B.within_buffer_node_way(
+            nodes, hw, 300.0, strategy="bucketed"),
+        "way_way-bucketed": lambda: B.within_buffer_way_way(
+            bld, hw, 300.0, strategy="bucketed"),
+        "node_node": lambda: B.within_buffer_node_node(nodes, nodes, 300.0),
+        "eps_neighbor_pairs": lambda: eps_neighbor_pairs(pts, 300.0),
+    }[case]()
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "nearest_way_join-broadcast",
+        "nearest_way_join-bucketed",
+        "node_way-bucketed",
+        "way_way-bucketed",
+        "node_node",
+        "eps_neighbor_pairs",
+    ],
+)
+def test_proximity_plan_shape(local_frames, case):
+    joins, text = _plan_joins(_plan_case(local_frames, case))
+    if case.startswith("nearest_way_join"):
+        # candidate join + segment join; candidates carry lon/lat, so no
+        # join-back of the point side on nid
+        assert len(joins) == 2, joins
+        assert not re.search(r"(Left|Right) keys \[\d+\]: \[nid#", text), text
+    elif case in ("node_node", "eps_neighbor_pairs"):
+        # one equi-join on the packed cell
+        assert len(joins) == 1, joins
+        assert re.search(r"Left keys \[1\]: \[cell#", text), text
+    # the broadcast nearest-way candidate join is the bbox predicate BNLJ
+    # over the small way side by design; nothing else may nest-loop
+    if case != "nearest_way_join-broadcast":
+        assert "BroadcastNestedLoopJoin" not in joins, joins
+    assert "CartesianProduct" not in joins, joins

@@ -1,16 +1,19 @@
 """Distributed DBSCAN vs an independent brute-python oracle implementing
 the same deterministic variant (directed query-point-scaled metric,
 min-id cluster labels, min-cluster border assignment), plus parameter
-edge cases and the no-BNLJ plan guard."""
+edge cases, the no-BNLJ plan guard and a numpy pair oracle above the
+grid-sizing latitude (shared with `within_buffer_node_node`)."""
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.caching import unpersist_intermediates
+from simple_osm_queries_spark.operators.buffer import within_buffer_node_node
 from simple_osm_queries_spark.operators.clustering import dbscan, eps_neighbor_pairs
 
 M_PER_DEG = 111320.0
@@ -112,3 +115,32 @@ def test_pair_join_no_bnlj(pts):
     pairs = eps_neighbor_pairs(pts, 500.0)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("lat0", [80.0, 89.9, -85.0])
+def test_point_pairs_exact_at_high_latitude(spark, lat0):
+    """Above the 70 deg grid-sizing latitude a D-wide lon cell is narrower
+    than D's lon extent; the padded cover must still find every pair."""
+    d = 100.0
+    lon_ext = d / (M_PER_DEG * math.cos(math.radians(lat0)))
+    rng = np.random.default_rng(11)
+    n = 120
+    lon = 10.0 + rng.uniform(0.0, 8 * lon_ext, n)
+    lat = lat0 + rng.uniform(-3 * d / M_PER_DEG, 3 * d / M_PER_DEG, n)
+    # a pair at 0.97 D, due east-west (the lat-80 repro: 10.000 / 10.005)
+    lon[:2] = [10.0, 10.0 + 0.97 * lon_ext]
+    lat[:2] = lat0
+    kx = M_PER_DEG * np.cos(np.radians(lat))
+    d2 = ((lon[:, None] - lon[None, :]) * kx[:, None]) ** 2 + (
+        (lat[:, None] - lat[None, :]) * M_PER_DEG
+    ) ** 2
+    want = {(a, b) for a, b in zip(*np.nonzero(d2 <= d * d)) if a != b}
+    assert (0, 1) in want and (1, 0) in want
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "id long, lon double, lat double",
+    )
+    got = {(r.a, r.b) for r in eps_neighbor_pairs(pts, d).collect()}
+    assert got == want
+    near = {r.id for r in within_buffer_node_node(pts, pts, d).collect()}
+    assert near == {a for a, _ in want}
