@@ -10,7 +10,7 @@ On top of the reference-parity grid we add the distributed-index encoders the
 north rule asks for:
 
 * ``tile_x/tile_y/tile_id`` — Web-Mercator slippy tiles (raster<->vector tile
-  assignment, z-order locality),
+  assignment, z-order locality); ``tile_zxy`` unpacks a tile id,
 * ``cell_s2`` — REAL S2 cell ids from the in-repo numpy implementation of
   the published S2 scheme (functions/s2.py): bit-compatible, vectorized,
   zero external dependencies.
@@ -161,6 +161,12 @@ def tile_id(tx: Column, ty: Column, zoom: int) -> Column:
     )
 
 
+def tile_zxy(tid: Column) -> tuple[Column, Column, Column]:
+    """Unpack a tile_id column into (zoom, tx, ty) long columns."""
+    mask = F.lit((1 << 29) - 1)
+    return F.shiftright(tid, 58), F.shiftright(tid, 29).bitwiseAND(mask), tid.bitwiseAND(mask)
+
+
 def tile_of(lon: Column, lat: Column, zoom: int) -> Column:
     return tile_id(tile_x(lon, zoom), tile_y(lat, zoom), zoom)
 
@@ -186,6 +192,11 @@ def tile_xy_py(lon: float, lat: float, zoom: int) -> tuple[int, int]:
 
 def tile_id_py(tx: int, ty: int, zoom: int) -> int:
     return (zoom << 58) | (tx << 29) | ty
+
+
+def tile_zxy_py(tid: int) -> tuple[int, int, int]:
+    """Driver/UDF-side twin of tile_zxy."""
+    return tid >> 58, (tid >> 29) & ((1 << 29) - 1), tid & ((1 << 29) - 1)
 
 
 # ---------------------------------------------------------------------------

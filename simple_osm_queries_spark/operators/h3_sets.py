@@ -84,6 +84,7 @@ def h3_pyramid(
     consistent choice (each row counted under exactly one cell per level,
     levels sum exactly)."""
     from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.operators.tiles import _fold_pyramid
 
     if not 0 <= min_res <= res:
         raise ValueError(f"need 0 <= min_res <= res, got {min_res}..{res}")
@@ -93,22 +94,12 @@ def h3_pyramid(
         df.withColumn("__h3cell", C.cell_h3(F.col(lon), F.col(lat), res))
         .groupBy(F.col("__h3cell").alias("cell"))
         .agg(*[expr.alias(name) for name, (expr, _) in aggs.items()])
-        .withColumn("res", F.lit(res))
     )
     fold = {"sum": F.sum, "min": F.min, "max": F.max}
-    levels = [base]
-    cur = base
-    for r in range(res, min_res, -1):
-        cur = (
-            cur.groupBy(H.parent(F.col("cell"), r - 1).alias("cell"))
-            .agg(*[fold[how](name).alias(name) for name, (_, how) in aggs.items()])
-            .withColumn("res", F.lit(r - 1))
-        )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    return _fold_pyramid(
+        base, "cell", "res", res, min_res, lambda cell, r: H.parent(cell, r - 1),
+        {name: fold[how] for name, (_, how) in aggs.items()},
+    )
 
 
 def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:

@@ -1,22 +1,49 @@
-"""Raster <-> vector tile assignment (north rule).
+"""Raster <-> vector tile bridge over slippy-map (Web-Mercator) tiles.
 
-Slippy-map (Web-Mercator) tiles: assigning a point to its tile at zoom z is
-pure column math (functions/cells.py), so tile JOIN degenerates to an
-equi-join on the computed tile id — no range/spatial join needed, which is
-the whole point of tiling at 10^12 scale: the expensive geometry predicate
-is replaced by a hash-partitionable key.
+Assigning a point to its tile at zoom z is pure column math
+(functions/cells.py owns the projection ``tile_fxy`` and the tile-id codec
+``tile_id`` / ``tile_zxy``), so a tile JOIN is an equi-join on the computed
+tile id and every per-tile operator is one hash exchange on it — no range
+or spatial join anywhere in the family: the expensive geometry predicate is
+replaced by a hash-partitionable key, which is the whole point of tiling at
+10^12 scale.
 
-``tile_stats`` is the rollup (one per-tile aggregation; AQE's map-side
-partial aggregate absorbs hot tiles — the reference's extent bin-packer
-import.go:167-233 solved the same skew problem at import time).
+Every operator is a path through one pipeline, and each step exists once:
+
+* assign — ``_tile_local`` (a point's tile id plus its clamped integer
+  position on the tile's grid: a raster pixel or an MVT coordinate) or
+  ``_bbox_tile_fanout`` (a way's or relation's bbox -> every tile it
+  covers, as an equi-joinable (feature, tile) explode);
+* aggregate — ``tile_stats`` and ``tile_pixel_bins`` are one groupBy each;
+  AQE's map-side partial aggregate absorbs hot tiles (the reference's
+  extent bin-packer import.go:167-233 solved the same skew problem at
+  import time). ``_fold_pyramid`` rolls decomposable aggregates up a level
+  hierarchy (``tile_pyramid`` here, ``h3_sets.h3_pyramid`` on H3);
+* rank — ``_rank_cap`` numbers each tile's members and caps them on the
+  same tile_id exchange the render groups by;
+* render — one applyInPandas per tile: ``tile_heatmap`` and
+  ``tile_contact_sheet`` paint PNGs, ``_render_mvt`` encodes one Mapbox
+  Vector Tile layer for the points, linestrings and polygons operators,
+  which differ only in their per-feature builder.
+
+The raster -> vector direction is ``raster_to_bins`` and
+``pixel_bins_to_points``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
+
+# A way or relation whose bbox covers more tiles than this at the render
+# zoom (a continental motorway at z15) would fan out explosively; see the
+# ``oversize`` modes of tile_vectors_ways.
+MAX_COVER = 256
 
 
 def assign_tiles(
@@ -49,10 +76,9 @@ def tile_stats(points: DataFrame, zoom: int) -> DataFrame:
 
 
 def tile_parent(tile_id: Column, zoom: int) -> Column:
-    """Parent tile id at zoom-1 — pure bit math on the (zoom<<58|tx<<29|ty)
-    packing: halve tx and ty, decrement the zoom field."""
-    tx = F.shiftright(tile_id, 29).bitwiseAND(F.lit((1 << 29) - 1))
-    ty = tile_id.bitwiseAND(F.lit((1 << 29) - 1))
+    """Parent tile id at zoom-1 — pure bit math on the tile-id packing:
+    halve tx and ty, decrement the zoom field."""
+    _, tx, ty = C.tile_zxy(tile_id)
     return (
         F.lit((zoom - 1) << 58)
         + F.shiftleft(F.shiftright(tx, 1), 29)
@@ -63,30 +89,41 @@ def tile_parent(tile_id: Column, zoom: int) -> Column:
 def tile_pyramid(points: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame:
     """Multi-zoom tile rollup (the hypertable-pyramid shape): per-tile stats
     at ``max_zoom`` from ONE pass over the points, then every coarser level
-    folds its four children's AGGREGATES (sum/min/max are decomposable) —
-    each level is a shuffle over tile-count rows, never a second scan of
-    the data. Output: one row per (zoom, tile_id) for zoom in
-    [min_zoom, max_zoom]."""
+    folds its four children's aggregates. Output: one row per
+    (zoom, tile_id) for zoom in [min_zoom, max_zoom]."""
     if not 0 <= min_zoom <= max_zoom:
         raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
-    cur = tile_stats(points, max_zoom).withColumn("zoom", F.lit(max_zoom))
-    levels = [cur]
-    for z in range(max_zoom, min_zoom, -1):
+    return _fold_pyramid(
+        tile_stats(points, max_zoom), "tile_id", "zoom", max_zoom, min_zoom, tile_parent,
+        {"n": F.sum, "min_lon": F.min, "min_lat": F.min, "max_lon": F.max, "max_lat": F.max},
+    )
+
+
+def _fold_pyramid(
+    base: DataFrame,
+    key: str,
+    level: str,
+    top: int,
+    bottom: int,
+    parent: Callable[[Column, int], Column],
+    folds: dict[str, Callable[[str], Column]],
+) -> DataFrame:
+    """Roll ``base`` (one row per ``key`` at level ``top``) up to level
+    ``bottom``. Each coarser level groups the previous one by
+    ``parent(key, child level)`` and folds every column named in ``folds``
+    with its function (F.sum / F.min / F.max: decomposable aggregates), so
+    each level is a shuffle over the previous level's rows, never a second
+    scan of the data. Output: the union of all levels, each row tagged
+    with its ``level``."""
+    cur = base.withColumn(level, F.lit(top))
+    out = cur
+    for lv in range(top, bottom, -1):
         cur = (
-            cur.groupBy(tile_parent(F.col("tile_id"), z).alias("tile_id"))
-            .agg(
-                F.sum("n").alias("n"),
-                F.min("min_lon").alias("min_lon"),
-                F.min("min_lat").alias("min_lat"),
-                F.max("max_lon").alias("max_lon"),
-                F.max("max_lat").alias("max_lat"),
-            )
-            .withColumn("zoom", F.lit(z - 1))
+            cur.groupBy(parent(F.col(key), lv).alias(key))
+            .agg(*[fn(name).alias(name) for name, fn in folds.items()])
+            .withColumn(level, F.lit(lv - 1))
         )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
+        out = out.unionByName(cur)
     return out
 
 
@@ -99,6 +136,44 @@ def make_tile_catalog(spark, zoom: int, min_lon: float, min_lat: float, max_lon:
         for ty in range(min(y0, y1), max(y0, y1) + 1):
             rows.append((C.tile_id_py(tx, ty, zoom), zoom, tx, ty))
     return spark.createDataFrame(rows, "tile_id long, zoom int, tile_x int, tile_y int")
+
+
+def _tile_local(lon: Column, lat: Column, zoom: int, size: int) -> tuple[Column, Column, Column]:
+    """(tile_id, px, py): the tile a point falls in and its position on that
+    tile's ``size`` x ``size`` integer grid, both clamped (lat beyond the
+    Mercator limit and lon=180 land on the edge tiles and cells). One
+    projection, C.tile_fxy, so a point's grid cell always lies in the tile
+    tile_of assigns it to."""
+
+    def clamp(v: Column, hi: int) -> Column:
+        return F.least(F.greatest(F.floor(v).cast("int"), F.lit(0)), F.lit(hi))
+
+    fx, fy = C.tile_fxy(lon, lat, zoom)
+    tx = clamp(fx, (1 << zoom) - 1)
+    ty = clamp(fy, (1 << zoom) - 1)
+    px = clamp((fx - tx) * F.lit(float(size)), size - 1)
+    py = clamp((fy - ty) * F.lit(float(size)), size - 1)
+    return C.tile_id(tx, ty, zoom), px, py
+
+
+def _tile_local_py(lon: float, lat: float, zoom: int, tx: int, ty: int, extent: int) -> tuple[int, int]:
+    """MVT position of a vertex on tile (tx, ty), NOT clamped: vertices of a
+    feature that crosses the tile edge leave [0, extent), which the MVT
+    spec allows (renderers clip)."""
+    fx, fy = C.tile_fxy_py(lon, lat, zoom)
+    return int(math.floor((fx - tx) * extent)), int(math.floor((fy - ty) * extent))
+
+
+def _tile_row(tid: int, **cols):
+    """One render output row: tile_id, its decoded (zoom, tx, ty), then
+    ``cols`` in order."""
+    import pandas as pd
+
+    zoom, tx, ty = C.tile_zxy_py(tid)
+    return pd.DataFrame(
+        {"tile_id": [tid], "zoom": [zoom], "tx": [tx], "ty": [ty]}
+        | {k: [v] for k, v in cols.items()}
+    )
 
 
 def tile_pixel_bins(
@@ -116,22 +191,8 @@ def tile_pixel_bins(
     re-binning already-aggregated bins (e.g. the pixel_bins_to_points
     round trip) must weight each row by its original count.
     """
-    fx, fy = C.tile_fxy(F.col(lon), F.col(lat), zoom)
-    tx = F.least(F.greatest(F.floor(fx).cast("int"), F.lit(0)), F.lit((1 << zoom) - 1))
-    ty = F.least(F.greatest(F.floor(fy).cast("int"), F.lit(0)), F.lit((1 << zoom) - 1))
-    px = F.least(
-        F.greatest(F.floor((fx - tx) * F.lit(float(tile_px))).cast("int"), F.lit(0)),
-        F.lit(tile_px - 1),
-    )
-    py = F.least(
-        F.greatest(F.floor((fy - ty) * F.lit(float(tile_px))).cast("int"), F.lit(0)),
-        F.lit(tile_px - 1),
-    )
-    cols = [
-        C.tile_id(tx, ty, zoom).alias("tile_id"),
-        px.alias("px"),
-        py.alias("py"),
-    ]
+    tid, px, py = _tile_local(F.col(lon), F.col(lat), zoom, tile_px)
+    cols = [tid.alias("tile_id"), px.alias("px"), py.alias("py")]
     if weight is not None:
         cols.append(F.col(weight).alias("_w"))
     agg = F.count("*") if weight is None else F.sum("_w")
@@ -144,7 +205,7 @@ def tile_pixel_bins(
 
 def tile_heatmap(
     points: DataFrame, zoom: int, tile_px: int = 256,
-    lon: str = "lon", lat: str = "lat", log_scale: bool = True,
+    lon: str = "lon", lat: str = "lat",
 ) -> DataFrame:
     """Render per-tile density rasters as grayscale PNGs — the
     raster<->vector bridge in the rendering direction (vector points in,
@@ -153,8 +214,8 @@ def tile_heatmap(
 
     Two stages: `tile_pixel_bins` (one aggregating shuffle; <= tile_px^2
     rows per tile survive it) then a per-tile applyInPandas that paints
-    the canvas and PNG-encodes. Intensity is count-proportional (or
-    log1p-scaled for heavy skew), normalized per tile to the max bin.
+    the canvas and PNG-encodes. Intensity is log1p of the bin count
+    (heavy skew stays visible), normalized per tile to the max bin.
     Output: (tile_id, zoom, tx, ty, n_points, png binary).
     """
     import pandas as pd
@@ -166,26 +227,19 @@ def tile_heatmap(
 
         from simple_osm_queries_spark.sources import codecs
 
-        tid = int(pdf["tile_id"].iloc[0])
         canvas = np.zeros((tile_px, tile_px), dtype=np.float64)
         canvas[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = pdf["cnt"].to_numpy()
-        vals = np.log1p(canvas) if log_scale else canvas
+        vals = np.log1p(canvas)
         top = vals.max()
         gray = (
             np.zeros((tile_px, tile_px), np.uint8)
             if top <= 0
             else np.clip(np.round(vals / top * 255.0), 0, 255).astype(np.uint8)
         )
-        png = codecs.encode_png(np.repeat(gray[..., None], 3, axis=2))
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "zoom": [tid >> 58],
-                "tx": [(tid >> 29) & ((1 << 29) - 1)],
-                "ty": [tid & ((1 << 29) - 1)],
-                "n_points": [int(pdf["cnt"].sum())],
-                "png": [png],
-            }
+        return _tile_row(
+            int(pdf["tile_id"].iloc[0]),
+            n_points=int(pdf["cnt"].sum()),
+            png=codecs.encode_png(np.repeat(gray[..., None], 3, axis=2)),
         )
 
     return bins.groupBy("tile_id").applyInPandas(
@@ -229,7 +283,6 @@ def tile_contact_sheet(
     Output: (tile_id, zoom, tx, ty, n_members, n_shown, png binary).
     """
     import pandas as pd
-    from pyspark.sql import Window
 
     from simple_osm_queries_spark.operators.multimodal import _check_on_error
 
@@ -267,7 +320,6 @@ def tile_contact_sheet(
         pdf = pdf.sort_values(["rn", "bytes"], kind="mergesort").drop_duplicates(
             subset=["rn"], keep="first"
         )
-        tid = int(pdf["tile_id"].iloc[0])
         canvas = np.zeros((side, side, 3), dtype=np.uint8)
         shown = 0
         for rn, data, fmt in zip(pdf["rn"], pdf["bytes"], pdf["fmt"]):
@@ -288,16 +340,11 @@ def tile_contact_sheet(
             r, c = divmod(slot, grid)
             canvas[r * thumb : (r + 1) * thumb, c * thumb : (c + 1) * thumb] = t
             shown += 1
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "zoom": [tid >> 58],
-                "tx": [(tid >> 29) & ((1 << 29) - 1)],
-                "ty": [tid & ((1 << 29) - 1)],
-                "n_members": [int(pdf["n_members"].iloc[0])],
-                "n_shown": [shown],
-                "png": [codecs.encode_png(canvas)],
-            }
+        return _tile_row(
+            int(pdf["tile_id"].iloc[0]),
+            n_members=int(pdf["n_members"].iloc[0]),
+            n_shown=shown,
+            png=codecs.encode_png(canvas),
         )
 
     return picked.groupBy("tile_id").applyInPandas(
@@ -306,93 +353,45 @@ def tile_contact_sheet(
     )
 
 
-def tile_vectors(
-    df: DataFrame,
-    zoom: int,
-    extent: int = 4096,
-    cap: int = 65536,
-    layer: str = "nodes",
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-    tags_col: str | None = "tags",
-) -> DataFrame:
-    """Vector-tile output for point features: one Mapbox Vector Tile (MVT
-    2.1, sources/mvt.py) per slippy tile at ``zoom``, points carrying
-    their ``tags_col`` map entries as MVT attributes — the other half of
-    the raster<->vector pair next to tile_heatmap (the reference sends
-    raw GeoJSON to the browser, src/web/api.go:117; MVT is what makes a
-    dense region drawable by a standard map client).
+# ---------------------------------------------------------------------------
+# vector tiles: assign -> rank -> one MVT render stage
+# ---------------------------------------------------------------------------
 
-    Plan shape mirrors the raster path: tile assignment and the
-    tile-local integer coordinates are PURE COLUMN MATH on the shared
-    tile_fxy projection (a point's MVT position is its tile_heatmap pixel
-    at tile_px=extent), so the only Python is the byte assembly in one
-    applyInPandas over the per-tile groups. ``cap`` bounds features per
-    tile (window rank on the same exchange the render groupBy needs —
-    nothing unbounded crosses the shuffle); n_total still reports the
-    true member count, so a capped tile is detectable (no silent cap).
+def _rank_cap(df: DataFrame, cap: int) -> DataFrame:
+    """Number each tile's members by ``fid`` (``rn``), count them
+    (``n_total``) and keep rn <= ``cap``. Both windows partition by tile_id,
+    so they share the hash exchange the render's groupBy needs: nothing
+    unbounded crosses into the render, and n_total still reports the true
+    member count, so a capped tile is detectable (no silent cap). The one
+    exchange is pinned by tests/test_spatial.py::test_tile_plan_shape."""
+    return (
+        df.withColumn("rn", F.row_number().over(Window.partitionBy("tile_id").orderBy("fid")))
+        .withColumn("n_total", F.count("*").over(Window.partitionBy("tile_id")))
+        .filter(F.col("rn") <= cap)
+    )
+
+
+def _render_mvt(
+    ranked: DataFrame, layer: str, extent: int, features: Callable[..., list[dict]]
+) -> DataFrame:
+    """One single-layer Mapbox Vector Tile (MVT 2.1, sources/mvt.py) per
+    tile of a ``_rank_cap`` frame: ``features(pdf)`` turns the tile's rows,
+    in rank order, into sources/mvt.py feature dicts.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
     """
     import pandas as pd
-    from pyspark.sql import Window
-
-    fx, fy = C.tile_fxy(F.col(lon), F.col(lat), zoom)
-    tx = F.least(F.greatest(F.floor(fx).cast("int"), F.lit(0)), F.lit((1 << zoom) - 1))
-    ty = F.least(F.greatest(F.floor(fy).cast("int"), F.lit(0)), F.lit((1 << zoom) - 1))
-    ix = F.least(
-        F.greatest(F.floor((fx - tx) * F.lit(float(extent))).cast("int"), F.lit(0)),
-        F.lit(extent - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((fy - ty) * F.lit(float(extent))).cast("int"), F.lit(0)),
-        F.lit(extent - 1),
-    )
-    cols = [
-        C.tile_id(tx, ty, zoom).alias("tile_id"),
-        F.col(id_col).alias("fid"),
-        ix.alias("ix"),
-        iy.alias("iy"),
-    ]
-    if tags_col is not None:
-        cols.append(F.col(tags_col).alias("attrs"))
-    slim = df.select(*cols)
-    w = Window.partitionBy("tile_id").orderBy("fid")
-    wc = Window.partitionBy("tile_id")
-    ranked = (
-        slim.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_total", F.count("*").over(wc))
-        .filter(F.col("rn") <= cap)
-    )
-    has_attrs = tags_col is not None
 
     def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
         from simple_osm_queries_spark.sources import mvt
 
         pdf = pdf.sort_values("rn")
-        tid = int(pdf["tile_id"].iloc[0])
-        attrs_seq = pdf["attrs"] if has_attrs else [None] * len(pdf)
-        feats = [
-            {
-                "id": int(fid),
-                "type": mvt.POINT,
-                "rings": [[(int(ix), int(iy))]],
-                "attrs": dict(attrs) if attrs is not None else {},
-            }
-            for fid, ix, iy, attrs in zip(pdf["fid"], pdf["ix"], pdf["iy"], attrs_seq)
-        ]
-        blob = mvt.encode_tile([(layer, feats)], extent=extent)
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "zoom": [tid >> 58],
-                "tx": [(tid >> 29) & ((1 << 29) - 1)],
-                "ty": [tid & ((1 << 29) - 1)],
-                "n_features": [len(feats)],
-                "n_total": [int(pdf["n_total"].iloc[0])],
-                "mvt": [blob],
-            }
+        feats = features(pdf)
+        return _tile_row(
+            int(pdf["tile_id"].iloc[0]),
+            n_features=len(feats),
+            n_total=int(pdf["n_total"].iloc[0]),
+            mvt=mvt.encode_tile([(layer, feats)], extent=extent),
         )
 
     return ranked.groupBy("tile_id").applyInPandas(
@@ -401,28 +400,77 @@ def tile_vectors(
     )
 
 
+def tile_vectors(
+    df: DataFrame,
+    zoom: int,
+    extent: int = 4096,
+    cap: int = 65536,
+    id_col: str = "id",
+    lon: str = "lon",
+    lat: str = "lat",
+) -> DataFrame:
+    """Vector-tile output for point features: one MVT layer ``nodes`` per
+    slippy tile at ``zoom``, points carrying their ``tags`` map entries as
+    MVT attributes — the other half of the raster<->vector pair next to
+    tile_heatmap (the reference sends raw GeoJSON to the browser,
+    src/web/api.go:117; MVT is what makes a dense region drawable by a
+    standard map client).
+
+    Plan shape mirrors the raster path: tile assignment and the tile-local
+    integer coordinates are pure column math (a point's MVT position is
+    its tile_heatmap pixel at tile_px=extent), ``cap`` bounds features per
+    tile, and the only Python is the byte assembly in the render stage.
+
+    Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
+    """
+    tid, ix, iy = _tile_local(F.col(lon), F.col(lat), zoom, extent)
+    ranked = _rank_cap(
+        df.select(
+            tid.alias("tile_id"),
+            F.col(id_col).alias("fid"),
+            ix.alias("ix"),
+            iy.alias("iy"),
+            F.col("tags").alias("attrs"),
+        ),
+        cap,
+    )
+
+    def features(pdf):
+        from simple_osm_queries_spark.sources import mvt
+
+        return [
+            {
+                "id": int(fid),
+                "type": mvt.POINT,
+                "rings": [[(int(ix), int(iy))]],
+                "attrs": dict(attrs) if attrs is not None else {},
+            }
+            for fid, ix, iy, attrs in zip(pdf["fid"], pdf["ix"], pdf["iy"], pdf["attrs"])
+        ]
+
+    return _render_mvt(ranked, "nodes", extent, features)
+
+
 def tile_vectors_ways(
     ways: DataFrame,
     zoom: int,
     extent: int = 4096,
     cap: int = 16384,
-    max_cover: int = 256,
     oversize: str = "raise",
-    layer: str = "ways",
     simplify_tol: float = 0.0,
 ) -> DataFrame:
-    """Vector tiles for way LINESTRINGs (prepared ways table: ``nodes``
-    array<struct<id,lon,lat>> + bbox columns from sources/dataset.py).
+    """Vector tiles for way LINESTRINGs, one MVT layer ``ways`` per tile
+    (prepared ways table: ``nodes`` array<struct<id,lon,lat>> + bbox
+    columns from sources/dataset.py).
 
-    A way lands on every tile its BBOX covers (column-math sequence +
-    explode — an equi-joinable (way, tile) fan-out, no spatial join);
+    A way lands on every tile its BBOX covers (``_bbox_tile_fanout``);
     vertex coordinates are encoded tile-locally and MAY leave [0, extent)
     on border tiles, which the MVT spec allows (renderers clip) — that is
     what makes a no-clipping encoder correct. A way whose bbox covers
-    more than ``max_cover`` tiles at this zoom (a continental motorway at
-    z=15) would fan out explosively; ``oversize='raise'`` (default) fails
-    fast with the count, ``'skip'`` drops those ways — visibly, via the
-    ``n_oversize`` column present on every output row (no silent cap).
+    more than MAX_COVER tiles at this zoom fans out explosively;
+    ``oversize='raise'`` (default) fails fast with the count, ``'skip'``
+    drops those ways — visibly, via the ``n_oversize`` column present on
+    every output row (no silent cap).
 
     ``simplify_tol`` > 0 runs Douglas–Peucker per feature in TILE
     COORDINATE UNITS (the [0, extent) grid — extent/256 units ≈ one
@@ -435,38 +483,18 @@ def tile_vectors_ways(
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
-    import pandas as pd
-    from pyspark.sql import Window
+    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways")
 
-    ranked, n_over, over_cnt = _bbox_tile_fanout(
-        ways, zoom, cap, max_cover, oversize, ["nodes"], "ways"
-    )
-
-    def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import math
-
+    def features(pdf):
         import numpy as np
 
-        from simple_osm_queries_spark.functions.cells import tile_fxy_py
         from simple_osm_queries_spark.operators.geodesy import _dp_mask
         from simple_osm_queries_spark.sources import mvt
 
-        pdf = pdf.sort_values("rn")
-        tid = int(pdf["tile_id"].iloc[0])
         feats = []
-        for fid, nodes, tx_r, ty_r in zip(
-            pdf["fid"], pdf["nodes"], pdf["tx"], pdf["ty"]
-        ):
-            tx_, ty_ = int(tx_r), int(ty_r)
-            ring = []
-            for v in nodes:
-                fx, fy = tile_fxy_py(v["lon"], v["lat"], zoom)
-                ring.append(
-                    (
-                        int(math.floor((fx - tx_) * extent)),
-                        int(math.floor((fy - ty_) * extent)),
-                    )
-                )
+        for fid, nodes, tx, ty in zip(pdf["fid"], pdf["nodes"], pdf["tx"], pdf["ty"]):
+            tx, ty = int(tx), int(ty)
+            ring = [_tile_local_py(v["lon"], v["lat"], zoom, tx, ty, extent) for v in nodes]
             if len(ring) < 2:
                 continue  # degenerate single-vertex way
             if simplify_tol > 0.0 and len(ring) > 2:
@@ -475,63 +503,76 @@ def tile_vectors_ways(
                 keep = _dp_mask(xs, ys, float(simplify_tol))
                 ring = [ring[i] for i in np.flatnonzero(keep)]
             feats.append({"id": int(fid), "type": mvt.LINESTRING, "rings": [ring]})
-        blob = mvt.encode_tile([(layer, feats)], extent=extent)
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "zoom": [tid >> 58],
-                "tx": [(tid >> 29) & ((1 << 29) - 1)],
-                "ty": [tid & ((1 << 29) - 1)],
-                "n_features": [len(feats)],
-                "n_total": [int(pdf["n_total"].iloc[0])],
-                "n_oversize": [int(n_over or 0)],
-                "mvt": [blob],
-            }
-        )
+        return feats
 
-    out = ranked.groupBy("tile_id").applyInPandas(
-        render,
-        "tile_id long, zoom int, tx int, ty int, n_features int, "
-        "n_total long, n_oversize long, mvt binary",
+    return _attach_oversize(_render_mvt(ranked, "ways", extent, features), over_cnt)
+
+
+def tile_vectors_relations(
+    relations: DataFrame,
+    zoom: int,
+    extent: int = 4096,
+    cap: int = 16384,
+    oversize: str = "raise",
+) -> DataFrame:
+    """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
+    per tile — the geometry the reference outputs for relations
+    (grid_reader.go:513-517 emits the relation's bounding box as a polygon
+    ring; sources/geojson.py:33-45 mirrors it), completing the
+    POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
+    fan-out and ``oversize`` modes as tile_vectors_ways; each tile renders
+    the rectangle tile-locally (corners may leave [0, extent) on border
+    tiles — renderers clip), with the ``tags`` map as attributes. The
+    exterior ring is wound positive under the shoelace formula in screen
+    space (y down), as MVT 2.1 requires for an exterior ring.
+
+    Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
+    """
+    ranked, over_cnt = _bbox_tile_fanout(
+        relations, zoom, cap, oversize,
+        ["min_lon", "min_lat", "max_lon", "max_lat", "tags"], "relations",
     )
-    return _attach_oversize(out, n_over, over_cnt)
 
+    def features(pdf):
+        from simple_osm_queries_spark.sources import mvt
 
-def _attach_oversize(out: DataFrame, n_over, over_cnt: DataFrame) -> DataFrame:
-    """oversize='skip' path (ADVICE r5): the dropped-feature count rides
-    in as a broadcast 1-row aggregate evaluated in the SAME action as the
-    tile render, replacing the plan-build-time blocking count() job. The
-    'raise' path already verified the count is 0 eagerly."""
-    if n_over is not None:
-        return out
-    return (
-        out.drop("n_oversize")
-        .crossJoin(F.broadcast(over_cnt))
-        .select(
-            "tile_id", "zoom", "tx", "ty", "n_features", "n_total",
-            "n_oversize", "mvt",
-        )
-    )
+        feats = []
+        for fid, x1, y1, x2, y2, tx, ty, attrs in zip(
+            pdf["fid"], pdf["min_lon"], pdf["min_lat"], pdf["max_lon"],
+            pdf["max_lat"], pdf["tx"], pdf["ty"], pdf["tags"],
+        ):
+            tx, ty = int(tx), int(ty)
+            # top-left = (min_lon, max_lat): screen y grows DOWN
+            px0, py0 = _tile_local_py(float(x1), float(y2), zoom, tx, ty, extent)
+            px1, py1 = _tile_local_py(float(x2), float(y1), zoom, tx, ty, extent)
+            feats.append(
+                {
+                    "id": int(fid),
+                    "type": mvt.POLYGON,
+                    # CW on screen (positive shoelace with y down) => exterior
+                    "rings": [[(px0, py0), (px1, py0), (px1, py1), (px0, py1)]],
+                    "attrs": dict(attrs) if attrs is not None else {},
+                }
+            )
+        return feats
+
+    return _attach_oversize(_render_mvt(ranked, "relations", extent, features), over_cnt)
 
 
 def _bbox_tile_fanout(
     df: DataFrame,
     zoom: int,
     cap: int,
-    max_cover: int,
     oversize: str,
     payload_cols: list[str],
     what: str,
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, DataFrame | None]:
     """(feature -> covered tiles) fan-out shared by the linestring and
     polygon MVT paths: bbox columns -> tile index ranges (column math) ->
-    sequence+explode -> per-tile window rank to ``cap``. Returns the
-    ranked (tile_id, fid, payload..., tx, ty, rn, n_total) frame, the
-    eager oversize-dropped count (0, for 'raise' — a nonzero count raised;
-    None for 'skip', where no plan-build job runs), and the lazy 1-row
-    count aggregate for _attach_oversize."""
-    from pyspark.sql import Window
-
+    sequence+explode -> ``_rank_cap``. Returns the ranked
+    (tile_id, fid, payload..., tx, ty, rn, n_total) frame and, for
+    oversize='skip', the lazy 1-row ``n_oversize`` count for
+    _attach_oversize (None for 'raise', where a nonzero count raised)."""
     if oversize not in ("raise", "skip"):
         raise ValueError(f"oversize must be 'raise' or 'skip', got {oversize!r}")
     xmin = C.tile_x(F.col("min_lon"), zoom)
@@ -549,23 +590,24 @@ def _bbox_tile_fanout(
         "n_tiles",
         (F.col("xmax") - F.col("xmin") + 1) * (F.col("ymax") - F.col("ymin") + 1),
     )
-    oversized = sized.filter(F.col("n_tiles") > max_cover)
+    oversized = sized.filter(F.col("n_tiles") > MAX_COVER)
+    over_cnt = None
     if oversize == "raise":
         # eager: fail-fast BEFORE the fan-out job is the documented
         # semantics of 'raise'
         n_over = oversized.count()
         if n_over:
             raise ValueError(
-                f"{n_over} {what} cover > {max_cover} tiles at z{zoom} "
-                "(raise max_cover, lower zoom, or pass oversize='skip')"
+                f"{n_over} {what} cover > {MAX_COVER} tiles at z{zoom} "
+                "(lower zoom, or pass oversize='skip')"
             )
     else:
         # 'skip' (ADVICE r5): no plan-build-time Spark job — the count is
-        # attached lazily by the caller as a broadcast 1-row aggregate, so
-        # a /tiles/{z}/{x}/{y} request runs ONE action instead of three
-        n_over = None
+        # attached lazily as a broadcast 1-row aggregate, so a
+        # /tiles/{z}/{x}/{y} request runs ONE action instead of three
+        over_cnt = oversized.agg(F.count("*").alias("n_oversize"))
     fanned = (
-        sized.filter(F.col("n_tiles") <= max_cover)
+        sized.filter(F.col("n_tiles") <= MAX_COVER)
         .withColumn("tx", F.explode(F.sequence("xmin", "xmax")))
         .withColumn("ty", F.explode(F.sequence("ymin", "ymax")))
         .select(
@@ -576,106 +618,22 @@ def _bbox_tile_fanout(
             "ty",
         )
     )
-    w = Window.partitionBy("tile_id").orderBy("fid")
-    wc = Window.partitionBy("tile_id")
-    ranked = (
-        fanned.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_total", F.count("*").over(wc))
-        .filter(F.col("rn") <= cap)
+    return _rank_cap(fanned, cap), over_cnt
+
+
+def _attach_oversize(out: DataFrame, over_cnt: DataFrame | None) -> DataFrame:
+    """Add ``n_oversize`` (features dropped as oversize) to every tile row:
+    0 for 'raise', which already verified the count eagerly; for 'skip'
+    the count rides in as a broadcast 1-row aggregate evaluated in the
+    SAME action as the tile render (ADVICE r5), not as a blocking count()
+    job at plan-build time."""
+    if over_cnt is None:
+        out = out.withColumn("n_oversize", F.lit(0).cast("long"))
+    else:
+        out = out.crossJoin(F.broadcast(over_cnt))
+    return out.select(
+        "tile_id", "zoom", "tx", "ty", "n_features", "n_total", "n_oversize", "mvt"
     )
-    return ranked, n_over, oversized.agg(F.count("*").alias("n_oversize"))
-
-
-def tile_vectors_relations(
-    relations: DataFrame,
-    zoom: int,
-    extent: int = 4096,
-    cap: int = 16384,
-    max_cover: int = 256,
-    oversize: str = "raise",
-    layer: str = "relations",
-    tags_col: str | None = "tags",
-) -> DataFrame:
-    """Vector tiles for relation BBOX POLYGONS — the geometry the
-    reference outputs for relations (grid_reader.go:513-517 emits the
-    relation's bounding box as a polygon ring; sources/geojson.py:33-45
-    mirrors it), completing the POINT/LINESTRING/POLYGON triple over the
-    prepared tables. Same bbox fan-out as tile_vectors_ways; each tile
-    renders the rectangle tile-locally (corners may leave [0, extent) on
-    border tiles — renderers clip). The exterior ring is wound positive
-    under the shoelace formula in screen space (y down), as MVT 2.1
-    requires for an exterior ring.
-
-    Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
-    """
-    import pandas as pd
-
-    payload = ["min_lon", "min_lat", "max_lon", "max_lat"]
-    if tags_col is not None:
-        payload.append(tags_col)
-    ranked, n_over, over_cnt = _bbox_tile_fanout(
-        relations, zoom, cap, max_cover, oversize, payload, "relations"
-    )
-    has_attrs = tags_col is not None
-
-    def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import math
-
-        from simple_osm_queries_spark.functions.cells import tile_fxy_py
-        from simple_osm_queries_spark.sources import mvt
-
-        pdf = pdf.sort_values("rn")
-        tid = int(pdf["tile_id"].iloc[0])
-        attrs_seq = pdf[tags_col] if has_attrs else [None] * len(pdf)
-        feats = []
-        for fid, x1, y1, x2, y2, tx_r, ty_r, attrs in zip(
-            pdf["fid"],
-            pdf["min_lon"],
-            pdf["min_lat"],
-            pdf["max_lon"],
-            pdf["max_lat"],
-            pdf["tx"],
-            pdf["ty"],
-            attrs_seq,
-        ):
-            tx_, ty_ = int(tx_r), int(ty_r)
-            # top-left = (min_lon, max_lat): screen y grows DOWN
-            fx0, fy0 = tile_fxy_py(float(x1), float(y2), zoom)
-            fx1, fy1 = tile_fxy_py(float(x2), float(y1), zoom)
-            px0 = int(math.floor((fx0 - tx_) * extent))
-            py0 = int(math.floor((fy0 - ty_) * extent))
-            px1 = int(math.floor((fx1 - tx_) * extent))
-            py1 = int(math.floor((fy1 - ty_) * extent))
-            # CW on screen (positive shoelace with y down) => exterior
-            ring = [(px0, py0), (px1, py0), (px1, py1), (px0, py1)]
-            feats.append(
-                {
-                    "id": int(fid),
-                    "type": mvt.POLYGON,
-                    "rings": [ring],
-                    "attrs": dict(attrs) if attrs is not None else {},
-                }
-            )
-        blob = mvt.encode_tile([(layer, feats)], extent=extent)
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "zoom": [tid >> 58],
-                "tx": [(tid >> 29) & ((1 << 29) - 1)],
-                "ty": [tid & ((1 << 29) - 1)],
-                "n_features": [len(feats)],
-                "n_total": [int(pdf["n_total"].iloc[0])],
-                "n_oversize": [int(n_over or 0)],
-                "mvt": [blob],
-            }
-        )
-
-    out = ranked.groupBy("tile_id").applyInPandas(
-        render,
-        "tile_id long, zoom int, tx int, ty int, n_features int, "
-        "n_total long, n_oversize long, mvt binary",
-    )
-    return _attach_oversize(out, n_over, over_cnt)
 
 
 # ---------------------------------------------------------------------------
@@ -700,12 +658,7 @@ def pixel_bins_to_points(
 
     Output: (lon double, lat double[, value_col]).
     """
-    import math
-
-    mask = F.lit((1 << 29) - 1)
-    z = F.shiftright(F.col("tile_id"), 58).cast("double")
-    tx = F.shiftright(F.col("tile_id"), 29).bitwiseAND(mask).cast("double")
-    ty = F.col("tile_id").bitwiseAND(mask).cast("double")
+    z, tx, ty = (c.cast("double") for c in C.tile_zxy(F.col("tile_id")))
     n = F.pow(F.lit(2.0), z)
     fx = tx + (F.col("px").cast("double") + F.lit(0.5)) / F.lit(float(tile_px))
     fy = ty + (F.col("py").cast("double") + F.lit(0.5)) / F.lit(float(tile_px))

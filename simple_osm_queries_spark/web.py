@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.query.parser import ParseError, parse_query
@@ -57,6 +59,14 @@ def make_handler(
             self.end_headers()
             self.wfile.write(payload)
 
+        def _error(self, code: int, error: str, message: str | None = None) -> None:
+            """The JSON error envelope {"error", "message"} of every non-200
+            reply (api.go:84-96,100-113)."""
+            body = {"error": error}
+            if message is not None:
+                body["message"] = message
+            self._send(code, json.dumps(body).encode(), "application/json")
+
         def do_GET(self):  # noqa: N802 (http.server API)
             if self.path.rstrip("/") in ("", "/app"):
                 self._send(200, _app_html(), "text/html")
@@ -67,7 +77,7 @@ def make_handler(
             elif self.path.startswith("/nearest"):
                 self._get_nearest()
             else:
-                self._send(404, b'{"error": "not found"}', "application/json")
+                self._error(404, "not found")
 
         def _get_nearest(self) -> None:
             """GET /nearest?lon=..&lat=..&k=1&radius=500 — the k nearest
@@ -76,7 +86,6 @@ def make_handler(
             user surface: reverse geocoding / GPS-snap). The way side is
             bbox-prefiltered around the point before the broadcast join,
             so a single lookup never scans the full way table's geometry."""
-            import math
             from urllib.parse import parse_qs, urlparse
 
             from simple_osm_queries_spark.operators.buffer import M_PER_DEG
@@ -97,11 +106,7 @@ def make_handler(
                 if not 0.0 < radius <= 100_000.0:
                     raise ValueError("radius must be in (0, 100km]")
             except (KeyError, ValueError) as e:
-                self._send(
-                    400,
-                    json.dumps({"error": "bad request", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(400, "bad request", str(e))
                 return
             try:
                 d_lat = radius / M_PER_DEG
@@ -142,63 +147,53 @@ def make_handler(
                 }
                 self._send(200, json.dumps(payload).encode(), "application/json")
             except Exception as e:  # execution error envelope
-                self._send(
-                    500,
-                    json.dumps({"error": "execution error", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(500, "execution error", str(e))
 
         def _get_tile(self) -> None:
             """GET /tiles/{z}/{x}/{y}.png — an on-demand density heatmap
             raster for ONE slippy tile (operators/tiles.py tile_heatmap
             over the tile's bbox-filtered nodes), and .mvt — the same
-            tile as a Mapbox Vector Tile (operators/tiles.py tile_vectors
-            over the same filtered points, tags as MVT attributes). The
+            tile as a Mapbox Vector Tile with a nodes, a ways and a
+            relations layer (tile_vectors, tile_vectors_ways and
+            tile_vectors_relations; tags as MVT attributes). The
             reference's UI sends every feature to the browser as GeoJSON;
             raster keeps a dense region drawable, MVT keeps it
             *interactive* in any standard map client. Zoom capped like
             /cells."""
-            import math
             import re
-            from urllib.parse import urlparse
+            from urllib.parse import parse_qs, urlparse
 
             from simple_osm_queries_spark.functions import cells as C
             from simple_osm_queries_spark.operators.tiles import (
                 tile_heatmap,
                 tile_vectors,
+                tile_vectors_relations,
+                tile_vectors_ways,
             )
 
             # slippy-map clients append cache-busting/auth query strings
             # (.../{z}/{x}/{y}.png?v=2) — match on the path component only
-            m = re.match(
-                r"^/tiles/(\d+)/(\d+)/(\d+)\.(png|mvt)$", urlparse(self.path).path
-            )
+            url = urlparse(self.path)
+            m = re.match(r"^/tiles/(\d+)/(\d+)/(\d+)\.(png|mvt)$", url.path)
             if not m:
-                self._send(404, b'{"error": "not found"}', "application/json")
+                self._error(404, "not found")
                 return
-            from urllib.parse import parse_qs
-
-            try:  # ?simplify=<tol in tile units> — DP-thins the ways layer
-                simplify = float(
-                    parse_qs(urlparse(self.path).query).get("simplify", ["0"])[0]
-                )
+            # int() refuses numbers over 4300 digits; ?simplify=<tol in tile
+            # units> DP-thins the ways layer
+            try:
+                z, x, y = (int(g) for g in m.groups()[:3])
+                simplify = float(parse_qs(url.query).get("simplify", ["0"])[0])
                 if not 0.0 <= simplify <= 4096.0:
                     raise ValueError("simplify must be in [0, 4096]")
             except ValueError as e:
-                self._send(
-                    400,
-                    json.dumps({"error": "bad request", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(400, "bad request", str(e))
                 return
-            z, x, y = (int(g) for g in m.groups()[:3])
             fmt = m.group(4)
-            n = 1 << z
-            if not (0 <= z <= 22 and 0 <= x < n and 0 <= y < n):
-                self._send(
-                    400, b'{"error": "tile out of range"}', "application/json"
-                )
+            # z before 1 << z: an unchecked z of 10^13 exhausts memory
+            if z > 22 or x >= 1 << z or y >= 1 << z:
+                self._error(400, "tile out of range")
                 return
+            n = 1 << z
             try:
                 # Membership truth is the ENGINE's projection (tile_of ==
                 # want), not driver-math bbox inequalities: tile_fxy clamps
@@ -236,84 +231,62 @@ def make_handler(
                     & (F.col("lat") <= lat1)
                 ).where(C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(want))
                 if fmt == "mvt":
-                    from simple_osm_queries_spark.operators.tiles import (
-                        tile_vectors_relations,
-                        tile_vectors_ways,
-                    )
-                    from simple_osm_queries_spark.sources import mvt as _mvt
-
-                    # a tile message is just repeated Layer fields, so the
-                    # three per-type operators' blobs CONCATENATE into one
-                    # valid multi-layer tile (no re-encode)
-                    parts: list[bytes] = []
-                    rows = [
-                        r
-                        for r in tile_vectors(
-                            pre.select("id", "lon", "lat", "tags"),
-                            z,
-                            cap=max_rows,
-                        ).collect()
-                        if r.tile_id == want
-                    ]
-                    if rows:
-                        parts.append(bytes(rows[0].mvt))
                     # ways/relations: bbox-overlap prefilter (their bbox
                     # columns reach parquet min-max pruning), fan-out
                     # membership decides; skip-not-raise — one continental
                     # feature must not 500 the tile
-                    for frame, op in (
-                        (dataset.ways, tile_vectors_ways),
-                        (dataset.relations, tile_vectors_relations),
-                    ):
-                        cand = frame.where(
+                    def overlapping(frame: DataFrame) -> DataFrame:
+                        return frame.where(
                             (F.col("min_lon") <= lon1)
                             & (F.col("max_lon") >= lon0)
                             & (F.col("min_lat") <= lat1)
                             & (F.col("max_lat") >= lat0)
                         )
-                        # tile_id filter runs IN Spark: a candidate's bbox
-                        # fans out to up to max_cover tiles and only one is
-                        # wanted — don't ship the other blobs to the driver
-                        kw = (
-                            {"simplify_tol": simplify}
-                            if op is tile_vectors_ways and simplify > 0.0
-                            else {}
-                        )
-                        parts.extend(
-                            bytes(r.mvt)
-                            for r in op(cand, z, cap=max_rows, oversize="skip", **kw)
-                            .where(F.col("tile_id") == F.lit(want))
-                            .collect()
-                        )
-                    if not parts:  # empty but valid MVT
-                        parts.append(_mvt.encode_tile([("nodes", [])]))
-                    self._send(
-                        200, b"".join(parts), "application/vnd.mapbox-vector-tile"
-                    )
-                    return
-                pts = pre.select("lon", "lat")
-                rows = [
-                    r
-                    for r in tile_heatmap(pts, z, 256).collect()
-                    if r.tile_id == want
+
+                    layers = [
+                        tile_vectors(pre.select("id", "lon", "lat", "tags"), z, cap=max_rows),
+                        tile_vectors_ways(
+                            overlapping(dataset.ways), z, cap=max_rows,
+                            oversize="skip", simplify_tol=simplify,
+                        ),
+                        tile_vectors_relations(
+                            overlapping(dataset.relations), z, cap=max_rows, oversize="skip"
+                        ),
+                    ]
+                else:
+                    layers = [tile_heatmap(pre.select("lon", "lat"), z, 256)]
+                # ONE action for all layers. The tile_id filter runs in
+                # Spark (a way's bbox fans out to many tiles and only one is
+                # wanted), and union keeps its children's partition order,
+                # so the blobs arrive nodes -> ways -> relations. Each
+                # operator's payload column is named after the format.
+                blobs = [
+                    bytes(r[0])
+                    for r in functools.reduce(
+                        DataFrame.union,
+                        [t.where(F.col("tile_id") == F.lit(want)).select(fmt) for t in layers],
+                    ).collect()
                 ]
-                if rows:
-                    png = bytes(rows[0].png)
+                if fmt == "mvt":
+                    from simple_osm_queries_spark.sources import mvt
+
+                    # a tile message is just repeated Layer fields, so the
+                    # per-layer blobs CONCATENATE into one valid multi-layer
+                    # tile (no re-encode); an empty tile is a valid MVT too
+                    body = b"".join(blobs) if blobs else mvt.encode_tile([("nodes", [])])
+                    self._send(200, body, "application/vnd.mapbox-vector-tile")
+                    return
+                if blobs:
+                    png = blobs[0]
                 else:  # empty tile -> blank raster
                     import numpy as np
 
-                    from simple_osm_queries_spark.sources import codecs as _codecs
+                    from simple_osm_queries_spark.sources import codecs
 
-                    png = _codecs.encode_png(np.zeros((256, 256, 3), np.uint8))
+                    png = codecs.encode_png(np.zeros((256, 256, 3), np.uint8))
                 self._send(200, png, "image/png")
             except Exception as e:  # execution error envelope
-                self._send(
-                    500,
-                    json.dumps(
-                        {"error": "execution error", "message": str(e)}
-                    ).encode(),
-                    "application/json",
-                )
+                self._error(500, "execution error", str(e))
 
         def _get_cells(self) -> None:
             """GET /cells?bbox=minlon,minlat,maxlon,maxlat&res=7 — per-H3-cell
@@ -332,36 +305,30 @@ def make_handler(
             try:
                 qs = parse_qs(urlparse(self.path).query)
                 x1, y1, x2, y2 = (float(v) for v in qs["bbox"][0].split(","))
+                # nan slips past the estimate below (nan > cap is False)
+                if not all(map(math.isfinite, (x1, y1, x2, y2))):
+                    raise ValueError("bbox must be finite")
+                if x1 > x2 or y1 > y2:
+                    raise ValueError("bbox must be minlon,minlat,maxlon,maxlat")
                 res = int(qs.get("res", ["7"])[0])
                 if not 0 <= res <= 12:
                     raise ValueError("res must be in [0, 12]")
             except (KeyError, ValueError) as e:
-                self._send(
-                    400,
-                    json.dumps({"error": "bad request", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(400, "bad request", str(e))
                 return
             # estimated cell count: bbox area (cos-corrected) / hex area;
             # reject before running anything (ADVICE r3 #3)
-            import math
-
             from simple_osm_queries_spark.operators.knn import h3_min_inradius_deg
 
             mid = math.cos(math.radians(min(abs(y1 + y2) / 2.0, 89.0)))
             inr = h3_min_inradius_deg(res)
             est = abs(x2 - x1) * abs(y2 - y1) * mid / (2.0 * math.sqrt(3.0) * inr * inr)
             if est > max_cells:
-                self._send(
+                self._error(
                     413,
-                    json.dumps(
-                        {
-                            "error": "too many cells",
-                            "message": f"bbox at res {res} covers ~{int(est)} cells "
-                            f"(cap {max_cells}); use a coarser res or smaller bbox",
-                        }
-                    ).encode(),
-                    "application/json",
+                    "too many cells",
+                    f"bbox at res {res} covers ~{int(est)} cells "
+                    f"(cap {max_cells}); use a coarser res or smaller bbox",
                 )
                 return
             try:
@@ -380,42 +347,32 @@ def make_handler(
                     feat["properties"]["count"] = r.n
                 self._send(200, json.dumps(fc).encode(), "application/geo+json")
             except Exception as e:  # execution error envelope
-                self._send(
-                    500,
-                    json.dumps({"error": "execution error", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(500, "execution error", str(e))
 
         def do_POST(self):  # noqa: N802
             if self.path != "/query":
-                self._send(404, b'{"error": "not found"}', "application/json")
+                self._error(404, "not found")
                 return
-            length = int(self.headers.get("Content-Length", "0"))
+            try:  # read(-1) would block until the client closes the socket
+                length = int(self.headers.get("Content-Length", "0"))
+                if length < 0:
+                    raise ValueError
+            except ValueError:
+                self._error(400, "bad request", "Content-Length must be a non-negative integer")
+                return
             body = self.rfile.read(length).decode("utf-8", errors="replace")
             try:
                 query = parse_query(body)
             except ParseError as e:
-                self._send(
-                    400,
-                    json.dumps({"error": "parse error", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(400, "parse error", str(e))
                 return
             try:
                 fc = to_geojson_capped(plan_query(query, dataset), max_rows)
             except PlanError as e:
-                self._send(
-                    400,
-                    json.dumps({"error": "plan error", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(400, "plan error", str(e))
                 return
             except Exception as e:  # execution error envelope (api.go:100-113)
-                self._send(
-                    500,
-                    json.dumps({"error": "execution error", "message": str(e)}).encode(),
-                    "application/json",
-                )
+                self._error(500, "execution error", str(e))
                 return
             self._send(200, json.dumps(fc).encode(), "application/geo+json")
 

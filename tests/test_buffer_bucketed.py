@@ -5,8 +5,6 @@ counts of the whole proximity family (buffer, nearest-way, DBSCAN pairs)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
@@ -16,6 +14,7 @@ from simple_osm_queries_spark.operators import buffer as B
 from simple_osm_queries_spark.operators.clustering import eps_neighbor_pairs
 from simple_osm_queries_spark.operators.nearest_way import nearest_way_join
 from simple_osm_queries_spark.sources.dataset import from_generator
+from tests.plan_shape import plan_nodes
 
 
 @pytest.fixture(scope="module")
@@ -79,17 +78,6 @@ def test_auto_threshold_switches(ds, monkeypatch):
     assert _ids(bk) == _ids(bc)
 
 
-def _plan_joins(df):
-    """(join operator names, formatted plan text) — one name per join node
-    of the physical plan (the numbered "(n) Name" detail headers)."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    text = buf.getvalue()
-    ops = re.findall(r"^\(\d+\) (\w+)", text, re.M)
-    return [o for o in ops if "Join" in o or o == "CartesianProduct"], text
-
-
 @pytest.fixture(scope="module")
 def local_frames(spark, ds):
     """The fixture's nodes/ways as local relations, so a plan holds only
@@ -133,7 +121,9 @@ def _plan_case(local_frames, case):
     ],
 )
 def test_proximity_plan_shape(local_frames, case):
-    joins, text = _plan_joins(_plan_case(local_frames, case))
+    nodes = plan_nodes(_plan_case(local_frames, case))
+    joins = [n for n, _ in nodes if "Join" in n or n == "CartesianProduct"]
+    text = "".join(sec for _, sec in nodes)
     if case.startswith("nearest_way_join"):
         # candidate join + segment join; candidates carry lon/lat, so no
         # join-back of the point side on nid

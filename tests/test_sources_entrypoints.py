@@ -2,6 +2,7 @@
 tag-index format round-trip, and the HTTP server endpoint."""
 
 import json
+import socket
 import threading
 import urllib.request
 from pathlib import Path
@@ -169,6 +170,21 @@ def test_http_server_query_and_errors(ref_dataset):
         assert e.value.code == 400
         assert json.loads(e.value.read())["error"] == "parse error"
 
+        # a negative Content-Length must not block on read(-1), a
+        # non-numeric one must not drop the connection: both get a 400
+        for length in ("-1", "abc"):
+            with socket.create_connection(("127.0.0.1", 18099), timeout=10) as sock:
+                sock.sendall(
+                    f"POST /query HTTP/1.1\r\nHost: x\r\n"
+                    f"Content-Length: {length}\r\n\r\n".encode()
+                )
+                reply = b""
+                while chunk := sock.recv(65536):
+                    reply += chunk
+            head, _, body = reply.partition(b"\r\n\r\n")
+            assert head.split()[1:2] == [b"400"], (length, reply)
+            assert json.loads(body)["error"] == "bad request"
+
         with urllib.request.urlopen("http://127.0.0.1:18099/app") as resp:
             app = resp.read()
         # the interactive map UI (reference index.html parity): query editor
@@ -177,6 +193,7 @@ def test_http_server_query_and_errors(ref_dataset):
         assert b"<canvas" in app and b"error-request-label" in app
     finally:
         httpd.shutdown()
+        httpd.server_close()  # frees port 18099 even when an assertion failed
 
 
 def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch):
@@ -329,9 +346,12 @@ def test_http_server_h3_cells_endpoint(ref_dataset):
             assert f["geometry"]["type"] == "Polygon"
             assert len(f["properties"]["h3"]) == 15  # hex token
 
-        with pytest.raises(urllib.error.HTTPError) as e:
-            urllib.request.urlopen("http://127.0.0.1:18101/cells?bbox=oops")
-        assert e.value.code == 400
+        # malformed, non-finite (nan passes the cell-count estimate) and
+        # inverted (matches nothing) bboxes
+        for bbox in ("oops", "nan,0,1,1", "10,0,1,1"):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                urllib.request.urlopen(f"http://127.0.0.1:18101/cells?bbox={bbox}")
+            assert e.value.code == 400, bbox
     finally:
         httpd.shutdown()
 
@@ -499,10 +519,11 @@ def test_http_tile_endpoint(ref_dataset):
         ) as resp:
             blank = codecs.decode_png(resp.read())
         assert blank.max() == 0
-        # out-of-range / malformed
-        with pytest.raises(urllib.error.HTTPError) as e:
-            urllib.request.urlopen("http://127.0.0.1:18098/tiles/12/999999/0.png")
-        assert e.value.code == 400
+        # out-of-range / malformed: a huge z must be rejected before 1 << z
+        for bad in ("12/999999/0", "99999999999999/0/0", "9" * 5000 + "/0/0"):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                urllib.request.urlopen(f"http://127.0.0.1:18098/tiles/{bad}.png")
+            assert e.value.code == 400, bad[:20]
         with pytest.raises(urllib.error.HTTPError) as e:
             urllib.request.urlopen("http://127.0.0.1:18098/tiles/12/0/abc.png")
         assert e.value.code == 404

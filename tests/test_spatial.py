@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
 from simple_osm_queries_spark.operators import knn, spatial_join, tiles
+from tests.plan_shape import plan_nodes
 
 # fixture geometry per FIXTURES.md §5 --------------------------------------------
 
@@ -351,21 +352,6 @@ def test_knn_h3_pole_query_falls_back_to_brute(spark, points, points_pd):
         assert got == expected, f"qid={qid}"
 
 
-def _plan_nodes(df):
-    """(node name, section text) for every operator of the formatted plan."""
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return [
-        (sec.split(None, 1)[0], sec)
-        for sec in re.split(r"\n\(\d+\) ", buf.getvalue())[1:]
-    ]
-
-
 KNN_PLAN_CASES = {
     "kring": lambda pts, q: knn.knn_kring(pts, q, ring=1),
     "h3_equirect": lambda pts, q: knn.knn_h3(pts, q, res=8),
@@ -384,7 +370,7 @@ def test_knn_candidate_join_plan_shape(spark, points_pd, case):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        nodes = _plan_nodes(KNN_PLAN_CASES[case](points, _queries_df(spark)))
+        nodes = plan_nodes(KNN_PLAN_CASES[case](points, _queries_df(spark)))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     kinds = [n for n, _ in nodes]
@@ -399,6 +385,51 @@ def test_knn_candidate_join_plan_shape(spark, points_pd, case):
     else:
         covers = sum(sec.count("_cover(") for n, sec in nodes if n == "ArrowEvalPython")
         assert covers == 1, covers
+
+
+@pytest.fixture(scope="module")
+def tile_frames(spark, dataset):
+    """The dataset's nodes/ways/relations as local relations, so a plan
+    holds only the tile operator's own stages."""
+    def local(df, *cols):
+        df = df.select(*cols)
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    bbox = ("min_lon", "min_lat", "max_lon", "max_lat")
+    return (
+        local(dataset.nodes, "id", "lon", "lat", "tags"),
+        local(dataset.ways, "id", "nodes", *bbox, "tags"),
+        local(dataset.relations, "id", *bbox, "tags"),
+    )
+
+
+TILE_PLAN_COUNTED = ("Exchange", "FlatMapGroupsInPandas", "SortMergeJoin", "BroadcastNestedLoopJoin")
+TILE_PLAN_CASES = {
+    # one Exchange: the rank windows ride the render's tile_id exchange
+    "tile_vectors": (lambda n, w, r: tiles.tile_vectors(n, 13), (1, 1, 0, 0)),
+    "tile_vectors_ways-raise": (lambda n, w, r: tiles.tile_vectors_ways(w, 12), (1, 1, 0, 0)),
+    # skip: + the oversize count's single-partition exchange, cross-joined
+    "tile_vectors_ways-skip": (
+        lambda n, w, r: tiles.tile_vectors_ways(w, 12, oversize="skip"), (2, 1, 0, 1)),
+    "tile_vectors_relations": (
+        lambda n, w, r: tiles.tile_vectors_relations(r, 12), (1, 1, 0, 0)),
+    # pixel groupBy (tile_id, px, py), then the per-tile render
+    "tile_heatmap": (lambda n, w, r: tiles.tile_heatmap(n.select("lon", "lat"), 13, 64),
+                     (2, 1, 0, 0)),
+    "tile_stats-perfbench": (
+        lambda n, w, r: tiles.tile_stats(n.select("id", "lon", "lat"), 13).agg(
+            F.sum("n").alias("total"), F.count("*").alias("tiles")),
+        (2, 0, 0, 0)),
+}
+
+
+@pytest.mark.parametrize("case", list(TILE_PLAN_CASES))
+def test_tile_plan_shape(tile_frames, case):
+    """Plan pin for the tile family: the counts of exchanges, pandas render
+    stages and the two joins a tile operator must not grow."""
+    build, want = TILE_PLAN_CASES[case]
+    kinds = [n for n, _ in plan_nodes(build(*tile_frames))]
+    assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == want, kinds
 
 
 def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
