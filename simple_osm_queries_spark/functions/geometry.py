@@ -5,38 +5,44 @@ inclusive bound-vs-bound intersection. Query-time geometry checks in the
 reference are uniformly "query bbox intersects feature bound"
 (/root/reference/src/index/grid_reader.go:180-184); nodes have degenerate
 point bounds, ways line bounds, relations bbox-polygon bounds.
+
+These two predicates are the package's only inclusive lon/lat bbox
+comparison chains. Every operand may be a Column or a float (a float
+becomes a literal), so one spelling serves literal query boxes, broadcast
+bound columns and padded bound expressions alike; the operators are plain
+comparisons and ``&``, so numpy arrays work too (the numpy ray cast's
+per-polygon candidate mask).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+Coord = Column | float | np.ndarray
 
 
-def point_in_bbox(lon: Column, lat: Column, min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
+def point_in_bbox(
+    lon: Coord, lat: Coord, min_lon: Coord, min_lat: Coord, max_lon: Coord, max_lat: Coord
+) -> Coord:
     """Inclusive containment (orb Bound.Contains; /root/reference/src/query/location.go:44)."""
-    return (
-        (lon >= F.lit(min_lon))
-        & (lon <= F.lit(max_lon))
-        & (lat >= F.lit(min_lat))
-        & (lat <= F.lit(max_lat))
-    )
+    return (lon >= min_lon) & (lon <= max_lon) & (lat >= min_lat) & (lat <= max_lat)
 
 
 def bbox_intersects(
-    f_min_lon: Column,
-    f_min_lat: Column,
-    f_max_lon: Column,
-    f_max_lat: Column,
-    min_lon: float,
-    min_lat: float,
-    max_lon: float,
-    max_lat: float,
-) -> Column:
+    f_min_lon: Coord,
+    f_min_lat: Coord,
+    f_max_lon: Coord,
+    f_max_lat: Coord,
+    min_lon: Coord,
+    min_lat: Coord,
+    max_lon: Coord,
+    max_lat: Coord,
+) -> Coord:
     """Inclusive bound-vs-bound overlap (orb Bound.Intersects; location.go:46)."""
     return (
-        (f_min_lon <= F.lit(max_lon))
-        & (f_max_lon >= F.lit(min_lon))
-        & (f_min_lat <= F.lit(max_lat))
-        & (f_max_lat >= F.lit(min_lat))
+        (f_min_lon <= max_lon)
+        & (f_max_lon >= min_lon)
+        & (f_min_lat <= max_lat)
+        & (f_max_lat >= min_lat)
     )

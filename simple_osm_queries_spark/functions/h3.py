@@ -116,35 +116,13 @@ def center_child_py(h: int, child_res: int) -> int:
     return out & ~clear
 
 
-def child_range_py(h: int, child_res: int) -> tuple[int, int]:
-    """[lo, hi] bounds of ALL descendants of ``h`` at ``child_res`` in the
-    64-bit id ordering. Valid because same-resolution ids order
-    lexicographically by (base cell, digit 1, digit 2, ...): the range is
-    the id with the new digits all 0 through the id with them all 6. Ids
-    numerically inside the range that are not descendants carry a 7 digit
-    somewhere — not valid cells, so range predicates over stored cell
-    columns are exact. The planner's compact-cover predicate builds on
-    this (the distributed analogue of the reference's min/max cell range,
-    grid_reader.go:41-42)."""
-    res = resolution_py(h)
-    if child_res < res or child_res > MAX_RES:
-        raise ValueError(f"child_res {child_res} not in [{res}, {MAX_RES}]")
-    out = (h & ~(0xF << 52)) | (child_res << 52)
-    clear = _digits_mask(res + 1, child_res)
-    lo = out & ~clear
-    sixes = 0
-    for i in range(res + 1, child_res + 1):
-        sixes |= 6 << _digit_shift(i)
-    return lo, lo | sixes
-
-
 def compact_cells_py(cells) -> list[int]:
     """Driver-side (numpy) H3 compaction: fold every complete sibling family
     (7 hexagon children / 6 pentagon children) into its parent, cascading to
     coarser resolutions. Input: same- or mixed-resolution distinct valid
     cells; output: the minimal equivalent covering set. The distributed
-    DataFrame twin lives in operators/h3_sets.compact_cells — this one runs
-    at plan time on bbox covers (thousands of ints, never row data)."""
+    DataFrame twin lives in operators/h3_sets.compact_cells; this one is
+    its driver-side reference (test_compact_cells_py_matches_distributed)."""
     import numpy as np
 
     cur = np.unique(np.asarray(list(cells), dtype=np.uint64))

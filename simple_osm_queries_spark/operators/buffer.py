@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
+from simple_osm_queries_spark.functions import geometry as G
 
 M_PER_DEG = 111320.0
 
@@ -233,11 +234,10 @@ def _point_way_candidates(
     if small_ways:
         d_lat = dist_m / M_PER_DEG
         d_lon = F.lit(dist_m) / (F.lit(M_PER_DEG) * F.cos(F.radians(F.col("lat"))))
-        cand_pred = (
-            (F.col("lon") >= F.col("min_lon") - d_lon)
-            & (F.col("lon") <= F.col("max_lon") + d_lon)
-            & (F.col("lat") >= F.col("min_lat") - F.lit(d_lat))
-            & (F.col("lat") <= F.col("max_lat") + F.lit(d_lat))
+        cand_pred = G.point_in_bbox(
+            F.col("lon"), F.col("lat"),
+            F.col("min_lon") - d_lon, F.col("min_lat") - F.lit(d_lat),
+            F.col("max_lon") + d_lon, F.col("max_lat") + F.lit(d_lat),
         )
         cand = pt.join(
             F.broadcast(w.select("wid", "min_lon", "min_lat", "max_lon", "max_lat")),
@@ -489,13 +489,11 @@ def within_buffer_way_way(
         F.abs(F.col("i_min_lat")), F.abs(F.col("i_max_lat")),
     )
     d_lon = F.lit(buffer_m) / (F.lit(M_PER_DEG) * F.cos(F.radians(worst_lat)))
-    cand = (
-        (F.col("o_min_lon") - d_lon <= F.col("i_max_lon"))
-        & (F.col("o_max_lon") + d_lon >= F.col("i_min_lon"))
-        & (F.col("o_min_lat") - F.lit(d_lat) <= F.col("i_max_lat"))
-        & (F.col("o_max_lat") + F.lit(d_lat) >= F.col("i_min_lat"))
-        & (F.col("id") != F.col("iid"))
-    )
+    cand = G.bbox_intersects(
+        F.col("o_min_lon") - d_lon, F.col("o_min_lat") - F.lit(d_lat),
+        F.col("o_max_lon") + d_lon, F.col("o_max_lat") + F.lit(d_lat),
+        F.col("i_min_lon"), F.col("i_min_lat"), F.col("i_max_lon"), F.col("i_max_lat"),
+    ) & (F.col("id") != F.col("iid"))
 
     if _resolve_strategy(i, strategy) == "broadcast":
         pairs = o.select(

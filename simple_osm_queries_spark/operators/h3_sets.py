@@ -10,8 +10,11 @@ as distributed DataFrame operators over the public 64-bit layout
 * ``compact_cells(df)`` — inverse-closure: repeatedly replace every
   COMPLETE sibling set (all 7 children of a hexagon parent / all 6 of a
   pentagon parent, finest resolution first) with the parent. One groupBy +
-  semi/anti join per resolution level, finest to coarsest — O(max_res)
-  rounds regardless of data size, all equi-joins on derived keys.
+  anti join per resolution that holds cells — O(max_res) rounds regardless
+  of data size, all equi-joins on derived keys.
+
+Both are the shared level-sparse fold of operators/cell_sets.py bound to
+the H3 hierarchy (``_H3``).
 
 Input cells must be distinct and non-overlapping (no cell an ancestor of
 another) — the same contract the reference H3 library documents for
@@ -23,43 +26,35 @@ part of the north rule's multi-resolution rollup surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import h3 as H
+from simple_osm_queries_spark.operators import cell_sets
+
+
+def _children(cell: Column, res: int) -> Column:
+    """The children at ``res + 1``: digits 0..6 for hexagons; the K axis
+    (1) is deleted under pentagons."""
+
+    def kids(digits) -> Column:
+        return F.array(*[H.child_at(cell, res + 1, d) for d in digits])
+
+    return F.when(H.is_pentagon(cell), kids((0, 2, 3, 4, 5, 6))).otherwise(kids(range(7)))
+
+
+_H3 = cell_sets.CellHierarchy(
+    unit="res",
+    level=H.resolution,
+    parent=H.parent,
+    family_size=lambda p: F.when(H.is_pentagon(p), F.lit(6)).otherwise(F.lit(7)),
+    children=_children,
+)
 
 
 def uncompact_cells(df: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
     """All descendants at ``res`` of every (possibly mixed-resolution) cell."""
-    cur = df.select(F.col(cell_col).alias("cell"))
-    bounds = cur.agg(
-        F.min(H.resolution(F.col("cell"))), F.max(H.resolution(F.col("cell")))
-    ).first()
-    min_res, max_res = bounds[0], bounds[1]
-    if min_res is None:
-        return cur
-    if int(max_res) > res:
-        raise ValueError(
-            f"uncompact target res {res} is coarser than an input cell "
-            f"(max res {max_res}); refusing to silently pass finer cells through"
-        )
-    for r in range(int(min_res), res):
-        at_r = F.col("__res") == r
-        with_res = cur.withColumn("__res", H.resolution(F.col("cell")))
-        done = with_res.filter(~at_r).drop("__res")
-        todo = with_res.filter(at_r)
-        # digits 0..6 for hexagons; the K axis (1) is deleted under pentagons
-        digits = F.when(
-            H.is_pentagon(F.col("cell")), F.array(*[F.lit(d) for d in (0, 2, 3, 4, 5, 6)])
-        ).otherwise(F.array(*[F.lit(d) for d in range(7)]))
-        expanded = (
-            todo.select("cell", F.explode(digits).alias("__d"))
-            .select(H.child_at(F.col("cell"), r + 1, F.col("__d")).alias("cell"))
-        )
-        # eager lineage cut per level: the union-of-explodes plan otherwise
-        # deepens geometrically and Catalyst re-analysis dominates runtime
-        cur = done.unionByName(expanded).localCheckpoint(eager=True)
-    return cur
+    return cell_sets.uncompact(df, res, cell_col, _H3)
 
 
 def h3_pyramid(
@@ -104,37 +99,6 @@ def h3_pyramid(
 
 def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Minimal covering set: complete sibling families fold into parents,
-    cascading to coarser resolutions.
-
-    Level-sparse like s2_sets.compact_cells: only resolutions that hold
-    cells are visited, and a resolution that folds nothing leaves the plan
-    (and its checkpoint) untouched — a same-res input costs one groupBy
-    round instead of max_res eager checkpoints."""
-    cur = df.select(F.col(cell_col).alias("cell"))
-    present = {
-        int(r_[0])
-        for r_ in cur.select(H.resolution(F.col("cell")).alias("r")).distinct().collect()
-    }
-    present.discard(0)
-    while present:
-        r = max(present)
-        present.discard(r)
-        with_res = cur.withColumn("__res", H.resolution(F.col("cell")))
-        at_r = with_res.filter(F.col("__res") == r).drop("__res")
-        fam = at_r.select("cell", H.parent(F.col("cell"), r - 1).alias("__p"))
-        counts = fam.groupBy("__p").agg(F.count("*").alias("__n"))
-        complete = counts.filter(
-            (F.col("__n") == 7) & ~H.is_pentagon(F.col("__p"))
-            | (F.col("__n") == 6) & H.is_pentagon(F.col("__p"))
-        ).select("__p").localCheckpoint(eager=True)  # tiny; reused below
-        if complete.isEmpty():
-            continue
-        rest = with_res.filter(F.col("__res") != r).drop("__res")
-        kept = fam.join(complete, "__p", "left_anti").select("cell")
-        parents = complete.select(F.col("__p").alias("cell"))
-        cur = (
-            rest.unionByName(kept).unionByName(parents).localCheckpoint(eager=True)
-        )
-        if r - 1 > 0:
-            present.add(r - 1)
-    return cur
+    cascading to coarser resolutions. Level-sparse: a same-res input costs
+    one groupBy round instead of max_res eager checkpoints."""
+    return cell_sets.compact(df, cell_col, _H3)

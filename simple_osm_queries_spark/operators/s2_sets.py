@@ -9,6 +9,9 @@ is uniform 4-ary with pure bit arithmetic (no pentagons, no rotations):
 * compact folds every complete 4-sibling family into its parent, finest
   level first — one groupBy + anti-join per level, all on derived keys.
 
+Both are the shared level-sparse fold of operators/cell_sets.py bound to
+the S2 hierarchy (``_S2``).
+
 Everything is JVM column math (shift/mask/arithmetic on the signed-long
 two's-complement ids, faces 4/5 included); Python appears only in the
 driver loop over levels.
@@ -16,10 +19,11 @@ driver loop over levels.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import s2 as S2
+from simple_osm_queries_spark.operators import cell_sets
 
 
 def _level_col(cell):
@@ -33,67 +37,29 @@ def _level_col(cell):
     return out
 
 
+def _children(cell: Column, level: int) -> Column:
+    """The 4 children one level down (the lsb formula above)."""
+    lsb = S2.lsb_col(cell)
+    return F.array(*[cell - lsb + (2 * k + 1) * F.shiftright(lsb, 2) for k in range(4)])
+
+
+_S2 = cell_sets.CellHierarchy(
+    unit="level",
+    level=_level_col,
+    parent=S2.parent_id_col,
+    family_size=lambda p: F.lit(4),
+    children=_children,
+)
+
+
 def uncompact_cells(df: DataFrame, level: int, cell_col: str = "cell") -> DataFrame:
     """All descendants at ``level`` of every (possibly mixed-level) cell."""
-    cur = df.select(F.col(cell_col).alias("cell"))
-    bounds = cur.agg(
-        F.min(_level_col(F.col("cell"))), F.max(_level_col(F.col("cell")))
-    ).first()
-    min_level, max_level = bounds[0], bounds[1]
-    if min_level is None:
-        return cur
-    if int(max_level) > level:
-        raise ValueError(
-            f"uncompact target level {level} is coarser than an input cell "
-            f"(max level {max_level}); refusing to silently pass finer cells through"
-        )
-    for lv in range(int(min_level), level):
-        lvl = _level_col(F.col("cell"))
-        done = cur.filter(lvl != lv)
-        todo = cur.filter(lvl == lv)
-        lsb = S2.lsb_col(F.col("cell"))
-        child = F.col("cell") - lsb + (2 * F.col("__k") + 1) * F.shiftright(lsb, 2)
-        expanded = (
-            todo.select("cell", F.explode(F.array(*[F.lit(k) for k in range(4)])).alias("__k"))
-            .select(child.alias("cell"))
-        )
-        cur = done.unionByName(expanded).localCheckpoint(eager=True)
-    return cur
+    return cell_sets.uncompact(df, level, cell_col, _S2)
 
 
 def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Minimal covering set: complete 4-sibling families fold into parents,
-    cascading to coarser levels.
-
-    Level-sparse: only levels that actually hold cells are visited (one
-    tiny distinct-levels aggregate up front), and a level that folds
-    nothing leaves the plan untouched — a same-level input set costs ONE
-    groupBy round instead of max_level eager checkpoints (measured 13.7s ->
-    ~1s on the gate's level-21 roundtrip)."""
-    cur = df.select(F.col(cell_col).alias("cell"))
-    present = {
-        int(r[0])
-        for r in cur.select(_level_col(F.col("cell")).alias("lv")).distinct().collect()
-    }
-    present.discard(0)
-    while present:
-        lv = max(present)
-        present.discard(lv)
-        lvl = _level_col(F.col("cell"))
-        at = cur.filter(lvl == lv)
-        fam = at.select("cell", S2.parent_id_col(F.col("cell"), lv - 1).alias("__p"))
-        complete = (
-            fam.groupBy("__p").agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") == 4)
-            .select("__p")
-            .localCheckpoint(eager=True)  # tiny; reused by the anti join
-        )
-        if complete.isEmpty():
-            continue  # nothing folds at this level: cur unchanged
-        rest = cur.filter(lvl != lv)
-        kept = fam.join(complete, "__p", "left_anti").select("cell")
-        parents = complete.select(F.col("__p").alias("cell"))
-        cur = rest.unionByName(kept).unionByName(parents).localCheckpoint(eager=True)
-        if lv - 1 > 0:
-            present.add(lv - 1)  # new parents may cascade
-    return cur
+    cascading to coarser levels. Level-sparse: a same-level input set costs
+    ONE groupBy round instead of max_level eager checkpoints (measured
+    13.7s -> ~1s on the gate's level-21 roundtrip)."""
+    return cell_sets.compact(df, cell_col, _S2)

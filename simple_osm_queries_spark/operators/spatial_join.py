@@ -2,27 +2,62 @@
 
 These extend the reference's bbox machinery (/root/reference/src/query/
 location.go:42-47 has only point-in-bbox and bound-intersects) to true
-spatial JOIN operators between a big point table and a (small) geometry
-table.
+spatial JOIN operators between a big point table and a small geometry
+side. Every join here is prefilter -> refine:
 
-Design for scale:
-* the geometry side is broadcast (queries/polygons are the small dim);
-* every candidate pairing is prefiltered by bbox overlap — with a
-  cell-range predicate this is the distributed analogue of the reference's
-  "only read cells in range" scan (grid_reader.go:39-78);
-* the exact ray-casting test is PURE COLUMN MATH over the ring array
-  (aggregate over edge pairs) — whole-stage codegen, no Python in the hot
-  path. A polygon with r vertices costs O(r) per candidate, same as any
-  single-node implementation, but embarrassingly parallel.
+* prefilter: cut the point rows before any O(vertices) work.
+  ``bbox_join`` and ``point_in_polygon_join`` broadcast the box / polygon
+  table and join on the inclusive bbox predicate (functions/geometry.py).
+  The two literal-catalog joins take a driver-side [(qid, ring)] list:
+  ``point_in_polygon_literal_join`` filters on the catalog's union bbox,
+  ``point_in_polygon_h3_join`` semi-joins each point's H3 cell against the
+  distinct union of the entries' polyfill covers (broadcast).
+* refine: the even-odd ray cast, in three forms, each chosen by something
+  the code can see:
+  - ``point_in_polygon_col``: the ring is a DataFrame column
+    (``point_in_polygon_join``, ``zonal_stats``). Array/lambda form; the
+    DuckDB gate twin mirrors it.
+  - ``point_in_polygon_literal``: a small literal catalog (at most
+    ``_UNROLL_MAX_ENTRIES`` entries and ``_UNROLL_MAX_VERTICES`` vertices
+    in all), unrolled to scalar CASE arithmetic under whole-stage codegen
+    (measured ~1.4 s per polygon on 20M rows, 32 cores).
+  - ``point_in_polygon_mask_np``: a larger literal catalog, one
+    Arrow-batched numpy UDF per 64 entries returning a hit bitmask (~3.2 s
+    for 8 32-gons). The unrolled composite would exceed the 64KB codegen
+    method limit and fall back to interpreted eval (~12 s).
+  Both literal-catalog joins share ``_literal_refine``, the one place the
+  strategy is chosen.
 """
 
 from __future__ import annotations
+
+import functools
+import math
+import operator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from simple_osm_queries_spark.functions import cells as C
+from simple_osm_queries_spark.functions import geometry as G
+from simple_osm_queries_spark.functions import h3_encode as E
+from simple_osm_queries_spark.operators.knn import (
+    CoverBudgetExceeded,
+    banded_lon_offsets,
+    h3_max_circumradius_deg,
+    h3_min_inradius_deg,
+)
+
+# A literal catalog is unrolled iff it is this small: the r6 literal-join
+# split (<= 2 polygons) plus the r4 codegen-size guard (one generated method
+# over 64KB silently falls back to interpreted eval, PLANS.md §6).
+_UNROLL_MAX_ENTRIES = 2
+_UNROLL_MAX_VERTICES = 160
+# polygons per mask word: bit j of an int64 word
+_MASK_BITS = 64
 
 
 def bbox_join(
@@ -38,11 +73,9 @@ def bbox_join(
     broadcast — a theta join on range predicates would otherwise be a
     cartesian shuffle.
     """
-    cond = (
-        (points[lon] >= boxes["min_lon"])
-        & (points[lon] <= boxes["max_lon"])
-        & (points[lat] >= boxes["min_lat"])
-        & (points[lat] <= boxes["max_lat"])
+    cond = G.point_in_bbox(
+        points[lon], points[lat],
+        boxes["min_lon"], boxes["min_lat"], boxes["max_lon"], boxes["max_lat"],
     )
     return points.join(F.broadcast(boxes), cond, how)
 
@@ -102,21 +135,28 @@ def point_in_polygon_literal(
     return crossings % 2 == 1
 
 
+def _ring_bbox(ring: list[tuple[float, float]]) -> tuple[float, float, float, float]:
+    """(min_lon, min_lat, max_lon, max_lat) of a literal vertex list."""
+    return (
+        min(p[0] for p in ring),
+        min(p[1] for p in ring),
+        max(p[0] for p in ring),
+        max(p[1] for p in ring),
+    )
+
+
 def point_in_polygon_mask_np(
     lon: Column, lat: Column, polygons: list[tuple[int, list[tuple[float, float]]]]
 ) -> Column:
-    """Bitmask of catalog polygons containing the point — ONE Arrow-batched
-    numpy UDF for the whole catalog (bit j set <=> inside polygons[j]).
+    """Bitmask of catalog polygons containing the point: ONE Arrow-batched
+    numpy UDF for up to 64 polygons (bit j set <=> inside polygons[j]).
 
-    The JVM unrolled form is fastest for 1-2 polygons, but a multi-polygon
-    composite expression exceeds codegen method limits and silently falls
-    back to interpreted eval (~4x slower than this, measured at 8x32-gon on
-    20M rows). The numpy path does bbox masking + vectorized ray casts per
-    Arrow batch — per-row Python never runs."""
+    Per Arrow batch it masks each polygon's bbox, then ray-casts the
+    candidates against all edges at once; per-row Python never runs."""
+    if len(polygons) > _MASK_BITS:
+        raise ValueError(f"one mask word holds at most {_MASK_BITS} polygons, got {len(polygons)}")
     rings = [np.asarray(r, dtype=np.float64) for _, r in polygons]
-    boxes = [
-        (r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max()) for r in rings
-    ]
+    boxes = [_ring_bbox(r) for _, r in polygons]
 
     @F.pandas_udf(T.LongType())
     def _mask(lo: pd.Series, la: pd.Series) -> pd.Series:
@@ -124,8 +164,7 @@ def point_in_polygon_mask_np(
         y = la.to_numpy()
         mask = np.zeros(len(x), dtype=np.int64)
         for j, r in enumerate(rings):
-            mnx, mny, mxx, mxy = boxes[j]
-            cand = (x >= mnx) & (x <= mxx) & (y >= mny) & (y <= mxy)
+            cand = G.point_in_bbox(x, y, *boxes[j])
             if not cand.any():
                 continue
             cx = x[cand][:, None]
@@ -148,65 +187,45 @@ def point_in_polygon_mask_np(
     return _mask.asNondeterministic()(lon, lat)
 
 
-def point_in_polygon_literal_join(
+def _literal_refine(
     points: DataFrame,
     polygons: list[tuple[int, list[tuple[float, float]]]],
-    lon: str = "lon",
-    lat: str = "lat",
+    lon: str,
+    lat: str,
 ) -> DataFrame:
-    """Join points against a small literal polygon catalog in ONE scan.
+    """points + qid: one row per (point, catalog entry containing it).
 
-    Matches come out as (point columns..., qid) rows. One pass over the data
-    regardless of catalog size — a per-polygon union would re-scan the table
-    |catalog| times (measured 16 polygons = 16x the I/O). Strategy by
-    catalog size (measured on 20M rows, 32 cores):
-    * <= 2 polygons: unrolled whole-stage-codegen ray cast (~1.4s/polygon)
-    * larger:        numpy bitmask UDF (~3.2s for 8x32-gon) — the JVM
-                     composite would fall back to interpreted eval (~12s)
-    """
-    assert polygons, "empty polygon list"
-    # union-bbox prefilter (r6): rows outside every polygon's bbox can
-    # never match (both paths below drop non-matches), so a codegen JVM
-    # range filter runs first — for the >2-polygon Arrow path this cuts
-    # the rows (and bytes) crossing the Python boundary before the mask
-    # UDF (guide §4.1: pass only what the function needs, in rows too)
-    u_mnx = min(p[0] for _, ring in polygons for p in ring)
-    u_mxx = max(p[0] for _, ring in polygons for p in ring)
-    u_mny = min(p[1] for _, ring in polygons for p in ring)
-    u_mxy = max(p[1] for _, ring in polygons for p in ring)
-    points = points.filter(
-        (points[lon] >= F.lit(u_mnx))
-        & (points[lon] <= F.lit(u_mxx))
-        & (points[lat] >= F.lit(u_mny))
-        & (points[lat] <= F.lit(u_mxy))
-    )
-    if len(polygons) <= 2:
-        hits = []
-        for qid, ring in polygons:
-            mnx = min(p[0] for p in ring)
-            mxx = max(p[0] for p in ring)
-            mny = min(p[1] for p in ring)
-            mxy = max(p[1] for p in ring)
-            in_bbox = (
-                (points[lon] >= F.lit(mnx))
-                & (points[lon] <= F.lit(mxx))
-                & (points[lat] >= F.lit(mny))
-                & (points[lat] <= F.lit(mxy))
+    Unrolled codegen ray casts for a small catalog, else the numpy bitmask:
+    one int64 word per 64 entries, all words in one projection, decoded by
+    (word, bit). A catalog of <= 64 entries has the single ``__pipmask``."""
+    x, y = points[lon], points[lat]
+    if (
+        len(polygons) <= _UNROLL_MAX_ENTRIES
+        and sum(len(r) for _, r in polygons) <= _UNROLL_MAX_VERTICES
+    ):
+        hits = [
+            F.when(
+                G.point_in_bbox(x, y, *_ring_bbox(ring))
+                & point_in_polygon_literal(x, y, ring),
+                F.lit(qid),
             )
-            hits.append(
-                F.when(
-                    in_bbox & point_in_polygon_literal(points[lon], points[lat], ring),
-                    F.lit(qid),
-                )
-            )
+            for qid, ring in polygons
+        ]
         return points.withColumn("qid", F.explode(F.array_compact(F.array(*hits))))
 
-    mask = point_in_polygon_mask_np(points[lon], points[lat], polygons)
+    words = {
+        "__pipmask" + (str(w) if w else ""): point_in_polygon_mask_np(
+            x, y, polygons[w * _MASK_BITS:(w + 1) * _MASK_BITS]
+        )
+        for w in range(math.ceil(len(polygons) / _MASK_BITS))
+    }
+    names = list(words)
     qid_of_bit = F.array_compact(
         F.array(
             *[
                 F.when(
-                    F.shiftright(F.col("__pipmask"), j).bitwiseAND(F.lit(1)) == 1,
+                    F.shiftright(F.col(names[j // _MASK_BITS]), j % _MASK_BITS)
+                    .bitwiseAND(F.lit(1)) == 1,
                     F.lit(qid),
                 )
                 for j, (qid, _) in enumerate(polygons)
@@ -214,11 +233,31 @@ def point_in_polygon_literal_join(
         )
     )
     return (
-        points.withColumn("__pipmask", mask)
-        .filter(F.col("__pipmask") != 0)
+        points.withColumns(words)
+        .filter(functools.reduce(operator.or_, [F.col(n) != 0 for n in names]))
         .withColumn("qid", F.explode(qid_of_bit))
-        .drop("__pipmask")
+        .drop(*names)
     )
+
+
+def point_in_polygon_literal_join(
+    points: DataFrame,
+    polygons: list[tuple[int, list[tuple[float, float]]]],
+    lon: str = "lon",
+    lat: str = "lat",
+) -> DataFrame:
+    """Join points against a literal polygon catalog in ONE scan.
+
+    Matches come out as (point columns..., qid) rows. One pass over the data
+    regardless of catalog size — a per-polygon union would re-scan the table
+    |catalog| times (measured 16 polygons = 16x the I/O). Prefilter: the
+    catalog's union bbox, a codegen range filter, so rows that can match no
+    entry never reach the refine (nor, on the numpy path, the Arrow
+    boundary). Refine: ``_literal_refine``."""
+    assert polygons, "empty polygon list"
+    union = _ring_bbox([p for _, ring in polygons for p in ring])
+    points = points.filter(G.point_in_bbox(points[lon], points[lat], *union))
+    return _literal_refine(points, polygons, lon, lat)
 
 
 def polygon_bounds(ring: Column) -> tuple[Column, Column, Column, Column]:
@@ -246,13 +285,9 @@ def point_in_polygon_join(
     polys = polygons.withColumns(
         {"__mnx": mnx, "__mny": mny, "__mxx": mxx, "__mxy": mxy}
     )
-    cond = (
-        (points[lon] >= polys["__mnx"])
-        & (points[lon] <= polys["__mxx"])
-        & (points[lat] >= polys["__mny"])
-        & (points[lat] <= polys["__mxy"])
-        & point_in_polygon_col(points[lon], points[lat], polys[ring])
-    )
+    cond = G.point_in_bbox(
+        points[lon], points[lat], polys["__mnx"], polys["__mny"], polys["__mxx"], polys["__mxy"]
+    ) & point_in_polygon_col(points[lon], points[lat], polys[ring])
     return points.join(F.broadcast(polys), cond, how).drop("__mnx", "__mny", "__mxx", "__mxy")
 
 
@@ -305,20 +340,10 @@ def h3_polyfill(ring: list[tuple[float, float]], res: int = 8):
     vectorized call) therefore yields every such cell. Extra cells near the
     boundary are harmless — the exact ray-cast refine drops their points.
     """
-    import math as _m
-
-    import numpy as np
-
-    from simple_osm_queries_spark.functions import h3_encode as E
-    from simple_osm_queries_spark.operators.knn import (
-        h3_max_circumradius_deg,
-        h3_min_inradius_deg,
-    )
-
     lons = [p[0] for p in ring]
     lats = [p[1] for p in ring]
     pad = h3_max_circumradius_deg(res) + h3_min_inradius_deg(res)
-    step = h3_min_inradius_deg(res) / _m.sqrt(2.0) * 0.99
+    step = h3_min_inradius_deg(res) / math.sqrt(2.0) * 0.99
     lat0, lat1 = min(lats) - pad, max(lats) + pad
     gy = np.arange(lat0, lat1 + step, step)
     # Per-latitude-ROW lon sampling — the shared r4 fix for the r3 bug
@@ -327,11 +352,6 @@ def h3_polyfill(ring: list[tuple[float, float]], res: int = 8):
     # its cells). See knn.banded_lon_offsets for the band-cos construction;
     # the ring's own lon span is the latitude-independent base extent, the
     # pad is the arc extent scaled per row.
-    from simple_osm_queries_spark.operators.knn import (
-        CoverBudgetExceeded,
-        banded_lon_offsets,
-    )
-
     try:
         row, lon_off = banded_lon_offsets(
             gy, pad, step,
@@ -358,213 +378,27 @@ def point_in_polygon_h3_join(
     lat: str = "lat",
     cell_col: str | None = None,
 ) -> DataFrame:
-    """Point-in-polygon with an H3 cell-prefilter: each polygon polyfills to
-    a cover of real H3 cells (driver-side, vectorized), points key by their
-    cell, and a broadcast equi-join on the cell id prunes the table down to
-    boundary-region candidates BEFORE the exact ray cast. At planet scale
-    with a cell-partitioned table the same cover doubles as a partition
-    filter; the refine touches only cover-cell rows instead of every row
-    that survives a bbox check. ``cell_col`` names a precomputed
-    res-``res`` H3 column (the cells-CLI layout) to skip the per-call
-    re-encode."""
-    import pandas as pd
+    """Point-in-polygon with an H3 cell prefilter. Every entry polyfills to
+    a superset cover of real H3 cells (driver-side, vectorized); a broadcast
+    left-semi join keeps the points whose res-``res`` cell is in the
+    distinct union of all covers, so each point passes once however many
+    covers hold its cell (entries may share a qid: multi-ring regions).
+    ``_literal_refine`` then tags every containing entry — the same rows as
+    ``point_in_polygon_literal_join``.
 
-    from simple_osm_queries_spark.functions import cells as C
-
+    ``cell_col`` names a precomputed res-``res`` H3 column (the cells-CLI
+    layout's ``h3``) to skip the per-call re-encode. That layout is
+    partitioned on the coarser ``h3_part`` column, which this join does not
+    key, so the semi join prunes rows, not partition directories."""
     assert polygons, "empty polygon list"
-    spark = points.sparkSession
+    cover = np.unique(np.concatenate([h3_polyfill(ring, res) for _, ring in polygons]))
+    cells = points.sparkSession.createDataFrame(
+        pd.DataFrame({"__cell": cover.view("int64")}), "__cell long"
+    )
     keyed = points.withColumn(
         "__cell",
         F.col(cell_col) if cell_col is not None
         else C.cell_h3(F.col(lon), F.col(lat), res),
     )
-    # refine strategy: the polygons are plan-time LITERALS, so small
-    # catalogs use the unrolled whole-stage-codegen ray cast selected by
-    # qid — the array-lambda form is interpreted and was ~40% of the
-    # boundary-candidate cost (millions of rows survive the cover join for
-    # city-sized polygons). The split is by TOTAL VERTEX budget, not
-    # polygon count: one >64KB codegen method silently falls back to
-    # interpreted eval (the pitfall PLANS.md §6 catalogs). Large catalogs
-    # carry each entry's ring on its own cover rows (the r3 shape) —
-    # duplicate qids (multi-ring regions) included.
-    unrolled = len(polygons) <= 4 and sum(len(r) for _, r in polygons) <= 160
-    rows = []
-    for qid, ring in polygons:
-        cells = h3_polyfill(ring, res).view("int64").tolist()
-        if unrolled:
-            rows.extend((int(qid), int(cell)) for cell in cells)
-        else:
-            arr = [{"lon": float(x), "lat": float(y)} for x, y in ring]
-            rows.extend((int(qid), int(cell), arr) for cell in cells)
-    if unrolled:
-        cover = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["qid", "__cell"]), "qid long, __cell long"
-        )
-        cand = keyed.join(F.broadcast(cover), "__cell")
-        refine = None
-        for qid, ring in polygons:
-            cond = (F.col("qid") == F.lit(int(qid))) & point_in_polygon_literal(
-                F.col(lon), F.col(lat), ring
-            )
-            refine = cond if refine is None else refine | cond
-        return cand.filter(refine).drop("__cell")
-    rcover = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["qid", "__cell", "__ring"]),
-        "qid long, __cell long, __ring array<struct<lon: double, lat: double>>",
-    )
-    cand = keyed.join(F.broadcast(rcover), "__cell")
-    return (
-        cand.filter(point_in_polygon_col(F.col(lon), F.col(lat), F.col("__ring")))
-        .drop("__cell", "__ring")
-    )
-
-
-def h3_cover_bbox(
-    min_lon: float, min_lat: float, max_lon: float, max_lat: float, res: int = 8
-):
-    """Superset cover of a bbox with H3 cells (uint64 array) — polyfill of
-    the rectangle. The planner recipe for bbox scans over a cell-partitioned
-    table (the `cells` CLI layout): filter the partition column with the
-    cover's parents and the fine column with the cover itself — both
-    predicates are partition/row-group pruning, no geometry evaluated until
-    the residual lon/lat refine.
-
-    ``min_lon > max_lon`` means the bbox CROSSES THE ANTIMERIDIAN (the
-    GeoJSON convention); the cover unrolls it to [min_lon, max_lon + 360] —
-    the H3 encoder is wrap-transparent (cos/sin periodicity), so samples
-    beyond +180 encode to the correct west-hemisphere cells (VERDICT r4 #1
-    wrap-aware covers). NB the exact lon refine for a crossing bbox is the
-    DISJUNCTION (lon >= min_lon) OR (lon <= max_lon) —
-    bbox_scan_h3_partitioned applies it; hand-rolled refines must too."""
-    if max_lon < min_lon:
-        max_lon += 360.0
-    ring = [
-        (min_lon, min_lat),
-        (max_lon, min_lat),
-        (max_lon, max_lat),
-        (min_lon, max_lat),
-    ]
-    return h3_polyfill(ring, res)
-
-
-def _merged_ranges(ranges: list[tuple[int, int]], cap: int) -> list[tuple[int, int]]:
-    """Sort, merge overlapping/adjacent id ranges, then greedily close the
-    smallest gaps until at most ``cap`` ranges remain. Closing a gap only
-    widens the prune (extra ids pass to the exact refine), never drops rows
-    — so the cap trades read amplification for bounded plan size."""
-    ranges = sorted(ranges)
-    merged = [list(ranges[0])]
-    for lo, hi in ranges[1:]:
-        if lo <= merged[-1][1] + 1:
-            merged[-1][1] = max(merged[-1][1], hi)
-        else:
-            merged.append([lo, hi])
-    while len(merged) > cap:
-        gaps = sorted(
-            (merged[i + 1][0] - merged[i][1], i) for i in range(len(merged) - 1)
-        )
-        n_close = len(merged) - cap
-        close = {i for _, i in gaps[:n_close]}
-        out = [merged[0]]
-        for i in range(1, len(merged)):
-            if i - 1 in close:
-                out[-1][1] = merged[i][1]
-            else:
-                out.append(merged[i])
-        merged = out
-    return [(lo, hi) for lo, hi in merged]
-
-
-def h3_cover_bbox_compact(
-    min_lon: float,
-    min_lat: float,
-    max_lon: float,
-    max_lat: float,
-    res: int = 8,
-    max_cells: int = 4096,
-) -> tuple[list[int], int]:
-    """Compacted superset cover of a bbox: polyfill at ``res``, coarsening
-    the resolution while the COMPACTED cover exceeds ``max_cells`` (or the
-    sampler's budget), then driver-side H3 compaction. A coarser cover is a
-    superset — callers always refine with the exact lon/lat predicate — so
-    a continental bbox costs a few hundred mixed-res cells instead of
-    millions of fine literals (the r3 plan-size blowup; the reference's
-    equivalent is a min/max cell range, grid_reader.go:41-42). Returns
-    (compacted cells, effective resolution used)."""
-    from simple_osm_queries_spark.functions import h3 as H
-
-    for r in range(res, -1, -1):
-        try:
-            cover = h3_cover_bbox(min_lon, min_lat, max_lon, max_lat, r)
-        except ValueError:
-            continue  # sample budget exceeded: coarsen
-        compacted = H.compact_cells_py(cover.tolist())
-        if len(compacted) <= max_cells or r == 0:
-            return compacted, r
-    raise AssertionError("unreachable: res 0 cover is always <= 122 cells")
-
-
-def bbox_scan_h3_partitioned(
-    df: DataFrame,
-    min_lon: float,
-    min_lat: float,
-    max_lon: float,
-    max_lat: float,
-    res: int = 8,
-    partition_res: int = 4,
-    lon: str = "lon",
-    lat: str = "lat",
-    cell_col: str = "h3",
-    part_col: str = "h3_part",
-    max_ranges: int = 128,
-) -> DataFrame:
-    """bbox query over a `cells`-CLI-partitioned table with THREE pruning
-    tiers: partition directories (cell-id ranges on the coarse H3 partition
-    column), parquet row groups (cell-id ranges on the fine column, sorted
-    within files), then the exact lon/lat refine. The read touches only the
-    bbox's cell directories — the distributed equivalent of the reference's
-    per-cell file scan (/root/reference/src/index/grid_reader.go:39-78).
-
-    Plan size is BOUNDED regardless of bbox extent: the cover is compacted
-    (h3_cover_bbox_compact) and each compacted cell becomes a min/max id
-    range over its descendants (functions/h3.child_range_py), merged down
-    to at most ``max_ranges`` BETWEEN terms per tier — a hemisphere bbox
-    compiles to the same plan shape as a city block, mirroring the
-    reference's min/max cell range scan (grid_reader.go:41-42).
-
-    ``min_lon > max_lon`` is an antimeridian-crossing bbox (the GeoJSON
-    convention h3_cover_bbox accepts): the cell tiers cover the wrap via
-    the unrolled polyfill, and the lon refine becomes the disjunction
-    (lon >= min_lon) OR (lon <= max_lon) — a conjunction would be
-    unsatisfiable and silently drop every row (code-review r5 finding)."""
-    from simple_osm_queries_spark.functions import h3 as H
-
-    compacted, _eff = h3_cover_bbox_compact(min_lon, min_lat, max_lon, max_lat, res)
-    fine_ranges = []
-    part_ranges = []
-    for c in compacted:
-        rc = H.resolution_py(c)
-        fine_ranges.append(H.child_range_py(c, res) if rc <= res else (c, c))
-        if rc <= partition_res:
-            part_ranges.append(H.child_range_py(c, partition_res))
-        else:
-            p = H.parent_py(c, partition_res)
-            part_ranges.append((p, p))
-
-    def _pred(col: str, ranges: list[tuple[int, int]]):
-        out = None
-        for lo, hi in _merged_ranges(ranges, max_ranges):
-            term = F.col(col).between(int(np.int64(np.uint64(lo))), int(np.int64(np.uint64(hi))))
-            out = term if out is None else out | term
-        return out
-
-    if max_lon < min_lon:  # antimeridian crossing
-        lon_refine = (F.col(lon) >= min_lon) | (F.col(lon) <= max_lon)
-    else:
-        lon_refine = (F.col(lon) >= min_lon) & (F.col(lon) <= max_lon)
-    return df.filter(
-        _pred(part_col, part_ranges)
-        & _pred(cell_col, fine_ranges)
-        & lon_refine
-        & (F.col(lat) >= min_lat) & (F.col(lat) <= max_lat)
-    )
+    cand = keyed.join(F.broadcast(cells), "__cell", "left_semi").drop("__cell")
+    return _literal_refine(cand, polygons, lon, lat)

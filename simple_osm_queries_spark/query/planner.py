@@ -201,19 +201,12 @@ def _scope_inner_by_outer_rect(
             F.max(F.col("min_lon").isNull()).alias("__o_unbounded"),
         )
     scoped = inner_df.crossJoin(F.broadcast(rect))
+    rect_cols = [F.col(c) for c in ("__omin_lon", "__omin_lat", "__omax_lon", "__omax_lat")]
     if inner_base == "node":
-        keep = (
-            (F.col("lon") >= F.col("__omin_lon"))
-            & (F.col("lon") <= F.col("__omax_lon"))
-            & (F.col("lat") >= F.col("__omin_lat"))
-            & (F.col("lat") <= F.col("__omax_lat"))
-        )
+        keep = G.point_in_bbox(F.col("lon"), F.col("lat"), *rect_cols)
     else:  # way / relation: bound-rectangle intersection
-        keep = (
-            (F.col("min_lon") <= F.col("__omax_lon"))
-            & (F.col("max_lon") >= F.col("__omin_lon"))
-            & (F.col("min_lat") <= F.col("__omax_lat"))
-            & (F.col("max_lat") >= F.col("__omin_lat"))
+        keep = G.bbox_intersects(
+            F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"), *rect_cols
         )
     return scoped.filter(
         F.coalesce(F.col("__o_unbounded"), F.lit(True)) | F.coalesce(keep, F.lit(True))
@@ -294,12 +287,7 @@ def _bbox_predicate(df: DataFrame, bbox: ast.Bbox, object_type: str, dataset: Os
         cmin_x, cmin_y, cmax_x, cmax_y = C.cover_bbox_py(
             bbox.min_lon, bbox.min_lat, bbox.max_lon, bbox.max_lat, dataset.cell_w, dataset.cell_h
         )
-        prune = (
-            (F.col("cell_x") >= F.lit(cmin_x))
-            & (F.col("cell_x") <= F.lit(cmax_x))
-            & (F.col("cell_y") >= F.lit(cmin_y))
-            & (F.col("cell_y") <= F.lit(cmax_y))
-        )
+        prune = G.point_in_bbox(F.col("cell_x"), F.col("cell_y"), cmin_x, cmin_y, cmax_x, cmax_y)
         refine = G.point_in_bbox(
             F.col("lon"), F.col("lat"), bbox.min_lon, bbox.min_lat, bbox.max_lon, bbox.max_lat
         )

@@ -309,6 +309,31 @@ def parse_exif(jpeg: bytes) -> dict:
     return out
 
 
+_ICC_LABEL = b"ICC_PROFILE\x00"
+
+
+def _icc_profile_valid(chunks: list[bytes]) -> bool:
+    """ICC APP2 sanity check (ICC.1 Annex B.4 chunking). Each chunk is
+    ``ICC_PROFILE\\0 <seq:1> <count:1> <profile bytes>``. Valid iff the
+    sequence numbers are exactly 1..count with one shared count, and the
+    reassembled profile's header holds: its big-endian size field (bytes
+    0-3) equals the summed chunk payload length, and bytes 36-39 are the
+    ``acsp`` signature."""
+    n = len(_ICC_LABEL)
+    if any(len(c) < n + 2 for c in chunks):
+        return False
+    count = chunks[0][n + 1]
+    seqs = sorted(c[n] for c in chunks)
+    if seqs != list(range(1, count + 1)) or any(c[n + 1] != count for c in chunks):
+        return False
+    profile = b"".join(c[n + 2 :] for c in sorted(chunks, key=lambda c: c[n]))
+    return (
+        len(profile) >= 40
+        and struct.unpack_from(">I", profile)[0] == len(profile)
+        and profile[36:40] == b"acsp"
+    )
+
+
 @_codec_guard("JPEG")
 def strip_metadata(jpeg: bytes) -> bytes:
     """Drop every APP1..APP15 and COM segment (keep APP0/JFIF and all
@@ -316,25 +341,35 @@ def strip_metadata(jpeg: bytes) -> bytes:
     and other PII-bearing metadata while leaving the entropy-coded image
     byte-identical.
 
-    Two color-critical (and PII-free) APPn payloads are whitelisted: the
-    Adobe APP14 transform flag (without it a conformant decoder may
-    misread the component transform of Adobe-encoded streams, changing
-    the rendered colors of byte-identical entropy data) and APP2 ICC
-    profiles (color space definition). Every other APPn/COM payload —
-    Exif, XMP, Photoshop IRB, comments — is dropped."""
+    Two color-critical APPn payloads are whitelisted: the Adobe APP14
+    transform flag (without it a conformant decoder may misread the
+    component transform of Adobe-encoded streams, changing the rendered
+    colors of byte-identical entropy data) and APP2 ICC profiles (color
+    space definition). The ICC segments survive only as a set that passes
+    ``_icc_profile_valid``; otherwise every one of them is dropped, so an
+    arbitrary payload cannot ride through under a forged ``ICC_PROFILE``
+    label. A valid profile is kept whole: the creation date in its header
+    and any description or copyright text tags survive the scrub. Every
+    other APPn/COM payload — Exif, XMP, Photoshop IRB, comments — is
+    dropped."""
+    segs = []
+    for marker, s, epos in _segments(jpeg):
+        segs.append((marker, s, epos, jpeg[s + 4 : epos]))
+        if marker == 0xDA:
+            break
+    icc = [p for m, _s, _e, p in segs if m == 0xE2 and p.startswith(_ICC_LABEL)]
+    keep_icc = bool(icc) and _icc_profile_valid(icc)
     out = bytearray(b"\xff\xd8")
     tail_from = len(jpeg)
-    for marker, s, epos in _segments(jpeg):
+    for marker, s, epos, payload in segs:
         if 0xE1 <= marker <= 0xEF or marker == 0xFE:
-            payload = jpeg[s + 4 : epos]
-            keep_color = (
-                marker == 0xEE and payload[:5] == b"Adobe"
-            ) or (marker == 0xE2 and payload[:12] == b"ICC_PROFILE\x00")
+            keep_color = (marker == 0xEE and payload[:5] == b"Adobe") or (
+                keep_icc and marker == 0xE2 and payload.startswith(_ICC_LABEL)
+            )
             if not keep_color:
                 continue
         out += jpeg[s:epos]
         if marker == 0xDA:
             tail_from = epos
-            break
     out += jpeg[tail_from:]
     return bytes(out)

@@ -20,9 +20,10 @@ import json
 import math
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from simple_osm_queries_spark.functions import geometry as G
 from simple_osm_queries_spark.query.parser import ParseError, parse_query
 from simple_osm_queries_spark.query.planner import PlanError, plan_query
 from simple_osm_queries_spark.sources.dataset import OsmDataset
@@ -35,6 +36,19 @@ DEFAULT_MAX_ROWS = 100_000
 # GET /cells cap on the ESTIMATED cell count (bbox area / cell area at res):
 # a planet bbox at res 12 would otherwise group+collect millions of rows.
 DEFAULT_MAX_CELLS = 50_000
+
+
+def _contains(min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
+    """Node rows inside the inclusive bbox."""
+    return G.point_in_bbox(F.col("lon"), F.col("lat"), min_lon, min_lat, max_lon, max_lat)
+
+
+def _overlaps(min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
+    """Way / relation rows whose bounds meet the inclusive bbox."""
+    return G.bbox_intersects(
+        F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"),
+        min_lon, min_lat, max_lon, max_lat,
+    )
 
 
 @functools.cache
@@ -114,10 +128,7 @@ def make_handler(
                     M_PER_DEG * math.cos(math.radians(min(abs(lat), 89.0)))
                 )
                 cand = dataset.ways.filter(
-                    (F.col("min_lon") <= lon + d_lon)
-                    & (F.col("max_lon") >= lon - d_lon)
-                    & (F.col("min_lat") <= lat + d_lat)
-                    & (F.col("max_lat") >= lat - d_lat)
+                    _overlaps(lon - d_lon, lat - d_lat, lon + d_lon, lat + d_lat)
                 ).select(
                     "id", "nodes", "min_lon", "min_lat", "max_lon", "max_lat"
                 )
@@ -225,32 +236,22 @@ def make_handler(
                 )
                 want = C.tile_id_py(x, y, z)
                 pre = dataset.nodes.where(
-                    (F.col("lon") >= lon0)
-                    & (F.col("lon") <= lon1)
-                    & (F.col("lat") >= lat0)
-                    & (F.col("lat") <= lat1)
+                    _contains(lon0, lat0, lon1, lat1)
                 ).where(C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(want))
                 if fmt == "mvt":
                     # ways/relations: bbox-overlap prefilter (their bbox
                     # columns reach parquet min-max pruning), fan-out
                     # membership decides; skip-not-raise — one continental
                     # feature must not 500 the tile
-                    def overlapping(frame: DataFrame) -> DataFrame:
-                        return frame.where(
-                            (F.col("min_lon") <= lon1)
-                            & (F.col("max_lon") >= lon0)
-                            & (F.col("min_lat") <= lat1)
-                            & (F.col("max_lat") >= lat0)
-                        )
-
+                    meets = _overlaps(lon0, lat0, lon1, lat1)
                     layers = [
                         tile_vectors(pre.select("id", "lon", "lat", "tags"), z, cap=max_rows),
                         tile_vectors_ways(
-                            overlapping(dataset.ways), z, cap=max_rows,
+                            dataset.ways.where(meets), z, cap=max_rows,
                             oversize="skip", simplify_tol=simplify,
                         ),
                         tile_vectors_relations(
-                            overlapping(dataset.relations), z, cap=max_rows, oversize="skip"
+                            dataset.relations.where(meets), z, cap=max_rows, oversize="skip"
                         ),
                     ]
                 else:
@@ -333,10 +334,7 @@ def make_handler(
                 return
             try:
                 rows = (
-                    dataset.nodes.filter(
-                        (F.col("lon") >= x1) & (F.col("lon") <= x2)
-                        & (F.col("lat") >= y1) & (F.col("lat") <= y2)
-                    )
+                    dataset.nodes.filter(_contains(x1, y1, x2, y2))
                     .groupBy(C.cell_h3(F.col("lon"), F.col("lat"), res).alias("cell"))
                     .agg(F.count("*").alias("n"))
                     .collect()

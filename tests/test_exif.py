@@ -117,6 +117,48 @@ def test_strip_metadata():
     assert set(markers) >= ({0xE0} & set(m for m, _s, _e in exif._segments(jpg)))
 
 
+def _icc_profile() -> bytes:
+    """Minimal well-formed ICC profile: a 128-byte header whose size field
+    matches and whose bytes 36-39 are the 'acsp' signature, plus an empty
+    tag table."""
+    import struct
+
+    body = bytearray(132)
+    struct.pack_into(">I", body, 0, len(body))
+    body[36:40] = b"acsp"
+    return bytes(body)
+
+
+def test_strip_metadata_icc_sanity_check():
+    """ICC APP2 segments survive only as a well-formed chunk set: a payload
+    spliced in under a forged ICC_PROFILE label is dropped, and so is a
+    real profile whose chunk numbering is broken; a profile split over two
+    chunks is kept."""
+    import struct
+
+    jpg, _ = _jpeg(10)
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+    def icc_segments(j: bytes) -> list[bytes]:
+        return [j[s + 4 : e] for m, s, e in exif._segments(j) if m == 0xE2]
+
+    prof = _icc_profile()
+    label = b"ICC_PROFILE\x00"
+    two = seg(0xE2, label + b"\x01\x02" + prof[:50]) + seg(0xE2, label + b"\x02\x02" + prof[50:])
+    forged = seg(0xE2, label + b"\x01\x01" + b"lat=53.5 lon=10.0 owner=alice")
+    bad_seq = seg(0xE2, label + b"\x02\x01" + prof)
+    kept = icc_segments(exif.strip_metadata(jpg[:2] + two + jpg[2:]))
+    assert b"".join(c[len(label) + 2 :] for c in kept) == prof
+    for extra in (forged, bad_seq, two + forged):
+        assert icc_segments(exif.strip_metadata(jpg[:2] + extra + jpg[2:])) == [], extra
+    assert np.array_equal(
+        codecs.decode_image(exif.strip_metadata(jpg[:2] + forged + jpg[2:]), "jpeg"),
+        codecs.decode_image(jpg, "jpeg"),
+    )
+
+
 def test_strip_metadata_keeps_color_segments():
     """ADVICE r5: the scrub must keep the Adobe APP14 transform flag and
     APP2 ICC profiles (color-critical, PII-free) while still dropping
@@ -130,7 +172,7 @@ def test_strip_metadata_keeps_color_segments():
         return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
 
     adobe = seg(0xEE, b"Adobe" + b"\x00\x64\x00\x00\x00\x00\x01")
-    icc = seg(0xE2, b"ICC_PROFILE\x00\x01\x01" + b"\x00" * 16)
+    icc = seg(0xE2, b"ICC_PROFILE\x00\x01\x01" + _icc_profile())
     fpx = seg(0xE2, b"FPXR\x00" + b"\x00" * 8)  # non-ICC APP2: must drop
     com = seg(0xFE, b"a comment")
     # splice after SOI, before the rest of the header

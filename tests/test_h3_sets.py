@@ -148,31 +148,6 @@ def test_h3_pyramid_matches_per_level_recompute(spark, dataset):
     assert total_by_res[6] == total_by_res[7] == pts2.count()
 
 
-def test_merged_ranges_superset_and_capped():
-    """Gap-closing may only WIDEN coverage and must respect the cap."""
-    import random
-
-    from simple_osm_queries_spark.operators.spatial_join import _merged_ranges
-
-    rng = random.Random(17)
-    for _ in range(50):
-        n = rng.randint(1, 200)
-        ranges = []
-        for _ in range(n):
-            lo = rng.randint(0, 10_000)
-            ranges.append((lo, lo + rng.randint(0, 50)))
-        cap = rng.randint(1, 40)
-        merged = _merged_ranges(list(ranges), cap)
-        assert len(merged) <= cap
-        assert merged == sorted(merged)
-        # non-overlapping and non-adjacent output
-        for (a0, a1), (b0, b1) in zip(merged, merged[1:]):
-            assert b0 > a1 + 1
-        # every input id stays covered
-        for lo, hi in ranges:
-            assert any(m0 <= lo and hi <= m1 for m0, m1 in merged), (lo, hi)
-
-
 def test_compact_cells_py_matches_distributed(spark):
     """The plan-time numpy compaction and the distributed DataFrame
     operator implement the same spec — cross-validate them on mixed,
@@ -186,28 +161,3 @@ def test_compact_cells_py_matches_distributed(spark):
         assert dist == local, f"drop={drop}"
 
 
-def test_child_range_py_property():
-    """Range containment == descendant-ship, for random real cells: every
-    digit-constructed descendant falls in [lo, hi]; every same-res
-    NON-descendant valid cell falls outside."""
-    import random
-
-    rng = random.Random(23)
-    base_cells = _cells_fixture(3)
-    for _ in range(200):
-        c = rng.choice(base_cells)
-        rc = H.resolution_py(c)
-        child_res = rng.randint(rc, min(rc + 4, 15))
-        lo, hi = H.child_range_py(c, child_res)
-        # construct a random descendant by appending random digits
-        d = (c & ~(0xF << 52)) | (child_res << 52)
-        d &= ~H._digits_mask(rc + 1, child_res)
-        for i in range(rc + 1, child_res + 1):
-            d |= rng.randint(0, 6) << H._digit_shift(i)
-        assert lo <= d <= hi
-        assert H.parent_py(d, rc) == c
-        # a same-res cell under a DIFFERENT parent is outside the range
-        other = rng.choice([x for x in base_cells if x != c])
-        o = (other & ~(0xF << 52)) | (child_res << 52)
-        o &= ~H._digits_mask(H.resolution_py(other) + 1, child_res)
-        assert not (lo <= o <= hi)

@@ -166,60 +166,6 @@ def test_oversized_disc_fails_at_plan_time(spark, global_points):
         knn.knn_h3(pts, qdf, res=12, disc_deg=5.0)  # equirect path too
 
 
-def test_h3_cover_bbox_wraps_antimeridian():
-    from simple_osm_queries_spark.operators.spatial_join import h3_cover_bbox
-
-    cov = set(h3_cover_bbox(179.9, 10.0, -179.9, 10.2, res=6).tolist())
-    east = E.lnglat_to_cell(np.array([179.95]), np.array([10.1]), 6)[0]
-    west = E.lnglat_to_cell(np.array([-179.95]), np.array([10.1]), 6)[0]
-    outside = E.lnglat_to_cell(np.array([0.0]), np.array([10.1]), 6)[0]
-    assert east in cov and west in cov
-    assert outside not in cov
-
-
-def test_bbox_scan_h3_partitioned_antimeridian(spark, tmp_path):
-    """Code-review r5 regression: the three-tier partitioned bbox scan must
-    apply the DISJUNCTIVE lon refine for a crossing bbox — the conjunctive
-    form is unsatisfiable and silently returned zero rows."""
-    from pyspark.sql import functions as F
-
-    from simple_osm_queries_spark.functions import cells as C
-    from simple_osm_queries_spark.functions import h3 as H
-    from simple_osm_queries_spark.operators.spatial_join import (
-        bbox_scan_h3_partitioned,
-    )
-
-    rows = [
-        (1, 179.95, 10.05),   # east side of the seam, inside
-        (2, -179.95, 10.15),  # west side, inside
-        (3, 179.95, 20.0),    # lat outside
-        (4, 0.0, 10.1),       # lon outside (opposite hemisphere)
-        (5, 170.0, 10.1),     # lon outside (east, before min_lon)
-    ]
-    df = spark.createDataFrame(rows, "id long, lon double, lat double")
-    keyed = df.select(
-        "*",
-        C.cell_h3(F.col("lon"), F.col("lat"), 8).alias("h3"),
-    ).withColumn("h3_part", H.parent(F.col("h3"), 4))
-    out = str(tmp_path / "am_cells")
-    keyed.write.mode("overwrite").partitionBy("h3_part").parquet(out)
-    got = sorted(
-        r.id
-        for r in bbox_scan_h3_partitioned(
-            spark.read.parquet(out), 179.9, 10.0, -179.9, 10.2, res=8
-        ).collect()
-    )
-    assert got == [1, 2], got
-    # non-crossing behavior unchanged
-    got2 = sorted(
-        r.id
-        for r in bbox_scan_h3_partitioned(
-            spark.read.parquet(out), 169.0, 10.0, 179.99, 10.2, res=8
-        ).collect()
-    )
-    assert got2 == [1, 5], got2
-
-
 def test_mismatched_disc_parameter_rejected(spark, global_points):
     """Code-review r5: passing the OTHER metric's radius parameter must
     raise instead of silently searching a wildly different disc."""

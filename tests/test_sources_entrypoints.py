@@ -356,93 +356,6 @@ def test_http_server_h3_cells_endpoint(ref_dataset):
         httpd.shutdown()
 
 
-def test_bbox_scan_on_cells_layout_prunes_and_matches(spark, tmp_path):
-    """bbox over the cells-CLI layout: three-tier pruning (PartitionFilters
-    on h3_part + fine-cell isin + residual), result equals the naive scan."""
-    import pandas as pd
-
-    from simple_osm_queries_spark import cli
-    from simple_osm_queries_spark.operators.spatial_join import (
-        bbox_scan_h3_partitioned,
-    )
-
-    src = str(tmp_path / "in3.parquet")
-    pdf = pd.DataFrame(
-        {
-            "id": range(400),
-            "lon": [9.0 + (i % 20) * 0.1 for i in range(400)],
-            "lat": [50.0 + (i // 20) * 0.1 for i in range(400)],
-        }
-    )
-    spark.createDataFrame(pdf).write.parquet(src)
-    out = str(tmp_path / "cells3")
-    cli.cmd_cells(
-        spark,
-        type("A", (), {"file": src, "out": out, "h3_res": 8, "s2_level": 12, "zoom": 13, "partition_res": 3})(),
-    )
-    table = spark.read.parquet(out + "/data")
-    bbox = (9.4, 50.4, 9.9, 50.9)
-    q = bbox_scan_h3_partitioned(table, *bbox, res=8, partition_res=3)
-    got = sorted(r.id for r in q.collect())
-    want = sorted(
-        r.id
-        for r in table.filter(
-            (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
-            & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
-        ).collect()
-    )
-    assert got == want and got
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "h3_part" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_bbox_scan_hemisphere_bounded_plan(spark, tmp_path):
-    """VERDICT r3 #3 regression: a hemisphere-sized bbox must compile to a
-    bounded number of range predicates (not millions of isin literals) and
-    return exactly the rows of the naive lon/lat scan."""
-    import pandas as pd
-
-    from simple_osm_queries_spark import cli
-    from simple_osm_queries_spark.operators.spatial_join import (
-        bbox_scan_h3_partitioned,
-        h3_cover_bbox_compact,
-    )
-
-    src = str(tmp_path / "in_hemi.parquet")
-    pdf = pd.DataFrame(
-        {
-            "id": range(500),
-            "lon": [-170.0 + (i % 25) * 14.0 for i in range(500)],
-            "lat": [-80.0 + (i // 25) * 8.0 for i in range(500)],
-        }
-    )
-    spark.createDataFrame(pdf).write.parquet(src)
-    out = str(tmp_path / "cells_hemi")
-    cli.cmd_cells(
-        spark,
-        type("A", (), {"file": src, "out": out, "h3_res": 8, "s2_level": 12, "zoom": 13, "partition_res": 3})(),
-    )
-    table = spark.read.parquet(out + "/data")
-    bbox = (-180.0, -90.0, 0.0, 90.0)  # western hemisphere
-    q = bbox_scan_h3_partitioned(table, *bbox, res=8, partition_res=3)
-    got = sorted(r.id for r in q.collect())
-    want = sorted(
-        r.id
-        for r in table.filter(
-            (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
-            & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
-        ).collect()
-    )
-    assert got == want and got
-    # bounded plan: the compiled predicate tree stays small
-    plan = q._jdf.queryExecution().optimizedPlan().toString()
-    assert len(plan) < 200_000, f"plan blew up to {len(plan)} chars"
-    cells, eff = h3_cover_bbox_compact(*bbox, res=8)
-    assert len(cells) <= 4096
-    assert eff < 8  # the sampler auto-coarsened instead of raising
-
-
 def test_http_server_caps(ref_dataset):
     """VERDICT r3 #5 / ADVICE r3 #3: POST /query truncates at max_rows with
     a truncated flag (toLocalIterator fetch, no unbounded collect); GET

@@ -56,6 +56,11 @@ def points_pd(points):
     return points.toPandas().sort_values("id").reset_index(drop=True)
 
 
+def _id_qid(df):
+    """Sorted (id, qid) rows: a multiset, so duplicated matches show."""
+    return sorted((r.id, r.qid) for r in df.select("id", "qid").collect())
+
+
 def test_bbox_join_matches_oracle(spark, points, points_pd):
     boxes = spark.createDataFrame(
         pd.DataFrame(BBOXES, columns=["qid", "min_lon", "min_lat", "max_lon", "max_lat"])
@@ -439,14 +444,8 @@ def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
     )
 
     catalog = [(0, PENTAGON), (1, STAR)]
-    plain = {
-        (r.id, r.qid)
-        for r in point_in_polygon_literal_join(points, catalog).select("id", "qid").collect()
-    }
-    h3ed = {
-        (r.id, r.qid)
-        for r in point_in_polygon_h3_join(points, catalog, res=8).select("id", "qid").collect()
-    }
+    plain = _id_qid(point_in_polygon_literal_join(points, catalog))
+    h3ed = _id_qid(point_in_polygon_h3_join(points, catalog, res=8))
     assert h3ed == plain and plain
 
 
@@ -492,23 +491,13 @@ def test_precomputed_cell_col_parity(spark, points):
     )
     assert plain == fast
 
-    pplain = {
-        (r.id, r.qid)
-        for r in point_in_polygon_h3_join(points, [(0, PENTAGON)], res=8)
-        .select("id", "qid")
-        .collect()
-    }
-    pfast = {
-        (r.id, r.qid)
-        for r in point_in_polygon_h3_join(keyed, [(0, PENTAGON)], res=8, cell_col="h3a")
-        .select("id", "qid")
-        .collect()
-    }
+    pplain = _id_qid(point_in_polygon_h3_join(points, [(0, PENTAGON)], res=8))
+    pfast = _id_qid(point_in_polygon_h3_join(keyed, [(0, PENTAGON)], res=8, cell_col="h3a"))
     assert pplain == pfast and pplain
 
 
 def test_point_in_polygon_h3_large_catalog(spark, points, points_pd):
-    """>4 polygons takes the ring-map refine path (codegen limit guard);
+    """A catalog past the unroll limits takes the numpy bitmask refine;
     must still match the plain literal join."""
     from simple_osm_queries_spark.operators.spatial_join import (
         point_in_polygon_h3_join,
@@ -519,15 +508,131 @@ def test_point_in_polygon_h3_large_catalog(spark, points, points_pd):
     for j in range(3, 6):
         dx = 0.01 * (j - 2)
         catalog.append((j, [(x + dx, y) for x, y in PENTAGON]))
-    plain = {
-        (r.id, r.qid)
-        for r in point_in_polygon_literal_join(points, catalog).select("id", "qid").collect()
-    }
-    h3ed = {
-        (r.id, r.qid)
-        for r in point_in_polygon_h3_join(points, catalog, res=8).select("id", "qid").collect()
-    }
+    plain = _id_qid(point_in_polygon_literal_join(points, catalog))
+    h3ed = _id_qid(point_in_polygon_h3_join(points, catalog, res=8))
     assert h3ed == plain and plain
+
+
+def _pip_expected(pdf, catalog):
+    """Sorted (id, qid) rows: one per (point, catalog entry containing it)."""
+    return sorted(
+        (int(r.id), qid)
+        for qid, ring in catalog
+        for r in pdf.itertuples()
+        if _pip_oracle(r.lon, r.lat, ring)
+    )
+
+
+def test_point_in_polygon_h3_repeated_qid_no_duplicates(spark):
+    """Two entries sharing a qid (a multi-ring region: adjacent 0.01 degree
+    squares) must give each point one row per containing entry, as the
+    literal join does — a point whose cell both covers hold used to come out
+    twice."""
+    from simple_osm_queries_spark.operators.spatial_join import (
+        point_in_polygon_h3_join,
+        point_in_polygon_literal_join,
+    )
+
+    west = [(10.00, 53.60), (10.01, 53.60), (10.01, 53.61), (10.00, 53.61)]
+    east = [(10.01, 53.60), (10.02, 53.60), (10.02, 53.61), (10.01, 53.61)]
+    catalog = [(5, west), (5, east)]
+    pdf = pd.DataFrame(
+        [(i * 20 + j, 9.9985 + 0.00123 * i, 53.5995 + 0.00061 * j)
+         for i in range(20) for j in range(20)],
+        columns=["id", "lon", "lat"],
+    )
+    pts = spark.createDataFrame(pdf, "id long, lon double, lat double")
+    want = _pip_expected(pdf, catalog)
+    assert len(set(want)) == len(want) > 200
+    assert _id_qid(point_in_polygon_literal_join(pts, catalog)) == want
+    assert _id_qid(point_in_polygon_h3_join(pts, catalog, res=8)) == want
+
+
+def test_literal_catalog_over_64_polygons(spark):
+    """70 disjoint squares, one point in each: the hit bitmask spans two
+    int64 words, so entries 64-69 are neither dropped nor aliased onto
+    entries 0-5."""
+    from simple_osm_queries_spark.operators.spatial_join import (
+        point_in_polygon_h3_join,
+        point_in_polygon_literal_join,
+    )
+
+    def square(x):
+        return [(x, 53.6), (x + 0.001, 53.6), (x + 0.001, 53.601), (x, 53.601)]
+
+    catalog = [(100 + q, square(9.9 + 0.002 * q)) for q in range(70)]
+    pdf = pd.DataFrame(
+        [(q, 9.9 + 0.002 * q + 0.0005, 53.6005) for q in range(70)],
+        columns=["id", "lon", "lat"],
+    )
+    pts = spark.createDataFrame(pdf, "id long, lon double, lat double")
+    want = _pip_expected(pdf, catalog)
+    assert want == [(q, 100 + q) for q in range(70)]
+    assert _id_qid(point_in_polygon_literal_join(pts, catalog)) == want
+    assert _id_qid(point_in_polygon_h3_join(pts, catalog, res=8)) == want
+
+
+PIP_PLAN_COUNTED = (
+    "ArrowEvalPython", "BroadcastHashJoin", "BroadcastNestedLoopJoin",
+    "CartesianProduct", "Exchange",
+)
+
+
+def _ring_table(spark, catalog):
+    return spark.createDataFrame(
+        [(q, [{"lon": x, "lat": y} for x, y in ring]) for q, ring in catalog],
+        "qid long, ring array<struct<lon:double,lat:double>>",
+    )
+
+
+PIP_PLAN_CASES = {
+    "bbox_join": (lambda s, p: spatial_join.bbox_join(p, s.createDataFrame(
+        pd.DataFrame(BBOXES, columns=["qid", "min_lon", "min_lat", "max_lon", "max_lat"]))),
+        (0, 0, 1, 0, 0)),
+    "point_in_polygon_join": (lambda s, p: spatial_join.point_in_polygon_join(
+        p, _ring_table(s, [(0, PENTAGON), (1, STAR)])), (0, 0, 1, 0, 0)),
+    # map-side partial aggregate, one exchange on qid
+    "zonal_stats": (lambda s, p: spatial_join.zonal_stats(
+        p, _ring_table(s, [(0, PENTAGON), (1, STAR)])), (0, 0, 1, 0, 1)),
+    # unrolled: no Python at all
+    "literal-1": (lambda s, p: spatial_join.point_in_polygon_literal_join(
+        p, [(0, PENTAGON)]), (0, 0, 0, 0, 0)),
+    # numpy bitmask: ONE evaluation of the mask UDF (asNondeterministic)
+    "literal-3": (lambda s, p: spatial_join.point_in_polygon_literal_join(
+        p, [(0, PENTAGON), (1, STAR), (2, CROSSING)]), (1, 0, 0, 0, 0)),
+    # the cell encode, then the broadcast semi join on the cover
+    "h3-1": (lambda s, p: spatial_join.point_in_polygon_h3_join(
+        p, [(0, PENTAGON)], res=8), (1, 1, 0, 0, 0)),
+    "h3-3": (lambda s, p: spatial_join.point_in_polygon_h3_join(
+        p, [(0, PENTAGON), (1, STAR), (2, CROSSING)], res=8), (2, 1, 0, 0, 0)),
+    "h3-cell_col-1": (lambda s, p: spatial_join.point_in_polygon_h3_join(
+        p, [(0, PENTAGON)], res=8, cell_col="h3"), (0, 1, 0, 0, 0)),
+    "h3-cell_col-3": (lambda s, p: spatial_join.point_in_polygon_h3_join(
+        p, [(0, PENTAGON), (1, STAR), (2, CROSSING)], res=8, cell_col="h3"), (1, 1, 0, 0, 0)),
+}
+
+
+@pytest.mark.parametrize("case", list(PIP_PLAN_CASES))
+def test_pip_plan_shape(spark, points_pd, case):
+    """Plan pin for the point-in-polygon family: Python evaluations, the
+    join kinds and the exchanges a call must not grow. Automatic
+    broadcasting is off, so every broadcast comes from the operator's own
+    hint; the points are a local relation (no cached fixture subplan) with
+    a precomputed res-8 ``h3`` column for the cell_col cases."""
+    from simple_osm_queries_spark.functions import h3_encode as E
+
+    pdf = points_pd[["id", "lon", "lat"]].assign(
+        h3=E.lnglat_to_cell(points_pd.lon.to_numpy(), points_pd.lat.to_numpy(), 8).view(np.int64)
+    )
+    pts = spark.createDataFrame(pdf)
+    build, want = PIP_PLAN_CASES[case]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        kinds = [n for n, _ in plan_nodes(build(spark, pts))]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert tuple(kinds.count(k) for k in PIP_PLAN_COUNTED) == want, kinds
 
 
 # --- raster tile rendering (r5b: vector -> raster direction) ----------------
