@@ -458,6 +458,7 @@ def tile_vectors_ways(
     cap: int = 16384,
     oversize: str = "raise",
     simplify_tol: float = 0.0,
+    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for way LINESTRINGs, one MVT layer ``ways`` per tile
     (prepared ways table: ``nodes`` array<struct<id,lon,lat>> + bbox
@@ -481,9 +482,12 @@ def tile_vectors_ways(
     low-zoom planet render feasible: a 10k-vertex river at z4 is a few
     dozen MVT vertices.
 
+    ``tile``: a tile id (cells.tile_id_py) renders only that tile — the
+    other tiles a way covers are dropped before the rank and the render.
+
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
-    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways")
+    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways", tile)
 
     def features(pdf):
         import numpy as np
@@ -514,23 +518,25 @@ def tile_vectors_relations(
     extent: int = 4096,
     cap: int = 16384,
     oversize: str = "raise",
+    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
     per tile — the geometry the reference outputs for relations
     (grid_reader.go:513-517 emits the relation's bounding box as a polygon
     ring; sources/geojson.py:33-45 mirrors it), completing the
     POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
-    fan-out and ``oversize`` modes as tile_vectors_ways; each tile renders
-    the rectangle tile-locally (corners may leave [0, extent) on border
-    tiles — renderers clip), with the ``tags`` map as attributes. The
-    exterior ring is wound positive under the shoelace formula in screen
-    space (y down), as MVT 2.1 requires for an exterior ring.
+    fan-out, ``oversize`` modes and ``tile`` as tile_vectors_ways; each
+    tile renders the rectangle tile-locally (corners may leave [0, extent)
+    on border tiles — renderers clip), with the ``tags`` map as
+    attributes. The exterior ring is wound positive under the shoelace
+    formula in screen space (y down), as MVT 2.1 requires for an exterior
+    ring.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
     ranked, over_cnt = _bbox_tile_fanout(
         relations, zoom, cap, oversize,
-        ["min_lon", "min_lat", "max_lon", "max_lat", "tags"], "relations",
+        ["min_lon", "min_lat", "max_lon", "max_lat", "tags"], "relations", tile,
     )
 
     def features(pdf):
@@ -566,10 +572,13 @@ def _bbox_tile_fanout(
     oversize: str,
     payload_cols: list[str],
     what: str,
+    tile: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(feature -> covered tiles) fan-out shared by the linestring and
     polygon MVT paths: bbox columns -> tile index ranges (column math) ->
-    sequence+explode -> ``_rank_cap``. Returns the ranked
+    sequence+explode -> [keep only ``tile``] -> ``_rank_cap``. The tile
+    filter has to sit here: Catalyst cannot push a filter through the
+    render's FlatMapGroupsInPandas. Returns the ranked
     (tile_id, fid, payload..., tx, ty, rn, n_total) frame and, for
     oversize='skip', the lazy 1-row ``n_oversize`` count for
     _attach_oversize (None for 'raise', where a nonzero count raised)."""
@@ -602,9 +611,8 @@ def _bbox_tile_fanout(
                 "(lower zoom, or pass oversize='skip')"
             )
     else:
-        # 'skip' (ADVICE r5): no plan-build-time Spark job — the count is
-        # attached lazily as a broadcast 1-row aggregate, so a
-        # /tiles/{z}/{x}/{y} request runs ONE action instead of three
+        # 'skip': no plan-build-time Spark job — the count is attached
+        # lazily as a scalar subquery (_attach_oversize)
         over_cnt = oversized.agg(F.count("*").alias("n_oversize"))
     fanned = (
         sized.filter(F.col("n_tiles") <= MAX_COVER)
@@ -618,21 +626,21 @@ def _bbox_tile_fanout(
             "ty",
         )
     )
+    if tile is not None:
+        fanned = fanned.where(F.col("tile_id") == F.lit(tile))
     return _rank_cap(fanned, cap), over_cnt
 
 
 def _attach_oversize(out: DataFrame, over_cnt: DataFrame | None) -> DataFrame:
     """Add ``n_oversize`` (features dropped as oversize) to every tile row:
     0 for 'raise', which already verified the count eagerly; for 'skip'
-    the count rides in as a broadcast 1-row aggregate evaluated in the
-    SAME action as the tile render (ADVICE r5), not as a blocking count()
-    job at plan-build time."""
-    if over_cnt is None:
-        out = out.withColumn("n_oversize", F.lit(0).cast("long"))
-    else:
-        out = out.crossJoin(F.broadcast(over_cnt))
+    the count is a scalar subquery evaluated in the SAME action as the
+    tile render, and column pruning drops it (no job at all) when the
+    caller selects only ``mvt``, as the /tiles route does."""
+    n_over = F.lit(0).cast("long") if over_cnt is None else over_cnt.scalar()
     return out.select(
-        "tile_id", "zoom", "tx", "ty", "n_features", "n_total", "n_oversize", "mvt"
+        "tile_id", "zoom", "tx", "ty", "n_features", "n_total",
+        n_over.alias("n_oversize"), "mvt",
     )
 
 

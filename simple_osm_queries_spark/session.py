@@ -66,6 +66,23 @@ def get_spark(
         # the limit lets the JIT compile them (standard Spark prod setting)
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
+        # generated-class cache (LRU; Spark's default holds 100). Measured
+        # with perfbench: at 100 entries one cycle of the HTTP routes (two
+        # queries, one .mvt, one /cells) compiled 122 classes and one
+        # rotation of the batch operators 146, on every repeat: each class
+        # was evicted before its next use, so every request recompiled and
+        # re-JITted all of its code. With room to keep them the two hold
+        # 112 + 120 distinct classes, and a repeated cycle or rotation
+        # compiles ~4 (e.g. the row cap's LocalLimit in each branch of a
+        # multi-statement query names its counter from a process-wide
+        # sequence, so its stage is new code on every run)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # the cache key is the generated source, and by default the class
+        # name carries the codegen stage number: a query's second run
+        # numbered its stages differently from its first and missed the
+        # cache for 16 of the two-statement query's classes, and a stage
+        # whose code another query had built could not reuse it
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Iceberg catalog for the build_index(backend="iceberg") path.
         # Declaring the catalog is harmless without the jar (it only fails
         # on first use); WITH iceberg-spark-runtime-4.x on the classpath the

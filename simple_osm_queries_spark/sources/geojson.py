@@ -54,32 +54,16 @@ def to_geojson(result: DataFrame) -> dict:
 
 
 def to_geojson_capped(result: DataFrame, max_rows: int) -> dict:
-    """FeatureCollection bounded to ``max_rows`` features, fetched through
-    ``toLocalIterator`` (partition-at-a-time — the driver never holds more
-    than one partition plus the capped feature list, unlike the reference's
-    unbounded full-result write, api.go:117). When the cap cuts the result
-    the collection carries ``"truncated": true``."""
-    feats = []
-    truncated = False
-    it = result.toLocalIterator()
-    try:
-        for row in it:
-            if len(feats) >= max_rows:
-                truncated = True
-                break
-            feats.append(_feature_dict(row))
-    finally:
-        # close UNCONDITIONALLY (ADVICE r5): breaking out of (or raising
-        # inside) toLocalIterator leaves the serving socket and the
-        # remaining partition jobs alive until GC; repeated truncated or
-        # failing queries under the threaded HTTP server would accumulate
-        # abandoned collect jobs. close() after exhaustion is a no-op.
-        try:
-            it.close()
-        except Exception:
-            pass  # older PySpark iterators may not support close()
-    fc: dict = {"type": "FeatureCollection", "features": feats}
-    if truncated:
+    """FeatureCollection bounded to ``max_rows`` features, fetched in one
+    action of at most ``max_rows + 1`` rows (the driver never holds more,
+    unlike the reference's unbounded full-result write, api.go:117). When
+    the cap cuts the result the collection carries ``"truncated": true``."""
+    rows = result.limit(max_rows + 1).collect()
+    fc: dict = {
+        "type": "FeatureCollection",
+        "features": [_feature_dict(r) for r in rows[:max_rows]],
+    }
+    if len(rows) > max_rows:
         fc["truncated"] = True
     return fc
 

@@ -31,7 +31,7 @@ from simple_osm_queries_spark.sources.geojson import to_geojson_capped
 
 # POST /query result cap: the reference streams the FULL GeoJSON result into
 # one response (api.go:117) — a planet-wide wildcard query OOMs the driver.
-# We fetch via toLocalIterator and stop at the cap, flagging "truncated".
+# We fetch at most cap + 1 rows in one action, flagging "truncated".
 DEFAULT_MAX_ROWS = 100_000
 # GET /cells cap on the ESTIMATED cell count (bbox area / cell area at res):
 # a planet bbox at res 12 would otherwise group+collect millions of rows.
@@ -49,6 +49,63 @@ def _overlaps(min_lon: float, min_lat: float, max_lon: float, max_lat: float) ->
         F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"),
         min_lon, min_lat, max_lon, max_lat,
     )
+
+
+def _tile_frame(
+    dataset: OsmDataset, z: int, x: int, y: int, fmt: str, simplify: float, cap: int
+) -> DataFrame:
+    """The one-column (``fmt``) frame of GET /tiles/{z}/{x}/{y}.{fmt}: one
+    PNG, or one MVT layer blob per non-empty layer in nodes -> ways ->
+    relations order (union keeps its children's partition order). Only
+    tile (x, y) is ever ranked and encoded: the nodes are filtered to it
+    and the ways/relations fan-out keeps only it (``tile=``)."""
+    from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.operators.tiles import (
+        tile_heatmap,
+        tile_vectors,
+        tile_vectors_relations,
+        tile_vectors_ways,
+    )
+
+    n = 1 << z
+    # Membership truth is the ENGINE's projection (tile_of == want), not
+    # driver-math bbox inequalities: tile_fxy clamps lat beyond ±85.05°
+    # into the edge rows and lon=180 into the last column, and the
+    # driver-side inverse-Mercator bbox is not guaranteed to be the
+    # bit-exact inverse of the Spark expression. The bbox (widened by ε,
+    # unbounded at clamped edges) remains as a PREFILTER only — it is what
+    # reaches parquet/Iceberg min-max pruning; the exact tile_of equality
+    # on top decides membership.
+    eps = 1e-7
+    lon0 = -180.0 if x == 0 else x / n * 360.0 - 180.0 - eps
+    lon1 = 180.0 if x == n - 1 else (x + 1) / n * 360.0 - 180.0 + eps
+    lat1 = 90.0 if y == 0 else math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * y / n)))) + eps
+    lat0 = (
+        -90.0
+        if y == n - 1
+        else math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * (y + 1) / n)))) - eps
+    )
+    want = C.tile_id_py(x, y, z)
+    pre = dataset.nodes.where(_contains(lon0, lat0, lon1, lat1)).where(
+        C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(want)
+    )
+    if fmt == "png":
+        return tile_heatmap(pre.select("lon", "lat"), z, 256).select(fmt)
+    # ways/relations: bbox-overlap prefilter (their bbox columns reach
+    # parquet min-max pruning), fan-out membership decides; skip-not-raise
+    # — one continental feature must not 500 the tile
+    meets = _overlaps(lon0, lat0, lon1, lat1)
+    layers = [
+        tile_vectors(pre.select("id", "lon", "lat", "tags"), z, cap=cap),
+        tile_vectors_ways(
+            dataset.ways.where(meets), z, cap=cap, oversize="skip",
+            simplify_tol=simplify, tile=want,
+        ),
+        tile_vectors_relations(
+            dataset.relations.where(meets), z, cap=cap, oversize="skip", tile=want
+        ),
+    ]
+    return functools.reduce(DataFrame.union, [t.select(fmt) for t in layers])
 
 
 @functools.cache
@@ -174,14 +231,6 @@ def make_handler(
             import re
             from urllib.parse import parse_qs, urlparse
 
-            from simple_osm_queries_spark.functions import cells as C
-            from simple_osm_queries_spark.operators.tiles import (
-                tile_heatmap,
-                tile_vectors,
-                tile_vectors_relations,
-                tile_vectors_ways,
-            )
-
             # slippy-map clients append cache-busting/auth query strings
             # (.../{z}/{x}/{y}.png?v=2) — match on the path component only
             url = urlparse(self.path)
@@ -204,69 +253,10 @@ def make_handler(
             if z > 22 or x >= 1 << z or y >= 1 << z:
                 self._error(400, "tile out of range")
                 return
-            n = 1 << z
             try:
-                # Membership truth is the ENGINE's projection (tile_of ==
-                # want), not driver-math bbox inequalities: tile_fxy clamps
-                # lat beyond ±85.05° into the edge rows and lon=180 into the
-                # last column, and the driver-side inverse-Mercator bbox is
-                # not guaranteed to be the bit-exact inverse of the Spark
-                # expression. The bbox (widened by ε, unbounded at clamped
-                # edges) remains as a PREFILTER only — it is what reaches
-                # parquet/Iceberg min-max pruning; the exact tile_of
-                # equality on top decides membership.
-                eps = 1e-7
-                lon0 = -180.0 if x == 0 else x / n * 360.0 - 180.0 - eps
-                lon1 = 180.0 if x == n - 1 else (x + 1) / n * 360.0 - 180.0 + eps
-                lat1 = (
-                    90.0
-                    if y == 0
-                    else math.degrees(
-                        math.atan(math.sinh(math.pi * (1 - 2 * y / n)))
-                    )
-                    + eps
-                )
-                lat0 = (
-                    -90.0
-                    if y == n - 1
-                    else math.degrees(
-                        math.atan(math.sinh(math.pi * (1 - 2 * (y + 1) / n)))
-                    )
-                    - eps
-                )
-                want = C.tile_id_py(x, y, z)
-                pre = dataset.nodes.where(
-                    _contains(lon0, lat0, lon1, lat1)
-                ).where(C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(want))
-                if fmt == "mvt":
-                    # ways/relations: bbox-overlap prefilter (their bbox
-                    # columns reach parquet min-max pruning), fan-out
-                    # membership decides; skip-not-raise — one continental
-                    # feature must not 500 the tile
-                    meets = _overlaps(lon0, lat0, lon1, lat1)
-                    layers = [
-                        tile_vectors(pre.select("id", "lon", "lat", "tags"), z, cap=max_rows),
-                        tile_vectors_ways(
-                            dataset.ways.where(meets), z, cap=max_rows,
-                            oversize="skip", simplify_tol=simplify,
-                        ),
-                        tile_vectors_relations(
-                            dataset.relations.where(meets), z, cap=max_rows, oversize="skip"
-                        ),
-                    ]
-                else:
-                    layers = [tile_heatmap(pre.select("lon", "lat"), z, 256)]
-                # ONE action for all layers. The tile_id filter runs in
-                # Spark (a way's bbox fans out to many tiles and only one is
-                # wanted), and union keeps its children's partition order,
-                # so the blobs arrive nodes -> ways -> relations. Each
-                # operator's payload column is named after the format.
                 blobs = [
                     bytes(r[0])
-                    for r in functools.reduce(
-                        DataFrame.union,
-                        [t.where(F.col("tile_id") == F.lit(want)).select(fmt) for t in layers],
-                    ).collect()
+                    for r in _tile_frame(dataset, z, x, y, fmt, simplify, max_rows).collect()
                 ]
                 if fmt == "mvt":
                     from simple_osm_queries_spark.sources import mvt

@@ -358,23 +358,34 @@ def test_http_server_h3_cells_endpoint(ref_dataset):
 
 def test_http_server_caps(ref_dataset):
     """VERDICT r3 #5 / ADVICE r3 #3: POST /query truncates at max_rows with
-    a truncated flag (toLocalIterator fetch, no unbounded collect); GET
+    a truncated flag (no unbounded collect), exactly at the boundary: a
+    result of max_rows rows is whole, one of max_rows + 1 is cut; GET
     /cells rejects bboxes whose estimated cell count exceeds the cap."""
     from simple_osm_queries_spark.web import serve
 
-    httpd = serve(ref_dataset, port=18102, max_rows=1, max_cells=50_000)
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    try:
+    def post(port, query):
         req = urllib.request.Request(
-            "http://127.0.0.1:18102/query",
-            data=b"bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=bench }",
-            method="POST",
+            f"http://127.0.0.1:{port}/query", data=query.encode(), method="POST"
         )
         with urllib.request.urlopen(req) as resp:
-            fc = json.loads(resp.read())
+            return json.loads(resp.read())
+
+    benches = "bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=bench }"  # 2 nodes
+    all_three = "bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=* OR natural=* }"
+    httpd = serve(ref_dataset, port=18102, max_rows=1, max_cells=50_000)
+    capped2 = serve(ref_dataset, port=0, max_rows=2)
+    for srv in (httpd, capped2):
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        fc = post(18102, benches)
         assert len(fc["features"]) == 1
         assert fc["truncated"] is True
+
+        port2 = capped2.server_address[1]
+        fc = post(port2, benches)  # exactly max_rows rows
+        assert len(fc["features"]) == 2 and "truncated" not in fc
+        fc = post(port2, all_three)  # max_rows + 1 rows
+        assert len(fc["features"]) == 2 and fc["truncated"] is True
 
         with pytest.raises(urllib.error.HTTPError) as e:
             urllib.request.urlopen(
@@ -384,6 +395,58 @@ def test_http_server_caps(ref_dataset):
         assert json.loads(e.value.read())["error"] == "too many cells"
     finally:
         httpd.shutdown()
+        capped2.shutdown()
+
+
+def test_http_routes_reuse_generated_code(dataset):
+    """A repeated request compiles (almost) no new code: the generated-class
+    cache (session.py) holds the classes of one pass over the routes — both
+    serve query shapes, one .mvt tile and one /cells — so the second pass
+    reuses them. At Spark's default cache size the first pass evicted its
+    own classes and the second recompiled them all. A few classes of the
+    two-statement query are new on every run: the row cap's LocalLimit in
+    each union branch names its counter from a process-wide sequence."""
+    import http.client
+
+    from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.web import ThreadingHTTPServer, make_handler
+
+    jvm = dataset.nodes.sparkSession.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    x, y = C.tile_xy_py(9.987, 53.612, 14)
+    # bbox literals no other test uses: Spark inlines them into the code
+    requests = [
+        ("POST", "/query",
+         "bbox(9.913579, 53.524681, 10.063579, 53.674681).nodes{ (amenity=bench AND seats=*) "
+         "OR this.ways{ highway=primary } } bbox(9.931357, 53.531357, 10.081357, 53.681357)"
+         ".ways{ building=yes AND this.nodes{ amenity=* } }"),
+        ("GET", f"/tiles/14/{x}/{y}.mvt", None),
+        ("POST", "/query",
+         "bbox(9.924681, 53.513579, 10.074681, 53.663579).relations{ route=bus AND "
+         "this.nodes{ seats=* } }"),
+        ("GET", "/cells?bbox=9.946813,53.546813,9.996813,53.596813&res=8", None),
+    ]
+    for df in (dataset.nodes, dataset.ways, dataset.relations):
+        df.count()  # fill the cached tables outside the measured passes
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(dataset))
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+
+    def one_pass() -> int:
+        c0 = compiles.getCount()
+        conn = http.client.HTTPConnection("127.0.0.1", httpd.server_address[1], timeout=300)
+        for method, path, body in requests:
+            conn.request(method, path, body=body)
+            resp = conn.getresponse()
+            assert resp.status == 200, (path, resp.read())
+            resp.read()
+        conn.close()
+        return compiles.getCount() - c0
+
+    try:
+        first, second = one_pass(), one_pass()
+    finally:
+        httpd.shutdown()
+    assert first > 0 and second <= first / 4, (first, second)
 
 
 def test_merge_tag_index(spark):

@@ -413,9 +413,10 @@ TILE_PLAN_CASES = {
     # one Exchange: the rank windows ride the render's tile_id exchange
     "tile_vectors": (lambda n, w, r: tiles.tile_vectors(n, 13), (1, 1, 0, 0)),
     "tile_vectors_ways-raise": (lambda n, w, r: tiles.tile_vectors_ways(w, 12), (1, 1, 0, 0)),
-    # skip: + the oversize count's single-partition exchange, cross-joined
+    # skip: + the oversize count's single-partition exchange, in a scalar
+    # subquery (no join), so a caller that drops n_oversize prunes it
     "tile_vectors_ways-skip": (
-        lambda n, w, r: tiles.tile_vectors_ways(w, 12, oversize="skip"), (2, 1, 0, 1)),
+        lambda n, w, r: tiles.tile_vectors_ways(w, 12, oversize="skip"), (2, 1, 0, 0)),
     "tile_vectors_relations": (
         lambda n, w, r: tiles.tile_vectors_relations(r, 12), (1, 1, 0, 0)),
     # pixel groupBy (tile_id, px, py), then the per-tile render
@@ -435,6 +436,31 @@ def test_tile_plan_shape(tile_frames, case):
     build, want = TILE_PLAN_CASES[case]
     kinds = [n for n, _ in plan_nodes(build(*tile_frames))]
     assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == want, kinds
+
+
+def test_tile_route_plan_shape(tile_frames):
+    """Plan pin for GET /tiles/{z}/{x}/{y}.mvt (web._tile_frame): one
+    exchange and one pandas render per layer, and each layer's tile filter
+    BELOW its render. Catalyst cannot push a filter through
+    FlatMapGroupsInPandas, so a filter above it ranks and encodes every
+    tile a way or relation covers and throws all but one away."""
+    from simple_osm_queries_spark import web
+    from simple_osm_queries_spark.sources.dataset import OsmDataset
+
+    x, y = C.tile_xy_py(9.95, 53.55, 12)
+    want = str(C.tile_id_py(x, y, 12))
+    nodes = plan_nodes(web._tile_frame(OsmDataset(*tile_frames), 12, x, y, "mvt", 0.0, 100))
+    kinds = [n for n, _ in nodes]
+    assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == (3, 3, 0, 0), kinds
+    # operators are numbered children first, so each layer's subtree is the
+    # run of nodes that ends at its render
+    tile_filters = 0
+    for name, sec in nodes:
+        if name == "FlatMapGroupsInPandas":
+            assert tile_filters == 1, kinds
+            tile_filters = 0
+        tile_filters += name == "Filter" and want in sec
+    assert tile_filters == 0, kinds  # nothing filters the rendered tiles
 
 
 def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
