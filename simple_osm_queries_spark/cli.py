@@ -211,7 +211,11 @@ def cmd_server(spark, args) -> None:
     from simple_osm_queries_spark.web import serve
 
     ds = _build_dataset(spark, args).cache()
-    ds.nodes.count()  # warm the cache before accepting requests
+    # warm all three cached frames before accepting requests: ways and
+    # relations hold the way-geometry join and the relation-bbox fold, which
+    # the first request touching them would otherwise compute
+    for df in (ds.nodes, ds.ways, ds.relations):
+        df.count()
     httpd = serve(ds, port=args.port)
     print(f"listening on http://127.0.0.1:{args.port}/app")
     httpd.serve_forever()

@@ -123,32 +123,38 @@ MAX_MERCATOR_LAT = 85.05112878
 
 
 def tile_x(lon: Column, zoom: int) -> Column:
-    fx, _ = tile_fxy(lon, F.lit(0.0), zoom)
-    tx = F.floor(fx).cast("int")
+    tx = F.floor(tile_fx(lon, zoom)).cast("int")
     # clamp lon=180 edge into the last tile
     return F.least(F.greatest(tx, F.lit(0)), F.lit((1 << zoom) - 1))
 
 
-def tile_fxy(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
-    """Fractional Web-Mercator tile coordinates (fx, fy) at ``zoom`` — the
-    ONE projection expression tile_x/tile_y floor and tile_pixel_bins
-    subdivides into pixels; keeping a single definition is what guarantees
-    a point's pixel tile_id always equals its assigned tile_id."""
-    n = F.lit(float(1 << zoom))
-    fx = (lon + F.lit(180.0)) / F.lit(360.0) * n
+def tile_fx(lon: Column, zoom: int) -> Column:
+    """Fractional Web-Mercator tile x at ``zoom`` (the x half of tile_fxy)."""
+    return (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << zoom))
+
+
+def tile_fy(lat: Column, zoom: int) -> Column:
+    """Fractional Web-Mercator tile y at ``zoom`` (the y half of tile_fxy)."""
     lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERCATOR_LAT)), F.lit(MAX_MERCATOR_LAT))
     lat_rad = F.radians(lat_c)
-    fy = (
+    return (
         (F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi))
         / F.lit(2.0)
-        * n
+        * F.lit(float(1 << zoom))
     )
-    return fx, fy
+
+
+def tile_fxy(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
+    """Fractional Web-Mercator tile coordinates (fx, fy) at ``zoom`` — the
+    ONE projection expression tile_x/tile_y floor (each through its own
+    axis, tile_fx/tile_fy) and tile_pixel_bins subdivides into pixels;
+    keeping a single definition is what guarantees a point's pixel tile_id
+    always equals its assigned tile_id."""
+    return tile_fx(lon, zoom), tile_fy(lat, zoom)
 
 
 def tile_y(lat: Column, zoom: int) -> Column:
-    _, fy = tile_fxy(F.lit(0.0), lat, zoom)
-    ty = F.floor(fy).cast("int")
+    ty = F.floor(tile_fy(lat, zoom)).cast("int")
     return F.least(F.greatest(ty, F.lit(0)), F.lit((1 << zoom) - 1))
 
 

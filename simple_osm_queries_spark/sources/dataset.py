@@ -14,9 +14,11 @@ This is the Spark re-expression of the reference's import-time index build
   explode/groupBy/join (grid_writer.go:254-417; NB the reference's
   waysToRelations loop at :272-274 appends to the wrong map — an upstream
   bug — we implement the documented intent: DIRECT membership only);
-* relation bbox    — union of member bboxes, folded child->parent to a
-  fixpoint (grid_writer.go:185-228; the reference relies on children being
-  imported before parents, we iterate to cover arbitrary finite depth).
+* relation bbox    — union of the member bboxes of the relation and of its
+  descendants down to ``max_relation_depth`` levels (grid_writer.go:185-228;
+  the reference relies on children being imported before parents, we join
+  the (ancestor, descendant) pairs up to that depth with the member boxes
+  once; nesting deeper than the bound is not folded).
 
 All joins are plain equi-joins on ids: Catalyst/AQE picks broadcast vs
 sort-merge and splits skewed partitions; adjacency arrays stay bounded (OSM
@@ -157,27 +159,33 @@ def prepare(
         "wid",
     ).select("rid", "min_lon", "min_lat", "max_lon", "max_lat")
 
-    def agg_boxes(df: DataFrame) -> DataFrame:
-        return df.groupBy("rid").agg(
+    # fold descendants' members into each relation down to
+    # max_relation_depth levels: (relation, descendant) pairs over the small
+    # child-edge table, joined ONCE with the member boxes and aggregated once
+    # per relation. reach_k = identity U (reach_{k-1} . child_edges) holds the
+    # walks of length 0..k, so the plan grows linearly with depth (folding
+    # the aggregated boxes level by level puts them into the plan twice per
+    # level: 2^depth copies). Diamonds and cycles only add duplicate pairs,
+    # which min/max ignore.
+    child_edges = rel.select(
+        F.col("id").alias("rid"), F.explode("child_relation_ids").alias("child_rid")
+    )
+    identity = rel.select("id", F.col("id").alias("rid"))
+    reach = identity
+    for _ in range(max_relation_depth):
+        deeper = reach.join(child_edges, "rid").select("id", F.col("child_rid").alias("rid"))
+        reach = identity.unionByName(deeper)
+    boxes = (
+        reach.join(node_boxes.unionByName(way_boxes), "rid")
+        .groupBy("id")
+        .agg(
             F.min("min_lon").alias("min_lon"),
             F.min("min_lat").alias("min_lat"),
             F.max("max_lon").alias("max_lon"),
             F.max("max_lat").alias("max_lat"),
         )
-
-    boxes = agg_boxes(node_boxes.unionByName(way_boxes))
-    # fold child bboxes into parents; relation nesting depth is small and
-    # bounded (acyclic), so a short driver loop of joins reaches the fixpoint
-    child_edges = rel.select(
-        F.col("id").alias("rid"), F.explode("child_relation_ids").alias("child_rid")
     )
-    for _ in range(max_relation_depth):
-        child_boxes = child_edges.join(
-            boxes.withColumnRenamed("rid", "child_rid"), "child_rid"
-        ).select("rid", "min_lon", "min_lat", "max_lon", "max_lat")
-        boxes = agg_boxes(boxes.unionByName(child_boxes))
-
-    relations = relations.join(boxes.withColumnRenamed("rid", "id"), "id", "left")
+    relations = relations.join(boxes, "id", "left")
 
     return OsmDataset(nodes=nodes, ways=ways, relations=relations, cell_w=cell_w, cell_h=cell_h)
 

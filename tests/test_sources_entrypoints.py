@@ -218,6 +218,46 @@ def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch):
     assert {f["properties"]["@osm_id"] for f in fc["features"]} == {2, 3}
 
 
+def test_cli_server_warms_every_cached_frame(spark, monkeypatch):
+    """cmd_server materialises the nodes, ways and relations caches before
+    it serves, so no first request pays for the way-geometry join or the
+    relation-bbox fold. ``serve`` is stubbed: no socket is opened."""
+    from types import SimpleNamespace
+
+    from simple_osm_queries_spark import cli, web
+    from simple_osm_queries_spark.sources.dataset import from_generator
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def loaded(df):
+        cached = cm.lookupCachedData(df._jdf)
+        return cached.isDefined() and (
+            cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+        )
+
+    ds = from_generator(spark, n_nodes=200, n_ways=40, n_relations=10, with_images=False)
+    monkeypatch.setattr(cli, "_build_dataset", lambda spark, args: ds)
+    at_serve = {}
+
+    def fake_serve(dataset, port):
+        at_serve.update(
+            port=port,
+            loaded={k: loaded(getattr(dataset, k)) for k in ("nodes", "ways", "relations")},
+        )
+        return SimpleNamespace(serve_forever=lambda: None)
+
+    monkeypatch.setattr(web, "serve", fake_serve)
+    try:
+        cli.cmd_server(spark, SimpleNamespace(port=18123))
+    finally:
+        for df in (ds.nodes, ds.ways, ds.relations):
+            df.unpersist()
+    assert at_serve == {
+        "port": 18123,
+        "loaded": {"nodes": True, "ways": True, "relations": True},
+    }
+
+
 def test_cli_import_pbf(spark, small_osm, tmp_path):
     """The reference's primary flow: import a real .osm.pbf end-to-end."""
     from types import SimpleNamespace
