@@ -26,12 +26,19 @@ Every operator is a path through one pipeline, and each step exists once:
   Vector Tile layer for the points, linestrings and polygons operators,
   which differ only in their per-feature builder.
 
+One tile needs none of the exchanges: ``tile_mvt_layers`` fetches a single
+tile's members per layer (the same membership, fid order and cap, one
+job each, no exchange) and hands back the same module-level builders, so
+the HTTP ``.mvt`` route encodes the tile on the driver and serves the
+bytes the three operators would have rendered for it.
+
 The raster -> vector direction is ``raster_to_bins`` and
 ``pixel_bins_to_points``.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Callable
 
@@ -372,11 +379,16 @@ def _rank_cap(df: DataFrame, cap: int) -> DataFrame:
 
 
 def _render_mvt(
-    ranked: DataFrame, layer: str, extent: int, features: Callable[..., list[dict]]
+    ranked: DataFrame,
+    layer: str,
+    extent: int,
+    cols: list[str],
+    features: Callable[..., list[dict]],
 ) -> DataFrame:
     """One single-layer Mapbox Vector Tile (MVT 2.1, sources/mvt.py) per
-    tile of a ``_rank_cap`` frame: ``features(pdf)`` turns the tile's rows,
-    in rank order, into sources/mvt.py feature dicts.
+    tile of a ``_rank_cap`` frame: ``features(rows, zoom, tx, ty, extent)``
+    turns the tile's ``cols`` tuples, in rank order, into sources/mvt.py
+    feature dicts (one of the builders below).
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
     """
@@ -386,9 +398,11 @@ def _render_mvt(
         from simple_osm_queries_spark.sources import mvt
 
         pdf = pdf.sort_values("rn")
-        feats = features(pdf)
+        tid = int(pdf["tile_id"].iloc[0])
+        zoom, tx, ty = C.tile_zxy_py(tid)
+        feats = features(zip(*(pdf[c] for c in cols)), zoom, tx, ty, extent)
         return _tile_row(
-            int(pdf["tile_id"].iloc[0]),
+            tid,
             n_features=len(feats),
             n_total=int(pdf["n_total"].iloc[0]),
             mvt=mvt.encode_tile([(layer, feats)], extent=extent),
@@ -398,6 +412,78 @@ def _render_mvt(
         render,
         "tile_id long, zoom int, tx int, ty int, n_features int, n_total long, mvt binary",
     )
+
+
+# The per-feature builders of the three layers. Each takes one tile's
+# member tuples in rank order and returns sources/mvt.py feature dicts;
+# the render stage above and the single-tile fetch (tile_mvt_layers) both
+# call them, so a tile's bytes do not depend on which path encoded it.
+# ``attrs`` is a tags map or its key/value entries (anything dict() takes).
+
+def _point_features(rows, zoom: int, tx: int, ty: int, extent: int) -> list[dict]:
+    """(fid, ix, iy, attrs) rows -> POINT features at their tile-local
+    integer position (computed in Spark by ``_tile_local``)."""
+    from simple_osm_queries_spark.sources import mvt
+
+    return [
+        {
+            "id": int(fid),
+            "type": mvt.POINT,
+            "rings": [[(int(ix), int(iy))]],
+            "attrs": dict(attrs) if attrs is not None else {},
+        }
+        for fid, ix, iy, attrs in rows
+    ]
+
+
+def _line_features(
+    rows, zoom: int, tx: int, ty: int, extent: int, simplify_tol: float = 0.0
+) -> list[dict]:
+    """(fid, nodes) rows -> LINESTRING features projected onto tile
+    (tx, ty), Douglas–Peucker thinned when ``simplify_tol`` > 0; a
+    single-vertex way is skipped."""
+    import numpy as np
+
+    from simple_osm_queries_spark.operators.geodesy import _dp_mask
+    from simple_osm_queries_spark.sources import mvt
+
+    feats = []
+    for fid, nodes in rows:
+        ring = [_tile_local_py(v["lon"], v["lat"], zoom, tx, ty, extent) for v in nodes]
+        if len(ring) < 2:
+            continue  # degenerate single-vertex way
+        if simplify_tol > 0.0 and len(ring) > 2:
+            xs = np.array([p[0] for p in ring], dtype=np.float64)
+            ys = np.array([p[1] for p in ring], dtype=np.float64)
+            keep = _dp_mask(xs, ys, float(simplify_tol))
+            ring = [ring[i] for i in np.flatnonzero(keep)]
+        feats.append({"id": int(fid), "type": mvt.LINESTRING, "rings": [ring]})
+    return feats
+
+
+def _bbox_polygon_features(rows, zoom: int, tx: int, ty: int, extent: int) -> list[dict]:
+    """(fid, min_lon, min_lat, max_lon, max_lat, attrs) rows -> one
+    rectangle POLYGON per feature on tile (tx, ty)."""
+    from simple_osm_queries_spark.sources import mvt
+
+    feats = []
+    for fid, x1, y1, x2, y2, attrs in rows:
+        # top-left = (min_lon, max_lat): screen y grows DOWN
+        px0, py0 = _tile_local_py(float(x1), float(y2), zoom, tx, ty, extent)
+        px1, py1 = _tile_local_py(float(x2), float(y1), zoom, tx, ty, extent)
+        feats.append(
+            {
+                "id": int(fid),
+                "type": mvt.POLYGON,
+                # CW on screen (positive shoelace with y down) => exterior
+                "rings": [[(px0, py0), (px1, py0), (px1, py1), (px0, py1)]],
+                "attrs": dict(attrs) if attrs is not None else {},
+            }
+        )
+    return feats
+
+
+_BBOX = ["min_lon", "min_lat", "max_lon", "max_lat"]
 
 
 def tile_vectors(
@@ -434,21 +520,7 @@ def tile_vectors(
         ),
         cap,
     )
-
-    def features(pdf):
-        from simple_osm_queries_spark.sources import mvt
-
-        return [
-            {
-                "id": int(fid),
-                "type": mvt.POINT,
-                "rings": [[(int(ix), int(iy))]],
-                "attrs": dict(attrs) if attrs is not None else {},
-            }
-            for fid, ix, iy, attrs in zip(pdf["fid"], pdf["ix"], pdf["iy"], pdf["attrs"])
-        ]
-
-    return _render_mvt(ranked, "nodes", extent, features)
+    return _render_mvt(ranked, "nodes", extent, ["fid", "ix", "iy", "attrs"], _point_features)
 
 
 def tile_vectors_ways(
@@ -458,7 +530,6 @@ def tile_vectors_ways(
     cap: int = 16384,
     oversize: str = "raise",
     simplify_tol: float = 0.0,
-    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for way LINESTRINGs, one MVT layer ``ways`` per tile
     (prepared ways table: ``nodes`` array<struct<id,lon,lat>> + bbox
@@ -482,34 +553,13 @@ def tile_vectors_ways(
     low-zoom planet render feasible: a 10k-vertex river at z4 is a few
     dozen MVT vertices.
 
-    ``tile``: a tile id (cells.tile_id_py) renders only that tile — the
-    other tiles a way covers are dropped before the rank and the render.
-
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
-    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways", tile)
-
-    def features(pdf):
-        import numpy as np
-
-        from simple_osm_queries_spark.operators.geodesy import _dp_mask
-        from simple_osm_queries_spark.sources import mvt
-
-        feats = []
-        for fid, nodes, tx, ty in zip(pdf["fid"], pdf["nodes"], pdf["tx"], pdf["ty"]):
-            tx, ty = int(tx), int(ty)
-            ring = [_tile_local_py(v["lon"], v["lat"], zoom, tx, ty, extent) for v in nodes]
-            if len(ring) < 2:
-                continue  # degenerate single-vertex way
-            if simplify_tol > 0.0 and len(ring) > 2:
-                xs = np.array([p[0] for p in ring], dtype=np.float64)
-                ys = np.array([p[1] for p in ring], dtype=np.float64)
-                keep = _dp_mask(xs, ys, float(simplify_tol))
-                ring = [ring[i] for i in np.flatnonzero(keep)]
-            feats.append({"id": int(fid), "type": mvt.LINESTRING, "rings": [ring]})
-        return feats
-
-    return _attach_oversize(_render_mvt(ranked, "ways", extent, features), over_cnt)
+    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways")
+    features = functools.partial(_line_features, simplify_tol=simplify_tol)
+    return _attach_oversize(
+        _render_mvt(ranked, "ways", extent, ["fid", "nodes"], features), over_cnt
+    )
 
 
 def tile_vectors_relations(
@@ -518,51 +568,95 @@ def tile_vectors_relations(
     extent: int = 4096,
     cap: int = 16384,
     oversize: str = "raise",
-    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
     per tile — the geometry the reference outputs for relations
     (grid_reader.go:513-517 emits the relation's bounding box as a polygon
     ring; sources/geojson.py:33-45 mirrors it), completing the
     POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
-    fan-out, ``oversize`` modes and ``tile`` as tile_vectors_ways; each
-    tile renders the rectangle tile-locally (corners may leave [0, extent)
-    on border tiles — renderers clip), with the ``tags`` map as
-    attributes. The exterior ring is wound positive under the shoelace
-    formula in screen space (y down), as MVT 2.1 requires for an exterior
-    ring.
+    fan-out and ``oversize`` modes as tile_vectors_ways; each tile renders
+    the rectangle tile-locally (corners may leave [0, extent) on border
+    tiles — renderers clip), with the ``tags`` map as attributes. The
+    exterior ring is wound positive under the shoelace formula in screen
+    space (y down), as MVT 2.1 requires for an exterior ring.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
     ranked, over_cnt = _bbox_tile_fanout(
-        relations, zoom, cap, oversize,
-        ["min_lon", "min_lat", "max_lon", "max_lat", "tags"], "relations", tile,
+        relations, zoom, cap, oversize, [*_BBOX, "tags"], "relations"
+    )
+    return _attach_oversize(
+        _render_mvt(
+            ranked, "relations", extent, ["fid", *_BBOX, "tags"], _bbox_polygon_features
+        ),
+        over_cnt,
     )
 
-    def features(pdf):
-        from simple_osm_queries_spark.sources import mvt
 
-        feats = []
-        for fid, x1, y1, x2, y2, tx, ty, attrs in zip(
-            pdf["fid"], pdf["min_lon"], pdf["min_lat"], pdf["max_lon"],
-            pdf["max_lat"], pdf["tx"], pdf["ty"], pdf["tags"],
-        ):
-            tx, ty = int(tx), int(ty)
-            # top-left = (min_lon, max_lat): screen y grows DOWN
-            px0, py0 = _tile_local_py(float(x1), float(y2), zoom, tx, ty, extent)
-            px1, py1 = _tile_local_py(float(x2), float(y1), zoom, tx, ty, extent)
-            feats.append(
-                {
-                    "id": int(fid),
-                    "type": mvt.POLYGON,
-                    # CW on screen (positive shoelace with y down) => exterior
-                    "rings": [[(px0, py0), (px1, py0), (px1, py1), (px0, py1)]],
-                    "attrs": dict(attrs) if attrs is not None else {},
-                }
-            )
-        return feats
+def tile_mvt_layers(
+    nodes: DataFrame,
+    ways: DataFrame,
+    relations: DataFrame,
+    zoom: int,
+    tx: int,
+    ty: int,
+    cap: int,
+    simplify_tol: float = 0.0,
+    extent: int = 4096,
+) -> list[tuple[str, DataFrame, Callable[[list], list[dict]]]]:
+    """ONE tile's MVT layers for a driver-side encode: (layer, plan,
+    features) in nodes -> ways -> relations order. ``plan`` holds tile
+    (tx, ty)'s members by the operators' own membership (a node's
+    ``_tile_local`` tile; a way's or relation's ``_bbox_tile_range``, at
+    most MAX_COVER tiles, as oversize='skip'), ordered by fid and capped:
+    a TakeOrderedAndProject, whose collect() is one job with no exchange
+    (toPandas() would run it as a single-partition shuffle).
+    ``features(rows)`` is the render stage's builder, so
+    ``mvt.encode_tile`` over the layers that have rows gives the three
+    operators' blobs for this tile, concatenated. Tags are fetched as
+    ``map_entries``: collect() turns a map into a dict in hash order, and
+    attribute order is part of the bytes."""
+    want = C.tile_id_py(tx, ty, zoom)
+    tid, ix, iy = _tile_local(F.col("lon"), F.col("lat"), zoom, extent)
+    xmin, xmax, ymin, ymax, n_tiles = _bbox_tile_range(zoom)
+    covers = (
+        (xmin <= tx) & (xmax >= tx) & (ymin <= ty) & (ymax >= ty) & (n_tiles <= MAX_COVER)
+    )
+    fid = F.col("id").alias("fid")
+    tags = F.map_entries("tags").alias("tags")
+    fetches = [
+        (
+            "nodes",
+            nodes.where(tid == want).select(fid, ix.alias("ix"), iy.alias("iy"), tags),
+            _point_features,
+        ),
+        (
+            "ways",
+            ways.where(covers).select(fid, "nodes"),
+            functools.partial(_line_features, simplify_tol=simplify_tol),
+        ),
+        ("relations", relations.where(covers).select(fid, *_BBOX, tags), _bbox_polygon_features),
+    ]
+    return [
+        (
+            layer,
+            plan.orderBy("fid").limit(cap),
+            functools.partial(build, zoom=zoom, tx=tx, ty=ty, extent=extent),
+        )
+        for layer, plan, build in fetches
+    ]
 
-    return _attach_oversize(_render_mvt(ranked, "relations", extent, features), over_cnt)
+
+def _bbox_tile_range(zoom: int) -> tuple[Column, Column, Column, Column, Column]:
+    """(xmin, xmax, ymin, ymax, n_tiles): the tile index range a feature's
+    bbox columns cover at ``zoom`` and its tile count — the one definition
+    of way/relation tile membership (the fan-out explodes it, the
+    single-tile fetch tests it)."""
+    xmin = C.tile_x(F.col("min_lon"), zoom)
+    xmax = C.tile_x(F.col("max_lon"), zoom)
+    ymin = C.tile_y(F.col("max_lat"), zoom)  # y grows DOWN (screen space)
+    ymax = C.tile_y(F.col("min_lat"), zoom)
+    return xmin, xmax, ymin, ymax, (xmax - xmin + 1) * (ymax - ymin + 1)
 
 
 def _bbox_tile_fanout(
@@ -572,32 +666,24 @@ def _bbox_tile_fanout(
     oversize: str,
     payload_cols: list[str],
     what: str,
-    tile: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(feature -> covered tiles) fan-out shared by the linestring and
-    polygon MVT paths: bbox columns -> tile index ranges (column math) ->
-    sequence+explode -> [keep only ``tile``] -> ``_rank_cap``. The tile
-    filter has to sit here: Catalyst cannot push a filter through the
-    render's FlatMapGroupsInPandas. Returns the ranked
-    (tile_id, fid, payload..., tx, ty, rn, n_total) frame and, for
+    polygon MVT paths: bbox columns -> tile index ranges
+    (``_bbox_tile_range``) -> sequence+explode -> ``_rank_cap``. Returns
+    the ranked (tile_id, fid, payload..., rn, n_total) frame and, for
     oversize='skip', the lazy 1-row ``n_oversize`` count for
     _attach_oversize (None for 'raise', where a nonzero count raised)."""
     if oversize not in ("raise", "skip"):
         raise ValueError(f"oversize must be 'raise' or 'skip', got {oversize!r}")
-    xmin = C.tile_x(F.col("min_lon"), zoom)
-    xmax = C.tile_x(F.col("max_lon"), zoom)
-    ymin = C.tile_y(F.col("max_lat"), zoom)  # y grows DOWN (screen space)
-    ymax = C.tile_y(F.col("min_lat"), zoom)
     sized = df.select(
         F.col("id").alias("fid"),
         *payload_cols,
-        xmin.alias("xmin"),
-        xmax.alias("xmax"),
-        ymin.alias("ymin"),
-        ymax.alias("ymax"),
-    ).withColumn(
-        "n_tiles",
-        (F.col("xmax") - F.col("xmin") + 1) * (F.col("ymax") - F.col("ymin") + 1),
+        *(
+            c.alias(name)
+            for name, c in zip(
+                ("xmin", "xmax", "ymin", "ymax", "n_tiles"), _bbox_tile_range(zoom)
+            )
+        ),
     )
     oversized = sized.filter(F.col("n_tiles") > MAX_COVER)
     over_cnt = None
@@ -622,12 +708,8 @@ def _bbox_tile_fanout(
             C.tile_id(F.col("tx"), F.col("ty"), zoom).alias("tile_id"),
             "fid",
             *payload_cols,
-            "tx",
-            "ty",
         )
     )
-    if tile is not None:
-        fanned = fanned.where(F.col("tile_id") == F.lit(tile))
     return _rank_cap(fanned, cap), over_cnt
 
 

@@ -83,6 +83,16 @@ def get_spark(
         # cache for 16 of the two-statement query's classes, and a stage
         # whose code another query had built could not reuse it
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # pyspark's DataFrame debugging (on by default) wraps every Column
+        # method and F.col/F.lit in a call-site capture: an active-session
+        # lookup, a conf read, a Python stack walk and an origin set/clear
+        # on the JVM, per call. Measured in py4j round trips:
+        # `F.col("lon") >= F.lit(1.0)` costs 27 with it on and 7 off,
+        # `cells.tile_of(lon, lat, 14)` 347 and 147. pyspark reads the flag
+        # once per process, on first use, so it has to be set here. Cost:
+        # an analysis error no longer carries pyspark's "== DataFrame =="
+        # Python call-site block
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Iceberg catalog for the build_index(backend="iceberg") path.
         # Declaring the catalog is harmless without the jar (it only fails
         # on first use); WITH iceberg-spark-runtime-4.x on the classpath the

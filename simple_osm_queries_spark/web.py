@@ -10,7 +10,11 @@ rendering, error label, localStorage; self-contained canvas, no CDN).
 
 stdlib ThreadingHTTPServer — the Spark driver is the server process, the
 cluster does the work, exactly like the reference's single process plus
-goroutines (but distributed underneath).
+goroutines (but distributed underneath). One tile is small, so
+`GET /tiles/{z}/{x}/{y}.mvt` answers the way the reference answers from its
+in-process index (api.go:117): one fetch per layer of the tile's capped,
+fid-ordered members, encoded on the driver; `.png` still renders through
+the tile_heatmap operator.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from __future__ import annotations
 import functools
 import json
 import math
+from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import Column, DataFrame
@@ -51,31 +56,15 @@ def _overlaps(min_lon: float, min_lat: float, max_lon: float, max_lat: float) ->
     )
 
 
-def _tile_frame(
-    dataset: OsmDataset, z: int, x: int, y: int, fmt: str, simplify: float, cap: int
-) -> DataFrame:
-    """The one-column (``fmt``) frame of GET /tiles/{z}/{x}/{y}.{fmt}: one
-    PNG, or one MVT layer blob per non-empty layer in nodes -> ways ->
-    relations order (union keeps its children's partition order). Only
-    tile (x, y) is ever ranked and encoded: the nodes are filtered to it
-    and the ways/relations fan-out keeps only it (``tile=``)."""
-    from simple_osm_queries_spark.functions import cells as C
-    from simple_osm_queries_spark.operators.tiles import (
-        tile_heatmap,
-        tile_vectors,
-        tile_vectors_relations,
-        tile_vectors_ways,
-    )
-
+def _tile_bounds(z: int, x: int, y: int) -> tuple[float, float, float, float]:
+    """(min_lon, min_lat, max_lon, max_lat) of slippy tile (x, y), widened
+    by ε and unbounded at the clamped edges: a PREFILTER only. It is what
+    reaches parquet/Iceberg min-max pruning; the engine's own projection
+    on top decides membership, because tile_fxy clamps lat beyond ±85.05°
+    into the edge rows and lon=180 into the last column, and this
+    driver-side inverse Mercator is not guaranteed to be the bit-exact
+    inverse of the Spark expression."""
     n = 1 << z
-    # Membership truth is the ENGINE's projection (tile_of == want), not
-    # driver-math bbox inequalities: tile_fxy clamps lat beyond ±85.05°
-    # into the edge rows and lon=180 into the last column, and the
-    # driver-side inverse-Mercator bbox is not guaranteed to be the
-    # bit-exact inverse of the Spark expression. The bbox (widened by ε,
-    # unbounded at clamped edges) remains as a PREFILTER only — it is what
-    # reaches parquet/Iceberg min-max pruning; the exact tile_of equality
-    # on top decides membership.
     eps = 1e-7
     lon0 = -180.0 if x == 0 else x / n * 360.0 - 180.0 - eps
     lon1 = 180.0 if x == n - 1 else (x + 1) / n * 360.0 - 180.0 + eps
@@ -85,27 +74,55 @@ def _tile_frame(
         if y == n - 1
         else math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * (y + 1) / n)))) - eps
     )
-    want = C.tile_id_py(x, y, z)
-    pre = dataset.nodes.where(_contains(lon0, lat0, lon1, lat1)).where(
-        C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(want)
+    return lon0, lat0, lon1, lat1
+
+
+def _tile_frame(dataset: OsmDataset, z: int, x: int, y: int) -> DataFrame:
+    """The one-column ``png`` frame of GET /tiles/{z}/{x}/{y}.png: the
+    tile's nodes (bbox prefilter, then tile_of == the tile) through
+    tile_heatmap; no row for an empty tile."""
+    from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.operators.tiles import tile_heatmap
+
+    pre = dataset.nodes.where(_contains(*_tile_bounds(z, x, y))).where(
+        C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(C.tile_id_py(x, y, z))
     )
-    if fmt == "png":
-        return tile_heatmap(pre.select("lon", "lat"), z, 256).select(fmt)
-    # ways/relations: bbox-overlap prefilter (their bbox columns reach
-    # parquet min-max pruning), fan-out membership decides; skip-not-raise
-    # — one continental feature must not 500 the tile
-    meets = _overlaps(lon0, lat0, lon1, lat1)
-    layers = [
-        tile_vectors(pre.select("id", "lon", "lat", "tags"), z, cap=cap),
-        tile_vectors_ways(
-            dataset.ways.where(meets), z, cap=cap, oversize="skip",
-            simplify_tol=simplify, tile=want,
-        ),
-        tile_vectors_relations(
-            dataset.relations.where(meets), z, cap=cap, oversize="skip", tile=want
-        ),
-    ]
-    return functools.reduce(DataFrame.union, [t.select(fmt) for t in layers])
+    return tile_heatmap(pre.select("lon", "lat"), z, 256).select("png")
+
+
+def _mvt_layers(
+    dataset: OsmDataset, z: int, x: int, y: int, simplify: float, cap: int
+) -> list[tuple[str, DataFrame, Callable[[list], list[dict]]]]:
+    """GET /tiles/{z}/{x}/{y}.mvt's (layer, fetch plan, features) triples
+    (operators/tiles.py tile_mvt_layers) over the bbox-prefiltered
+    tables: nodes inside the tile's bounds, ways and relations whose bbox
+    meets them (their bbox columns reach parquet min-max pruning)."""
+    from simple_osm_queries_spark.operators.tiles import tile_mvt_layers
+
+    bounds = _tile_bounds(z, x, y)
+    meets = _overlaps(*bounds)
+    return tile_mvt_layers(
+        dataset.nodes.where(_contains(*bounds)),
+        dataset.ways.where(meets),
+        dataset.relations.where(meets),
+        z, x, y, cap, simplify,
+    )
+
+
+def _mvt_tile(
+    dataset: OsmDataset, z: int, x: int, y: int, simplify: float, cap: int
+) -> bytes:
+    """The .mvt body: each layer's members fetched (one job per layer, no
+    exchange) and encoded here, once; a layer is present iff it has
+    members, and an empty tile is a valid MVT too."""
+    from simple_osm_queries_spark.sources import mvt
+
+    layers = []
+    for layer, plan, features in _mvt_layers(dataset, z, x, y, simplify, cap):
+        rows = plan.collect()
+        if rows:
+            layers.append((layer, features(rows)))
+    return mvt.encode_tile(layers or [("nodes", [])])
 
 
 @functools.cache
@@ -222,8 +239,11 @@ def make_handler(
             raster for ONE slippy tile (operators/tiles.py tile_heatmap
             over the tile's bbox-filtered nodes), and .mvt — the same
             tile as a Mapbox Vector Tile with a nodes, a ways and a
-            relations layer (tile_vectors, tile_vectors_ways and
-            tile_vectors_relations; tags as MVT attributes). The
+            relations layer (tags as MVT attributes). The .mvt members
+            are fetched per layer and encoded here on the driver
+            (tiles.tile_mvt_layers): the bytes tile_vectors,
+            tile_vectors_ways and tile_vectors_relations render for this
+            tile, without their per-tile exchanges and pandas stages. The
             reference's UI sends every feature to the browser as GeoJSON;
             raster keeps a dense region drawable, MVT keeps it
             *interactive* in any standard map client. Zoom capped like
@@ -254,21 +274,13 @@ def make_handler(
                 self._error(400, "tile out of range")
                 return
             try:
-                blobs = [
-                    bytes(r[0])
-                    for r in _tile_frame(dataset, z, x, y, fmt, simplify, max_rows).collect()
-                ]
                 if fmt == "mvt":
-                    from simple_osm_queries_spark.sources import mvt
-
-                    # a tile message is just repeated Layer fields, so the
-                    # per-layer blobs CONCATENATE into one valid multi-layer
-                    # tile (no re-encode); an empty tile is a valid MVT too
-                    body = b"".join(blobs) if blobs else mvt.encode_tile([("nodes", [])])
+                    body = _mvt_tile(dataset, z, x, y, simplify, max_rows)
                     self._send(200, body, "application/vnd.mapbox-vector-tile")
                     return
-                if blobs:
-                    png = blobs[0]
+                rows = _tile_frame(dataset, z, x, y).collect()
+                if rows:
+                    png = bytes(rows[0].png)
                 else:  # empty tile -> blank raster
                     import numpy as np
 

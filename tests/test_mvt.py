@@ -373,13 +373,20 @@ def test_tile_vectors_relations(spark):
 
 
 def test_http_mvt_multilayer(spark):
-    """The .mvt endpoint composes nodes + ways + relations layers into ONE
-    tile by concatenating the per-type operators' blobs (an MVT tile is
-    repeated Layer fields): the served body is byte-for-byte the nodes,
-    ways and relations blobs of the operators run directly, in that order,
-    and every layer present decodes."""
+    """The .mvt endpoint serves, byte for byte, the nodes, ways and
+    relations blobs the three tile operators render for the tile,
+    concatenated in that order (an MVT tile is repeated Layer fields),
+    also under a row cap (make_handler max_rows) and ?simplify. The route
+    fetches and encodes on the driver, so this pins its membership, fid
+    order, cap, ways simplification and tag (attribute) order to the
+    operators'. One tile is chosen so that its served nodes and relations
+    carry >= 2 tags each: attribute order is part of the bytes."""
     import threading
+    import urllib.error
     import urllib.request
+    from http.server import ThreadingHTTPServer
+
+    from pyspark.sql import functions as F
 
     from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.operators.tiles import (
@@ -388,60 +395,79 @@ def test_http_mvt_multilayer(spark):
         tile_vectors_ways,
     )
     from simple_osm_queries_spark.sources.dataset import from_generator
-    from simple_osm_queries_spark.web import serve
+    from simple_osm_queries_spark.web import make_handler
 
     ds = from_generator(spark, n_nodes=400, n_ways=80, n_relations=20).cache()
     zoom = 12
-    # pick a tile that certainly has a way on it
-    wrow = tile_vectors_ways(ds.ways, zoom).collect()[0]
-    tx, ty, want = wrow.tx, wrow.ty, wrow.tile_id
-    httpd = serve(ds, port=18095)
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    try:
-        with urllib.request.urlopen(
-            f"http://127.0.0.1:18095/tiles/{zoom}/{tx}/{ty}.mvt"
-        ) as resp:
-            body = resp.read()
-        layers = mvt.decode_tile(body)
-        # ?simplify thins the ways layer but keeps the same features
-        with urllib.request.urlopen(
-            f"http://127.0.0.1:18095/tiles/{zoom}/{tx}/{ty}.mvt?simplify=64"
-        ) as resp:
-            thin = mvt.decode_tile(resp.read())
-        assert sorted(f["id"] for f in thin["ways"]["features"]) == sorted(
-            f["id"] for f in layers["ways"]["features"]
-        )
-        assert sum(
-            len(f["parts"][0]) for f in thin["ways"]["features"]
-        ) <= sum(len(f["parts"][0]) for f in layers["ways"]["features"])
-        import urllib.error
 
+    def blobs(cap, simplify):
+        """{tile_id: the three operators' blobs for it, concatenated}"""
+        out = {}
+        for frame in (
+            tile_vectors(ds.nodes, zoom, cap=cap),
+            tile_vectors_ways(ds.ways, zoom, cap=cap, simplify_tol=simplify),
+            tile_vectors_relations(ds.relations, zoom, cap=cap),
+        ):
+            for r in frame.collect():
+                out[r.tile_id] = out.get(r.tile_id, b"") + bytes(r.mvt)
+        return out
+
+    full = blobs(65536, 0.0)
+
+    def multi_tag(body, layer):
+        feats = mvt.decode_tile(body).get(layer, {"features": []})["features"]
+        return any(len(f["attrs"]) >= 2 for f in feats)
+
+    # a tile with a way on it, and one whose nodes and relations carry
+    # several tags each
+    with_way = tile_vectors_ways(ds.ways, zoom).collect()[0].tile_id
+    tagged = [
+        tid for tid, body in sorted(full.items())
+        if multi_tag(body, "nodes") and multi_tag(body, "relations")
+    ]
+    assert tagged, "no tile with multi-tag nodes and relations"
+    servers = [
+        ThreadingHTTPServer(("127.0.0.1", port), make_handler(ds, max_rows=cap))
+        for port, cap in ((18095, 100_000), (18096, 3))
+    ]
+    for httpd in servers:
+        threading.Thread(target=httpd.serve_forever, daemon=True).start()
+
+    def get(port, tid, query=""):
+        _, tx, ty = C.tile_zxy_py(tid)
+        url = f"http://127.0.0.1:{port}/tiles/{zoom}/{tx}/{ty}.mvt{query}"
+        with urllib.request.urlopen(url) as resp:
+            return resp.read()
+
+    try:
+        for tid in (with_way, tagged[0]):
+            assert get(18095, tid) == full[tid]
+        thin = blobs(65536, 64.0)
+        capped, capped_thin = blobs(3, 0.0), blobs(3, 64.0)
+        for tid in (with_way, tagged[0]):
+            assert get(18095, tid, "?simplify=64") == thin[tid]
+            assert get(18096, tid) == capped[tid]
+            assert get(18096, tid, "?simplify=64") == capped_thin[tid]
         try:
-            urllib.request.urlopen(
-                f"http://127.0.0.1:18095/tiles/{zoom}/{tx}/{ty}.mvt?simplify=-1"
-            )
+            get(18095, with_way, "?simplify=-1")
             raise AssertionError("negative simplify should 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400
     finally:
-        httpd.shutdown()
-    assert body == b"".join(
-        bytes(r.mvt)
-        for op, frame in (
-            (tile_vectors, ds.nodes),
-            (tile_vectors_ways, ds.ways),
-            (tile_vectors_relations, ds.relations),
-        )
-        for r in op(frame, zoom).collect()
-        if r.tile_id == want
+        for httpd in servers:
+            httpd.shutdown()
+    layers = mvt.decode_tile(full[with_way])
+    # ?simplify thins the ways layer but keeps the same features
+    thin_ways = mvt.decode_tile(thin[with_way])["ways"]["features"]
+    assert sorted(f["id"] for f in thin_ways) == sorted(
+        f["id"] for f in layers["ways"]["features"]
     )
-    assert "ways" in layers
+    assert sum(len(f["parts"][0]) for f in thin_ways) <= sum(
+        len(f["parts"][0]) for f in layers["ways"]["features"]
+    )
     # node layer present whenever the tile holds nodes
-    from pyspark.sql import functions as F
-
     n_nodes_here = ds.nodes.where(
-        C.tile_of(F.col("lon"), F.col("lat"), zoom) == want
+        C.tile_of(F.col("lon"), F.col("lat"), zoom) == with_way
     ).count()
     if n_nodes_here:
         assert len(layers["nodes"]["features"]) == n_nodes_here

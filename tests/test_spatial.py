@@ -438,29 +438,36 @@ def test_tile_plan_shape(tile_frames, case):
     assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == want, kinds
 
 
-def test_tile_route_plan_shape(tile_frames):
-    """Plan pin for GET /tiles/{z}/{x}/{y}.mvt (web._tile_frame): one
-    exchange and one pandas render per layer, and each layer's tile filter
-    BELOW its render. Catalyst cannot push a filter through
-    FlatMapGroupsInPandas, so a filter above it ranks and encodes every
-    tile a way or relation covers and throws all but one away."""
+def test_tile_route_plan_shape(spark, tile_frames):
+    """Plan pin for GET /tiles/{z}/{x}/{y}.mvt (web._mvt_layers): each
+    layer's fetch is one TakeOrderedAndProject over its filtered scan, with
+    no Exchange, no pandas render and no Arrow UDF, and serving the tile
+    runs one single-stage job per layer. A toPandas() fetch keeps the same
+    plan but executes the TakeOrderedAndProject as a single-partition
+    shuffle, a second stage, which the stage count below catches."""
     from simple_osm_queries_spark import web
     from simple_osm_queries_spark.sources.dataset import OsmDataset
 
+    ds = OsmDataset(*tile_frames)
     x, y = C.tile_xy_py(9.95, 53.55, 12)
-    want = str(C.tile_id_py(x, y, 12))
-    nodes = plan_nodes(web._tile_frame(OsmDataset(*tile_frames), 12, x, y, "mvt", 0.0, 100))
-    kinds = [n for n, _ in nodes]
-    assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == (3, 3, 0, 0), kinds
-    # operators are numbered children first, so each layer's subtree is the
-    # run of nodes that ends at its render
-    tile_filters = 0
-    for name, sec in nodes:
-        if name == "FlatMapGroupsInPandas":
-            assert tile_filters == 1, kinds
-            tile_filters = 0
-        tile_filters += name == "Filter" and want in sec
-    assert tile_filters == 0, kinds  # nothing filters the rendered tiles
+    layers = web._mvt_layers(ds, 12, x, y, 0.0, 100)
+    assert [layer for layer, _, _ in layers] == ["nodes", "ways", "relations"]
+    for layer, plan, _ in layers:
+        kinds = [n for n, _ in plan_nodes(plan)]
+        assert kinds.count("TakeOrderedAndProject") == 1, (layer, kinds)
+        for bad in ("Exchange", "FlatMapGroupsInPandas", "ArrowEvalPython"):
+            assert bad not in kinds, (layer, kinds)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_tile_route_plan_shape", "mvt route")
+    try:
+        body = web._mvt_tile(ds, 12, x, y, 0.0, 100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert body
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("test_tile_route_plan_shape")
+    stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+    assert 1 <= len(stages) <= 3 and set(stages) == {1}, stages
 
 
 def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
