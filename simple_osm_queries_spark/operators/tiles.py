@@ -26,11 +26,13 @@ Every operator is a path through one pipeline, and each step exists once:
   Vector Tile layer for the points, linestrings and polygons operators,
   which differ only in their per-feature builder.
 
-One tile needs none of the exchanges: ``tile_mvt_layers`` fetches a single
-tile's members per layer (the same membership, fid order and cap, one
-job each, no exchange) and hands back the same module-level builders, so
-the HTTP ``.mvt`` route encodes the tile on the driver and serves the
-bytes the three operators would have rendered for it.
+One small tile needs none of the exchanges: ``tile_mvt_layers`` gives a
+single tile's members per layer (the same membership, fid order, cap and
+module-level builders) and ``tile_mvt`` fetches each layer in one job
+with no exchange and encodes it on the driver, or, above
+``MVT_DRIVER_ROWS`` members, renders it through its operator restricted
+to the tile in an executor. Either way the HTTP ``.mvt`` route serves the
+bytes the three operators would have rendered for the tile.
 
 The raster -> vector direction is ``raster_to_bins`` and
 ``pixel_bins_to_points``.
@@ -41,11 +43,13 @@ from __future__ import annotations
 import functools
 import math
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
+from simple_osm_queries_spark.sources.mvt import EXTENT
 
 # A way or relation whose bbox covers more tiles than this at the render
 # zoom (a continental motorway at z15) would fan out explosively; see the
@@ -489,7 +493,7 @@ _BBOX = ["min_lon", "min_lat", "max_lon", "max_lat"]
 def tile_vectors(
     df: DataFrame,
     zoom: int,
-    extent: int = 4096,
+    extent: int = EXTENT,
     cap: int = 65536,
     id_col: str = "id",
     lon: str = "lon",
@@ -526,10 +530,11 @@ def tile_vectors(
 def tile_vectors_ways(
     ways: DataFrame,
     zoom: int,
-    extent: int = 4096,
+    extent: int = EXTENT,
     cap: int = 16384,
     oversize: str = "raise",
     simplify_tol: float = 0.0,
+    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for way LINESTRINGs, one MVT layer ``ways`` per tile
     (prepared ways table: ``nodes`` array<struct<id,lon,lat>> + bbox
@@ -553,9 +558,12 @@ def tile_vectors_ways(
     low-zoom planet render feasible: a 10k-vertex river at z4 is a few
     dozen MVT vertices.
 
+    ``tile``: a tile id (cells.tile_id_py) renders only that tile — the
+    other tiles a way covers are dropped before the rank and the render.
+
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
-    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways")
+    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways", tile)
     features = functools.partial(_line_features, simplify_tol=simplify_tol)
     return _attach_oversize(
         _render_mvt(ranked, "ways", extent, ["fid", "nodes"], features), over_cnt
@@ -565,25 +573,27 @@ def tile_vectors_ways(
 def tile_vectors_relations(
     relations: DataFrame,
     zoom: int,
-    extent: int = 4096,
+    extent: int = EXTENT,
     cap: int = 16384,
     oversize: str = "raise",
+    tile: int | None = None,
 ) -> DataFrame:
     """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
     per tile — the geometry the reference outputs for relations
     (grid_reader.go:513-517 emits the relation's bounding box as a polygon
     ring; sources/geojson.py:33-45 mirrors it), completing the
     POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
-    fan-out and ``oversize`` modes as tile_vectors_ways; each tile renders
-    the rectangle tile-locally (corners may leave [0, extent) on border
-    tiles — renderers clip), with the ``tags`` map as attributes. The
-    exterior ring is wound positive under the shoelace formula in screen
-    space (y down), as MVT 2.1 requires for an exterior ring.
+    fan-out, ``oversize`` modes and ``tile`` as tile_vectors_ways; each
+    tile renders the rectangle tile-locally (corners may leave [0, extent)
+    on border tiles — renderers clip), with the ``tags`` map as
+    attributes. The exterior ring is wound positive under the shoelace
+    formula in screen space (y down), as MVT 2.1 requires for an exterior
+    ring.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
     """
     ranked, over_cnt = _bbox_tile_fanout(
-        relations, zoom, cap, oversize, [*_BBOX, "tags"], "relations"
+        relations, zoom, cap, oversize, [*_BBOX, "tags"], "relations", tile
     )
     return _attach_oversize(
         _render_mvt(
@@ -591,6 +601,44 @@ def tile_vectors_relations(
         ),
         over_cnt,
     )
+
+
+# A layer of one tile with at most this many members is fetched and
+# encoded on the driver (tile_mvt); a larger one renders through its
+# operator in an executor. Fetch and encode cost ~33 µs of driver Python
+# per member (28k- and 123k-member tiles, 4 vCPU), under the GIL every
+# request thread of the HTTP server shares: this bounds a layer at
+# ~0.14 s, no more than the operator path's own plan build per tile.
+MVT_DRIVER_ROWS = 4096
+
+
+@dataclass(frozen=True)
+class TileLayer:
+    """One MVT layer of ONE tile (``tile_mvt_layers``).
+
+    ``fetch``: the tile's members by the operators' own membership, fid
+    first, in fid order and at most min(cap, MVT_DRIVER_ROWS + 1) rows
+    (one more tells a layer too large for the driver). It is a
+    TakeOrderedAndProject, whose collect() is one job with no exchange
+    (toPandas() would run it as a single-partition shuffle). Tags come as
+    ``map_entries``: collect() turns a map into a dict in hash order, and
+    attribute order is part of the bytes.
+    ``features``: the layer's builder, shared with the render stage.
+    ``render()``: the layer's operator restricted to this tile, the
+    executor path (one row)."""
+
+    name: str
+    tile: int
+    fetch: DataFrame
+    features: Callable[..., list[dict]]
+    render: Callable[[], DataFrame]
+
+    def encode(self, rows: list) -> bytes:
+        """The layer's MVT blob from its fetched rows, on the driver."""
+        from simple_osm_queries_spark.sources import mvt
+
+        zoom, tx, ty = C.tile_zxy_py(self.tile)
+        return mvt.encode_tile([(self.name, self.features(rows, zoom, tx, ty, EXTENT))])
 
 
 def tile_mvt_layers(
@@ -602,49 +650,82 @@ def tile_mvt_layers(
     ty: int,
     cap: int,
     simplify_tol: float = 0.0,
-    extent: int = 4096,
-) -> list[tuple[str, DataFrame, Callable[[list], list[dict]]]]:
-    """ONE tile's MVT layers for a driver-side encode: (layer, plan,
-    features) in nodes -> ways -> relations order. ``plan`` holds tile
-    (tx, ty)'s members by the operators' own membership (a node's
-    ``_tile_local`` tile; a way's or relation's ``_bbox_tile_range``, at
-    most MAX_COVER tiles, as oversize='skip'), ordered by fid and capped:
-    a TakeOrderedAndProject, whose collect() is one job with no exchange
-    (toPandas() would run it as a single-partition shuffle).
-    ``features(rows)`` is the render stage's builder, so
-    ``mvt.encode_tile`` over the layers that have rows gives the three
-    operators' blobs for this tile, concatenated. Tags are fetched as
-    ``map_entries``: collect() turns a map into a dict in hash order, and
-    attribute order is part of the bytes."""
+) -> list[TileLayer]:
+    """ONE tile's MVT layers, nodes -> ways -> relations, for
+    ``tile_mvt``: tile (tx, ty)'s members by the operators' own membership
+    (a node's ``_tile_local`` tile; a way's or relation's
+    ``_bbox_tile_range``, at most MAX_COVER tiles, as oversize='skip'),
+    the render stage's builders and the three operators with ``tile``, so
+    the bytes are the operators' blobs for this tile on either path.
+    Building the operator frames is deferred to ``render()``: most tiles
+    never need them."""
     want = C.tile_id_py(tx, ty, zoom)
-    tid, ix, iy = _tile_local(F.col("lon"), F.col("lat"), zoom, extent)
+    tid, ix, iy = _tile_local(F.col("lon"), F.col("lat"), zoom, EXTENT)
     xmin, xmax, ymin, ymax, n_tiles = _bbox_tile_range(zoom)
     covers = (
         (xmin <= tx) & (xmax >= tx) & (ymin <= ty) & (ymax >= ty) & (n_tiles <= MAX_COVER)
     )
     fid = F.col("id").alias("fid")
     tags = F.map_entries("tags").alias("tags")
-    fetches = [
+    in_tile = nodes.where(tid == want)
+    layers = [
         (
             "nodes",
-            nodes.where(tid == want).select(fid, ix.alias("ix"), iy.alias("iy"), tags),
+            in_tile.select(fid, ix.alias("ix"), iy.alias("iy"), tags),
             _point_features,
+            functools.partial(
+                tile_vectors, in_tile.select("id", "lon", "lat", "tags"), zoom, cap=cap
+            ),
         ),
         (
             "ways",
             ways.where(covers).select(fid, "nodes"),
             functools.partial(_line_features, simplify_tol=simplify_tol),
+            functools.partial(
+                tile_vectors_ways, ways, zoom, cap=cap, oversize="skip",
+                simplify_tol=simplify_tol, tile=want,
+            ),
         ),
-        ("relations", relations.where(covers).select(fid, *_BBOX, tags), _bbox_polygon_features),
-    ]
-    return [
         (
-            layer,
-            plan.orderBy("fid").limit(cap),
-            functools.partial(build, zoom=zoom, tx=tx, ty=ty, extent=extent),
-        )
-        for layer, plan, build in fetches
+            "relations",
+            relations.where(covers).select(fid, *_BBOX, tags),
+            _bbox_polygon_features,
+            functools.partial(
+                tile_vectors_relations, relations, zoom, cap=cap, oversize="skip", tile=want
+            ),
+        ),
     ]
+    limit = min(cap, MVT_DRIVER_ROWS + 1)
+    return [
+        TileLayer(name, want, members.orderBy("fid").limit(limit), features, render)
+        for name, members, features, render in layers
+    ]
+
+
+def tile_mvt(layers: list[TileLayer]) -> bytes:
+    """One tile's MVT bytes from its ``tile_mvt_layers``: the layers'
+    blobs concatenated in order (a tile message is repeated Layer
+    fields), a layer present iff it has members, an empty tile a valid
+    tile too. Every layer's fetch runs (one job each); a layer that fits
+    MVT_DRIVER_ROWS is encoded here from those rows, and the larger ones
+    render in one executor job (their render() frames unioned), so a
+    dense tile does not hold the driver."""
+    from simple_osm_queries_spark.sources import mvt
+
+    fetched = [(layer, layer.fetch.collect()) for layer in layers]
+    big = [layer for layer, rows in fetched if len(rows) > MVT_DRIVER_ROWS]
+    rendered = {}
+    if big:
+        frames = [layer.render().select(F.lit(layer.name).alias("layer"), "mvt") for layer in big]
+        rendered = {
+            r.layer: bytes(r.mvt) for r in functools.reduce(DataFrame.union, frames).collect()
+        }
+    blobs = [
+        rendered[layer.name] if len(rows) > MVT_DRIVER_ROWS else layer.encode(rows)
+        for layer, rows in fetched
+        if rows
+    ]
+    return b"".join(blobs) or mvt.encode_tile([("nodes", [])])
 
 
 def _bbox_tile_range(zoom: int) -> tuple[Column, Column, Column, Column, Column]:
@@ -666,11 +747,14 @@ def _bbox_tile_fanout(
     oversize: str,
     payload_cols: list[str],
     what: str,
+    tile: int | None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(feature -> covered tiles) fan-out shared by the linestring and
     polygon MVT paths: bbox columns -> tile index ranges
-    (``_bbox_tile_range``) -> sequence+explode -> ``_rank_cap``. Returns
-    the ranked (tile_id, fid, payload..., rn, n_total) frame and, for
+    (``_bbox_tile_range``) -> sequence+explode -> [keep only ``tile``] ->
+    ``_rank_cap``. The tile filter has to sit here: Catalyst cannot push
+    a filter through the render's FlatMapGroupsInPandas. Returns the
+    ranked (tile_id, fid, payload..., rn, n_total) frame and, for
     oversize='skip', the lazy 1-row ``n_oversize`` count for
     _attach_oversize (None for 'raise', where a nonzero count raised)."""
     if oversize not in ("raise", "skip"):
@@ -710,6 +794,8 @@ def _bbox_tile_fanout(
             *payload_cols,
         )
     )
+    if tile is not None:
+        fanned = fanned.where(F.col("tile_id") == F.lit(tile))
     return _rank_cap(fanned, cap), over_cnt
 
 

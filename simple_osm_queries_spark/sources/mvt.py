@@ -36,6 +36,7 @@ from __future__ import annotations
 from typing import Any, Iterable
 
 POINT, LINESTRING, POLYGON = 1, 2, 3
+EXTENT = 4096  # tile-local grid size; the encoders' and the tile operators' default
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +133,7 @@ def encode_geometry(geom_type: int, rings: list[list[tuple[int, int]]]) -> list[
 def encode_layer(
     name: str,
     features: list[dict],
-    extent: int = 4096,
+    extent: int = EXTENT,
 ) -> bytes:
     """One Layer message. Each feature dict: ``id`` (int, optional),
     ``type`` (POINT/LINESTRING/POLYGON), ``rings`` (see encode_geometry),
@@ -173,7 +174,7 @@ def encode_layer(
     return bytes(out)
 
 
-def encode_tile(layers: list[tuple[str, list[dict]]], extent: int = 4096) -> bytes:
+def encode_tile(layers: list[tuple[str, list[dict]]], extent: int = EXTENT) -> bytes:
     return b"".join(
         _field_bytes(3, encode_layer(name, feats, extent)) for name, feats in layers
     )

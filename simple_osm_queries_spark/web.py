@@ -10,10 +10,12 @@ rendering, error label, localStorage; self-contained canvas, no CDN).
 
 stdlib ThreadingHTTPServer — the Spark driver is the server process, the
 cluster does the work, exactly like the reference's single process plus
-goroutines (but distributed underneath). One tile is small, so
-`GET /tiles/{z}/{x}/{y}.mvt` answers the way the reference answers from its
-in-process index (api.go:117): one fetch per layer of the tile's capped,
-fid-ordered members, encoded on the driver; `.png` still renders through
+goroutines (but distributed underneath). `GET /tiles/{z}/{x}/{y}.mvt`
+answers a tile layer of at most tiles.MVT_DRIVER_ROWS members the way the
+reference answers from its in-process index (api.go:117): one fetch of the
+layer's capped, fid-ordered members, encoded on the driver. A larger layer
+(a dense or low-zoom tile) renders in an executor instead, so its encode
+does not hold the GIL the request threads share. `.png` renders through
 the tile_heatmap operator.
 """
 
@@ -22,8 +24,8 @@ from __future__ import annotations
 import functools
 import json
 import math
-from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +35,9 @@ from simple_osm_queries_spark.query.parser import ParseError, parse_query
 from simple_osm_queries_spark.query.planner import PlanError, plan_query
 from simple_osm_queries_spark.sources.dataset import OsmDataset
 from simple_osm_queries_spark.sources.geojson import to_geojson_capped
+
+if TYPE_CHECKING:
+    from simple_osm_queries_spark.operators.tiles import TileLayer
 
 # POST /query result cap: the reference streams the FULL GeoJSON result into
 # one response (api.go:117) — a planet-wide wildcard query OOMs the driver.
@@ -92,11 +97,11 @@ def _tile_frame(dataset: OsmDataset, z: int, x: int, y: int) -> DataFrame:
 
 def _mvt_layers(
     dataset: OsmDataset, z: int, x: int, y: int, simplify: float, cap: int
-) -> list[tuple[str, DataFrame, Callable[[list], list[dict]]]]:
-    """GET /tiles/{z}/{x}/{y}.mvt's (layer, fetch plan, features) triples
-    (operators/tiles.py tile_mvt_layers) over the bbox-prefiltered
-    tables: nodes inside the tile's bounds, ways and relations whose bbox
-    meets them (their bbox columns reach parquet min-max pruning)."""
+) -> list[TileLayer]:
+    """GET /tiles/{z}/{x}/{y}.mvt's layers (operators/tiles.py
+    tile_mvt_layers) over the bbox-prefiltered tables: nodes inside the
+    tile's bounds, ways and relations whose bbox meets them (their bbox
+    columns reach parquet min-max pruning)."""
     from simple_osm_queries_spark.operators.tiles import tile_mvt_layers
 
     bounds = _tile_bounds(z, x, y)
@@ -107,22 +112,6 @@ def _mvt_layers(
         dataset.relations.where(meets),
         z, x, y, cap, simplify,
     )
-
-
-def _mvt_tile(
-    dataset: OsmDataset, z: int, x: int, y: int, simplify: float, cap: int
-) -> bytes:
-    """The .mvt body: each layer's members fetched (one job per layer, no
-    exchange) and encoded here, once; a layer is present iff it has
-    members, and an empty tile is a valid MVT too."""
-    from simple_osm_queries_spark.sources import mvt
-
-    layers = []
-    for layer, plan, features in _mvt_layers(dataset, z, x, y, simplify, cap):
-        rows = plan.collect()
-        if rows:
-            layers.append((layer, features(rows)))
-    return mvt.encode_tile(layers or [("nodes", [])])
 
 
 @functools.cache
@@ -239,11 +228,12 @@ def make_handler(
             raster for ONE slippy tile (operators/tiles.py tile_heatmap
             over the tile's bbox-filtered nodes), and .mvt — the same
             tile as a Mapbox Vector Tile with a nodes, a ways and a
-            relations layer (tags as MVT attributes). The .mvt members
-            are fetched per layer and encoded here on the driver
-            (tiles.tile_mvt_layers): the bytes tile_vectors,
-            tile_vectors_ways and tile_vectors_relations render for this
-            tile, without their per-tile exchanges and pandas stages. The
+            relations layer (tags as MVT attributes): the bytes
+            tile_vectors, tile_vectors_ways and tile_vectors_relations
+            render for this tile (tiles.tile_mvt). A layer of at most
+            tiles.MVT_DRIVER_ROWS members is fetched and encoded here on
+            the driver, without the operators' exchange and pandas stage;
+            a larger one renders through them in an executor. The
             reference's UI sends every feature to the browser as GeoJSON;
             raster keeps a dense region drawable, MVT keeps it
             *interactive* in any standard map client. Zoom capped like
@@ -275,7 +265,9 @@ def make_handler(
                 return
             try:
                 if fmt == "mvt":
-                    body = _mvt_tile(dataset, z, x, y, simplify, max_rows)
+                    from simple_osm_queries_spark.operators.tiles import tile_mvt
+
+                    body = tile_mvt(_mvt_layers(dataset, z, x, y, simplify, max_rows))
                     self._send(200, body, "application/vnd.mapbox-vector-tile")
                     return
                 rows = _tile_frame(dataset, z, x, y).collect()

@@ -473,6 +473,72 @@ def test_http_mvt_multilayer(spark):
         assert len(layers["nodes"]["features"]) == n_nodes_here
 
 
+def test_mvt_dense_layer_renders_in_executor(spark, monkeypatch):
+    """tiles.tile_mvt encodes a layer of at most MVT_DRIVER_ROWS members on
+    the driver from its fetched rows and renders a larger one through its
+    operator, restricted to the tile, in an executor (TileLayer.render).
+    The bytes are the three operators' blobs whichever path each layer
+    takes: at the threshold, one below it (a tile mixing both paths), at
+    0, and under a cap smaller than every layer."""
+    import dataclasses
+
+    from simple_osm_queries_spark import web
+    from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.operators import tiles
+    from simple_osm_queries_spark.sources.dataset import from_generator
+
+    ds = from_generator(spark, n_nodes=400, n_ways=80, n_relations=20).cache()
+    zoom = 12
+
+    def operators(cap):
+        """{tile_id: {layer: (n_total, blob)}} from the three operators"""
+        out: dict = {}
+        for layer, frame in (
+            ("nodes", tiles.tile_vectors(ds.nodes, zoom, cap=cap)),
+            ("ways", tiles.tile_vectors_ways(ds.ways, zoom, cap=cap)),
+            ("relations", tiles.tile_vectors_relations(ds.relations, zoom, cap=cap)),
+        ):
+            for r in frame.collect():
+                out.setdefault(r.tile_id, {})[layer] = (r.n_total, bytes(r.mvt))
+        return out
+
+    full = operators(65536)
+    # the tile with the most nodes among those holding all three layers
+    tid = max((t for t, ls in full.items() if len(ls) == 3), key=lambda t: full[t]["nodes"][0])
+    size = {layer: n for layer, (n, _) in full[tid].items()}
+    assert min(size.values()) >= 4 and len(set(size.values())) == 3, size
+    largest = max(size, key=size.get)
+    _, tx, ty = C.tile_zxy_py(tid)
+
+    def serve(threshold, cap):
+        """(body, layers rendered in an executor) at this threshold"""
+        monkeypatch.setattr(tiles, "MVT_DRIVER_ROWS", threshold)
+        rendered = []
+
+        def spied(layer):
+            def render():
+                rendered.append(layer.name)
+                return layer.render()
+
+            return dataclasses.replace(layer, render=render)
+
+        layers = web._mvt_layers(ds, zoom, tx, ty, 0.0, cap)
+        body = tiles.tile_mvt([spied(layer) for layer in layers])
+        return body, sorted(rendered)
+
+    def concat(blobs):
+        return b"".join(blobs[layer][1] for layer in ("nodes", "ways", "relations"))
+
+    everything = sorted(size)
+    assert serve(size[largest], 100_000) == (concat(full[tid]), [])
+    assert serve(size[largest] - 1, 100_000) == (concat(full[tid]), [largest])
+    assert serve(0, 100_000) == (concat(full[tid]), everything)
+    capped = concat(operators(3)[tid])
+    # the cap-limited fetch still tells a layer over the threshold
+    assert serve(2, 3) == (capped, everything)
+    assert serve(3, 3) == (capped, [])
+
+
 def test_tile_vectors_ways_simplify(spark):
     """simplify_tol runs DP on the projected tile coords: vertex count
     drops, endpoints and the sharp corner survive, every dropped vertex is

@@ -440,27 +440,28 @@ def test_tile_plan_shape(tile_frames, case):
 
 def test_tile_route_plan_shape(spark, tile_frames):
     """Plan pin for GET /tiles/{z}/{x}/{y}.mvt (web._mvt_layers): each
-    layer's fetch is one TakeOrderedAndProject over its filtered scan, with
-    no Exchange, no pandas render and no Arrow UDF, and serving the tile
-    runs one single-stage job per layer. A toPandas() fetch keeps the same
-    plan but executes the TakeOrderedAndProject as a single-partition
-    shuffle, a second stage, which the stage count below catches."""
+    layer's driver fetch is one TakeOrderedAndProject over its filtered
+    scan, with no Exchange, no pandas render and no Arrow UDF, and serving
+    a tile whose layers fit tiles.MVT_DRIVER_ROWS runs one single-stage
+    job per layer. A toPandas() fetch keeps the same plan but executes the
+    TakeOrderedAndProject as a single-partition shuffle, a second stage,
+    which the stage count below catches."""
     from simple_osm_queries_spark import web
     from simple_osm_queries_spark.sources.dataset import OsmDataset
 
     ds = OsmDataset(*tile_frames)
     x, y = C.tile_xy_py(9.95, 53.55, 12)
     layers = web._mvt_layers(ds, 12, x, y, 0.0, 100)
-    assert [layer for layer, _, _ in layers] == ["nodes", "ways", "relations"]
-    for layer, plan, _ in layers:
-        kinds = [n for n, _ in plan_nodes(plan)]
-        assert kinds.count("TakeOrderedAndProject") == 1, (layer, kinds)
+    assert [layer.name for layer in layers] == ["nodes", "ways", "relations"]
+    for layer in layers:
+        kinds = [n for n, _ in plan_nodes(layer.fetch)]
+        assert kinds.count("TakeOrderedAndProject") == 1, (layer.name, kinds)
         for bad in ("Exchange", "FlatMapGroupsInPandas", "ArrowEvalPython"):
-            assert bad not in kinds, (layer, kinds)
+            assert bad not in kinds, (layer.name, kinds)
     sc = spark.sparkContext
     sc.setJobGroup("test_tile_route_plan_shape", "mvt route")
     try:
-        body = web._mvt_tile(ds, 12, x, y, 0.0, 100)
+        body = tiles.tile_mvt(layers)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert body
