@@ -203,8 +203,7 @@ def cmd_query(spark, args) -> None:
 
     ds = _build_dataset(spark, args)
     result = run_query(args.query, ds)
-    write_geojson_file(result, args.out)
-    print(f"wrote {result.count()} features -> {args.out}")
+    print(f"wrote {write_geojson_file(result, args.out)} features -> {args.out}")
 
 
 def cmd_server(spark, args) -> None:

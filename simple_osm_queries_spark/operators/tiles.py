@@ -581,7 +581,7 @@ def tile_vectors_relations(
     """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
     per tile — the geometry the reference outputs for relations
     (grid_reader.go:513-517 emits the relation's bounding box as a polygon
-    ring; sources/geojson.py:33-45 mirrors it), completing the
+    ring; sources/geojson.py::_feature mirrors it), completing the
     POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
     fan-out, ``oversize`` modes and ``tile`` as tile_vectors_ways; each
     tile renders the rectangle tile-locally (corners may leave [0, extent)

@@ -1,130 +1,77 @@
 """GeoJSON sink (S7).
 
-Mirrors /root/reference/src/index/io.go:27-76: FeatureCollection with decoded
+Mirrors the reference's src/index/io.go:27-76: FeatureCollection with decoded
 tag properties plus ``@osm_id``/``@osm_type``; nodes -> Point, ways ->
 LineString of their node coordinates, relations -> bbox Polygon (the
 reference's bbox approximation, grid_reader.go:513-517).
 
-Two paths: driver-side ``to_geojson`` (small results, the reference's use
-case) and distributed ``write_geojson_lines`` (one GeoJSON Feature per line,
-arbitrarily large results — the scale path).
+One feature builder, ``_feature``: a JVM column expression that turns a
+query result row (``planner._project_output``'s columns) into one Feature's
+JSON text. Every sink selects it: ``to_geojson_capped`` (at most
+``max_rows`` features, the HTTP route), ``write_geojson_file`` (the whole
+result in one file, the CLI) and ``write_geojson_lines`` (distributed, one
+Feature per line, arbitrarily large results — the scale path).
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _feature_dict(row) -> dict:
-    props = dict(row.tags or {})
-    props["@osm_id"] = row.id
-    props["@osm_type"] = row.osm_type
-    if row.osm_type == "node":
-        geometry = {"type": "Point", "coordinates": [row.lon, row.lat]}
-    elif row.osm_type == "way":
-        geometry = {
-            "type": "LineString",
-            "coordinates": [[n.lon, n.lat] for n in (row.nodes or [])],
-        }
-    else:  # relation: bbox polygon approximation
-        geometry = {
-            "type": "Polygon",
-            "coordinates": [
-                [
-                    [row.min_lon, row.min_lat],
-                    [row.max_lon, row.min_lat],
-                    [row.max_lon, row.max_lat],
-                    [row.min_lon, row.max_lat],
-                    [row.min_lon, row.min_lat],
-                ]
-            ],
-        }
-    return {"type": "Feature", "geometry": geometry, "properties": props}
+# ``@osm_id`` is written as a JSON number, so it goes in front of the tags
+# by hand (a map's values are strings); a tag named like a reserved key is
+# dropped, so the row's own id and type win. A way without nodes gets empty
+# coordinates: ``to_json`` would drop a null field.
+_FEATURE_SQL = """concat(
+  '{"type":"Feature","geometry":',
+  CASE osm_type
+    WHEN 'node' THEN to_json(named_struct('type', 'Point', 'coordinates', array(lon, lat)))
+    WHEN 'way' THEN to_json(named_struct('type', 'LineString', 'coordinates',
+      coalesce(transform(nodes, n -> array(n.lon, n.lat)), array())))
+    ELSE to_json(named_struct('type', 'Polygon', 'coordinates', array(array(
+      array(min_lon, min_lat), array(max_lon, min_lat), array(max_lon, max_lat),
+      array(min_lon, max_lat), array(min_lon, min_lat)))))
+  END,
+  ',"properties":{"@osm_id":', id, ',',
+  substr(to_json(map_concat(
+    map_filter(coalesce(tags, map()), (k, v) -> k NOT IN ('@osm_id', '@osm_type')),
+    map('@osm_type', osm_type))), 2),
+  '}')"""
 
 
-def to_geojson(result: DataFrame) -> dict:
-    """Collect a (small) query result into a FeatureCollection dict."""
-    return {
-        "type": "FeatureCollection",
-        "features": [_feature_dict(r) for r in result.collect()],
-    }
+def _feature() -> Column:
+    """One GeoJSON Feature's text per query result row."""
+    return F.expr(_FEATURE_SQL)
 
 
-def to_geojson_capped(result: DataFrame, max_rows: int) -> dict:
-    """FeatureCollection bounded to ``max_rows`` features, fetched in one
-    action of at most ``max_rows + 1`` rows (the driver never holds more,
-    unlike the reference's unbounded full-result write, api.go:117). When
-    the cap cuts the result the collection carries ``"truncated": true``."""
-    rows = result.limit(max_rows + 1).collect()
-    fc: dict = {
-        "type": "FeatureCollection",
-        "features": [_feature_dict(r) for r in rows[:max_rows]],
-    }
-    if len(rows) > max_rows:
-        fc["truncated"] = True
-    return fc
+def _collection(features: list[str], truncated: bool) -> str:
+    """FeatureCollection text around Feature texts from ``_feature``."""
+    flag = ',"truncated":true' if truncated else ""
+    return '{"type":"FeatureCollection","features":[' + ",".join(features) + "]" + flag + "}"
 
 
-def write_geojson_file(result: DataFrame, path: str) -> None:
+def to_geojson_capped(result: DataFrame, max_rows: int) -> str:
+    """FeatureCollection text bounded to ``max_rows`` features, fetched in
+    one action of at most ``max_rows + 1`` rows (the driver never holds
+    more, unlike the reference's unbounded full-result write, api.go:117).
+    When the cap cuts the result the collection carries
+    ``"truncated": true``."""
+    rows = result.limit(max_rows + 1).select(_feature()).collect()
+    return _collection([r[0] for r in rows[:max_rows]], len(rows) > max_rows)
+
+
+def write_geojson_file(result: DataFrame, path: str) -> int:
+    """Write the whole result as one FeatureCollection file (collected on
+    the driver); returns the number of features written."""
+    features = [r[0] for r in result.select(_feature()).collect()]
     with open(path, "w") as f:
-        json.dump(to_geojson(result), f)
+        f.write(_collection(features, False))
+    return len(features)
 
 
 def write_geojson_lines(result: DataFrame, path: str) -> None:
     """Distributed newline-delimited GeoJSON (one Feature per line)."""
-    mkgeom = F.when(
-        F.col("osm_type") == "node",
-        F.to_json(
-            F.struct(F.lit("Point").alias("type"), F.array("lon", "lat").alias("coordinates"))
-        ),
-    ).otherwise(
-        F.when(
-            F.col("osm_type") == "way",
-            F.to_json(
-                F.struct(
-                    F.lit("LineString").alias("type"),
-                    F.transform(F.col("nodes"), lambda n: F.array(n["lon"], n["lat"])).alias(
-                        "coordinates"
-                    ),
-                )
-            ),
-        ).otherwise(
-            F.to_json(
-                F.struct(
-                    F.lit("Polygon").alias("type"),
-                    F.array(
-                        F.array(
-                            F.array("min_lon", "min_lat"),
-                            F.array("max_lon", "min_lat"),
-                            F.array("max_lon", "max_lat"),
-                            F.array("min_lon", "max_lat"),
-                            F.array("min_lon", "min_lat"),
-                        )
-                    ).alias("coordinates"),
-                )
-            )
-        )
-    )
-    props = F.map_concat(
-        F.coalesce(F.col("tags"), F.create_map().cast("map<string,string>")),
-        F.create_map(
-            F.lit("@osm_id"), F.col("id").cast("string"),
-            F.lit("@osm_type"), F.col("osm_type"),
-        ),
-    )
-    lines = result.select(
-        F.concat(
-            F.lit('{"type": "Feature", "geometry": '),
-            mkgeom,
-            F.lit(', "properties": '),
-            F.to_json(props),
-            F.lit("}"),
-        ).alias("value")
-    )
-    lines.write.mode("overwrite").text(path)
+    result.select(_feature().alias("value")).write.mode("overwrite").text(path)
 
 
 def h3_cells_feature_collection(cells, properties: dict | None = None) -> dict:

@@ -359,14 +359,14 @@ def make_handler(
                 self._error(400, "parse error", str(e))
                 return
             try:
-                fc = to_geojson_capped(plan_query(query, dataset), max_rows)
+                geojson = to_geojson_capped(plan_query(query, dataset), max_rows)
             except PlanError as e:
                 self._error(400, "plan error", str(e))
                 return
             except Exception as e:  # execution error envelope (api.go:100-113)
                 self._error(500, "execution error", str(e))
                 return
-            self._send(200, json.dumps(fc).encode(), "application/geo+json")
+            self._send(200, geojson.encode(), "application/geo+json")
 
         def log_message(self, fmt, *args):  # quiet
             pass

@@ -142,10 +142,12 @@ def test_reference_test_small_fixture(spark):
 
 
 def test_geojson_sink(dataset):
-    from simple_osm_queries_spark.sources.geojson import to_geojson
+    import json
+
+    from simple_osm_queries_spark.sources.geojson import to_geojson_capped
 
     q = parse_query(f"bbox({WINDOW}).nodes{{ amenity=bench AND seats=* }}")
-    fc = to_geojson(plan_query(q, dataset))
+    fc = json.loads(to_geojson_capped(plan_query(q, dataset), 1000))
     assert fc["type"] == "FeatureCollection"
     assert fc["features"]
     f = fc["features"][0]

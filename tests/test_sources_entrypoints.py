@@ -196,7 +196,7 @@ def test_http_server_query_and_errors(ref_dataset):
         httpd.server_close()  # frees port 18099 even when an assertion failed
 
 
-def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch):
+def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch, capsys):
     """Drive the CLI functions directly (shared test session instead of a
     fresh one)."""
     from simple_osm_queries_spark import cli
@@ -213,7 +213,11 @@ def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch):
         generate=0,
         out=str(tmp_path / "out.geojson"),
     )
+    # the query runs once: the printed count is the number written
+    frame_cls = type(spark.range(1))  # pyspark's concrete DataFrame class
+    monkeypatch.setattr(frame_cls, "count", lambda self: pytest.fail("second query job"))
     cli.cmd_query(spark, q)
+    assert f"wrote 2 features -> {q.out}" in capsys.readouterr().out
     fc = json.load(open(q.out))
     assert {f["properties"]["@osm_id"] for f in fc["features"]} == {2, 3}
 
