@@ -18,7 +18,6 @@ operators/   north-rule + training-pipeline operators: point-in-polygon, kNN,
              similarity search, text analysis, multimodal plumbing
 sources/     dataset container (nodes/ways/relations), deterministic synthetic
              generator, partitioned index build w/ checkpoint+resume, GeoJSON sink
-streaming/   Structured Streaming variants (windowed cell aggregation)
 """
 
 __version__ = "0.1.0"

@@ -59,12 +59,6 @@ def pack_cell(x: Column, y: Column) -> Column:
     )
 
 
-def unpack_cell(cell: Column) -> tuple[Column, Column]:
-    x = (cell / F.lit(1 << _SHIFT)).cast("long") - F.lit(_OFF)
-    y = (cell % F.lit(1 << _SHIFT)).cast("long") - F.lit(_OFF)
-    return x.cast("int"), y.cast("int")
-
-
 def cell_of(lon: Column, lat: Column, cell_w: float = DEFAULT_CELL_W, cell_h: float = DEFAULT_CELL_H) -> Column:
     """Packed grid cell id for a coordinate (the engine's partition key)."""
     return pack_cell(cell_x(lon, cell_w), cell_y(lat, cell_h))
@@ -84,10 +78,6 @@ def cell_xy_py(lon: float, lat: float, cell_w: float = DEFAULT_CELL_W, cell_h: f
     return _trunc(lon / cell_w), _trunc(lat / cell_h)
 
 
-def pack_cell_py(x: int, y: int) -> int:
-    return ((x + _OFF) << _SHIFT) + (y + _OFF)
-
-
 def cover_bbox_py(
     min_lon: float,
     min_lat: float,
@@ -104,15 +94,6 @@ def cover_bbox_py(
     x0, y0 = cell_xy_py(min_lon, min_lat, cell_w, cell_h)
     x1, y1 = cell_xy_py(max_lon, max_lat, cell_w, cell_h)
     return min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1)
-
-
-def k_ring_py(x: int, y: int, k: int) -> list[tuple[int, int]]:
-    """All grid cells within Chebyshev distance k (the (2k+1)^2 block).
-
-    The planner's kNN candidate expansion; the moral equivalent of H3's
-    k-ring on the flat grid / quadtree fallback.
-    """
-    return [(x + dx, y + dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
 
 
 # ---------------------------------------------------------------------------
@@ -189,13 +170,6 @@ def tile_fxy_py(lon: float, lat: float, zoom: int) -> tuple[float, float]:
     return fx, fy
 
 
-def tile_xy_py(lon: float, lat: float, zoom: int) -> tuple[int, int]:
-    n = 1 << zoom
-    fx, fy = tile_fxy_py(lon, lat, zoom)
-    tx, ty = int(math.floor(fx)), int(math.floor(fy))
-    return min(max(tx, 0), n - 1), min(max(ty, 0), n - 1)
-
-
 def tile_id_py(tx: int, ty: int, zoom: int) -> int:
     return (zoom << 58) | (tx << 29) | ty
 
@@ -251,28 +225,6 @@ def cell_s2(lon: Column, lat: Column, level: int = 12) -> Column:
         return pd.Series(_s2impl.to_signed(cells))
 
     return _enc(lon, lat)
-
-
-def h3_center(cell: Column) -> Column:
-    """Decode H3 cell ids to their center struct(lon, lat) — the inverse of
-    :func:`cell_h3` (self-verifying: every center re-encodes to its cell).
-    Requires uniform resolution per batch (group by resolution first for
-    mixed sets)."""
-
-    @F.pandas_udf("struct<lon: double, lat: double>")
-    def _dec(cells: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        from simple_osm_queries_spark.functions import h3_encode as _h3impl
-
-        if not len(cells):
-            return pd.DataFrame({"lon": [], "lat": []})
-        lng, lat = _h3impl.cell_to_lnglat(
-            cells.to_numpy(dtype=np.int64).view(np.uint64)
-        )
-        return pd.DataFrame({"lon": lng, "lat": lat})
-
-    return _dec(cell)
 
 
 # ---------------------------------------------------------------------------
@@ -338,35 +290,3 @@ def geohash(lon: Column, lat: Column, precision: int = 9) -> Column:
         for c in range(precision)
     ]
     return F.concat(*chars)
-
-
-def geohash_py(lon: float, lat: float, precision: int = 9) -> str:
-    """Scalar oracle: classic bisection implementation."""
-    lo_lon, hi_lon, lo_lat, hi_lat = -180.0, 180.0, -90.0, 90.0
-    bits = []
-    even = True
-    while len(bits) < 5 * precision:
-        if even:
-            mid = (lo_lon + hi_lon) / 2
-            if lon >= mid:
-                bits.append(1)
-                lo_lon = mid
-            else:
-                bits.append(0)
-                hi_lon = mid
-        else:
-            mid = (lo_lat + hi_lat) / 2
-            if lat >= mid:
-                bits.append(1)
-                lo_lat = mid
-            else:
-                bits.append(0)
-                hi_lat = mid
-        even = not even
-    out = []
-    for c in range(precision):
-        v = 0
-        for b in bits[c * 5 : c * 5 + 5]:
-            v = v * 2 + b
-        out.append(_GEOHASH32[v])
-    return "".join(out)

@@ -9,11 +9,11 @@ leaf cells along a face-local Hilbert curve; the 64-bit id is
 
     id = face(3 bits) . hilbert_position(2*level bits) . 1 . 0...0
 
-so that ids sort along the space-filling curve and a cell's children occupy
-the contiguous range [range_min, range_max] — containment is integer
-comparison, parents are bit math. This module implements encode (lat/lng ->
-cell at level), decode (cell -> face/i/j), parent/level/range helpers, all
-as whole-array numpy (one pass of table lookups per 4-bit Hilbert block; no
+so that ids sort along the space-filling curve and a cell's descendants
+occupy one contiguous id range — containment is integer comparison,
+parents are bit math. This module implements encode (lat/lng -> cell at
+level), decode (cell -> face/i/j) and the parent helpers, all as
+whole-array numpy (one pass of table lookups per 4-bit Hilbert block; no
 per-row Python).
 
 This replaces the quadtree *fallback* the engine used when no S2 library was
@@ -191,37 +191,6 @@ def parent_id(cell: np.ndarray, level: int) -> np.ndarray:
     return (cell & ~(lsb - np.uint64(1)) & ~lsb) | lsb
 
 
-def cell_level(cell: np.ndarray) -> np.ndarray:
-    """Level from the trailing-one position."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    tz = np.zeros(cell.shape, dtype=np.int64)
-    c = cell.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = (np.uint64(1) << np.uint64(shift)) - np.uint64(1)
-        zero_low = (c & mask) == 0
-        tz += np.where(zero_low, shift, 0)
-        c = np.where(zero_low, c >> np.uint64(shift), c)
-    return MAX_LEVEL - tz // 2
-
-
-def range_min(cell: np.ndarray) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.uint64)
-    lsb = cell & (~cell + np.uint64(1))
-    return cell - lsb + np.uint64(1)
-
-
-def range_max(cell: np.ndarray) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.uint64)
-    lsb = cell & (~cell + np.uint64(1))
-    return cell + lsb - np.uint64(1)
-
-
-def contains(parent: np.ndarray, child: np.ndarray) -> np.ndarray:
-    return (range_min(parent) <= np.asarray(child, np.uint64)) & (
-        np.asarray(child, np.uint64) <= range_max(parent)
-    )
-
-
 # ---------------------------------------------------------------------------
 # column forms (pure JVM bit math over signed-long ids, codegen-friendly)
 # ---------------------------------------------------------------------------
@@ -242,20 +211,6 @@ def lsb_col(cell):
     from pyspark.sql import functions as F
 
     return cell.bitwiseAND(-cell)
-
-
-def range_min_col(cell):
-    return cell - lsb_col(cell) + 1
-
-
-def range_max_col(cell):
-    return cell + lsb_col(cell) - 1
-
-
-def contains_col(parent, child):
-    """Signed comparisons are safe: a cell's range never leaves its face,
-    so min/child/max always share a sign."""
-    return (range_min_col(parent) <= child) & (child <= range_max_col(parent))
 
 
 # ---------------------------------------------------------------------------
@@ -308,7 +263,3 @@ def cell_to_lnglat(cell) -> tuple[np.ndarray, np.ndarray]:
 def to_signed(cell: np.ndarray) -> np.ndarray:
     """Two's-complement view for Spark LongType columns."""
     return np.asarray(cell, dtype=np.uint64).view(np.int64)
-
-
-def from_signed(col: np.ndarray) -> np.ndarray:
-    return np.asarray(col, dtype=np.int64).view(np.uint64)

@@ -119,19 +119,6 @@ def _wipe_if_input_changed(out_path: str, input_fingerprint: str) -> bool:
     return stale
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath (the
-    `soq_iceberg` hadoop catalog declared in session.py is then usable).
-    Requires iceberg-spark-runtime-<spark_major>.jar — not bundled here."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def _iceberg_write_band(
     spark: SparkSession, band_df: DataFrame, table: str, partition_col: str = "cell_x"
 ) -> None:
@@ -195,8 +182,8 @@ def build_index(
 
     ``backend``: 'parquet' (default — partitioned directories + dynamic
     overwrite) or 'iceberg' (writeTo the ``iceberg_table`` in the
-    `soq_iceberg` catalog; requires the Iceberg Spark runtime jar — probe
-    with :func:`iceberg_available`). Manifests/resume logic is shared;
+    `soq_iceberg` catalog; requires the Iceberg Spark runtime jar, which is
+    not bundled). Manifests/resume logic is shared;
     out_path still holds the _manifests dir for the iceberg backend.
     """
     report = {"bands": 0, "skipped": 0, "rows": 0, "t_sec": 0.0, "wiped": False}

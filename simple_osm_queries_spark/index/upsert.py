@@ -32,9 +32,9 @@ Every state is recoverable: a crash at any point leaves each partition's
 bytes in exactly one of data/backup/stage, and
 :func:`recover_pending_upserts` (run automatically at the start of every
 upsert) rolls the commit FORWARD idempotently. The backup directory IS the
-previous snapshot: :func:`read_index` with ``version=N`` reassembles any
-retained historical version (poor-man's time travel, VERDICT r4 #8);
-:func:`gc_snapshots` bounds retention.
+previous snapshot: :func:`read_index_version` ``(spark, out_path, N)``
+reassembles any retained historical version (poor-man's time travel,
+VERDICT r4 #8); :func:`gc_snapshots` bounds retention.
 
 Readers concurrent with a commit can see a torn view for the few seconds
 of metadata moves (same caveat as any non-transactional table format);

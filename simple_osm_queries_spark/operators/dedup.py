@@ -57,14 +57,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, *cols: str) -> DataFrame:
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, *cols: str) -> DataFrame:
-    """Drop exact duplicates, keeping the smallest id per fingerprint."""
-    keep = exact_dup_groups(df, id_col, *cols).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 # --- shingles ------------------------------------------------------------------
 
 
@@ -1098,18 +1090,3 @@ def connected_components(
     _free(edges)
     _free(nodes)
     return labels
-
-
-def near_dup_survivors(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Drop all but the min-id document of every near-dup component."""
-    comps = connected_components(pairs, id_a, id_b)
-    losers = comps.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")

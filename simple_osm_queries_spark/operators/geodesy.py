@@ -4,7 +4,7 @@ The reference stores way geometry (ordered node lon/lats,
 /root/reference/src/index/grid_reader.go:80-142 materializes them for
 output) but never measures it — no length, no area, no simplification.
 A training-data/analytics engine wants all three (filter ways by length,
-rank polygons by area, thin dense geometries before rendering/vector
+rank polygons by area, thin dense geometries before rendering vector
 tiles), so they are first-class here:
 
 * ``way_length_m``   — great-circle (haversine) length of the ordered
@@ -22,24 +22,20 @@ tiles), so they are first-class here:
   < 4e-4 relative for ~0.5-degree edges, < 1e-5 below 0.1 degree —
   property-tested); NOT for rings that enclose a pole (the lon winding
   cancels). Pure column math.
-* ``simplify_dp``    — Douglas–Peucker polyline simplification in
-  meters (equirect local projection about each way's mean latitude, the
-  buffer family's metric), Arrow-batched via ``mapInPandas`` with an
-  iterative numpy stack (no Python recursion limits). Endpoints are
-  always kept; output is an ordered subsequence of the input.
+* ``_dp_mask``       — Douglas–Peucker keep-mask over planar points with
+  an iterative numpy stack (no Python recursion limits); the ``.mvt``
+  route's ``simplify=`` thins each way on its tile coordinates with it
+  (tiles._line_features). Endpoints are always kept.
 
 Scale shape: length/area are per-row column expressions (no shuffle, no
-UDF — whole-stage codegen); simplify is one Arrow pass, no shuffle.
+UDF — whole-stage codegen).
 All distances use knn.EARTH_RADIUS_M (the H3-documented authalic radius)
 so meters agree across the kNN, buffer, and measure families.
 """
 
 from __future__ import annotations
 
-# module-level imports: pandas_udf/mapInPandas type-hint resolution breaks
-# with `from __future__ import annotations` + function-local imports
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,7 +142,7 @@ def destination_cols(
 
 
 def _dp_mask(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
-    """Iterative Douglas–Peucker keep-mask over projected coords (meters).
+    """Iterative Douglas–Peucker keep-mask over planar coords.
 
     Classic stack formulation (no recursion): for span (i, j), find the
     interior point with max perpendicular distance to chord i–j; if it
@@ -177,60 +173,3 @@ def _dp_mask(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
             stack.append((i, k))
             stack.append((k, j))
     return keep
-
-
-def simplify_dp(
-    ways: DataFrame,
-    tolerance_m: float,
-    nodes_col: str = "nodes",
-    id_col: str = "id",
-) -> DataFrame:
-    """Douglas–Peucker simplification: (id, nodes, n_in, n_out) with
-    ``nodes`` an ordered subsequence of the input node structs whose
-    max deviation from the original polyline is <= ``tolerance_m``.
-
-    Distance is planar meters in the equirect projection about each way's
-    own mean latitude (the buffer family's local metric — documented
-    approximation, fine for the sub-degree ways this engine indexes).
-    Endpoints always survive; ways with <= 2 nodes pass through. One
-    Arrow-batched pass, no shuffle; per-way cost O(n log n) average.
-    """
-    if tolerance_m < 0:
-        raise ValueError(f"tolerance_m must be >= 0, got {tolerance_m}")
-
-    schema = ways.select(id_col, nodes_col).schema
-    out_schema = (
-        f"id {schema[0].dataType.simpleString()}, "
-        f"nodes {schema[1].dataType.simpleString()}, n_in int, n_out int"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out_nodes = []
-            n_in = []
-            n_out = []
-            for nodes in pdf[nodes_col]:
-                nodes = list(nodes)
-                n = len(nodes)
-                n_in.append(n)
-                if n <= 2 or tolerance_m == 0.0:
-                    out_nodes.append(nodes)
-                    n_out.append(n)
-                    continue
-                lons = np.array([p["lon"] for p in nodes], dtype=np.float64)
-                lats = np.array([p["lat"] for p in nodes], dtype=np.float64)
-                k = np.cos(np.radians(lats.mean()))
-                m_per_deg = EARTH_RADIUS_M * np.pi / 180.0
-                keep = _dp_mask(lons * k * m_per_deg, lats * m_per_deg, tolerance_m)
-                out_nodes.append([nodes[i] for i in np.flatnonzero(keep)])
-                n_out.append(int(keep.sum()))
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "nodes": out_nodes,
-                    "n_in": pd.Series(n_in, dtype="int32"),
-                    "n_out": pd.Series(n_out, dtype="int32"),
-                }
-            )
-
-    return ways.select(id_col, nodes_col).mapInPandas(run, out_schema)

@@ -57,46 +57,6 @@ def uncompact_cells(df: DataFrame, res: int, cell_col: str = "cell") -> DataFram
     return cell_sets.uncompact(df, res, cell_col, _H3)
 
 
-def h3_pyramid(
-    df: DataFrame,
-    res: int,
-    min_res: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    aggs: dict | None = None,
-) -> DataFrame:
-    """Multi-resolution H3 rollup (the tiles.tile_pyramid shape on the
-    hexagonal hierarchy): encode + aggregate once at ``res`` from one pass
-    over the rows, then every coarser level folds its children's AGGREGATES
-    via the parent bit math — each level shuffles cell-count rows, never
-    the data. ``aggs``: {out_col: (sum_expr_at_base, how)} where how is
-    'sum'|'min'|'max'; default counts rows. Output: (res, cell, ...aggs).
-
-    Semantics: every coarse level aggregates by ANCESTOR of the res-``res``
-    assignment (the standard H3 hierarchy convention) — H3 children are not
-    geometrically nested, so a boundary point's direct coarse encode can
-    differ from its fine cell's ancestor; the ancestor rollup is the
-    consistent choice (each row counted under exactly one cell per level,
-    levels sum exactly)."""
-    from simple_osm_queries_spark.functions import cells as C
-    from simple_osm_queries_spark.operators.tiles import _fold_pyramid
-
-    if not 0 <= min_res <= res:
-        raise ValueError(f"need 0 <= min_res <= res, got {min_res}..{res}")
-    if aggs is None:
-        aggs = {"n": (F.count("*"), "sum")}
-    base = (
-        df.withColumn("__h3cell", C.cell_h3(F.col(lon), F.col(lat), res))
-        .groupBy(F.col("__h3cell").alias("cell"))
-        .agg(*[expr.alias(name) for name, (expr, _) in aggs.items()])
-    )
-    fold = {"sum": F.sum, "min": F.min, "max": F.max}
-    return _fold_pyramid(
-        base, "cell", "res", res, min_res, lambda cell, r: H.parent(cell, r - 1),
-        {name: fold[how] for name, (_, how) in aggs.items()},
-    )
-
-
 def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Minimal covering set: complete sibling families fold into parents,
     cascading to coarser resolutions. Level-sparse: a same-res input costs

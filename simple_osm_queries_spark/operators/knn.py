@@ -25,8 +25,8 @@ Variants:
   cells meeting the disc (``_h3_disc_cells_col``). ``metric='equirect'``
   ranks by cos-scaled squared degrees, ``metric='haversine'`` by
   great-circle meters; ``knn_h3_exact`` doubles the disc.
-* ``knn_brute`` / ``knn_brute_haversine`` — the exact baselines and the
-  fallbacks of the doubling loops (``_brute``).
+* ``knn_brute`` — the exact baseline; ``_brute`` is also the
+  fallback of the doubling loops (equirect or haversine).
 
 Hot cells (dense urban analog): the query side (queries x cover cells) is
 tiny and always broadcast, so the point side is never shuffled on the cell
@@ -88,14 +88,6 @@ def haversine_m(qlon, qlat, plon, plat):
     sl = F.sin(F.radians(plon - qlon) / F.lit(2.0))
     a = sp * sp + F.cos(F.radians(qlat)) * F.cos(F.radians(plat)) * sl * sl
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
-def haversine_m_np(qlon, qlat, plon, plat):
-    """Numpy twin of :func:`haversine_m` (property-test oracle)."""
-    sp = np.sin(np.radians(plat - qlat) / 2.0)
-    sl = np.sin(np.radians(plon - qlon) / 2.0)
-    a = sp * sp + np.cos(np.radians(qlat)) * np.cos(np.radians(plat)) * sl * sl
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
 
 
 # ---------------------------------------------------------------------------
@@ -232,11 +224,6 @@ def _doubling_loop(queries: DataFrame, radii, run_round, brute) -> DataFrame:
 def knn_brute(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
     """Exact kNN; query side broadcast. ``queries``: (qid, lon, lat[, k])."""
     return _brute(points, queries, k, "dist2", _dist2)
-
-
-def knn_brute_haversine(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
-    """Public exact haversine kNN baseline: (qid, id, lon, lat, dist_m, rank)."""
-    return _brute(points, queries, k, "dist_m", haversine_m)
 
 
 def knn_kring(

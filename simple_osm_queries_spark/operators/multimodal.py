@@ -54,35 +54,6 @@ def _decode_or_none(decode_fn, data, on_error: str, catch=(ValueError,)):
             return None
         raise
 
-DECODE_STATS_SCHEMA = (
-    "image_id string, fmt string, ok boolean, width int, height int, "
-    "mean_r double, mean_g double, mean_b double"
-)
-
-
-def decode_stats(df: DataFrame) -> DataFrame:
-    """Decode every image and emit shape + channel means (feature-extract)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for image_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = codecs.decode_image(bytes(data), fmt)
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    out.append((image_id, fmt, True, px.shape[1], px.shape[0], *map(float, m)))
-                except Exception:
-                    out.append((image_id, fmt, False, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "image_id", "fmt", "ok", "width", "height", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(run, DECODE_STATS_SCHEMA)
-
-
 VERIFY_SCHEMA = (
     "id long, image_id string, fmt string, psnr double, pixels_ok boolean, "
     "caption_ok boolean, phash_ok boolean"
@@ -440,7 +411,7 @@ def audio_features(
 
 
 # ---------------------------------------------------------------------------
-# EXIF metadata: the image -> spatial-point bridge + the privacy scrub
+# EXIF metadata: the image -> spatial-point bridge
 # ---------------------------------------------------------------------------
 
 EXIF_SCHEMA = "image_id string, exif_lat double, exif_lon double, exif_orientation int"
@@ -499,35 +470,3 @@ def geotag_points(df: DataFrame, on_error: str = "raise") -> DataFrame:
         F.col("exif_lat").alias("lat"),
         F.col("exif_orientation").alias("orientation"),
     )
-
-
-def strip_exif(df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Pre-publication metadata scrub: ``(image_id, bytes)`` with every
-    APP1..APP15 + COM segment removed from JPEG rows (GPS/Exif is the
-    canonical location-PII leak in an image corpus) except the PII-free
-    color-critical Adobe APP14 / APP2 ICC payloads (see
-    ``exif.strip_metadata``); the entropy-coded image data passes through
-    byte-identical, non-JPEG rows pass through untouched. Join back on
-    image_id to rebuild a full table."""
-    _check_on_error(on_error)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from simple_osm_queries_spark.sources import exif as X
-
-        for pdf in batches:
-            rows = []
-            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
-                if data is not None and codecs.sniff_format(bytes(data)) == "jpeg":
-                    clean = _decode_or_none(X.strip_metadata, data, on_error)
-                    if clean is None:
-                        continue
-                elif data is None and on_error == "raise":
-                    raise ValueError("NULL bytes value (use on_error='skip' to drop)")
-                elif data is None:
-                    continue
-                else:
-                    clean = bytes(data)
-                rows.append((image_id, clean))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes"])
-
-    return df.select("image_id", "bytes").mapInPandas(run, "image_id string, bytes binary")

@@ -9,9 +9,7 @@ and engine version — and reproducible in ANSI SQL for the oracle twin.
 
 * ``deterministic_sample`` — keep rows whose md5-derived uniform in [0,1)
   falls below ``rate`` (salt separates independent samples of the same
-  table);
-* ``stratified_sample``   — per-stratum rates (the `sampleBy` analogue),
-  one pass, no shuffle: sampling is a filter, never an exchange;
+  table) — one pass, no shuffle: sampling is a filter, never an exchange;
 * ``split``               — disjoint train/validation/test assignment from
   the same hash (fractions sum to <= 1; rows beyond the sum are dropped).
 """
@@ -42,18 +40,6 @@ def deterministic_sample(
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0,1], got {rate}")
     return df.filter(hash_uniform(F.col(key), salt) < F.lit(rate))
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, rates: dict, key: str, salt: str = ""
-) -> DataFrame:
-    """Per-stratum deterministic rates; strata absent from ``rates`` drop.
-    One filter, no shuffle — the scale-safe `sampleBy`."""
-    u = hash_uniform(F.col(key), salt)
-    rate = F.lit(0.0)
-    for value, r in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == F.lit(value), F.lit(float(r))).otherwise(rate)
-    return df.filter(u < rate)
 
 
 def split(

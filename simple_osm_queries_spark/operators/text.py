@@ -8,11 +8,8 @@ correctness gate checks implementation parity row-for-row.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
@@ -30,11 +27,6 @@ _BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def words(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(words(text))
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -104,44 +96,3 @@ def doc_fingerprint(text: Column) -> Column:
     """Normalization-stable fingerprint: md5 of lowercased,
     whitespace-collapsed text. (Exact-dedup key that survives reflow.)"""
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
-
-
-def hashing_embedding(text: Column, dim: int = 64) -> Column:
-    """Hashing-trick text embedding: each word hashes to a dimension and a
-    sign; the L2-normalized bag-of-words vector comes out as array<float>.
-
-    No vocabulary, no model — deterministic and streamable, the standard
-    baseline featurizer that bridges the text table into the similarity /
-    embedding-dedup operators. One Arrow-batched numpy UDF.
-    """
-    import re
-    import zlib
-
-    ws = re.compile(r"\s+")
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _emb(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            vec = np.zeros(dim, dtype=np.float64)
-            if t:
-                for w in ws.split(t.strip().lower()):
-                    h = zlib.crc32(w.encode())
-                    vec[(h >> 1) % dim] += 1.0 if (h & 1) else -1.0
-            norm = float(np.linalg.norm(vec))
-            if norm > 0:
-                vec /= norm
-            out.append([float(x) for x in vec])
-        return pd.Series(out)
-
-    return _emb(text)
-
-
-def rolling_fingerprints(text: Column, n: int = 8, keep: int = 4) -> Column:
-    """Winnowing-style sketch: the ``keep`` smallest xxhash64 values over
-    word n-gram shingles (sorted). Two docs sharing a sketch entry share an
-    n-gram run — a locality-sensitive containment fingerprint."""
-    from simple_osm_queries_spark.operators.dedup import shingles_col
-
-    hashes = F.transform(shingles_col(text, n), lambda s: F.xxhash64(s))
-    return F.slice(F.sort_array(hashes), 1, keep)

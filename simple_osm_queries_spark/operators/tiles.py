@@ -17,14 +17,13 @@ Every operator is a path through one pipeline, and each step exists once:
 * aggregate — ``tile_stats`` and ``tile_pixel_bins`` are one groupBy each;
   AQE's map-side partial aggregate absorbs hot tiles (the reference's
   extent bin-packer import.go:167-233 solved the same skew problem at
-  import time). ``_fold_pyramid`` rolls decomposable aggregates up a level
-  hierarchy (``tile_pyramid`` here, ``h3_sets.h3_pyramid`` on H3);
+  import time);
 * rank — ``_rank_cap`` numbers each tile's members and caps them on the
   same tile_id exchange the render groups by;
-* render — one applyInPandas per tile: ``tile_heatmap`` and
-  ``tile_contact_sheet`` paint PNGs, ``_render_mvt`` encodes one Mapbox
-  Vector Tile layer for the points, linestrings and polygons operators,
-  which differ only in their per-feature builder.
+* render — one applyInPandas per tile: ``tile_heatmap`` paints a PNG,
+  ``_render_mvt`` encodes one Mapbox Vector Tile layer for the points,
+  linestrings and polygons operators, which differ only in their
+  per-feature builder.
 
 One small tile needs none of the exchanges: ``tile_mvt_layers`` gives a
 single tile's members per layer (the same membership, fid order, cap and
@@ -63,18 +62,6 @@ def assign_tiles(
     return points.withColumn(out, C.tile_of(F.col(lon), F.col(lat), zoom))
 
 
-def tile_join(points: DataFrame, tiles: DataFrame, zoom: int) -> DataFrame:
-    """Join points to a tile catalog (tile_id, ...) at the same zoom.
-
-    The catalog is the small side -> broadcast. Truth semantics: a point
-    belongs to exactly the tile whose index equals its computed slippy
-    index (equivalently: tile bbox containment with right/bottom-exclusive
-    edges, the slippy convention).
-    """
-    pts = assign_tiles(points, zoom)
-    return pts.join(F.broadcast(tiles), "tile_id", "inner")
-
-
 def tile_stats(points: DataFrame, zoom: int) -> DataFrame:
     """Per-tile rollup: count + bbox of contained points."""
     return assign_tiles(points, zoom).groupBy("tile_id").agg(
@@ -84,69 +71,6 @@ def tile_stats(points: DataFrame, zoom: int) -> DataFrame:
         F.max("lon").alias("max_lon"),
         F.max("lat").alias("max_lat"),
     )
-
-
-def tile_parent(tile_id: Column, zoom: int) -> Column:
-    """Parent tile id at zoom-1 — pure bit math on the tile-id packing:
-    halve tx and ty, decrement the zoom field."""
-    _, tx, ty = C.tile_zxy(tile_id)
-    return (
-        F.lit((zoom - 1) << 58)
-        + F.shiftleft(F.shiftright(tx, 1), 29)
-        + F.shiftright(ty, 1)
-    ).cast("long")
-
-
-def tile_pyramid(points: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame:
-    """Multi-zoom tile rollup (the hypertable-pyramid shape): per-tile stats
-    at ``max_zoom`` from ONE pass over the points, then every coarser level
-    folds its four children's aggregates. Output: one row per
-    (zoom, tile_id) for zoom in [min_zoom, max_zoom]."""
-    if not 0 <= min_zoom <= max_zoom:
-        raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
-    return _fold_pyramid(
-        tile_stats(points, max_zoom), "tile_id", "zoom", max_zoom, min_zoom, tile_parent,
-        {"n": F.sum, "min_lon": F.min, "min_lat": F.min, "max_lon": F.max, "max_lat": F.max},
-    )
-
-
-def _fold_pyramid(
-    base: DataFrame,
-    key: str,
-    level: str,
-    top: int,
-    bottom: int,
-    parent: Callable[[Column, int], Column],
-    folds: dict[str, Callable[[str], Column]],
-) -> DataFrame:
-    """Roll ``base`` (one row per ``key`` at level ``top``) up to level
-    ``bottom``. Each coarser level groups the previous one by
-    ``parent(key, child level)`` and folds every column named in ``folds``
-    with its function (F.sum / F.min / F.max: decomposable aggregates), so
-    each level is a shuffle over the previous level's rows, never a second
-    scan of the data. Output: the union of all levels, each row tagged
-    with its ``level``."""
-    cur = base.withColumn(level, F.lit(top))
-    out = cur
-    for lv in range(top, bottom, -1):
-        cur = (
-            cur.groupBy(parent(F.col(key), lv).alias(key))
-            .agg(*[fn(name).alias(name) for name, fn in folds.items()])
-            .withColumn(level, F.lit(lv - 1))
-        )
-        out = out.unionByName(cur)
-    return out
-
-
-def make_tile_catalog(spark, zoom: int, min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> DataFrame:
-    """Enumerate the tiles covering a window (driver-side; tiny)."""
-    x0, y1 = C.tile_xy_py(min_lon, min_lat, zoom)  # note: y inverted
-    x1, y0 = C.tile_xy_py(max_lon, max_lat, zoom)
-    rows = []
-    for tx in range(min(x0, x1), max(x0, x1) + 1):
-        for ty in range(min(y0, y1), max(y0, y1) + 1):
-            rows.append((C.tile_id_py(tx, ty, zoom), zoom, tx, ty))
-    return spark.createDataFrame(rows, "tile_id long, zoom int, tile_x int, tile_y int")
 
 
 def _tile_local(lon: Column, lat: Column, zoom: int, size: int) -> tuple[Column, Column, Column]:
@@ -256,111 +180,6 @@ def tile_heatmap(
     return bins.groupBy("tile_id").applyInPandas(
         render,
         "tile_id long, zoom int, tx int, ty int, n_points long, png binary",
-    )
-
-
-def tile_contact_sheet(
-    df: DataFrame,
-    zoom: int,
-    thumb: int = 32,
-    grid: int = 8,
-    id_col: str = "image_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    on_error: str = "raise",
-) -> DataFrame:
-    """Per-tile image contact sheets: the first ``grid^2`` members of each
-    tile (deterministic ``id_col`` order), area-resized to ``thumb`` px and
-    pasted row-major onto a (grid*thumb)^2 canvas, PNG-encoded — the
-    standard corpus-inspection artifact ("what does this map region's
-    training data look like").
-
-    Scale shape: member SELECTION runs on the cheap (tile_id, id) columns
-    only — window row_number, capped at grid^2 — and the heavy ``bytes``
-    column is fetched by a join for the SELECTED rows alone, so at most
-    grid^2 images per tile ever cross the render shuffle no matter how
-    many rows the tile holds (same caps-before-shuffle discipline as the
-    dedup family's max_df/max_bucket).
-
-    ``on_error``: 'raise' (default, trusted corpus) re-raises a codec
-    ValueError from any malformed row; 'skip' leaves that slot black and
-    keeps rendering (dirty-corpus mode, same knob as multimodal.py).
-
-    ``id_col`` values SHOULD be unique per tile; if they are not, slots
-    are assigned per DISTINCT id (dense_rank) and the renderer keeps one
-    deterministic representative per slot (smallest bytes) rather than
-    double-painting — duplicates can never break the grid^2 cap.
-
-    Output: (tile_id, zoom, tx, ty, n_members, n_shown, png binary).
-    """
-    import pandas as pd
-
-    from simple_osm_queries_spark.operators.multimodal import _check_on_error
-
-    _check_on_error(on_error)
-    cap = grid * grid
-    keyed = assign_tiles(df, zoom, lon=lon, lat=lat)
-    slim = keyed.select("tile_id", id_col)
-    w = Window.partitionBy("tile_id").orderBy(id_col)
-    # n_members rides the same tile_id exchange the ranking already needs
-    # (unordered count window) — no second aggregation, no join back.
-    wc = Window.partitionBy("tile_id")
-    ranked = slim.withColumn("rn", F.dense_rank().over(w)).withColumn(
-        "n_members", F.count("*").over(wc)
-    )
-    chosen = ranked.filter(F.col("rn") <= cap)
-    # heavy columns only for the chosen rows
-    picked = chosen.join(
-        keyed.select("tile_id", id_col, "bytes", "fmt"), ["tile_id", id_col]
-    )
-
-    side = grid * thumb
-
-    def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        from simple_osm_queries_spark.operators.multimodal import (
-            _box_mean_grid,
-            _decode_or_none,
-        )
-        from simple_osm_queries_spark.sources import codecs
-
-        # duplicate-id fan-out from the join back: one deterministic
-        # representative per slot (ties broken by raw bytes, which is
-        # shuffle-order-independent)
-        pdf = pdf.sort_values(["rn", "bytes"], kind="mergesort").drop_duplicates(
-            subset=["rn"], keep="first"
-        )
-        canvas = np.zeros((side, side, 3), dtype=np.uint8)
-        shown = 0
-        for rn, data, fmt in zip(pdf["rn"], pdf["bytes"], pdf["fmt"]):
-            px = _decode_or_none(
-                lambda b: codecs.decode_image(b, fmt), data, on_error
-            )
-            if px is None:  # on_error='skip': leave the slot black
-                continue
-            t = np.stack(
-                [
-                    _box_mean_grid(px[..., c].astype(np.float64), thumb, thumb)
-                    for c in range(3)
-                ],
-                axis=-1,
-            )
-            t = np.clip(t.round(), 0, 255).astype(np.uint8)
-            slot = int(rn) - 1
-            r, c = divmod(slot, grid)
-            canvas[r * thumb : (r + 1) * thumb, c * thumb : (c + 1) * thumb] = t
-            shown += 1
-        return _tile_row(
-            int(pdf["tile_id"].iloc[0]),
-            n_members=int(pdf["n_members"].iloc[0]),
-            n_shown=shown,
-            png=codecs.encode_png(canvas),
-        )
-
-    return picked.groupBy("tile_id").applyInPandas(
-        render,
-        "tile_id long, zoom int, tx int, ty int, n_members long, n_shown int, png binary",
     )
 
 

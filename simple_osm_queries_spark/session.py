@@ -96,8 +96,7 @@ def get_spark(
         # Iceberg catalog for the build_index(backend="iceberg") path.
         # Declaring the catalog is harmless without the jar (it only fails
         # on first use); WITH iceberg-spark-runtime-4.x on the classpath the
-        # writeTo/overwritePartitions path below is live. Probe with
-        # index.build.iceberg_available(spark).
+        # writeTo/overwritePartitions path below is live.
         .config("spark.sql.catalog.soq_iceberg", "org.apache.iceberg.spark.SparkCatalog")
         .config("spark.sql.catalog.soq_iceberg.type", "hadoop")
         .config(

@@ -8,9 +8,8 @@ reference's bbox approximation, grid_reader.go:513-517).
 One feature builder, ``_feature``: a JVM column expression that turns a
 query result row (``planner._project_output``'s columns) into one Feature's
 JSON text. Every sink selects it: ``to_geojson_capped`` (at most
-``max_rows`` features, the HTTP route), ``write_geojson_file`` (the whole
-result in one file, the CLI) and ``write_geojson_lines`` (distributed, one
-Feature per line, arbitrarily large results — the scale path).
+``max_rows`` features, the HTTP route) and ``write_geojson_file`` (the
+whole result in one file, the CLI).
 """
 
 from __future__ import annotations
@@ -67,11 +66,6 @@ def write_geojson_file(result: DataFrame, path: str) -> int:
     with open(path, "w") as f:
         f.write(_collection(features, False))
     return len(features)
-
-
-def write_geojson_lines(result: DataFrame, path: str) -> None:
-    """Distributed newline-delimited GeoJSON (one Feature per line)."""
-    result.select(_feature().alias("value")).write.mode("overwrite").text(path)
 
 
 def h3_cells_feature_collection(cells, properties: dict | None = None) -> dict:

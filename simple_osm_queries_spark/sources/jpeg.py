@@ -19,8 +19,8 @@ module implements the real thing, not a stand-in:
   4:2:2, 4:2:0), restart markers, 1- or 3-component frames, multi-scan
   sequential AND full progressive decoding (spectral selection +
   successive approximation, G.1.2 — DC/AC first and refinement scans with
-  EOB runs), 16-bit-LUT canonical Huffman (the Annex F F.16 walk is kept
-  as the tested oracle), batch numpy dequant + IDCT.
+  EOB runs), 16-bit-LUT canonical Huffman (tested against the Annex F
+  F.16 walk), batch numpy dequant + IDCT.
 
 Everything heavy is vectorized: the forward/inverse DCT runs as one einsum
 over all 8x8 blocks of a component, and zigzag/dequant are single fancy-index
@@ -173,27 +173,6 @@ def build_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int,
         codes[val] = (code, size)
         code += 1
     return codes
-
-
-def build_decode_walk_table(bits: list[int], vals: list[int]):
-    """MINCODE/MAXCODE/VALPTR decoder tables (Annex F figure F.15) for the
-    reference length-by-length walk — kept as the independent oracle the
-    fast LUT is tested against."""
-    mincode = [0] * 17
-    maxcode = [-1] * 17
-    valptr = [0] * 17
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        n = bits[length - 1]
-        if n:
-            valptr[length] = k
-            mincode[length] = code
-            code += n
-            k += n
-            maxcode[length] = code - 1
-        code <<= 1
-    return mincode, maxcode, valptr, list(vals)
 
 
 _LUT_CACHE: dict[tuple, tuple[list, list]] = {}
@@ -358,17 +337,6 @@ class _BitReader:
         self.n -= length
         self.acc &= (1 << self.n) - 1
         return sym[idx]
-
-    def decode_walk(self, table) -> int:
-        """Annex F figure F.16 length-by-length walk (oracle for decode)."""
-        mincode, maxcode, valptr, vals = table
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read(1)
-            mx = maxcode[length]
-            if mx >= 0 and code <= mx:
-                return vals[valptr[length] + code - mincode[length]]
-        raise ValueError("invalid Huffman code in entropy stream")
 
 
 def _extend(v: int, size: int) -> int:

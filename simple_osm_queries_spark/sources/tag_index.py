@@ -3,8 +3,7 @@
 The reference builds a key->values dictionary over every object during
 import pass 1 (/root/reference/src/index/tag.go:43-98), natural-sorts each
 key's values (tag.go:58-67) and persists one `key=v1|v2|...` line per key
-with `$$EQUAL$$`/`$$PIPE$$`/`$$NEWLINE$$` escaping (tag.go:148-152,304-308;
-load: tag.go:111-170).
+with `$$EQUAL$$`/`$$PIPE$$`/`$$NEWLINE$$` escaping (tag.go:148-152,304-308).
 
 Our engine does not NEED the dictionary (filters compare decoded values
 directly), but it is part of the reference's API surface — queries against a
@@ -59,65 +58,9 @@ def build_tag_index(*tag_dfs: DataFrame) -> dict[str, list[str]]:
     return {r.k: _natural_sorted(list(r.vs)) for r in rows}
 
 
-def merge_tag_index(
-    a: dict[str, list[str]], b: dict[str, list[str]]
-) -> dict[str, list[str]]:
-    """Union of two dictionaries, values re-natural-sorted per key — the
-    incremental-upsert companion (index/upsert.py): re-run build_tag_index
-    over just the delta tables and merge, instead of rescanning the world.
-    Additive-only by design: entries for deleted rows are vocabulary, not
-    row data, and keeping them is reference behavior (the reference never
-    removes dictionary entries either, tag.go:43-98)."""
-    out: dict[str, list[str]] = {}
-    for key in set(a) | set(b):
-        out[key] = _natural_sorted(list({*a.get(key, []), *b.get(key, [])}))
-    return out
-
-
 def save_tag_index(index: dict[str, list[str]], path: str) -> None:
     with open(path, "w") as f:
         for key in sorted(index):
             values = "|".join(v.replace("|", "$$PIPE$$") for v in index[key])
             values = values.replace("\n", "$$NEWLINE$$").replace("=", "$$EQUAL$$")
             f.write(f"{key}={values}\n")
-
-
-def load_tag_index(path: str) -> dict[str, list[str]]:
-    out: dict[str, list[str]] = {}
-    with open(path) as f:
-        for lineno, line in enumerate(f):
-            line = line.rstrip("\n")
-            if not line:
-                continue
-            key, sep, values = line.partition("=")
-            if not sep:
-                raise ValueError(
-                    f"wrong format of line {lineno}: '=' expected separating "
-                    f"key and value list"
-                )
-            values = values.replace("$$NEWLINE$$", "\n").replace("$$EQUAL$$", "=")
-            # empty entries are KEPT (reference keeps them: tag.go:150-156)
-            out[key] = [v.replace("$$PIPE$$", "|") for v in values.split("|")]
-    return out
-
-
-def value_index(index: dict[str, list[str]], key: str, value: str) -> int | None:
-    """Dictionary position of a value under its key (None if absent) —
-    the reference's GetIndicesFromKeyValueStrings (tag.go:190-213)."""
-    try:
-        return index[key].index(value)
-    except (KeyError, ValueError):
-        return None
-
-
-def next_lower_value_index(index: dict[str, list[str]], key: str, value: str) -> int | None:
-    """Largest position whose value is strictly less than ``value`` under
-    natural order — GetNextLowerValueIndexForKey (tag.go:215-230)."""
-    values = index.get(key)
-    if not values:
-        return None
-    best = None
-    for i, v in enumerate(values):
-        if natural_is_less_py(v, value):
-            best = i
-    return best

@@ -1,13 +1,8 @@
-"""Cross-family bridges: image aHash -> hamming dedup; text hashing
-embeddings -> cosine similarity/near-dup."""
+"""Cross-family bridge: image aHash -> hamming dedup."""
 
 import numpy as np
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.operators import dedup, multimodal, similarity
-from simple_osm_queries_spark.operators.text import hashing_embedding
+from simple_osm_queries_spark.operators import dedup, multimodal
 from simple_osm_queries_spark.sources import codecs, datagen
 
 
@@ -39,44 +34,3 @@ def test_ahash_content_based_near_dup(spark):
     # no cross-image matches
     for (a, b) in pairs:
         assert a.lstrip("noisyorig") == b.lstrip("noisyorig")
-
-
-def test_hashing_embedding_properties(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2, 3],
-                "text": [
-                    "spark shuffles data between stages",
-                    "spark shuffles data between stages",          # identical
-                    "spark shuffles data between many stages now", # near
-                    "completely unrelated vocabulary entirely",    # far
-                ],
-            }
-        )
-    )
-    embs = df.select("doc_id", hashing_embedding(F.col("text")).alias("embedding"))
-    rows = {r.doc_id: np.array(r.embedding, dtype=np.float64) for r in embs.collect()}
-    assert all(np.linalg.norm(v) == pytest.approx(1.0) for v in rows.values())
-    assert float(rows[0] @ rows[1]) == pytest.approx(1.0)
-    assert float(rows[0] @ rows[2]) > float(rows[0] @ rows[3])
-
-    # bridge into the embedding near-dup operator
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in dedup.embedding_near_dups(
-            embs, id_col="doc_id", vec_col="embedding", threshold=0.99
-        ).collect()
-    }
-    assert (0, 1) in pairs
-
-
-def test_text_similarity_search_end_to_end(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    embs = docs.select(
-        F.col("doc_id").alias("vec_id"), hashing_embedding(F.col("text")).alias("embedding")
-    ).cache()
-    q = embs.filter(F.col("vec_id") == 0).first().embedding
-    top = similarity.cosine_topk(embs, q, k=5).collect()
-    assert top[0].vec_id == 0 and top[0].cosine == pytest.approx(1.0)
-    assert len(top) == 5

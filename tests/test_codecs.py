@@ -3,6 +3,7 @@ import pytest
 
 from simple_osm_queries_spark.sources import codecs
 from simple_osm_queries_spark.sources.datagen import image_pixels
+from tests.avi_writer import encode_avi_mjpeg
 
 
 @pytest.mark.parametrize("i", [0, 1, 7, 123])
@@ -195,7 +196,7 @@ def _smooth_frames(n, h, w, seed=3):
 
 def test_avi_mjpeg_roundtrip():
     frames = _smooth_frames(7, 32, 48)
-    avi = codecs.encode_avi_mjpeg(frames, fps=5, quality=95)
+    avi = encode_avi_mjpeg(frames, fps=5, quality=95)
     assert avi[:4] == b"RIFF" and avi[8:12] == b"AVI "
     out = codecs.decode_avi_mjpeg(avi)
     assert out.shape == frames.shape
@@ -208,7 +209,7 @@ def test_avi_riff_size_fields_consistent():
     through a tolerant reader, so check the framing directly."""
     import struct as _s
 
-    avi = codecs.encode_avi_mjpeg(_smooth_frames(3, 16, 16), fps=10)
+    avi = encode_avi_mjpeg(_smooth_frames(3, 16, 16), fps=10)
     assert _s.unpack("<I", avi[4:8])[0] == len(avi) - 8
     pos = 12
     seen = []
@@ -228,7 +229,7 @@ def test_avi_tolerant_parse_junk_and_rec_lists():
     import struct as _s
 
     frames = _smooth_frames(2, 16, 24)
-    plain = codecs.encode_avi_mjpeg(frames, fps=10, quality=95)
+    plain = encode_avi_mjpeg(frames, fps=10, quality=95)
     # rebuild the movi list by hand with junk + a rec-wrapped second frame
     from simple_osm_queries_spark.sources.jpeg import encode_jpeg_real
 
@@ -426,7 +427,7 @@ def _fuzz_cases():
             ),
             codecs.decode_gif,
         ),
-        ("avi", codecs.encode_avi_mjpeg(np.stack([px, px[::-1]]), fps=5), codecs.decode_avi_mjpeg),
+        ("avi", encode_avi_mjpeg(np.stack([px, px[::-1]]), fps=5), codecs.decode_avi_mjpeg),
     ]
 
 
@@ -473,7 +474,7 @@ def test_sniff_format_all_containers():
     assert codecs.sniff_format(
         codecs.encode_gif(codecs.gif_palette()[np.zeros((2, 4, 4), np.uint8)])
     ) == "gif"
-    assert codecs.sniff_format(codecs.encode_avi_mjpeg(frames)) == "avi"
+    assert codecs.sniff_format(encode_avi_mjpeg(frames)) == "avi"
     assert codecs.sniff_format(codecs.encode_wav(np.zeros(16))) == "wav"
     assert codecs.sniff_format(b"garbage") is None
 

@@ -142,26 +142,3 @@ def test_cli_compact_command(dataset, tmp_path, spark, capsys):
     assert "compacted" in capsys.readouterr().out
     cli.cmd_compact(spark, args)
     assert "nothing to compact" in capsys.readouterr().out
-
-
-def test_index_stats_and_history(fragmented, spark):
-    from simple_osm_queries_spark.index.stats import index_history, index_stats
-
-    out, donor = fragmented
-    st = {r[0]: r for r in index_stats(spark, out, include_rows=True).collect()}
-    data = os.path.join(out, "data")
-    for d in sorted(os.listdir(data)):
-        if not d.startswith("cell_x="):
-            continue
-        val = d.split("=", 1)[1]
-        files = _files(data, d)
-        assert st[val].n_files == len(files)
-        assert st[val].bytes == sum(files.values())
-        assert st[val].min_file_bytes == min(files.values())
-    total_rows = sum(r.n_rows for r in st.values())
-    assert total_rows == build.read_index(spark, out).count()
-
-    hist = index_history(spark, out).orderBy("version").collect()
-    assert [h.version for h in hist] == list(range(1, len(hist) + 1))
-    assert all(h.kind in ("upsert", "compact") for h in hist)
-    assert hist[0].rows_written > 0

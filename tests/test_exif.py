@@ -1,5 +1,6 @@
-"""EXIF embed/parse/strip (sources/exif.py) + the image->spatial bridge
-(operators/multimodal.py extract_exif / geotag_points / strip_exif).
+"""EXIF parse (sources/exif.py) + the image->spatial bridge
+(operators/multimodal.py extract_exif / geotag_points), fed by the fixture
+writer tests/exif_writer.py.
 
 Oracles: hand-computed DMS arithmetic, byte-level TIFF layout invariants
 (both endiannesses cross-checked against each other), pixel identity
@@ -17,6 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from simple_osm_queries_spark.sources import codecs, exif
+from tests import exif_writer
 
 
 def _jpeg(seed=0, size=24):
@@ -40,7 +42,7 @@ def _jpeg(seed=0, size=24):
 )
 def test_gps_roundtrip(byte_order, lat, lon):
     jpg, px = _jpeg()
-    j2 = exif.insert_exif(jpg, lat, lon, orientation=6, byte_order=byte_order)
+    j2 = exif_writer.insert_exif(jpg, lat, lon, orientation=6, byte_order=byte_order)
     meta = exif.parse_exif(j2)
     assert meta["lat"] == pytest.approx(lat, abs=1e-9)
     assert meta["lon"] == pytest.approx(lon, abs=1e-9)
@@ -55,8 +57,8 @@ def test_gps_roundtrip(byte_order, lat, lon):
     lon=st.floats(min_value=-180, max_value=180, allow_nan=False),
 )
 def test_gps_roundtrip_property(lat, lon):
-    rats_lat = exif.deg_to_dms(lat)
-    rats_lon = exif.deg_to_dms(lon)
+    rats_lat = exif_writer.deg_to_dms(lat)
+    rats_lon = exif_writer.deg_to_dms(lon)
     for (d, _), (m, _), (s, den) in (rats_lat, rats_lon):
         assert 0 <= m < 60 and 0 <= s < 60 * den
     assert exif.dms_to_deg(rats_lat) == pytest.approx(abs(lat), abs=1e-9)
@@ -65,8 +67,8 @@ def test_gps_roundtrip_property(lat, lon):
 
 def test_endian_paths_agree():
     jpg, _ = _jpeg(3)
-    a = exif.parse_exif(exif.insert_exif(jpg, -12.25, 99.5, 3, byte_order="II"))
-    b = exif.parse_exif(exif.insert_exif(jpg, -12.25, 99.5, 3, byte_order="MM"))
+    a = exif.parse_exif(exif_writer.insert_exif(jpg, -12.25, 99.5, 3, byte_order="II"))
+    b = exif.parse_exif(exif_writer.insert_exif(jpg, -12.25, 99.5, 3, byte_order="MM"))
     assert a == b
 
 
@@ -83,9 +85,9 @@ def test_no_exif_parses_to_none():
 
 def test_orientation_only_and_reinsert_replaces():
     jpg, _ = _jpeg(2)
-    j2 = exif.insert_exif(jpg, orientation=3)
+    j2 = exif_writer.insert_exif(jpg, orientation=3)
     assert exif.parse_exif(j2) == {"lat": None, "lon": None, "orientation": 3}
-    j3 = exif.insert_exif(j2, 1.5, 2.5)
+    j3 = exif_writer.insert_exif(j2, 1.5, 2.5)
     assert exif.parse_exif(j3)["orientation"] is None
     assert exif.parse_exif(j3)["lat"] == pytest.approx(1.5, abs=1e-9)
     # exactly ONE Exif APP1 in the replaced stream
@@ -99,130 +101,43 @@ def test_orientation_only_and_reinsert_replaces():
 
 def test_app1_goes_after_app0():
     jpg, _ = _jpeg(4)
-    j2 = exif.insert_exif(jpg, 1.0, 2.0)
+    j2 = exif_writer.insert_exif(jpg, 1.0, 2.0)
     markers = [m for m, _s, _e in exif._segments(j2)]
     if 0xE0 in markers:  # our encoder writes JFIF APP0
         assert markers.index(0xE1) == markers.index(0xE0) + 1
 
 
-def test_strip_metadata():
-    jpg, px = _jpeg(5)
-    j2 = exif.insert_exif(jpg, 53.5, 10.0, 6)
-    j4 = exif.strip_metadata(j2)
-    assert exif.parse_exif(j4) == {"lat": None, "lon": None, "orientation": None}
-    assert np.array_equal(codecs.decode_image(j4, "jpeg"), codecs.decode_image(jpg, "jpeg"))
-    markers = [m for m, _s, _e in exif._segments(j4)]
-    assert 0xE1 not in markers and 0xFE not in markers
-    # APP0 (JFIF) and codec segments survive
-    assert set(markers) >= ({0xE0} & set(m for m, _s, _e in exif._segments(jpg)))
-
-
-def _icc_profile() -> bytes:
-    """Minimal well-formed ICC profile: a 128-byte header whose size field
-    matches and whose bytes 36-39 are the 'acsp' signature, plus an empty
-    tag table."""
-    import struct
-
-    body = bytearray(132)
-    struct.pack_into(">I", body, 0, len(body))
-    body[36:40] = b"acsp"
-    return bytes(body)
-
-
-def test_strip_metadata_icc_sanity_check():
-    """ICC APP2 segments survive only as a well-formed chunk set: a payload
-    spliced in under a forged ICC_PROFILE label is dropped, and so is a
-    real profile whose chunk numbering is broken; a profile split over two
-    chunks is kept."""
-    import struct
-
-    jpg, _ = _jpeg(10)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    def icc_segments(j: bytes) -> list[bytes]:
-        return [j[s + 4 : e] for m, s, e in exif._segments(j) if m == 0xE2]
-
-    prof = _icc_profile()
-    label = b"ICC_PROFILE\x00"
-    two = seg(0xE2, label + b"\x01\x02" + prof[:50]) + seg(0xE2, label + b"\x02\x02" + prof[50:])
-    forged = seg(0xE2, label + b"\x01\x01" + b"lat=53.5 lon=10.0 owner=alice")
-    bad_seq = seg(0xE2, label + b"\x02\x01" + prof)
-    kept = icc_segments(exif.strip_metadata(jpg[:2] + two + jpg[2:]))
-    assert b"".join(c[len(label) + 2 :] for c in kept) == prof
-    for extra in (forged, bad_seq, two + forged):
-        assert icc_segments(exif.strip_metadata(jpg[:2] + extra + jpg[2:])) == [], extra
-    assert np.array_equal(
-        codecs.decode_image(exif.strip_metadata(jpg[:2] + forged + jpg[2:]), "jpeg"),
-        codecs.decode_image(jpg, "jpeg"),
-    )
-
-
-def test_strip_metadata_keeps_color_segments():
-    """ADVICE r5: the scrub must keep the Adobe APP14 transform flag and
-    APP2 ICC profiles (color-critical, PII-free) while still dropping
-    Exif/COM/other APPn payloads."""
-    import struct
-
-    jpg, _ = _jpeg(9)
-    j2 = exif.insert_exif(jpg, 53.5, 10.0, 6)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    adobe = seg(0xEE, b"Adobe" + b"\x00\x64\x00\x00\x00\x00\x01")
-    icc = seg(0xE2, b"ICC_PROFILE\x00\x01\x01" + _icc_profile())
-    fpx = seg(0xE2, b"FPXR\x00" + b"\x00" * 8)  # non-ICC APP2: must drop
-    com = seg(0xFE, b"a comment")
-    # splice after SOI, before the rest of the header
-    j3 = j2[:2] + adobe + icc + fpx + com + j2[2:]
-    j4 = exif.strip_metadata(j3)
-    kept = [
-        (m, j4[s + 4 : s + 16]) for m, s, _e in exif._segments(j4)
-        if 0xE1 <= m <= 0xEF or m == 0xFE
-    ]
-    assert (0xEE, adobe[4:16]) in [(m, p[: len(adobe[4:16])]) for m, p in kept]
-    assert any(m == 0xE2 and p.startswith(b"ICC_PROFILE\x00") for m, p in kept)
-    assert not any(m == 0xE1 or m == 0xFE for m, p in kept)
-    assert not any(m == 0xE2 and p.startswith(b"FPXR") for m, p in kept)
-    assert exif.parse_exif(j4) == {"lat": None, "lon": None, "orientation": None}
-    assert np.array_equal(codecs.decode_image(j4, "jpeg"), codecs.decode_image(jpg, "jpeg"))
-
-
 def test_bad_inputs_rejected():
     jpg, _ = _jpeg(6)
     with pytest.raises(ValueError):
-        exif.insert_exif(jpg, 91.0, 0.0)
+        exif_writer.insert_exif(jpg, 91.0, 0.0)
     with pytest.raises(ValueError):
-        exif.insert_exif(jpg, 0.0, 181.0)
+        exif_writer.insert_exif(jpg, 0.0, 181.0)
     with pytest.raises(ValueError):
-        exif.insert_exif(jpg, 1.0, None)
+        exif_writer.insert_exif(jpg, 1.0, None)
     with pytest.raises(ValueError):
-        exif.insert_exif(jpg, orientation=9)
+        exif_writer.insert_exif(jpg, orientation=9)
     with pytest.raises(ValueError):
-        exif.build_exif_app1(1.0, 2.0, byte_order="XX")
+        exif_writer.build_exif_app1(1.0, 2.0, byte_order="XX")
 
 
 def test_fuzz_valueerror_only_boundary():
     jpg, _ = _jpeg(7)
-    j2 = exif.insert_exif(jpg, 53.5, 10.0, 6)
+    j2 = exif_writer.insert_exif(jpg, 53.5, 10.0, 6)
     rng = random.Random(11)
     for n in range(0, len(j2), 5):  # truncation sweep
-        for fn in (exif.parse_exif, exif.strip_metadata):
-            try:
-                fn(j2[:n])
-            except ValueError:
-                pass
+        try:
+            exif.parse_exif(j2[:n])
+        except ValueError:
+            pass
     for _ in range(800):  # random corruption
         b = bytearray(j2)
         for _k in range(rng.randint(1, 8)):
             b[rng.randrange(len(b))] = rng.randrange(256)
-        for fn in (exif.parse_exif, exif.strip_metadata):
-            try:
-                fn(bytes(b))
-            except ValueError:
-                pass
+        try:
+            exif.parse_exif(bytes(b))
+        except ValueError:
+            pass
 
 
 def test_parse_handles_big_endian_foreign_layout():
@@ -263,7 +178,7 @@ def _image_table(spark):
     for i in range(12):
         jpg, _ = _jpeg(seed=100 + i, size=16)
         if i % 3 == 0:
-            jpg = exif.insert_exif(jpg, 50.0 + i * 0.25, 8.0 - i * 0.5, 1 + i % 8)
+            jpg = exif_writer.insert_exif(jpg, 50.0 + i * 0.25, 8.0 - i * 0.5, 1 + i % 8)
         rows.append((f"img{i:03d}", jpg, "jpeg"))
     rows.append(("png0", codecs.encode_image(np.zeros((8, 8, 3), np.uint8), "png"), "png"))
     return spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
@@ -286,6 +201,38 @@ def test_extract_exif_spark(spark):
     assert got["png0"].exif_lat is None  # non-JPEG sniffed, not errored
 
 
+def _without_exif(data: bytes) -> bytes:
+    """``data`` with every APP1 (Exif) segment spliced out; non-JPEG bytes
+    pass through."""
+    if data[:2] != b"\xff\xd8":
+        return data
+    cut = [(s, e) for m, s, e in exif._segments(data) if m == 0xE1]
+    for s, e in reversed(cut):
+        data = data[:s] + data[e:]
+    return data
+
+
+def test_strip_exif_spark_and_on_error(spark):
+    """extract_exif reads no metadata from Exif-stripped JPEG rows, and a
+    corrupt or NULL row raises by default and is dropped with
+    on_error='skip'."""
+    from simple_osm_queries_spark.operators.multimodal import extract_exif
+
+    rows = [(r.image_id, _without_exif(bytes(r.bytes))) for r in _image_table(spark).collect()]
+    clean = spark.createDataFrame(rows, "image_id string, bytes binary")
+    meta = {r.image_id: r for r in extract_exif(clean).collect()}
+    assert len(meta) == 13
+    assert all(m.exif_lat is None and m.exif_orientation is None for m in meta.values())
+    # corrupt row: raise by default, skipped with on_error='skip'
+    bad = spark.createDataFrame(
+        [("bad", b"\xff\xd8\xff\xe1\x00\x05garbage"), ("null", None)],
+        "image_id string, bytes binary",
+    )
+    with pytest.raises(Exception):
+        extract_exif(bad).collect()
+    assert extract_exif(bad, on_error="skip").count() == 0
+
+
 def test_geotag_points_bridges_to_tiles(spark):
     """The full bridge: GPS embedded in image bytes -> extract -> tile
     assignment matches assigning the KNOWN positions directly."""
@@ -301,37 +248,20 @@ def test_geotag_points_bridges_to_tiles(spark):
         lon = 9.0 + (i * 0.414) % 1.0
         truth[f"g{i}"] = (lon, lat)
         jpg, _ = _jpeg(seed=200 + i, size=16)
-        rows.append((f"g{i}", exif.insert_exif(jpg, lat, lon)))
+        rows.append((f"g{i}", exif_writer.insert_exif(jpg, lat, lon)))
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
     pts = geotag_points(df)
     tiled = pts.select(
         "image_id", C.tile_of(F.col("lon"), F.col("lat"), 14).alias("tile_id")
     ).collect()
     assert len(tiled) == 20
-    from simple_osm_queries_spark.functions.cells import tile_id_py, tile_xy_py
+    from simple_osm_queries_spark.functions.cells import tile_id_py
+    from tests.cell_oracle import tile_xy_py
 
     for r in tiled:
         lon, lat = truth[r.image_id]
         tx, ty = tile_xy_py(lon, lat, 14)
         assert r.tile_id == tile_id_py(tx, ty, 14)
-
-
-def test_strip_exif_spark_and_on_error(spark):
-    from simple_osm_queries_spark.operators.multimodal import extract_exif, strip_exif
-
-    df = _image_table(spark)
-    clean = strip_exif(df)
-    meta = {r.image_id: r for r in extract_exif(clean).collect()}
-    assert all(m.exif_lat is None and m.exif_orientation is None for m in meta.values())
-    # corrupt row: raise by default, skipped with on_error='skip'
-    bad = spark.createDataFrame(
-        [("bad", b"\xff\xd8\xff\xe1\x00\x05garbage"), ("null", None)],
-        "image_id string, bytes binary",
-    )
-    with pytest.raises(Exception):
-        extract_exif(bad).collect()
-    assert extract_exif(bad, on_error="skip").count() == 0
-    assert strip_exif(bad, on_error="skip").count() == 0
 
 
 def test_geotag_to_nearest_way_snap_bridge(spark):
@@ -366,7 +296,7 @@ def test_geotag_to_nearest_way_snap_bridge(spark):
         lat = road_lat + off_m / 111320.0
         truth[f"p{i}"] = (lon, lat, 1 if i % 2 == 0 else 2, off_m)
         jpg, _ = _jpeg(seed=300 + i, size=16)
-        rows.append((f"p{i}", exif.insert_exif(jpg, lat, lon)))
+        rows.append((f"p{i}", exif_writer.insert_exif(jpg, lat, lon)))
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
     pts = geotag_points(df).select(
         F.col("image_id").alias("id"), "lon", "lat"

@@ -4,7 +4,7 @@ Independence: the length oracle goes through 3-D chord geometry (unit
 vectors -> chord -> central angle), not the haversine kernel; the area
 oracle is l'Huilier spherical-triangle fan triangulation, not the
 Chamberlain-Duquette line integral; the simplify oracle is the classic
-recursive Douglas-Peucker, not the operator's iterative stack.
+recursive Douglas-Peucker, not the iterative stack of ``_dp_mask``.
 """
 
 from __future__ import annotations
@@ -167,12 +167,8 @@ def test_ring_area_degenerate(spark):
         assert r.area_m2 == 0.0
 
 
-def _dp_oracle(pts, tol_m):
-    """Recursive textbook Douglas-Peucker over the same local projection."""
-    lats = np.array([p[1] for p in pts])
-    k = math.cos(math.radians(lats.mean()))
-    m = EARTH_RADIUS_M * math.pi / 180.0
-    xy = [(p[0] * k * m, p[1] * m) for p in pts]
+def _dp_oracle(xy, tol):
+    """Recursive textbook Douglas-Peucker over planar points."""
 
     def seg_d(p, a, b):
         ax, ay = a
@@ -190,59 +186,45 @@ def _dp_oracle(pts, tol_m):
             return []
         ds = [seg_d(xy[kk], xy[i], xy[j]) for kk in range(i + 1, j)]
         a = int(np.argmax(ds))
-        if ds[a] > tol_m:
+        if ds[a] > tol:
             kk = i + 1 + a
             return rec(i, kk) + [kk] + rec(kk, j)
         return []
 
-    return [0] + rec(0, len(pts) - 1) + [len(pts) - 1]
+    return [0] + rec(0, len(xy) - 1) + [len(xy) - 1]
 
 
-def test_simplify_matches_recursive_oracle(spark):
+def _kept(xy, tol):
+    xs = np.array([p[0] for p in xy], dtype=np.float64)
+    ys = np.array([p[1] for p in xy], dtype=np.float64)
+    return np.flatnonzero(G._dp_mask(xs, ys, tol)).tolist()
+
+
+def test_simplify_matches_recursive_oracle():
+    """_dp_mask (the ``.mvt?simplify=`` thinning, on tile coordinates) keeps
+    exactly the vertices the recursive formulation keeps."""
     rng = np.random.RandomState(5)
-    ways = []
     for _ in range(15):
         n = rng.randint(3, 40)
-        lon0, lat0 = rng.uniform(-10, 10), rng.uniform(40, 60)
-        ways.append(
-            [
-                (lon0 + rng.uniform(0, 0.2), lat0 + rng.uniform(0, 0.2))
-                for _ in range(n)
-            ]
-        )
-    tol = 500.0
-    df = _ways_df(spark, ways)
-    got = {r.id: r for r in G.simplify_dp(df, tol).collect()}
-    for i, pts in enumerate(ways):
-        keep = _dp_oracle(pts, tol)
-        want = [pts[j] for j in keep]
-        have = [(p["lon"], p["lat"]) for p in got[i].nodes]
-        assert have == want
-        assert got[i].n_in == len(pts) and got[i].n_out == len(want)
+        xy = [(rng.uniform(0, 4096), rng.uniform(0, 4096)) for _ in range(n)]
+        for tol in (16.0, 500.0):
+            assert _kept(xy, tol) == _dp_oracle(xy, tol)
 
 
-def test_simplify_invariants(spark):
-    # straight line collapses to its endpoints; tol=0 is the identity;
-    # larger tolerance never keeps more points
-    line = [(10.0 + i * 0.001, 53.0 + i * 0.001) for i in range(20)]
-    zig = [(10.0 + i * 0.001, 53.0 + (0.002 if i % 2 else 0.0)) for i in range(20)]
-    df = _ways_df(spark, [line, zig])
-    heavy = {r.id: r for r in G.simplify_dp(df, 1000.0).collect()}
-    ident = {r.id: r for r in G.simplify_dp(df, 0.0).collect()}
-    light = {r.id: r for r in G.simplify_dp(df, 10.0).collect()}
-    assert heavy[0].n_out == 2
-    assert ident[0].n_out == 20 and ident[1].n_out == 20
-    for i in (0, 1):
-        assert light[i].n_out >= heavy[i].n_out
-        kept = [(p["lon"], p["lat"]) for p in light[i].nodes]
-        src = [line, zig][i]
-        # ordered subsequence of the input, endpoints preserved
-        it = iter(src)
-        assert all(any(p == q for q in it) for p in kept)
-        assert kept[0] == src[0] and kept[-1] == src[-1]
-
-    with pytest.raises(ValueError):
-        G.simplify_dp(df, -1.0)
+def test_simplify_invariants():
+    # straight line collapses to its endpoints; tol=0 keeps every vertex of
+    # a zigzag; larger tolerance keeps a subset; ways of <= 2 vertices pass
+    # through
+    line = [(float(i), float(i)) for i in range(20)]
+    zig = [(float(i), 2.0 if i % 2 else 0.0) for i in range(20)]
+    assert _kept(line, 1.0) == [0, 19]
+    assert _kept(zig, 0.0) == list(range(20))
+    for xy in (line, zig):
+        heavy, light = _kept(xy, 5.0), _kept(xy, 0.5)
+        assert set(heavy) <= set(light)
+        assert light[0] == 0 and light[-1] == len(xy) - 1
+    assert _kept([(0.0, 0.0), (3.0, 4.0)], 100.0) == [0, 1]
+    assert _kept([(1.0, 1.0)], 100.0) == [0]
 
 
 def test_measures_on_dataset_ways(spark, dataset):
@@ -254,9 +236,6 @@ def test_measures_on_dataset_ways(spark, dataset):
         pts = [(p["lon"], p["lat"]) for p in r.nodes]
         if len(pts) >= 2:
             assert got_len[r.id] == pytest.approx(_length_oracle(pts), rel=1e-12)
-    simp = G.simplify_dp(ways, 50.0)
-    for r in simp.collect():
-        assert r.n_out <= r.n_in and r.n_out >= min(2, r.n_in)
 
 
 def test_bearing_anchors_and_oracle(spark):

@@ -3,16 +3,11 @@
 neither fails the write nor replaces the row's own id and type."""
 
 import json
-import os
 
 import pytest
 
 from simple_osm_queries_spark.query.planner import run_query
-from simple_osm_queries_spark.sources.geojson import (
-    to_geojson_capped,
-    write_geojson_file,
-    write_geojson_lines,
-)
+from simple_osm_queries_spark.sources.geojson import to_geojson_capped, write_geojson_file
 
 # planner._project_output's columns
 RESULT_SCHEMA = (
@@ -77,29 +72,17 @@ EXPECTED = {
 }
 
 
-def _read_lines(path):
-    features = []
-    for fname in sorted(os.listdir(path)):
-        if fname.startswith("part-"):
-            with open(os.path.join(path, fname)) as f:
-                features.extend(json.loads(line) for line in f)
-    return features
-
-
 def _by_key(features):
     for f in features:
         assert type(f["properties"]["@osm_id"]) is int
     return {(f["properties"]["@osm_type"], f["properties"]["@osm_id"]): f for f in features}
 
 
-@pytest.mark.parametrize("sink", ["lines", "file", "capped"])
+@pytest.mark.parametrize("sink", ["file", "capped"])
 def test_geojson_sinks_write_expected_features(spark, tmp_path, sink):
     result = spark.createDataFrame(ROWS, RESULT_SCHEMA)
     out = str(tmp_path / "out")
-    if sink == "lines":
-        write_geojson_lines(result, out)
-        features = _read_lines(out)
-    elif sink == "file":
+    if sink == "file":
         assert write_geojson_file(result, out) == len(ROWS)
         with open(out) as f:
             fc = json.load(f)
@@ -116,9 +99,10 @@ def test_geojson_sinks_write_expected_features(spark, tmp_path, sink):
 def test_geojson_lines_query_result(dataset, tmp_path):
     """One feature per result row of a real query, keyed by its id."""
     result = run_query("bbox(9.90, 53.50, 10.10, 53.70).ways{ highway=* }", dataset)
-    out = str(tmp_path / "lines")
-    write_geojson_lines(result, out)
-    features = _by_key(_read_lines(out))
+    out = str(tmp_path / "result.geojson")
+    write_geojson_file(result, out)
+    with open(out) as f:
+        features = _by_key(json.load(f)["features"])
     rows = {r.id: r for r in result.collect()}
     assert rows and set(features) == {("way", i) for i in rows}
     for (_, i), f in features.items():

@@ -7,12 +7,13 @@ import pandas as pd
 
 from simple_osm_queries_spark.functions import h3 as H
 from simple_osm_queries_spark.functions import h3_encode as E
+from tests import h3_oracle as HO
 from simple_osm_queries_spark.operators import h3_sets as S
 
 
 def _children_py(h: int, res: int) -> list[int]:
     """All children one level down (python oracle)."""
-    digits = (0, 2, 3, 4, 5, 6) if H.is_pentagon_py(h) else tuple(range(7))
+    digits = (0, 2, 3, 4, 5, 6) if HO.is_pentagon_py(h) else tuple(range(7))
     shift = H._digit_shift(res)
     base = (h & ~(0xF << 52) & ~(7 << shift)) | (res << 52)
     return [base | (d << shift) for d in digits]
@@ -23,7 +24,7 @@ def _uncompact_py(cells: list[int], res: int) -> set[int]:
     stack = list(cells)
     while stack:
         c = stack.pop()
-        r = H.resolution_py(c)
+        r = HO.resolution_py(c)
         if r == res:
             out.add(c)
         else:
@@ -65,20 +66,20 @@ def test_compact_partial_families_stay(spark):
     dropped = u[1:]  # drop one child
     back = {r.cell for r in S.compact_cells(_df(spark, dropped)).collect()}
     # the parent of the dropped child must not appear
-    victim_parent = H.parent_py(u[0], 5)
+    victim_parent = HO.parent_py(u[0], 5)
     assert victim_parent not in back
     # every remaining sibling of the victim family survives uncompacted
-    siblings = {c for c in u[1:] if H.parent_py(c, 5) == victim_parent}
+    siblings = {c for c in u[1:] if HO.parent_py(c, 5) == victim_parent}
     assert siblings <= back
     # the other families compact back to their parents
-    others = {H.parent_py(c, 5) for c in dropped} - {victim_parent}
+    others = {HO.parent_py(c, 5) for c in dropped} - {victim_parent}
     assert others <= back
 
 
 def test_pentagon_family_size(spark):
     # a real pentagon cell (base cell 4's center child chain) expands to 6
     pent0 = (1 << 59) | (0 << 52) | (4 << 45) | H._digits_mask(1)
-    assert H.is_pentagon_py(pent0)
+    assert HO.is_pentagon_py(pent0)
     got = S.uncompact_cells(_df(spark, [pent0]), 1).collect()
     assert len(got) == 6
     back = {r.cell for r in S.compact_cells(_df(spark, [r.cell for r in got])).collect()}
@@ -104,50 +105,6 @@ def test_uncompact_rejects_finer_input(spark):
         S.uncompact_cells(_df(spark, cells), 4).collect()
 
 
-def test_h3_pyramid_matches_per_level_recompute(spark, dataset):
-    """Aggregate-of-aggregates pyramid equals recomputing the rollup
-    independently at every resolution."""
-    import numpy as np
-
-    from simple_osm_queries_spark.functions import h3_encode as E
-    from simple_osm_queries_spark.operators.h3_sets import h3_pyramid
-
-    from pyspark.sql import functions as F
-
-    pts = dataset.nodes.select("lon", "lat")
-    res = h3_pyramid(pts, res=8, min_res=5).collect()
-    got = {(r.res, r.cell): r.n for r in res}
-    assert len(got) == len(res)
-    pdf = pts.toPandas()
-    # oracle: ANCESTOR-of-the-res-8-assignment per level (H3 children are
-    # not geometrically nested, so per-level re-encode is a different — and
-    # inconsistent — hierarchy; see the operator docstring)
-    from simple_osm_queries_spark.functions import h3 as H
-
-    base = E.lnglat_to_cell(pdf.lon.to_numpy(), pdf.lat.to_numpy(), 8)
-    for r_ in range(5, 9):
-        anc = np.array([H.parent_py(int(c), r_) for c in base.tolist()], dtype=np.uint64)
-        vals, counts = np.unique(anc.view(np.int64), return_counts=True)
-        expect = dict(zip(vals.tolist(), counts.tolist()))
-        level = {c: n for (rr, c), n in got.items() if rr == r_}
-        assert level == expect, f"res {r_}"
-        assert sum(level.values()) == len(pdf)  # every row exactly once
-
-    # custom aggs referencing input columns (regression: the base projection
-    # must keep df columns visible to the aggregate expressions)
-    pts2 = dataset.nodes.select("lon", "lat", (F.col("id") % 7).alias("w"))
-    res2 = h3_pyramid(
-        pts2, res=7, min_res=6,
-        aggs={"n": (F.count("*"), "sum"), "wmax": (F.max("w"), "max")},
-    ).collect()
-    assert {r.res for r in res2} == {6, 7}
-    assert all(r.wmax is not None for r in res2)
-    total_by_res = {}
-    for r in res2:
-        total_by_res[r.res] = total_by_res.get(r.res, 0) + r.n
-    assert total_by_res[6] == total_by_res[7] == pts2.count()
-
-
 def test_compact_cells_py_matches_distributed(spark):
     """The plan-time numpy compaction and the distributed DataFrame
     operator implement the same spec — cross-validate them on mixed,
@@ -157,7 +114,7 @@ def test_compact_cells_py_matches_distributed(spark):
     for drop in (0, 1, 7):  # complete, one-missing, several-missing
         subset = u[drop:]
         dist = {r.cell for r in S.compact_cells(_df(spark, subset)).collect()}
-        local = set(H.compact_cells_py(subset))
+        local = set(HO.compact_cells_py(subset))
         assert dist == local, f"drop={drop}"
 
 

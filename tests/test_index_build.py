@@ -91,11 +91,21 @@ def test_rebuild_with_shrunken_input_purges_stale_partitions(spark, tmp_path):
     assert r3["wiped"] is False and r3["bands"] == 0 and r3["skipped"] > 0
 
 
+def _iceberg_available(spark) -> bool:
+    """True when the Iceberg Spark runtime is on the classpath (the
+    `soq_iceberg` hadoop catalog declared in session.py is then usable)."""
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
+        return True
+    except Exception:
+        return False
+
+
 def test_iceberg_backend_round_trip(spark, tmp_path):
     """Live only when iceberg-spark-runtime is on the classpath (the
     soq_iceberg hadoop catalog from session.py); documented-skipped
     otherwise so the 100-TB Iceberg story isn't resting on untested code."""
-    if not build.iceberg_available(spark):
+    if not _iceberg_available(spark):
         import pytest as _pytest
 
         _pytest.skip(

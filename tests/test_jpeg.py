@@ -33,6 +33,39 @@ ORACLE_DIR = Path(__file__).parent / "jdk_oracle"
 # --- component oracles -------------------------------------------------------
 
 
+def _build_decode_walk_table(bits: list[int], vals: list[int]):
+    """MINCODE/MAXCODE/VALPTR decoder tables (Annex F figure F.15) for the
+    reference length-by-length walk: the independent oracle the fast LUT
+    is tested against."""
+    mincode = [0] * 17
+    maxcode = [-1] * 17
+    valptr = [0] * 17
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        n = bits[length - 1]
+        if n:
+            valptr[length] = k
+            mincode[length] = code
+            code += n
+            k += n
+            maxcode[length] = code - 1
+        code <<= 1
+    return mincode, maxcode, valptr, list(vals)
+
+
+def _decode_walk(reader, table) -> int:
+    """Annex F figure F.16 length-by-length walk over a jpeg._BitReader."""
+    mincode, maxcode, valptr, vals = table
+    code = 0
+    for length in range(1, 17):
+        code = (code << 1) | reader.read(1)
+        mx = maxcode[length]
+        if mx >= 0 and code <= mx:
+            return vals[valptr[length] + code - mincode[length]]
+    raise ValueError("invalid Huffman code in entropy stream")
+
+
 def test_dct_matches_naive_definition():
     rng = np.random.default_rng(11)
     blocks = rng.normal(0.0, 60.0, (4, 8, 8))
@@ -87,11 +120,11 @@ def test_huffman_tables_canonical_and_prefix_free(bits, vals):
     # BOTH decoder paths: the fast 16-bit LUT and the Annex-F F.16 walk
     # (independent constructions — their agreement is the LUT's oracle)
     lut = J.build_decode_table(bits, vals)
-    walk = J.build_decode_walk_table(bits, vals)
+    walk = _build_decode_walk_table(bits, vals)
     for sym, (code, ln) in codes.items():
         raw = int(code << (8 * ((ln + 7) // 8) - ln)).to_bytes((ln + 7) // 8, "big")
         assert J._BitReader(raw).decode(lut) == sym
-        assert J._BitReader(raw).decode_walk(walk) == sym
+        assert _decode_walk(J._BitReader(raw), walk) == sym
 
 
 def test_bit_writer_stuffs_ff():

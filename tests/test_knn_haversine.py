@@ -17,6 +17,14 @@ from simple_osm_queries_spark.functions import h3_encode as E
 from simple_osm_queries_spark.operators import knn
 
 
+def _haversine_m_np(qlon, qlat, plon, plat):
+    """Numpy twin of :func:`knn.haversine_m`."""
+    sp = np.sin(np.radians(plat - qlat) / 2.0)
+    sl = np.sin(np.radians(plon - qlon) / 2.0)
+    a = sp * sp + np.cos(np.radians(qlat)) * np.cos(np.radians(plat)) * sl * sl
+    return 2.0 * knn.EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
+
+
 def _cover_cells(qlon, qlat, res, disc_arc):
     R = disc_arc + knn.h3_max_circumradius_deg(res)
     step = knn.h3_min_inradius_deg(res) / math.sqrt(2.0) * 0.99
@@ -78,7 +86,7 @@ def test_haversine_column_matches_numpy(spark):
         .toPandas()["d"]
         .to_numpy()
     )
-    exp = np.array([knn.haversine_m_np(a, b, c, d) for a, b, c, d in rows])
+    exp = np.array([_haversine_m_np(a, b, c, d) for a, b, c, d in rows])
     assert np.allclose(got, exp, rtol=1e-12)
     # the antimeridian pair is ~11 km, not ~half the planet
     assert got[0] < 15_000
@@ -119,7 +127,7 @@ KNN_QUERIES = [
 
 
 def _oracle_topk(ids, lon, lat, qlo, qla, k):
-    d = knn.haversine_m_np(qlo, qla, lon, lat)
+    d = _haversine_m_np(qlo, qla, lon, lat)
     order = np.lexsort((ids, d))[:k]
     return ids[order].tolist(), d[order]
 
@@ -141,13 +149,15 @@ def test_knn_h3_exact_haversine_matches_brute_oracle(spark, global_points):
 
 
 def test_knn_brute_haversine_matches_oracle(spark, global_points):
+    """The exact haversine brute force that knn_h3_exact falls back to for
+    queries its doubling rounds cannot certify."""
     pts, ids, lon, lat = global_points
     k = 5
     qdf = spark.createDataFrame(
         [(q, lo, la, k) for q, lo, la in KNN_QUERIES[:3]],
         "qid long, lon double, lat double, k int",
     )
-    res = knn.knn_brute_haversine(pts, qdf).toPandas()
+    res = knn._brute(pts, qdf, None, "dist_m", knn.haversine_m).toPandas()
     for qid, qlo, qla in KNN_QUERIES[:3]:
         exp_ids, _ = _oracle_topk(ids, lon, lat, qlo, qla, k)
         assert res[res.qid == qid].sort_values("rank")["id"].tolist() == exp_ids

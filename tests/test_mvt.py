@@ -15,6 +15,8 @@ import numpy as np
 import pytest
 
 from simple_osm_queries_spark.sources import mvt
+from tests import mvt_decode
+from tests.cell_oracle import tile_xy_py
 
 
 # ---------------------------------------------------------------------------
@@ -29,7 +31,7 @@ def test_varint_zigzag_anchors():
     # zigzag: 0->0, -1->1, 1->2, -2->3 (protobuf sint encoding table)
     assert [mvt._zigzag(v) for v in (0, -1, 1, -2, 2)] == [0, 1, 2, 3, 4]
     for v in (0, 1, -1, 2, -2, 63, -64, 10**12, -(10**12)):
-        assert mvt._unzigzag(mvt._zigzag(v)) == v
+        assert mvt_decode._unzigzag(mvt._zigzag(v)) == v
 
 
 def test_geometry_command_anchor():
@@ -37,7 +39,7 @@ def test_geometry_command_anchor():
     stream [9, 50, 34] (MoveTo count=1 => (1 | 1<<3) = 9; zigzag(25)=50,
     zigzag(17)=34)."""
     assert mvt.encode_geometry(mvt.POINT, [[(25, 17)]]) == [9, 50, 34]
-    assert mvt.decode_geometry([9, 50, 34]) == [[(25, 17)]]
+    assert mvt_decode.decode_geometry([9, 50, 34]) == [[(25, 17)]]
 
 
 def test_linestring_and_polygon_commands():
@@ -49,7 +51,7 @@ def test_linestring_and_polygon_commands():
     ring = [(3, 6), (8, 12), (20, 34)]
     pcmds = mvt.encode_geometry(mvt.POLYGON, [ring])
     assert pcmds[-1] == 15
-    assert mvt.decode_geometry(pcmds) == [ring]
+    assert mvt_decode.decode_geometry(pcmds) == [ring]
     # explicit closing vertex is dropped, same bytes
     assert mvt.encode_geometry(mvt.POLYGON, [ring + [ring[0]]]) == pcmds
 
@@ -91,7 +93,7 @@ def test_roundtrip_attrs_all_types_and_dedup():
          "rings": [[(0, 0), (100, 50)], [(200, 200), (90, 210)]]},
     ]
     data = mvt.encode_tile([("mix", feats)])
-    out = mvt.decode_tile(data)
+    out = mvt_decode.decode_tile(data)
     layer = out["mix"]
     assert layer["version"] == 2 and layer["extent"] == 4096
     f1, f2, f3 = layer["features"]
@@ -179,7 +181,7 @@ def test_malformed_bytes_raise_valueerror():
     )
     for bad in (good[:-1], good[:3], b"\xff" * 8, b"\x1a\x7f" + b"\x00"):
         with pytest.raises(ValueError):
-            mvt.decode_tile(bad)
+            mvt_decode.decode_tile(bad)
     # unsupported attr type fails at encode time
     with pytest.raises(ValueError):
         mvt.encode_value([1, 2])
@@ -205,7 +207,7 @@ def test_tile_vectors_points(spark):
     oracle: dict[int, list] = {}
     n = 1 << zoom
     for r in rows:
-        tx, ty = C.tile_xy_py(r.lon, r.lat, zoom)
+        tx, ty = tile_xy_py(r.lon, r.lat, zoom)
         fx = (r.lon + 180.0) / 360.0 * n
         lr = math.radians(min(max(r.lat, -85.05112878), 85.05112878))
         fy = (1.0 - math.log(math.tan(lr) + 1.0 / math.cos(lr)) / math.pi) / 2.0 * n
@@ -218,7 +220,7 @@ def test_tile_vectors_points(spark):
     for tid, members in oracle.items():
         row = out[tid]
         members.sort()
-        layer = mvt.decode_tile(bytes(row.mvt))["nodes"]
+        layer = mvt_decode.decode_tile(bytes(row.mvt))["nodes"]
         assert layer["extent"] == extent
         assert row.n_features == row.n_total == len(members)
         got = [
@@ -237,7 +239,7 @@ def test_tile_vectors_cap_is_visible(spark):
     )
     r = tile_vectors(pts, 11, cap=10).collect()[0]
     assert r.n_features == 10 and r.n_total == 30  # capped but not silent
-    layer = mvt.decode_tile(bytes(r.mvt))["nodes"]
+    layer = mvt_decode.decode_tile(bytes(r.mvt))["nodes"]
     assert [f["id"] for f in layer["features"]] == list(range(10))
 
 
@@ -247,7 +249,6 @@ def test_tile_vectors_ways(spark):
     (coords may leave [0, extent) on the neighbor tile — spec buffer
     convention); oversize ways raise by default and are visibly skipped
     with oversize='skip'."""
-    from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.operators.tiles import tile_vectors_ways
     from simple_osm_queries_spark.sources.dataset import from_generator, prepare
 
@@ -260,7 +261,7 @@ def test_tile_vectors_ways(spark):
     n = 1 << zoom
     seen: dict[int, set] = {}
     for r in out:
-        layer = mvt.decode_tile(bytes(r.mvt))["ways"]
+        layer = mvt_decode.decode_tile(bytes(r.mvt))["ways"]
         assert r.n_oversize == 0
         for f in layer["features"]:
             seen.setdefault(f["id"], set()).add((r.tx, r.ty))
@@ -280,10 +281,10 @@ def test_tile_vectors_ways(spark):
             continue
         lons = [v.lon for v in row.nodes]
         lats = [v.lat for v in row.nodes]
-        x0, _ = C.tile_xy_py(min(lons), 0.0, zoom)
-        x1, _ = C.tile_xy_py(max(lons), 0.0, zoom)
-        _, y0 = C.tile_xy_py(0.0, max(lats), zoom)
-        _, y1 = C.tile_xy_py(0.0, min(lats), zoom)
+        x0, _ = tile_xy_py(min(lons), 0.0, zoom)
+        x1, _ = tile_xy_py(max(lons), 0.0, zoom)
+        _, y0 = tile_xy_py(0.0, max(lats), zoom)
+        _, y1 = tile_xy_py(0.0, min(lats), zoom)
         want = {(tx, ty) for tx in range(x0, x1 + 1) for ty in range(y0, y1 + 1)}
         assert seen.get(wid) == want
 
@@ -320,7 +321,7 @@ def test_tile_vectors_relations(spark):
     assert out, "expected at least one relation tile"
     seen: dict[int, set] = {}
     for r in out:
-        layer = mvt.decode_tile(bytes(r.mvt))["relations"]
+        layer = mvt_decode.decode_tile(bytes(r.mvt))["relations"]
         assert r.n_oversize == 0
         for f in layer["features"]:
             seen.setdefault(f["id"], set()).add((r.tx, r.ty))
@@ -354,10 +355,10 @@ def test_tile_vectors_relations(spark):
             assert f["attrs"] == dict(src.tags or {})
     # coverage: every relation appears on exactly its bbox-cover tiles
     for rid, src in rrows.items():
-        x0, _ = C.tile_xy_py(src.min_lon, 0.0, zoom)
-        x1, _ = C.tile_xy_py(src.max_lon, 0.0, zoom)
-        _, y0 = C.tile_xy_py(0.0, src.max_lat, zoom)
-        _, y1 = C.tile_xy_py(0.0, src.min_lat, zoom)
+        x0, _ = tile_xy_py(src.min_lon, 0.0, zoom)
+        x1, _ = tile_xy_py(src.max_lon, 0.0, zoom)
+        _, y0 = tile_xy_py(0.0, src.max_lat, zoom)
+        _, y1 = tile_xy_py(0.0, src.min_lat, zoom)
         want = {(tx, ty) for tx in range(x0, x1 + 1) for ty in range(y0, y1 + 1)}
         assert seen.get(rid) == want
 
@@ -415,7 +416,7 @@ def test_http_mvt_multilayer(spark):
     full = blobs(65536, 0.0)
 
     def multi_tag(body, layer):
-        feats = mvt.decode_tile(body).get(layer, {"features": []})["features"]
+        feats = mvt_decode.decode_tile(body).get(layer, {"features": []})["features"]
         return any(len(f["attrs"]) >= 2 for f in feats)
 
     # a tile with a way on it, and one whose nodes and relations carry
@@ -456,9 +457,9 @@ def test_http_mvt_multilayer(spark):
     finally:
         for httpd in servers:
             httpd.shutdown()
-    layers = mvt.decode_tile(full[with_way])
+    layers = mvt_decode.decode_tile(full[with_way])
     # ?simplify thins the ways layer but keeps the same features
-    thin_ways = mvt.decode_tile(thin[with_way])["ways"]["features"]
+    thin_ways = mvt_decode.decode_tile(thin[with_way])["ways"]["features"]
     assert sorted(f["id"] for f in thin_ways) == sorted(
         f["id"] for f in layers["ways"]["features"]
     )
@@ -569,7 +570,7 @@ def test_tile_vectors_ways_simplify(spark):
     def decode_pts(rows):
         per_tile = {}
         for r in rows:
-            layer = mvt.decode_tile(bytes(r.mvt))["ways"]
+            layer = mvt_decode.decode_tile(bytes(r.mvt))["ways"]
             for f in layer["features"]:
                 per_tile[(r.tx, r.ty)] = f["parts"][0]
         return per_tile

@@ -36,7 +36,7 @@ assert b"{{bbox}}" in html and b"<canvas" in html
 from simple_osm_queries_spark.functions import s2
 import numpy as np
 cid = s2.lnglat_to_cell([9.95], [53.55], 12)
-assert s2.cell_level(cid)[0] == 12
+assert s2.parent_id(cid, 12)[0] == cid[0]
 
 from simple_osm_queries_spark.sources import osm_pbf
 buf = osm_pbf._enc_zigzag(-7)

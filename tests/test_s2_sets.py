@@ -7,6 +7,7 @@ import pandas as pd
 
 from simple_osm_queries_spark.functions import s2 as S2
 from simple_osm_queries_spark.operators import s2_sets as SS
+from tests.cell_oracle import cell_level
 
 
 def _children_py(c: int) -> list[int]:
@@ -23,7 +24,7 @@ def _uncompact_py(cells, level):
     stack = list(cells)
     while stack:
         c = stack.pop()
-        lv = int(S2.cell_level(np.array([c]).astype(np.int64).view(np.uint64))[0])
+        lv = int(cell_level(np.array([c]).astype(np.int64).view(np.uint64))[0])
         if lv == level:
             out.add(c)
         else:

@@ -37,17 +37,6 @@ def test_salt_gives_independent_samples(spark):
     assert 0.35 < overlap < 0.65  # ~rate, not ~1
 
 
-def test_stratified_rates(spark):
-    df = spark.range(12000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("lang")
-    )
-    out = S.stratified_sample(df, "lang", {"0": 0.5, "1": 0.1}, "doc_id")
-    counts = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert "2" not in counts
-    assert 1700 < counts["0"] < 2300  # ~2000
-    assert 250 < counts["1"] < 550  # ~400
-
-
 def test_split_disjoint_and_complete(spark):
     df = spark.range(10000).withColumnRenamed("id", "doc_id")
     out = S.split(df, {"train": 0.8, "val": 0.1, "test": 0.1}, "doc_id")

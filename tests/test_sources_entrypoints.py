@@ -14,6 +14,8 @@ from simple_osm_queries_spark.query.planner import run_query
 from simple_osm_queries_spark.sources import tag_index
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_pbf, read_osm_xml
+from tests import mvt_decode
+from tests.cell_oracle import tile_xy_py
 from tests.osm_xml_writer import write_osm_xml
 
 # the upstream project's own fixture file, in a reference checkout next to
@@ -99,6 +101,27 @@ def test_pbf_missing_file_raises(spark):
         read_osm_pbf(spark, "/nonexistent.osm.pbf")
 
 
+def _load_tag_index(path: str) -> dict[str, list[str]]:
+    """Reader of save_tag_index's file, as the reference loads it
+    (tag.go:111-170)."""
+    out: dict[str, list[str]] = {}
+    with open(path) as f:
+        for lineno, line in enumerate(f):
+            line = line.rstrip("\n")
+            if not line:
+                continue
+            key, sep, values = line.partition("=")
+            if not sep:
+                raise ValueError(
+                    f"wrong format of line {lineno}: '=' expected separating "
+                    f"key and value list"
+                )
+            values = values.replace("$$NEWLINE$$", "\n").replace("$$EQUAL$$", "=")
+            # empty entries are KEPT (reference keeps them: tag.go:150-156)
+            out[key] = [v.replace("$$PIPE$$", "|") for v in values.split("|")]
+    return out
+
+
 def test_tag_index_build_and_roundtrip(dataset, tmp_path):
     idx = tag_index.build_tag_index(dataset.nodes, dataset.ways, dataset.relations)
     # natural order per key (the mixed height dictionary)
@@ -107,12 +130,7 @@ def test_tag_index_build_and_roundtrip(dataset, tmp_path):
     assert "highway" in idx and "route" in idx  # ways + relations included
     path = str(tmp_path / "tag-index")
     tag_index.save_tag_index(idx, path)
-    assert tag_index.load_tag_index(path) == idx
-    # position helpers (tag.go:190-230 semantics)
-    assert tag_index.value_index(idx, "height", "2.5") == 3
-    assert tag_index.value_index(idx, "height", "nope") is None
-    assert tag_index.next_lower_value_index(idx, "height", "2.7") == 3
-    assert tag_index.next_lower_value_index(idx, "height", "0") is None
+    assert _load_tag_index(path) == idx
 
 
 def test_tag_index_escaping(tmp_path):
@@ -120,7 +138,7 @@ def test_tag_index_escaping(tmp_path):
     idx = {"surface": ["a|b", "line\nbreak", "eq=val", ""]}
     path = str(tmp_path / "tag-index")
     tag_index.save_tag_index(idx, path)
-    assert tag_index.load_tag_index(path) == idx
+    assert _load_tag_index(path) == idx
     # byte-level parity with the reference writer (tag.go:301-317): per-value
     # PIPE escape, then NEWLINE/EQUAL on the joined string, key unescaped
     with open(path) as f:
@@ -134,7 +152,7 @@ def test_tag_index_reference_file_parity(tmp_path):
     with open(path, "w") as f:
         f.write("amenity=bench|cafe||\n")
         f.write("odd=key=v1|v2\n")
-    loaded = tag_index.load_tag_index(path)
+    loaded = _load_tag_index(path)
     assert loaded["amenity"] == ["bench", "cafe", "", ""]
     assert loaded["odd"] == ["key=v1", "v2"]
     import pytest as _pytest
@@ -142,7 +160,7 @@ def test_tag_index_reference_file_parity(tmp_path):
     with open(path, "a") as f:
         f.write("noequalsline\n")
     with _pytest.raises(ValueError, match="'=' expected"):
-        tag_index.load_tag_index(path)
+        _load_tag_index(path)
 
 
 def test_http_server_query_and_errors(ref_dataset):
@@ -298,8 +316,8 @@ def test_cli_cells_pipeline(spark, tmp_path):
     import pandas as pd
 
     from simple_osm_queries_spark import cli
-    from simple_osm_queries_spark.functions import h3 as H
     from simple_osm_queries_spark.functions import h3_encode as E
+    from tests import h3_oracle as HO
 
     src = str(tmp_path / "in.parquet")
     pdf = pd.DataFrame(
@@ -321,7 +339,7 @@ def test_cli_cells_pipeline(spark, tmp_path):
     for r in rows[:10]:
         want = E.latlng_to_cell_py(r.lat, r.lon, 8)
         assert int(np.int64(r.h3).astype(np.uint64)) == want
-        assert H.parent_py(want, 4) == int(np.int64(r.h3_part).astype(np.uint64))
+        assert HO.parent_py(want, 4) == int(np.int64(r.h3_part).astype(np.uint64))
     import os
 
     assert [d for d in os.listdir(out + "/data") if d.startswith("h3_part=")]
@@ -452,12 +470,11 @@ def test_http_routes_reuse_generated_code(dataset):
     each union branch names its counter from a process-wide sequence."""
     import http.client
 
-    from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.web import ThreadingHTTPServer, make_handler
 
     jvm = dataset.nodes.sparkSession.sparkContext._jvm
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    x, y = C.tile_xy_py(9.987, 53.612, 14)
+    x, y = tile_xy_py(9.987, 53.612, 14)
     # bbox literals no other test uses: Spark inlines them into the code
     requests = [
         ("POST", "/query",
@@ -493,29 +510,10 @@ def test_http_routes_reuse_generated_code(dataset):
     assert first > 0 and second <= first / 4, (first, second)
 
 
-def test_merge_tag_index(spark):
-    from simple_osm_queries_spark.sources import tag_index
-
-    a_df = spark.createDataFrame(
-        [({"amenity": "cafe", "seats": "10"},), ({"amenity": "bench"},)], "tags map<string,string>"
-    )
-    b_df = spark.createDataFrame(
-        [({"amenity": "cafe"},), ({"amenity": "a2"},), ({"height": "3"},)], "tags map<string,string>"
-    )
-    a = tag_index.build_tag_index(a_df)
-    b = tag_index.build_tag_index(b_df)
-    merged = tag_index.merge_tag_index(a, b)
-    # equals building over the union of the tables (natural order incl.)
-    full = tag_index.build_tag_index(a_df, b_df)
-    assert merged == full
-    assert merged["amenity"] == ["a2", "bench", "cafe"]  # natural order
-
-
 def test_http_tile_endpoint(ref_dataset):
     """GET /tiles/{z}/{x}/{y}.png serves a decodable 256px heatmap raster
     for a populated tile, a blank raster for an empty one, and 400/404 for
     malformed requests (r5b raster endpoint)."""
-    from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.sources import codecs
     from simple_osm_queries_spark.web import serve
 
@@ -524,7 +522,7 @@ def test_http_tile_endpoint(ref_dataset):
     t.start()
     try:
         # a tile that holds fixture nodes (window ~9.9-10.1 lon, 53.5-53.7)
-        tx, ty = C.tile_xy_py(9.95, 53.55, 12)
+        tx, ty = tile_xy_py(9.95, 53.55, 12)
         with urllib.request.urlopen(
             f"http://127.0.0.1:18098/tiles/12/{tx}/{ty}.png"
         ) as resp:
@@ -555,7 +553,6 @@ def test_http_mvt_tile_endpoint(ref_dataset):
     """GET /tiles/{z}/{x}/{y}.mvt serves a decodable Mapbox Vector Tile
     carrying the tile's nodes with their tags as attributes, and an empty
     (but valid) tile for an unpopulated slot."""
-    from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.sources import mvt
     from simple_osm_queries_spark.web import serve
 
@@ -563,13 +560,13 @@ def test_http_mvt_tile_endpoint(ref_dataset):
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
     t.start()
     try:
-        tx, ty = C.tile_xy_py(9.95, 53.55, 12)
+        tx, ty = tile_xy_py(9.95, 53.55, 12)
         with urllib.request.urlopen(
             f"http://127.0.0.1:18097/tiles/12/{tx}/{ty}.mvt"
         ) as resp:
             blob = resp.read()
         assert resp.headers["Content-Type"] == "application/vnd.mapbox-vector-tile"
-        layers = mvt.decode_tile(blob)
+        layers = mvt_decode.decode_tile(blob)
         feats = layers["nodes"]["features"]
         assert len(feats) == 3  # all three fixture nodes share this tile
         by_id = {f["id"]: f for f in feats}
@@ -583,7 +580,7 @@ def test_http_mvt_tile_endpoint(ref_dataset):
         with urllib.request.urlopen(
             "http://127.0.0.1:18097/tiles/12/0/0.mvt"
         ) as resp:
-            empty = mvt.decode_tile(resp.read())
+            empty = mvt_decode.decode_tile(resp.read())
         assert empty["nodes"]["features"] == []
     finally:
         httpd.shutdown()
@@ -595,7 +592,6 @@ def test_http_tile_endpoint_clamped_edges(spark, tmp_path):
     (functions/cells.py tile_fxy) — the endpoint's membership filter must
     agree, not drop it with a driver-math bbox; (2) tile URLs with a
     query string (slippy-map cache busting) still resolve."""
-    from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.sources import codecs
     from simple_osm_queries_spark.web import serve
 
@@ -613,7 +609,7 @@ def test_http_tile_endpoint_clamped_edges(spark, tmp_path):
     try:
         z = 3
         # node 1: lat 86 clamps to the y=0 row
-        tx, _ = C.tile_xy_py(9.95, 80.0, z)
+        tx, _ = tile_xy_py(9.95, 80.0, z)
         with urllib.request.urlopen(
             f"http://127.0.0.1:18099/tiles/{z}/{tx}/0.png"
         ) as resp:
@@ -621,7 +617,7 @@ def test_http_tile_endpoint_clamped_edges(spark, tmp_path):
         assert img.max() > 0
         # node 2: lon 180 clamps into the last tile column
         n = 1 << z
-        ty = C.tile_xy_py(0.0, 53.55, z)[1]
+        ty = tile_xy_py(0.0, 53.55, z)[1]
         with urllib.request.urlopen(
             f"http://127.0.0.1:18099/tiles/{z}/{n - 1}/{ty}.png"
         ) as resp:

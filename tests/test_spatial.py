@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
 from simple_osm_queries_spark.operators import knn, spatial_join, tiles
+from tests.cell_oracle import tile_xy_py
 from tests.plan_shape import plan_nodes
 
 # fixture geometry per FIXTURES.md §5 --------------------------------------------
@@ -177,19 +178,16 @@ def test_tile_assignment_matches_python(points, points_pd):
     z = 13
     got = {r.id: r.tile_id for r in tiles.assign_tiles(points, z).select("id", "tile_id").collect()}
     for r in points_pd.itertuples():
-        tx, ty = C.tile_xy_py(r.lon, r.lat, z)
+        tx, ty = tile_xy_py(r.lon, r.lat, z)
         assert got[r.id] == C.tile_id_py(tx, ty, z)
 
 
 def test_tile_join_and_stats(spark, points, points_pd):
     z = 12
-    catalog = tiles.make_tile_catalog(spark, z, 9.90, 53.50, 10.10, 53.70)
-    joined = tiles.tile_join(points, catalog, z)
-    assert joined.count() == len(points_pd)  # catalog covers the window
     stats = {r.tile_id: r.n for r in tiles.tile_stats(points, z).collect()}
     expected = {}
     for r in points_pd.itertuples():
-        tx, ty = C.tile_xy_py(r.lon, r.lat, z)
+        tx, ty = tile_xy_py(r.lon, r.lat, z)
         tid = C.tile_id_py(tx, ty, z)
         expected[tid] = expected.get(tid, 0) + 1
     assert stats == expected
@@ -450,7 +448,7 @@ def test_tile_route_plan_shape(spark, tile_frames):
     from simple_osm_queries_spark.sources.dataset import OsmDataset
 
     ds = OsmDataset(*tile_frames)
-    x, y = C.tile_xy_py(9.95, 53.55, 12)
+    x, y = tile_xy_py(9.95, 53.55, 12)
     layers = web._mvt_layers(ds, 12, x, y, 0.0, 100)
     assert [layer.name for layer in layers] == ["nodes", "ways", "relations"]
     for layer in layers:
@@ -481,29 +479,6 @@ def test_point_in_polygon_h3_matches_plain(spark, points, points_pd):
     plain = _id_qid(point_in_polygon_literal_join(points, catalog))
     h3ed = _id_qid(point_in_polygon_h3_join(points, catalog, res=8))
     assert h3ed == plain and plain
-
-
-def test_tile_pyramid_matches_per_level_recompute(points, points_pd):
-    """Pyramid rollup (aggregate-of-aggregates, one data pass) must equal
-    recomputing tile_stats independently at every zoom, and the parent bit
-    math must match the python tile packing."""
-    from simple_osm_queries_spark.functions import cells as C
-
-    res = tiles.tile_pyramid(points, max_zoom=13, min_zoom=10).collect()
-    got = {(r.zoom, r.tile_id): (r.n, r.min_lon, r.max_lat) for r in res}
-    assert len(got) == len(res)  # no duplicate (zoom, tile) rows
-    for z in range(10, 14):
-        expect = {}
-        for lon, lat in zip(points_pd.lon, points_pd.lat):
-            tx, ty = C.tile_xy_py(lon, lat, z)
-            tid = C.tile_id_py(tx, ty, z)
-            n, mnl, mxa = expect.get(tid, (0, 181.0, -91.0))
-            expect[tid] = (n + 1, min(mnl, lon), max(mxa, lat))
-        level = {tid: v for (zz, tid), v in got.items() if zz == z}
-        assert set(level) == set(expect), f"zoom {z} tile set"
-        for tid, (n, mnl, mxa) in expect.items():
-            gn, gmnl, gmxa = level[tid]
-            assert gn == n and gmnl == pytest.approx(mnl) and gmxa == pytest.approx(mxa)
 
 
 def test_precomputed_cell_col_parity(spark, points):
@@ -741,130 +716,12 @@ def test_tile_heatmap_renders_decodable_tiles(spark):
     # hot cell (ids % 100 == 0 cluster) -> that tile has the highest max
     from simple_osm_queries_spark.functions import cells as C
 
-    hot_tx, hot_ty = C.tile_xy_py(9.95, 53.55, zoom)
+    hot_tx, hot_ty = tile_xy_py(9.95, 53.55, zoom)
     hot_id = C.tile_id_py(hot_tx, hot_ty, zoom)
     assert hot_id in by_tile
     assert max(by_tile[hot_id].values()) == max(
         max(v.values()) for v in by_tile.values()
     )
-
-
-def test_tile_contact_sheet(spark):
-    """Deterministic member selection (lowest image_ids), exact thumbnail
-    pasting (area resize, PNG lossless), partial tiles padded black,
-    n_members counts ALL tile rows while n_shown caps at grid^2."""
-    from simple_osm_queries_spark.operators import multimodal, tiles as T
-    from simple_osm_queries_spark.sources import codecs
-    from simple_osm_queries_spark.sources.datagen import image_pixels, node_lonlat
-
-    ids = np.arange(0, 300)
-    lon, lat = node_lonlat(ids)
-    rows = [
-        (f"img{i:04d}", codecs.encode_png(image_pixels(int(i))), "png",
-         float(lon[i]), float(lat[i]))
-        for i in ids
-    ]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, fmt string, lon double, lat double"
-    )
-    zoom, thumb, grid = 11, 8, 2  # cap = 4 per tile
-    sheets = {r.tile_id: r for r in
-              T.tile_contact_sheet(df, zoom, thumb=thumb, grid=grid).collect()}
-    # oracle: python-side grouping
-    from simple_osm_queries_spark.functions import cells as C
-
-    groups: dict = {}
-    for i in ids:
-        tx, ty = C.tile_xy_py(float(lon[i]), float(lat[i]), zoom)
-        groups.setdefault(C.tile_id_py(tx, ty, zoom), []).append(f"img{int(i):04d}")
-    assert set(sheets) == set(groups)
-    for tid, members in groups.items():
-        r = sheets[tid]
-        assert r.n_members == len(members)
-        assert r.n_shown == min(len(members), grid * grid)
-        img = codecs.decode_png(bytes(r.png))
-        assert img.shape == (grid * thumb, grid * thumb, 3)
-        chosen = sorted(members)[: grid * grid]
-        for slot, mid in enumerate(chosen):
-            i = int(mid[3:])
-            src = image_pixels(i).astype(np.float64)
-            expect = np.clip(
-                np.stack(
-                    [multimodal._box_mean_grid(src[..., c], thumb, thumb) for c in range(3)],
-                    axis=-1,
-                ).round(),
-                0,
-                255,
-            ).astype(np.uint8)
-            rr, cc = divmod(slot, grid)
-            got = img[rr * thumb : (rr + 1) * thumb, cc * thumb : (cc + 1) * thumb]
-            assert np.array_equal(got, expect)
-        # unfilled slots stay black
-        if len(chosen) < grid * grid:
-            rr, cc = divmod(len(chosen), grid)
-            assert img[rr * thumb : (rr + 1) * thumb, cc * thumb : (cc + 1) * thumb].max() == 0
-
-
-def test_tile_contact_sheet_duplicate_ids_and_skip(spark):
-    """Hardening (round-5 review): (1) duplicate (tile, image_id) rows must
-    not break the grid^2 cap or determinism — the renderer keeps ONE
-    representative per slot (smallest bytes); (2) on_error='skip' leaves a
-    malformed row's slot black instead of failing the job, while the
-    default raises (codec boundary contract)."""
-    from pyspark.sql.utils import PythonException
-
-    from simple_osm_queries_spark.operators import tiles as T
-    from simple_osm_queries_spark.sources import codecs
-    from simple_osm_queries_spark.sources.datagen import image_pixels
-
-    zoom, thumb, grid = 11, 8, 2
-    png_a = codecs.encode_png(image_pixels(1))
-    png_b = codecs.encode_png(image_pixels(2))
-    lo, hi = (png_a, png_b) if png_a < png_b else (png_b, png_a)
-    rows = [
-        ("dup", png_a, "png", 9.95, 53.55),
-        ("dup", png_b, "png", 9.95, 53.55),  # same id, same tile
-        ("solo", codecs.encode_png(image_pixels(3)), "png", 9.95, 53.55),
-    ]
-    schema = "image_id string, bytes binary, fmt string, lon double, lat double"
-    df = spark.createDataFrame(rows, schema)
-    out = T.tile_contact_sheet(df, zoom, thumb=thumb, grid=grid).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.n_members == 3
-    assert r.n_shown <= grid * grid and r.n_shown == 2  # dup painted once
-    img = codecs.decode_png(bytes(r.png))
-    # slot 0 = 'dup' with the deterministic (smallest-bytes) representative
-    import numpy as np
-
-    from simple_osm_queries_spark.operators import multimodal
-
-    src = codecs.decode_image(lo, "png").astype(np.float64)
-    expect = np.clip(
-        np.stack(
-            [multimodal._box_mean_grid(src[..., c], thumb, thumb) for c in range(3)],
-            axis=-1,
-        ).round(),
-        0,
-        255,
-    ).astype(np.uint8)
-    assert np.array_equal(img[:thumb, :thumb], expect)
-
-    # corrupt row: default raises, on_error='skip' paints black
-    bad = spark.createDataFrame(
-        [
-            ("a", codecs.encode_png(image_pixels(4)), "png", 9.95, 53.55),
-            ("b", b"not a png", "png", 9.95, 53.55),
-        ],
-        schema,
-    )
-    with pytest.raises(PythonException):
-        T.tile_contact_sheet(bad, zoom, thumb=thumb, grid=grid).collect()
-    r = T.tile_contact_sheet(bad, zoom, thumb=thumb, grid=grid, on_error="skip").collect()[0]
-    assert r.n_shown == 1 and r.n_members == 2
-    img = codecs.decode_png(bytes(r.png))
-    assert img[:thumb, :thumb].max() > 0  # 'a' painted at slot 0
-    assert img[:thumb, thumb : 2 * thumb].max() == 0  # 'b' slot black
 
 
 def test_zonal_stats_matches_oracle(spark, points, points_pd):
