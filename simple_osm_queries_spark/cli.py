@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 
 def _build_dataset(spark, args):
-    from simple_osm_queries_spark.sources import datagen
     from simple_osm_queries_spark.sources.dataset import from_generator, prepare
 
     if args.data == "generate":

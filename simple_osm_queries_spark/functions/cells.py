@@ -60,40 +60,8 @@ def pack_cell(x: Column, y: Column) -> Column:
 
 
 def cell_of(lon: Column, lat: Column, cell_w: float = DEFAULT_CELL_W, cell_h: float = DEFAULT_CELL_H) -> Column:
-    """Packed grid cell id for a coordinate (the engine's partition key)."""
+    """Packed grid cell id for a coordinate."""
     return pack_cell(cell_x(lon, cell_w), cell_y(lat, cell_h))
-
-
-# ---------------------------------------------------------------------------
-# Driver-side helpers (tiny, query-planning only — mirror common/cell.go)
-# ---------------------------------------------------------------------------
-
-
-def _trunc(v: float) -> int:
-    """Go int() conversion: truncation toward zero."""
-    return int(v)  # Python int() also truncates toward zero
-
-
-def cell_xy_py(lon: float, lat: float, cell_w: float = DEFAULT_CELL_W, cell_h: float = DEFAULT_CELL_H) -> tuple[int, int]:
-    return _trunc(lon / cell_w), _trunc(lat / cell_h)
-
-
-def cover_bbox_py(
-    min_lon: float,
-    min_lat: float,
-    max_lon: float,
-    max_lat: float,
-    cell_w: float = DEFAULT_CELL_W,
-    cell_h: float = DEFAULT_CELL_H,
-) -> tuple[int, int, int, int]:
-    """Cell range covering a bbox: (min_x, min_y, max_x, max_y) inclusive.
-
-    Mirrors /root/reference/src/index/grid_reader.go:41-42 (min/max cell of
-    the two bbox corners, inclusive scan over the rectangle).
-    """
-    x0, y0 = cell_xy_py(min_lon, min_lat, cell_w, cell_h)
-    x1, y1 = cell_xy_py(max_lon, max_lat, cell_w, cell_h)
-    return min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1)
 
 
 # ---------------------------------------------------------------------------

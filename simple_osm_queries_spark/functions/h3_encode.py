@@ -748,11 +748,6 @@ def latlng_to_cell_py(lat_deg: float, lng_deg: float, res: int) -> int:
     return int(lnglat_to_cell(np.float64(lng_deg), np.float64(lat_deg), res))
 
 
-def to_signed(cells: np.ndarray) -> np.ndarray:
-    """uint64 ids -> int64 (two's complement) for Spark LongType columns."""
-    return cells.view(np.int64) if isinstance(cells, np.ndarray) else np.int64(np.uint64(cells))
-
-
 # ---------------------------------------------------------------------------
 # pentagon rotation solve (cross-face consistency)
 # ---------------------------------------------------------------------------

@@ -12,9 +12,10 @@ leaf cells along a face-local Hilbert curve; the 64-bit id is
 so that ids sort along the space-filling curve and a cell's descendants
 occupy one contiguous id range — containment is integer comparison,
 parents are bit math. This module implements encode (lat/lng -> cell at
-level), decode (cell -> face/i/j) and the parent helpers, all as
-whole-array numpy (one pass of table lookups per 4-bit Hilbert block; no
-per-row Python).
+level) and the parent helpers, all as whole-array numpy (one pass of table
+lookups per 4-bit Hilbert block; no per-row Python). The decode (cell ->
+face/i/j -> lat/lng), which only the tests use to check the encode, lives
+with the test oracles (tests/cell_oracle.py) and reads ``_LOOKUP_IJ``.
 
 This replaces the quadtree *fallback* the engine used when no S2 library was
 installed: ids from here interoperate bit-for-bit with any external
@@ -157,25 +158,6 @@ def face_ij_to_cell(face: np.ndarray, i: np.ndarray, j: np.ndarray, level: int =
     return parent_id(leaf, level)
 
 
-def cell_to_face_ij(cell: np.ndarray):
-    """Invert: uint64 cell ids -> (face, leaf_i, leaf_j) of the cell's
-    minimum leaf (exact inverse of face_ij_to_cell for leaf ids)."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    face = (cell >> np.uint64(61)).astype(np.int64)
-    bits = face & _SWAP
-    i = np.zeros(cell.shape, dtype=np.int64)
-    j = np.zeros(cell.shape, dtype=np.int64)
-    for k in range(7, -1, -1):
-        nbits = MAX_LEVEL - 7 * _LOOKUP_BITS if k == 7 else _LOOKUP_BITS
-        pos = (cell >> np.uint64(k * 8 + 1)).astype(np.int64) & ((1 << (2 * nbits)) - 1)
-        bits = bits + (pos << 2)
-        bits = _LOOKUP_IJ[bits]
-        i += (bits >> 6) << (k * 4)
-        j += ((bits >> 2) & 15) << (k * 4)
-        bits = bits & (_SWAP | _INVERT)
-    return face, i, j
-
-
 # ---------------------------------------------------------------------------
 # id algebra (all uint64 in/out)
 # ---------------------------------------------------------------------------
@@ -208,8 +190,6 @@ def parent_id_col(cell, level: int):
 
 def lsb_col(cell):
     """cell & -cell (trailing one bit)."""
-    from pyspark.sql import functions as F
-
     return cell.bitwiseAND(-cell)
 
 
@@ -228,36 +208,6 @@ def lnglat_to_cell(lon_deg, lat_deg, level: int = 12) -> np.ndarray:
     i = _st_to_ij(_uv_to_st(u))
     j = _st_to_ij(_uv_to_st(v))
     return face_ij_to_cell(face, i, j, level)
-
-
-def cell_to_lnglat(cell) -> tuple[np.ndarray, np.ndarray]:
-    """An interior point (lon, lat) in degrees of each cell: the decoded
-    (i, j) names a leaf inside the cell (the trailing-1 bit of a non-leaf id
-    decodes to a center-adjacent leaf), whose own center is returned —
-    always strictly inside the cell, exact center for leaves."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    face, i, j = cell_to_face_ij(cell)
-    limit = float(1 << MAX_LEVEL)
-    s = (i.astype(np.float64) + 0.5) / limit
-    t = (j.astype(np.float64) + 0.5) / limit
-    u = np.where(s >= 0.5, (4.0 * s * s - 1.0) / 3.0, (1.0 - 4.0 * (1.0 - s) * (1.0 - s)) / 3.0)
-    v = np.where(t >= 0.5, (4.0 * t * t - 1.0) / 3.0, (1.0 - 4.0 * (1.0 - t) * (1.0 - t)) / 3.0)
-    one = np.ones_like(u)
-    x = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [one, -u, -u, -one, v, v],
-    )
-    y = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [u, one, -v, -v, -one, u],
-    )
-    z = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [v, v, one, -u, -u, -one],
-    )
-    lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
-    lon = np.degrees(np.arctan2(y, x))
-    return lon, lat
 
 
 def to_signed(cell: np.ndarray) -> np.ndarray:

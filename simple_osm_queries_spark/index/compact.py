@@ -43,7 +43,7 @@ import os
 import time
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.index import fsio

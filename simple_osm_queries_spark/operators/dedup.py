@@ -36,10 +36,7 @@ from pyspark.sql import types as T
 
 
 # shared cache-handle protocol (also used by the PBF reader)
-from simple_osm_queries_spark.caching import (  # noqa: F401  (re-exported API)
-    track_persisted as _track_persisted,
-    unpersist_intermediates,
-)
+from simple_osm_queries_spark.caching import track_persisted as _track_persisted
 
 # --- exact -------------------------------------------------------------------
 

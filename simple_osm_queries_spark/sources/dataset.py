@@ -3,9 +3,10 @@
 This is the Spark re-expression of the reference's import-time index build
 (/root/reference/src/importing/import.go + src/index/grid_writer.go):
 
-* cell assignment  — computed ``cell_x/cell_y/cell`` columns
+* cell assignment  — computed ``cell_x/cell_y`` node columns
   (grid_writer.go:90-252 routes features into cells; we derive the same keys
-  as column math and use them for partitioning/pruning instead of cell files);
+  as column math and partition the on-disk index by them instead of writing
+  cell files — index/build.py, index/upsert.py, index/compact.py);
 * way geometry     — explode(node_ids) -> shuffle-join with nodes ->
   re-assemble ordered coordinate arrays + bbox (grid_writer.go:125-145 stores
   node coords on ways; the PBF pre-processing step `osmium
@@ -42,10 +43,10 @@ def _empty_longs():
 class OsmDataset:
     """Prepared feature tables. Schemas (beyond raw generator columns):
 
-    nodes:      id, lon, lat, tags, cell_x, cell_y, cell, way_ids, relation_ids
+    nodes:      id, lon, lat, tags, cell_x, cell_y, way_ids, relation_ids
                 (+ image payload columns when generated with images)
     ways:       id, node_ids, tags, nodes(array<struct<id,lon,lat>>),
-                min_lon/min_lat/max_lon/max_lat, cells(array<long>), relation_ids
+                min_lon/min_lat/max_lon/max_lat, relation_ids
     relations:  id, node_member_ids, way_member_ids, child_relation_ids, tags,
                 min_lon/min_lat/max_lon/max_lat, parent_relation_ids
     """
@@ -53,8 +54,6 @@ class OsmDataset:
     nodes: DataFrame
     ways: DataFrame
     relations: DataFrame
-    cell_w: float = C.DEFAULT_CELL_W
-    cell_h: float = C.DEFAULT_CELL_H
 
     def df_for(self, object_type: str) -> DataFrame:
         if object_type == "node":
@@ -86,24 +85,18 @@ def prepare(
     nodes_raw: DataFrame,
     ways_raw: DataFrame,
     relations_raw: DataFrame,
-    cell_w: float = C.DEFAULT_CELL_W,
-    cell_h: float = C.DEFAULT_CELL_H,
     max_relation_depth: int = 4,
 ) -> OsmDataset:
-    # --- nodes: cell assignment (pure column math, codegen'd) ---------------
-    nodes = (
-        nodes_raw.withColumn("cell_x", C.cell_x(F.col("lon"), cell_w))
-        .withColumn("cell_y", C.cell_y(F.col("lat"), cell_h))
-        .withColumn("cell", C.pack_cell(F.col("cell_x"), F.col("cell_y")))
+    # --- nodes: index partition keys (pure column math, codegen'd) ---------
+    nodes = nodes_raw.withColumn("cell_x", C.cell_x(F.col("lon"))).withColumn(
+        "cell_y", C.cell_y(F.col("lat"))
     )
 
     # --- way geometry: one shuffle join nodes<->exploded membership ---------
     way_nodes = ways_raw.select(
         F.col("id").alias("way_id"), F.posexplode("node_ids").alias("pos", "nid")
     )
-    node_coords = nodes.select(
-        F.col("id").alias("nid"), "lon", "lat", F.col("cell").alias("ncell")
-    )
+    node_coords = nodes.select(F.col("id").alias("nid"), "lon", "lat")
     joined = way_nodes.join(node_coords, "nid", "inner")
     way_geom = joined.groupBy("way_id").agg(
         F.transform(
@@ -118,7 +111,6 @@ def prepare(
         F.min("lat").alias("min_lat"),
         F.max("lon").alias("max_lon"),
         F.max("lat").alias("max_lat"),
-        F.sort_array(F.collect_set("ncell")).alias("cells"),
     )
     ways = ways_raw.join(way_geom.withColumnRenamed("way_id", "id"), "id", "left")
 
@@ -187,7 +179,7 @@ def prepare(
     )
     relations = relations.join(boxes, "id", "left")
 
-    return OsmDataset(nodes=nodes, ways=ways, relations=relations, cell_w=cell_w, cell_h=cell_h)
+    return OsmDataset(nodes=nodes, ways=ways, relations=relations)
 
 
 def from_generator(

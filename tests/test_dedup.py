@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from simple_osm_queries_spark.caching import unpersist_intermediates
 from simple_osm_queries_spark.operators import dedup
 
 DOCS = [
@@ -195,7 +196,7 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     # unpersist a no-op) and must actually release
     handles = getattr(capped, "_soq_persisted")
     assert handles and all(h.storageLevel.useMemory for h in handles)
-    dedup.unpersist_intermediates(capped)
+    unpersist_intermediates(capped)
     assert all(not h.storageLevel.useMemory for h in handles)
 
 
@@ -237,7 +238,7 @@ def test_unpersist_intermediates_releases_storage(spark, docs):
     res.collect()
     handles = getattr(res, "_soq_persisted")
     assert handles and all(h.storageLevel.useMemory for h in handles)
-    dedup.unpersist_intermediates(res)
+    unpersist_intermediates(res)
     assert all(not h.storageLevel.useMemory for h in handles)
 
 

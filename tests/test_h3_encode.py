@@ -183,9 +183,6 @@ def test_scalar_and_signed_forms():
     h = E.latlng_to_cell_py(53.55, 9.95, 8)
     arr = E.lnglat_to_cell(np.array([9.95]), np.array([53.55]), 8)
     assert int(arr[0]) == h
-    signed = E.to_signed(arr)
-    assert signed.dtype == np.int64
-    assert signed[0] == np.uint64(h).astype(np.int64)
 
 
 def test_spark_cell_h3_column(spark):

@@ -264,7 +264,6 @@ def test_upsert_partition_scoped(dataset, tmp_path, spark):
         .withColumn("lon", F.when(F.col("id") == b_id, moved_lon).otherwise(F.col("lon")))
         .withColumn("cell_x", C.cell_x(F.col("lon")))
         .withColumn("cell_y", C.cell_y(F.col("lat")))
-        .withColumn("cell", C.pack_cell(F.col("cell_x"), F.col("cell_y")))
     )
     insert = src.filter(F.col("id") == a_id).withColumn("id", F.lit(new_id))
     delta = delta.unionByName(insert.select(*delta.columns))

@@ -156,54 +156,25 @@ def test_geojson_sink(dataset):
     assert f["properties"]["amenity"] == "bench"
 
 
-def test_substatement_inner_scan_is_cell_scoped(spark, dataset):
-    """VERDICT r3 #1 guard: the this.* inner scan must carry the outer cell
-    prune (broadcast semi join on the distinct outer cell set) — and on a
-    cell-PARTITIONED layout Spark must turn it into a dynamic partition
-    filter on the inner FileScan, the distributed twin of the reference's
-    per-cell sub-statement fetch (filter.go:227-263)."""
-    import tempfile
-
-    from simple_osm_queries_spark.sources.dataset import OsmDataset
-
-    q = f"bbox({WINDOW}).ways{{ building=yes AND this.nodes{{ amenity=bench }} }}"
-
-    # in-memory layout: the semi join on __ocell is present in the plan
-    df = plan_query(parse_query(q), dataset)
-    plan = df._jdf.queryExecution().toString()
-    assert "__ocell" in plan, "inner scan lost the outer-cell semi join"
-
-    # partitioned layout: the inner nodes scan gets a dynamicpruning filter
-    out = tempfile.mkdtemp(prefix="soq_dpp_guard_")
-    dataset.nodes.write.mode("overwrite").partitionBy("cell").parquet(out)
-    ds2 = OsmDataset(
-        nodes=spark.read.parquet(out), ways=dataset.ways, relations=dataset.relations
-    )
-    df2 = plan_query(parse_query(q), ds2)
-    plan2 = df2._jdf.queryExecution().toString()
-    assert "dynamicpruning" in plan2.lower(), "no dynamic partition filter on inner scan"
-
-    # same rows either way, and same rows as the module's other e2e checks
-    a = sorted(r.id for r in df.collect())
-    b = sorted(r.id for r in df2.collect())
-    assert a == b
-
-
 def test_relation_substatement_inner_scan_is_rect_scoped(dataset):
-    """VERDICT r4 watch item: relation-involved sub-statements must not scan
-    the inner table unscoped. The planner scopes them by the outer
+    """No this.* sub-statement scans the inner table unscoped, whatever the
+    pair of types: the planner scopes every inner scan by the outer
     candidates' aggregate bounding rectangle (a lazy one-row broadcast —
     _scope_inner_by_outer_rect), the distributed twin of the reference's
-    relation bbox-extent fetch (filter.go:212-222)."""
-    # relation outer, node inner
-    q1 = f"bbox({WINDOW}).relations{{ route=bus AND this.nodes{{ seats=* }} }}"
-    plan1 = plan_query(parse_query(q1), dataset)._jdf.queryExecution().toString()
-    assert "__omin_lon" in plan1, "relation-outer inner node scan lost the rect scope"
-
-    # node outer, relation inner
-    q2 = f"bbox({WINDOW}).nodes{{ this.relations{{ route=bus }} }}"
-    plan2 = plan_query(parse_query(q2), dataset)._jdf.queryExecution().toString()
-    assert "__omin_lon" in plan2, "node-outer inner relation scan lost the rect scope"
+    scoped sub-statement fetch (filter.go:196-263)."""
+    for q in (
+        # relation outer, node inner
+        f"bbox({WINDOW}).relations{{ route=bus AND this.nodes{{ seats=* }} }}",
+        # node outer, relation inner
+        f"bbox({WINDOW}).nodes{{ this.relations{{ route=bus }} }}",
+        # node outer, way inner
+        f"bbox({WINDOW}).nodes{{ this.ways{{ highway=primary }} }}",
+        # way outer, node inner
+        f"bbox({WINDOW}).ways{{ building=yes AND this.nodes{{ amenity=bench }} }}",
+    ):
+        plan = plan_query(parse_query(q), dataset)._jdf.queryExecution().toString()
+        assert "__omin_lon" in plan, f"inner scan lost the rect scope: {q}"
+        assert "__ocell" not in plan, f"inner scan still scoped by cells: {q}"
 
     # the rectangle must be CONSERVATIVE: a relation whose members sit far
     # outside every other candidate's bounds still matches its sub-statement
@@ -247,3 +218,30 @@ def test_relation_substatement_inner_scan_is_rect_scoped(dataset):
         ).collect()
     )
     assert got == [95002], got
+
+
+# the two query templates of the serve benchmark (perfbench/w_serve.py)
+SERVE_QUERIES = (
+    "bbox(9.95, 53.55, 10.00, 53.60).nodes{ (amenity=bench AND seats=*) OR "
+    "this.ways{ highway=primary } } "
+    "bbox(9.97, 53.57, 10.02, 53.62).ways{ building=yes AND this.nodes{ amenity=* } }",
+    "bbox(9.95, 53.55, 10.00, 53.60).relations{ route=bus AND this.nodes{ seats=* } }",
+)
+
+
+def test_query_path_needs_no_grid_columns(dataset):
+    """The planner reads no grid column: a dataset whose nodes carry no
+    cell_x/cell_y/cell and whose ways carry no cell list answers the serve
+    queries with the same rows as the prepared dataset."""
+    from simple_osm_queries_spark.sources.dataset import OsmDataset
+
+    bare = OsmDataset(
+        nodes=dataset.nodes.drop("cell", "cell_x", "cell_y"),
+        ways=dataset.ways.drop("cells"),
+        relations=dataset.relations,
+    )
+    for q in SERVE_QUERIES:
+        want = sorted((r.osm_type, r.id) for r in plan_query(parse_query(q), dataset).collect())
+        got = sorted((r.osm_type, r.id) for r in plan_query(parse_query(q), bare).collect())
+        assert want, q
+        assert got == want, q

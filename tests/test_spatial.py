@@ -49,7 +49,7 @@ def _pip_oracle(x, y, ring):
 
 @pytest.fixture(scope="module")
 def points(dataset):
-    return dataset.nodes.select("id", "lon", "lat", "cell", "cell_x", "cell_y").cache()
+    return dataset.nodes.select("id", "lon", "lat", "cell_x", "cell_y").cache()
 
 
 @pytest.fixture(scope="module")
