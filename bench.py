@@ -516,24 +516,31 @@ def run_upsert_block(spark, points_dir: str) -> dict:
 
 
 def _ensure_osm_tables(spark, n_nodes: int, n_ways: int) -> str:
-    """Materialize a PREPARED nodes+ways dataset once per size (adjacency +
-    way geometry and bounds baked in) so the sub-statement block times query
-    execution, not dataset preparation."""
+    """Materialize a PREPARED nodes+ways dataset once per size and prepared
+    schema (adjacency + way geometry and bounds baked in) so the
+    sub-statement block times query execution, not dataset preparation.
+    The directory name carries a short hash of the prepared schemas, read
+    from the lazy plan without a job, so tables an older ``prepare`` wrote
+    are not read back."""
+    import hashlib
+
     from simple_osm_queries_spark.sources.dataset import prepare
 
-    odir = f"/tmp/soq_bench_osm_{n_nodes}_{n_ways}"
+    empty_r = spark.createDataFrame(
+        [], "id long, node_member_ids array<long>, way_member_ids array<long>, "
+        "child_relation_ids array<long>, tags map<string,string>")
+    ds = prepare(
+        datagen.gen_nodes(spark, n_nodes, partitions=max(CPUS * 2, 64), with_images=False),
+        datagen.gen_ways(spark, n_ways, n_nodes, partitions=max(CPUS, 16)),
+        empty_r,
+    )
+    schemas = ds.nodes.schema.simpleString() + ds.ways.schema.simpleString()
+    key = hashlib.sha256(schemas.encode()).hexdigest()[:8]
+    odir = f"/tmp/soq_bench_osm_{n_nodes}_{n_ways}_{key}"
     if not (
         os.path.exists(os.path.join(odir, "nodes", "_SUCCESS"))
         and os.path.exists(os.path.join(odir, "ways", "_SUCCESS"))
     ):
-        empty_r = spark.createDataFrame(
-            [], "id long, node_member_ids array<long>, way_member_ids array<long>, "
-            "child_relation_ids array<long>, tags map<string,string>")
-        ds = prepare(
-            datagen.gen_nodes(spark, n_nodes, partitions=max(CPUS * 2, 64), with_images=False),
-            datagen.gen_ways(spark, n_ways, n_nodes, partitions=max(CPUS, 16)),
-            empty_r,
-        )
         ds.nodes.write.mode("overwrite").parquet(os.path.join(odir, "nodes"))
         ds.ways.write.mode("overwrite").parquet(os.path.join(odir, "ways"))
     return odir

@@ -15,7 +15,7 @@ parents are bit math. This module implements encode (lat/lng -> cell at
 level) and the parent helpers, all as whole-array numpy (one pass of table
 lookups per 4-bit Hilbert block; no per-row Python). The decode (cell ->
 face/i/j -> lat/lng), which only the tests use to check the encode, lives
-with the test oracles (tests/cell_oracle.py) and reads ``_LOOKUP_IJ``.
+with the test oracles (tests/cell_oracle.py), which invert ``_LOOKUP_POS``.
 
 This replaces the quadtree *fallback* the engine used when no S2 library was
 installed: ids from here interoperate bit-for-bit with any external
@@ -46,16 +46,14 @@ _POS_TO_IJ = np.array(
 )
 _POS_TO_ORIENT = np.array([_SWAP, 0, 0, _INVERT | _SWAP], dtype=np.int64)
 
-# 4-level (4-bit-per-axis) lookup tables: (ij<<2 | orient) <-> (pos<<2 | orient)
+# 4-level (4-bit-per-axis) lookup table: (ij<<2 | orient) -> (pos<<2 | orient)
 _LOOKUP_POS = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
-_LOOKUP_IJ = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
 
 
 def _init_lookup(level: int, i: int, j: int, orig_orient: int, pos: int, orient: int) -> None:
     if level == _LOOKUP_BITS:
         ij = (i << _LOOKUP_BITS) + j
         _LOOKUP_POS[(ij << 2) + orig_orient] = (pos << 2) + orient
-        _LOOKUP_IJ[(pos << 2) + orig_orient] = (ij << 2) + orient
         return
     level += 1
     i <<= 1

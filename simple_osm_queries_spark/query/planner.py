@@ -5,21 +5,26 @@ Where the reference interprets the AST per feature over channel scans
 whole query into ONE declarative DataFrame plan and let Catalyst do pruning,
 pushdown and join selection:
 
-* bbox scan (S2)       -> bbox column predicates; on parquet the bound
-  columns' min/max stats skip row groups (the Spark analogue of reading
+* bbox scan (S2)       -> query-bbox-meets-feature-bound predicate
+  (geometry.bound_meets, the node-point / way-relation min-max column choice
+  named once in geometry.BOUND_COLUMNS); on parquet the bound columns'
+  min/max stats skip row groups (the Spark analogue of reading
   only the cell files in range, grid_reader.go:39-78);
 * tag filters (F4-F8)  -> null-safe boolean column math on the tags map,
   incl. the "no key => false for every operator" rule (filter.go:108-110)
   and natural-order comparisons (functions/natural_sort.py);
-* this.* (J1/J2)       -> DECORRELATED: the inner statement's qualifying ids
-  become a DataFrame built once; membership is explode(adjacency) + left-semi
-  join, re-attached as a boolean column so it composes with arbitrary
-  AND/OR/NOT nesting. This strictly dominates the reference's memoized
-  nested-loop (filter.go:166-337). Like the reference's scoped fetch
-  (filter.go:196-263), every inner scan is first filtered to the outer
-  candidates' union bounding rectangle (_scope_inner_by_outer_rect) — a
-  one-row broadcast, whatever the pair of types — so the inner side never
-  flows whole into the membership join for a city-sized bbox.
+* this.* (J1/J2)       -> DECORRELATED: the inner statement's qualifying rows
+  become one id set, read from the INNER side: explode of the inner row's
+  reverse adjacency (prepare derives every reverse edge from its forward
+  edge, so this names the same outer ids as the reference's "outer related
+  ids meet qualifying inner ids", filter.go:266-334), then distinct. The
+  set is left-joined back as a boolean flag column (_flag_join, shared with
+  this.buffer), so it composes with arbitrary AND/OR/NOT nesting and the
+  outer frame is read only for its rows and its rectangle. Like the
+  reference's scoped fetch (filter.go:196-263), every inner scan is first
+  filtered to the outer candidates' union bounding rectangle
+  (_scope_inner_by_outer_rect) — a one-row broadcast, whatever the pair of
+  types — so the inner side never flows whole for a city-sized bbox.
 * multiple top-level statements -> unionByName (query.go:29-35).
 
 Output schema is uniform across object types:
@@ -48,17 +53,18 @@ class PlanError(ValueError):
     pass
 
 
-# outer object type x inner query type -> adjacency column on the outer row.
-# Mirrors the membership matrix in filter.go:266-334.
+# outer object type x inner query type -> the INNER row's column holding the
+# outer ids it relates to: the reverse of the membership matrix in
+# filter.go:266-334 (the outer's way_ids <-> the way's node_ids, ...).
 _ADJACENCY = {
-    ("node", "ways"): "way_ids",
-    ("node", "relations"): "relation_ids",
-    ("way", "nodes"): "__way_node_ids",  # ids of the way's own nodes
-    ("way", "relations"): "relation_ids",
-    ("relation", "nodes"): "node_member_ids",
-    ("relation", "ways"): "way_member_ids",
-    ("relation", "relations"): "parent_relation_ids",
-    ("relation", "child_relations"): "child_relation_ids",
+    ("node", "ways"): "node_ids",
+    ("node", "relations"): "node_member_ids",
+    ("way", "nodes"): "way_ids",
+    ("way", "relations"): "way_member_ids",
+    ("relation", "nodes"): "relation_ids",
+    ("relation", "ways"): "relation_ids",
+    ("relation", "relations"): "child_relation_ids",
+    ("relation", "child_relations"): "parent_relation_ids",
 }
 
 _FLAG = itertools.count()
@@ -143,10 +149,7 @@ def _scope_inner_by_outer_rect(
     flag lazily disables scoping for that case, and inner rows without
     bounds (or an empty outer set's NULL rectangle) are kept (coalesce ->
     True): scoping may only ever drop rows that provably cannot match."""
-    if outer_type == "node":
-        lo_lon, lo_lat, hi_lon, hi_lat = "lon", "lat", "lon", "lat"
-    else:  # way / relation outers carry folded min/max bound columns
-        lo_lon, lo_lat, hi_lon, hi_lat = "min_lon", "min_lat", "max_lon", "max_lat"
+    lo_lon, lo_lat, hi_lon, hi_lat = G.BOUND_COLUMNS[outer_type]
     rect = df.agg(
         F.min(lo_lon).alias("__omin_lon"),
         F.min(lo_lat).alias("__omin_lat"),
@@ -155,13 +158,9 @@ def _scope_inner_by_outer_rect(
         F.max(F.col(lo_lon).isNull()).alias("__o_unbounded"),
     )
     scoped = inner_df.crossJoin(F.broadcast(rect))
-    rect_cols = [F.col(c) for c in ("__omin_lon", "__omin_lat", "__omax_lon", "__omax_lat")]
-    if inner_base == "node":
-        keep = G.point_in_bbox(F.col("lon"), F.col("lat"), *rect_cols)
-    else:  # way / relation: bound-rectangle intersection
-        keep = G.bbox_intersects(
-            F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"), *rect_cols
-        )
+    keep = G.bound_meets(
+        inner_base, *(F.col(c) for c in ("__omin_lon", "__omin_lat", "__omax_lon", "__omax_lat"))
+    )
     return scoped.filter(
         F.coalesce(F.col("__o_unbounded"), F.lit(True)) | F.coalesce(keep, F.lit(True))
     ).drop("__omin_lon", "__omin_lat", "__omax_lon", "__omax_lat", "__o_unbounded")
@@ -181,23 +180,8 @@ def _compile_substatement(
     inner_df = dataset.df_for(inner_base)
     inner_df = _scope_inner_by_outer_rect(inner_df, inner_base, df, outer_type)
     inner_df, inner_pred = compile_filter(inner_df, stmt.filter, inner_base, dataset)
-    inner_ids = inner_df.filter(inner_pred).select(F.col("id").alias("__mid"))
-
-    if adjacency == "__way_node_ids":
-        adj_col = F.col("node_ids")  # a way's member-node ids
-    else:
-        adj_col = F.col(adjacency)
-
-    flag = f"__sub_{next(_FLAG)}"
-    matched = (
-        df.select("id", F.explode(adj_col).alias("__mid"))
-        .join(inner_ids, "__mid", "left_semi")
-        .select("id")
-        .distinct()
-        .withColumn(flag, F.lit(True))
-    )
-    df = df.join(matched, "id", "left")
-    return df, F.coalesce(F.col(flag), F.lit(False))
+    outer_ids = inner_df.filter(inner_pred).select(F.explode(adjacency).alias("id")).distinct()
+    return _flag_join(df, outer_ids)
 
 
 def _compile_buffer(
@@ -228,78 +212,33 @@ def _compile_buffer(
             f"this.buffer(...).{inner_qtype} inside a {outer_type} statement is "
             "not supported (supported pairs: node<->node, node<->ways, way<->ways)"
         )
+    return _flag_join(df, matched)
 
-    flag = f"__buf_{next(_FLAG)}"
-    df = df.join(matched.withColumn(flag, F.lit(True)), "id", "left")
+
+def _flag_join(df: DataFrame, ids: DataFrame) -> tuple[DataFrame, Column]:
+    """Left-join a distinct one-column ``id`` set onto df as a flag column;
+    the returned predicate is False, not NULL, for rows outside the set."""
+    flag = f"__in_{next(_FLAG)}"
+    df = df.join(ids.withColumn(flag, F.lit(True)), "id", "left")
     return df, F.coalesce(F.col(flag), F.lit(False))
 
 
-def _bbox_predicate(bbox: ast.Bbox, object_type: str) -> Column:
-    """Query-bbox-vs-feature-bound intersection (grid_reader.go:180-184); on
-    parquet the bound columns' min/max stats skip row groups, the analogue
-    of reading only the cells in range."""
-    if object_type == "node":
-        return G.point_in_bbox(
-            F.col("lon"), F.col("lat"), bbox.min_lon, bbox.min_lat, bbox.max_lon, bbox.max_lat
-        )
-    return G.bbox_intersects(
-        F.col("min_lon"),
-        F.col("min_lat"),
-        F.col("max_lon"),
-        F.col("max_lat"),
-        bbox.min_lon,
-        bbox.min_lat,
-        bbox.max_lon,
-        bbox.max_lat,
-    )
-
-
-def _null_d() -> Column:
-    return F.lit(None).cast("double")
-
-
-def _null_nodes() -> Column:
-    return F.lit(None).cast("array<struct<id:long,lon:double,lat:double>>")
-
-
 def _project_output(df: DataFrame, object_type: str) -> DataFrame:
-    if object_type == "node":
-        return df.select(
-            F.lit("node").alias("osm_type"),
-            "id",
-            "lon",
-            "lat",
-            F.col("lon").alias("min_lon"),
-            F.col("lat").alias("min_lat"),
-            F.col("lon").alias("max_lon"),
-            F.col("lat").alias("max_lat"),
-            "tags",
-            _null_nodes().alias("nodes"),
-        )
-    if object_type == "way":
-        return df.select(
-            F.lit("way").alias("osm_type"),
-            "id",
-            _null_d().alias("lon"),
-            _null_d().alias("lat"),
-            "min_lon",
-            "min_lat",
-            "max_lon",
-            "max_lat",
-            "tags",
-            F.col("nodes"),
-        )
+    null_d = F.lit(None).cast("double")
+    null_nodes = F.lit(None).cast("array<struct<id:long,lon:double,lat:double>>")
+    point = object_type == "node"
+    lo_lon, lo_lat, hi_lon, hi_lat = G.BOUND_COLUMNS[object_type]
     return df.select(
-        F.lit("relation").alias("osm_type"),
+        F.lit(object_type).alias("osm_type"),
         "id",
-        _null_d().alias("lon"),
-        _null_d().alias("lat"),
-        "min_lon",
-        "min_lat",
-        "max_lon",
-        "max_lat",
+        F.col("lon") if point else null_d.alias("lon"),
+        F.col("lat") if point else null_d.alias("lat"),
+        F.col(lo_lon).alias("min_lon"),
+        F.col(lo_lat).alias("min_lat"),
+        F.col(hi_lon).alias("max_lon"),
+        F.col(hi_lat).alias("max_lat"),
         "tags",
-        _null_nodes().alias("nodes"),
+        F.col("nodes") if object_type == "way" else null_nodes.alias("nodes"),
     )
 
 
@@ -310,7 +249,8 @@ def plan_statement(stmt: ast.Statement, dataset: OsmDataset) -> DataFrame:
         raise PlanError("'child_relations' is only valid in sub-statements")
     object_type = ast.BASE_TYPE[stmt.query_type]
     df = dataset.df_for(object_type)
-    df = df.filter(_bbox_predicate(stmt.location, object_type))
+    box = stmt.location
+    df = df.filter(G.bound_meets(object_type, box.min_lon, box.min_lat, box.max_lon, box.max_lat))
     df, pred = compile_filter(df, stmt.filter, object_type, dataset)
     return _project_output(df.filter(pred), object_type)
 

@@ -27,7 +27,7 @@ import math
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import geometry as G
@@ -46,19 +46,6 @@ DEFAULT_MAX_ROWS = 100_000
 # GET /cells cap on the ESTIMATED cell count (bbox area / cell area at res):
 # a planet bbox at res 12 would otherwise group+collect millions of rows.
 DEFAULT_MAX_CELLS = 50_000
-
-
-def _contains(min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
-    """Node rows inside the inclusive bbox."""
-    return G.point_in_bbox(F.col("lon"), F.col("lat"), min_lon, min_lat, max_lon, max_lat)
-
-
-def _overlaps(min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
-    """Way / relation rows whose bounds meet the inclusive bbox."""
-    return G.bbox_intersects(
-        F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"),
-        min_lon, min_lat, max_lon, max_lat,
-    )
 
 
 def _tile_bounds(z: int, x: int, y: int) -> tuple[float, float, float, float]:
@@ -89,7 +76,7 @@ def _tile_frame(dataset: OsmDataset, z: int, x: int, y: int) -> DataFrame:
     from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.operators.tiles import tile_heatmap
 
-    pre = dataset.nodes.where(_contains(*_tile_bounds(z, x, y))).where(
+    pre = dataset.nodes.where(G.bound_meets("node", *_tile_bounds(z, x, y))).where(
         C.tile_of(F.col("lon"), F.col("lat"), z) == F.lit(C.tile_id_py(x, y, z))
     )
     return tile_heatmap(pre.select("lon", "lat"), z, 256).select("png")
@@ -105,11 +92,10 @@ def _mvt_layers(
     from simple_osm_queries_spark.operators.tiles import tile_mvt_layers
 
     bounds = _tile_bounds(z, x, y)
-    meets = _overlaps(*bounds)
     return tile_mvt_layers(
-        dataset.nodes.where(_contains(*bounds)),
-        dataset.ways.where(meets),
-        dataset.relations.where(meets),
+        dataset.nodes.where(G.bound_meets("node", *bounds)),
+        dataset.ways.where(G.bound_meets("way", *bounds)),
+        dataset.relations.where(G.bound_meets("relation", *bounds)),
         z, x, y, cap, simplify,
     )
 
@@ -191,7 +177,7 @@ def make_handler(
                     M_PER_DEG * math.cos(math.radians(min(abs(lat), 89.0)))
                 )
                 cand = dataset.ways.filter(
-                    _overlaps(lon - d_lon, lat - d_lat, lon + d_lon, lat + d_lat)
+                    G.bound_meets("way", lon - d_lon, lat - d_lat, lon + d_lon, lat + d_lat)
                 ).select(
                     "id", "nodes", "min_lon", "min_lat", "max_lon", "max_lat"
                 )
@@ -328,7 +314,7 @@ def make_handler(
                 return
             try:
                 rows = (
-                    dataset.nodes.filter(_contains(x1, y1, x2, y2))
+                    dataset.nodes.filter(G.bound_meets("node", x1, y1, x2, y2))
                     .groupBy(C.cell_h3(F.col("lon"), F.col("lat"), res).alias("cell"))
                     .agg(F.count("*").alias("n"))
                     .collect()

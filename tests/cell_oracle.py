@@ -111,6 +111,20 @@ def s2_cell_to_lnglat(cell) -> tuple[np.ndarray, np.ndarray]:
     return lon, lat
 
 
+def _s2_lookup_ij() -> np.ndarray:
+    """The decode table (pos<<2 | orient) -> (ij<<2 | orient): the inverse of
+    the encode's ``S2._LOOKUP_POS`` per starting orientation (the low 2 bits
+    of the index keep the starting orientation on both sides)."""
+    k = np.arange(len(S2._LOOKUP_POS))
+    start, out_bits = k & 3, S2._LOOKUP_POS
+    table = np.zeros_like(out_bits)
+    table[(out_bits & ~3) | start] = (k & ~3) | (out_bits & 3)
+    return table
+
+
+_S2_LOOKUP_IJ = _s2_lookup_ij()
+
+
 def s2_cell_to_face_ij(cell: np.ndarray):
     """Decode oracle for functions/s2.py: uint64 cell ids -> (face, leaf_i,
     leaf_j) of the cell's minimum leaf (exact inverse of face_ij_to_cell
@@ -124,7 +138,7 @@ def s2_cell_to_face_ij(cell: np.ndarray):
         nbits = S2.MAX_LEVEL - 7 * S2._LOOKUP_BITS if k == 7 else S2._LOOKUP_BITS
         pos = (cell >> np.uint64(k * 8 + 1)).astype(np.int64) & ((1 << (2 * nbits)) - 1)
         bits = bits + (pos << 2)
-        bits = S2._LOOKUP_IJ[bits]
+        bits = _S2_LOOKUP_IJ[bits]
         i += (bits >> 6) << (k * 4)
         j += ((bits >> 2) & 15) << (k * 4)
         bits = bits & (S2._SWAP | S2._INVERT)

@@ -7,8 +7,10 @@ import inspect
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.query.planner import run_query
+from simple_osm_queries_spark.query import ast
+from simple_osm_queries_spark.query.planner import _ADJACENCY, run_query
 from simple_osm_queries_spark.sources.dataset import prepare
 
 
@@ -118,6 +120,53 @@ FOLD_RELS = pd.DataFrame(
     ],
     columns=["id", "node_member_ids", "way_member_ids", "child_relation_ids", "tags"],
 )
+
+
+# (outer type, inner query type) -> the OUTER row's forward column, the
+# membership matrix of filter.go:266-334 that _ADJACENCY reverses
+_FORWARD = {
+    ("node", "ways"): "way_ids",
+    ("node", "relations"): "relation_ids",
+    ("way", "nodes"): "node_ids",
+    ("way", "relations"): "relation_ids",
+    ("relation", "nodes"): "node_member_ids",
+    ("relation", "ways"): "way_member_ids",
+    ("relation", "relations"): "parent_relation_ids",
+    ("relation", "child_relations"): "child_relation_ids",
+}
+
+
+@pytest.mark.parametrize("fixture", ["dataset", "deep_ds"])
+def test_adjacency_reverse_columns_match_forward(fixture, request):
+    """The planner reads this.* membership from the inner row's column in
+    _ADJACENCY; that picks the same outer ids as the reference's forward
+    column only if both name the same (outer, inner) pairs of existing
+    rows. Checked for every pair on the e2e and the deep fixture."""
+    ds = request.getfixturevalue(fixture)
+    assert set(_ADJACENCY) == set(_FORWARD)
+    for (outer_type, inner_qtype), inner_col in _ADJACENCY.items():
+        outer = ds.df_for(outer_type)
+        inner = ds.df_for(ast.BASE_TYPE[inner_qtype])
+        outer_ids = outer.select(F.col("id").alias("o"))
+        inner_ids = inner.select(F.col("id").alias("i"))
+        forward = outer.select(
+            F.col("id").alias("o"), F.explode(_FORWARD[outer_type, inner_qtype]).alias("i")
+        )
+        reverse = inner.select(F.explode(inner_col).alias("o"), F.col("id").alias("i"))
+
+        def pairs(df):
+            return sorted(
+                tuple(r)
+                for r in df.join(outer_ids, "o", "left_semi")
+                .join(inner_ids, "i", "left_semi")
+                .select("o", "i")
+                .distinct()
+                .collect()
+            )
+
+        want = pairs(forward)
+        assert want, (fixture, outer_type, inner_qtype)
+        assert pairs(reverse) == want, (fixture, outer_type, inner_qtype)
 
 
 def _python_fold(nodes, ways, rels, depth):

@@ -220,6 +220,24 @@ def test_relation_substatement_inner_scan_is_rect_scoped(dataset):
     assert got == [95002], got
 
 
+def test_substatement_reads_outer_table_for_rows_and_rect_only(dataset):
+    """A this.* id set is read from the inner side (explode of the inner
+    rows' reverse adjacency): on the cached dataset the outer nodes table is
+    scanned for its rows and for the scope rectangle only, never for its
+    way_ids, and the ways table once."""
+    from tests.plan_shape import plan_nodes
+
+    df = plan_query(
+        parse_query(f"bbox({WINDOW}).nodes{{ this.ways{{ highway=primary }} }}"), dataset
+    )
+    outputs = [
+        sec.splitlines()[1] for name, sec in plan_nodes(df) if name == "InMemoryTableScan"
+    ]
+    assert len(outputs) == 3, outputs
+    assert sum("node_ids#" in o for o in outputs) == 1, outputs  # the ways table
+    assert not any("way_ids#" in o for o in outputs), outputs
+
+
 # the two query templates of the serve benchmark (perfbench/w_serve.py)
 SERVE_QUERIES = (
     "bbox(9.95, 53.55, 10.00, 53.60).nodes{ (amenity=bench AND seats=*) OR "
