@@ -7,10 +7,12 @@
   python -m simple_osm_queries_spark cells <table.parquet> --out <dir>  (north-rule
       encode-to-H3/S2/tile + cell-partitioned write, in one spark-submit step)
 
-`import` builds the cell-partitioned parquet index + the reference-format
-tag-index file from an .osm XML / .osm.pbf file (or the deterministic generator
-with `--generate N`). `query` mirrors main.go:95-111 (parse -> execute ->
-output.geojson). `server` mirrors the HTTP entry point.
+`import` writes the raw node/way/relation tables and builds the
+cell-partitioned parquet index from an .osm XML / .osm.pbf file (the
+reference's tag-index file is not written: filters compare tag values
+directly, so nothing reads it). `query` mirrors main.go:95-111
+(parse -> execute -> output.geojson). `server` mirrors the HTTP entry
+point.
 """
 
 from __future__ import annotations
@@ -37,16 +39,16 @@ def _build_dataset(spark, args):
 
 def cmd_import(spark, args) -> None:
     from simple_osm_queries_spark.index.build import build_index
-    from simple_osm_queries_spark.sources import tag_index
     from simple_osm_queries_spark.sources.dataset import prepare
-    from simple_osm_queries_spark.sources.osm_xml import read_osm_pbf, read_osm_xml
+    from simple_osm_queries_spark.sources.osm_pbf import read_osm_pbf, release_scan
+    from simple_osm_queries_spark.sources.osm_xml import read_osm_xml
 
     os.makedirs(args.out, exist_ok=True)
     if args.file.endswith(".pbf"):
         # decode blobs ONCE (persisted union), sink the three raw tables,
         # then reload from parquet so every downstream action (band plan,
-        # per-band writes, tag index) scans columnar files instead of
-        # re-running the blob decode; the cache is released right after
+        # per-band writes) scans columnar files instead of re-running the
+        # blob decode; the cache is released right after
         nodes_raw, ways_raw, rels_raw = read_osm_pbf(spark, args.file, persist=True)
     else:
         nodes_raw, ways_raw, rels_raw = read_osm_xml(spark, args.file)
@@ -55,8 +57,6 @@ def cmd_import(spark, args) -> None:
     ways_raw.write.mode("overwrite").parquet(os.path.join(args.out, "ways"))
     rels_raw.write.mode("overwrite").parquet(os.path.join(args.out, "relations"))
     if args.file.endswith(".pbf"):
-        from simple_osm_queries_spark.sources.osm_pbf import release_scan
-
         release_scan(nodes_raw)
         nodes_raw = spark.read.parquet(os.path.join(args.out, "nodes"))
         ways_raw = spark.read.parquet(os.path.join(args.out, "ways"))
@@ -66,9 +66,6 @@ def cmd_import(spark, args) -> None:
     report = build_index(
         ds.nodes, os.path.join(args.out, "grid-index"), input_fingerprint=args.file
     )
-    # reference-format tag dictionary (tag.go text format)
-    idx = tag_index.build_tag_index(ds.nodes, ds.ways, ds.relations)
-    tag_index.save_tag_index(idx, os.path.join(args.out, "tag-index"))
     print(f"imported {report['rows']} nodes in {report['t_sec']:.1f}s -> {args.out}")
 
 

@@ -71,19 +71,6 @@ def natural_key_py(s: str) -> tuple:
     return (has_num, num, pure, s)
 
 
-def natural_is_less_py(a: str, b: str) -> bool:
-    """Python mirror of the comparator (test oracle)."""
-    ha, na, pa, ra = natural_key_py(a)
-    hb, nb, pb, rb = natural_key_py(b)
-    if ha and hb:
-        if na == nb:
-            if pa != pb:
-                return pa
-            return ra < rb  # deterministic refinement of the undefined tie
-        return na < nb
-    return ra < rb
-
-
 def natural_cmp(value_col: Column, op: str, literal: str) -> Column:
     """Column predicate ``value_col <op> literal`` under natural order.
 

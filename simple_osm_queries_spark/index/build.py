@@ -10,12 +10,18 @@ cell columns (cell_x range); for each band we:
    Iceberg-style partition layout, min/max stats give row-group pruning);
 2. record a MANIFEST json per completed band: deterministic band identity
    (cell_x range + input fingerprint), row count, duration — written
-   atomically (write tmp + rename) so a killed job never half-marks a band.
+   atomically (``fsio.fs_write_text_atomic``: fsync'd temp + atomic
+   replace) so a killed job never half-marks a band.
 
 ``build_index`` skips bands whose manifest already exists and matches the
 input fingerprint — restart cost is one list of the manifest dir, no
 recomputation of completed bands (north rule: per-partition lineage +
-metrics, resume without recomputing completed cells).
+metrics, resume without recomputing completed cells). A manifest of
+another input, or one that cannot be read, wipes the old build first.
+The manifests, the resume check and that wipe go through ``fsio`` like
+the data writes, so a ``file:``/``hdfs:``/``s3a:`` root works as a plain
+path does; the layout's paths, clustering and lookup live in
+``layout.py``.
 
 Band planning mirrors the reference's greedy extent bin-packing
 (import.go:167-233): bands are chosen from the per-cell_x row histogram so
@@ -27,12 +33,22 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from simple_osm_queries_spark.index import fsio
+from simple_osm_queries_spark.index.layout import (
+    cluster_for_write,
+    current_version,
+    data_path,
+    lookup_path,
+    sync_lookup,
+    upserts_path,
+)
 
 
 @dataclass
@@ -71,52 +87,33 @@ def plan_bands(df: DataFrame, max_rows_per_band: int, partition_col: str = "cell
     return bands
 
 
+def _manifest_dir(out_path: str) -> str:
+    return os.path.join(out_path, "_manifests")
+
+
 def _manifest_path(base: str, band: Band) -> str:
-    return os.path.join(base, "_manifests", f"{band.key}.json")
+    return os.path.join(_manifest_dir(base), f"{band.key}.json")
 
 
-def _write_manifest_atomic(path: str, payload: dict) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)  # atomic on POSIX
-
-
-def _wipe_if_input_changed(out_path: str, input_fingerprint: str) -> bool:
-    """Rebuilding over a DIFFERENT input must start clean: dynamic partition
-    overwrite only replaces cell_x directories present in the NEW input, so
-    partitions that existed only in the old input would otherwise survive
-    and read_index() would mix stale rows into the new build. Any manifest
-    with a mismatched (or unreadable) fingerprint wipes data/ + _manifests/.
-    """
-    mdir = os.path.join(out_path, "_manifests")
-    if not os.path.isdir(mdir):
-        return False
-    stale = False
-    for fn in os.listdir(mdir):
-        if not fn.endswith(".json"):
+def _completed_bands(
+    spark: SparkSession, out_path: str, input_fingerprint: str
+) -> dict[str, dict] | None:
+    """The manifests of bands already built from this input, by band key;
+    None when any manifest names another input or cannot be read or parsed
+    (the build must then start clean)."""
+    mdir = _manifest_dir(out_path)
+    done = {}
+    for name in fsio.fs_listdir(spark, mdir):
+        if not name.endswith(".json"):
             continue
         try:
-            with open(os.path.join(mdir, fn)) as f:
-                if json.load(f).get("input_fingerprint") != input_fingerprint:
-                    stale = True
-                    break
-        except (OSError, json.JSONDecodeError):
-            stale = True
-            break
-    if stale:
-        shutil.rmtree(os.path.join(out_path, "data"), ignore_errors=True)
-        shutil.rmtree(mdir, ignore_errors=True)
-        # upsert manifests describe deltas applied to the OLD build; keeping
-        # them would make a replayed delta a silent no-op against the NEW
-        # build (upsert.py's idempotence check is fingerprint-by-filename).
-        # The (id, partition) lookup projection is likewise old-build state.
-        shutil.rmtree(os.path.join(out_path, "_upserts"), ignore_errors=True)
-        shutil.rmtree(os.path.join(out_path, "_lookup"), ignore_errors=True)
-    return stale
+            m = json.loads(fsio.fs_read_text(spark, os.path.join(mdir, name)))
+        except (Py4JError, ValueError):
+            return None
+        if m.get("input_fingerprint") != input_fingerprint:
+            return None
+        done[name[: -len(".json")]] = m
+    return done
 
 
 def _iceberg_write_band(
@@ -136,41 +133,15 @@ def _iceberg_write_band(
         writer.overwritePartitions()
 
 
-def cluster_for_write(df: DataFrame, partition_col: str, files_per_cell: int) -> DataFrame:
-    """The index layout's shared clustering discipline (band builds AND
-    incremental upserts write through this — index/upsert.py):
-
-    * rows cluster by cell_y/lat (and any h3/s2 column) inside each
-      partition directory so parquet row-group min/max stats prune the
-      second dimension too (z-order-lite for a 2D grid);
-    * WRITE PARALLELISM: repartition(partition_col) alone serializes a hot
-      column into ONE task (measured at 300M rows: a 151M-row column wrote
-      single-threaded for 560 s). Salting by source partition lets up to
-      ``files_per_cell`` tasks write one directory in parallel; rows stay
-      sorted within each file, so row-group pruning is unchanged (just
-      <= files_per_cell files per directory instead of 1)."""
-    sort_cols = [partition_col] + [
-        c for c in ("cell_y", "lat", "h3", "s2")
-        if c in df.columns and c != partition_col
-    ]
-    salt = F.pmod(F.spark_partition_id(), F.lit(files_per_cell))
-    return df.repartition(
-        F.col(partition_col), salt.alias("__salt")
-    ).sortWithinPartitions(*sort_cols)
-
-
 def build_index(
     nodes: DataFrame,
     out_path: str,
     input_fingerprint: str,
     max_rows_per_band: int = 10_000_000,
-    progress: bool = False,
     backend: str = "parquet",
     iceberg_table: str | None = None,
     files_per_cell: int = 16,
     partition_col: str = "cell_x",
-    maintain_lookup: bool = True,
-    id_col: str = "id",
 ) -> dict:
     """Write the node table as a cell-partitioned index, band by band, with
     atomic per-band manifests. Returns a build report.
@@ -185,35 +156,43 @@ def build_index(
     `soq_iceberg` catalog; requires the Iceberg Spark runtime jar, which is
     not bundled). Manifests/resume logic is shared;
     out_path still holds the _manifests dir for the iceberg backend.
+    The parquet backend also seeds the (id, partition) lookup
+    (``layout.sync_lookup``) when the rows carry an ``id``.
     """
+    spark = nodes.sparkSession
     report = {"bands": 0, "skipped": 0, "rows": 0, "t_sec": 0.0, "wiped": False}
     t0 = time.time()
-    report["wiped"] = _wipe_if_input_changed(out_path, input_fingerprint)
-    if report["wiped"] and backend == "iceberg" and iceberg_table:
-        # overwritePartitions only replaces partitions present in the NEW
-        # input — a changed-input rebuild must drop the table too, or old-
-        # input-only cell_x partitions survive (same reasoning as the
-        # parquet data/ wipe above)
-        nodes.sparkSession.sql(f"DROP TABLE IF EXISTS {iceberg_table}")
+    done = _completed_bands(spark, out_path, input_fingerprint)
+    if done is None:
+        # Rebuilding over a DIFFERENT input must start clean: dynamic
+        # partition overwrite only replaces the partitions present in the
+        # NEW input, so the old input's other partitions would survive into
+        # read_index(). Upsert manifests and the lookup describe the OLD
+        # build too: a replayed delta would be a silent no-op against the
+        # new one (the idempotence check is fingerprint-by-filename).
+        report["wiped"] = True
+        for sub in (data_path(out_path), _manifest_dir(out_path),
+                    upserts_path(out_path), lookup_path(out_path)):
+            fsio.fs_delete(spark, sub)
+        if backend == "iceberg" and iceberg_table:
+            # overwritePartitions has the same blind spot: drop the table
+            spark.sql(f"DROP TABLE IF EXISTS {iceberg_table}")
+        done = {}
     bands = plan_bands(nodes, max_rows_per_band, partition_col)
     for band in bands:
-        mpath = _manifest_path(out_path, band)
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                m = json.load(f)
-            if m.get("input_fingerprint") == input_fingerprint:
-                report["skipped"] += 1
-                report["rows"] += m["rows"]
-                continue
+        if band.key in done:
+            report["skipped"] += 1
+            report["rows"] += done[band.key]["rows"]
+            continue
         tb = time.time()
         band_df = nodes.filter(
             (F.col(partition_col) >= band.min_x) & (F.col(partition_col) <= band.max_x)
         )
-        clustered = cluster_for_write(band_df, partition_col, files_per_cell)
+        clustered = cluster_for_write(band_df, partition_col, F.lit(files_per_cell))
         if backend == "iceberg":
             if not iceberg_table:
                 raise ValueError("backend='iceberg' requires iceberg_table")
-            _iceberg_write_band(nodes.sparkSession, clustered, iceberg_table, partition_col)
+            _iceberg_write_band(spark, clustered, iceberg_table, partition_col)
         else:
             (
                 clustered.write.mode("overwrite")
@@ -221,59 +200,29 @@ def build_index(
                 # cell_x=... directories in the shared root — idempotent restarts
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(partition_col)
-                .parquet(os.path.join(out_path, "data"))
+                .parquet(data_path(out_path))
             )
-        n = band.rows
-        _write_manifest_atomic(
-            mpath,
-            {
+        fsio.fs_write_text_atomic(
+            spark,
+            _manifest_path(out_path, band),
+            json.dumps({
                 "band": band.key,
                 "min_x": band.min_x,
                 "max_x": band.max_x,
-                "rows": n,
+                "rows": band.rows,
                 "input_fingerprint": input_fingerprint,
                 "duration_sec": time.time() - tb,
-            },
+            }),
         )
         report["bands"] += 1
-        report["rows"] += n
-        if progress:
-            print(f"band {band.key}: {n} rows in {time.time()-tb:.1f}s")
-    if maintain_lookup and backend == "parquet" and id_col in nodes.columns:
-        _write_lookup_if_missing(nodes.sparkSession, out_path, id_col, partition_col)
+        report["rows"] += band.rows
+    if backend == "parquet":
+        sync_lookup(spark, out_path, partition_col, current_version(spark, out_path))
     report["t_sec"] = time.time() - t0
     return report
-
-
-def _write_lookup_if_missing(spark, out_path: str, id_col: str, partition_col: str) -> None:
-    """Seed the (id, partition) lookup projection AT BUILD TIME (r5): the
-    first incremental upsert then resolves affected partitions from the
-    compact table instead of paying a full two-column index scan (the
-    bootstrap that made the first diff ~2x slower than later ones). Only
-    written when absent or stale for version 0 — a resumed build with
-    upserts already applied leaves the maintained lookup alone."""
-    import json as _json
-
-    from simple_osm_queries_spark.index import fsio, upsert as _up
-
-    state_path = os.path.join(out_path, "_lookup", "_state.json")
-    cur = _up.current_version(spark, out_path)
-    if fsio.fs_exists(spark, state_path):
-        state = _json.loads(fsio.fs_read_text(spark, state_path))
-        if state.get("version") == cur:
-            return
-    (
-        spark.read.parquet(os.path.join(out_path, "data"))
-        .select(id_col, partition_col)
-        .repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(os.path.join(out_path, "_lookup", "data"))
-    )
-    fsio.fs_write_text_atomic(spark, state_path, _json.dumps({"version": cur}))
 
 
 def read_index(spark: SparkSession, out_path: str) -> DataFrame:
     """Read the whole index back (partition column recovered; cell_x
     predicates prune partition directories)."""
-    return spark.read.parquet(os.path.join(out_path, "data"))
+    return spark.read.parquet(data_path(out_path))

@@ -11,7 +11,8 @@ per split.
 
 ``compact_index`` rewrites only the offending partition directories into
 ``ceil(bytes / target_file_bytes)`` files each and commits through the
-SAME staged backup/rename protocol as ``upsert_index`` — so a compaction
+SAME stage -> commit sequence as ``upsert_index``
+(``layout.stage_and_commit``) — so a compaction
 
 * is crash-safe (a pending manifest rolls forward via
   ``recover_pending_upserts``, bytes live in exactly one of
@@ -20,24 +21,23 @@ SAME staged backup/rename protocol as ``upsert_index`` — so a compaction
   (``read_index_version`` reassembles older versions through the backup,
   ``gc_snapshots`` bounds retention),
 * leaves untouched partitions byte-identical,
-* preserves the id->partition mapping, so the maintained ``_lookup/``
+* preserves the id->partition mapping, so a valid ``_lookup/``
   projection stays valid — only its version stamp is advanced (no data
-  rewrite).
+  rewrite; a stale one is rebuilt, as an upsert would).
 
 Planning cost: one Hadoop ``listStatus`` per partition directory on the
 driver — the same O(partitions) metadata pass the reference's extent
 planner does per import (import.go:167-233), and the only driver-side
 loop in the operator. The rewrite itself is one partition-pruned scan +
-one clustered write; per-partition file counts are enforced by salting
-``spark_partition_id`` modulo each partition's own target (broadcast
-plan join), keeping the ``cluster_for_write`` sort discipline so parquet
-row-group pruning (cell_y/lat min-max) survives compaction.
+one clustered write through ``cluster_for_write``, its salt modulus the
+partition's own target file count (broadcast plan join), so the
+per-partition file counts hold and parquet row-group pruning (cell_y/lat
+min-max) survives compaction.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import os
 import time
@@ -47,13 +47,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.index import fsio
-from simple_osm_queries_spark.index.upsert import (
-    _commit_partitions,
-    _data_path,
-    _lookup_dir,
-    _updir,
+from simple_osm_queries_spark.index.layout import (
+    cluster_for_write,
     current_version,
+    data_path,
     recover_pending_upserts,
+    stage_and_commit,
 )
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -72,7 +71,7 @@ def compaction_plan(
     (most excess files) first."""
     if target_file_bytes <= 0:
         raise ValueError(f"target_file_bytes must be > 0, got {target_file_bytes}")
-    data = _data_path(out_path)
+    data = data_path(out_path)
     prefix = f"{partition_col}="
     plan = []
     for name in fsio.fs_listdir(spark, data):
@@ -137,73 +136,39 @@ def compact_index(
         report["t_sec"] = time.time() - t0
         return report
 
-    cur_version = current_version(spark, out_path)
-    version = cur_version + 1
+    version = current_version(spark, out_path) + 1
     parts = [e["partition"] for e in plan]
     digest = hashlib.sha256(
         f"compact-v{version}:{','.join(map(str, sorted(map(str, parts))))}".encode()
     ).hexdigest()[:24]
 
-    data_path = _data_path(out_path)
-    index_df = spark.read.parquet(data_path)
-    df = index_df.filter(F.col(partition_col).isin(parts))
-    # per-partition file-count targets ride a broadcast plan join; the salt
-    # bounds writer tasks per directory exactly like cluster_for_write,
-    # with each partition's own target instead of one global files_per_cell
+    df = spark.read.parquet(data_path(out_path)).filter(F.col(partition_col).isin(parts))
+    # per-partition file-count targets ride a broadcast plan join: the
+    # write salt takes each partition's own target instead of one global
+    # files_per_cell
     ptype = df.schema[partition_col].dataType.simpleString()
     tmap = spark.createDataFrame(
         [(e["partition"], e["target_files"]) for e in plan],
         f"{partition_col} {ptype}, __tf int",
     )
-    sort_cols = [partition_col] + [
-        c for c in ("cell_y", "lat", "h3", "s2")
-        if c in df.columns and c != partition_col
-    ]
-    clustered = (
-        df.join(F.broadcast(tmap), partition_col)
-        .withColumn("__salt", F.pmod(F.spark_partition_id(), F.col("__tf")))
-        .repartition(F.col(partition_col), F.col("__salt"))
-        .sortWithinPartitions(*sort_cols)
-        .drop("__tf", "__salt")
-    ).persist()
-    n = clustered.count()
-    stage = os.path.join(_updir(out_path), f"stage-{digest}")
-    clustered.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-    clustered.unpersist()
-
-    manifest = {
-        "digest": digest,
-        "version": version,
-        "kind": "compact",
-        "delta_fingerprint": f"compact-v{version}",
-        "partition_col": partition_col,
-        "partitions": list(parts),
-        "surviving": sorted(parts, key=str),
-        "absent_before": [],
-        "rows_written": n,
-    }
-    mdir = _updir(out_path)
-    fsio.fs_mkdirs(spark, mdir)
-    mpath = os.path.join(mdir, f"{digest}.json")
-    pending = mpath + ".pending"
-    fsio.fs_write_text_atomic(spark, pending, json.dumps(manifest))
-    _commit_partitions(spark, out_path, manifest)
-
-    # ids never move partitions in a compaction — advance the lookup stamp
-    # in place (no data rewrite); a stale/missing stamp stays as-is and the
-    # next upsert bootstraps honestly
-    state_path = os.path.join(_lookup_dir(out_path), "_state.json")
-    if fsio.fs_exists(spark, state_path):
-        state = json.loads(fsio.fs_read_text(spark, state_path))
-        if state.get("version") == cur_version:
-            fsio.fs_write_text_atomic(
-                spark, state_path, json.dumps({"version": version})
-            )
-
-    manifest["duration_sec"] = time.time() - t0
-    fsio.fs_write_text_atomic(spark, mpath, json.dumps(manifest))
-    fsio.fs_delete(spark, pending)
-    report["rows_written"] = n
+    rows = cluster_for_write(
+        df.join(F.broadcast(tmap), partition_col), partition_col, F.col("__tf")
+    ).drop("__tf")
+    # ids never move partitions in a compaction: the lookup keeps its rows
+    # and only its version stamp advances
+    m = stage_and_commit(
+        spark, out_path, rows,
+        {
+            "digest": digest,
+            "version": version,
+            "kind": "compact",
+            "delta_fingerprint": f"compact-v{version}",
+            "partition_col": partition_col,
+            "partitions": parts,
+        },
+        t0, changed=[],
+    )
+    report["rows_written"] = m["rows_written"]
     report["version"] = version
     report["t_sec"] = time.time() - t0
     return report

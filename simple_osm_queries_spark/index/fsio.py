@@ -4,9 +4,15 @@ through the SAME filesystem as the data writes, or on HDFS/S3 a local
 ``shutil.rmtree`` silently no-ops and stale partition directories keep
 serving deleted rows).
 
+Every index module uses it for every file and directory it touches: the
+band manifests, resume check and changed-input wipe of ``build.py``, the
+upsert/compaction manifests, partition moves and ``_lookup/`` stamp of
+``layout.py``. So an index root given as a ``file:``, ``hdfs:`` or
+``s3a:`` URI behaves like a plain local path.
+
 Everything here is driver-side metadata work at partition-directory
-granularity — a handful of py4j calls per upsert, never per row. The
-reference has no moral equivalent (its index is a local write-once
+granularity — a handful of py4j calls per band or upsert, never per row.
+The reference has no moral equivalent (its index is a local write-once
 directory tree, /root/reference/src/index/grid_writer.go:485-486).
 """
 
@@ -114,8 +120,8 @@ def _file_context(spark: SparkSession, fs):
 
 
 def fs_write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
-    """Write-to-temp + ATOMIC overwrite-replace (the same atomicity
-    discipline as the band manifests). The temp name carries the pid so
+    """Write-to-temp + ATOMIC overwrite-replace (every index manifest and
+    the lookup stamp are written this way). The temp name carries the pid so
     concurrent writers on a shared store never interleave into one temp
     file.
 

@@ -88,14 +88,3 @@ def read_osm_xml(
     ways = spark.createDataFrame(ways_pdf, schema=WAY_SCHEMA)
     rels = spark.createDataFrame(rels_pdf, schema=RELATION_SCHEMA)
     return nodes, ways, rels
-
-
-def read_osm_pbf(spark: SparkSession, path: str, persist: bool = True):
-    """Distributed `.osm.pbf` scan — pure-Python blob decoder, split by blob.
-
-    See sources/osm_pbf.py for the format notes and scale design (driver
-    scans blob headers only; mapInPandas decodes blobs in parallel).
-    """
-    from simple_osm_queries_spark.sources.osm_pbf import read_osm_pbf as _read
-
-    return _read(spark, path, persist=persist)

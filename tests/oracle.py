@@ -11,10 +11,24 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from simple_osm_queries_spark.functions.natural_sort import natural_is_less_py
+from simple_osm_queries_spark.functions.natural_sort import natural_key_py
 from simple_osm_queries_spark.query import ast
 
 M_PER_DEG = 111320.0
+
+
+def natural_is_less_py(a: str, b: str) -> bool:
+    """Python mirror of the natural-order comparator
+    (``functions/natural_sort.py``, sort.go:17-29)."""
+    ha, na, pa, ra = natural_key_py(a)
+    hb, nb, pb, rb = natural_key_py(b)
+    if ha and hb:
+        if na == nb:
+            if pa != pb:
+                return pa
+            return ra < rb  # deterministic refinement of the undefined tie
+        return na < nb
+    return ra < rb
 
 
 @dataclass

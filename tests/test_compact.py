@@ -116,6 +116,40 @@ def test_plan_validation(fragmented, spark):
         compact.compaction_plan(spark, out, target_file_bytes=0)
 
 
+def test_compaction_crash_mid_commit_recovers_forward(dataset, tmp_path, spark, monkeypatch):
+    """A compaction that dies inside the partition swap loses nothing: its
+    pending manifest rolls forward through recover_pending_upserts, like an
+    upsert's (both commit through layout.stage_and_commit)."""
+    from simple_osm_queries_spark.index import layout
+    from tests.index_faults import crash_mid_commit
+
+    out = str(tmp_path / "idx_crash_c")
+    build.build_index(dataset.nodes, out, input_fingerprint="fp1", max_rows_per_band=10**6)
+    idx = build.read_index(spark, out)
+    donor = idx.groupBy("cell_x").count().orderBy(F.desc("count")).first().cell_x
+    i = idx.filter(F.col("cell_x") == donor).select("id").first().id
+    upsert.upsert_index(spark, out, dataset.nodes.filter(F.col("id") == i), "crash-frag",
+                        files_per_cell=4)
+    plan = compact.compaction_plan(spark, out, target_file_bytes=1 << 30)
+    assert plan, "fixture failed to fragment a partition"
+    before_rows = _rows(build.read_index(spark, out))
+    v = upsert.current_version(spark, out)
+
+    monkeypatch.setattr(layout, "_commit_partitions", crash_mid_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact.compact_index(spark, out, target_file_bytes=1 << 30)
+    monkeypatch.undo()
+
+    assert upsert.recover_pending_upserts(spark, out) == 1
+    assert upsert.current_version(spark, out) == v + 1
+    assert _rows(build.read_index(spark, out)) == before_rows
+    data = os.path.join(out, "data")
+    for e in plan:
+        assert len(_files(data, f"cell_x={e['partition']}")) == e["target_files"]
+    assert not any(u.endswith(".pending") for u in os.listdir(os.path.join(out, "_upserts")))
+    assert _rows(upsert.read_index_version(spark, out, v)) == before_rows
+
+
 def test_cli_compact_command(dataset, tmp_path, spark, capsys):
     from simple_osm_queries_spark import cli
 

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.index import build
+from simple_osm_queries_spark.index import build, fsio
 
 
 def test_plan_bands_respects_cap_and_skew(dataset):
@@ -50,27 +50,24 @@ def test_build_resume_and_invalidate(dataset, tmp_path, spark):
     assert r3["bands"] == len(manifests) and r3["skipped"] == 0
 
 
-def test_partial_build_resumes_where_it_stopped(dataset, tmp_path):
+def test_partial_build_resumes_where_it_stopped(dataset, tmp_path, spark):
     out = str(tmp_path / "idx2")
     bands = build.plan_bands(dataset.nodes, max_rows_per_band=300)
     assert len(bands) >= 2
     # simulate a killed job: pre-write a manifest for the first band only
     first = bands[0]
-    build._write_manifest_atomic(
+    fsio.fs_write_text_atomic(
+        spark,
         build._manifest_path(out, first),
-        {"band": first.key, "min_x": first.min_x, "max_x": first.max_x,
-         "rows": first.rows, "input_fingerprint": "fp", "duration_sec": 0.0},
+        json.dumps({"band": first.key, "min_x": first.min_x, "max_x": first.max_x,
+                    "rows": first.rows, "input_fingerprint": "fp", "duration_sec": 0.0}),
     )
     r = build.build_index(dataset.nodes, out, input_fingerprint="fp", max_rows_per_band=300)
     assert r["skipped"] == 1
     assert r["bands"] == len(bands) - 1
 
 
-def test_rebuild_with_shrunken_input_purges_stale_partitions(spark, tmp_path):
-    """Dynamic partition overwrite only replaces cell_x dirs present in the
-    NEW input; a changed fingerprint must wipe the old build so cell_x
-    partitions that existed only in the old input don't leak into reads."""
-    out = str(tmp_path / "idx")
+def _shrunken_rebuild(spark, out):
     old = spark.createDataFrame(
         [(i, i % 3, 0, 53.5) for i in range(90)], "id long, cell_x int, cell_y int, lat double"
     )
@@ -89,6 +86,30 @@ def test_rebuild_with_shrunken_input_purges_stale_partitions(spark, tmp_path):
     # same fingerprint again -> no wipe, full skip
     r3 = build.build_index(new, out, input_fingerprint="fp-new", max_rows_per_band=1000)
     assert r3["wiped"] is False and r3["bands"] == 0 and r3["skipped"] > 0
+
+
+def test_rebuild_with_shrunken_input_purges_stale_partitions(spark, tmp_path):
+    """Dynamic partition overwrite only replaces cell_x dirs present in the
+    NEW input; a changed fingerprint must wipe the old build so cell_x
+    partitions that existed only in the old input don't leak into reads."""
+    _shrunken_rebuild(spark, str(tmp_path / "idx"))
+
+
+def test_rebuild_over_file_uri_purges_stale_partitions(spark, tmp_path, monkeypatch):
+    """The same rebuild with the index root given as a ``file:`` URI: the
+    band manifests, the resume check and the changed-input wipe go through
+    the filesystem of the data writes, so the old build's partitions and
+    its (id, partition) lookup are gone, and nothing is written under the
+    working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    _shrunken_rebuild(spark, "file:" + str(tmp_path / "idx"))
+    lookup = spark.read.parquet(str(tmp_path / "idx" / "_lookup" / "data"))
+    assert sorted((r.id, r.cell_x) for r in lookup.collect()) == [
+        (i, 1 + i % 2) for i in range(40)
+    ]
+    assert os.listdir(cwd) == []
 
 
 def _iceberg_available(spark) -> bool:
@@ -417,11 +438,11 @@ def test_upsert_with_id_lookup_projection(spark, tmp_path):
         "id long, cell_x int, cell_y int, lat double",
     )
     build.build_index(df, out, input_fingerprint="fp", max_rows_per_band=1000)
-    lookup = df.select("id", "cell_x")
     delta = spark.createDataFrame(
         [(1, 0, 0, 53.5)], "id long, cell_x int, cell_y int, lat double"
     )  # id 1 moves cell_x 1 -> 0
-    r = upsert.upsert_index(spark, out, delta, "lkp-1", id_lookup=lookup)
+    r = upsert.upsert_index(spark, out, delta, "lkp-1")
+    assert r["used_lookup"]
     assert r["affected_partitions"] == 2
     got = sorted((x.id, x.cell_x) for x in build.read_index(spark, out).collect())
     assert (1, 0) in got and (1, 1) not in got
@@ -473,7 +494,8 @@ def test_upsert_crash_mid_commit_recovers_forward(spark, tmp_path, monkeypatch):
     exactly one of data/backup/stage; recover_pending_upserts (run
     automatically by the next upsert) rolls the commit forward."""
     from simple_osm_queries_spark.index import build as B
-    from simple_osm_queries_spark.index import fsio, upsert
+    from simple_osm_queries_spark.index import layout, upsert
+    from tests.index_faults import crash_mid_commit
 
     out = _mini_index(spark, tmp_path, "idx_crash")
     delta = spark.createDataFrame(
@@ -481,24 +503,10 @@ def test_upsert_crash_mid_commit_recovers_forward(spark, tmp_path, monkeypatch):
     )  # id 2 moves cell_x 2 -> 0
     deletes = spark.createDataFrame([(1,), (4,)], "id long")  # empties cell_x=1
 
-    real_commit = upsert._commit_partitions
-
-    def crashing(spark_, out_path_, m):
-        # move ONE partition's data dir to backup, then die mid-swap
-        p = m["partitions"][0]
-        data = upsert._data_path(out_path_)
-        d = upsert._part_dir(data, spark_, m["partition_col"], p)
-        b = os.path.join(
-            upsert._updir(out_path_), f"backup-{m['digest']}", os.path.basename(d)
-        )
-        if fsio.fs_exists(spark_, d):
-            fsio.fs_rename(spark_, d, b)
-        raise RuntimeError("simulated crash mid-commit")
-
-    monkeypatch.setattr(upsert, "_commit_partitions", crashing)
+    monkeypatch.setattr(layout, "_commit_partitions", crash_mid_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
         upsert.upsert_index(spark, out, delta, "crash-1", deletes=deletes)
-    monkeypatch.setattr(upsert, "_commit_partitions", real_commit)
+    monkeypatch.undo()
 
     # the replayed fingerprint recovers the pending commit, then skips
     r = upsert.upsert_index(spark, out, delta, "crash-1", deletes=deletes)
@@ -601,8 +609,6 @@ def test_upsert_maintained_lookup_used_and_repaired(spark, tmp_path):
 
     # stale stamp -> fallback scan + repair (tamper through the same FS API
     # the engine writes with, or the local-FS checksum sidecar goes stale)
-    from simple_osm_queries_spark.index import fsio
-
     fsio.fs_write_text_atomic(spark, state_path, _json.dumps({"version": 99}))
     delta3 = spark.createDataFrame(
         [(0, 0, 5, 53.5)], "id long, cell_x int, cell_y int, lat double"

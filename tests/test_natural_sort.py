@@ -8,11 +8,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.functions.natural_sort import (
-    natural_cmp,
-    natural_is_less_py,
-    natural_key_py,
-)
+from simple_osm_queries_spark.functions.natural_sort import natural_cmp, natural_key_py
+from tests.oracle import natural_is_less_py
 
 
 def go_sort(values):

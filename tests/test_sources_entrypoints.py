@@ -1,5 +1,5 @@
 """OSM XML source (on a generated copy of the reference's 3-node fixture),
-tag-index format round-trip, and the HTTP server endpoint."""
+the CLI import/query path, and the HTTP server endpoint."""
 
 import json
 import socket
@@ -11,9 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.query.planner import run_query
-from simple_osm_queries_spark.sources import tag_index
 from simple_osm_queries_spark.sources.dataset import prepare
-from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_pbf, read_osm_xml
+from simple_osm_queries_spark.sources.osm_pbf import read_osm_pbf
+from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_xml
 from tests import mvt_decode
 from tests.cell_oracle import tile_xy_py
 from tests.osm_xml_writer import write_osm_xml
@@ -101,68 +101,6 @@ def test_pbf_missing_file_raises(spark):
         read_osm_pbf(spark, "/nonexistent.osm.pbf")
 
 
-def _load_tag_index(path: str) -> dict[str, list[str]]:
-    """Reader of save_tag_index's file, as the reference loads it
-    (tag.go:111-170)."""
-    out: dict[str, list[str]] = {}
-    with open(path) as f:
-        for lineno, line in enumerate(f):
-            line = line.rstrip("\n")
-            if not line:
-                continue
-            key, sep, values = line.partition("=")
-            if not sep:
-                raise ValueError(
-                    f"wrong format of line {lineno}: '=' expected separating "
-                    f"key and value list"
-                )
-            values = values.replace("$$NEWLINE$$", "\n").replace("$$EQUAL$$", "=")
-            # empty entries are KEPT (reference keeps them: tag.go:150-156)
-            out[key] = [v.replace("$$PIPE$$", "|") for v in values.split("|")]
-    return out
-
-
-def test_tag_index_build_and_roundtrip(dataset, tmp_path):
-    idx = tag_index.build_tag_index(dataset.nodes, dataset.ways, dataset.relations)
-    # natural order per key (the mixed height dictionary)
-    assert idx["height"] == ["1", "1m", "1.5 m", "2.5", "10.5"]
-    assert idx["seats"] == ["2", "3", "4"]
-    assert "highway" in idx and "route" in idx  # ways + relations included
-    path = str(tmp_path / "tag-index")
-    tag_index.save_tag_index(idx, path)
-    assert _load_tag_index(path) == idx
-
-
-def test_tag_index_escaping(tmp_path):
-    # values with every special char round-trip (clean keys)
-    idx = {"surface": ["a|b", "line\nbreak", "eq=val", ""]}
-    path = str(tmp_path / "tag-index")
-    tag_index.save_tag_index(idx, path)
-    assert _load_tag_index(path) == idx
-    # byte-level parity with the reference writer (tag.go:301-317): per-value
-    # PIPE escape, then NEWLINE/EQUAL on the joined string, key unescaped
-    with open(path) as f:
-        assert f.read() == "surface=a$$PIPE$$b|line$$NEWLINE$$break|eq$$EQUAL$$val|\n"
-
-
-def test_tag_index_reference_file_parity(tmp_path):
-    # a file as the reference writes it: empty entries kept on load,
-    # a key containing '=' truncates at the first '=' (SplitN semantics)
-    path = str(tmp_path / "tag-index")
-    with open(path, "w") as f:
-        f.write("amenity=bench|cafe||\n")
-        f.write("odd=key=v1|v2\n")
-    loaded = _load_tag_index(path)
-    assert loaded["amenity"] == ["bench", "cafe", "", ""]
-    assert loaded["odd"] == ["key=v1", "v2"]
-    import pytest as _pytest
-
-    with open(path, "a") as f:
-        f.write("noequalsline\n")
-    with _pytest.raises(ValueError, match="'=' expected"):
-        _load_tag_index(path)
-
-
 def test_http_server_query_and_errors(ref_dataset):
     from simple_osm_queries_spark.web import serve
 
@@ -223,7 +161,7 @@ def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch, capsys):
 
     idx_dir = str(tmp_path / "idx")
     cli.cmd_import(spark, SimpleNamespace(file=small_osm, out=idx_dir))
-    assert (tmp_path / "idx" / "tag-index").exists()
+    assert (tmp_path / "idx" / "grid-index" / "data").is_dir()
 
     q = SimpleNamespace(
         query="bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=bench }",
