@@ -24,12 +24,14 @@ from pyspark.sql import functions as F
 
 
 def _build_dataset(spark, args):
+    from simple_osm_queries_spark.index.fsio import fs_exists
     from simple_osm_queries_spark.sources.dataset import from_generator, prepare
 
     if args.data == "generate":
         return from_generator(spark, n_nodes=args.generate, with_images=False)
+    # the index root may be a file:/hdfs:/s3a: URI: ask Spark's filesystem
     nodes_path = os.path.join(args.data, "nodes")
-    if os.path.exists(nodes_path):
+    if fs_exists(spark, nodes_path):
         nodes = spark.read.parquet(nodes_path)
         ways = spark.read.parquet(os.path.join(args.data, "ways"))
         relations = spark.read.parquet(os.path.join(args.data, "relations"))
@@ -43,7 +45,8 @@ def cmd_import(spark, args) -> None:
     from simple_osm_queries_spark.sources.osm_pbf import read_osm_pbf, release_scan
     from simple_osm_queries_spark.sources.osm_xml import read_osm_xml
 
-    os.makedirs(args.out, exist_ok=True)
+    # no mkdir: the Spark writers below create the index root, also when
+    # it is a file:/hdfs:/s3a: URI
     if args.file.endswith(".pbf"):
         # decode blobs ONCE (persisted union), sink the three raw tables,
         # then reload from parquet so every downstream action (band plan,

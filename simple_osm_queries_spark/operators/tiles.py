@@ -8,12 +8,10 @@ or spatial join anywhere in the family: the expensive geometry predicate is
 replaced by a hash-partitionable key, which is the whole point of tiling at
 10^12 scale.
 
-Every operator is a path through one pipeline, and each step exists once:
+The full-table operators are one pipeline, and each step exists once:
 
-* assign — ``_tile_local`` (a point's tile id plus its clamped integer
-  position on the tile's grid: a raster pixel or an MVT coordinate) or
-  ``_bbox_tile_fanout`` (a way's or relation's bbox -> every tile it
-  covers, as an equi-joinable (feature, tile) explode);
+* assign — ``_tile_local``: a point's tile id plus its clamped integer
+  position on the tile's grid (a raster pixel or an MVT coordinate);
 * aggregate — ``tile_stats`` and ``tile_pixel_bins`` are one groupBy each;
   AQE's map-side partial aggregate absorbs hot tiles (the reference's
   extent bin-packer import.go:167-233 solved the same skew problem at
@@ -21,17 +19,17 @@ Every operator is a path through one pipeline, and each step exists once:
 * rank — ``_rank_cap`` numbers each tile's members and caps them on the
   same tile_id exchange the render groups by;
 * render — one applyInPandas per tile: ``tile_heatmap`` paints a PNG,
-  ``_render_mvt`` encodes one Mapbox Vector Tile layer for the points,
-  linestrings and polygons operators, which differ only in their
-  per-feature builder.
+  ``tile_vectors`` encodes one Mapbox Vector Tile layer of points.
 
-One small tile needs none of the exchanges: ``tile_mvt_layers`` gives a
-single tile's members per layer (the same membership, fid order, cap and
-module-level builders) and ``tile_mvt`` fetches each layer in one job
-with no exchange and encodes it on the driver, or, above
-``MVT_DRIVER_ROWS`` members, renders it through its operator restricted
-to the tile in an executor. Either way the HTTP ``.mvt`` route serves the
-bytes the three operators would have rendered for the tile.
+Ways and relations are served one tile at a time, as the reference
+answers a map request from its in-process index (src/web/api.go:117):
+``tile_mvt_layers`` gives a single tile's member frame per layer (a
+node's ``_tile_local`` tile; a way's or relation's ``_bbox_tile_range``)
+and ``tile_mvt`` fetches each layer in one job with no exchange and
+encodes it on the driver, or, above ``MVT_DRIVER_ROWS`` members, encodes
+the same fid-ordered, capped members in one mapInPandas task. Both paths
+call the same per-feature builders, so a tile's bytes do not depend on
+which one encoded it.
 
 The raster -> vector direction is ``raster_to_bins`` and
 ``pixel_bins_to_points``.
@@ -49,11 +47,6 @@ from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.functions import cells as C
 from simple_osm_queries_spark.sources.mvt import EXTENT
-
-# A way or relation whose bbox covers more tiles than this at the render
-# zoom (a continental motorway at z15) would fan out explosively; see the
-# ``oversize`` modes of tile_vectors_ways.
-MAX_COVER = 256
 
 
 def assign_tiles(
@@ -91,12 +84,12 @@ def _tile_local(lon: Column, lat: Column, zoom: int, size: int) -> tuple[Column,
     return C.tile_id(tx, ty, zoom), px, py
 
 
-def _tile_local_py(lon: float, lat: float, zoom: int, tx: int, ty: int, extent: int) -> tuple[int, int]:
+def _tile_local_py(lon: float, lat: float, zoom: int, tx: int, ty: int) -> tuple[int, int]:
     """MVT position of a vertex on tile (tx, ty), NOT clamped: vertices of a
-    feature that crosses the tile edge leave [0, extent), which the MVT
+    feature that crosses the tile edge leave [0, EXTENT), which the MVT
     spec allows (renderers clip)."""
     fx, fy = C.tile_fxy_py(lon, lat, zoom)
-    return int(math.floor((fx - tx) * extent)), int(math.floor((fy - ty) * extent))
+    return int(math.floor((fx - tx) * EXTENT)), int(math.floor((fy - ty) * EXTENT))
 
 
 def _tile_row(tid: int, **cols):
@@ -184,7 +177,7 @@ def tile_heatmap(
 
 
 # ---------------------------------------------------------------------------
-# vector tiles: assign -> rank -> one MVT render stage
+# vector tiles: per-feature builders, one encode, two ways to reach it
 # ---------------------------------------------------------------------------
 
 def _rank_cap(df: DataFrame, cap: int) -> DataFrame:
@@ -201,35 +194,38 @@ def _rank_cap(df: DataFrame, cap: int) -> DataFrame:
     )
 
 
+def _encode_layer(
+    name: str, tile: int, features: Callable[..., list[dict]], rows
+) -> tuple[int, bytes]:
+    """(feature count, single-layer MVT blob) of tile ``tile``:
+    ``features(rows, zoom, tx, ty)`` (one of the builders below) turns the
+    member tuples, in fid order, into sources/mvt.py feature dicts."""
+    from simple_osm_queries_spark.sources import mvt
+
+    zoom, tx, ty = C.tile_zxy_py(tile)
+    feats = features(rows, zoom, tx, ty)
+    return len(feats), mvt.encode_tile([(name, feats)])
+
+
 def _render_mvt(
     ranked: DataFrame,
     layer: str,
-    extent: int,
     cols: list[str],
     features: Callable[..., list[dict]],
 ) -> DataFrame:
     """One single-layer Mapbox Vector Tile (MVT 2.1, sources/mvt.py) per
-    tile of a ``_rank_cap`` frame: ``features(rows, zoom, tx, ty, extent)``
-    turns the tile's ``cols`` tuples, in rank order, into sources/mvt.py
-    feature dicts (one of the builders below).
+    tile of a ``_rank_cap`` frame, from the tile's ``cols`` tuples in rank
+    order.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
     """
     import pandas as pd
 
     def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from simple_osm_queries_spark.sources import mvt
-
         pdf = pdf.sort_values("rn")
         tid = int(pdf["tile_id"].iloc[0])
-        zoom, tx, ty = C.tile_zxy_py(tid)
-        feats = features(zip(*(pdf[c] for c in cols)), zoom, tx, ty, extent)
-        return _tile_row(
-            tid,
-            n_features=len(feats),
-            n_total=int(pdf["n_total"].iloc[0]),
-            mvt=mvt.encode_tile([(layer, feats)], extent=extent),
-        )
+        n, blob = _encode_layer(layer, tid, features, zip(*(pdf[c] for c in cols)))
+        return _tile_row(tid, n_features=n, n_total=int(pdf["n_total"].iloc[0]), mvt=blob)
 
     return ranked.groupBy("tile_id").applyInPandas(
         render,
@@ -238,13 +234,18 @@ def _render_mvt(
 
 
 # The per-feature builders of the three layers. Each takes one tile's
-# member tuples in rank order and returns sources/mvt.py feature dicts;
-# the render stage above and the single-tile fetch (tile_mvt_layers) both
-# call them, so a tile's bytes do not depend on which path encoded it.
-# ``attrs`` is a tags map or its key/value entries (anything dict() takes).
+# member tuples in fid order and returns sources/mvt.py feature dicts.
+# ``tags`` is a tags map's ``map_entries``: collect() gives (key, value)
+# Rows, pandas gives {"key", "value"} dicts, and both keep the map's
+# order, which is part of the bytes (a map itself comes back from
+# collect() as a dict in hash order).
 
-def _point_features(rows, zoom: int, tx: int, ty: int, extent: int) -> list[dict]:
-    """(fid, ix, iy, attrs) rows -> POINT features at their tile-local
+def _attrs(tags) -> dict:
+    return {} if tags is None else {e["key"]: e["value"] for e in tags}
+
+
+def _point_features(rows, zoom: int, tx: int, ty: int) -> list[dict]:
+    """(fid, ix, iy, tags) rows -> POINT features at their tile-local
     integer position (computed in Spark by ``_tile_local``)."""
     from simple_osm_queries_spark.sources import mvt
 
@@ -253,18 +254,22 @@ def _point_features(rows, zoom: int, tx: int, ty: int, extent: int) -> list[dict
             "id": int(fid),
             "type": mvt.POINT,
             "rings": [[(int(ix), int(iy))]],
-            "attrs": dict(attrs) if attrs is not None else {},
+            "attrs": _attrs(tags),
         }
-        for fid, ix, iy, attrs in rows
+        for fid, ix, iy, tags in rows
     ]
 
 
-def _line_features(
-    rows, zoom: int, tx: int, ty: int, extent: int, simplify_tol: float = 0.0
-) -> list[dict]:
+def _line_features(rows, zoom: int, tx: int, ty: int, simplify_tol: float = 0.0) -> list[dict]:
     """(fid, nodes) rows -> LINESTRING features projected onto tile
-    (tx, ty), Douglas–Peucker thinned when ``simplify_tol`` > 0; a
-    single-vertex way is skipped."""
+    (tx, ty), vertices unclipped (renderers clip, so a way that crosses
+    the tile edge needs no clipping stage); a single-vertex way is skipped.
+
+    ``simplify_tol`` > 0 runs Douglas–Peucker per feature in tile units
+    (extent/256 units ≈ one on-screen pixel) on the projected integer
+    vertices: endpoints survive and the thinned line stays within
+    ``simplify_tol`` of the original, so a 10k-vertex river at z4 is a few
+    dozen MVT vertices."""
     import numpy as np
 
     from simple_osm_queries_spark.operators.geodesy import _dp_mask
@@ -272,7 +277,7 @@ def _line_features(
 
     feats = []
     for fid, nodes in rows:
-        ring = [_tile_local_py(v["lon"], v["lat"], zoom, tx, ty, extent) for v in nodes]
+        ring = [_tile_local_py(v["lon"], v["lat"], zoom, tx, ty) for v in nodes]
         if len(ring) < 2:
             continue  # degenerate single-vertex way
         if simplify_tol > 0.0 and len(ring) > 2:
@@ -284,23 +289,24 @@ def _line_features(
     return feats
 
 
-def _bbox_polygon_features(rows, zoom: int, tx: int, ty: int, extent: int) -> list[dict]:
-    """(fid, min_lon, min_lat, max_lon, max_lat, attrs) rows -> one
-    rectangle POLYGON per feature on tile (tx, ty)."""
+def _bbox_polygon_features(rows, zoom: int, tx: int, ty: int) -> list[dict]:
+    """(fid, min_lon, min_lat, max_lon, max_lat, tags) rows -> one
+    rectangle POLYGON per feature on tile (tx, ty): the geometry the
+    reference outputs for a relation (grid_reader.go:513-517)."""
     from simple_osm_queries_spark.sources import mvt
 
     feats = []
-    for fid, x1, y1, x2, y2, attrs in rows:
+    for fid, x1, y1, x2, y2, tags in rows:
         # top-left = (min_lon, max_lat): screen y grows DOWN
-        px0, py0 = _tile_local_py(float(x1), float(y2), zoom, tx, ty, extent)
-        px1, py1 = _tile_local_py(float(x2), float(y1), zoom, tx, ty, extent)
+        px0, py0 = _tile_local_py(float(x1), float(y2), zoom, tx, ty)
+        px1, py1 = _tile_local_py(float(x2), float(y1), zoom, tx, ty)
         feats.append(
             {
                 "id": int(fid),
                 "type": mvt.POLYGON,
                 # CW on screen (positive shoelace with y down) => exterior
                 "rings": [[(px0, py0), (px1, py0), (px1, py1), (px0, py1)]],
-                "attrs": dict(attrs) if attrs is not None else {},
+                "attrs": _attrs(tags),
             }
         )
     return feats
@@ -309,125 +315,44 @@ def _bbox_polygon_features(rows, zoom: int, tx: int, ty: int, extent: int) -> li
 _BBOX = ["min_lon", "min_lat", "max_lon", "max_lat"]
 
 
-def tile_vectors(
-    df: DataFrame,
-    zoom: int,
-    extent: int = EXTENT,
-    cap: int = 65536,
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """Vector-tile output for point features: one MVT layer ``nodes`` per
-    slippy tile at ``zoom``, points carrying their ``tags`` map entries as
-    MVT attributes — the other half of the raster<->vector pair next to
-    tile_heatmap (the reference sends raw GeoJSON to the browser,
-    src/web/api.go:117; MVT is what makes a dense region drawable by a
-    standard map client).
+def tile_vectors(df: DataFrame, zoom: int, cap: int = 65536) -> DataFrame:
+    """Vector-tile output for point features (``id``, ``lon``, ``lat``,
+    ``tags``): one MVT layer ``nodes`` per slippy tile at ``zoom``, points
+    carrying their ``tags`` map entries as MVT attributes — the other half
+    of the raster<->vector pair next to tile_heatmap (the reference sends
+    raw GeoJSON to the browser, src/web/api.go:117; MVT is what makes a
+    dense region drawable by a standard map client).
 
     Plan shape mirrors the raster path: tile assignment and the tile-local
     integer coordinates are pure column math (a point's MVT position is
-    its tile_heatmap pixel at tile_px=extent), ``cap`` bounds features per
+    its tile_heatmap pixel at tile_px=EXTENT), ``cap`` bounds features per
     tile, and the only Python is the byte assembly in the render stage.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
     """
-    tid, ix, iy = _tile_local(F.col(lon), F.col(lat), zoom, extent)
+    tid, ix, iy = _tile_local(F.col("lon"), F.col("lat"), zoom, EXTENT)
     ranked = _rank_cap(
         df.select(
             tid.alias("tile_id"),
-            F.col(id_col).alias("fid"),
+            F.col("id").alias("fid"),
             ix.alias("ix"),
             iy.alias("iy"),
-            F.col("tags").alias("attrs"),
+            F.map_entries("tags").alias("tags"),
         ),
         cap,
     )
-    return _render_mvt(ranked, "nodes", extent, ["fid", "ix", "iy", "attrs"], _point_features)
+    return _render_mvt(ranked, "nodes", ["fid", "ix", "iy", "tags"], _point_features)
 
 
-def tile_vectors_ways(
-    ways: DataFrame,
-    zoom: int,
-    extent: int = EXTENT,
-    cap: int = 16384,
-    oversize: str = "raise",
-    simplify_tol: float = 0.0,
-    tile: int | None = None,
-) -> DataFrame:
-    """Vector tiles for way LINESTRINGs, one MVT layer ``ways`` per tile
-    (prepared ways table: ``nodes`` array<struct<id,lon,lat>> + bbox
-    columns from sources/dataset.py).
-
-    A way lands on every tile its BBOX covers (``_bbox_tile_fanout``);
-    vertex coordinates are encoded tile-locally and MAY leave [0, extent)
-    on border tiles, which the MVT spec allows (renderers clip) — that is
-    what makes a no-clipping encoder correct. A way whose bbox covers
-    more than MAX_COVER tiles at this zoom fans out explosively;
-    ``oversize='raise'`` (default) fails fast with the count, ``'skip'``
-    drops those ways — visibly, via the ``n_oversize`` column present on
-    every output row (no silent cap).
-
-    ``simplify_tol`` > 0 runs Douglas–Peucker per feature in TILE
-    COORDINATE UNITS (the [0, extent) grid — extent/256 units ≈ one
-    on-screen pixel) on the already-projected integer vertices, inside
-    the same per-tile Arrow stage (geodesy's iterative numpy stack, zero
-    extra passes). Endpoints always survive; max deviation from the
-    original projected polyline <= simplify_tol. This is what makes a
-    low-zoom planet render feasible: a 10k-vertex river at z4 is a few
-    dozen MVT vertices.
-
-    ``tile``: a tile id (cells.tile_id_py) renders only that tile — the
-    other tiles a way covers are dropped before the rank and the render.
-
-    Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
-    """
-    ranked, over_cnt = _bbox_tile_fanout(ways, zoom, cap, oversize, ["nodes"], "ways", tile)
-    features = functools.partial(_line_features, simplify_tol=simplify_tol)
-    return _attach_oversize(
-        _render_mvt(ranked, "ways", extent, ["fid", "nodes"], features), over_cnt
-    )
-
-
-def tile_vectors_relations(
-    relations: DataFrame,
-    zoom: int,
-    extent: int = EXTENT,
-    cap: int = 16384,
-    oversize: str = "raise",
-    tile: int | None = None,
-) -> DataFrame:
-    """Vector tiles for relation BBOX POLYGONS, one MVT layer ``relations``
-    per tile — the geometry the reference outputs for relations
-    (grid_reader.go:513-517 emits the relation's bounding box as a polygon
-    ring; sources/geojson.py::_feature mirrors it), completing the
-    POINT/LINESTRING/POLYGON triple over the prepared tables. Same bbox
-    fan-out, ``oversize`` modes and ``tile`` as tile_vectors_ways; each
-    tile renders the rectangle tile-locally (corners may leave [0, extent)
-    on border tiles — renderers clip), with the ``tags`` map as
-    attributes. The exterior ring is wound positive under the shoelace
-    formula in screen space (y down), as MVT 2.1 requires for an exterior
-    ring.
-
-    Output: (tile_id, zoom, tx, ty, n_features, n_total, n_oversize, mvt).
-    """
-    ranked, over_cnt = _bbox_tile_fanout(
-        relations, zoom, cap, oversize, [*_BBOX, "tags"], "relations", tile
-    )
-    return _attach_oversize(
-        _render_mvt(
-            ranked, "relations", extent, ["fid", *_BBOX, "tags"], _bbox_polygon_features
-        ),
-        over_cnt,
-    )
-
+# A way or relation whose bbox covers more tiles than this at the tile's
+# zoom (a continental motorway at z15) is left out of every tile's layer.
+MAX_COVER = 256
 
 # A layer of one tile with at most this many members is fetched and
-# encoded on the driver (tile_mvt); a larger one renders through its
-# operator in an executor. Fetch and encode cost ~33 µs of driver Python
-# per member (28k- and 123k-member tiles, 4 vCPU), under the GIL every
-# request thread of the HTTP server shares: this bounds a layer at
-# ~0.14 s, no more than the operator path's own plan build per tile.
+# encoded on the driver (tile_mvt); a larger one is encoded in an
+# executor. Fetch and encode cost ~33 µs of driver Python per member
+# (28k- and 123k-member tiles, 4 vCPU), under the GIL every request
+# thread of the HTTP server shares: this bounds a layer at ~0.14 s.
 MVT_DRIVER_ROWS = 4096
 
 
@@ -435,29 +360,46 @@ MVT_DRIVER_ROWS = 4096
 class TileLayer:
     """One MVT layer of ONE tile (``tile_mvt_layers``).
 
-    ``fetch``: the tile's members by the operators' own membership, fid
-    first, in fid order and at most min(cap, MVT_DRIVER_ROWS + 1) rows
-    (one more tells a layer too large for the driver). It is a
-    TakeOrderedAndProject, whose collect() is one job with no exchange
-    (toPandas() would run it as a single-partition shuffle). Tags come as
-    ``map_entries``: collect() turns a map into a dict in hash order, and
-    attribute order is part of the bytes.
-    ``features``: the layer's builder, shared with the render stage.
-    ``render()``: the layer's operator restricted to this tile, the
-    executor path (one row)."""
+    ``members``: the tile's members, ``fid`` then the ``features``
+    builder's payload columns, tags as ``map_entries``.
+    ``features``: the layer's per-feature builder.
+    ``cap``: the most members the layer encodes, lowest fid first."""
 
     name: str
     tile: int
-    fetch: DataFrame
+    members: DataFrame
     features: Callable[..., list[dict]]
-    render: Callable[[], DataFrame]
+    cap: int
+
+    @property
+    def fetch(self) -> DataFrame:
+        """The driver fetch: members in fid order, at most
+        min(cap, MVT_DRIVER_ROWS + 1) rows (one more tells a layer too
+        large for the driver). A TakeOrderedAndProject, whose collect() is
+        one job with no exchange (toPandas() would run it as a
+        single-partition shuffle)."""
+        return self.members.orderBy("fid").limit(min(self.cap, MVT_DRIVER_ROWS + 1))
 
     def encode(self, rows: list) -> bytes:
         """The layer's MVT blob from its fetched rows, on the driver."""
-        from simple_osm_queries_spark.sources import mvt
+        return _encode_layer(self.name, self.tile, self.features, rows)[1]
 
-        zoom, tx, ty = C.tile_zxy_py(self.tile)
-        return mvt.encode_tile([(self.name, self.features(rows, zoom, tx, ty, EXTENT))])
+    def executor_frame(self) -> DataFrame:
+        """The layer's MVT blob as a one-row ``mvt`` frame, encoded in an
+        executor: the first ``cap`` members in fid order (a
+        TakeOrderedAndProject, so every row reaches one task in order,
+        with no Exchange or Window in the plan) through one mapInPandas
+        that concatenates its batches and calls the driver's encode."""
+        import pandas as pd
+
+        name, tile, features = self.name, self.tile, self.features
+
+        def encode(batches):
+            pdf = pd.concat(list(batches))
+            rows = zip(*(pdf[c] for c in pdf.columns))
+            yield pd.DataFrame({"mvt": [_encode_layer(name, tile, features, rows)[1]]})
+
+        return self.members.orderBy("fid").limit(self.cap).mapInPandas(encode, "mvt binary")
 
 
 def tile_mvt_layers(
@@ -471,13 +413,10 @@ def tile_mvt_layers(
     simplify_tol: float = 0.0,
 ) -> list[TileLayer]:
     """ONE tile's MVT layers, nodes -> ways -> relations, for
-    ``tile_mvt``: tile (tx, ty)'s members by the operators' own membership
-    (a node's ``_tile_local`` tile; a way's or relation's
-    ``_bbox_tile_range``, at most MAX_COVER tiles, as oversize='skip'),
-    the render stage's builders and the three operators with ``tile``, so
-    the bytes are the operators' blobs for this tile on either path.
-    Building the operator frames is deferred to ``render()``: most tiles
-    never need them."""
+    ``tile_mvt``: a node is a member of the ``_tile_local`` tile it falls
+    in; a way or relation of every tile its bbox covers
+    (``_bbox_tile_range``), unless that is more than MAX_COVER tiles.
+    ``simplify_tol`` thins the ways layer (``_line_features``)."""
     want = C.tile_id_py(tx, ty, zoom)
     tid, ix, iy = _tile_local(F.col("lon"), F.col("lat"), zoom, EXTENT)
     xmin, xmax, ymin, ymax, n_tiles = _bbox_tile_range(zoom)
@@ -486,39 +425,20 @@ def tile_mvt_layers(
     )
     fid = F.col("id").alias("fid")
     tags = F.map_entries("tags").alias("tags")
-    in_tile = nodes.where(tid == want)
     layers = [
         (
             "nodes",
-            in_tile.select(fid, ix.alias("ix"), iy.alias("iy"), tags),
+            nodes.where(tid == want).select(fid, ix.alias("ix"), iy.alias("iy"), tags),
             _point_features,
-            functools.partial(
-                tile_vectors, in_tile.select("id", "lon", "lat", "tags"), zoom, cap=cap
-            ),
         ),
         (
             "ways",
             ways.where(covers).select(fid, "nodes"),
             functools.partial(_line_features, simplify_tol=simplify_tol),
-            functools.partial(
-                tile_vectors_ways, ways, zoom, cap=cap, oversize="skip",
-                simplify_tol=simplify_tol, tile=want,
-            ),
         ),
-        (
-            "relations",
-            relations.where(covers).select(fid, *_BBOX, tags),
-            _bbox_polygon_features,
-            functools.partial(
-                tile_vectors_relations, relations, zoom, cap=cap, oversize="skip", tile=want
-            ),
-        ),
+        ("relations", relations.where(covers).select(fid, *_BBOX, tags), _bbox_polygon_features),
     ]
-    limit = min(cap, MVT_DRIVER_ROWS + 1)
-    return [
-        TileLayer(name, want, members.orderBy("fid").limit(limit), features, render)
-        for name, members, features, render in layers
-    ]
+    return [TileLayer(name, want, members, features, cap) for name, members, features in layers]
 
 
 def tile_mvt(layers: list[TileLayer]) -> bytes:
@@ -527,20 +447,22 @@ def tile_mvt(layers: list[TileLayer]) -> bytes:
     fields), a layer present iff it has members, an empty tile a valid
     tile too. Every layer's fetch runs (one job each); a layer that fits
     MVT_DRIVER_ROWS is encoded here from those rows, and the larger ones
-    render in one executor job (their render() frames unioned), so a
-    dense tile does not hold the driver."""
+    are encoded in one executor job (their ``executor_frame``s unioned,
+    one task each), so a dense tile does not hold the driver."""
     from simple_osm_queries_spark.sources import mvt
 
     fetched = [(layer, layer.fetch.collect()) for layer in layers]
     big = [layer for layer, rows in fetched if len(rows) > MVT_DRIVER_ROWS]
-    rendered = {}
+    encoded = {}
     if big:
-        frames = [layer.render().select(F.lit(layer.name).alias("layer"), "mvt") for layer in big]
-        rendered = {
-            r.layer: bytes(r.mvt) for r in functools.reduce(DataFrame.union, frames).collect()
-        }
+        # an RDD union: each frame is one single-partition blob, and
+        # DataFrame.union would zip those partitions into one task that
+        # encodes the layers one after another
+        frames = [layer.executor_frame() for layer in big]
+        union = frames[0].sparkSession.sparkContext.union([f.rdd for f in frames])
+        encoded = {layer.name: bytes(r.mvt) for layer, r in zip(big, union.collect())}
     blobs = [
-        rendered[layer.name] if len(rows) > MVT_DRIVER_ROWS else layer.encode(rows)
+        encoded[layer.name] if len(rows) > MVT_DRIVER_ROWS else layer.encode(rows)
         for layer, rows in fetched
         if rows
     ]
@@ -550,85 +472,12 @@ def tile_mvt(layers: list[TileLayer]) -> bytes:
 def _bbox_tile_range(zoom: int) -> tuple[Column, Column, Column, Column, Column]:
     """(xmin, xmax, ymin, ymax, n_tiles): the tile index range a feature's
     bbox columns cover at ``zoom`` and its tile count — the one definition
-    of way/relation tile membership (the fan-out explodes it, the
-    single-tile fetch tests it)."""
+    of way/relation tile membership."""
     xmin = C.tile_x(F.col("min_lon"), zoom)
     xmax = C.tile_x(F.col("max_lon"), zoom)
     ymin = C.tile_y(F.col("max_lat"), zoom)  # y grows DOWN (screen space)
     ymax = C.tile_y(F.col("min_lat"), zoom)
     return xmin, xmax, ymin, ymax, (xmax - xmin + 1) * (ymax - ymin + 1)
-
-
-def _bbox_tile_fanout(
-    df: DataFrame,
-    zoom: int,
-    cap: int,
-    oversize: str,
-    payload_cols: list[str],
-    what: str,
-    tile: int | None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """(feature -> covered tiles) fan-out shared by the linestring and
-    polygon MVT paths: bbox columns -> tile index ranges
-    (``_bbox_tile_range``) -> sequence+explode -> [keep only ``tile``] ->
-    ``_rank_cap``. The tile filter has to sit here: Catalyst cannot push
-    a filter through the render's FlatMapGroupsInPandas. Returns the
-    ranked (tile_id, fid, payload..., rn, n_total) frame and, for
-    oversize='skip', the lazy 1-row ``n_oversize`` count for
-    _attach_oversize (None for 'raise', where a nonzero count raised)."""
-    if oversize not in ("raise", "skip"):
-        raise ValueError(f"oversize must be 'raise' or 'skip', got {oversize!r}")
-    sized = df.select(
-        F.col("id").alias("fid"),
-        *payload_cols,
-        *(
-            c.alias(name)
-            for name, c in zip(
-                ("xmin", "xmax", "ymin", "ymax", "n_tiles"), _bbox_tile_range(zoom)
-            )
-        ),
-    )
-    oversized = sized.filter(F.col("n_tiles") > MAX_COVER)
-    over_cnt = None
-    if oversize == "raise":
-        # eager: fail-fast BEFORE the fan-out job is the documented
-        # semantics of 'raise'
-        n_over = oversized.count()
-        if n_over:
-            raise ValueError(
-                f"{n_over} {what} cover > {MAX_COVER} tiles at z{zoom} "
-                "(lower zoom, or pass oversize='skip')"
-            )
-    else:
-        # 'skip': no plan-build-time Spark job — the count is attached
-        # lazily as a scalar subquery (_attach_oversize)
-        over_cnt = oversized.agg(F.count("*").alias("n_oversize"))
-    fanned = (
-        sized.filter(F.col("n_tiles") <= MAX_COVER)
-        .withColumn("tx", F.explode(F.sequence("xmin", "xmax")))
-        .withColumn("ty", F.explode(F.sequence("ymin", "ymax")))
-        .select(
-            C.tile_id(F.col("tx"), F.col("ty"), zoom).alias("tile_id"),
-            "fid",
-            *payload_cols,
-        )
-    )
-    if tile is not None:
-        fanned = fanned.where(F.col("tile_id") == F.lit(tile))
-    return _rank_cap(fanned, cap), over_cnt
-
-
-def _attach_oversize(out: DataFrame, over_cnt: DataFrame | None) -> DataFrame:
-    """Add ``n_oversize`` (features dropped as oversize) to every tile row:
-    0 for 'raise', which already verified the count eagerly; for 'skip'
-    the count is a scalar subquery evaluated in the SAME action as the
-    tile render, and column pruning drops it (no job at all) when the
-    caller selects only ``mvt``, as the /tiles route does."""
-    n_over = F.lit(0).cast("long") if over_cnt is None else over_cnt.scalar()
-    return out.select(
-        "tile_id", "zoom", "tx", "ty", "n_features", "n_total",
-        n_over.alias("n_oversize"), "mvt",
-    )
 
 
 # ---------------------------------------------------------------------------

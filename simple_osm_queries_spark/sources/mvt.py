@@ -8,10 +8,10 @@ The reference has no tile output at all — its web API returns the raw
 GeoJSON feature list (/root/reference/src/web/api.go:117), which is what
 makes dense regions undrawable; vector tiles are the standard fix.
 
-Wire format is protobuf. Exactly like sources/osm_pbf.py does for OSM PBF
-blobs, we hand-roll the three wire ops the spec needs (varint, zigzag,
-length-delimited submessages) rather than depending on a protobuf
-library. Layout per the public spec (vector_tile.proto, spec 2.1):
+Wire format is protobuf. We hand-roll the three wire ops the spec needs
+(varint, zigzag, length-delimited submessages) rather than depending on a
+protobuf library; sources/osm_pbf.py's PBF writer uses the same ones.
+Layout per the public spec (vector_tile.proto, spec 2.1):
 
   Tile:    repeated Layer layers = 3
   Layer:   uint32 version = 15 (must be 2), string name = 1,
@@ -36,7 +36,7 @@ from __future__ import annotations
 from typing import Any, Iterable
 
 POINT, LINESTRING, POLYGON = 1, 2, 3
-EXTENT = 4096  # tile-local grid size; the encoders' and the tile operators' default
+EXTENT = 4096  # tile-local grid size of every tile the engine encodes
 
 
 # ---------------------------------------------------------------------------
@@ -45,7 +45,9 @@ EXTENT = 4096  # tile-local grid size; the encoders' and the tile operators' def
 
 def _varint(v: int) -> bytes:
     if v < 0:
-        raise ValueError("varint must be non-negative (zigzag signed values)")
+        raise ValueError(
+            "varint must be non-negative (zigzag sint values, mask int64 with 2**64 - 1)"
+        )
     out = bytearray()
     while True:
         b = v & 0x7F

@@ -43,6 +43,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from simple_osm_queries_spark.sources.mvt import (
+    _field_bytes,
+    _field_packed,
+    _field_varint,
+    _zigzag,
+)
+
 # ---------------------------------------------------------------------------
 # protobuf wire helpers (decode)
 # ---------------------------------------------------------------------------
@@ -60,8 +67,14 @@ def _read_varint(buf: memoryview, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def _zigzag(v: int) -> int:
+def _unzigzag(v: int) -> int:
     return (v >> 1) ^ -(v & 1)
+
+
+def _int64(v: int) -> int:
+    """A varint read as protobuf int64: a negative value is its 64-bit
+    two's complement (10 bytes on the wire)."""
+    return v - (1 << 64) if v >> 63 else v
 
 
 def _iter_fields(buf: memoryview) -> Iterator[tuple[int, int, object]]:
@@ -251,15 +264,15 @@ def _decode_node(buf: memoryview, st: list[str], gran: int, lat_off: int, lon_of
     keys = vals = np.empty(0, dtype=np.int64)
     for field, wire, val in _iter_fields(buf):
         if field == 1:
-            nid = _zigzag(val) if wire == 0 else 0
+            nid = _unzigzag(val) if wire == 0 else 0
         elif field == 2:
             keys = _decode_packed(val, signed=False)
         elif field == 3:
             vals = _decode_packed(val, signed=False)
         elif field == 8:
-            lat = _zigzag(val)
+            lat = _unzigzag(val)
         elif field == 9:
-            lon = _zigzag(val)
+            lon = _unzigzag(val)
     return (
         nid,
         1e-9 * (lon_off + gran * lon),
@@ -273,7 +286,7 @@ def _decode_way(buf: memoryview, st: list[str]):
     keys = vals = refs = np.empty(0, dtype=np.int64)
     for field, _w, val in _iter_fields(buf):
         if field == 1:
-            wid = val
+            wid = _int64(val)
         elif field == 2:
             keys = _decode_packed(val, signed=False)
         elif field == 3:
@@ -288,7 +301,7 @@ def _decode_relation(buf: memoryview, st: list[str]):
     keys = vals = memids = types = np.empty(0, dtype=np.int64)
     for field, _w, val in _iter_fields(buf):
         if field == 1:
-            rid = val
+            rid = _int64(val)
         elif field == 2:
             keys = _decode_packed(val, signed=False)
         elif field == 3:
@@ -425,43 +438,23 @@ def release_scan(nodes_df) -> None:
 
 
 # ---------------------------------------------------------------------------
-# encode (fixture writer / small exports; driver-side by design)
+# encode (fixture writer / small exports; driver-side by design). The wire
+# primitives (varint, zigzag, fields) are sources/mvt.py's.
 # ---------------------------------------------------------------------------
 
-
-def _enc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+_U64 = (1 << 64) - 1  # an int64 field writes a negative value as two's complement
 
 
-def _enc_zigzag(v: int) -> bytes:
-    return _enc_varint((v << 1) ^ (v >> 63) if v < 0 else v << 1)
-
-
-def _enc_field_varint(field: int, v: int) -> bytes:
-    return _enc_varint(field << 3) + _enc_varint(v)
-
-
-def _enc_field_bytes(field: int, data: bytes) -> bytes:
-    return _enc_varint((field << 3) | 2) + _enc_varint(len(data)) + data
-
-
-def _enc_packed(field: int, values, zigzag: bool, delta: bool = False) -> bytes:
-    payload = bytearray()
-    prev = 0
+def _sint_deltas(values) -> list[int]:
+    """The varints of a packed sint64 delta field (DenseNodes ids and
+    coordinates, way refs, relation memids): each value minus the one
+    before it, zigzagged."""
+    out, prev = [], 0
     for v in values:
-        x = int(v)
-        if delta:
-            x, prev = x - prev, x
-        payload += _enc_zigzag(x) if zigzag else _enc_varint(x)
-    return _enc_field_bytes(field, bytes(payload))
+        v = int(v)
+        out.append(_zigzag(v - prev))
+        prev = v
+    return out
 
 
 class _StringTable:
@@ -478,7 +471,7 @@ class _StringTable:
         return i
 
     def encode(self) -> bytes:
-        return b"".join(_enc_field_bytes(1, s.encode("utf-8")) for s in self.strings)
+        return b"".join(_field_bytes(1, s.encode("utf-8")) for s in self.strings)
 
 
 def _blob(block: bytes, compression: str = "zlib") -> bytes:
@@ -496,11 +489,11 @@ def _blob(block: bytes, compression: str = "zlib") -> bytes:
         field, payload = 7, zstandard.ZstdCompressor().compress(block)
     else:
         raise ValueError(f"unsupported compression {compression!r}")
-    return _enc_field_varint(2, len(block)) + _enc_field_bytes(field, payload)
+    return _field_varint(2, len(block)) + _field_bytes(field, payload)
 
 
 def _framed(btype: str, blob: bytes) -> bytes:
-    hdr = _enc_field_bytes(1, btype.encode()) + _enc_field_varint(3, len(blob))
+    hdr = _field_bytes(1, btype.encode()) + _field_varint(3, len(blob))
     return struct.pack(">i", len(hdr)) + hdr + blob
 
 
@@ -517,15 +510,15 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
     granularity 1).
     """
     header_block = (
-        _enc_field_bytes(4, b"OsmSchema-V0.6") + _enc_field_bytes(4, b"DenseNodes")
+        _field_bytes(4, b"OsmSchema-V0.6") + _field_bytes(4, b"DenseNodes")
     )
     chunks = [_framed("OSMHeader", _blob(header_block, compression))]
 
     def block_of(groups: list[bytes], st: _StringTable) -> bytes:
-        body = _enc_field_bytes(1, st.encode())
+        body = _field_bytes(1, st.encode())
         for g in groups:
-            body += _enc_field_bytes(2, g)
-        body += _enc_field_varint(17, 1)  # granularity 1 nanodegree
+            body += _field_bytes(2, g)
+        body += _field_varint(17, 1)  # granularity 1 nanodegree
         return body
 
     nodes = list(nodes or [])
@@ -545,12 +538,12 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
                 kv.append(st.get(v))
             kv.append(0)
         dense = (
-            _enc_packed(1, ids, zigzag=True, delta=True)
-            + _enc_packed(8, lats, zigzag=True, delta=True)
-            + _enc_packed(9, lons, zigzag=True, delta=True)
-            + _enc_packed(10, kv, zigzag=False)
+            _field_packed(1, _sint_deltas(ids))
+            + _field_packed(8, _sint_deltas(lats))
+            + _field_packed(9, _sint_deltas(lons))
+            + _field_packed(10, kv)
         )
-        chunks.append(_framed("OSMData", _blob(block_of([_enc_field_bytes(2, dense)], st), compression)))
+        chunks.append(_framed("OSMData", _blob(block_of([_field_bytes(2, dense)], st), compression)))
 
     ways = list(ways or [])
     for i in range(0, len(ways), entities_per_block):
@@ -558,11 +551,11 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
         st = _StringTable()
         group = bytearray()
         for wid, node_ids, tags in chunk:
-            msg = _enc_field_varint(1, int(wid))
-            msg += _enc_packed(2, [st.get(k) for k in (tags or {})], zigzag=False)
-            msg += _enc_packed(3, [st.get(v) for v in (tags or {}).values()], zigzag=False)
-            msg += _enc_packed(8, list(node_ids), zigzag=True, delta=True)
-            group += _enc_field_bytes(3, msg)
+            msg = _field_varint(1, int(wid) & _U64)  # int64
+            msg += _field_packed(2, [st.get(k) for k in (tags or {})])
+            msg += _field_packed(3, [st.get(v) for v in (tags or {}).values()])
+            msg += _field_packed(8, _sint_deltas(node_ids))
+            group += _field_bytes(3, msg)
         chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st), compression)))
 
     relations = list(relations or [])
@@ -573,12 +566,12 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
         for rid, node_m, way_m, rel_m, tags in chunk:
             memids = list(node_m) + list(way_m) + list(rel_m)
             types = [0] * len(node_m) + [1] * len(way_m) + [2] * len(rel_m)
-            msg = _enc_field_varint(1, int(rid))
-            msg += _enc_packed(2, [st.get(k) for k in (tags or {})], zigzag=False)
-            msg += _enc_packed(3, [st.get(v) for v in (tags or {}).values()], zigzag=False)
-            msg += _enc_packed(9, memids, zigzag=True, delta=True)
-            msg += _enc_packed(10, types, zigzag=False)
-            group += _enc_field_bytes(4, msg)
+            msg = _field_varint(1, int(rid) & _U64)  # int64
+            msg += _field_packed(2, [st.get(k) for k in (tags or {})])
+            msg += _field_packed(3, [st.get(v) for v in (tags or {}).values()])
+            msg += _field_packed(9, _sint_deltas(memids))
+            msg += _field_packed(10, types)
+            group += _field_bytes(4, msg)
         chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st), compression)))
 
     with open(path, "wb") as f:

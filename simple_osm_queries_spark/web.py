@@ -14,9 +14,9 @@ goroutines (but distributed underneath). `GET /tiles/{z}/{x}/{y}.mvt`
 answers a tile layer of at most tiles.MVT_DRIVER_ROWS members the way the
 reference answers from its in-process index (api.go:117): one fetch of the
 layer's capped, fid-ordered members, encoded on the driver. A larger layer
-(a dense or low-zoom tile) renders in an executor instead, so its encode
-does not hold the GIL the request threads share. `.png` renders through
-the tile_heatmap operator.
+(a dense or low-zoom tile) encodes the same members in one executor task
+instead, so its encode does not hold the GIL the request threads share.
+`.png` renders through the tile_heatmap operator.
 """
 
 from __future__ import annotations
@@ -214,12 +214,11 @@ def make_handler(
             raster for ONE slippy tile (operators/tiles.py tile_heatmap
             over the tile's bbox-filtered nodes), and .mvt — the same
             tile as a Mapbox Vector Tile with a nodes, a ways and a
-            relations layer (tags as MVT attributes): the bytes
-            tile_vectors, tile_vectors_ways and tile_vectors_relations
-            render for this tile (tiles.tile_mvt). A layer of at most
+            relations layer (tags as MVT attributes; tiles.tile_mvt over
+            the tile's member frames). A layer of at most
             tiles.MVT_DRIVER_ROWS members is fetched and encoded here on
-            the driver, without the operators' exchange and pandas stage;
-            a larger one renders through them in an executor. The
+            the driver; a larger one is encoded from the same capped,
+            fid-ordered members in one executor task. The
             reference's UI sends every feature to the browser as GeoJSON;
             raster keeps a dense region drawable, MVT keeps it
             *interactive* in any standard map client. Zoom capped like

@@ -1,10 +1,11 @@
-"""Mapbox Vector Tile codec (sources/mvt.py) + tile_vectors operators.
+"""Mapbox Vector Tile codec (sources/mvt.py), tiles.tile_vectors and the
+single-tile path of the .mvt route (tiles.tile_mvt_layers + tile_mvt).
 
 Oracle strategy (CLAUDE.md): the codec is pinned by HAND-COMPUTED wire
 bytes (spec 2.1 layout worked out independently below, not via the
 encoder), an independent minimal protobuf wire parser written here, and
-encode->decode round-trips; the operators are checked against a pure-
-python tile-assignment/projection oracle.
+encode->decode round-trips; the tiles are checked against a pure-python
+tile-assignment/projection oracle, on both encode paths of a layer.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import pytest
 
 from simple_osm_queries_spark.sources import mvt
 from tests import mvt_decode
-from tests.cell_oracle import tile_xy_py
+from tests.cell_oracle import tile_fxy_py, tile_xy_py
 
 
 # ---------------------------------------------------------------------------
@@ -202,7 +203,7 @@ def test_tile_vectors_points(spark):
     ds = from_generator(spark, n_nodes=400, n_ways=0, n_relations=0)
     zoom, extent = 12, 4096
     rows = ds.nodes.select("id", "lon", "lat", "tags").collect()
-    out = {r.tile_id: r for r in tile_vectors(ds.nodes, zoom, extent=extent).collect()}
+    out = {r.tile_id: r for r in tile_vectors(ds.nodes, zoom).collect()}
 
     oracle: dict[int, list] = {}
     n = 1 << zoom
@@ -242,146 +243,257 @@ def test_tile_vectors_cap_is_visible(spark):
     layer = mvt_decode.decode_tile(bytes(r.mvt))["nodes"]
     assert [f["id"] for f in layer["features"]] == list(range(10))
 
+# ---------------------------------------------------------------------------
+# one tile: tiles.tile_mvt_layers + tiles.tile_mvt (the .mvt route)
+# ---------------------------------------------------------------------------
 
-def test_tile_vectors_ways(spark):
-    """A way whose bbox spans two tiles appears in BOTH tiles' MVTs, with
-    tile-local coordinates that reconstruct the same absolute positions
-    (coords may leave [0, extent) on the neighbor tile — spec buffer
-    convention); oversize ways raise by default and are visibly skipped
-    with oversize='skip'."""
-    from simple_osm_queries_spark.operators.tiles import tile_vectors_ways
-    from simple_osm_queries_spark.sources.dataset import from_generator, prepare
+_BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
+_NODES = "id long, lon double, lat double, tags map<string,string>"
+_WAYS = (
+    "id long, nodes array<struct<id:long,lon:double,lat:double>>, "
+    "min_lon double, min_lat double, max_lon double, max_lat double"
+)
+_RELATIONS = (
+    "id long, min_lon double, min_lat double, max_lon double, max_lat double, "
+    "tags map<string,string>"
+)
+
+
+def _local(spark, df, *cols):
+    df = df.select(*cols)
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _served(monkeypatch, frames, zoom, tiles_xy, threshold, layer, simplify=0.0):
+    """{(tx, ty): decoded tile} of tiles.tile_mvt over the ``layer`` layer
+    of tiles.tile_mvt_layers, with MVT_DRIVER_ROWS at ``threshold`` (0:
+    the layer is encoded in an executor whenever it has members)."""
+    from simple_osm_queries_spark.operators import tiles
+
+    monkeypatch.setattr(tiles, "MVT_DRIVER_ROWS", threshold)
+    out = {}
+    for tx, ty in tiles_xy:
+        layers = tiles.tile_mvt_layers(*frames, zoom, tx, ty, 65536, simplify)
+        out[tx, ty] = mvt_decode.decode_tile(tiles.tile_mvt([x for x in layers if x.name == layer]))
+    return out
+
+
+def _paths():
+    """The two encode paths: the driver (the default threshold) and the
+    executor (threshold 0)."""
+    from simple_osm_queries_spark.operators import tiles
+
+    return (tiles.MVT_DRIVER_ROWS, 0)
+
+
+def _window_tiles(zoom):
+    """Every tile meeting the datagen window (lon 9.90-10.10, lat
+    53.50-53.70, FIXTURES.md) plus a ring of one tile around it."""
+    x0, y0 = tile_xy_py(9.90, 53.70, zoom)
+    x1, y1 = tile_xy_py(10.10, 53.50, zoom)
+    return [(x, y) for x in range(x0 - 1, x1 + 2) for y in range(y0 - 1, y1 + 2)]
+
+
+def _bbox_tiles(min_lon, min_lat, max_lon, max_lat, zoom):
+    x0, y0 = tile_xy_py(min_lon, max_lat, zoom)  # y grows DOWN
+    x1, y1 = tile_xy_py(max_lon, min_lat, zoom)
+    return {(x, y) for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)}
+
+
+def _proj(lon, lat, zoom):
+    """Independent Web-Mercator projection (tile units at ``zoom``)."""
+    n = 1 << zoom
+    lr = math.radians(min(max(lat, -85.05112878), 85.05112878))
+    fy = (1.0 - math.log(math.tan(lr) + 1.0 / math.cos(lr)) / math.pi) / 2.0 * n
+    return (lon + 180.0) / 360.0 * n, fy
+
+
+def test_tile_vectors_ways(spark, monkeypatch):
+    """A way is in the ways layer of exactly the tiles its bbox covers
+    (one whose bbox spans several tiles is in each), with tile-local
+    vertices that reconstruct its absolute positions (coords may leave
+    [0, extent) on a neighbour tile: the spec's buffer convention), and a
+    way whose bbox covers more than MAX_COVER tiles is in no tile. Served
+    tile by tile through tile_mvt_layers + tile_mvt, once encoded on the
+    driver and once in an executor."""
+    from simple_osm_queries_spark.sources.dataset import from_generator
 
     ds = from_generator(spark, n_nodes=300, n_ways=60, n_relations=0)
-    zoom, extent = 13, 4096
-    ways = ds.ways
-    out = list(tile_vectors_ways(ways, zoom, extent=extent).collect())
-    assert out, "expected at least one way tile"
-    wrows = {r.id: r for r in ways.select("id", "nodes").collect()}
-    n = 1 << zoom
-    seen: dict[int, set] = {}
-    for r in out:
-        layer = mvt_decode.decode_tile(bytes(r.mvt))["ways"]
-        assert r.n_oversize == 0
-        for f in layer["features"]:
-            seen.setdefault(f["id"], set()).add((r.tx, r.ty))
-            # absolute reconstruction: tile origin + local/extent == proj
-            pts = f["parts"][0]
-            nodes = wrows[f["id"]].nodes
-            assert len(pts) == len(nodes)
-            for (ix, iy), v in zip(pts, nodes):
-                fx = (v.lon + 180.0) / 360.0 * n
-                lr = math.radians(min(max(v.lat, -85.05112878), 85.05112878))
-                fy = (1.0 - math.log(math.tan(lr) + 1.0 / math.cos(lr)) / math.pi) / 2.0 * n
-                assert abs((r.tx + ix / extent) - fx) <= 1.5 / extent
-                assert abs((r.ty + iy / extent) - fy) <= 1.5 / extent
-    # coverage: every way with >=2 resolved nodes appears on every bbox tile
-    for wid, row in wrows.items():
-        if len(row.nodes) < 2:
-            continue
-        lons = [v.lon for v in row.nodes]
-        lats = [v.lat for v in row.nodes]
-        x0, _ = tile_xy_py(min(lons), 0.0, zoom)
-        x1, _ = tile_xy_py(max(lons), 0.0, zoom)
-        _, y0 = tile_xy_py(0.0, max(lats), zoom)
-        _, y1 = tile_xy_py(0.0, min(lats), zoom)
-        want = {(tx, ty) for tx in range(x0, x1 + 1) for ty in range(y0, y1 + 1)}
-        assert seen.get(wid) == want
-
-    # oversize handling: a hemisphere-wide way at z13
+    zoom, extent = 11, mvt.EXTENT
+    ways = _local(spark, ds.ways, "id", "nodes", *_BBOX)
+    wrows = {r.id: r for r in ways.collect()}
+    # a hemisphere-wide way: thousands of tiles at z11
+    big_id, big_tile = 1 << 40, tile_xy_py(0.0, 10.5, zoom)
     big = spark.createDataFrame(
-        [(999, [{"id": 1, "lon": -60.0, "lat": 10.0},
-                {"id": 2, "lon": 60.0, "lat": 11.0}],
+        [(big_id, [{"id": 1, "lon": -60.0, "lat": 10.0}, {"id": 2, "lon": 60.0, "lat": 11.0}],
           -60.0, 10.0, 60.0, 11.0)],
-        "id long, nodes array<struct<id:long,lon:double,lat:double>>, "
-        "min_lon double, min_lat double, max_lon double, max_lat double",
+        _WAYS,
     )
-    with pytest.raises(ValueError, match="cover"):
-        tile_vectors_ways(big, zoom).collect()
-    skipped = tile_vectors_ways(big, zoom, oversize="skip").collect()
-    assert skipped == []  # nothing renderable left, and no exception
+    frames = (
+        spark.createDataFrame([], _NODES),
+        ways.unionByName(big),
+        spark.createDataFrame([], _RELATIONS),
+    )
+    n = 1 << zoom
+    for threshold in _paths():
+        served = _served(
+            monkeypatch, frames, zoom, [*_window_tiles(zoom), big_tile], threshold, "ways"
+        )
+        assert "ways" not in served[big_tile]
+        seen: dict[int, set] = {}
+        for (tx, ty), layers in served.items():
+            for f in layers.get("ways", {"features": []})["features"]:
+                seen.setdefault(f["id"], set()).add((tx, ty))
+                pts, nodes = f["parts"][0], wrows[f["id"]].nodes
+                assert len(pts) == len(nodes)
+                for (ix, iy), v in zip(pts, nodes):
+                    fx, fy = _proj(v.lon, v.lat, zoom)
+                    assert abs((tx + ix / extent) - fx) <= 1.5 / extent
+                    assert abs((ty + iy / extent) - fy) <= 1.5 / extent
+        assert seen, "expected at least one way tile"
+        for wid, row in wrows.items():
+            want = _bbox_tiles(*(row[c] for c in _BBOX), zoom) if len(row.nodes) >= 2 else set()
+            assert seen.get(wid, set()) == want, (threshold, wid)
+        assert big_id not in seen
 
 
-def test_tile_vectors_relations(spark):
+def test_tile_vectors_relations(spark, monkeypatch):
     """Relations render as their BBOX POLYGON (the reference's relation
-    output geometry, grid_reader.go:513-517): one exterior ring per tile
-    the bbox covers, wound positive under the screen-space shoelace (MVT
-    2.1 exterior convention), corners reconstructing the projected bbox,
-    tags carried as attributes."""
+    output geometry, grid_reader.go:513-517): one exterior ring on each
+    tile the bbox covers, wound positive under the screen-space shoelace
+    (MVT 2.1 exterior convention), corners reconstructing the projected
+    bbox, tags carried as attributes; a relation whose bbox covers more
+    than MAX_COVER tiles is in no tile. Driver and executor encode."""
     from simple_osm_queries_spark.functions import cells as C
-    from simple_osm_queries_spark.operators.tiles import tile_vectors_relations
     from simple_osm_queries_spark.sources.dataset import from_generator
 
     ds = from_generator(spark, n_nodes=300, n_ways=60, n_relations=20)
-    zoom, extent = 13, 4096
-    rels = ds.relations
-    rrows = {r.id: r for r in
-             rels.select("id", "min_lon", "min_lat", "max_lon", "max_lat", "tags").collect()}
-    out = list(tile_vectors_relations(rels, zoom, extent=extent).collect())
-    assert out, "expected at least one relation tile"
-    seen: dict[int, set] = {}
-    for r in out:
-        layer = mvt_decode.decode_tile(bytes(r.mvt))["relations"]
-        assert r.n_oversize == 0
-        for f in layer["features"]:
-            seen.setdefault(f["id"], set()).add((r.tx, r.ty))
-            ring = f["parts"][0]
-            src = rrows[f["id"]]
-            # expected corners via the SAME projection + floor math
-            # (top-left from (min_lon, max_lat): screen y grows down)
-            fx0, fy0 = C.tile_fxy_py(src.min_lon, src.max_lat, zoom)
-            fx1, fy1 = C.tile_fxy_py(src.max_lon, src.min_lat, zoom)
-            px0 = math.floor((fx0 - r.tx) * extent)
-            py0 = math.floor((fy0 - r.ty) * extent)
-            px1 = math.floor((fx1 - r.tx) * extent)
-            py1 = math.floor((fy1 - r.ty) * extent)
-            want_ring = [(px0, py0), (px1, py0), (px1, py1), (px0, py1)]
-            if want_ring[-1] == want_ring[0]:
-                # encoder drops a closing vertex equal to the first
-                # (ClosePath implies it) — a pixel-thin degenerate box
-                want_ring = want_ring[:-1]
-            assert ring == want_ring
-            # positive shoelace in screen space => exterior ring (only
-            # asserted when the box spans >= 2 pixels both ways; thinner
-            # ones legitimately floor to zero area)
-            k = len(ring)
-            area2 = sum(
-                ring[i][0] * ring[(i + 1) % k][1] - ring[(i + 1) % k][0] * ring[i][1]
-                for i in range(k)
-            )
-            if (fx1 - fx0) * extent >= 2.0 and (fy1 - fy0) * extent >= 2.0:
-                assert area2 > 0
-            # attrs mirror the tags map
-            assert f["attrs"] == dict(src.tags or {})
-    # coverage: every relation appears on exactly its bbox-cover tiles
-    for rid, src in rrows.items():
-        x0, _ = tile_xy_py(src.min_lon, 0.0, zoom)
-        x1, _ = tile_xy_py(src.max_lon, 0.0, zoom)
-        _, y0 = tile_xy_py(0.0, src.max_lat, zoom)
-        _, y1 = tile_xy_py(0.0, src.min_lat, zoom)
-        want = {(tx, ty) for tx in range(x0, x1 + 1) for ty in range(y0, y1 + 1)}
-        assert seen.get(rid) == want
-
-    # oversize relation raises / skips visibly, like ways
-    big = spark.createDataFrame(
-        [(999, -60.0, 10.0, 60.0, 11.0, {"type": "route"})],
-        "id long, min_lon double, min_lat double, max_lon double, "
-        "max_lat double, tags map<string,string>",
+    zoom, extent = 11, mvt.EXTENT
+    rels = _local(spark, ds.relations, "id", *_BBOX, "tags")
+    rrows = {r.id: r for r in rels.collect()}
+    big_id, big_tile = 1 << 40, tile_xy_py(0.0, 10.5, zoom)
+    big = spark.createDataFrame([(big_id, -60.0, 10.0, 60.0, 11.0, {"type": "route"})], _RELATIONS)
+    frames = (
+        spark.createDataFrame([], _NODES),
+        spark.createDataFrame([], _WAYS),
+        rels.unionByName(big),
     )
-    with pytest.raises(ValueError, match="cover"):
-        tile_vectors_relations(big, zoom).collect()
-    assert tile_vectors_relations(big, zoom, oversize="skip").collect() == []
+    for threshold in _paths():
+        served = _served(
+            monkeypatch, frames, zoom, [*_window_tiles(zoom), big_tile], threshold, "relations"
+        )
+        assert "relations" not in served[big_tile]
+        seen: dict[int, set] = {}
+        for (tx, ty), layers in served.items():
+            for f in layers.get("relations", {"features": []})["features"]:
+                seen.setdefault(f["id"], set()).add((tx, ty))
+                ring, src = f["parts"][0], rrows[f["id"]]
+                # expected corners via the same projection + floor math
+                # (top-left from (min_lon, max_lat): screen y grows down)
+                fx0, fy0 = C.tile_fxy_py(src.min_lon, src.max_lat, zoom)
+                fx1, fy1 = C.tile_fxy_py(src.max_lon, src.min_lat, zoom)
+                px0, py0 = math.floor((fx0 - tx) * extent), math.floor((fy0 - ty) * extent)
+                px1, py1 = math.floor((fx1 - tx) * extent), math.floor((fy1 - ty) * extent)
+                want_ring = [(px0, py0), (px1, py0), (px1, py1), (px0, py1)]
+                if want_ring[-1] == want_ring[0]:
+                    # encoder drops a closing vertex equal to the first
+                    # (ClosePath implies it): a pixel-thin degenerate box
+                    want_ring = want_ring[:-1]
+                assert ring == want_ring
+                # positive shoelace in screen space => exterior ring (only
+                # asserted when the box spans >= 2 pixels both ways;
+                # thinner ones legitimately floor to zero area)
+                k = len(ring)
+                area2 = sum(
+                    ring[i][0] * ring[(i + 1) % k][1] - ring[(i + 1) % k][0] * ring[i][1]
+                    for i in range(k)
+                )
+                if (fx1 - fx0) * extent >= 2.0 and (fy1 - fy0) * extent >= 2.0:
+                    assert area2 > 0
+                assert f["attrs"] == dict(src.tags or {})
+        assert seen, "expected at least one relation tile"
+        for rid, src in rrows.items():
+            want = set() if src.min_lon is None else _bbox_tiles(*(src[c] for c in _BBOX), zoom)
+            assert seen.get(rid, set()) == want, (threshold, rid)
+        assert big_id not in seen
+
+
+def _oracle_tiles(ds, zoom, cap, simplify=0.0):
+    """{tile_id: {layer: (member count, blob)}}, the reference bytes of
+    the .mvt route:
+    tiles.tile_vectors' blobs for nodes; for ways and relations, members
+    picked, ordered, capped and projected here in Python (a feature is a
+    member of every tile its bbox covers, unless that is more than
+    MAX_COVER tiles; tile_xy_py and the tile_fxy_py twin place it) and
+    encoded by sources/mvt.py, whose wire bytes are pinned above.
+    ?simplify thins the ways with geodesy._dp_mask, the DP kernel pinned
+    against a recursive oracle in test_geodesy.py. The member count is
+    before the cap."""
+    from pyspark.sql import functions as F
+
+    from simple_osm_queries_spark.functions import cells as C
+    from simple_osm_queries_spark.operators.geodesy import _dp_mask
+    from simple_osm_queries_spark.operators.tiles import MAX_COVER, tile_vectors
+
+    out: dict = {}
+    for r in tile_vectors(ds.nodes, zoom, cap=cap).collect():
+        out.setdefault(r.tile_id, {})["nodes"] = (r.n_total, bytes(r.mvt))
+
+    def local(lon, lat, tx, ty):
+        fx, fy = tile_fxy_py(float(lon), float(lat), zoom)
+        return math.floor((fx - tx) * mvt.EXTENT), math.floor((fy - ty) * mvt.EXTENT)
+
+    def line(row, tx, ty):
+        ring = [local(v.lon, v.lat, tx, ty) for v in row.nodes]
+        if len(ring) < 2:
+            return None
+        if simplify > 0.0 and len(ring) > 2:
+            keep = _dp_mask(np.array([p[0] for p in ring], float),
+                            np.array([p[1] for p in ring], float), simplify)
+            ring = [ring[i] for i in np.flatnonzero(keep)]
+        return {"id": row.id, "type": mvt.LINESTRING, "rings": [ring]}
+
+    def box(row, tx, ty):
+        x0, y0 = local(row.min_lon, row.max_lat, tx, ty)
+        x1, y1 = local(row.max_lon, row.min_lat, tx, ty)
+        return {"id": row.id, "type": mvt.POLYGON,
+                "rings": [[(x0, y0), (x1, y0), (x1, y1), (x0, y1)]],
+                "attrs": {e.key: e.value for e in row.tags or []}}
+
+    for layer, df, feature in (
+        ("ways", ds.ways.select("id", "nodes", *_BBOX), line),
+        ("relations", ds.relations.select("id", *_BBOX, F.map_entries("tags").alias("tags")), box),
+    ):
+        members: dict = {}
+        for row in sorted(df.collect(), key=lambda r: r.id):
+            if row.min_lon is None:
+                continue
+            cover = _bbox_tiles(*(row[c] for c in _BBOX), zoom)
+            if len(cover) <= MAX_COVER:
+                for t in cover:
+                    members.setdefault(t, []).append(row)
+        for (tx, ty), rows in members.items():
+            feats = [f for f in (feature(r, tx, ty) for r in rows[:cap]) if f is not None]
+            out.setdefault(C.tile_id_py(tx, ty, zoom), {})[layer] = (
+                len(rows), mvt.encode_tile([(layer, feats)])
+            )
+    return out
+
+
+def _concat(blobs: dict) -> bytes:
+    return b"".join(blobs[layer][1] for layer in ("nodes", "ways", "relations") if layer in blobs)
 
 
 def test_http_mvt_multilayer(spark):
     """The .mvt endpoint serves, byte for byte, the nodes, ways and
-    relations blobs the three tile operators render for the tile,
-    concatenated in that order (an MVT tile is repeated Layer fields),
-    also under a row cap (make_handler max_rows) and ?simplify. The route
-    fetches and encodes on the driver, so this pins its membership, fid
-    order, cap, ways simplification and tag (attribute) order to the
-    operators'. One tile is chosen so that its served nodes and relations
-    carry >= 2 tags each: attribute order is part of the bytes."""
+    relations layers of the tile, concatenated in that order (an MVT tile
+    is repeated Layer fields): the nodes blob of tiles.tile_vectors and
+    the ways and relations blobs of the Python oracle (_oracle_tiles),
+    also under a row cap (make_handler max_rows) and ?simplify. This pins
+    the route's membership, fid order, cap, ways simplification and tag
+    (attribute) order. One tile is chosen so that its served nodes and
+    relations carry >= 2 tags each: attribute order is part of the
+    bytes."""
     import threading
     import urllib.error
     import urllib.request
@@ -390,41 +502,24 @@ def test_http_mvt_multilayer(spark):
     from pyspark.sql import functions as F
 
     from simple_osm_queries_spark.functions import cells as C
-    from simple_osm_queries_spark.operators.tiles import (
-        tile_vectors,
-        tile_vectors_relations,
-        tile_vectors_ways,
-    )
     from simple_osm_queries_spark.sources.dataset import from_generator
     from simple_osm_queries_spark.web import make_handler
 
     ds = from_generator(spark, n_nodes=400, n_ways=80, n_relations=20).cache()
     zoom = 12
+    full = _oracle_tiles(ds, zoom, 100_000)
 
-    def blobs(cap, simplify):
-        """{tile_id: the three operators' blobs for it, concatenated}"""
-        out = {}
-        for frame in (
-            tile_vectors(ds.nodes, zoom, cap=cap),
-            tile_vectors_ways(ds.ways, zoom, cap=cap, simplify_tol=simplify),
-            tile_vectors_relations(ds.relations, zoom, cap=cap),
-        ):
-            for r in frame.collect():
-                out[r.tile_id] = out.get(r.tile_id, b"") + bytes(r.mvt)
-        return out
-
-    full = blobs(65536, 0.0)
-
-    def multi_tag(body, layer):
-        feats = mvt_decode.decode_tile(body).get(layer, {"features": []})["features"]
+    def multi_tag(layers, layer):
+        feats = mvt_decode.decode_tile(layers[layer][1])[layer]["features"]
         return any(len(f["attrs"]) >= 2 for f in feats)
 
     # a tile with a way on it, and one whose nodes and relations carry
     # several tags each
-    with_way = tile_vectors_ways(ds.ways, zoom).collect()[0].tile_id
+    with_way = min(t for t, ls in full.items() if "ways" in ls)
     tagged = [
-        tid for tid, body in sorted(full.items())
-        if multi_tag(body, "nodes") and multi_tag(body, "relations")
+        tid for tid, ls in sorted(full.items())
+        if "nodes" in ls and "relations" in ls
+        and multi_tag(ls, "nodes") and multi_tag(ls, "relations")
     ]
     assert tagged, "no tile with multi-tag nodes and relations"
     servers = [
@@ -441,14 +536,13 @@ def test_http_mvt_multilayer(spark):
             return resp.read()
 
     try:
+        thin = _oracle_tiles(ds, zoom, 100_000, 64.0)
+        capped, capped_thin = _oracle_tiles(ds, zoom, 3), _oracle_tiles(ds, zoom, 3, 64.0)
         for tid in (with_way, tagged[0]):
-            assert get(18095, tid) == full[tid]
-        thin = blobs(65536, 64.0)
-        capped, capped_thin = blobs(3, 0.0), blobs(3, 64.0)
-        for tid in (with_way, tagged[0]):
-            assert get(18095, tid, "?simplify=64") == thin[tid]
-            assert get(18096, tid) == capped[tid]
-            assert get(18096, tid, "?simplify=64") == capped_thin[tid]
+            assert get(18095, tid) == _concat(full[tid])
+            assert get(18095, tid, "?simplify=64") == _concat(thin[tid])
+            assert get(18096, tid) == _concat(capped[tid])
+            assert get(18096, tid, "?simplify=64") == _concat(capped_thin[tid])
         try:
             get(18095, with_way, "?simplify=-1")
             raise AssertionError("negative simplify should 400")
@@ -457,9 +551,9 @@ def test_http_mvt_multilayer(spark):
     finally:
         for httpd in servers:
             httpd.shutdown()
-    layers = mvt_decode.decode_tile(full[with_way])
+    layers = mvt_decode.decode_tile(_concat(full[with_way]))
     # ?simplify thins the ways layer but keeps the same features
-    thin_ways = mvt_decode.decode_tile(thin[with_way])["ways"]["features"]
+    thin_ways = mvt_decode.decode_tile(thin[with_way]["ways"][1])["ways"]["features"]
     assert sorted(f["id"] for f in thin_ways) == sorted(
         f["id"] for f in layers["ways"]["features"]
     )
@@ -476,13 +570,11 @@ def test_http_mvt_multilayer(spark):
 
 def test_mvt_dense_layer_renders_in_executor(spark, monkeypatch):
     """tiles.tile_mvt encodes a layer of at most MVT_DRIVER_ROWS members on
-    the driver from its fetched rows and renders a larger one through its
-    operator, restricted to the tile, in an executor (TileLayer.render).
-    The bytes are the three operators' blobs whichever path each layer
-    takes: at the threshold, one below it (a tile mixing both paths), at
-    0, and under a cap smaller than every layer."""
-    import dataclasses
-
+    the driver from its fetched rows and a larger one in an executor
+    (TileLayer.executor_frame). The bytes are the reference bytes
+    (_oracle_tiles) whichever path each layer takes: at the threshold,
+    one below it (a tile mixing both paths), at 0, and under a cap
+    smaller than every layer."""
     from simple_osm_queries_spark import web
     from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.operators import tiles
@@ -490,65 +582,47 @@ def test_mvt_dense_layer_renders_in_executor(spark, monkeypatch):
 
     ds = from_generator(spark, n_nodes=400, n_ways=80, n_relations=20).cache()
     zoom = 12
+    full = _oracle_tiles(ds, zoom, 100_000)
 
-    def operators(cap):
-        """{tile_id: {layer: (n_total, blob)}} from the three operators"""
-        out: dict = {}
-        for layer, frame in (
-            ("nodes", tiles.tile_vectors(ds.nodes, zoom, cap=cap)),
-            ("ways", tiles.tile_vectors_ways(ds.ways, zoom, cap=cap)),
-            ("relations", tiles.tile_vectors_relations(ds.relations, zoom, cap=cap)),
-        ):
-            for r in frame.collect():
-                out.setdefault(r.tile_id, {})[layer] = (r.n_total, bytes(r.mvt))
-        return out
-
-    full = operators(65536)
     # the tile with the most nodes among those holding all three layers
     tid = max((t for t, ls in full.items() if len(ls) == 3), key=lambda t: full[t]["nodes"][0])
     size = {layer: n for layer, (n, _) in full[tid].items()}
     assert min(size.values()) >= 4 and len(set(size.values())) == 3, size
     largest = max(size, key=size.get)
     _, tx, ty = C.tile_zxy_py(tid)
+    rendered: list[str] = []
+    executor_frame = tiles.TileLayer.executor_frame
+
+    def spied(layer):
+        rendered.append(layer.name)
+        return executor_frame(layer)
+
+    monkeypatch.setattr(tiles.TileLayer, "executor_frame", spied)
 
     def serve(threshold, cap):
-        """(body, layers rendered in an executor) at this threshold"""
+        """(body, layers encoded in an executor) at this threshold"""
         monkeypatch.setattr(tiles, "MVT_DRIVER_ROWS", threshold)
-        rendered = []
-
-        def spied(layer):
-            def render():
-                rendered.append(layer.name)
-                return layer.render()
-
-            return dataclasses.replace(layer, render=render)
-
-        layers = web._mvt_layers(ds, zoom, tx, ty, 0.0, cap)
-        body = tiles.tile_mvt([spied(layer) for layer in layers])
+        rendered.clear()
+        body = tiles.tile_mvt(web._mvt_layers(ds, zoom, tx, ty, 0.0, cap))
         return body, sorted(rendered)
 
-    def concat(blobs):
-        return b"".join(blobs[layer][1] for layer in ("nodes", "ways", "relations"))
-
     everything = sorted(size)
-    assert serve(size[largest], 100_000) == (concat(full[tid]), [])
-    assert serve(size[largest] - 1, 100_000) == (concat(full[tid]), [largest])
-    assert serve(0, 100_000) == (concat(full[tid]), everything)
-    capped = concat(operators(3)[tid])
+    assert serve(size[largest], 100_000) == (_concat(full[tid]), [])
+    assert serve(size[largest] - 1, 100_000) == (_concat(full[tid]), [largest])
+    assert serve(0, 100_000) == (_concat(full[tid]), everything)
+    capped = _concat(_oracle_tiles(ds, zoom, 3)[tid])
     # the cap-limited fetch still tells a layer over the threshold
     assert serve(2, 3) == (capped, everything)
     assert serve(3, 3) == (capped, [])
 
 
-def test_tile_vectors_ways_simplify(spark):
-    """simplify_tol runs DP on the projected tile coords: vertex count
-    drops, endpoints and the sharp corner survive, every dropped vertex is
-    within tol of the simplified polyline, and tol=0 is the identity."""
-    import numpy as np
-
-    from simple_osm_queries_spark.operators.tiles import tile_vectors_ways
-
-    zoom, extent = 10, 4096
+def test_tile_vectors_ways_simplify(spark, monkeypatch):
+    """?simplify runs DP on the projected tile coords: vertex count drops,
+    endpoints and the sharp corner survive, every dropped vertex is
+    within tol of the simplified polyline, and tol=0 is the identity, on
+    every tile the way covers, encoded on the driver and in an
+    executor."""
+    zoom = 10
     # one way inside a single z10 tile: a long near-straight run with tiny
     # jitter plus one sharp corner in the middle
     n_pts = 41
@@ -561,50 +635,51 @@ def test_tile_vectors_ways_simplify(spark):
         nodes.append({"id": i, "lon": lon0 + t * 0.02, "lat": lat})
     lons = [v["lon"] for v in nodes]
     lats = [v["lat"] for v in nodes]
-    way = spark.createDataFrame(
-        [(7, nodes, min(lons), min(lats), max(lons), max(lats))],
-        "id long, nodes array<struct<id:long,lon:double,lat:double>>, "
-        "min_lon double, min_lat double, max_lon double, max_lat double",
+    bbox = (min(lons), min(lats), max(lons), max(lats))
+    frames = (
+        spark.createDataFrame([], _NODES),
+        spark.createDataFrame([(7, nodes, *bbox)], _WAYS),
+        spark.createDataFrame([], _RELATIONS),
     )
+    covered = sorted(_bbox_tiles(*bbox, zoom))
 
-    def decode_pts(rows):
-        per_tile = {}
-        for r in rows:
-            layer = mvt_decode.decode_tile(bytes(r.mvt))["ways"]
-            for f in layer["features"]:
-                per_tile[(r.tx, r.ty)] = f["parts"][0]
-        return per_tile
+    def decode_pts(threshold, tol):
+        served = _served(monkeypatch, frames, zoom, covered, threshold, "ways", tol)
+        return {t: layers["ways"]["features"][0]["parts"][0] for t, layers in served.items()}
 
-    full = decode_pts(tile_vectors_ways(way, zoom, extent=extent).collect())
-    simp = decode_pts(
-        tile_vectors_ways(way, zoom, extent=extent, simplify_tol=8.0).collect()
-    )
-    assert set(full) == set(simp)
-    for key, fpts in full.items():
-        spts = simp[key]
-        assert len(fpts) == n_pts
-        assert 2 < len(spts) < len(fpts), "expected real reduction"
-        assert spts[0] == fpts[0] and spts[-1] == fpts[-1]
-        # the sharp corner survives (highest latitude = smallest mercator y)
-        corner = min(fpts, key=lambda p: p[1])
-        assert corner in spts
-        # subsequence property + deviation bound: each original vertex is
-        # within tol of the simplified polyline (numpy point-segment check)
-        sx = np.array([p[0] for p in spts], float)
-        sy = np.array([p[1] for p in spts], float)
-        for px, py in fpts:
-            ax, ay, bx, by = sx[:-1], sy[:-1], sx[1:], sy[1:]
-            dx, dy = bx - ax, by - ay
-            ln = np.maximum(dx * dx + dy * dy, 1e-12)
-            t = np.clip(((px - ax) * dx + (py - ay) * dy) / ln, 0, 1)
-            d = np.sqrt((ax + t * dx - px) ** 2 + (ay + t * dy - py) ** 2)
-            assert d.min() <= 8.0 + 1e-9
-        # ordered-subsequence property
-        it = iter(fpts)
-        assert all(p in it for p in spts)
-
-    # tol=0 is the identity
-    zero = decode_pts(
-        tile_vectors_ways(way, zoom, extent=extent, simplify_tol=0.0).collect()
-    )
-    assert zero == full
+    for threshold in _paths():
+        full = decode_pts(threshold, 0.0)
+        simp = decode_pts(threshold, 8.0)
+        assert set(full) == set(simp) == set(covered)
+        for key, fpts in full.items():
+            spts = simp[key]
+            assert len(fpts) == n_pts
+            assert 2 < len(spts) < len(fpts), "expected real reduction"
+            assert spts[0] == fpts[0] and spts[-1] == fpts[-1]
+            # the sharp corner survives (highest latitude = smallest
+            # mercator y)
+            corner = min(fpts, key=lambda p: p[1])
+            assert corner in spts
+            # deviation bound: each original vertex is within tol of the
+            # simplified polyline (numpy point-segment check)
+            sx = np.array([p[0] for p in spts], float)
+            sy = np.array([p[1] for p in spts], float)
+            for px, py in fpts:
+                ax, ay, bx, by = sx[:-1], sy[:-1], sx[1:], sy[1:]
+                dx, dy = bx - ax, by - ay
+                ln = np.maximum(dx * dx + dy * dy, 1e-12)
+                t = np.clip(((px - ax) * dx + (py - ay) * dy) / ln, 0, 1)
+                d = np.sqrt((ax + t * dx - px) ** 2 + (ay + t * dy - py) ** 2)
+                assert d.min() <= 8.0 + 1e-9
+            # ordered-subsequence property
+            it = iter(fpts)
+            assert all(p in it for p in spts)
+        # tol=0 is the identity: every vertex, projected
+        assert full == {
+            (tx, ty): [
+                tuple(math.floor((c - o) * mvt.EXTENT)
+                      for c, o in zip(tile_fxy_py(v["lon"], v["lat"], zoom), (tx, ty)))
+                for v in nodes
+            ]
+            for tx, ty in covered
+        }

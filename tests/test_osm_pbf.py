@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from simple_osm_queries_spark.query.planner import run_query
+from simple_osm_queries_spark.sources import mvt
 from simple_osm_queries_spark.sources import osm_pbf as P
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_xml
@@ -56,7 +57,7 @@ def test_packed_varint_fuzz(signed, delta):
         else:
             raw = vals
         enc = b"".join(
-            P._enc_zigzag(v) if signed else P._enc_varint(v) for v in raw
+            mvt._varint(mvt._zigzag(v) if signed else v) for v in raw
         )
         got = P._decode_packed(memoryview(enc), signed=signed, delta=delta).tolist()
         assert got == _oracle_decode_packed(enc, signed, delta)
@@ -160,7 +161,7 @@ def test_raw_uncompressed_blob(tmp_path):
         f.seek(off)
         blob = f.read(size)
     block = P._decompress_blob(blob)
-    raw_blob = P._enc_field_bytes(1, block)
+    raw_blob = mvt._field_bytes(1, block)
     path2 = str(tmp_path / "raw.osm.pbf")
     with open(path2, "wb") as f:
         f.write(P._framed("OSMData", raw_blob))
@@ -168,6 +169,38 @@ def test_raw_uncompressed_blob(tmp_path):
         path2, *[(o, s) for _, o, s in P.scan_blob_index(path2)][0]
     )[0]
     assert (nid, lon, lat, tags) == (7, 1.0, 2.0, {"a": "b"})
+
+
+def test_negative_int64_ids_round_trip(tmp_path):
+    """Way and relation ids are protobuf int64: a negative id is its
+    64-bit two's complement, 10 varint bytes. The reader half decodes a
+    hand-encoded block (no shared encoder); the writer half round-trips
+    negative ids through write_osm_pbf."""
+
+    def ld(field, payload):  # length-delimited field, payload < 128 bytes
+        return bytes([field << 3 | 2, len(payload)]) + payload
+
+    minus7 = b"\xf9" + b"\xff" * 8 + b"\x01"  # varint of 2**64 - 7
+    way = b"\x08" + minus7  # Way.id = -7, no keys, no refs
+    rel = b"\x08" + b"\xf7" + b"\xff" * 8 + b"\x01"  # Relation.id = -9
+    block = ld(1, ld(1, b"")) + ld(2, ld(3, way)) + ld(2, ld(4, rel))
+    _, ways, rels = P.decode_primitive_block(block)
+    assert ways == [(-7, [], {})]
+    assert rels == [(-9, [], [], [], {})]
+
+    path = str(tmp_path / "neg.osm.pbf")
+    P.write_osm_pbf(
+        path,
+        nodes=[(-3, 1.0, 2.0, {}), (5, 1.5, 2.5, {})],
+        ways=[(-7, [-3, 5], {"highway": "path"}), (-(2**63), [5], {})],
+        relations=[(-9, [-3], [-7], [-11], {"type": "route"})],
+    )
+    got = [P.decode_blob_at(path, off, size) for kind, off, size in P.scan_blob_index(path)
+           if kind == "OSMData"]
+    assert [w for _, ws, _ in got for w in ws] == [
+        (-7, [-3, 5], {"highway": "path"}), (-(2**63), [5], {})
+    ]
+    assert [r for _, _, rs in got for r in rs] == [(-9, [-3], [-7], [-11], {"type": "route"})]
 
 
 def test_query_over_pbf_import(spark, small_pdfs, tmp_path):
@@ -201,10 +234,10 @@ def test_query_over_pbf_import(spark, small_pdfs, tmp_path):
 
 def test_decode_packed_empty_and_single():
     assert P._decode_packed(memoryview(b""), signed=True).tolist() == []
-    assert P._decode_packed(memoryview(P._enc_varint(0)), signed=False).tolist() == [0]
+    assert P._decode_packed(memoryview(mvt._varint(0)), signed=False).tolist() == [0]
     big = 2**63 - 1
     assert P._decode_packed(
-        memoryview(P._enc_zigzag(-big)), signed=True
+        memoryview(mvt._varint(mvt._zigzag(-big))), signed=True
     ).tolist() == [-big]
 
 
@@ -216,16 +249,16 @@ def test_decode_respects_granularity_and_offsets(tmp_path):
     # raw units chosen so degrees = 1e-9*(5_000_000 + 100*raw)
     lat_raw, lon_raw = [123_456], [654_321]
     dense = (
-        P._enc_packed(1, ids, zigzag=True, delta=True)
-        + P._enc_packed(8, lat_raw, zigzag=True, delta=True)
-        + P._enc_packed(9, lon_raw, zigzag=True, delta=True)
+        mvt._field_packed(1, P._sint_deltas(ids))
+        + mvt._field_packed(8, P._sint_deltas(lat_raw))
+        + mvt._field_packed(9, P._sint_deltas(lon_raw))
     )
     block = (
-        P._enc_field_bytes(1, st.encode())
-        + P._enc_field_bytes(2, P._enc_field_bytes(2, dense))
-        + P._enc_field_varint(17, 100)       # granularity
-        + P._enc_field_varint(19, 5_000_000) # lat_offset (nanodeg)
-        + P._enc_field_varint(20, 7_000_000) # lon_offset
+        mvt._field_bytes(1, st.encode())
+        + mvt._field_bytes(2, mvt._field_bytes(2, dense))
+        + mvt._field_varint(17, 100)       # granularity
+        + mvt._field_varint(19, 5_000_000) # lat_offset (nanodeg)
+        + mvt._field_varint(20, 7_000_000) # lon_offset
     )
     path = str(tmp_path / "g.osm.pbf")
     with open(path, "wb") as f:
@@ -296,7 +329,7 @@ def test_zstd_codec_round_trip(tmp_path):
 
 def test_unknown_codec_blob_raises():
     # a blob carrying only an unknown field must raise, not return garbage
-    blob = P._enc_field_varint(2, 10) + P._enc_field_bytes(9, b"xxxx")
+    blob = mvt._field_varint(2, 10) + mvt._field_bytes(9, b"xxxx")
     with pytest.raises(ValueError, match="no known codec"):
         P._decompress_blob(blob)
 

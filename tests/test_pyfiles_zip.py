@@ -38,8 +38,8 @@ import numpy as np
 cid = s2.lnglat_to_cell([9.95], [53.55], 12)
 assert s2.parent_id(cid, 12)[0] == cid[0]
 
-from simple_osm_queries_spark.sources import osm_pbf
-buf = osm_pbf._enc_zigzag(-7)
+from simple_osm_queries_spark.sources import mvt, osm_pbf
+buf = mvt._varint(mvt._zigzag(-7))
 assert osm_pbf._decode_packed(memoryview(buf), signed=True).tolist() == [-7]
 print("ZIP-IMPORT-OK")
 """

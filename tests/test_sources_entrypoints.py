@@ -178,6 +178,30 @@ def test_cli_import_and_query(spark, small_osm, tmp_path, monkeypatch, capsys):
     assert {f["properties"]["@osm_id"] for f in fc["features"]} == {2, 3}
 
 
+def test_cli_index_root_as_file_uri(spark, small_osm, tmp_path, monkeypatch):
+    """An index root given as a ``file:`` URI: ``import`` writes the
+    tables under it, ``query``/``server``'s _build_dataset finds and reads
+    them back, and the working directory stays empty (no stray relative
+    ``file:`` directory)."""
+    from types import SimpleNamespace
+
+    from simple_osm_queries_spark import cli
+    from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = "file:" + str(tmp_path / "idx_uri")
+    cli.cmd_import(spark, SimpleNamespace(file=small_osm, out=root))
+    assert (tmp_path / "idx_uri" / "grid-index" / "data").is_dir()
+    ds = cli._build_dataset(spark, SimpleNamespace(data=root, generate=0))
+    n, w, r = parse_osm_xml(small_osm)
+    assert sorted(x.id for x in ds.nodes.select("id").collect()) == sorted(n["id"])
+    assert sorted(x.id for x in ds.ways.select("id").collect()) == sorted(w["id"])
+    assert sorted(x.id for x in ds.relations.select("id").collect()) == sorted(r["id"])
+    assert list(cwd.iterdir()) == []
+
+
 def test_cli_server_warms_every_cached_frame(spark, monkeypatch):
     """cmd_server materialises the nodes, ways and relations caches before
     it serves, so no first request pays for the way-geometry join or the

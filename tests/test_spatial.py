@@ -406,31 +406,34 @@ def tile_frames(spark, dataset):
     )
 
 
-TILE_PLAN_COUNTED = ("Exchange", "FlatMapGroupsInPandas", "SortMergeJoin", "BroadcastNestedLoopJoin")
+TILE_PLAN_COUNTED = (
+    "Exchange", "Window", "FlatMapGroupsInPandas", "MapInPandas", "TakeOrderedAndProject",
+    "SortMergeJoin", "BroadcastNestedLoopJoin",
+)
 TILE_PLAN_CASES = {
     # one Exchange: the rank windows ride the render's tile_id exchange
-    "tile_vectors": (lambda n, w, r: tiles.tile_vectors(n, 13), (1, 1, 0, 0)),
-    "tile_vectors_ways-raise": (lambda n, w, r: tiles.tile_vectors_ways(w, 12), (1, 1, 0, 0)),
-    # skip: + the oversize count's single-partition exchange, in a scalar
-    # subquery (no join), so a caller that drops n_oversize prunes it
-    "tile_vectors_ways-skip": (
-        lambda n, w, r: tiles.tile_vectors_ways(w, 12, oversize="skip"), (2, 1, 0, 0)),
-    "tile_vectors_relations": (
-        lambda n, w, r: tiles.tile_vectors_relations(r, 12), (1, 1, 0, 0)),
+    "tile_vectors": (lambda n, w, r: tiles.tile_vectors(n, 13), (1, 2, 1, 0, 0, 0, 0)),
+    # a dense .mvt layer: the tile's first cap members in fid order reach
+    # one mapInPandas task, with no exchange and no window
+    "tile_mvt-executor": (
+        lambda n, w, r: tiles.tile_mvt_layers(n, w, r, 12, *tile_xy_py(9.95, 53.55, 12), 100)[1]
+        .executor_frame(),
+        (0, 0, 0, 1, 1, 0, 0)),
     # pixel groupBy (tile_id, px, py), then the per-tile render
     "tile_heatmap": (lambda n, w, r: tiles.tile_heatmap(n.select("lon", "lat"), 13, 64),
-                     (2, 1, 0, 0)),
+                     (2, 0, 1, 0, 0, 0, 0)),
     "tile_stats-perfbench": (
         lambda n, w, r: tiles.tile_stats(n.select("id", "lon", "lat"), 13).agg(
             F.sum("n").alias("total"), F.count("*").alias("tiles")),
-        (2, 0, 0, 0)),
+        (2, 0, 0, 0, 0, 0, 0)),
 }
 
 
 @pytest.mark.parametrize("case", list(TILE_PLAN_CASES))
 def test_tile_plan_shape(tile_frames, case):
-    """Plan pin for the tile family: the counts of exchanges, pandas render
-    stages and the two joins a tile operator must not grow."""
+    """Plan pin for the tile family: the counts of exchanges, windows,
+    pandas stages, top-k sorts and the two joins a tile operator must not
+    grow."""
     build, want = TILE_PLAN_CASES[case]
     kinds = [n for n, _ in plan_nodes(build(*tile_frames))]
     assert tuple(kinds.count(k) for k in TILE_PLAN_COUNTED) == want, kinds
