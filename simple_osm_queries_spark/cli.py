@@ -134,9 +134,20 @@ def default_delta_fingerprint(path: str) -> str:
     return f"{path}:dir:{h.hexdigest()[:32]}"
 
 
+def _gc_snapshots(spark, index: str) -> None:
+    """After a commit: drop the backups past the retention policy."""
+    from simple_osm_queries_spark.index.upsert import gc_snapshots
+
+    removed = gc_snapshots(spark, index)
+    if removed:
+        print(f"removed {removed} old snapshot(s)")
+
+
 def cmd_upsert(spark, args) -> None:
     """Apply a delta parquet (index schema) to a grid index incrementally —
-    rewrites only the affected partition directories (index/upsert.py)."""
+    rewrites only the affected partition directories (index/upsert.py) —
+    then drop the snapshots past the retention policy
+    (``upsert.SNAPSHOT_RETAIN``)."""
     from simple_osm_queries_spark.index.upsert import upsert_index
 
     delta = spark.read.parquet(args.delta)
@@ -162,12 +173,14 @@ def cmd_upsert(spark, args) -> None:
             f"-> version {report['version']}"
             + (" [lookup]" if report.get("used_lookup") else "")
         )
+        _gc_snapshots(spark, args.index)
 
 
 def cmd_compact(spark, args) -> None:
     """Compact small-file partitions of a grid index in place — crash-safe
     version-bumping rewrite of only the offending directories
-    (index/compact.py)."""
+    (index/compact.py) — then drop the snapshots past the retention
+    policy, as ``cmd_upsert`` does."""
     from simple_osm_queries_spark.index.compact import compact_index
 
     report = compact_index(
@@ -194,6 +207,7 @@ def cmd_compact(spark, args) -> None:
             f"{report['rows_written']} rows) in {report['t_sec']:.1f}s "
             f"-> version {report['version']}"
         )
+        _gc_snapshots(spark, args.index)
 
 
 def cmd_query(spark, args) -> None:

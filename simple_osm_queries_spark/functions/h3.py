@@ -38,10 +38,10 @@ def _digit_shift(i: int) -> int:
     return 45 - 3 * i
 
 
-def _digits_mask(from_res: int, to_res: int = MAX_RES) -> int:
-    """All-sevens mask over digits from_res..to_res (inclusive)."""
+def _digits_mask(from_res: int) -> int:
+    """All-sevens mask over digits from_res..MAX_RES (inclusive)."""
     m = 0
-    for i in range(from_res, to_res + 1):
+    for i in range(from_res, MAX_RES + 1):
         m |= 7 << _digit_shift(i)
     return m
 

@@ -263,13 +263,18 @@ def read_index_version(spark: SparkSession, out_path: str, version: int) -> Data
     return out
 
 
-def gc_snapshots(spark: SparkSession, out_path: str, retain: int = 1) -> int:
-    """Delete backup snapshots of all but the newest ``retain`` upserts
-    (their manifests stay for lineage, flagged ``gc``). Versions older than
-    the oldest retained backup become unreadable via read_index_version —
-    the documented retention policy. Returns snapshots deleted."""
+# backup snapshots gc_snapshots keeps: the newest commits' backups
+SNAPSHOT_RETAIN = 1
+
+
+def gc_snapshots(spark: SparkSession, out_path: str) -> int:
+    """Delete backup snapshots of all but the newest SNAPSHOT_RETAIN
+    commits (upserts and compactions; their manifests stay for lineage,
+    flagged ``gc``). Versions older than the oldest retained backup become
+    unreadable via read_index_version — the documented retention policy.
+    Returns snapshots deleted."""
     manifests = _applied_manifests(spark, out_path)
-    victims = manifests[:-retain] if retain > 0 else manifests
+    victims = manifests[: max(len(manifests) - SNAPSHOT_RETAIN, 0)]
     removed = 0
     for m in victims:
         if m.get("gc"):

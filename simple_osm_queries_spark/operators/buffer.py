@@ -56,7 +56,7 @@ M_PER_DEG = 111320.0
 # point's own latitude, so only cell sizes (never correctness) depend on it
 GRID_REF_LAT = 70.0
 
-# 'auto' strategy: way sides with at most this many rows broadcast; tests
+# 'auto' strategy: inner sides with at most this many rows broadcast; tests
 # patch it to force the bucketed path
 BROADCAST_THRESHOLD = 100_000
 
@@ -83,14 +83,7 @@ def point_dist2_m(lon_a: Column, lat_a: Column, lon_b: Column, lat_b: Column) ->
 _PAD_MARGIN = 1e-9
 
 
-def _point_pairs(
-    outer: DataFrame,
-    inner: DataFrame,
-    dist_m: float,
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
+def _point_pairs(outer: DataFrame, inner: DataFrame, dist_m: float) -> DataFrame:
     """Directed pairs (a, b), a != b, with point_dist2_m(a -> b) <= dist_m²
     (metric scaled at the OUTER point's latitude).
 
@@ -117,17 +110,17 @@ def _point_pairs(
     )
     left = (
         outer.select(
-            F.col(id_col).alias("a"), F.col(lon).alias("alon"), F.col(lat).alias("alat")
+            F.col("id").alias("a"), F.col("lon").alias("alon"), F.col("lat").alias("alat")
         )
         .select("a", "alon", "alat", F.explode(xs).alias("cx"))
         .select("a", "alon", "alat", "cx", F.explode(ys).alias("cy"))
         .select("a", "alon", "alat", C.pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
     )
     right = inner.select(
-        F.col(id_col).alias("b"),
-        F.col(lon).alias("blon"),
-        F.col(lat).alias("blat"),
-        C.pack_cell(C.cell_x(F.col(lon), s_lon), C.cell_y(F.col(lat), s_lat)).alias("cell"),
+        F.col("id").alias("b"),
+        F.col("lon").alias("blon"),
+        F.col("lat").alias("blat"),
+        C.pack_cell(C.cell_x(F.col("lon"), s_lon), C.cell_y(F.col("lat"), s_lat)).alias("cell"),
     )
     d2 = point_dist2_m(F.col("alon"), F.col("alat"), F.col("blon"), F.col("blat"))
     return (
@@ -286,20 +279,17 @@ def within_buffer_node_way(
     ways: DataFrame,
     buffer_m: float,
     output: str = "node",
-    strategy: str = "auto",
-    ref_lat: float = GRID_REF_LAT,
-    cell_deg: float | None = None,
 ) -> DataFrame:
     """Ids of nodes with a way within buffer_m (output='node'), or ids of
     ways with a node within buffer_m (output='way').
 
     ``ways`` must carry (id, nodes, min_lon, min_lat, max_lon, max_lat).
-    ``strategy``: 'broadcast', 'bucketed' or 'auto' (counts the way side
-    against BROADCAST_THRESHOLD); see `_point_way_candidates`. EXISTS
+    The way side is counted against BROADCAST_THRESHOLD: broadcast at or
+    below it, bucketed above (see `_point_way_candidates`). EXISTS
     semantics = any segment row within D; the output distinct absorbs
     candidate and segment multiplicity.
     """
-    cand, segs = _point_way_candidates(nodes, ways, buffer_m, strategy, ref_lat, cell_deg)
+    cand, segs = _point_way_candidates(nodes, ways, buffer_m, "auto", GRID_REF_LAT, None)
     out_col = "nid" if output == "node" else "wid"
     return (
         _point_way_refine(cand, segs, buffer_m)
@@ -449,13 +439,10 @@ def within_buffer_way_way(
     outer_ways: DataFrame,
     inner_ways: DataFrame,
     buffer_m: float,
-    strategy: str = "auto",
-    ref_lat: float = GRID_REF_LAT,
-    cell_deg: float | None = None,
 ) -> DataFrame:
     """Outer way ids having >=1 (distinct) inner way within buffer_m meters.
 
-    Candidate pairs by ``strategy`` ('auto' counts the inner side against
+    Candidate pairs by the inner side's size (counted against
     BROADCAST_THRESHOLD):
     * broadcast (small filtered inner side) — D-expanded bbox-overlap
       predicate on a broadcast nested loop over the bbox-only inner dim.
@@ -495,7 +482,7 @@ def within_buffer_way_way(
         F.col("i_min_lon"), F.col("i_min_lat"), F.col("i_max_lon"), F.col("i_max_lat"),
     ) & (F.col("id") != F.col("iid"))
 
-    if _resolve_strategy(i, strategy) == "broadcast":
+    if _resolve_strategy(i, "auto") == "broadcast":
         pairs = o.select(
             "id", "o_min_lon", "o_min_lat", "o_max_lon", "o_max_lat"
         ).join(
@@ -507,7 +494,7 @@ def within_buffer_way_way(
         ).select("id", "iid")
         return _way_way_refine(pairs, o, i, buffer_m, small_inner=True)
 
-    s_lon, s_lat = _grid_sizes(buffer_m, ref_lat, cell_deg)
+    s_lon, s_lat = _grid_sizes(buffer_m, GRID_REF_LAT, None)
     i_cells = i.select(
         "iid", "i_min_lon", "i_min_lat", "i_max_lon", "i_max_lat",
         F.explode(

@@ -38,9 +38,10 @@ class CellHierarchy:
     children: Callable[[Column, int], Column]  # (cell at lv, lv) -> array
 
 
-def uncompact(df: DataFrame, target: int, cell_col: str, grid: CellHierarchy) -> DataFrame:
-    """All descendants at level ``target`` of every (mixed-level) cell."""
-    cur = df.select(F.col(cell_col).alias("cell"))
+def uncompact(df: DataFrame, target: int, grid: CellHierarchy) -> DataFrame:
+    """All descendants at level ``target`` of every (mixed-level) cell of
+    ``df``'s ``cell`` column."""
+    cur = df.select("cell")
     lo, hi = cur.agg(F.min(grid.level(F.col("cell"))), F.max(grid.level(F.col("cell")))).first()
     if lo is None:
         return cur
@@ -60,10 +61,10 @@ def uncompact(df: DataFrame, target: int, cell_col: str, grid: CellHierarchy) ->
     return cur
 
 
-def compact(df: DataFrame, cell_col: str, grid: CellHierarchy) -> DataFrame:
-    """Minimal covering set: complete sibling families fold into their
-    parents, cascading to coarser levels."""
-    cur = df.select(F.col(cell_col).alias("cell"))
+def compact(df: DataFrame, grid: CellHierarchy) -> DataFrame:
+    """Minimal covering set of ``df``'s ``cell`` column: complete sibling
+    families fold into their parents, cascading to coarser levels."""
+    cur = df.select("cell")
     present = {
         int(r[0]) for r in cur.select(grid.level(F.col("cell"))).distinct().collect()
     }

@@ -50,39 +50,30 @@ from simple_osm_queries_spark.operators.buffer import _point_pairs
 from simple_osm_queries_spark.operators.dedup import connected_components
 
 
-def eps_neighbor_pairs(
-    points: DataFrame,
-    eps_m: float,
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
+def eps_neighbor_pairs(points: DataFrame, eps_m: float) -> DataFrame:
     """Directed pairs (a, b), a != b, with dist(a -> b) <= eps_m under the
     query-point-scaled equirect metric — the buffer family's point-pair
-    join (`buffer._point_pairs`, exact at every latitude)."""
+    join (`buffer._point_pairs`, exact at every latitude). ``points``:
+    (id, lon, lat)."""
     if eps_m <= 0:
         raise ValueError(f"eps_m must be > 0, got {eps_m}")
-    return _point_pairs(points, points, eps_m, id_col, lon, lat)
+    return _point_pairs(points, points, eps_m)
 
 
 def dbscan(
     points: DataFrame,
     eps_m: float,
     min_pts: int,
-    id_col: str = "id",
-    lon: str = "lon",
-    lat: str = "lat",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """(id, cluster, role) for every input point. role in
-    {'core', 'border', 'noise'}; ``cluster`` = min core id of the
+    """(id, cluster, role) for every point of ``points`` (id, lon, lat).
+    role in {'core', 'border', 'noise'}; ``cluster`` = min core id of the
     component (NULL for noise). ``min_pts`` counts the point itself,
     matching the original paper's |N_eps(p)| >= MinPts."""
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
-    pts = points.select(F.col(id_col).alias("id"), lon, lat)
-    pairs = eps_neighbor_pairs(pts, eps_m, id_col="id", lon=lon, lat=lat).persist()
+    pts = points.select("id", "lon", "lat")
+    pairs = eps_neighbor_pairs(pts, eps_m).persist()
 
     # |N_eps| includes the point itself; points with zero neighbors never
     # appear in pairs — left-join the counts back so they count as 1
@@ -105,7 +96,6 @@ def dbscan(
     # singleton clusters labelled by their own id
     comp = connected_components(
         core_edges.select(F.col("a").alias("id_a"), F.col("b").alias("id_b")),
-        max_iter=max_iter,
         checkpoint_dir=checkpoint_dir,
     ).withColumnsRenamed({"node": "id", "comp": "cluster"})
     core_rows = (

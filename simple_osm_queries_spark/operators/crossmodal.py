@@ -23,9 +23,7 @@ Physical shapes:
   Shuffle budget: the phash bucket join + two caption join-backs onto
   the (bounded) pair set.
 * stock_captions = one groupBy on the caption fingerprint with an exact
-  `count_distinct(phash)` — two-phase aggregate, partial-combinable;
-  at extreme scale swap ``exact=False`` for approx_count_distinct and
-  keep the same contract minus exactness.
+  `count_distinct(phash)` — two-phase aggregate, partial-combinable.
 
 The reference has no multimodal notion at all (its records are tagged
 points, /root/reference/src/index/grid_reader.go); both operators are
@@ -37,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.operators.dedup import phash_near_dups, shingles_col
+from simple_osm_queries_spark.operators.dedup import SHINGLE_N, phash_near_dups, shingles_col
 
 
 def caption_jaccard_col(sh_a: Column, sh_b: Column) -> Column:
@@ -57,25 +55,23 @@ def image_caption_conflicts(
     caption_col: str = "caption",
     max_hamming: int = 3,
     max_caption_jaccard: float = 0.5,
-    ngram_n: int = 3,
-    chunks: int = 4,
 ) -> DataFrame:
     """(id_a, id_b, hamming, caption_jaccard) for pairs with near-identical
     images and disagreeing captions. ``id_a < id_b``; a NULL caption never
     conflicts (its Jaccard is NULL and the filter drops the pair — flag
-    null captions separately, they are a different defect).
-    ``max_hamming <= chunks - 1`` (pigeonhole completeness of the banded
-    candidate generation, enforced by `dedup.hamming_pairs`)."""
+    null captions separately, they are a different defect). Captions
+    compare as `dedup.SHINGLE_N`-word shingles.
+    ``max_hamming <= dedup.HAMMING_CHUNKS - 1`` (pigeonhole completeness of
+    the banded candidate generation, enforced by `dedup.hamming_pairs`)."""
     pairs = phash_near_dups(
         df.select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph")),
         id_col="id",
         phash_col="ph",
         max_hamming=max_hamming,
-        chunks=chunks,
     )
     caps = df.filter(F.col(caption_col).isNotNull()).select(
         F.col(id_col).alias("id"),
-        shingles_col(F.col(caption_col), ngram_n).alias("sh"),
+        shingles_col(F.col(caption_col), SHINGLE_N).alias("sh"),
     )
     a = caps.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = caps.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -94,21 +90,14 @@ def stock_captions(
     phash_col: str = "phash",
     caption_col: str = "caption",
     min_images: int = 2,
-    exact: bool = True,
 ) -> DataFrame:
     """(caption_fp, n_rows, n_images, example_id) for caption fingerprints
-    attached to >= ``min_images`` distinct images. ``caption_fp`` is
-    md5(caption) — the same fingerprint rule as `dedup.exact_dups`, so the
-    two reports join. ``exact=False`` swaps the distinct-image count for
-    approx_count_distinct (HLL) — the 100-TB setting where an exact
-    distinct expand is not worth it. NULL captions are excluded (the
-    missing-label defect, not the shared-label one)."""
+    attached to >= ``min_images`` distinct images (an exact distinct
+    count). ``caption_fp`` is md5(caption) — the same fingerprint rule as
+    `dedup.exact_dups`, so the two reports join. NULL captions are
+    excluded (the missing-label defect, not the shared-label one)."""
     df = df.filter(F.col(caption_col).isNotNull())
-    n_images = (
-        F.count_distinct(F.col(phash_col))
-        if exact
-        else F.approx_count_distinct(F.col(phash_col))
-    )
+    n_images = F.count_distinct(F.col(phash_col))
     return (
         df.groupBy(F.md5(F.col(caption_col)).alias("caption_fp"))
         .agg(

@@ -100,16 +100,17 @@ def shingles_udf(text: Column, n: int) -> Column:
 
 # --- n-gram jaccard (inverted index; SQL-expressible) --------------------------
 
+# word n-gram size of every shingle-based operator (jaccard and MinHash)
+SHINGLE_N = 3
+
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
 ) -> DataFrame:
-    """All pairs with Jaccard(shingles_a, shingles_b) >= threshold.
+    """All pairs of ``df`` (doc_id, text) with Jaccard(shingles_a,
+    shingles_b) >= threshold over SHINGLE_N-word shingles.
 
     Candidates come from sharing at least one shingle (inverted index), so
     recall is exact for threshold > 0. ``max_df`` drops shingles occurring
@@ -140,7 +141,7 @@ def ngram_jaccard_pairs(
     # and the candidate-volume estimate; the sized filtered index feeds
     # both sides of the pair join
     raw = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles_udf(F.col(text_col), n)).alias("sh")
+        F.col("doc_id").alias("id"), F.explode(shingles_udf(F.col("text"), SHINGLE_N)).alias("sh")
     ).persist()
     handles = [raw]
     cnts = raw.groupBy("sh").count()
@@ -372,9 +373,7 @@ def _band_buckets(sigs: np.ndarray, bands: int) -> np.ndarray:
     return acc.view(np.int64)
 
 
-def minhash_sig_buckets_py(
-    text: Column, n: int = 3, num_perm: int = 64, bands: int = 16
-) -> Column:
+def minhash_sig_buckets_py(text: Column, num_perm: int = 64, bands: int = 16) -> Column:
     """struct<sig: binary, buckets: array<long>> — the signature (packed
     little-endian uint32, num_perm values) AND its LSH band bucket keys
     from one Arrow pass. Fuses what r4 did as 16
@@ -390,7 +389,7 @@ def minhash_sig_buckets_py(
     def _sigb(texts: pd.Series) -> pd.DataFrame:
         if not len(texts):
             return pd.DataFrame({"sig": [], "buckets": []})
-        mins = _minhash_batch(texts, n, pa, pb)
+        mins = _minhash_batch(texts, SHINGLE_N, pa, pb)
         buckets = _band_buckets(mins, bands)
         # signature ships as packed little-endian uint32 — halves the
         # Arrow/persist/shuffle footprint vs array<long>. _MH_PRIME is
@@ -427,29 +426,27 @@ def _jaccard_est_binary(num_perm: int) -> "Column":
     return _est.asNondeterministic()
 
 
-def md5_shingle_hashes_col(text: Column, n: int = 3) -> Column:
+def md5_shingle_hashes_col(text: Column) -> Column:
     """32-bit shingle hashes from the first 8 hex chars of md5 — pure JVM
     column math AND reproducible in ANSI SQL (DuckDB:
     CAST('0x'||substr(md5(sh),1,8) AS BIGINT)), unlike crc32/xxhash64.
     Slower than the crc32 numpy path; used where an external oracle must
     recompute identical signatures."""
     return F.transform(
-        shingles_col(text, n),
+        shingles_col(text, SHINGLE_N),
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
     )
 
 
 def minhash_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
     shingle_hash: str = "crc32",
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with signature-based Jaccard estimate.
+    """MinHash-LSH near-dup pairs of ``df`` (doc_id, text) with
+    signature-based Jaccard estimate over SHINGLE_N-word shingles.
 
     ``shingle_hash``: 'crc32' (production — whole pipeline in one Arrow
     UDF, candidates join on its fused splitmix64 band keys) or 'md5'
@@ -465,9 +462,9 @@ def minhash_near_dups(
         # fused fast path: signature AND band buckets in one Arrow pass;
         # candidates join on ONE precomputed long key instead of 16
         # interpreted slice/concat/xxhash64 expressions (VERDICT r4 #7)
-        sb_col = minhash_sig_buckets_py(F.col(text_col), n, num_perm, bands)
+        sb_col = minhash_sig_buckets_py(F.col("text"), num_perm, bands)
         signed = df.select(
-            F.col(id_col).alias("id"), sb_col.alias("sb")
+            F.col("doc_id").alias("id"), sb_col.alias("sb")
         ).select(
             "id", F.col("sb.sig").alias("sig"), F.col("sb.buckets").alias("buckets")
         ).persist()
@@ -480,8 +477,8 @@ def minhash_near_dups(
             .distinct()
         )
     elif shingle_hash == "md5":
-        sig = minhash_from_hashes_udf(md5_shingle_hashes_col(F.col(text_col), n), num_perm)
-        signed = df.select(F.col(id_col).alias("id"), sig.alias("sig")).persist()
+        sig = minhash_from_hashes_udf(md5_shingle_hashes_col(F.col("text")), num_perm)
+        signed = df.select(F.col("doc_id").alias("id"), sig.alias("sig")).persist()
         pairs = lsh_candidate_pairs(signed, "id", "sig", bands, num_perm=num_perm)
     else:
         raise ValueError(f"unknown shingle_hash {shingle_hash!r} (crc32|md5)")
@@ -510,15 +507,20 @@ def minhash_near_dups(
 # --- simhash ---------------------------------------------------------------------
 
 
-def simhash_from_word_hashes(word_hashes: Column, bits: int = 64) -> Column:
-    """Bit-vote reduction: sign of (popcount*2 - n) per bit position, packed
-    into a long — the md5 gate twin's vote step over JVM word hashes.
+# signature width of the md5 SimHash twin: 15 md5 hex chars per word hash
+MD5_SIM_BITS = 60
+
+
+def simhash_from_word_hashes(word_hashes: Column) -> Column:
+    """Bit-vote reduction: sign of (popcount*2 - n) per bit position over
+    MD5_SIM_BITS bits, packed into a long — the md5 gate twin's vote step
+    over JVM word hashes.
 
     Vectorized across the whole Arrow batch: flatten every row's hashes
     into one array, unpack bits as a (total_words x bits) matrix, and
     add.reduceat per row — no per-row (let alone per-bit) Python loop
     (the looped form measured 23k docs/s at 1M docs; this is ~8x)."""
-    shifts = np.arange(bits, dtype=np.uint64)
+    shifts = np.arange(MD5_SIM_BITS, dtype=np.uint64)
     weights = np.uint64(1) << shifts
 
     @F.pandas_udf(T.LongType())
@@ -599,7 +601,7 @@ def simhash_py(text: Column) -> Column:
     return _sim(text)
 
 
-def simhash_md5_col(text: Column, bits: int = 60) -> Column:
+def simhash_md5_col(text: Column) -> Column:
     """SQL-reproducible SimHash: 60-bit word hashes from the first 15 md5
     hex chars (DuckDB: CAST('0x'||substr(md5(w),1,15) AS BIGINT)). Same
     estimator as the crc32 production form, different hash constants;
@@ -608,7 +610,7 @@ def simhash_md5_col(text: Column, bits: int = 60) -> Column:
         words_col(text),
         lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
     )
-    return simhash_from_word_hashes(word_hashes, bits)
+    return simhash_from_word_hashes(word_hashes)
 
 
 def _chunk_bands(signed: DataFrame, chunks: int, width: int, *carry: str) -> DataFrame:
@@ -632,32 +634,37 @@ def _chunk_bands(signed: DataFrame, chunks: int, width: int, *carry: str) -> Dat
     ).select("id", *carry, F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
 
 
+# signature chunks of the Hamming candidates: pigeonhole-complete for
+# max_hamming <= HAMMING_CHUNKS - 1; tests patch it for wider searches
+HAMMING_CHUNKS = 4
+
+
 def hamming_pairs(
     signed: DataFrame,
     id_col: str = "id",
     sig_col: str = "sim",
     max_hamming: int = 3,
-    chunks: int = 4,
     bits: int = 64,
 ) -> DataFrame:
     """Pairs with Hamming(sig) <= max_hamming over a 64-bit signature column.
 
-    Candidates: equal (bits/chunks)-bit chunk in any of ``chunks`` positions
-    — pigeonhole-complete for max_hamming <= chunks-1. Shared by SimHash
-    (text) and pHash (image) near-dup detection.
+    Candidates: equal (bits/HAMMING_CHUNKS)-bit chunk in any of the
+    HAMMING_CHUNKS positions — pigeonhole-complete for max_hamming <=
+    HAMMING_CHUNKS-1. Shared by SimHash (text) and pHash (image) near-dup
+    detection.
 
     The signature plan is persisted (the self-join would recompute its UDF
     for both sides) and the handle rides on the result — long-lived callers
     release it with ``caching.unpersist_intermediates(result)`` after
     materializing, like the rest of the dedup family.
     """
-    assert max_hamming <= chunks - 1, "pigeonhole completeness requires max_hamming < chunks"
+    assert max_hamming < HAMMING_CHUNKS, "pigeonhole completeness requires max_hamming < chunks"
     # persisted: the self-join consumes the signature plan TWICE, and the
     # signature usually carries the Arrow bit-vote UDF (simhash/phash) —
     # without the persist the UDF recomputes for both join sides (measured
     # ~45% of simhash_near_dups wall time at 1M docs)
     sh = signed.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sim")).persist()
-    chunked = _chunk_bands(sh, chunks, bits // chunks, "sim")
+    chunked = _chunk_bands(sh, HAMMING_CHUNKS, bits // HAMMING_CHUNKS, "sim")
     a = chunked.select(F.col("id").alias("id_a"), F.col("sim").alias("sim_a"), "chunk", "val")
     b = chunked.select(F.col("id").alias("id_b"), F.col("sim").alias("sim_b"), "chunk", "val")
     out = (
@@ -674,25 +681,23 @@ def hamming_pairs(
 
 def simhash_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
-    chunks: int = 4,
     word_hash: str = "crc32",
 ) -> DataFrame:
-    """Text near-dup pairs with Hamming(simhash) <= max_hamming.
+    """Text near-dup pairs of ``df`` (doc_id, text) with Hamming(simhash)
+    <= max_hamming.
 
     ``word_hash``: 'crc32' (production — fused single-UDF pipeline,
     VERDICT r4 #7) or 'md5' (SQL-reproducible 60-bit gate twin — see
     simhash_md5_col)."""
     if word_hash == "crc32":
-        sim, bits = simhash_py(F.col(text_col)), 64
+        sim, bits = simhash_py(F.col("text")), 64
     elif word_hash == "md5":
-        sim, bits = simhash_md5_col(F.col(text_col)), 60
+        sim, bits = simhash_md5_col(F.col("text")), MD5_SIM_BITS
     else:
         raise ValueError(f"unknown word_hash {word_hash!r} (crc32|md5)")
-    sh = df.select(F.col(id_col).alias("id"), sim.alias("sim"))
-    return hamming_pairs(sh, "id", "sim", max_hamming, chunks, bits=bits)
+    sh = df.select(F.col("doc_id").alias("id"), sim.alias("sim"))
+    return hamming_pairs(sh, "id", "sim", max_hamming, bits=bits)
 
 
 def phash_near_dups(
@@ -700,13 +705,12 @@ def phash_near_dups(
     id_col: str = "image_id",
     phash_col: str = "phash",
     max_hamming: int = 3,
-    chunks: int = 4,
 ) -> DataFrame:
     """Image near-dup pairs on a perceptual-hash column (the input_hint
     `phash: int64`): chunk-banded candidates + exact popcount verify —
     the image twin of simhash_near_dups, all integer column math."""
     sh = df.select(F.col(id_col).alias("id"), F.col(phash_col).alias("sim"))
-    return hamming_pairs(sh, "id", "sim", max_hamming, chunks)
+    return hamming_pairs(sh, "id", "sim", max_hamming)
 
 
 # --- embedding cosine near-dup -----------------------------------------------------
@@ -753,22 +757,26 @@ def pairwise_cosine_udf() -> "F.Column":
     return _cos.asNondeterministic()
 
 
-def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
-    """(bits, dim) deterministic +/-1 hyperplane matrix for ``seed`` — the
-    one seed -> planes rule shared by the signature UDF and query-side
-    signatures (similarity.cosine_topk_ann)."""
-    return np.random.RandomState(seed).choice([-1.0, 1.0], size=(bits, dim))
+# seed of the random hyperplanes of every embedding LSH signature
+HYPERPLANE_SEED = 42
 
 
-def hyperplane_signature_col(vec: Column, dim: int, bits: int = 32, seed: int = 42) -> Column:
+def _hyperplanes(dim: int, bits: int) -> np.ndarray:
+    """(bits, dim) deterministic +/-1 hyperplane matrix from
+    HYPERPLANE_SEED — the one planes rule shared by the signature UDF and
+    query-side signatures (similarity.cosine_topk_ann)."""
+    return np.random.RandomState(HYPERPLANE_SEED).choice([-1.0, 1.0], size=(bits, dim))
+
+
+def hyperplane_signature_col(vec: Column, dim: int, bits: int = 32) -> Column:
     """Random-hyperplane LSH signature as a long — hyperplanes come from
-    :func:`_hyperplanes` (seed, bit, dim index).
+    :func:`_hyperplanes` (bit, dim index).
 
     One numpy matmul per Arrow batch: the previous per-bit column form ran
     ``bits`` interpreted F.aggregate folds per row (measured 74k rows/s at
     1M x 64d x 32 bits; the matmul path is ~20x). Supports bits up to 64
     (bit 63 wraps into the sign via the uint64 view)."""
-    planes = _hyperplanes(dim, bits, seed)
+    planes = _hyperplanes(dim, bits)
     weights = np.uint64(1) << np.arange(bits, dtype=np.uint64)
 
     @F.pandas_udf(T.LongType())
@@ -786,6 +794,12 @@ def hyperplane_signature_col(vec: Column, dim: int, bits: int = 32, seed: int = 
     return _sig.asNondeterministic()(vec)
 
 
+# vector length of embedding_near_dups' input
+EMBEDDING_DIM = 64
+# embedding LSH buckets larger than this are dropped from candidate
+# generation; tests patch it to check the cap
+EMBEDDING_MAX_BUCKET = 100_000
+
 # size guard of the embedding verify's broadcast hint (plan-size estimate of
 # the (id, vector) table); tests patch it to 0 to force the shuffled joins
 VERIFY_BROADCAST_BYTES = 256 * 1024 * 1024
@@ -795,11 +809,9 @@ def embedding_near_dups(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     threshold: float = 0.9,
     sig_bits: int = 64,
     chunks: int = 4,
-    max_bucket: int | None = 100_000,
 ) -> DataFrame:
     """Cosine >= threshold pairs: hyperplane-LSH chunk candidates, exact
     cosine verification. Approximate recall (LSH), exact precision
@@ -824,27 +836,26 @@ def embedding_near_dups(
     2^w values, and RANDOM vector pairs collide per band with prob ~2^-w —
     the old 8-bit default went quadratic at 1M rows (measured: ~8e9
     candidate pairs -> executor OOM). Defaults are now 16-bit bands, and
-    ``max_bucket`` drops buckets larger than the cap from candidate
-    generation entirely (an oversized bucket is random collisions, not
-    near-dups — the LSH analogue of ngram max_df; None disables).
+    buckets larger than EMBEDDING_MAX_BUCKET leave candidate generation
+    entirely (an oversized bucket is random collisions, not near-dups —
+    the LSH analogue of ngram max_df).
     """
     sh = df.select(
         F.col(id_col).alias("id"),
-        hyperplane_signature_col(F.col(vec_col), dim, sig_bits).alias("sim"),
+        hyperplane_signature_col(F.col(vec_col), EMBEDDING_DIM, sig_bits).alias("sim"),
     )
     # NOT persisted (r6 A/B): the hyperplane matmul UDF is cheap enough
     # that recomputing it per consumer ties with cache materialization
     # (3.1 vs 3.5 s at 250k x 64-d); handles stay for interface parity.
     handles: list = []
     chunked = _chunk_bands(sh, chunks, sig_bits // chunks)
-    if max_bucket is not None:
-        small = (
-            chunked.groupBy("chunk", "val")
-            .count()
-            .filter(F.col("count") <= max_bucket)
-            .select("chunk", "val")
-        )
-        chunked = chunked.join(small, ["chunk", "val"], "left_semi")
+    small = (
+        chunked.groupBy("chunk", "val")
+        .count()
+        .filter(F.col("count") <= EMBEDDING_MAX_BUCKET)
+        .select("chunk", "val")
+    )
+    chunked = chunked.join(small, ["chunk", "val"], "left_semi")
     a = chunked.select(F.col("id").alias("id_a"), "chunk", "val")
     b = chunked.select(F.col("id").alias("id_b"), "chunk", "val")
     pairs = (
@@ -887,14 +898,14 @@ def embedding_near_dups(
 # --- near-dup components (pairs -> groups -> survivors) ------------------------
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, comp) for every node in ``pairs`` — comp = min id reachable.
+# rounds before connected_components gives up (2^25-diameter coverage);
+# tests patch it to force the non-convergence error
+CC_MAX_ITER = 25
+
+
+def connected_components(pairs: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """(node, comp) for every node in ``pairs`` (id_a, id_b) — comp = min
+    id reachable.
 
     The standard last step of a near-dup pipeline: candidate pairs form an
     undirected graph; each connected component is one duplicate group and
@@ -926,9 +937,9 @@ def connected_components(
     Superseded rounds are unpersisted as soon as the next round
     materializes, so storage stays O(1) rounds, not O(log diameter).
 
-    Raises RuntimeError if labels still change after ``max_iter`` rounds
-    (2^25-diameter coverage at the default — a hit means pathological input
-    that must not silently return half-propagated components).
+    Raises RuntimeError if labels still change after CC_MAX_ITER rounds
+    (a hit means pathological input that must not silently return
+    half-propagated components).
     """
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
@@ -954,7 +965,7 @@ def connected_components(
         except Exception:  # pragma: no cover — plan shape drift: leak, don't crash
             df.unpersist()
 
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     # all input nodes (star rewiring can drop a component's ROOT from the
     # edge table once the component is a star - it must still get a label)
     # lazy: materialized by the final labels checkpoint (the only consumer)
@@ -1031,7 +1042,7 @@ def connected_components(
         return bad == 0
 
     converged = _is_star_forest(edges)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         if converged:
             break
         # LARGE-STAR: per center c, neighbors n > c rewire to
@@ -1079,7 +1090,7 @@ def connected_components(
         g1.unpersist()
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            f"connected_components did not converge in {CC_MAX_ITER} "
             "large-star/small-star rounds; refusing to return partially "
             "contracted components"
         )

@@ -69,10 +69,10 @@ def way_length_m_col(nodes: Column) -> Column:
     return F.when(n >= 2, total).otherwise(F.lit(0.0))
 
 
-def way_length_m(ways: DataFrame, nodes_col: str = "nodes", id_col: str = "id") -> DataFrame:
+def way_length_m(ways: DataFrame) -> DataFrame:
     """(id, length_m) for every way — see :func:`way_length_m_col`."""
     return ways.select(
-        F.col(id_col).alias("id"), way_length_m_col(F.col(nodes_col)).alias("length_m")
+        "id", way_length_m_col(F.col("nodes")).alias("length_m")
     )
 
 
@@ -99,10 +99,10 @@ def ring_area_m2_col(ring: Column) -> Column:
     return F.when(n >= 3, area).otherwise(F.lit(0.0))
 
 
-def ring_area_m2(ways: DataFrame, nodes_col: str = "nodes", id_col: str = "id") -> DataFrame:
+def ring_area_m2(ways: DataFrame) -> DataFrame:
     """(id, area_m2) treating each way's node list as a polygon ring."""
     return ways.select(
-        F.col(id_col).alias("id"), ring_area_m2_col(F.col(nodes_col)).alias("area_m2")
+        "id", ring_area_m2_col(F.col("nodes")).alias("area_m2")
     )
 
 

@@ -52,13 +52,14 @@ _H3 = cell_sets.CellHierarchy(
 )
 
 
-def uncompact_cells(df: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
-    """All descendants at ``res`` of every (possibly mixed-resolution) cell."""
-    return cell_sets.uncompact(df, res, cell_col, _H3)
+def uncompact_cells(df: DataFrame, res: int) -> DataFrame:
+    """All descendants at ``res`` of every (possibly mixed-resolution) cell
+    of ``df``'s ``cell`` column."""
+    return cell_sets.uncompact(df, res, _H3)
 
 
-def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:
+def compact_cells(df: DataFrame) -> DataFrame:
     """Minimal covering set: complete sibling families fold into parents,
     cascading to coarser resolutions. Level-sparse: a same-res input costs
     one groupBy round instead of max_res eager checkpoints."""
-    return cell_sets.compact(df, cell_col, _H3)
+    return cell_sets.compact(df, _H3)

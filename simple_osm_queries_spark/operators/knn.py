@@ -95,13 +95,13 @@ def haversine_m(qlon, qlat, plon, plat):
 # ---------------------------------------------------------------------------
 
 
-def _query_side(queries: DataFrame, k: int | None) -> DataFrame:
-    """(qid, qlon, qlat, k) from ``queries`` (qid, lon, lat[, k])."""
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(qid, qlon, qlat, k) from ``queries`` (qid, lon, lat, k)."""
     return queries.select(
         "qid",
         F.col("lon").alias("qlon"),
         F.col("lat").alias("qlat"),
-        (F.lit(k) if k is not None else F.col("k")).alias("k"),
+        "k",
     )
 
 
@@ -133,14 +133,12 @@ def _topk(cand: DataFrame, dist_col: str) -> DataFrame:
     )
 
 
-def _brute(
-    points: DataFrame, queries: DataFrame, k: int | None, dist_col: str, dist
-) -> DataFrame:
+def _brute(points: DataFrame, queries: DataFrame, dist_col: str, dist) -> DataFrame:
     """Exact kNN under ``dist``: the query side is broadcast, each point
     partition streams independently (no shuffle until the top-k).
     (qid, id, lon, lat, <dist_col>, rank)."""
     cand = points.select("id", "lon", "lat").crossJoin(
-        F.broadcast(_query_side(queries, k))
+        F.broadcast(_query_side(queries))
     )
     return _topk(_with_dist(cand, dist_col, dist), dist_col).select(
         "qid", "id", "lon", "lat", dist_col, "rank"
@@ -150,7 +148,6 @@ def _brute(
 def _candidate_topk(
     points: DataFrame,
     queries: DataFrame,
-    k: int | None,
     point_cell,
     cover,
     dist_col: str,
@@ -161,7 +158,7 @@ def _candidate_topk(
     column; ``cover``: array column of the cells covering each query's disc
     (over qlon/qlat); ``cap``: the largest ``dist_col`` value inside the
     disc (the squared radius for the squared metrics)."""
-    qcells = _query_side(queries, k).withColumn("cell", F.explode(cover))
+    qcells = _query_side(queries).withColumn("cell", F.explode(cover))
     pts = points.select("id", "lon", "lat", point_cell.alias("cell"))
     # the exploded query-cell side is tiny (|queries| * cover cells) but comes
     # from a local relation Spark won't size-estimate — without the explicit
@@ -221,15 +218,14 @@ def _doubling_loop(queries: DataFrame, radii, run_round, brute) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def knn_brute(points: DataFrame, queries: DataFrame, k: int | None = None) -> DataFrame:
-    """Exact kNN; query side broadcast. ``queries``: (qid, lon, lat[, k])."""
-    return _brute(points, queries, k, "dist2", _dist2)
+def knn_brute(points: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact kNN; query side broadcast. ``queries``: (qid, lon, lat, k)."""
+    return _brute(points, queries, "dist2", _dist2)
 
 
 def knn_kring(
     points: DataFrame,
     queries: DataFrame,
-    k: int | None = None,
     ring: int = 1,
     cell_w: float = C.DEFAULT_CELL_W,
     cell_h: float = C.DEFAULT_CELL_H,
@@ -256,7 +252,6 @@ def knn_kring(
     return _candidate_topk(
         points,
         queries,
-        k,
         C.cell_of(F.col("lon"), F.col("lat"), cell_w, cell_h),
         ring_cells,
         "dist2",
@@ -265,27 +260,29 @@ def knn_kring(
     )
 
 
+# largest ring knn_kring_exact doubles to before it brute-forces the rest
+KRING_MAX_RING = 64
+
+
 def knn_kring_exact(
     points: DataFrame,
     queries: DataFrame,
-    k: int | None = None,
     ring: int = 1,
-    max_ring: int = 64,
     cell_w: float = C.DEFAULT_CELL_W,
     cell_h: float = C.DEFAULT_CELL_H,
 ) -> DataFrame:
-    """Doubles the ring (up to ``max_ring``) until every query
+    """Doubles the ring (up to ``KRING_MAX_RING``) until every query
     is guaranteed exact; queries still inexact past it are brute-forced.
     Each round only recomputes the still-inexact queries (usually a
     shrinking handful near sparse regions)."""
     rings = itertools.takewhile(
-        lambda r: r <= max_ring, (ring * 2**i for i in itertools.count())
+        lambda r: r <= KRING_MAX_RING, (ring * 2**i for i in itertools.count())
     )
     return _doubling_loop(
         queries,
         rings,
-        lambda pending, r: knn_kring(points, pending, k, r, cell_w, cell_h),
-        lambda pending: knn_brute(points, pending, k),
+        lambda pending, r: knn_kring(points, pending, r, cell_w, cell_h),
+        lambda pending: knn_brute(points, pending),
     )
 
 
@@ -562,7 +559,6 @@ def _search_disc(
 def knn_h3(
     points: DataFrame,
     queries: DataFrame,
-    k: int | None = None,
     res: int = 8,
     disc_deg: float | None = None,
     cell_col: str | None = None,
@@ -613,8 +609,8 @@ def knn_h3(
         if max_abs_lat is not None and float(max_abs_lat) >= polar_cut:
             polar = queries.filter(F.abs(F.col("lat")) >= F.lit(polar_cut))
             rest = queries.filter(F.abs(F.col("lat")) < F.lit(polar_cut))
-            return knn_h3(points, rest, k, res, disc, cell_col).unionByName(
-                _brute(points, polar, k, "dist2", _equirect_dist2)
+            return knn_h3(points, rest, res, disc, cell_col).unionByName(
+                _brute(points, polar, "dist2", _equirect_dist2)
                 .withColumn("exact", F.lit(True))
             )
         sample = _equirect_disc_sampler(res, disc)
@@ -633,15 +629,13 @@ def knn_h3(
         else C.cell_h3(F.col("lon"), F.col("lat"), res)
     )
     cover = _h3_disc_cells_col(F.col("qlon"), F.col("qlat"), res, sample)
-    return _candidate_topk(points, queries, k, point_cell, cover, dist_col, dist, cap)
+    return _candidate_topk(points, queries, point_cell, cover, dist_col, dist, cap)
 
 
 def knn_h3_exact(
     points: DataFrame,
     queries: DataFrame,
-    k: int | None = None,
     res: int = 8,
-    disc_deg: float | None = None,
     max_doublings: int = 6,
     metric: str = "equirect",
     disc_m: float | None = None,
@@ -650,8 +644,9 @@ def knn_h3_exact(
     re-query only the still-inexact queries with a doubled disc; brute-force
     the pathological remainder. With ``metric='haversine'`` the loop doubles
     ``disc_m`` (meters) and the fallback is the exact haversine brute path —
-    globally correct results at any latitude/longitude."""
-    disc = _search_disc(metric, res, disc_deg, disc_m)
+    globally correct results at any latitude/longitude. The equirect loop
+    starts at `knn_h3`'s default disc."""
+    disc = _search_disc(metric, res, None, disc_m)
     if metric == "haversine":
         # the wrap-aware sampler serves any disc whose row count fits the
         # budget; half the planet's arc is the natural cap beyond which
@@ -664,7 +659,7 @@ def knn_h3_exact(
 
     def run_round(pending: DataFrame, d: float) -> DataFrame | None:
         try:
-            return knn_h3(points, pending, k, res, metric=metric, **{radius_kw: d})
+            return knn_h3(points, pending, res, metric=metric, **{radius_kw: d})
         except ValueError:
             return None  # plan-time budget pre-check fired: brute-force
 
@@ -676,5 +671,5 @@ def knn_h3_exact(
         queries,
         discs,
         run_round,
-        lambda pending: _brute(points, pending, k, dist_col, dist),
+        lambda pending: _brute(points, pending, dist_col, dist),
     )

@@ -52,14 +52,15 @@ _S2 = cell_sets.CellHierarchy(
 )
 
 
-def uncompact_cells(df: DataFrame, level: int, cell_col: str = "cell") -> DataFrame:
-    """All descendants at ``level`` of every (possibly mixed-level) cell."""
-    return cell_sets.uncompact(df, level, cell_col, _S2)
+def uncompact_cells(df: DataFrame, level: int) -> DataFrame:
+    """All descendants at ``level`` of every (possibly mixed-level) cell of
+    ``df``'s ``cell`` column."""
+    return cell_sets.uncompact(df, level, _S2)
 
 
-def compact_cells(df: DataFrame, cell_col: str = "cell") -> DataFrame:
+def compact_cells(df: DataFrame) -> DataFrame:
     """Minimal covering set: complete 4-sibling families fold into parents,
     cascading to coarser levels. Level-sparse: a same-level input set costs
     ONE groupBy round instead of max_level eager checkpoints (measured
     13.7s -> ~1s on the gate's level-21 roundtrip)."""
-    return cell_sets.compact(df, cell_col, _S2)
+    return cell_sets.compact(df, _S2)

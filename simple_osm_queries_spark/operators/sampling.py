@@ -42,15 +42,13 @@ def deterministic_sample(
     return df.filter(hash_uniform(F.col(key), salt) < F.lit(rate))
 
 
-def split(
-    df: DataFrame, fractions: dict, key: str, salt: str = ""
-) -> DataFrame:
+def split(df: DataFrame, fractions: dict, key: str) -> DataFrame:
     """Disjoint named splits from one hash: adds a ``split`` column, drops
     rows beyond sum(fractions). fractions: {'train': .8, 'val': .1, ...}."""
     total = sum(fractions.values())
     if total > 1.0 + 1e-12:
         raise ValueError(f"fractions sum to {total} > 1")
-    u = hash_uniform(F.col(key), salt)
+    u = hash_uniform(F.col(key))
     acc = 0.0
     conds = []
     for name, frac in fractions.items():

@@ -60,24 +60,19 @@ _UNROLL_MAX_VERTICES = 160
 _MASK_BITS = 64
 
 
-def bbox_join(
-    points: DataFrame,
-    boxes: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    how: str = "inner",
-) -> DataFrame:
-    """Join points to every query bbox containing them (inclusive bounds).
+def bbox_join(points: DataFrame, boxes: DataFrame) -> DataFrame:
+    """Inner-join points (lon, lat) to every query bbox containing them
+    (inclusive bounds).
 
     ``boxes`` must carry (qid, min_lon, min_lat, max_lon, max_lat); it is
     broadcast — a theta join on range predicates would otherwise be a
     cartesian shuffle.
     """
     cond = G.point_in_bbox(
-        points[lon], points[lat],
+        points["lon"], points["lat"],
         boxes["min_lon"], boxes["min_lat"], boxes["max_lon"], boxes["max_lat"],
     )
-    return points.join(F.broadcast(boxes), cond, how)
+    return points.join(F.broadcast(boxes), cond, "inner")
 
 
 def _ring_edges(ring: Column) -> Column:
@@ -188,17 +183,14 @@ def point_in_polygon_mask_np(
 
 
 def _literal_refine(
-    points: DataFrame,
-    polygons: list[tuple[int, list[tuple[float, float]]]],
-    lon: str,
-    lat: str,
+    points: DataFrame, polygons: list[tuple[int, list[tuple[float, float]]]]
 ) -> DataFrame:
     """points + qid: one row per (point, catalog entry containing it).
 
     Unrolled codegen ray casts for a small catalog, else the numpy bitmask:
     one int64 word per 64 entries, all words in one projection, decoded by
     (word, bit). A catalog of <= 64 entries has the single ``__pipmask``."""
-    x, y = points[lon], points[lat]
+    x, y = points["lon"], points["lat"]
     if (
         len(polygons) <= _UNROLL_MAX_ENTRIES
         and sum(len(r) for _, r in polygons) <= _UNROLL_MAX_VERTICES
@@ -241,12 +233,9 @@ def _literal_refine(
 
 
 def point_in_polygon_literal_join(
-    points: DataFrame,
-    polygons: list[tuple[int, list[tuple[float, float]]]],
-    lon: str = "lon",
-    lat: str = "lat",
+    points: DataFrame, polygons: list[tuple[int, list[tuple[float, float]]]]
 ) -> DataFrame:
-    """Join points against a literal polygon catalog in ONE scan.
+    """Join points (lon, lat) against a literal polygon catalog in ONE scan.
 
     Matches come out as (point columns..., qid) rows. One pass over the data
     regardless of catalog size — a per-polygon union would re-scan the table
@@ -256,8 +245,8 @@ def point_in_polygon_literal_join(
     boundary). Refine: ``_literal_refine``."""
     assert polygons, "empty polygon list"
     union = _ring_bbox([p for _, ring in polygons for p in ring])
-    points = points.filter(G.point_in_bbox(points[lon], points[lat], *union))
-    return _literal_refine(points, polygons, lon, lat)
+    points = points.filter(G.point_in_bbox(points["lon"], points["lat"], *union))
+    return _literal_refine(points, polygons)
 
 
 def polygon_bounds(ring: Column) -> tuple[Column, Column, Column, Column]:
@@ -266,41 +255,27 @@ def polygon_bounds(ring: Column) -> tuple[Column, Column, Column, Column]:
     return F.array_min(lons), F.array_min(lats), F.array_max(lons), F.array_max(lats)
 
 
-def point_in_polygon_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    ring: str = "ring",
-    how: str = "inner",
-) -> DataFrame:
-    """Join points to the polygons containing them.
+def point_in_polygon_join(points: DataFrame, polygons: DataFrame) -> DataFrame:
+    """Inner-join points (lon, lat) to the polygons containing them.
 
     ``polygons``: (qid, ring: array<struct<lon,lat>>). The polygon side is
     broadcast with precomputed bounds; the bbox prefilter prunes candidates
     before the O(vertices) exact test — the cell-prefilter + refine shape
     the north rule asks for.
     """
-    mnx, mny, mxx, mxy = polygon_bounds(F.col(ring))
+    mnx, mny, mxx, mxy = polygon_bounds(F.col("ring"))
     polys = polygons.withColumns(
         {"__mnx": mnx, "__mny": mny, "__mxx": mxx, "__mxy": mxy}
     )
     cond = G.point_in_bbox(
-        points[lon], points[lat], polys["__mnx"], polys["__mny"], polys["__mxx"], polys["__mxy"]
-    ) & point_in_polygon_col(points[lon], points[lat], polys[ring])
-    return points.join(F.broadcast(polys), cond, how).drop("__mnx", "__mny", "__mxx", "__mxy")
+        points["lon"], points["lat"], polys["__mnx"], polys["__mny"], polys["__mxx"], polys["__mxy"]
+    ) & point_in_polygon_col(points["lon"], points["lat"], polys["ring"])
+    return points.join(F.broadcast(polys), cond, "inner").drop("__mnx", "__mny", "__mxx", "__mxy")
 
 
-def zonal_stats(
-    points: DataFrame,
-    polygons: DataFrame,
-    values: dict | None = None,
-    lon: str = "lon",
-    lat: str = "lat",
-    ring: str = "ring",
-    qid: str = "qid",
-) -> DataFrame:
-    """Per-polygon aggregates over the points each polygon contains — the
+def zonal_stats(points: DataFrame, polygons: DataFrame, values: dict | None = None) -> DataFrame:
+    """Per-polygon (qid, ring) aggregates over the points each polygon
+    contains — the
     vector zonal-statistics primitive (raster engines' zonal stats, GIS
     `ST_Contains` + GROUP BY). Output: one row per polygon that contains
     >= 1 point, with ``n`` (point count) plus any caller aggregate from
@@ -313,13 +288,11 @@ def zonal_stats(
     row per (partition, polygon). Zones with zero points emit no row
     (a left join from ``polygons`` restores them if needed).
     """
-    joined = point_in_polygon_join(
-        points, polygons, lon=lon, lat=lat, ring=ring
-    )
+    joined = point_in_polygon_join(points, polygons)
     aggs = [F.count("*").alias("n")]
     for name, col in (values or {}).items():
         aggs.append(col.alias(name))
-    return joined.groupBy(qid).agg(*aggs)
+    return joined.groupBy("qid").agg(*aggs)
 
 
 # ---------------------------------------------------------------------------
@@ -374,8 +347,6 @@ def point_in_polygon_h3_join(
     points: DataFrame,
     polygons: list[tuple[int, list[tuple[float, float]]]],
     res: int = 8,
-    lon: str = "lon",
-    lat: str = "lat",
     cell_col: str | None = None,
 ) -> DataFrame:
     """Point-in-polygon with an H3 cell prefilter. Every entry polyfills to
@@ -398,7 +369,7 @@ def point_in_polygon_h3_join(
     keyed = points.withColumn(
         "__cell",
         F.col(cell_col) if cell_col is not None
-        else C.cell_h3(F.col(lon), F.col(lat), res),
+        else C.cell_h3(F.col("lon"), F.col("lat"), res),
     )
     cand = keyed.join(F.broadcast(cells), "__cell", "left_semi").drop("__cell")
-    return _literal_refine(cand, polygons, lon, lat)
+    return _literal_refine(cand, polygons)

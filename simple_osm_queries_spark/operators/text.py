@@ -34,8 +34,10 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(_BPE_ISH))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Adds length, token, punctuation, stopword and case features of
+    ``df``'s ``text`` column."""
+    t = F.col("text")
     w = words(t)
     n_tok = F.size(w)
     stop_hits = F.size(F.filter(w, lambda x: x.isin(STOPWORDS)))
@@ -52,10 +54,10 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite quality score in [0,1]-ish: rewards mid-length docs with
     natural stopword density and sane word lengths."""
-    feats = quality_features(df, text_col)
+    feats = quality_features(df)
     length_term = F.least(F.col("n_tokens") / F.lit(64.0), F.lit(1.0))
     stop_term = F.least(F.col("stopword_ratio") * F.lit(4.0), F.lit(1.0))
     wordlen = F.col("mean_word_len")
@@ -78,10 +80,11 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return {lang: marker_hits(markers) for lang, markers in LANG_MARKERS.items()}
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out: str = "pred_lang") -> DataFrame:
-    """Marker-word language ID. Falls back to 'und' when no marker hits.
+def lang_id(df: DataFrame) -> DataFrame:
+    """Marker-word language ID of ``df``'s ``text`` column, added as
+    ``pred_lang``. Falls back to 'und' when no marker hits.
     Deterministic tie-break: the LANG_MARKERS declaration order."""
-    scores = lang_scores(F.col(text_col))
+    scores = lang_scores(F.col("text"))
     best_lang = F.lit("und")
     best_score = F.lit(0)
     # iterate reversed so earlier languages win ties
@@ -89,7 +92,7 @@ def lang_id(df: DataFrame, text_col: str = "text", out: str = "pred_lang") -> Da
         s = scores[lang]
         best_lang = F.when(s >= best_score, F.lit(lang)).otherwise(best_lang)
         best_score = F.greatest(s, best_score)
-    return df.withColumn(out, F.when(best_score > 0, best_lang).otherwise(F.lit("und")))
+    return df.withColumn("pred_lang", F.when(best_score > 0, best_lang).otherwise(F.lit("und")))
 
 
 def doc_fingerprint(text: Column) -> Column:

@@ -49,10 +49,9 @@ from simple_osm_queries_spark.functions import cells as C
 from simple_osm_queries_spark.sources.mvt import EXTENT
 
 
-def assign_tiles(
-    points: DataFrame, zoom: int, lon: str = "lon", lat: str = "lat", out: str = "tile_id"
-) -> DataFrame:
-    return points.withColumn(out, C.tile_of(F.col(lon), F.col(lat), zoom))
+def assign_tiles(points: DataFrame, zoom: int) -> DataFrame:
+    """Adds ``tile_id``, the tile at ``zoom`` of each point (lon, lat)."""
+    return points.withColumn("tile_id", C.tile_of(F.col("lon"), F.col("lat"), zoom))
 
 
 def tile_stats(points: DataFrame, zoom: int) -> DataFrame:
@@ -104,37 +103,24 @@ def _tile_row(tid: int, **cols):
     )
 
 
-def tile_pixel_bins(
-    points: DataFrame, zoom: int, tile_px: int = 256,
-    lon: str = "lon", lat: str = "lat", weight: str | None = None,
-) -> DataFrame:
-    """Bin points to raster pixels: (tile_id, px, py, cnt) at ``zoom`` with
-    ``tile_px``-pixel tiles. Pure column math (the fractional part of the
-    same Web-Mercator projection tile_x/tile_y floor), so the whole raster
-    aggregation is ONE hash groupBy with map-side partial aggregation —
-    the output per tile is bounded by tile_px^2 rows no matter how many
-    input points, which is what makes rendering at 10^12 points feasible.
-
-    ``weight``: optional long column summed instead of counting rows —
-    re-binning already-aggregated bins (e.g. the pixel_bins_to_points
-    round trip) must weight each row by its original count.
+def tile_pixel_bins(points: DataFrame, zoom: int, tile_px: int = 256) -> DataFrame:
+    """Bin points (lon, lat) to raster pixels: (tile_id, px, py, cnt) at
+    ``zoom`` with ``tile_px``-pixel tiles. Pure column math (the
+    fractional part of the same Web-Mercator projection tile_x/tile_y
+    floor), so the whole raster aggregation is ONE hash groupBy with
+    map-side partial aggregation — the output per tile is bounded by
+    tile_px^2 rows no matter how many input points, which is what makes
+    rendering at 10^12 points feasible.
     """
-    tid, px, py = _tile_local(F.col(lon), F.col(lat), zoom, tile_px)
-    cols = [tid.alias("tile_id"), px.alias("px"), py.alias("py")]
-    if weight is not None:
-        cols.append(F.col(weight).alias("_w"))
-    agg = F.count("*") if weight is None else F.sum("_w")
+    tid, px, py = _tile_local(F.col("lon"), F.col("lat"), zoom, tile_px)
     return (
-        points.select(*cols)
+        points.select(tid.alias("tile_id"), px.alias("px"), py.alias("py"))
         .groupBy("tile_id", "px", "py")
-        .agg(agg.cast("long").alias("cnt"))
+        .agg(F.count("*").cast("long").alias("cnt"))
     )
 
 
-def tile_heatmap(
-    points: DataFrame, zoom: int, tile_px: int = 256,
-    lon: str = "lon", lat: str = "lat",
-) -> DataFrame:
+def tile_heatmap(points: DataFrame, zoom: int, tile_px: int = 256) -> DataFrame:
     """Render per-tile density rasters as grayscale PNGs — the
     raster<->vector bridge in the rendering direction (vector points in,
     map tiles out; the reference's web UI serves GeoJSON and leaves
@@ -148,7 +134,7 @@ def tile_heatmap(
     """
     import pandas as pd
 
-    bins = tile_pixel_bins(points, zoom, tile_px, lon, lat)
+    bins = tile_pixel_bins(points, zoom, tile_px)
 
     def render(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
@@ -260,7 +246,7 @@ def _point_features(rows, zoom: int, tx: int, ty: int) -> list[dict]:
     ]
 
 
-def _line_features(rows, zoom: int, tx: int, ty: int, simplify_tol: float = 0.0) -> list[dict]:
+def _line_features(rows, zoom: int, tx: int, ty: int, *, simplify_tol: float) -> list[dict]:
     """(fid, nodes) rows -> LINESTRING features projected onto tile
     (tx, ty), vertices unclipped (renderers clip, so a way that crosses
     the tile edge needs no clipping stage); a single-vertex way is skipped.
@@ -315,7 +301,11 @@ def _bbox_polygon_features(rows, zoom: int, tx: int, ty: int) -> list[dict]:
 _BBOX = ["min_lon", "min_lat", "max_lon", "max_lat"]
 
 
-def tile_vectors(df: DataFrame, zoom: int, cap: int = 65536) -> DataFrame:
+# most features tile_vectors encodes per tile; tests patch it to see the cap
+TILE_VECTORS_CAP = 65536
+
+
+def tile_vectors(df: DataFrame, zoom: int) -> DataFrame:
     """Vector-tile output for point features (``id``, ``lon``, ``lat``,
     ``tags``): one MVT layer ``nodes`` per slippy tile at ``zoom``, points
     carrying their ``tags`` map entries as MVT attributes — the other half
@@ -325,8 +315,9 @@ def tile_vectors(df: DataFrame, zoom: int, cap: int = 65536) -> DataFrame:
 
     Plan shape mirrors the raster path: tile assignment and the tile-local
     integer coordinates are pure column math (a point's MVT position is
-    its tile_heatmap pixel at tile_px=EXTENT), ``cap`` bounds features per
-    tile, and the only Python is the byte assembly in the render stage.
+    its tile_heatmap pixel at tile_px=EXTENT), TILE_VECTORS_CAP bounds
+    features per tile, and the only Python is the byte assembly in the
+    render stage.
 
     Output: (tile_id, zoom, tx, ty, n_features, n_total, mvt binary).
     """
@@ -339,7 +330,7 @@ def tile_vectors(df: DataFrame, zoom: int, cap: int = 65536) -> DataFrame:
             iy.alias("iy"),
             F.map_entries("tags").alias("tags"),
         ),
-        cap,
+        TILE_VECTORS_CAP,
     )
     return _render_mvt(ranked, "nodes", ["fid", "ix", "iy", "tags"], _point_features)
 
@@ -389,17 +380,23 @@ class TileLayer:
         executor: the first ``cap`` members in fid order (a
         TakeOrderedAndProject, so every row reaches one task in order,
         with no Exchange or Window in the plan) through one mapInPandas
-        that concatenates its batches and calls the driver's encode."""
+        that concatenates its batches and calls the driver's encode.
+
+        When the members' source holds at most ``cap`` rows, AQE drops the
+        limit (and, on one row, the sort), and the rows keep the source's
+        partitions: ``coalesce(1)`` still hands them to one task, which
+        orders them by fid itself."""
         import pandas as pd
 
         name, tile, features = self.name, self.tile, self.features
 
         def encode(batches):
-            pdf = pd.concat(list(batches))
+            pdf = pd.concat(list(batches)).sort_values("fid", kind="stable")
             rows = zip(*(pdf[c] for c in pdf.columns))
             yield pd.DataFrame({"mvt": [_encode_layer(name, tile, features, rows)[1]]})
 
-        return self.members.orderBy("fid").limit(self.cap).mapInPandas(encode, "mvt binary")
+        members = self.members.orderBy("fid").limit(self.cap).coalesce(1)
+        return members.mapInPandas(encode, "mvt binary")
 
 
 def tile_mvt_layers(
@@ -484,58 +481,56 @@ def _bbox_tile_range(zoom: int) -> tuple[Column, Column, Column, Column, Column]
 # raster -> vector: the inverse direction of the tile bridge
 # ---------------------------------------------------------------------------
 
-def pixel_bins_to_points(
-    bins: DataFrame, tile_px: int = 256, value_col: str | None = "cnt"
-) -> DataFrame:
+# pixel size of the raster tiles of the raster -> vector direction; tests
+# patch it for small tiles
+RASTER_TILE_PX = 256
+
+
+def pixel_bins_to_points(bins: DataFrame) -> DataFrame:
     """Inverse of ``tile_pixel_bins`` — the raster->vector direction of the
-    north rule's bridge: each (tile_id, px, py) raster pixel becomes the
-    lon/lat POINT at its center (inverse Web-Mercator,
-    ``lat = atan(sinh(pi*(1 - 2*fy/n)))``), with ``value_col`` passed
-    through. Pure column math end-to-end — no UDF, no shuffle; zoom is
-    decoded from the packed tile_id so one frame may mix zooms.
+    north rule's bridge: each (tile_id, px, py) pixel of a RASTER_TILE_PX
+    raster becomes the lon/lat POINT at its center (inverse Web-Mercator,
+    ``lat = atan(sinh(pi*(1 - 2*fy/n)))``), with every other column of
+    ``bins`` (``cnt``, ``intensity``) passed through. Pure column math
+    end-to-end — no UDF, no shuffle; zoom is decoded from the packed
+    tile_id so one frame may mix zooms.
 
     Round-trip guarantee: a pixel center re-bins (``tile_pixel_bins`` at
-    the same zoom/tile_px, ``weight=value_col``) to exactly the bins it
-    came from — the center sits 0.5 px from every floor boundary, ~1e5
-    times the double-precision projection error, so the integer keys
-    cannot flip (tested exactly in tests/test_raster_vector.py).
+    the same zoom and tile size) to exactly the pixel it came from — the
+    center sits 0.5 px from every floor boundary, ~1e5 times the
+    double-precision projection error, so the integer keys cannot flip
+    (tested exactly in tests/test_raster_vector.py).
 
-    Output: (lon double, lat double[, value_col]).
+    Output: (lon double, lat double, the other columns of ``bins``).
     """
     z, tx, ty = (c.cast("double") for c in C.tile_zxy(F.col("tile_id")))
     n = F.pow(F.lit(2.0), z)
-    fx = tx + (F.col("px").cast("double") + F.lit(0.5)) / F.lit(float(tile_px))
-    fy = ty + (F.col("py").cast("double") + F.lit(0.5)) / F.lit(float(tile_px))
+    fx = tx + (F.col("px").cast("double") + F.lit(0.5)) / F.lit(float(RASTER_TILE_PX))
+    fy = ty + (F.col("py").cast("double") + F.lit(0.5)) / F.lit(float(RASTER_TILE_PX))
     lon = fx / n * F.lit(360.0) - F.lit(180.0)
     lat = F.degrees(F.atan(F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * fy / n))))
-    cols = [lon.alias("lon"), lat.alias("lat")]
-    if value_col is not None:
-        cols.append(F.col(value_col))
-    return bins.select(*cols)
+    rest = [c for c in bins.columns if c not in ("tile_id", "px", "py")]
+    return bins.select(lon.alias("lon"), lat.alias("lat"), *rest)
 
 
-def raster_to_bins(
-    rasters: DataFrame, tile_px: int = 256, png_col: str = "png",
-    on_error: str = "raise",
-) -> DataFrame:
-    """Vectorize raster tiles: decode each PNG (any of the engine's image
-    formats, sniffed by magic) and emit one row per NONZERO pixel —
-    ``(tile_id, px, py, intensity)`` with intensity the 0-255 gray value.
-    The structural inverse of ``tile_heatmap`` (per-tile normalization is
+def raster_to_bins(rasters: DataFrame) -> DataFrame:
+    """Vectorize raster tiles: decode each ``png`` of ``rasters`` (tile_id,
+    png; any of the engine's image formats, sniffed by magic) and emit one
+    row per NONZERO pixel — ``(tile_id, px, py, intensity)`` with
+    intensity the 0-255 gray value. The structural inverse of
+    ``tile_heatmap`` at tile_px=RASTER_TILE_PX (per-tile normalization is
     not invertible, so intensity is brightness, not the original count;
     key-set equality with ``tile_pixel_bins`` IS exact and tested).
-    Compose with ``pixel_bins_to_points(value_col='intensity')`` for the
-    full raster-tiles-in, lon/lat-points-out path. Arrow-batched
-    mapInPandas; ``on_error`` follows the multimodal raise/skip contract.
+    Compose with ``pixel_bins_to_points`` for the full raster-tiles-in,
+    lon/lat-points-out path. Arrow-batched mapInPandas; an undecodable,
+    NULL or wrongly sized tile fails the job, as in the multimodal
+    operators.
     """
     import pandas as pd
 
-    from simple_osm_queries_spark.operators.multimodal import (
-        _check_on_error,
-        _decode_or_none,
-    )
+    from simple_osm_queries_spark.operators.multimodal import _decode
 
-    _check_on_error(on_error)
+    tile_px = RASTER_TILE_PX
 
     def run(batches):
         import numpy as np
@@ -544,15 +539,9 @@ def raster_to_bins(
 
         for pdf in batches:
             out_tid, out_px, out_py, out_val = [], [], [], []
-            for tid, data in zip(pdf["tile_id"], pdf[png_col]):
-                px_img = _decode_or_none(
-                    lambda b: codecs.decode_image(b, None), data, on_error
-                )
-                if px_img is None:
-                    continue
+            for tid, data in zip(pdf["tile_id"], pdf["png"]):
+                px_img = _decode(lambda b: codecs.decode_image(b, None), data)
                 if px_img.shape[0] != tile_px or px_img.shape[1] != tile_px:
-                    if on_error == "skip":
-                        continue
                     raise ValueError(
                         f"raster tile is {px_img.shape[1]}x{px_img.shape[0]}, "
                         f"expected {tile_px}x{tile_px}"
@@ -572,6 +561,6 @@ def raster_to_bins(
                 }
             )
 
-    return rasters.select("tile_id", png_col).mapInPandas(
+    return rasters.select("tile_id", "png").mapInPandas(
         run, "tile_id long, px int, py int, intensity long"
     )

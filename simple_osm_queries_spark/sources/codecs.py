@@ -282,12 +282,12 @@ _JPEG_QUANT_BITS = 2  # legacy SOQJ container parameter (decode-only now)
 _JPEG_QUALITY = 98
 
 
-def encode_jpeg(pixels: np.ndarray, quality: int = _JPEG_QUALITY) -> bytes:
+def encode_jpeg(pixels: np.ndarray) -> bytes:
     """Real baseline JFIF JPEG via the from-scratch codec (sources/jpeg.py),
-    4:4:4, Annex-K tables at IJG quality scaling."""
+    4:4:4, Annex-K tables at IJG quality _JPEG_QUALITY."""
     from simple_osm_queries_spark.sources.jpeg import encode_jpeg_real
 
-    return encode_jpeg_real(pixels, quality=quality, subsampling="444")
+    return encode_jpeg_real(pixels, quality=_JPEG_QUALITY, subsampling="444")
 
 
 @_codec_guard("JPEG")
@@ -354,8 +354,7 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 # descriptor, global/local color tables, graphic control extensions
 # (disposal 0/1/2 + transparency composition), interlacing, and the variable
 # width LZW codec with its little-endian sub-block bit packing. The writer
-# emits GIF89a with a fixed 3-3-2 RGB palette and the classic
-# "clear-flooded" LZW stream (table never grows past min+1 bits), so
+# emits GIF89a with a fixed 3-3-2 RGB palette and dictionary LZW, so
 # fixtures whose channels are already 3-3-2-quantized round-trip exactly.
 # This is the engine's ONE real video-shaped container (VERDICT r4 #6 —
 # stub removed); other containers still take an injectable decoder.
@@ -382,40 +381,6 @@ def gif_quantize(px: np.ndarray) -> np.ndarray:
     return (
         ((p[..., 0] >> 5) << 5) | ((p[..., 1] >> 5) << 2) | (p[..., 2] >> 6)
     ).astype(np.uint8)
-
-
-def _lzw_encode_flooded(indices: np.ndarray, min_code: int) -> bytes:
-    """LZW stream that never builds a table: every pixel is a literal code
-    at (min_code+1) bits, with a CLEAR before the phantom table would force
-    a width bump. Spec-conformant output any decoder accepts."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    width = min_code + 1
-    cap = (1 << width) - eoi - 2  # literals emittable before a clear is due
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    since_clear = 0
-    for v in indices.tolist():
-        if since_clear >= cap:
-            emit(clear)
-            since_clear = 0
-        emit(v)
-        since_clear += 1
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 def _lzw_encode(indices: np.ndarray, min_code: int) -> bytes:
@@ -541,7 +506,11 @@ def _deinterlace(rows: np.ndarray) -> np.ndarray:
     return out
 
 
-def encode_gif(frames: np.ndarray, delay_cs: int = 4, optimize: bool = True) -> bytes:
+# frame delay of every written GIF, in centiseconds
+GIF_DELAY_CS = 4
+
+
+def encode_gif(frames: np.ndarray) -> bytes:
     """(n, h, w, 3) uint8 -> animated GIF89a bytes (fixed 3-3-2 palette;
     frames already holding palette-exact channel values round-trip
     losslessly — datagen emits such frames)."""
@@ -555,11 +524,10 @@ def encode_gif(frames: np.ndarray, delay_cs: int = 4, optimize: bool = True) -> 
     if n > 1:
         out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"  # loop forever
     for f in range(n):
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0 << 2, delay_cs, 0) + b"\x00"
+        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0 << 2, GIF_DELAY_CS, 0) + b"\x00"
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)  # no LCT
         out.append(8)  # LZW min code size
-        enc = _lzw_encode if optimize else _lzw_encode_flooded
-        stream = enc(gif_quantize(frames[f]).reshape(-1), 8)
+        stream = _lzw_encode(gif_quantize(frames[f]).reshape(-1), 8)
         for off in range(0, len(stream), 255):
             block = stream[off : off + 255]
             out.append(len(block))

@@ -209,10 +209,8 @@ def gen_ways(spark: SparkSession, n_ways: int, n_nodes: int, partitions: int | N
     return spark.range(0, n_ways, 1, parts).mapInPandas(gen, WAY_SCHEMA)
 
 
-def gen_relations(
-    spark: SparkSession, n_relations: int, n_nodes: int, n_ways: int, partitions: int | None = None
-) -> DataFrame:
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+def gen_relations(spark: SparkSession, n_relations: int, n_nodes: int, n_ways: int) -> DataFrame:
+    parts = max(spark.sparkContext.defaultParallelism, 8)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -188,14 +188,11 @@ def from_generator(
     n_ways: int = 400,
     n_relations: int = 80,
     with_images: bool = True,
-    partitions: int | None = None,
-    **prepare_kwargs,
 ) -> OsmDataset:
     from simple_osm_queries_spark.sources import datagen
 
     return prepare(
-        datagen.gen_nodes(spark, n_nodes, partitions, with_images=with_images),
-        datagen.gen_ways(spark, n_ways, n_nodes, partitions),
-        datagen.gen_relations(spark, n_relations, n_nodes, n_ways, partitions),
-        **prepare_kwargs,
+        datagen.gen_nodes(spark, n_nodes, with_images=with_images),
+        datagen.gen_ways(spark, n_ways, n_nodes),
+        datagen.gen_relations(spark, n_relations, n_nodes, n_ways),
     )

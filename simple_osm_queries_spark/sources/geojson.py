@@ -68,7 +68,7 @@ def write_geojson_file(result: DataFrame, path: str) -> int:
     return len(features)
 
 
-def h3_cells_feature_collection(cells, properties: dict | None = None) -> dict:
+def h3_cells_feature_collection(cells) -> dict:
     """GeoJSON FeatureCollection of H3 cell polygons (render/inspect aid —
     boundary positions are the documented approximation of
     functions/h3_encode.py::cell_boundary; centers are exact)."""
@@ -86,7 +86,7 @@ def h3_cells_feature_collection(cells, properties: dict | None = None) -> dict:
             {
                 "type": "Feature",
                 "geometry": {"type": "Polygon", "coordinates": [coords]},
-                "properties": {"h3": f"{cell:x}", **(properties or {})},
+                "properties": {"h3": f"{cell:x}"},
             }
         )
     return {"type": "FeatureCollection", "features": feats}

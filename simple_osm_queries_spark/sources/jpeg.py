@@ -8,7 +8,7 @@ module implements the real thing, not a stand-in:
 
 * **Encoder**: baseline sequential DCT (SOF0), 8-bit, JFIF color
   (BT.601 full-range YCbCr), 4:4:4 / 4:2:2 / 4:2:0 chroma subsampling,
-  restart markers (``restart_every``), Annex-K
+  restart markers (``RESTART_EVERY``), Annex-K
   quantization tables scaled by the IJG quality formula, Annex-K "typical"
   Huffman tables with canonical code assignment per Annex C, byte-stuffed
   entropy stream. Output decodes in any conformant reader (verified
@@ -376,11 +376,15 @@ def _box_downsample(plane: np.ndarray, fx: int, fy: int) -> np.ndarray:
     return plane.reshape(h2 // fy, fy, w2 // fx, fx).mean(axis=(1, 3))
 
 
+# MCUs per restart interval of the encoder; 0 writes no DRI/RSTn markers.
+# Tests patch it to write restart-marker streams
+RESTART_EVERY = 0
+
+
 def encode_jpeg_real(
     pixels: np.ndarray,
     quality: int = 95,
     subsampling: str = "444",
-    restart_every: int = 0,
 ) -> bytes:
     """Encode (h, w, 3) uint8 RGB as a baseline JFIF JPEG.
 
@@ -389,7 +393,7 @@ def encode_jpeg_real(
     or '420' (2x2 chroma, the common production choice — also what the
     JDK/libjpeg emit by default).
 
-    ``restart_every`` > 0 emits a DRI segment and RSTn markers every that
+    ``RESTART_EVERY`` > 0 emits a DRI segment and RSTn markers every that
     many MCUs. Each restart segment is entropy-decodable INDEPENDENTLY
     (DC predictors reset), which is the hook a distributed pipeline uses
     to split one huge image's entropy decode across tasks."""
@@ -446,6 +450,7 @@ def encode_jpeg_real(
     bw_out = _BitWriter()
     pred = [0, 0, 0]
     rst = 0
+    restart_every = RESTART_EVERY
     for m in range(mcuy * mcux):
         if restart_every and m and m % restart_every == 0:
             bw_out.flush()
@@ -466,9 +471,7 @@ def encode_jpeg_real(
     bw_out.flush()
     entropy += bw_out.buf
 
-    return _assemble_jfif(
-        w, h, qlum, qchr, samp, bytes(entropy), restart_every=restart_every
-    )
+    return _assemble_jfif(w, h, qlum, qchr, samp, bytes(entropy), restart_every)
 
 
 def _encode_block(bw, zz, pred, ci, dct, act) -> None:
@@ -501,9 +504,7 @@ def _encode_block(bw, zz, pred, ci, dct, act) -> None:
         bw.write(code, ln)
 
 
-def _assemble_jfif(
-    w, h, qlum, qchr, samp, entropy: bytes, restart_every: int = 0
-) -> bytes:
+def _assemble_jfif(w, h, qlum, qchr, samp, entropy: bytes, restart_every: int) -> bytes:
     out = bytearray()
     out += b"\xff\xd8"  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"

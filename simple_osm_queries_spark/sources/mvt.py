@@ -128,15 +128,13 @@ def encode_geometry(geom_type: int, rings: list[list[tuple[int, int]]]) -> list[
     return out
 
 
-def encode_layer(
-    name: str,
-    features: list[dict],
-    extent: int = EXTENT,
-) -> bytes:
-    """One Layer message. Each feature dict: ``id`` (int, optional),
-    ``type`` (POINT/LINESTRING/POLYGON), ``rings`` (see encode_geometry),
-    ``attrs`` (dict[str, str|int|float|bool], optional). Keys and values
-    are deduplicated into the layer-level tables per spec."""
+def encode_layer(name: str, features: list[dict]) -> bytes:
+    """One Layer message of extent EXTENT. Each feature dict: ``id`` (int,
+    optional), ``type`` (POINT/LINESTRING/POLYGON), ``rings`` (see
+    encode_geometry), ``attrs`` (dict[str, str|int|float|bool], optional).
+    Keys and values are deduplicated into the layer-level tables per spec.
+    MVT feature ids are uint64, so a negative id (OSM XML and PBF allow
+    them) is omitted: the id field is optional."""
     keys: dict[str, int] = {}
     vals: dict[tuple, int] = {}  # (type_name, value) -> index; 1.0 != 1
     feat_bufs: list[bytes] = []
@@ -152,7 +150,7 @@ def encode_layer(
                 val_order.append(v)
             tags += (ki, vi)
         buf = bytearray()
-        if f.get("id") is not None:
+        if f.get("id") is not None and int(f["id"]) >= 0:
             buf += _field_varint(1, int(f["id"]))
         if tags:
             buf += _field_packed(2, tags)
@@ -168,11 +166,9 @@ def encode_layer(
         out += _field_bytes(3, k.encode("utf-8"))
     for v in val_order:
         out += _field_bytes(4, encode_value(v))
-    out += _field_varint(5, extent)
+    out += _field_varint(5, EXTENT)
     return bytes(out)
 
 
-def encode_tile(layers: list[tuple[str, list[dict]]], extent: int = EXTENT) -> bytes:
-    return b"".join(
-        _field_bytes(3, encode_layer(name, feats, extent)) for name, feats in layers
-    )
+def encode_tile(layers: list[tuple[str, list[dict]]]) -> bytes:
+    return b"".join(_field_bytes(3, encode_layer(name, feats)) for name, feats in layers)

@@ -474,22 +474,9 @@ class _StringTable:
         return b"".join(_field_bytes(1, s.encode("utf-8")) for s in self.strings)
 
 
-def _blob(block: bytes, compression: str = "zlib") -> bytes:
-    if compression == "zlib":
-        field, payload = 3, zlib.compress(block)
-    elif compression == "raw":
-        field, payload = 1, block
-    elif compression == "lzma":
-        import lzma
-
-        field, payload = 4, lzma.compress(block)
-    elif compression == "zstd":
-        import zstandard  # type: ignore
-
-        field, payload = 7, zstandard.ZstdCompressor().compress(block)
-    else:
-        raise ValueError(f"unsupported compression {compression!r}")
-    return _field_varint(2, len(block)) + _field_bytes(field, payload)
+def _blob(block: bytes) -> bytes:
+    """Blob message of one block: raw size, zlib_data (field 3)."""
+    return _field_varint(2, len(block)) + _field_bytes(3, zlib.compress(block))
 
 
 def _framed(btype: str, blob: bytes) -> bytes:
@@ -498,9 +485,9 @@ def _framed(btype: str, blob: bytes) -> bytes:
 
 
 def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
-                  entities_per_block: int = 8000,
-                  compression: str = "zlib") -> None:
-    """Encode (nodes, ways, relations) row-iterables into `path`.
+                  entities_per_block: int = 8000) -> None:
+    """Encode (nodes, ways, relations) row-iterables into `path`, every
+    block zlib-compressed.
 
     Row shapes match the read side: nodes (id, lon, lat, tags),
     ways (id, node_ids, tags), relations (id, node_member_ids,
@@ -512,7 +499,7 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
     header_block = (
         _field_bytes(4, b"OsmSchema-V0.6") + _field_bytes(4, b"DenseNodes")
     )
-    chunks = [_framed("OSMHeader", _blob(header_block, compression))]
+    chunks = [_framed("OSMHeader", _blob(header_block))]
 
     def block_of(groups: list[bytes], st: _StringTable) -> bytes:
         body = _field_bytes(1, st.encode())
@@ -543,7 +530,7 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
             + _field_packed(9, _sint_deltas(lons))
             + _field_packed(10, kv)
         )
-        chunks.append(_framed("OSMData", _blob(block_of([_field_bytes(2, dense)], st), compression)))
+        chunks.append(_framed("OSMData", _blob(block_of([_field_bytes(2, dense)], st))))
 
     ways = list(ways or [])
     for i in range(0, len(ways), entities_per_block):
@@ -556,7 +543,7 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
             msg += _field_packed(3, [st.get(v) for v in (tags or {}).values()])
             msg += _field_packed(8, _sint_deltas(node_ids))
             group += _field_bytes(3, msg)
-        chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st), compression)))
+        chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st))))
 
     relations = list(relations or [])
     for i in range(0, len(relations), entities_per_block):
@@ -572,7 +559,7 @@ def write_osm_pbf(path: str, nodes=None, ways=None, relations=None,
             msg += _field_packed(9, _sint_deltas(memids))
             msg += _field_packed(10, types)
             group += _field_bytes(4, msg)
-        chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st), compression)))
+        chunks.append(_framed("OSMData", _blob(block_of([bytes(group)], st))))
 
     with open(path, "wb") as f:
         for c in chunks:

@@ -41,11 +41,12 @@ if TYPE_CHECKING:
 
 # POST /query result cap: the reference streams the FULL GeoJSON result into
 # one response (api.go:117) — a planet-wide wildcard query OOMs the driver.
-# We fetch at most cap + 1 rows in one action, flagging "truncated".
-DEFAULT_MAX_ROWS = 100_000
+# We fetch at most cap + 1 rows in one action, flagging "truncated". The
+# handlers read both caps per request; tests patch them.
+MAX_ROWS = 100_000
 # GET /cells cap on the ESTIMATED cell count (bbox area / cell area at res):
 # a planet bbox at res 12 would otherwise group+collect millions of rows.
-DEFAULT_MAX_CELLS = 50_000
+MAX_CELLS = 50_000
 
 
 def _tile_bounds(z: int, x: int, y: int) -> tuple[float, float, float, float]:
@@ -109,11 +110,7 @@ def _app_html() -> bytes:
     return resources.files("simple_osm_queries_spark").joinpath("web_app.html").read_bytes()
 
 
-def make_handler(
-    dataset: OsmDataset,
-    max_rows: int = DEFAULT_MAX_ROWS,
-    max_cells: int = DEFAULT_MAX_CELLS,
-):
+def make_handler(dataset: OsmDataset):
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload: bytes, content_type: str) -> None:
             self.send_response(code)
@@ -252,7 +249,7 @@ def make_handler(
                 if fmt == "mvt":
                     from simple_osm_queries_spark.operators.tiles import tile_mvt
 
-                    body = tile_mvt(_mvt_layers(dataset, z, x, y, simplify, max_rows))
+                    body = tile_mvt(_mvt_layers(dataset, z, x, y, simplify, MAX_ROWS))
                     self._send(200, body, "application/vnd.mapbox-vector-tile")
                     return
                 rows = _tile_frame(dataset, z, x, y).collect()
@@ -303,12 +300,12 @@ def make_handler(
             mid = math.cos(math.radians(min(abs(y1 + y2) / 2.0, 89.0)))
             inr = h3_min_inradius_deg(res)
             est = abs(x2 - x1) * abs(y2 - y1) * mid / (2.0 * math.sqrt(3.0) * inr * inr)
-            if est > max_cells:
+            if est > MAX_CELLS:
                 self._error(
                     413,
                     "too many cells",
                     f"bbox at res {res} covers ~{int(est)} cells "
-                    f"(cap {max_cells}); use a coarser res or smaller bbox",
+                    f"(cap {MAX_CELLS}); use a coarser res or smaller bbox",
                 )
                 return
             try:
@@ -344,7 +341,7 @@ def make_handler(
                 self._error(400, "parse error", str(e))
                 return
             try:
-                geojson = to_geojson_capped(plan_query(query, dataset), max_rows)
+                geojson = to_geojson_capped(plan_query(query, dataset), MAX_ROWS)
             except PlanError as e:
                 self._error(400, "plan error", str(e))
                 return
@@ -359,13 +356,6 @@ def make_handler(
     return Handler
 
 
-def serve(
-    dataset: OsmDataset,
-    port: int = 8080,
-    max_rows: int = DEFAULT_MAX_ROWS,
-    max_cells: int = DEFAULT_MAX_CELLS,
-) -> ThreadingHTTPServer:
+def serve(dataset: OsmDataset, port: int = 8080) -> ThreadingHTTPServer:
     """Build the server (caller decides serve_forever vs background thread)."""
-    return ThreadingHTTPServer(
-        ("127.0.0.1", port), make_handler(dataset, max_rows, max_cells)
-    )
+    return ThreadingHTTPServer(("127.0.0.1", port), make_handler(dataset))

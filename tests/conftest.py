@@ -37,7 +37,7 @@ def dataset(spark):
     ds = prepare(
         datagen.gen_nodes(spark, N_NODES, partitions=4, with_images=False),
         datagen.gen_ways(spark, N_WAYS, N_NODES, partitions=2),
-        datagen.gen_relations(spark, N_RELATIONS, N_NODES, N_WAYS, partitions=2),
+        datagen.gen_relations(spark, N_RELATIONS, N_NODES, N_WAYS),
     )
     return ds.cache()
 

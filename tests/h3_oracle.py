@@ -17,6 +17,11 @@ from simple_osm_queries_spark.functions.h3 import (
 MODE_CELL = 1
 
 
+def _digits_mask_between(lo: int, hi: int) -> int:
+    """All-sevens mask over digits lo..hi (inclusive)."""
+    return _digits_mask(lo) & ~_digits_mask(hi + 1)
+
+
 _PENTAGON_BC = np.array(sorted(PENTAGON_BASE_CELLS), dtype=np.uint64)
 
 
@@ -74,7 +79,7 @@ def center_child_py(h: int, child_res: int) -> int:
         raise ValueError(f"child_res {child_res} not in [{res}, {MAX_RES}]")
     out = (h & ~(0xF << 52)) | (child_res << 52)
     # digits res+1..child_res become 0 (center), the rest stay 7
-    clear = _digits_mask(res + 1, child_res)
+    clear = _digits_mask_between(res + 1, child_res)
     return out & ~clear
 
 
@@ -108,7 +113,7 @@ def compact_cells_py(cells) -> list[int]:
         bc = (uniq >> np.uint64(45)) & np.uint64(0x7F)
         is_pent = np.isin(bc, _PENTAGON_BC)
         if r - 1 >= 1:
-            digits_zero = (uniq & np.uint64(_digits_mask(1, r - 1))) == 0
+            digits_zero = (uniq & np.uint64(_digits_mask_between(1, r - 1))) == 0
             is_pent &= digits_zero
         need = np.where(is_pent, 6, 7)
         complete = uniq[counts >= need]

@@ -29,15 +29,24 @@ def _ids(df):
     return sorted(r.id for r in df.collect())
 
 
+def _bucketed(build):
+    """``build()``'s frame with every inner side over BROADCAST_THRESHOLD
+    (the fixture's inner sides are far below the real one, so a plain call
+    broadcasts)."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(B, "BROADCAST_THRESHOLD", 0)
+        return build()
+
+
 def test_way_way_bucketed_matches_broadcast(ds):
     outer = ds.ways.filter(F.element_at("tags", "building") == "yes")
     inner = ds.ways.filter(F.element_at("tags", "highway").isNotNull())
     for d in (5.0, 300.0, 2000.0):
-        bc = B.within_buffer_way_way(outer, inner, d, strategy="broadcast")
-        bk = B.within_buffer_way_way(outer, inner, d, strategy="bucketed")
+        bc = B.within_buffer_way_way(outer, inner, d)
+        bk = _bucketed(lambda: B.within_buffer_way_way(outer, inner, d))
         assert _ids(bc) == _ids(bk), f"buffer {d}m"
     # at least one distance must produce hits or the parity is vacuous
-    assert len(_ids(B.within_buffer_way_way(outer, inner, 2000.0, strategy="bucketed"))) > 0
+    assert len(_ids(_bucketed(lambda: B.within_buffer_way_way(outer, inner, 2000.0)))) > 0
 
 
 def test_node_way_bucketed_matches_broadcast(ds):
@@ -45,24 +54,24 @@ def test_node_way_bucketed_matches_broadcast(ds):
     ways = ds.ways.filter(F.element_at("tags", "highway").isNotNull())
     for out in ("node", "way"):
         for d in (50.0, 1000.0):
-            bc = B.within_buffer_node_way(nodes, ways, d, output=out, strategy="broadcast")
-            bk = B.within_buffer_node_way(nodes, ways, d, output=out, strategy="bucketed")
+            bc = B.within_buffer_node_way(nodes, ways, d, output=out)
+            bk = _bucketed(lambda: B.within_buffer_node_way(nodes, ways, d, output=out))
             assert _ids(bc) == _ids(bk), f"{out} {d}m"
-    assert len(_ids(B.within_buffer_node_way(nodes, ways, 1000.0, strategy="bucketed"))) > 0
+    assert len(_ids(_bucketed(lambda: B.within_buffer_node_way(nodes, ways, 1000.0)))) > 0
 
 
 def test_bucketed_plan_has_no_bnlj(ds):
     outer = ds.ways.filter(F.element_at("tags", "building") == "yes")
     inner = ds.ways.filter(F.element_at("tags", "highway").isNotNull())
-    bk = B.within_buffer_way_way(outer, inner, 300.0, strategy="bucketed")
+    bk = _bucketed(lambda: B.within_buffer_way_way(outer, inner, 300.0))
     plan = bk._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     # the broadcast path IS a BNLJ (the point of the threshold)
-    bc = B.within_buffer_way_way(outer, inner, 300.0, strategy="broadcast")
+    bc = B.within_buffer_way_way(outer, inner, 300.0)
     plan_bc = bc._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan_bc
 
-    nk = B.within_buffer_node_way(ds.nodes, inner, 300.0, strategy="bucketed")
+    nk = _bucketed(lambda: B.within_buffer_node_way(ds.nodes, inner, 300.0))
     plan_n = nk._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan_n
 
@@ -70,11 +79,13 @@ def test_bucketed_plan_has_no_bnlj(ds):
 def test_auto_threshold_switches(ds, monkeypatch):
     outer = ds.ways.limit(50)
     inner = ds.ways.limit(200)
-    # tiny threshold forces the bucketed path; results still correct
+    bc = B.within_buffer_way_way(outer, inner, 300.0)
+    assert "BroadcastNestedLoopJoin" in bc._jdf.queryExecution().executedPlan().toString()
+    # a threshold below the inner side's 200 rows takes the bucketed path;
+    # results still correct
     monkeypatch.setattr(B, "BROADCAST_THRESHOLD", 10)
-    bk = B.within_buffer_way_way(outer, inner, 300.0, strategy="auto")
+    bk = B.within_buffer_way_way(outer, inner, 300.0)
     assert "BroadcastNestedLoopJoin" not in bk._jdf.queryExecution().executedPlan().toString()
-    bc = B.within_buffer_way_way(outer, inner, 300.0, strategy="broadcast")
     assert _ids(bk) == _ids(bc)
 
 
@@ -100,10 +111,10 @@ def _plan_case(local_frames, case):
             pts, ways, 500.0, k=2, strategy="broadcast", snap=True),
         "nearest_way_join-bucketed": lambda: nearest_way_join(
             pts, ways, 500.0, k=2, strategy="bucketed", snap=True),
-        "node_way-bucketed": lambda: B.within_buffer_node_way(
-            nodes, hw, 300.0, strategy="bucketed"),
-        "way_way-bucketed": lambda: B.within_buffer_way_way(
-            bld, hw, 300.0, strategy="bucketed"),
+        "node_way-bucketed": lambda: _bucketed(
+            lambda: B.within_buffer_node_way(nodes, hw, 300.0)),
+        "way_way-bucketed": lambda: _bucketed(
+            lambda: B.within_buffer_way_way(bld, hw, 300.0)),
         "node_node": lambda: B.within_buffer_node_node(nodes, nodes, 300.0),
         "eps_neighbor_pairs": lambda: eps_neighbor_pairs(pts, 300.0),
     }[case]()

@@ -46,10 +46,54 @@ def _pal_frames(shape, seed=5):
     return codecs.gif_palette()[rng.randint(0, 256, size=shape).astype(np.uint8)]
 
 
+def _lzw_encode_flooded(indices: np.ndarray, min_code: int) -> bytes:
+    """LZW stream that never builds a table: every pixel is a literal code
+    at (min_code+1) bits, with a CLEAR before the phantom table would force
+    a width bump. Spec-conformant output any decoder accepts; swapped in
+    for the engine's dictionary LZW to feed the decoder's clear path."""
+    clear, eoi = 1 << min_code, (1 << min_code) + 1
+    width = min_code + 1
+    cap = (1 << width) - eoi - 2  # literals emittable before a clear is due
+    out = bytearray()
+    acc = 0
+    nbits = 0
+
+    def emit(code: int):
+        nonlocal acc, nbits
+        acc |= code << nbits
+        nbits += width
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+
+    emit(clear)
+    since_clear = 0
+    for v in indices.tolist():
+        if since_clear >= cap:
+            emit(clear)
+            since_clear = 0
+        emit(v)
+        since_clear += 1
+    emit(eoi)
+    if nbits:
+        out.append(acc & 0xFF)
+    return bytes(out)
+
+
+def _encode_gif(frames, optimize: bool) -> bytes:
+    """The engine's GIF writer, with dictionary LZW (optimize) or the
+    clear-flooded stream."""
+    with pytest.MonkeyPatch.context() as m:
+        if not optimize:
+            m.setattr(codecs, "_lzw_encode", _lzw_encode_flooded)
+        return codecs.encode_gif(frames)
+
+
 def test_gif_round_trip_exact_both_lzw_paths():
     frames = _pal_frames((3, 24, 17))
     for optimize in (True, False):  # dict LZW and the clear-flooded stream
-        dec = codecs.decode_gif(codecs.encode_gif(frames, optimize=optimize))
+        dec = codecs.decode_gif(_encode_gif(frames, optimize))
         assert dec.shape == frames.shape and (dec == frames).all()
 
 
@@ -101,7 +145,7 @@ def _image_block(idx2d, left=0, top=0, interlace=False, gce=None):
         )
         rows = idx2d[order]  # stored in interlace pass order
     out.append(8)
-    stream = codecs._lzw_encode_flooded(rows.reshape(-1), 8)
+    stream = _lzw_encode_flooded(rows.reshape(-1), 8)
     for off in range(0, len(stream), 255):
         chunk = stream[off : off + 255]
         out.append(len(chunk))
@@ -170,7 +214,7 @@ def test_gif_round_trip_fuzz():
     def run(w, h, n, seed, optimize):
         rng = np.random.RandomState(seed)
         frames = pal[rng.randint(0, 256, size=(n, h, w)).astype(np.uint8)]
-        dec = codecs.decode_gif(codecs.encode_gif(frames, optimize=optimize))
+        dec = codecs.decode_gif(_encode_gif(frames, optimize))
         assert dec.shape == frames.shape
         assert (dec == frames).all()
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from simple_osm_queries_spark.index import build, compact, upsert
+from simple_osm_queries_spark.index.layout import upserts_path
 
 
 def _rows(df):
@@ -173,6 +174,11 @@ def test_cli_compact_command(dataset, tmp_path, spark, capsys):
     assert "would compact" in capsys.readouterr().out
     args.dry_run = False
     cli.cmd_compact(spark, args)
-    assert "compacted" in capsys.readouterr().out
+    out_text = capsys.readouterr().out
+    assert "compacted" in out_text
+    # the compaction's commit drops the upsert's backup (SNAPSHOT_RETAIN 1)
+    assert "removed 1 old snapshot(s)" in out_text
+    backups = [d for d in os.listdir(upserts_path(out)) if d.startswith("backup-")]
+    assert len(backups) == upsert.SNAPSHOT_RETAIN
     cli.cmd_compact(spark, args)
     assert "nothing to compact" in capsys.readouterr().out

@@ -83,8 +83,8 @@ def test_conflict_threshold_edges(frame):
     assert (1, 2) in ids
     # hamming 0 keeps only identical hashes (none in the fixture)
     with pytest.raises(AssertionError):
-        # pigeonhole guard: max_hamming must stay < chunks
-        image_caption_conflicts(frame, max_hamming=4, chunks=4)
+        # pigeonhole guard: max_hamming must stay < dedup.HAMMING_CHUNKS (4)
+        image_caption_conflicts(frame, max_hamming=4)
 
 
 def test_stock_captions(frame):

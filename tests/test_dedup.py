@@ -275,7 +275,7 @@ def test_simhash_md5_variant(docs):
     assert all(0 <= r.s < (1 << 60) for r in sig)
 
 
-def test_embedding_near_dups_random_vectors_bounded(spark):
+def test_embedding_near_dups_random_vectors_bounded(spark, monkeypatch):
     """Regression for the 1M-row OOM: with the 16-bit-band defaults, random
     (non-duplicate) vectors produce near-zero candidates instead of a
     quadratic bucket blowup, while planted near-dups are still found."""
@@ -292,9 +292,8 @@ def test_embedding_near_dups_random_vectors_bounded(spark):
     # all-identical-direction vectors put EVERYTHING in one bucket per band
     same = [(i, [1.0 + i * 1e-9] * 64) for i in range(2000)]
     df2 = spark.createDataFrame(same, "vec_id long, embedding array<float>")
-    capped = dedup.embedding_near_dups(
-        df2, threshold=0.999, sig_bits=32, chunks=4, max_bucket=100
-    )
+    monkeypatch.setattr(dedup, "EMBEDDING_MAX_BUCKET", 100)
+    capped = dedup.embedding_near_dups(df2, threshold=0.999, sig_bits=32, chunks=4)
     assert capped.count() == 0  # every bucket over the cap -> no candidates
 
 
@@ -370,13 +369,14 @@ def test_connected_components_unpersists_rounds(spark):
     assert after - before <= 2, f"leaked {after - before} cached RDDs"
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     pairs = [(i, i + 1) for i in range(0, 40)]  # needs ~6 rounds
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     import pytest as _pytest
 
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 2)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(df, max_iter=2)
+        dedup.connected_components(df)
 
 
 def test_connected_components_long_path_graph(spark):
@@ -393,7 +393,7 @@ def test_connected_components_long_path_graph(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     t0 = time.time()
-    comp = dedup.connected_components(pairs, max_iter=25)
+    comp = dedup.connected_components(pairs)
     stats = comp.agg(
         F.count("*").alias("n"),
         F.countDistinct("comp").alias("k"),

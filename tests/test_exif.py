@@ -214,8 +214,7 @@ def _without_exif(data: bytes) -> bytes:
 
 def test_strip_exif_spark_and_on_error(spark):
     """extract_exif reads no metadata from Exif-stripped JPEG rows, and a
-    corrupt or NULL row raises by default and is dropped with
-    on_error='skip'."""
+    corrupt or a NULL row fails the job."""
     from simple_osm_queries_spark.operators.multimodal import extract_exif
 
     rows = [(r.image_id, _without_exif(bytes(r.bytes))) for r in _image_table(spark).collect()]
@@ -223,14 +222,10 @@ def test_strip_exif_spark_and_on_error(spark):
     meta = {r.image_id: r for r in extract_exif(clean).collect()}
     assert len(meta) == 13
     assert all(m.exif_lat is None and m.exif_orientation is None for m in meta.values())
-    # corrupt row: raise by default, skipped with on_error='skip'
-    bad = spark.createDataFrame(
-        [("bad", b"\xff\xd8\xff\xe1\x00\x05garbage"), ("null", None)],
-        "image_id string, bytes binary",
-    )
-    with pytest.raises(Exception):
-        extract_exif(bad).collect()
-    assert extract_exif(bad, on_error="skip").count() == 0
+    for bad in (b"\xff\xd8\xff\xe1\x00\x05garbage", None):
+        df = spark.createDataFrame([("bad", bad)], "image_id string, bytes binary")
+        with pytest.raises(Exception):
+            extract_exif(df).collect()
 
 
 def test_geotag_points_bridges_to_tiles(spark):

@@ -313,11 +313,11 @@ def test_cells_geojson_sink():
     from simple_osm_queries_spark.sources.geojson import h3_cells_feature_collection
 
     cells = E.lnglat_to_cell(np.array([9.95]), np.array([53.55]), 8)
-    fc = h3_cells_feature_collection(cells, {"layer": "cover"})
+    fc = h3_cells_feature_collection(cells)
     assert fc["type"] == "FeatureCollection" and len(fc["features"]) == 1
     geom = fc["features"][0]["geometry"]
     assert geom["type"] == "Polygon" and len(geom["coordinates"][0]) == 7
-    assert fc["features"][0]["properties"]["layer"] == "cover"
+    assert fc["features"][0]["properties"] == {"h3": f"{int(cells[0]):x}"}
 
 
 def test_round_trip_adversarial_near_every_icosa_edge():

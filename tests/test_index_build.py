@@ -361,6 +361,50 @@ def test_cli_upsert_command(dataset, tmp_path, spark, capsys):
     assert "skipped" in capsys.readouterr().out
 
 
+def _backups(out: str) -> list[str]:
+    from simple_osm_queries_spark.index.layout import upserts_path
+
+    return sorted(d for d in os.listdir(upserts_path(out)) if d.startswith("backup-"))
+
+
+def test_cli_upserts_keep_only_retained_snapshots(dataset, tmp_path, spark, capsys):
+    """Every applied CLI upsert drops the backups past SNAPSHOT_RETAIN, so
+    N upserts leave at most that many; the retained version stays
+    readable and an older one reports its snapshot gone. A skipped replay
+    deletes nothing."""
+    from simple_osm_queries_spark import cli
+    from simple_osm_queries_spark.index import upsert
+
+    out = str(tmp_path / "idx_cli_gc")
+    build.build_index(dataset.nodes, out, input_fingerprint="fp1", max_rows_per_band=10**6)
+    states = {}
+    for step in (1, 2, 3):
+        delta_dir = str(tmp_path / f"delta{step}.parquet")
+        dataset.nodes.limit(3).withColumn(
+            "tags", F.create_map(F.lit("step"), F.lit(str(step)))
+        ).write.parquet(delta_dir)
+        args = type("A", (), {
+            "delta": delta_dir, "index": out, "deletes": None,
+            "partition_col": "cell_x", "fingerprint": f"cli-gc-{step}",
+        })()
+        cli.cmd_upsert(spark, args)
+        rows = build.read_index(spark, out).collect()
+        states[step] = sorted((r.id, sorted(r.tags.items())) for r in rows)
+        assert len(_backups(out)) <= upsert.SNAPSHOT_RETAIN, step
+    assert "removed 1 old snapshot(s)" in capsys.readouterr().out
+    cli.cmd_upsert(spark, args)  # replay: skipped, nothing removed
+    assert "removed" not in capsys.readouterr().out
+    assert len(_backups(out)) == upsert.SNAPSHOT_RETAIN
+
+    def snap(version):
+        rows = upsert.read_index_version(spark, out, version).collect()
+        return sorted((r.id, sorted(r.tags.items())) for r in rows)
+
+    assert snap(2) == states[2]
+    with pytest.raises(ValueError, match="garbage-collected"):
+        upsert.read_index_version(spark, out, 1)
+
+
 def test_upsert_emptied_partition_is_dropped(spark, tmp_path):
     """Code-review r4 regression (CONFIRMED repro): dynamic overwrite never
     rewrites a partition absent from the output, so deleting/moving every
@@ -559,7 +603,7 @@ def test_read_index_version_time_travel_and_gc(spark, tmp_path):
 
     # GC all but the newest snapshot: version 1 stays readable (it needs
     # only upsert 2's backup), version 0 raises with a clear message
-    assert upsert.gc_snapshots(spark, out, retain=1) == 1
+    assert upsert.gc_snapshots(spark, out) == 1
     assert snap(1) == v1
     with pytest.raises(ValueError, match="garbage-collected"):
         upsert.read_index_version(spark, out, 0)
@@ -618,7 +662,7 @@ def test_upsert_maintained_lookup_used_and_repaired(spark, tmp_path):
     assert _json.load(open(state_path))["version"] == 3
 
 
-def test_upsert_random_sequence_matches_dict_oracle(spark, tmp_path):
+def test_upsert_random_sequence_matches_dict_oracle(spark, tmp_path, monkeypatch):
     """Randomized end-to-end protocol check: a deterministic sequence of
     mixed upserts (in-place updates, cross-partition moves, inserts,
     deletes) against a driver-side dict oracle — after every step the
@@ -679,7 +723,8 @@ def test_upsert_random_sequence_matches_dict_oracle(spark, tmp_path):
         assert got == snap, f"version {v}"
 
     # gc to the last two snapshots: old versions raise, retained ones hold
-    upsert.gc_snapshots(spark, out, retain=2)
+    monkeypatch.setattr(upsert, "SNAPSHOT_RETAIN", 2)
+    upsert.gc_snapshots(spark, out)
     got = {
         x.id: (x.cell_x, x.cell_y)
         for x in upsert.read_index_version(spark, out, 4).collect()

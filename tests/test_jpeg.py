@@ -290,15 +290,16 @@ def test_we_decode_jdk_jpeg(jdk_oracle, tmp_path):
 
 
 @pytest.mark.parametrize("sub,every", [("444", 2), ("444", 7), ("420", 3)])
-def test_restart_marker_streams(jdk_oracle, tmp_path, sub, every):
-    """`restart_every` emits DRI + RSTn; the stream round-trips in the
+def test_restart_marker_streams(jdk_oracle, tmp_path, monkeypatch, sub, every):
+    """`RESTART_EVERY` emits DRI + RSTn; the stream round-trips in the
     engine AND the JDK accepts it (cross-implementation validity). Restart
     segments reset DC predictors, so each is independently decodable —
     the distributed-split hook for huge images."""
     # smooth content for the subsampled case: the conformant
     # replication-vs-triangular chroma upsampling gap otherwise dominates
     px = image_pixels(5) if sub == "444" else _smooth_image(32, 32)
-    data = J.encode_jpeg_real(px, quality=98, subsampling=sub, restart_every=every)
+    monkeypatch.setattr(J, "RESTART_EVERY", every)
+    data = J.encode_jpeg_real(px, quality=98, subsampling=sub)
     assert b"\xff\xdd" in data  # DRI present
     n_rst = sum(data.count(bytes([0xFF, 0xD0 + k])) for k in range(8))
     assert n_rst >= 1

@@ -157,7 +157,7 @@ def test_knn_brute_haversine_matches_oracle(spark, global_points):
         [(q, lo, la, k) for q, lo, la in KNN_QUERIES[:3]],
         "qid long, lon double, lat double, k int",
     )
-    res = knn._brute(pts, qdf, None, "dist_m", knn.haversine_m).toPandas()
+    res = knn._brute(pts, qdf, "dist_m", knn.haversine_m).toPandas()
     for qid, qlo, qla in KNN_QUERIES[:3]:
         exp_ids, _ = _oracle_topk(ids, lon, lat, qlo, qla, k)
         assert res[res.qid == qid].sort_values("rank")["id"].tolist() == exp_ids
@@ -187,8 +187,6 @@ def test_mismatched_disc_parameter_rejected(spark, global_points):
         knn.knn_h3(pts, qdf, res=8, disc_deg=0.5, metric="haversine")
     with pytest.raises(ValueError, match="disc_deg"):
         knn.knn_h3(pts, qdf, res=8, disc_m=1000.0)
-    with pytest.raises(ValueError, match="disc_m"):
-        knn.knn_h3_exact(pts, qdf, res=8, disc_deg=0.5, metric="haversine")
     # the exact-loop variant of the remaining combination: equirect +
     # disc_m must ALSO fail loudly (the doubling loop swallows in-loop
     # ValueErrors by design, so the guard must fire before it)

@@ -73,7 +73,7 @@ def test_sample_frames_decodes_real_gif(spark):
         assert (px == truth[r.media_id][r.frame_idx]).all()
 
 
-def test_sample_frames_with_fake_decoder(spark):
+def test_sample_frames_with_fake_decoder(spark, monkeypatch):
     def fake_decoder(data: bytes) -> np.ndarray:
         n = data[0]  # first byte = frame count
         frames = np.zeros((n, 4, 4, 3), dtype=np.uint8)
@@ -84,7 +84,8 @@ def test_sample_frames_with_fake_decoder(spark):
     df = spark.createDataFrame(
         [("v0", bytes([25])), ("v1", bytes([7]))], "media_id string, bytes binary"
     )
-    rows = multimodal.sample_frames(df, every_n=10, decoder=fake_decoder).collect()
+    monkeypatch.setattr(multimodal, "_default_frame_decoder", fake_decoder)
+    rows = multimodal.sample_frames(df, every_n=10).collect()
     got = {(r.media_id, r.frame_idx) for r in rows}
     assert got == {("v0", 0), ("v0", 10), ("v0", 20), ("v1", 0)}
     px = codecs.decode_png(bytes([r for r in rows if r.frame_idx == 10][0].frame_png))
@@ -155,7 +156,7 @@ def test_dct_phash_robust_and_discriminative(spark):
         assert ham(got[f"orig{i}"], got[f"orig{j}"]) >= 10
 
 
-def test_dct_phash_feeds_near_dup_machinery(spark):
+def test_dct_phash_feeds_near_dup_machinery(spark, monkeypatch):
     """dct_phash slots into the shared bucketed-Hamming join exactly like
     the stored phash / ahash columns."""
     from simple_osm_queries_spark.operators import dedup
@@ -171,9 +172,9 @@ def test_dct_phash_feeds_near_dup_machinery(spark):
             rows.append((f"b{i}", codecs.encode_png(tw), "png"))
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
     hashes = multimodal.dct_phash_images(df).cache()
+    monkeypatch.setattr(dedup, "HAMMING_CHUNKS", 8)
     pairs = dedup.phash_near_dups(
-        hashes, id_col="image_id", phash_col="dct_phash",
-        max_hamming=6, chunks=8,
+        hashes, id_col="image_id", phash_col="dct_phash", max_hamming=6
     ).collect()
     got = {tuple(sorted((r[0], r[1]))) for r in pairs}
     # re-encoded twins must be found
@@ -214,26 +215,6 @@ def test_box_mean_grid_small_images_never_black():
         got = multimodal._box_mean_grid(u, 32, 32)
         assert got.shape == (32, 32)
         assert np.abs(got - 100.0).max() < 1e-12
-
-
-def test_phash_and_audio_custom_id_col(spark):
-    """Review regression: id_col must propagate into the output schema."""
-    from simple_osm_queries_spark.sources.datagen import image_pixels
-
-    df = spark.createDataFrame(
-        [(7, codecs.encode_png(image_pixels(7)), "png")],
-        "doc_id long, bytes binary, fmt string",
-    )
-    out = multimodal.dct_phash_images(df, id_col="doc_id")
-    assert out.columns == ["doc_id", "dct_phash"]
-    assert out.collect()[0].doc_id == "7"
-    adf = spark.createDataFrame(
-        [(3, codecs.encode_wav(np.sin(np.arange(4000) / 20.0) * 0.4))],
-        "clip_id long, bytes binary",
-    )
-    aout = multimodal.audio_features(adf, id_col="clip_id")
-    assert aout.columns[0] == "clip_id"
-    assert aout.collect()[0].clip_id == "3"
 
 
 def test_wav_zero_rate_rejected():
@@ -372,35 +353,11 @@ def test_wav_jdk_cross_check(tmp_path):
         np.abs(jdk - np.clip(np.round(ours * 32767.0), -32768, 32767)).max() <= 1
 
 
-def test_resize_area_antialiases(spark):
-    """Area resize of a fine checkerboard lands near mid-gray (the
-    box-mean absorbs sub-pixel detail); nearest-neighbor keeps extremes.
-    Uniform images resize exactly under both methods."""
-    cb = np.indices((32, 32)).sum(axis=0) % 2 * 255
-    px = np.repeat(cb[..., None], 3, axis=2).astype(np.uint8)
-    uni = np.full((32, 32, 3), 77, np.uint8)
-    df = spark.createDataFrame(
-        [("cb", codecs.encode_png(px), "png"), ("u", codecs.encode_png(uni), "png")],
-        "image_id string, bytes binary, fmt string",
-    )
-    area = {r.image_id: codecs.decode_png(bytes(r.bytes))
-            for r in multimodal.resize_images(df, 8, 8, method="area").collect()}
-    near = {r.image_id: codecs.decode_png(bytes(r.bytes))
-            for r in multimodal.resize_images(df, 8, 8, method="nearest").collect()}
-    assert np.abs(area["cb"].astype(int) - 127).max() <= 2
-    # nearest keeps pure extremes (no averaging; stride-4 sampling of the
-    # checkerboard hits a single parity, so the result is one extreme)
-    assert set(np.unique(near["cb"]).tolist()) <= {0, 255}
-    assert np.array_equal(area["u"], np.full((8, 8, 3), 77))
-    assert np.array_equal(near["u"], np.full((8, 8, 3), 77))
-    with pytest.raises(ValueError, match="unknown resize method"):
-        multimodal.resize_images(df, 8, 8, method="lanczos")
-
-
 def test_on_error_skip_drops_corrupt_rows(spark):
-    """Dirty-corpus mode: one corrupt row among good ones is dropped under
-    on_error='skip' (every codec's failures are catchable ValueErrors per
-    the boundary contract); the default still raises."""
+    """A corrupt row among good ones fails the job of every decoding
+    operator (every codec's failures are catchable ValueErrors per the
+    boundary contract; there is no skip mode, the name is kept from when
+    there was one)."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import PythonException
 
@@ -413,30 +370,25 @@ def test_on_error_skip_drops_corrupt_rows(spark):
     ]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
     for op in (
-        lambda d, **kw: multimodal.ahash_images(d, **kw),
-        lambda d, **kw: multimodal.dct_phash_images(d, **kw),
-        lambda d, **kw: multimodal.resize_images(d, 8, 8, **kw),
+        multimodal.ahash_images,
+        multimodal.dct_phash_images,
+        lambda d: multimodal.resize_images(d, 8, 8),
     ):
-        got = op(df, on_error="skip").collect()
-        assert {r[0] for r in got} == {"good1", "good2"}
         with pytest.raises((PythonException, Py4JJavaError)):
             op(df).collect()
     adf = spark.createDataFrame(
         [("g", codecs.encode_wav(np.zeros(64) + 0.1)), ("b", b"RIFFxxxxWAVE")],
         "media_id string, bytes binary",
     )
-    got = multimodal.audio_features(adf, on_error="skip").collect()
-    assert [r.media_id for r in got] == ["g"]
     with pytest.raises((PythonException, Py4JJavaError)):
         multimodal.audio_features(adf).collect()
-    with pytest.raises(ValueError, match="on_error"):
-        multimodal.ahash_images(df, on_error="ignore")
 
 
 def test_on_error_skip_null_bytes_and_video(spark):
-    """Review regressions: NULL binary values are skippable (bytes(None)
-    previously leaked TypeError past the boundary) and sample_frames joins
-    the dirty-corpus rollout, skipping corrupt AND unknown containers."""
+    """A NULL binary value fails the job with a "NULL bytes" message
+    (bytes(None) must not leak TypeError past the codec boundary), and
+    sample_frames fails on a corrupt GIF, an unknown container and a NULL
+    video (no skip mode; the name is kept from when there was one)."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import PythonException
 
@@ -447,18 +399,16 @@ def test_on_error_skip_null_bytes_and_video(spark):
         ("nullrow", None, "png"),
     ]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
-    got = multimodal.ahash_images(df, on_error="skip").collect()
-    assert [r.image_id for r in got] == ["good"]
-    with pytest.raises((PythonException, Py4JJavaError), match="NULL bytes"):
-        multimodal.ahash_images(df).collect()
+    for op in (
+        multimodal.ahash_images,
+        multimodal.dct_phash_images,
+        lambda d: multimodal.resize_images(d, 8, 8),
+    ):
+        with pytest.raises((PythonException, Py4JJavaError), match="NULL bytes"):
+            op(df).collect()
 
-    pal = codecs.gif_palette()
-    gif = codecs.encode_gif(pal[np.zeros((3, 4, 4), np.uint8)])
-    vdf = spark.createDataFrame(
-        [("g", gif), ("corrupt", b"GIF89a\x01trash"), ("mp4", b"\x00\x00\x00 ftypisom"), ("nul", None)],
-        "media_id string, bytes binary",
-    )
-    got = multimodal.sample_frames(vdf, every_n=2, on_error="skip").collect()
-    assert {r.media_id for r in got} == {"g"}
-    with pytest.raises((PythonException, Py4JJavaError)):
-        multimodal.sample_frames(vdf).collect()
+    gif = codecs.encode_gif(codecs.gif_palette()[np.zeros((3, 4, 4), np.uint8)])
+    for bad in (b"GIF89a\x01trash", b"\x00\x00\x00 ftypisom", None):
+        vdf = spark.createDataFrame([("g", gif), ("x", bad)], "media_id string, bytes binary")
+        with pytest.raises((PythonException, Py4JJavaError)):
+            multimodal.sample_frames(vdf).collect()

@@ -231,14 +231,15 @@ def test_tile_vectors_points(spark):
         assert got == [(i, x, y, t) for i, x, y, t in members]
 
 
-def test_tile_vectors_cap_is_visible(spark):
-    from simple_osm_queries_spark.operators.tiles import tile_vectors
+def test_tile_vectors_cap_is_visible(spark, monkeypatch):
+    from simple_osm_queries_spark.operators import tiles
 
     pts = spark.createDataFrame(
         [(i, 9.95, 53.55, {"k": "v"}) for i in range(30)],
         "id long, lon double, lat double, tags map<string,string>",
     )
-    r = tile_vectors(pts, 11, cap=10).collect()[0]
+    monkeypatch.setattr(tiles, "TILE_VECTORS_CAP", 10)
+    r = tiles.tile_vectors(pts, 11).collect()[0]
     assert r.n_features == 10 and r.n_total == 30  # capped but not silent
     layer = mvt_decode.decode_tile(bytes(r.mvt))["nodes"]
     assert [f["id"] for f in layer["features"]] == list(range(10))
@@ -433,10 +434,14 @@ def _oracle_tiles(ds, zoom, cap, simplify=0.0):
 
     from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.operators.geodesy import _dp_mask
-    from simple_osm_queries_spark.operators.tiles import MAX_COVER, tile_vectors
+    from simple_osm_queries_spark.operators import tiles
+    from simple_osm_queries_spark.operators.tiles import MAX_COVER
 
     out: dict = {}
-    for r in tile_vectors(ds.nodes, zoom, cap=cap).collect():
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(tiles, "TILE_VECTORS_CAP", cap)
+        rows = tiles.tile_vectors(ds.nodes, zoom).collect()
+    for r in rows:
         out.setdefault(r.tile_id, {})["nodes"] = (r.n_total, bytes(r.mvt))
 
     def local(lon, lat, tx, ty):
@@ -484,12 +489,12 @@ def _concat(blobs: dict) -> bytes:
     return b"".join(blobs[layer][1] for layer in ("nodes", "ways", "relations") if layer in blobs)
 
 
-def test_http_mvt_multilayer(spark):
+def test_http_mvt_multilayer(spark, monkeypatch):
     """The .mvt endpoint serves, byte for byte, the nodes, ways and
     relations layers of the tile, concatenated in that order (an MVT tile
     is repeated Layer fields): the nodes blob of tiles.tile_vectors and
     the ways and relations blobs of the Python oracle (_oracle_tiles),
-    also under a row cap (make_handler max_rows) and ?simplify. This pins
+    also under a row cap (web.MAX_ROWS) and ?simplify. This pins
     the route's membership, fid order, cap, ways simplification and tag
     (attribute) order. One tile is chosen so that its served nodes and
     relations carry >= 2 tags each: attribute order is part of the
@@ -501,6 +506,7 @@ def test_http_mvt_multilayer(spark):
 
     from pyspark.sql import functions as F
 
+    from simple_osm_queries_spark import web
     from simple_osm_queries_spark.functions import cells as C
     from simple_osm_queries_spark.sources.dataset import from_generator
     from simple_osm_queries_spark.web import make_handler
@@ -522,12 +528,8 @@ def test_http_mvt_multilayer(spark):
         and multi_tag(ls, "nodes") and multi_tag(ls, "relations")
     ]
     assert tagged, "no tile with multi-tag nodes and relations"
-    servers = [
-        ThreadingHTTPServer(("127.0.0.1", port), make_handler(ds, max_rows=cap))
-        for port, cap in ((18095, 100_000), (18096, 3))
-    ]
-    for httpd in servers:
-        threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    httpd = ThreadingHTTPServer(("127.0.0.1", 18095), make_handler(ds))
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
 
     def get(port, tid, query=""):
         _, tx, ty = C.tile_zxy_py(tid)
@@ -541,16 +543,18 @@ def test_http_mvt_multilayer(spark):
         for tid in (with_way, tagged[0]):
             assert get(18095, tid) == _concat(full[tid])
             assert get(18095, tid, "?simplify=64") == _concat(thin[tid])
-            assert get(18096, tid) == _concat(capped[tid])
-            assert get(18096, tid, "?simplify=64") == _concat(capped_thin[tid])
         try:
             get(18095, with_way, "?simplify=-1")
             raise AssertionError("negative simplify should 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400
+        # the handler reads the row cap per request
+        monkeypatch.setattr(web, "MAX_ROWS", 3)
+        for tid in (with_way, tagged[0]):
+            assert get(18095, tid) == _concat(capped[tid])
+            assert get(18095, tid, "?simplify=64") == _concat(capped_thin[tid])
     finally:
-        for httpd in servers:
-            httpd.shutdown()
+        httpd.shutdown()
     layers = mvt_decode.decode_tile(_concat(full[with_way]))
     # ?simplify thins the ways layer but keeps the same features
     thin_ways = mvt_decode.decode_tile(thin[with_way]["ways"][1])["ways"]["features"]
@@ -683,3 +687,48 @@ def test_tile_vectors_ways_simplify(spark, monkeypatch):
             ]
             for tx, ty in covered
         }
+
+
+def test_http_mvt_negative_ids(spark, tmp_path, monkeypatch):
+    """OSM XML and PBF allow negative ids (objects not yet uploaded). MVT
+    feature ids are uint64, so the .mvt route serves such a feature
+    without its optional id, on the driver path and in an executor,
+    instead of failing the whole tile."""
+    import threading
+    import urllib.request
+    from http.server import ThreadingHTTPServer
+
+    from simple_osm_queries_spark import web
+    from simple_osm_queries_spark.operators import tiles
+    from simple_osm_queries_spark.sources.dataset import prepare
+    from simple_osm_queries_spark.sources.osm_xml import read_osm_xml
+    from tests.osm_xml_writer import write_osm_xml
+
+    nodes = [
+        (-5, 9.9330, 53.5870, {"amenity": "bench"}),
+        (1, 9.9331, 53.5871, {}),
+        (2, 9.9332, 53.5872, {"natural": "tree"}),
+    ]
+    path = write_osm_xml(
+        str(tmp_path / "negative.osm"), nodes, ways=[(-7, [-5, 1, 2], {"highway": "path"})]
+    )
+    ds = prepare(*read_osm_xml(spark, path)).cache()
+    zoom = 14
+    x, y = tile_xy_py(9.9331, 53.5871, zoom)
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), web.make_handler(ds))
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{httpd.server_address[1]}/tiles/{zoom}/{x}/{y}.mvt"
+    try:
+        for threshold in (tiles.MVT_DRIVER_ROWS, 0):  # driver, then executor
+            monkeypatch.setattr(tiles, "MVT_DRIVER_ROWS", threshold)
+            with urllib.request.urlopen(url) as resp:
+                assert resp.status == 200
+                layers = mvt_decode.decode_tile(resp.read())
+            assert set(layers) == {"nodes", "ways"}, threshold
+            feats = layers["nodes"]["features"]
+            assert [f["id"] for f in feats] == [None, 1, 2]
+            assert feats[0]["attrs"] == {"amenity": "bench"}
+            (way,) = layers["ways"]["features"]
+            assert way["id"] is None and len(way["parts"][0]) == 3
+    finally:
+        httpd.shutdown()

@@ -307,22 +307,44 @@ def test_pbf_roundtrip_hypothesis(tmp_path):
     check()
 
 
+def _codec_blob(codec: str):
+    """A Blob writer for ``codec`` (raw 1, lzma 4, zstd 7), swapped in for
+    the writer's zlib blobs so the reader's other codecs get files."""
+
+    def blob(block: bytes) -> bytes:
+        if codec == "raw":
+            field, payload = 1, block
+        elif codec == "lzma":
+            import lzma
+
+            field, payload = 4, lzma.compress(block)
+        else:
+            import zstandard  # type: ignore
+
+            field, payload = 7, zstandard.ZstdCompressor().compress(block)
+        return mvt._field_varint(2, len(block)) + mvt._field_bytes(field, payload)
+
+    return blob
+
+
 @pytest.mark.parametrize("codec", ["lzma", "raw"])
-def test_compression_codecs_round_trip(tmp_path, codec):
+def test_compression_codecs_round_trip(tmp_path, monkeypatch, codec):
     nodes = [(i, 9.0 + i * 1e-6, 53.0 + i * 1e-6, {"k": f"v{i}"}) for i in range(50)]
     path = str(tmp_path / f"{codec}.osm.pbf")
-    P.write_osm_pbf(path, nodes=nodes, compression=codec)
+    monkeypatch.setattr(P, "_blob", _codec_blob(codec))
+    P.write_osm_pbf(path, nodes=nodes)
     (_, off, size), = [b for b in P.scan_blob_index(path) if b[0] == "OSMData"]
     got = P.decode_blob_at(path, off, size)[0]
     assert [(g[0], g[3]) for g in got] == [(n[0], n[3]) for n in nodes]
     assert got[0][1] == pytest.approx(9.0, abs=1e-9)
 
 
-def test_zstd_codec_round_trip(tmp_path):
+def test_zstd_codec_round_trip(tmp_path, monkeypatch):
     pytest.importorskip("zstandard")
     nodes = [(1, 2.0, 3.0, {"a": "b"})]  # pragma: no cover - needs zstandard
     path = str(tmp_path / "z.osm.pbf")
-    P.write_osm_pbf(path, nodes=nodes, compression="zstd")
+    monkeypatch.setattr(P, "_blob", _codec_blob("zstd"))
+    P.write_osm_pbf(path, nodes=nodes)
     (_, off, size), = [b for b in P.scan_blob_index(path) if b[0] == "OSMData"]
     assert P.decode_blob_at(path, off, size)[0][0][0] == 1
 

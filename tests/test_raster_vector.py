@@ -36,7 +36,7 @@ def _points(spark, n=4000):
     )
 
 
-def test_inverse_matches_python_oracle(spark):
+def test_inverse_matches_python_oracle(spark, monkeypatch):
     rows = []
     rng = np.random.RandomState(7)
     for z in (3, 9, 13, 18):
@@ -46,7 +46,8 @@ def test_inverse_matches_python_oracle(spark):
             rows.append((tile_id_py(tx, ty, z), int(rng.randint(0, 16)),
                          int(rng.randint(0, 16)), 5))
     bins = spark.createDataFrame(rows, "tile_id long, px int, py int, cnt long")
-    got = T.pixel_bins_to_points(bins, tile_px=16).collect()
+    monkeypatch.setattr(T, "RASTER_TILE_PX", 16)
+    got = T.pixel_bins_to_points(bins).collect()
     assert len(got) == len(rows)
     # the operator preserves row order only per partition; key by value
     want = sorted(_inverse_py(t, x, y, 16) for t, x, y, _ in rows)
@@ -57,29 +58,25 @@ def test_inverse_matches_python_oracle(spark):
     assert all(r.cnt == 5 for r in got)
 
 
-def test_bins_roundtrip_exact(spark):
+def test_bins_roundtrip_exact(spark, monkeypatch):
+    monkeypatch.setattr(T, "RASTER_TILE_PX", 16)
     pts = _points(spark)
     bins = T.tile_pixel_bins(pts, 13, 16)
-    back = T.tile_pixel_bins(
-        T.pixel_bins_to_points(bins, tile_px=16), 13, 16, weight="cnt"
-    )
-    a = sorted(map(tuple, bins.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b  # integer-exact: centers are 0.5 px from every boundary
+    centers = T.pixel_bins_to_points(bins)
+    assert centers.columns == ["lon", "lat", "cnt"]
+    back = T.tile_pixel_bins(centers, 13, 16)
+    a = sorted((r.tile_id, r.px, r.py) for r in bins.collect())
+    b = sorted((r.tile_id, r.px, r.py, r.cnt) for r in back.collect())
+    # integer-exact: centers are 0.5 px from every boundary, one per pixel
+    assert b == [k + (1,) for k in a]
 
 
-def test_weighted_binning_equals_unweighted_on_unit_weights(spark):
-    pts = _points(spark, 1000).withColumn("w", F.lit(1).cast("long"))
-    a = sorted(map(tuple, T.tile_pixel_bins(pts, 12, 8).collect()))
-    b = sorted(map(tuple, T.tile_pixel_bins(pts, 12, 8, weight="w").collect()))
-    assert a == b
-
-
-def test_raster_to_bins_inverts_heatmap_keys(spark):
+def test_raster_to_bins_inverts_heatmap_keys(spark, monkeypatch):
     pts = _points(spark)
     px_n = 32
+    monkeypatch.setattr(T, "RASTER_TILE_PX", px_n)
     rasters = T.tile_heatmap(pts, 13, px_n)
-    got = T.raster_to_bins(rasters, tile_px=px_n).collect()
+    got = T.raster_to_bins(rasters).collect()
     want_keys = {
         (r.tile_id, r.px, r.py) for r in T.tile_pixel_bins(pts, 13, px_n).collect()
     }
@@ -92,13 +89,12 @@ def test_raster_to_bins_inverts_heatmap_keys(spark):
     assert set(by_tile.values()) == {255}
 
 
-def test_full_raster_to_points_path(spark):
+def test_full_raster_to_points_path(spark, monkeypatch):
     pts = _points(spark, 2000)
     px_n = 16
+    monkeypatch.setattr(T, "RASTER_TILE_PX", px_n)
     rasters = T.tile_heatmap(pts, 12, px_n)
-    vec = T.pixel_bins_to_points(
-        T.raster_to_bins(rasters, tile_px=px_n), tile_px=px_n, value_col="intensity"
-    ).collect()
+    vec = T.pixel_bins_to_points(T.raster_to_bins(rasters)).collect()
     assert vec
     for r in vec:
         fx, fy = tile_fxy_py(r.lon, r.lat, 12)
@@ -108,19 +104,17 @@ def test_full_raster_to_points_path(spark):
         assert 0.0 <= fx <= 4096.0 and 0.0 <= fy <= 4096.0
 
 
-def test_raster_to_bins_error_contract(spark):
-    bad = spark.createDataFrame(
-        [(1, b"not a png"), (2, None)], "tile_id long, png binary"
-    )
-    with pytest.raises(Exception):
-        T.raster_to_bins(bad).collect()
-    assert T.raster_to_bins(bad, on_error="skip").count() == 0
-    # wrong canvas size: loud by default, droppable
+def test_raster_to_bins_error_contract(spark, monkeypatch):
+    for bad in (b"not a png", None):
+        df = spark.createDataFrame([(1, bad)], "tile_id long, png binary")
+        with pytest.raises(Exception):
+            T.raster_to_bins(df).collect()
+    # wrong canvas size: loud
     from simple_osm_queries_spark.sources import codecs
 
     small = codecs.encode_png(np.full((4, 4, 3), 200, np.uint8))
     df = spark.createDataFrame([(3, small)], "tile_id long, png binary")
     with pytest.raises(Exception):
-        T.raster_to_bins(df, tile_px=256).collect()
-    assert T.raster_to_bins(df, tile_px=256, on_error="skip").count() == 0
-    assert T.raster_to_bins(df, tile_px=4).count() == 16
+        T.raster_to_bins(df).collect()
+    monkeypatch.setattr(T, "RASTER_TILE_PX", 4)
+    assert T.raster_to_bins(df).count() == 16

@@ -6,7 +6,8 @@ AST only, no Spark. The roots are the package's module-level statements
 (including decorators, default values and base classes of its top-level
 definitions), the whole of ``__spark_entry__.py``, ``bench.py``,
 ``perfbench/*.py`` and ``tools/*.py``, any console-script entry point in
-``pyproject.toml``, and the ``EXCEPTIONS`` below. From them the walk
+``pyproject.toml`` (all read through ``tests/package_ast.py``, which
+``test_settable`` shares), and the ``EXCEPTIONS`` below. From them the walk
 follows name references transitively: a reached definition reaches every
 name its body mentions (as a bare name or as an attribute).
 
@@ -22,11 +23,8 @@ the other alive.
 from __future__ import annotations
 
 import ast
-import tomllib
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-PACKAGE = REPO / "simple_osm_queries_spark"
+from tests.package_ast import Scope, entry_points, package_trees, reexports, root_trees
 
 # Names kept without a caller, each for a stated reason. The list can only
 # shrink: a name that gains a caller must leave it (see the second test).
@@ -40,67 +38,11 @@ EXCEPTIONS = {
     "parse_exif": "image -> point bridge (GPS EXIF)",
     "extract_exif": "image -> point bridge (GPS EXIF)",
     "geotag_points": "image -> point bridge (GPS EXIF)",
-    "knn_join": "embedding kNN join, to be rewritten (ROADMAP direction 3)",
-    # README documents snapshot time travel; gc_snapshots is the only bound
-    # on the backups every upsert keeps
+    # README documents snapshot time travel
     "read_index_version": "snapshot time travel documented in README",
-    "gc_snapshots": "the only bound on upsert snapshot retention",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-
-
-def _module_name(path: Path) -> str:
-    parts = list(path.relative_to(REPO).with_suffix("").parts)
-    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
-
-
-MODULES = {_module_name(p) for p in PACKAGE.rglob("*.py")}
-
-
-class _Scope:
-    """What one file's imports bind: aliases of package modules, and names
-    imported from a module (``from <module> import name [as alias]``)."""
-
-    def __init__(self, tree: ast.AST, module: str | None):
-        self.module = module
-        self.modules: dict[str, set[str]] = {}
-        self.symbols: dict[str, set[tuple[str, str]]] = {}
-        for n in ast.walk(tree):
-            if isinstance(n, ast.Import):
-                for a in n.names:
-                    # `import a.b as x` binds x to a.b; `import a.b` binds a to a
-                    bound = a.asname or a.name.split(".")[0]
-                    self.modules.setdefault(bound, set()).add(a.name if a.asname else bound)
-            elif isinstance(n, ast.ImportFrom) and n.module and not n.level:
-                for a in n.names:
-                    bound, full = a.asname or a.name, f"{n.module}.{a.name}"
-                    if full in MODULES:
-                        self.modules.setdefault(bound, set()).add(full)
-                    else:
-                        self.symbols.setdefault(bound, set()).add((n.module, a.name))
-
-    def module_of(self, node: ast.AST) -> set[str]:
-        if isinstance(node, ast.Name):
-            return self.modules.get(node.id, set())
-        if isinstance(node, ast.Attribute):
-            subs = {f"{m}.{node.attr}" for m in self.module_of(node.value)}
-            return subs & MODULES
-        return set()
-
-    def refs(self, node: ast.AST) -> set:
-        """Bare names, plus (module, name) for every module-qualified one."""
-        out: set = set()
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                out.add(n.id)
-                out |= self.symbols.get(n.id, set())
-                if self.module:
-                    out.add((self.module, n.id))
-            elif isinstance(n, ast.Attribute):
-                out.add(n.attr)
-                out |= {(m, n.attr) for m in self.module_of(n.value)}
-        return out
 
 
 def _package():
@@ -108,16 +50,9 @@ def _package():
     code, {(module, name): (source module, name)} of package re-exports)."""
     defs: dict[str, list] = {}
     module_level: set = set()
-    reexports: dict[tuple[str, str], tuple[str, str]] = {}
-    for path in sorted(PACKAGE.rglob("*.py")):
-        module = _module_name(path)
-        tree = ast.parse(path.read_text())
-        scope = _Scope(tree, module)
+    for module, tree in package_trees():
+        scope = Scope(tree, module)
         for st in tree.body:
-            if isinstance(st, ast.ImportFrom) and st.module in MODULES:
-                for a in st.names:
-                    if f"{st.module}.{a.name}" not in MODULES:  # a name, not a submodule
-                        reexports[(module, a.asname or a.name)] = (st.module, a.name)
             if not isinstance(st, _DEFS):
                 module_level |= scope.refs(st)
                 continue
@@ -129,21 +64,15 @@ def _package():
                 evaluated += st.args.defaults + [d for d in st.args.kw_defaults if d]
             for node in evaluated:
                 module_level |= scope.refs(node)
-    return defs, module_level, reexports
+    return defs, module_level, reexports()
 
 
 def _entry_roots() -> set:
-    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
-    files += sorted((REPO / "perfbench").glob("*.py"))
-    files += sorted((REPO / "tools").glob("*.py"))
     roots: set = set()
-    for path in files:
-        tree = ast.parse(path.read_text())
-        roots |= _Scope(tree, None).refs(tree)
-    scripts = tomllib.loads((REPO / "pyproject.toml").read_text())
-    for target in scripts.get("project", {}).get("scripts", {}).values():
-        module, _, attr = target.partition(":")
-        roots |= {attr.split(".")[0], (module, attr.split(".")[0])}
+    for tree in root_trees():
+        roots |= Scope(tree, None).refs(tree)
+    for module, name in entry_points():
+        roots |= {name, (module, name)}
     return roots
 
 
@@ -208,6 +137,6 @@ def test_twin_names_are_matched_by_module():
     twins = {"simple_osm_queries_spark.functions.s2", "simple_osm_queries_spark.functions.h3_encode"}
     assert twins <= {m for m, _node, _refs in defs["lnglat_to_cell"]}
     tree = ast.parse("from simple_osm_queries_spark.functions import s2 as S\nS.lnglat_to_cell(x, y)")
-    reached = _reached(defs, reexports, _Scope(tree, None).refs(tree))
+    reached = _reached(defs, reexports, Scope(tree, None).refs(tree))
     assert ("simple_osm_queries_spark.functions.s2", "lnglat_to_cell") in reached
     assert ("simple_osm_queries_spark.functions.h3_encode", "lnglat_to_cell") not in reached

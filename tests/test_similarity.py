@@ -71,20 +71,6 @@ def test_cosine_topk_ann_recall_on_clusters(spark):
     assert len(ann & exact) >= 8  # >=80% recall on clustered data
 
 
-def test_knn_join(spark, embs, embs_np):
-    ids, mat = embs_np
-    left = embs.limit(5)
-    res = similarity.knn_join(left, embs, k=3)
-    got = {}
-    for r in res.collect():
-        got.setdefault(r.qid, []).append((r.rank, r.id, r.cosine))
-    for qid, rows in got.items():
-        assert len(rows) == 3
-        qvec = mat[list(ids).index(qid)]
-        expected = [i for i, _ in _topk_oracle(ids, mat, qvec, 4) if i != qid][:3]
-        assert [i for _, i, _ in sorted(rows)] == expected
-
-
 def test_ivf_ann(spark):
     """IVF: deterministic spherical k-means + nprobe list scan. On clustered
     data, recall@10 with nprobe=2/8 lists is high; nprobe=nlist is exact."""

@@ -380,11 +380,13 @@ def test_http_server_h3_cells_endpoint(ref_dataset):
         httpd.shutdown()
 
 
-def test_http_server_caps(ref_dataset):
-    """VERDICT r3 #5 / ADVICE r3 #3: POST /query truncates at max_rows with
-    a truncated flag (no unbounded collect), exactly at the boundary: a
-    result of max_rows rows is whole, one of max_rows + 1 is cut; GET
-    /cells rejects bboxes whose estimated cell count exceeds the cap."""
+def test_http_server_caps(ref_dataset, monkeypatch):
+    """VERDICT r3 #5 / ADVICE r3 #3: POST /query truncates at
+    web.MAX_ROWS with a truncated flag (no unbounded collect), exactly at
+    the boundary: a result of max_rows rows is whole, one of max_rows + 1
+    is cut; GET /cells rejects bboxes whose estimated cell count exceeds
+    web.MAX_CELLS."""
+    from simple_osm_queries_spark import web
     from simple_osm_queries_spark.web import serve
 
     def post(port, query):
@@ -396,19 +398,19 @@ def test_http_server_caps(ref_dataset):
 
     benches = "bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=bench }"  # 2 nodes
     all_three = "bbox(9.9, 53.5, 10.0, 53.6).nodes{ amenity=* OR natural=* }"
-    httpd = serve(ref_dataset, port=18102, max_rows=1, max_cells=50_000)
-    capped2 = serve(ref_dataset, port=0, max_rows=2)
-    for srv in (httpd, capped2):
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
+    httpd = serve(ref_dataset, port=18102)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
     try:
+        # the handler reads the caps per request
+        monkeypatch.setattr(web, "MAX_ROWS", 1)
         fc = post(18102, benches)
         assert len(fc["features"]) == 1
         assert fc["truncated"] is True
 
-        port2 = capped2.server_address[1]
-        fc = post(port2, benches)  # exactly max_rows rows
+        monkeypatch.setattr(web, "MAX_ROWS", 2)
+        fc = post(18102, benches)  # exactly max_rows rows
         assert len(fc["features"]) == 2 and "truncated" not in fc
-        fc = post(port2, all_three)  # max_rows + 1 rows
+        fc = post(18102, all_three)  # max_rows + 1 rows
         assert len(fc["features"]) == 2 and fc["truncated"] is True
 
         with pytest.raises(urllib.error.HTTPError) as e:
@@ -419,7 +421,6 @@ def test_http_server_caps(ref_dataset):
         assert json.loads(e.value.read())["error"] == "too many cells"
     finally:
         httpd.shutdown()
-        capped2.shutdown()
 
 
 def test_http_routes_reuse_generated_code(dataset):
